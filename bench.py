@@ -64,7 +64,7 @@ def main() -> None:
     from lucene_solr_spark.session import get_spark
     from lucene_solr_spark.datagen import generate_transcripts, generate_queries
     from lucene_solr_spark.search.searcher import IndexSearcher
-    from lucene_solr_spark.engine import DocumentsEngine
+    from lucene_solr_spark.engine import get_engine
 
     timings: dict[str, float] = {}
     extras: dict[str, float] = {}
@@ -160,7 +160,7 @@ def main() -> None:
 
         # --- documents table at SF_DIR: build + representative queries ---
         t0 = time.monotonic()
-        eng = DocumentsEngine(spark, SF_DIR, analyzer="simple")
+        eng = get_engine(spark, SF_DIR, analyzer="simple")
         timings["documents_build"] = time.monotonic() - t0
         for name, (qt, terms, msm, k) in {
             "q_term": ("term", ["spark"], 0, 10),

@@ -15,11 +15,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from .engine import (
-    blended_term_topk, fielded_dismax_topk, get_asof_engine,
-    get_atomic_engine, get_dbq_engine, get_engine, get_expunged_engine,
-    addindexes_topk, exactstats_topk, field_masking_span_topk, get_dv_engine,
-    tiered_merge_topk,
-    get_rtg_engine, get_updated_engine, localstats_topk,
+    ASOF, ATOMIC_UPDATED, COPYFIELD, DBQ_DELETED, DV_UPDATED, EXPUNGED,
+    RTG_APPENDED, UPDATED, IndexRecipe,
+    blended_term_topk, fielded_dismax_topk, get_engine,
+    addindexes_topk, exactstats_topk, field_masking_span_topk,
+    tiered_merge_topk, localstats_topk,
 )
 from .index.build import ANALYZERS
 from .oracles import (
@@ -494,29 +494,27 @@ def fulltext_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         spark, sf_dir, "simple"
     ).total_hits("or3", TOTAL_HITS_TERMS, threshold=TOTAL_HITS_THRESHOLD)
     # deletes/updates: tombstone + re-add, then search the live corpus
-    out["ft_after_update_topk"] = lambda spark, sf_dir: get_updated_engine(
-        spark, sf_dir, "simple"
+    out["ft_after_update_topk"] = lambda spark, sf_dir: get_engine(
+        spark, sf_dir, "simple", UPDATED
     ).topk("or3", AFTER_UPDATE_TERMS, k=10)
     # expungeDeletes (forceMergeDeletes): the SAME update, then the
     # tombstones are PHYSICALLY rewritten out (postings re-encoded, locals
     # compacted, bases re-derived, stats re-finalized) — same oracle, so a
     # compaction bug anywhere in the rewrite goes hash-red
-    out["ft_after_expunge_topk"] = lambda spark, sf_dir: get_expunged_engine(
-        spark, sf_dir, "simple"
+    out["ft_after_expunge_topk"] = lambda spark, sf_dir: get_engine(
+        spark, sf_dir, "simple", EXPUNGED
     ).topk("or3", AFTER_UPDATE_TERMS, k=10)
     # PatternReplaceFilter / UAX29URLEmailTokenizer over their injected
     # fixtures (digits / URLs+emails appended deterministically by doc_id;
     # the SAME expression string runs in DuckDB) — query surfaces carry the
     # interesting forms, the chain normalizes both sides identically
-    from .engine import (
-        PATREPLACE_TEXT_EXPR, URLEMAIL_TEXT_EXPR, get_fixture_engine,
-    )
+    from .engine import PATREPLACE_TEXT_EXPR, URLEMAIL_TEXT_EXPR
 
-    out["ft_patreplace_topk"] = lambda spark, sf_dir: get_fixture_engine(
-        spark, sf_dir, "patreplace", PATREPLACE_TEXT_EXPR
+    out["ft_patreplace_topk"] = lambda spark, sf_dir: get_engine(
+        spark, sf_dir, "patreplace", IndexRecipe(text_expr=PATREPLACE_TEXT_EXPR)
     ).topk("and2", PATREPLACE_Q, k=10)
-    out["ft_urlemail_topk"] = lambda spark, sf_dir: get_fixture_engine(
-        spark, sf_dir, "urlemail", URLEMAIL_TEXT_EXPR
+    out["ft_urlemail_topk"] = lambda spark, sf_dir: get_engine(
+        spark, sf_dir, "urlemail", IndexRecipe(text_expr=URLEMAIL_TEXT_EXPR)
     ).topk("or2", URLEMAIL_Q, k=10)
     # full UAX#29 word break over a non-ASCII corpus (StandardTokenizer's
     # StandardTokenizerImpl.jflex semantics — Cyrillic/Greek/accented-Latin
@@ -524,8 +522,8 @@ def fulltext_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # through analysis/uax29.py; bitwise vs the shared-expansion oracle
     from .engine import UNICODE_TEXT_EXPR
 
-    out["ft_unicode_topk"] = lambda spark, sf_dir: get_fixture_engine(
-        spark, sf_dir, "uni", UNICODE_TEXT_EXPR, name="unicode"
+    out["ft_unicode_topk"] = lambda spark, sf_dir: get_engine(
+        spark, sf_dir, "uni", IndexRecipe(text_expr=UNICODE_TEXT_EXPR)
     ).topk("or2", UNICODE_Q, k=10)
     # MinHashFilter LSH fingerprint index (LA/minhash): docs index as their
     # 16-bucket min-hash signatures; MLT over the source doc's signature ranks by
@@ -536,10 +534,8 @@ def fulltext_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     ).mlt_topk(MINHASH_SRC_DOC, top_terms=16, k=10)
     # copyField catchall (_text_): body + keyword metadata in ONE field —
     # 'src7' only exists in the catchall, so the match set is the src7 slice
-    from .engine import get_copyfield_engine
-
-    out["ft_copyfield_topk"] = lambda spark, sf_dir: get_copyfield_engine(
-        spark, sf_dir, "simple"
+    out["ft_copyfield_topk"] = lambda spark, sf_dir: get_engine(
+        spark, sf_dir, "simple", COPYFIELD
     ).topk("and2", COPYFIELD_Q, k=10)
     # eDisMax qf="title^2 body^1": true multi-field search — the derived
     # title field is its OWN index (independent postings/norms/stats, the
@@ -577,8 +573,8 @@ def fulltext_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # opens AT the pre-update commit (DirectoryReader.open(IndexCommit) over
     # a SnapshotDeletionPolicy-retained generation) — answers are bitwise
     # the ORIGINAL corpus, which is exactly what the oracle scores
-    out["ft_asof_topk"] = lambda spark, sf_dir: get_asof_engine(
-        spark, sf_dir, "simple"
+    out["ft_asof_topk"] = lambda spark, sf_dir: get_engine(
+        spark, sf_dir, "simple", ASOF
     ).topk("or3", AFTER_UPDATE_TERMS, k=10)
     # lucene/classification KNearestNeighborClassifier: MLT query per
     # held-out doc against a TRAIN-split index, majority vote of the BM25
@@ -588,14 +584,14 @@ def fulltext_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out["classify_knn"] = knn_classify
     # atomic partial update (AtomicUpdateDocumentMerger): field-level `add`
     # op resolved against the live doc, then the same tombstone+re-add path
-    out["ft_after_atomic_update_topk"] = lambda spark, sf_dir: get_atomic_engine(
-        spark, sf_dir, "simple"
+    out["ft_after_atomic_update_topk"] = lambda spark, sf_dir: get_engine(
+        spark, sf_dir, "simple", ATOMIC_UPDATED
     ).topk("or3", AFTER_UPDATE_TERMS, k=10)
     # delete-by-query: tombstone the whole match set of a query
     # (distributed hit-set path, no driver collect), then search — surviving
     # docs score with the SHRUNKEN global stats (docCount/avgdl/df)
-    out["ft_after_dbq_topk"] = lambda spark, sf_dir: get_dbq_engine(
-        spark, sf_dir, "simple"
+    out["ft_after_dbq_topk"] = lambda spark, sf_dir: get_engine(
+        spark, sf_dir, "simple", DBQ_DELETED
     ).topk("or3", AFTER_UPDATE_TERMS, k=10)
     # ValueSource function query as the ranking function (termfreq sort)
     out["ft_function_query"] = lambda spark, sf_dir: get_engine(
@@ -802,8 +798,8 @@ def fulltext_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         spark, sf_dir, "simple"
     ).facet_block_children("and2", ["merge", "batch"], "lang")
     # RealTime Get: stored doc by key, soft-committed appends visible
-    out["ft_rtg"] = lambda spark, sf_dir: get_rtg_engine(
-        spark, sf_dir, "simple"
+    out["ft_rtg"] = lambda spark, sf_dir: get_engine(
+        spark, sf_dir, "simple", RTG_APPENDED
     ).rtg(RTG_KEYS)
     # ClassicSimilarity (TF-IDF) — pluggable similarity over the same index
     out["ft_tfidf_topk"] = lambda spark, sf_dir: get_engine(
@@ -859,8 +855,8 @@ def fulltext_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # In-place numeric docvalues update (updateNumericDocValue): two
     # stacked generations over an index-time base, read latest-wins and
     # used as a multiplicative function boost — re-ranks without reindex
-    out["ft_dv_boost_topk"] = lambda spark, sf_dir: get_dv_engine(
-        spark, sf_dir, "simple"
+    out["ft_dv_boost_topk"] = lambda spark, sf_dir: get_engine(
+        spark, sf_dir, "simple", DV_UPDATED
     ).dv_boost_topk("or3", ["vector", "stream", "filter"], k=10)
     # IndexOptions.DOCS field: freq() == 1 at read time, norms still
     # apply — the omitTermFreqAndPositions contract, ninth+1 sim dispatch

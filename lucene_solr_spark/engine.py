@@ -4,18 +4,32 @@ the ``IndexWriter``/``IndexSearcher`` pair a Solr user actually touches
 SURVEY.md §3).
 
 ``DocumentsEngine`` wraps the driver-provided ``documents`` parquet table
-(columns doc_id, text, lang, source, n_chars): it builds the inverted index
-once per (table, analyzer) into a content-addressed cache dir under
-``/tmp`` (checkpoint/resume makes re-entry free — the manifest marker is the
-commit point), then serves top-k queries. Process-level memoization keeps
-the driver's many ``queries()`` calls from rebuilding.
+(columns doc_id, text, lang, source, n_chars). ``get_engine(spark, sf_dir,
+analyzer, recipe)`` is the one constructor: an ``IndexRecipe`` says how the
+index derives from the table — an optional derived text field, an optional
+row filter, the segment count, and an ordered tuple of mutation steps
+(update, expunge, commit point, delete-by-query, atomic update, RTG append,
+docvalues update). The recipe's hash names a content-addressed cache dir
+under ``/tmp`` and keys the process-level memo, so the driver's many
+``queries()`` calls never rebuild.
+
+A step-free recipe builds with checkpoint/resume (the manifest marker is the
+commit point). A recipe with steps copies its step-free base index into a
+private temp dir, applies the steps there and publishes the result with one
+completion marker + an atomic rename (``_publish``): a crash mid-step leaves
+the published tree absent, never half-mutated.
 """
 
 from __future__ import annotations
 
+import fcntl
 import hashlib
 import os
+import shutil
 import tempfile
+import threading
+from collections.abc import Callable
+from dataclasses import dataclass, replace
 
 import pandas as pd
 
@@ -23,60 +37,161 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .index.build import build_index
 from .search.query import BooleanSpec
-from .search.searcher import IndexSearcher
+from .search.searcher import IndexSearcher, ranked_top
 
-_ENGINES: dict[tuple[str, str], "DocumentsEngine"] = {}
+# content-addressed index dir → its engine (or searcher / searcher list)
+_ENGINES: dict[str, object] = {}
+
+
+@dataclass(frozen=True)
+class IndexRecipe:
+    """How a documents index derives from ``documents.parquet``.
+
+    ``text_expr`` indexes a derived field (Spark SQL over the doc_key-renamed
+    columns) as ITS OWN field — separate postings, norms, stats;
+    ``row_filter`` keeps a row subset (the predicate pushes to the parquet
+    scan); ``steps`` names mutations from ``_STEPS`` applied in order after
+    the build. The repr is hashed into the cache-dir tag."""
+
+    text_expr: str | None = None
+    row_filter: str | None = None
+    n_segments: int = 8
+    steps: tuple[str, ...] = ()
+
+
+BASE = IndexRecipe()
+
+
+def _memo(key: str, make: Callable[[], object]):
+    hit = _ENGINES.get(key)
+    if hit is None:
+        hit = _ENGINES[key] = make()
+    return hit
+
+
+def _cache_dir(name: str) -> str:
+    return os.path.join(tempfile.gettempdir(), "lucene_solr_spark_idx", name)
+
+
+def _recipe_dir(sf_dir: str, analyzer: str, recipe: IndexRecipe) -> str:
+    src = os.path.join(sf_dir, "documents.parquet")
+    # bump the version token whenever the on-disk index format changes
+    # (cache dirs are content-addressed; a stale format must not resume)
+    tag = hashlib.md5(
+        f"{os.path.abspath(src)}|{os.path.getmtime(src)}|{analyzer}|{recipe!r}|v7".encode()
+    ).hexdigest()[:16]
+    return _cache_dir(f"docs-{analyzer}-{tag}")
+
+
+PUBLISHED = "_published"   # the one completion marker of a published tree
+
+
+def _publish(dst: str, build: Callable[[str], None]) -> str:
+    """Materialize ``dst`` once: ``build`` fills a private temp dir, ONE
+    completion marker is written last, and an atomic rename publishes it.
+    A crash leaves no ``dst`` (its temp dir is discarded), so a retry
+    starts clean instead of re-applying steps to a half-mutated tree.
+
+    Publishers serialize on ``dst``.lock for the rename only. When the
+    rename fails, the marker is re-checked before anything is deleted: a
+    concurrent winner's complete tree is kept (ours is dropped); only a
+    marker-less tree left by a dead writer is replaced."""
+    marker = os.path.join(dst, PUBLISHED)
+    if os.path.exists(marker):
+        return dst
+    tmp = f"{dst}.tmp.{os.getpid()}.{threading.get_ident()}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    try:
+        build(tmp)
+        with open(os.path.join(tmp, PUBLISHED), "w") as f:
+            f.write("done")
+        with open(dst + ".lock", "w") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)  # released on close
+            try:
+                os.rename(tmp, dst)
+            except OSError:
+                if not os.path.exists(marker):
+                    shutil.rmtree(dst)
+                    os.rename(tmp, dst)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return dst
+
+
+def get_engine(
+    spark: SparkSession, sf_dir: str, analyzer: str = "simple",
+    recipe: IndexRecipe = BASE,
+) -> DocumentsEngine:
+    """The engine for (table, analyzer, recipe), built on first use and
+    memoized per content-addressed index dir."""
+    return _memo(
+        _recipe_dir(sf_dir, analyzer, recipe),
+        lambda: DocumentsEngine(spark, sf_dir, analyzer, recipe),
+    )
+
+
+def _present(out: DataFrame, score: str = "score") -> DataFrame:
+    """A ranked page as (rank int, doc_id bigint, score float), keyed on the
+    SOURCE doc id (``doc_key``)."""
+    return out.select(
+        F.col("rank").cast("int").alias("rank"),
+        F.col("doc_key").cast("long").alias("doc_id"),
+        F.col(score).cast("float").alias("score"),
+    ).orderBy("rank")
 
 
 class DocumentsEngine:
-    """Index + search over a ``documents``-shaped table (doc_id, text)."""
+    """Index + search over a ``documents``-shaped table (doc_id, text);
+    construct through ``get_engine``."""
 
     def __init__(
         self,
         spark: SparkSession,
         sf_dir: str,
         analyzer: str = "simple",
-        *,
-        n_segments: int = 8,
-        variant: str = "",
-        row_filter: str | None = None,
-        text_expr: str | None = None,
+        recipe: IndexRecipe = BASE,
     ) -> None:
         self.spark = spark
         self.sf_dir = sf_dir
         self.analyzer = analyzer
-        src = os.path.join(sf_dir, "documents.parquet")
-        # bump the version token whenever the on-disk index format changes
-        # (cache dirs are content-addressed; a stale format must not resume)
-        tag = hashlib.md5(
-            f"{os.path.abspath(src)}|{os.path.getmtime(src)}|{analyzer}|{n_segments}|{variant}|{row_filter}|{text_expr}|v7".encode()
-        ).hexdigest()[:16]
-        self.index_dir = os.path.join(
-            tempfile.gettempdir(), "lucene_solr_spark_idx", f"docs-{analyzer}-{tag}"
-        )
-        docs = spark.read.parquet(src).select(
-            F.col("doc_id").alias("doc_key"), "source", "lang", "text"
-        )
-        if row_filter is not None:
-            # e.g. a train split — the predicate pushes to the parquet scan
-            docs = docs.filter(F.expr(row_filter))
-        if text_expr is not None:
-            # a derived field (multi-field schema): this engine indexes the
-            # projection as ITS OWN field — separate postings, norms, stats
-            docs = docs.withColumn("text", F.expr(text_expr))
-        self.manifest = build_index(
-            spark,
-            docs,
-            self.index_dir,
-            key_cols=("doc_key",),
-            text_col="text",
-            analyzer=analyzer,
-            positions=True,
-            n_segments=n_segments,
-            resume=True,
-            keyword_cols=("source", "lang"),
-        )
-        self.searcher = IndexSearcher(spark, self.index_dir)
+        self.index_dir = _recipe_dir(sf_dir, analyzer, recipe)
+        commit = None
+        if recipe.steps:
+
+            def mutate(tmp: str) -> None:
+                base = get_engine(spark, sf_dir, analyzer, replace(recipe, steps=()))
+                # the shared base tree is never mutated: steps run on a copy
+                shutil.copytree(base.index_dir, tmp)
+                for step in recipe.steps:
+                    _STEPS[step](spark, sf_dir, tmp)
+
+            _publish(self.index_dir, mutate)
+            if "commit_point" in recipe.steps:
+                from .index.commits import list_commits
+
+                # time travel: open AT the commit the recipe captured
+                commit = list_commits(self.index_dir)[0]
+        else:
+            docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
+                F.col("doc_id").alias("doc_key"), "source", "lang", "text"
+            )
+            if recipe.row_filter is not None:
+                docs = docs.filter(F.expr(recipe.row_filter))
+            if recipe.text_expr is not None:
+                docs = docs.withColumn("text", F.expr(recipe.text_expr))
+            build_index(
+                spark,
+                docs,
+                self.index_dir,
+                key_cols=("doc_key",),
+                text_col="text",
+                analyzer=analyzer,
+                positions=True,
+                n_segments=recipe.n_segments,
+                resume=True,
+                keyword_cols=("source", "lang"),
+            )
+        self.searcher = IndexSearcher(spark, self.index_dir, commit=commit)
 
     # -- query helpers ------------------------------------------------------
 
@@ -93,11 +208,7 @@ class DocumentsEngine:
         the SOURCE doc_id (fetch-fields-late join back through the docs map)."""
         spec = self.searcher.parse(qtype, surface_terms, min_should, slop=slop)
         out = self.searcher.search(spec, k=k, mode=mode, with_keys=True)
-        return out.select(
-            F.col("rank").cast("int").alias("rank"),
-            F.col("doc_key").cast("long").alias("doc_id"),
-            F.col("score").cast("float").alias("score"),
-        ).orderBy("rank")
+        return _present(out)
 
     def multiphrase_topk(
         self, slot_surfaces: list[list[str]], k: int = 10,
@@ -119,11 +230,7 @@ class DocumentsEngine:
             slots, tuple(range(len(slots)))
         )])
         out = self.searcher.search(spec, k=k, mode="exact", with_keys=True)
-        return out.select(
-            F.col("rank").cast("int").alias("rank"),
-            F.col("doc_key").cast("long").alias("doc_id"),
-            F.col("score").cast("float").alias("score"),
-        ).orderBy("rank")
+        return _present(out)
 
     def nested_bool_topk(
         self, must_surfaces: list[str], group_surfaces: list[str], k: int = 10,
@@ -141,11 +248,7 @@ class DocumentsEngine:
             OrGroupClause(tuple(an.analyze(s)[0][0] for s in group_surfaces)),
         ])
         out = self.searcher.search(spec, k=k, mode="wand", with_keys=True)
-        return out.select(
-            F.col("rank").cast("int").alias("rank"),
-            F.col("doc_key").cast("long").alias("doc_id"),
-            F.col("score").cast("float").alias("score"),
-        ).orderBy("rank")
+        return _present(out)
 
     def phrase_prefix_topk(
         self, surfaces: list[str], prefix: str, k: int = 10,
@@ -173,11 +276,7 @@ class DocumentsEngine:
             slots, tuple(range(len(slots)))
         )])
         out = self.searcher.search(spec, k=k, mode="exact", with_keys=True)
-        return out.select(
-            F.col("rank").cast("int").alias("rank"),
-            F.col("doc_key").cast("long").alias("doc_id"),
-            F.col("score").cast("float").alias("score"),
-        ).orderBy("rank")
+        return _present(out)
 
     def complex_phrase_topk(
         self, query: str, k: int = 10, max_expansions: int = 50,
@@ -208,11 +307,7 @@ class DocumentsEngine:
             tuple(slots), tuple(range(len(slots)))
         )])
         out = self.searcher.search(spec, k=k, mode="exact", with_keys=True)
-        return out.select(
-            F.col("rank").cast("int").alias("rank"),
-            F.col("doc_key").cast("long").alias("doc_id"),
-            F.col("score").cast("float").alias("score"),
-        ).orderBy("rank")
+        return _present(out)
 
     def filtered_topk(
         self,
@@ -239,7 +334,7 @@ class DocumentsEngine:
         spec = self.searcher.parse(qtype, surface_terms, min_should)
         spec.filter.append(TermClause(keyword_term(filter_col, filter_val)))
         out = self.searcher.search(spec, k=k, with_keys=True)
-        return self._present(out)
+        return _present(out)
 
     def fq_topk(
         self,
@@ -262,7 +357,7 @@ class DocumentsEngine:
             s.parse(qtype, surface_terms, 0), k=k, with_keys=True,
             filter_by_base=fbb,
         )
-        return self._present(out)
+        return _present(out)
 
     DOCUMENT_CACHE_MAX = 512   # solrconfig documentCache size
 
@@ -348,15 +443,7 @@ class DocumentsEngine:
             [(i + 1, d, float(sc)) for i, (d, sc) in enumerate(rows)],
             "rank int, doc_id long, score float",
         )
-        return (
-            page.join(s.docs.select("doc_id", "doc_key"), "doc_id")
-            .select(
-                "rank",
-                F.col("doc_key").cast("long").alias("doc_id"),
-                F.col("score").cast("float").alias("score"),
-            )
-            .orderBy("rank")
-        )
+        return _present(page.join(s.docs.select("doc_id", "doc_key"), "doc_id"))
 
     def join_filter_topk(
         self,
@@ -403,7 +490,7 @@ class DocumentsEngine:
         spec.filter.append(OrGroupClause(
             tuple(keyword_term(to_col, v) for v in vals)
         ))
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def join_score_topk(
         self,
@@ -442,17 +529,8 @@ class DocumentsEngine:
             self.searcher.docs.select("doc_id", "doc_key", F.col(to_col))
             .join(F.broadcast(key_scores), F.col(to_col) == F.col("_jkey"))
         )
-        top = joined.orderBy(F.desc("jscore"), F.asc("doc_id")).limit(k)
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc("jscore"), F.asc("doc_id"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .select(
-                "rank",
-                F.col("doc_key").cast("long").alias("doc_id"),
-                F.col("jscore").cast("float").alias("score"),
-            )
-            .orderBy("rank")
+        return _present(
+            ranked_top(joined, k, F.desc("jscore"), F.asc("doc_id")), score="jscore"
         )
 
     def boosted_topk(self, term_boosts: list[tuple[str, float]], k: int = 10) -> DataFrame:
@@ -465,7 +543,7 @@ class DocumentsEngine:
             for surface, boost in term_boosts
             for t, _ in self.searcher.analyzer.analyze(surface)
         ])
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def span_first_topk(self, surface_term: str, end: int, k: int = 10) -> DataFrame:
         """SpanFirstQuery top-k (``L/search/spans/SpanFirstQuery`` wrapping a
@@ -481,7 +559,7 @@ class DocumentsEngine:
 
         toks = self.searcher.analyzer.analyze(surface_term)
         spec = BooleanSpec(must=[SpanFirstClause(toks[0][0], int(end))])
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def span_position_range_topk(
         self, surface_term: str, start: int, end: int, k: int = 10
@@ -497,7 +575,7 @@ class DocumentsEngine:
         spec = BooleanSpec(should=[
             SpanFirstClause(term, int(end), start=int(start))
         ], min_should_match=1)
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def span_near_topk(
         self, surface0: str, surface1: str, slop: int, k: int = 10
@@ -518,7 +596,7 @@ class DocumentsEngine:
         t0 = self.searcher.analyzer.analyze(surface0)[0][0]
         t1 = self.searcher.analyzer.analyze(surface1)[0][0]
         spec = BooleanSpec(must=[SpanNearClause((t0, t1), int(slop))])
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def fuzzy_blended_topk(
         self, target: str, max_edits: int = 2, max_expansions: int = 50,
@@ -565,7 +643,7 @@ class DocumentsEngine:
             tuple(term for _, term in cands),
             tuple(b for b, _ in cands),
         )])
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def synonym_topk(self, surfaces: list[str], k: int = 10) -> DataFrame:
         """Explicit SynonymQuery top-k (``L/search/SynonymQuery.java`` — the
@@ -586,7 +664,7 @@ class DocumentsEngine:
             an.analyze(s)[0][0] for s in surfaces if an.analyze(s)
         ))
         spec = BooleanSpec(should=[SynonymClause(terms)])
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def synonym_term_topk(self, surface: str, k: int = 10) -> DataFrame:
         """Position-graph term query (``L/util/QueryBuilder#
@@ -609,7 +687,7 @@ class DocumentsEngine:
                 SynonymClause(ts) if len(ts) > 1 else TermClause(ts[0])
             )
         spec = BooleanSpec(should=should)
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def span_multiterm_topk(
         self, prefix: str, other: str, slop: int, k: int = 10
@@ -633,7 +711,7 @@ class DocumentsEngine:
         spec = BooleanSpec(should=[
             SpanNearOrClause((exp, (other_t,)), slop)
         ])
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def covering_topk(
         self, surfaces: list[str], mod: int = 3, k: int = 10
@@ -656,7 +734,7 @@ class DocumentsEngine:
             should=[TermClause(an.analyze(s)[0][0]) for s in surfaces],
             covering_mod=mod,
         )
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def simple_query_topk(self, query: str, k: int = 10) -> DataFrame:
         """SimpleQueryParser top-k (``L/queryparser/simple/
@@ -669,7 +747,7 @@ class DocumentsEngine:
         spec = parse_simple(
             query, self.searcher.analyzer, expand=self.searcher.expand_terms
         )
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def surround_topk(self, query: str, k: int = 10) -> DataFrame:
         """Surround query-language top-k (``lucene/queryparser/surround``):
@@ -681,7 +759,7 @@ class DocumentsEngine:
         from .search.surround import parse_surround
 
         spec = parse_surround(query, self.searcher.analyzer)
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def span_near_or_topk(
         self, surfaces0: list[str], surfaces1: list[str], slop: int,
@@ -703,7 +781,7 @@ class DocumentsEngine:
             for group in (surfaces0, surfaces1)
         )
         spec = BooleanSpec(must=[SpanNearOrClause(slots, int(slop))])
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def span_not_topk(
         self, include: str, exclude: str, pre: int = 0, post: int = 0,
@@ -725,7 +803,7 @@ class DocumentsEngine:
         spec = BooleanSpec(
             must=[SpanNotClause(t_inc, t_exc, int(pre), int(post))]
         )
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def interval_unordered_topk(
         self, surface0: str, surface1: str, maxgaps: int, k: int = 10,
@@ -748,7 +826,7 @@ class DocumentsEngine:
             (an.analyze(surface0)[0][0], an.analyze(surface1)[0][0]),
             int(maxgaps), ordered,
         )])
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def span_contain_topk(
         self, big0: str, big1: str, big_slop: int, little: str,
@@ -774,7 +852,7 @@ class DocumentsEngine:
             (an.analyze(big0)[0][0], an.analyze(big1)[0][0]),
             an.analyze(little)[0][0], int(big_slop), mode,
         )])
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def span_or_topk(self, surfaces: list[str], k: int = 10) -> DataFrame:
         """SpanOrQuery top-k (``L/search/spans/SpanOrQuery`` over unit term
@@ -793,7 +871,7 @@ class DocumentsEngine:
             self.searcher.analyzer.analyze(s)[0][0] for s in surfaces
         )
         spec = BooleanSpec(must=[SpanOrClause(terms)])
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def edismax_mm_topk(self, q: str, mm: str, k: int = 10) -> DataFrame:
         """eDisMax with an ``mm`` spec (``S/search/ExtendedDismaxQParser``
@@ -816,7 +894,7 @@ class DocumentsEngine:
         spec.min_should_match = calculate_min_should_match(
             len(spec.should), mm
         )
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def edismax_pf_topk(self, q: str, pf_boost: float, k: int = 10) -> DataFrame:
         """eDisMax ``pf`` (phrase fields) boost
@@ -841,7 +919,7 @@ class DocumentsEngine:
             tuple(p - base for _, p in analyzed),
             boost=float(pf_boost),
         ))
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def query_string_topk(self, qstr: str, k: int = 10) -> DataFrame:
         """Classic query-string search (``L/queryparser/classic/
@@ -864,7 +942,7 @@ class DocumentsEngine:
             expand=self.searcher.expand_terms,
             keyword_fields=("source", "lang"),
         )
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def explain(self, qtype: str, surface_terms: list[str], src_doc_id: int) -> DataFrame:
         """``IndexSearcher#explain`` / Solr debugQuery: per-term BM25 score
@@ -882,17 +960,10 @@ class DocumentsEngine:
     def analyze_spec(self, qtype: str, surface_terms: list[str], min_should: int = 0) -> BooleanSpec:
         return self.searcher.parse(qtype, surface_terms, min_should)
 
-    def _present(self, out: DataFrame) -> DataFrame:
-        return out.select(
-            F.col("rank").cast("int").alias("rank"),
-            F.col("doc_key").cast("long").alias("doc_id"),
-            F.col("score").cast("float").alias("score"),
-        ).orderBy("rank")
-
     def multiterm_topk(self, kind: str, pattern, k: int = 10) -> DataFrame:
         """Prefix/wildcard/regexp/fuzzy/set query → scoring boolean rewrite."""
         spec = self.searcher.multiterm_spec(kind, pattern)
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def phonetic_topk(self, surface: str, k: int = 10) -> DataFrame:
         """Phonetic (Soundex) search: every whitespace token of ``surface``
@@ -907,12 +978,12 @@ class DocumentsEngine:
         bounded expansion collect every MultiTermQuery already does)."""
         toks = tuple(t for t in surface.lower().split() if t)
         spec = self.searcher.multiterm_spec("phonetic", toks)
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def dismax_topk(self, surface_terms: list[str], tie: float, k: int = 10) -> DataFrame:
         spec = self.searcher.parse("or3", surface_terms, 0)
         spec.dismax, spec.tie = True, tie
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def mlt_topk(self, src_doc_id: int, top_terms: int = 5, k: int = 10) -> DataFrame:
         """MoreLikeThis: interesting-terms disjunction of doc ``src_doc_id``,
@@ -928,16 +999,9 @@ class DocumentsEngine:
         )
         spec = self.searcher.more_like_this_spec(text, top_terms)
         out = self.searcher.search(spec, k=k + 1, with_keys=True)
-        out = out.filter(F.col("doc_key") != src_doc_id).limit(k)
-        # re-rank the ≤k surviving rows without a WindowExec (same
-        # single-partition row_number trick as IndexSearcher._finish)
-        out = (
-            out.drop("rank")
-            .coalesce(1)
-            .sortWithinPartitions(F.desc("score"), F.asc("doc_id"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-        )
-        return self._present(out)
+        # re-rank the ≤k surviving rows
+        survivors = out.filter(F.col("doc_key") != src_doc_id).drop("rank")
+        return _present(ranked_top(survivors, k, F.desc("score"), F.asc("doc_id")))
 
     def highlight_topk(
         self,
@@ -1103,7 +1167,7 @@ class DocumentsEngine:
         if len(page1) < k:
             return self.spark.createDataFrame([], "rank int, doc_id long, score float")
         cursor = (page1[-1].score, page1[-1].doc_id)
-        return self._present(
+        return _present(
             self.searcher.search(spec, k=k, with_keys=True, after=cursor)
         )
 
@@ -1318,17 +1382,8 @@ class DocumentsEngine:
                 (F.col("score").cast("double") + feature_fn(x)).cast("float"),
             )
         )
-        top = scored.orderBy(F.desc("fscore"), F.asc("doc_key")).limit(k)
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc("fscore"), F.asc("doc_key"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .select(
-                "rank",
-                F.col("doc_key").cast("long").alias("doc_id"),
-                F.col("fscore").cast("float").alias("score"),
-            )
-            .orderBy("rank")
+        return _present(
+            ranked_top(scored, k, F.desc("fscore"), F.asc("doc_key")), score="fscore"
         )
 
     def rrf_topk(
@@ -1364,17 +1419,10 @@ class DocumentsEngine:
             F.coalesce(F.lit(1.0) / (kd + F.col("r1").cast("double")), F.lit(0.0))
             + F.coalesce(F.lit(1.0) / (kd + F.col("r2").cast("double")), F.lit(0.0)),
         )
-        top = fused.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc("score"), F.asc("doc_id"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .select(
-                "rank",
-                F.col("doc_id").cast("long").alias("doc_id"),
-                F.col("score").cast("double").alias("score"),
-            )
-            .orderBy("rank")
+        return ranked_top(fused, k, F.desc("score"), F.asc("doc_id")).select(
+            "rank",
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("score").cast("double").alias("score"),
         )
 
     def facet_on_query(
@@ -1516,21 +1564,13 @@ class DocumentsEngine:
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= max_per_key)
         )
-        top = (
-            survivors.select(
-                F.col("doc_key").cast("long").alias("doc_id"),
-                F.col(key_col).alias("source"),
-                F.col("score").cast("float").alias("score"),
-            )
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+        page = survivors.select(
+            F.col("doc_key").cast("long").alias("doc_id"),
+            F.col(key_col).alias("source"),
+            F.col("score").cast("float").alias("score"),
         )
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc("score"), F.asc("doc_id"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .select("rank", "doc_id", "source", "score")
-            .orderBy("rank")
+        return ranked_top(page, k, F.desc("score"), F.asc("doc_id")).select(
+            "rank", "doc_id", "source", "score"
         )
 
     def stats_on_query(
@@ -1662,7 +1702,7 @@ class DocumentsEngine:
         if not spec.must:
             # all terms common: Lucene falls back to pure disjunction
             spec.min_should_match = 1
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def tfidf_topk(
         self, qtype: str, surface_terms: list[str], k: int = 10, min_should: int = 0
@@ -1672,7 +1712,7 @@ class DocumentsEngine:
         (``L/search/similarities/ClassicSimilarity``)."""
         spec = self.searcher.parse(qtype, surface_terms, min_should)
         q = self.searcher.compile(spec, k=k, similarity="classic")
-        return self._present(self.searcher.search(q, with_keys=True))
+        return _present(self.searcher.search(q, with_keys=True))
 
     def lm_topk(
         self, qtype: str, surface_terms: list[str], k: int = 10, min_should: int = 0
@@ -1682,7 +1722,7 @@ class DocumentsEngine:
         (``L/search/similarities/LMDirichletSimilarity``)."""
         spec = self.searcher.parse(qtype, surface_terms, min_should)
         q = self.searcher.compile(spec, k=k, similarity="lm")
-        return self._present(self.searcher.search(q, with_keys=True))
+        return _present(self.searcher.search(q, with_keys=True))
 
     def boolean_sim_topk(
         self, qtype: str, surface_terms: list[str], k: int = 10, min_should: int = 0
@@ -1692,7 +1732,7 @@ class DocumentsEngine:
         docID-tiebroken) — ``L/search/similarities/BooleanSimilarity``."""
         spec = self.searcher.parse(qtype, surface_terms, min_should)
         q = self.searcher.compile(spec, k=k, similarity="boolean")
-        return self._present(self.searcher.search(q, with_keys=True))
+        return _present(self.searcher.search(q, with_keys=True))
 
     def sim_topk(
         self,
@@ -1708,7 +1748,7 @@ class DocumentsEngine:
         helpers expose (``L/search/similarities/*``)."""
         spec = self.searcher.parse(qtype, surface_terms, min_should)
         q = self.searcher.compile(spec, k=k, similarity=similarity)
-        return self._present(self.searcher.search(q, with_keys=True))
+        return _present(self.searcher.search(q, with_keys=True))
 
     def suggest(self, kind: str, pattern, k: int = 10) -> DataFrame:
         """Suggester / spellcheck (``lucene/suggest/.../Lookup.java``,
@@ -1739,13 +1779,8 @@ class DocumentsEngine:
             cond = F.col("term").contains(pattern)
         else:
             raise ValueError(f"unknown suggest kind {kind!r}")
-        top = ts.filter(cond).orderBy(F.desc("df"), F.asc("term")).limit(k)
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc("df"), F.asc("term"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .select("rank", "term", F.col("df").cast("long").alias("df"))
-            .orderBy("rank")
+        return ranked_top(ts.filter(cond), k, F.desc("df"), F.asc("term")).select(
+            "rank", "term", F.col("df").cast("long").alias("df")
         )
 
     def suggest_docdict(self, prefix: str, k: int = 10) -> DataFrame:
@@ -1764,19 +1799,10 @@ class DocumentsEngine:
             os.path.join(self.sf_dir, "documents.parquet")
         ).select("doc_id", F.col("source").alias("key"),
                  F.col("n_chars").cast("long").alias("weight"))
-        top = (
-            docs.filter(F.col("key").startswith(prefix))
-            .orderBy(F.desc("weight"), F.asc("key"), F.asc("doc_id"))
-            .limit(k)
-        )
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc("weight"), F.asc("key"), F.asc("doc_id"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .select("rank", "key", "weight",
-                    F.col("doc_id").cast("long").alias("doc_id"))
-            .orderBy("rank")
-        )
+        return ranked_top(
+            docs.filter(F.col("key").startswith(prefix)),
+            k, F.desc("weight"), F.asc("key"), F.asc("doc_id"),
+        ).select("rank", "key", "weight", F.col("doc_id").cast("long").alias("doc_id"))
 
     def bm25_tuned_topk(
         self,
@@ -1805,7 +1831,7 @@ class DocumentsEngine:
             spec, df_map, s.stats.doc_count,
             norm_cache(s.stats.avgdl, k1=k1, b=b), k,
         )
-        return self._present(s.search(q, with_keys=True))
+        return _present(s.search(q, with_keys=True))
 
     def omitnorms_topk(
         self,
@@ -1836,7 +1862,7 @@ class DocumentsEngine:
             spec, df_map, s.stats.doc_count,
             np.full(256, const, dtype=np.float32), k,
         )
-        return self._present(s.search(q, with_keys=True))
+        return _present(s.search(q, with_keys=True))
 
     def group_query_topk(
         self, buckets: dict[str, tuple[str, list[str]]], k: int = 3
@@ -1853,7 +1879,7 @@ class DocumentsEngine:
         for name in sorted(buckets):
             qtype, terms = buckets[name]
             spec = self.searcher.parse(qtype, terms, 0)
-            top = self._present(
+            top = _present(
                 self.searcher.search(
                     self.searcher.compile(spec, k=k), with_keys=True
                 )
@@ -1892,18 +1918,11 @@ class DocumentsEngine:
         score = F.col("df").cast("double") * (
             F.lit(1.0) - F.lit(0.10) * pos
         )
-        top = ts.withColumn("score", score).orderBy(
-            F.desc("score"), F.asc("term")
-        ).limit(k)
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc("score"), F.asc("term"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .select(
-                "rank", "term", F.col("df").cast("long").alias("df"),
-                F.col("score").cast("double").alias("score"),
-            )
-            .orderBy("rank")
+        return ranked_top(
+            ts.withColumn("score", score), k, F.desc("score"), F.asc("term")
+        ).select(
+            "rank", "term", F.col("df").cast("long").alias("df"),
+            F.col("score").cast("double").alias("score"),
         )
 
     def suggest_fuzzy_prefix(
@@ -1960,13 +1979,8 @@ class DocumentsEngine:
                 if n + off > 0
             ]
             cond = exact | (pref_ok & (F.least(*dists) <= max_edits))
-        top = ts.filter(cond).orderBy(F.desc("df"), F.asc("term")).limit(k)
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc("df"), F.asc("term"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .select("rank", "term", F.col("df").cast("long").alias("df"))
-            .orderBy("rank")
+        return ranked_top(ts.filter(cond), k, F.desc("df"), F.asc("term")).select(
+            "rank", "term", F.col("df").cast("long").alias("df")
         )
 
     def spellcheck_collate(
@@ -2207,20 +2221,10 @@ class DocumentsEngine:
         is a single global TakeOrdered. Scores are float32 on both engines
         (absorbs JVM-vs-libm 1-ulp double divergence in log/div)."""
         scored = self._funcexpr_scored(expr)
-        top = (
-            scored.orderBy(F.desc("fscore"), F.asc("doc_key"))
-            .limit(k)
-        )
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc("fscore"), F.asc("doc_key"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .select(
-                "rank",
-                F.col("doc_key").cast("long").alias("doc_id"),
-                F.col("fscore").cast("float").alias("fscore"),
-            )
-            .orderBy("rank")
+        return ranked_top(scored, k, F.desc("fscore"), F.asc("doc_key")).select(
+            "rank",
+            F.col("doc_key").cast("long").alias("doc_id"),
+            F.col("fscore").cast("float").alias("fscore"),
         )
 
     def frange_docs(
@@ -2334,21 +2338,13 @@ class DocumentsEngine:
             + F.lit(w1) * F.log(F.lit(1.0) + F.col("tf").cast("double"))
             + F.lit(w2) * (F.col("n_chars").cast("double") / F.lit(1000.0))
         ).cast("float")
-        top = (
-            feat.withColumn("ltr_score", ltr)
-            .orderBy(F.desc("ltr_score"), F.asc("doc_key"))
-            .limit(k)
-        )
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc("ltr_score"), F.asc("doc_key"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .select(
-                "rank",
-                F.col("doc_key").cast("long").alias("doc_id"),
-                F.col("ltr_score").cast("float").alias("ltr_score"),
-            )
-            .orderBy("rank")
+        return ranked_top(
+            feat.withColumn("ltr_score", ltr),
+            k, F.desc("ltr_score"), F.asc("doc_key"),
+        ).select(
+            "rank",
+            F.col("doc_key").cast("long").alias("doc_id"),
+            F.col("ltr_score").cast("float").alias("ltr_score"),
         )
 
     def ltr_trees_topk(
@@ -2400,21 +2396,13 @@ class DocumentsEngine:
         for weight, root in trees:
             t = F.lit(float(weight)) * node_col(root)
             total = t if total is None else total + t
-        top = (
-            feat.withColumn("ltr_score", total.cast("float"))
-            .orderBy(F.desc("ltr_score"), F.asc("doc_key"))
-            .limit(k)
-        )
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc("ltr_score"), F.asc("doc_key"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .select(
-                "rank",
-                F.col("doc_key").cast("long").alias("doc_id"),
-                F.col("ltr_score").cast("float").alias("ltr_score"),
-            )
-            .orderBy("rank")
+        return ranked_top(
+            feat.withColumn("ltr_score", total.cast("float")),
+            k, F.desc("ltr_score"), F.asc("doc_key"),
+        ).select(
+            "rank",
+            F.col("doc_key").cast("long").alias("doc_id"),
+            F.col("ltr_score").cast("float").alias("ltr_score"),
         )
 
     def rerank_topk(
@@ -2640,17 +2628,10 @@ class DocumentsEngine:
                 (F.col(sort_field) < cv)
                 | ((F.col(sort_field) == cv) & (F.col("doc_key") > ck))
             )
-        top = j.orderBy(F.desc(sort_field), F.asc("doc_key")).limit(k)
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc(sort_field), F.asc("doc_key"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .select(
-                "rank",
-                F.col("doc_key").cast("long").alias("doc_id"),
-                F.col(sort_field).cast("long").alias("sortval"),
-            )
-            .orderBy("rank")
+        return ranked_top(j, k, F.desc(sort_field), F.asc("doc_key")).select(
+            "rank",
+            F.col("doc_key").cast("long").alias("doc_id"),
+            F.col(sort_field).cast("long").alias("sortval"),
         )
 
     def cursor_page2(
@@ -2698,22 +2679,11 @@ class DocumentsEngine:
             os.path.join(self.sf_dir, "documents.parquet")
         ).select(F.col("doc_id").alias("doc_key"), sort_field)
         fld = F.asc(sort_field) if ascending else F.desc(sort_field)
-        top = (
-            hits.join(keys, "doc_id", "left")
-            .join(F.broadcast(src), "doc_key")
-            .orderBy(fld, F.asc("doc_key"))
-            .limit(k)
-        )
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(fld, F.asc("doc_key"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .select(
-                "rank",
-                F.col("doc_key").cast("long").alias("doc_id"),
-                F.col(sort_field).cast("long").alias("sortval"),
-            )
-            .orderBy("rank")
+        j = hits.join(keys, "doc_id", "left").join(F.broadcast(src), "doc_key")
+        return ranked_top(j, k, fld, F.asc("doc_key")).select(
+            "rank",
+            F.col("doc_key").cast("long").alias("doc_id"),
+            F.col(sort_field).cast("long").alias("sortval"),
         )
 
     def _monitor_candidate_specs(self, stored: dict[str, tuple]) -> dict:
@@ -2803,7 +2773,7 @@ class DocumentsEngine:
             ],
             min_should_match=1,
         )
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def analysis_debug(self, text: str) -> DataFrame:
         """Field-analysis debug handler (Solr ``/analysis/field`` —
@@ -2913,16 +2883,11 @@ class DocumentsEngine:
                 F.lit(1).alias("grams"),
             )
         )
-        top = big_sc.unionByName(uni_sc).orderBy(
-            F.desc("score"), F.asc("term")
-        ).limit(k)
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc("score"), F.asc("term"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .select("rank", "term", F.col("score").cast("double").alias("score"),
-                    F.col("grams").cast("int").alias("grams"))
-            .orderBy("rank")
+        return ranked_top(
+            big_sc.unionByName(uni_sc), k, F.desc("score"), F.asc("term")
+        ).select(
+            "rank", "term", F.col("score").cast("double").alias("score"),
+            F.col("grams").cast("int").alias("grams"),
         )
 
     def word_break(
@@ -3001,17 +2966,8 @@ class DocumentsEngine:
                 ).cast("float"),
             )
         )
-        top = boosted.orderBy(F.desc("bscore"), F.asc("doc_key")).limit(k)
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc("bscore"), F.asc("doc_key"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .select(
-                "rank",
-                F.col("doc_key").cast("long").alias("doc_id"),
-                F.col("bscore").cast("float").alias("score"),
-            )
-            .orderBy("rank")
+        return _present(
+            ranked_top(boosted, k, F.desc("bscore"), F.asc("doc_key")), score="bscore"
         )
 
     def external_file_boost_topk(
@@ -3051,17 +3007,8 @@ class DocumentsEngine:
                 ).cast("float"),
             )
         )
-        top = boosted.orderBy(F.desc("bscore"), F.asc("doc_key")).limit(k)
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc("bscore"), F.asc("doc_key"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .select(
-                "rank",
-                F.col("doc_key").cast("long").alias("doc_id"),
-                F.col("bscore").cast("float").alias("score"),
-            )
-            .orderBy("rank")
+        return _present(
+            ranked_top(boosted, k, F.desc("bscore"), F.asc("doc_key")), score="bscore"
         )
 
     def boost_by_query_topk(
@@ -3107,17 +3054,8 @@ class DocumentsEngine:
             )
             .join(keys, "doc_id", "left")
         )
-        top = scored.orderBy(F.desc("bscore"), F.asc("doc_key")).limit(k)
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc("bscore"), F.asc("doc_key"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .select(
-                "rank",
-                F.col("doc_key").cast("long").alias("doc_id"),
-                F.col("bscore").cast("float").alias("score"),
-            )
-            .orderBy("rank")
+        return _present(
+            ranked_top(scored, k, F.desc("bscore"), F.asc("doc_key")), score="bscore"
         )
 
     def bf_topk(
@@ -3151,17 +3089,8 @@ class DocumentsEngine:
                 ).cast("float"),
             )
         )
-        top = boosted.orderBy(F.desc("bscore"), F.asc("doc_key")).limit(k)
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc("bscore"), F.asc("doc_key"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .select(
-                "rank",
-                F.col("doc_key").cast("long").alias("doc_id"),
-                F.col("bscore").cast("float").alias("score"),
-            )
-            .orderBy("rank")
+        return _present(
+            ranked_top(boosted, k, F.desc("bscore"), F.asc("doc_key")), score="bscore"
         )
 
     def mlt_text_topk(
@@ -3178,7 +3107,7 @@ class DocumentsEngine:
         df lookup is one term-pruned scan of the small term_stats table;
         execution is the ordinary WAND disjunction."""
         spec = self.searcher.more_like_this_spec(text, top_terms)
-        return self._present(self.searcher.search(spec, k=k, with_keys=True))
+        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def mlt_terms(self, src_doc_id: int, top_terms: int = 8) -> DataFrame:
         """MoreLikeThis ``interestingTerms=details`` (``lucene/queries/.../
@@ -3311,6 +3240,74 @@ class DocumentsEngine:
             .orderBy("pos")
         )
 
+    def rtg(self, doc_keys: list[int]) -> DataFrame:
+        """RealTime Get: per requested key, the live stored document —
+        (found flag, stored fields, indexed length) — from the index's doc
+        map, which includes soft-committed appended segments.
+
+        Scale shape: the request keys are a broadcast literal frame joined
+        against the docs map (parquet min/max on the sorted doc_key column
+        prunes untouched segments); no driver-side doc store."""
+        q = self.spark.createDataFrame(
+            [(i, int(k)) for i, k in enumerate(doc_keys)], "qpos int, doc_key long"
+        )
+        d = self.searcher.docs.select("doc_key", "source", "lang", "length")
+        # broadcast SEMI prunes the doc-map scan to the requested keys
+        # (≤len(keys) rows survive), then the tiny hit set broadcasts into
+        # the left join that restores not-found rows
+        hit = d.join(F.broadcast(q.select("doc_key")), "doc_key", "left_semi")
+        return (
+            q.join(F.broadcast(hit), "doc_key", "left")
+            .select(
+                "qpos",
+                "doc_key",
+                F.when(F.col("length").isNotNull(), 1).otherwise(0)
+                .cast("int").alias("found"),
+                "source",
+                "lang",
+                F.col("length").cast("long").alias("length"),
+            )
+            .orderBy("qpos")
+        )
+
+    def dv_values(self) -> DataFrame:
+        """(doc_key, value) — generation-stacked resolution of the
+        ``popularity`` docvalues field over the index-time base."""
+        from .index.updates import numeric_docvalues
+
+        base = self.searcher.docs.select(
+            "doc_key", (F.col("doc_key") % 7 + 1).cast("double").alias("value")
+        )
+        return numeric_docvalues(self.spark, self.index_dir, DV_FIELD, base)
+
+    def dv_boost_topk(
+        self, qtype: str, surface_terms: list[str], k: int = 10,
+    ) -> DataFrame:
+        """Function boost by the UPDATED docvalues field:
+        score = f32(f64(bm25) * f64(popularity)) — the product(score, field(f))
+        shape (``L/queries/function/FunctionScoreQuery#boostByValue``) whose
+        entire point is that a dvGen update re-ranks immediately.
+
+        Scale shape: unranked hits joined to the resolved DV view (keyed
+        columnar join, O(matches)); top-k is the standard small-side
+        TakeOrdered tail."""
+        spec = self.searcher.parse(qtype, surface_terms, 0)
+        hits = self.searcher.hits(
+            self.searcher.compile(spec, k=1 << 30), mode="exact"
+        )
+        keys = self.searcher.docs.select("doc_id", "doc_key")
+        boosted = (
+            hits.join(keys, "doc_id", "left")
+            .join(self.dv_values(), "doc_key", "left")
+            .withColumn(
+                "bscore",
+                (F.col("score").cast("double") * F.col("value")).cast("float"),
+            )
+        )
+        return _present(
+            ranked_top(boosted, k, F.desc("bscore"), F.asc("doc_key")), score="bscore"
+        )
+
 
 def complex_phrase_parts(query: str, analyzer) -> list[tuple[str, str]]:
     """Parse a ComplexPhraseQueryParser phrase body (``L/queryparser/
@@ -3330,15 +3327,6 @@ def complex_phrase_parts(query: str, analyzer) -> list[tuple[str, str]]:
     return parts
 
 
-def get_engine(spark: SparkSession, sf_dir: str, analyzer: str = "simple") -> DocumentsEngine:
-    key = (os.path.abspath(sf_dir), analyzer)
-    eng = _ENGINES.get(key)
-    if eng is None:
-        eng = DocumentsEngine(spark, sf_dir, analyzer)
-        _ENGINES[key] = eng
-    return eng
-
-
 # --- multi-field schema: a derived `title` field alongside `body` (=text) ---
 # Each Lucene field is an independent posting store sharing the doc key —
 # exactly this architecture's natural shape: one index per field, built over
@@ -3349,23 +3337,13 @@ TITLE_EXPR = "array_join(slice(split(text, ' '), 1, 8), ' ')"
 TITLE_EXPR_SQL = "array_to_string(list_slice(string_split(text, ' '), 1, 8), ' ')"
 QF_TITLE_W = 2.0   # eDisMax qf="title^2 body^1"
 QF_BODY_W = 1.0
-
-
-def get_title_engine(spark: SparkSession, sf_dir: str, analyzer: str = "simple") -> DocumentsEngine:
-    key = (os.path.abspath(sf_dir), analyzer + "+title")
-    eng = _ENGINES.get(key)
-    if eng is None:
-        eng = DocumentsEngine(
-            spark, sf_dir, analyzer, variant="title", text_expr=TITLE_EXPR
-        )
-        _ENGINES[key] = eng
-    return eng
+TITLE = IndexRecipe(text_expr=TITLE_EXPR)
 
 
 # --- analyzer-fixture engines: deterministic corpus injections ---------------
 # The driver corpus is plain lowercase words, so the surfaces these chains
 # exist for (digit runs, URLs, emails) never occur; each fixture appends a
-# deterministic doc_id-derived suffix. The expressions are valid Spark SQL
+# deterministic doc_id-derived suffix (an ``IndexRecipe(text_expr=...)``). The expressions are valid Spark SQL
 # AND DuckDB SQL verbatim — the oracle (fixture_text_topk_sql) embeds the
 # SAME string, so both engines index the identical derived corpus.
 _PATREPLACE_TEXT_T = (
@@ -3405,21 +3383,6 @@ UNICODE_TEXT_EXPR = _UNICODE_TEXT_T.format(id="doc_key")
 UNICODE_TEXT_SQL = _UNICODE_TEXT_T.format(id="doc_id")
 
 
-def get_fixture_engine(
-    spark: SparkSession, sf_dir: str, analyzer: str, text_expr: str,
-    name: str = "fixture",
-) -> DocumentsEngine:
-    """Cached engine over the derived-text fixture ``name`` for ``analyzer``."""
-    key = (os.path.abspath(sf_dir), f"{analyzer}+{name}")
-    eng = _ENGINES.get(key)
-    if eng is None:
-        eng = DocumentsEngine(
-            spark, sf_dir, analyzer, variant=name, text_expr=text_expr
-        )
-        _ENGINES[key] = eng
-    return eng
-
-
 # --- copyField catchall (managed-schema copyField → ``_text_``) --------------
 # Solr's default schema copies every field into the ``_text_`` catchall
 # (``S/schema/IndexSchema#getCopyFieldsList``, ``copyField source="*"
@@ -3429,14 +3392,7 @@ def get_fixture_engine(
 # copyField appends to the destination field's inverted state). Here the
 # catchall = text + lang + source; the expression runs verbatim in DuckDB.
 COPYFIELD_TEXT_EXPR = "concat(text, ' ', lang, ' ', source)"
-
-
-def get_copyfield_engine(
-    spark: SparkSession, sf_dir: str, analyzer: str = "simple"
-) -> DocumentsEngine:
-    return get_fixture_engine(
-        spark, sf_dir, analyzer, COPYFIELD_TEXT_EXPR, name="copyfield"
-    )
+COPYFIELD = IndexRecipe(text_expr=COPYFIELD_TEXT_EXPR)
 
 
 def fielded_dismax_topk(
@@ -3468,7 +3424,7 @@ def fielded_dismax_topk(
 
     legs = []
     for eng, w, nm in (
-        (get_title_engine(spark, sf_dir, analyzer), QF_TITLE_W, "t"),
+        (get_engine(spark, sf_dir, analyzer, TITLE), QF_TITLE_W, "t"),
         (get_engine(spark, sf_dir, analyzer), QF_BODY_W, "b"),
     ):
         spec = eng.searcher.parse(qtype, surface_terms, 0)
@@ -3508,18 +3464,8 @@ def _dismax_field_page(legs: list[DataFrame], k: int, tie: float = 0.0) -> DataF
         ).cast("float").alias("score")
     else:
         score = mx.alias("score")
-    top = (
-        joined.select(F.col("doc_key").cast("long").alias("doc_id"), score)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    return (
-        top.coalesce(1)
-        .sortWithinPartitions(F.desc("score"), F.asc("doc_id"))
-        .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-        .select("rank", "doc_id", F.col("score").cast("float").alias("score"))
-        .orderBy("rank")
-    )
+    page = joined.select(F.col("doc_key").cast("long").alias("doc_key"), score)
+    return _present(ranked_top(page, k, F.desc("score"), F.asc("doc_key")))
 
 
 def blended_term_topk(
@@ -3543,7 +3489,7 @@ def blended_term_topk(
     TermStates-override shape); no new scoring code."""
     from .search.query import BooleanSpec, TermClause, compile_query
 
-    title = get_title_engine(spark, sf_dir, analyzer)
+    title = get_engine(spark, sf_dir, analyzer, TITLE)
     body = get_engine(spark, sf_dir, analyzer)
     toks = [body.searcher.analyzer.analyze(s)[0][0] for s in surface_terms]
     spec = BooleanSpec(should=[TermClause(t) for t in toks])
@@ -3570,129 +3516,59 @@ UPDATE_MOD = 97                      # docs with doc_id % MOD == 0 are updated
 UPDATE_SUFFIX = " vector update refresh"
 
 
-class UpdatedDocumentsEngine(DocumentsEngine):
-    """The base documents index, then an in-place UPDATE of every doc with
-    ``doc_id % UPDATE_MOD == 0`` (new text = old text + UPDATE_SUFFIX) via
-    tombstone + re-add (index/updates.update_docs). Searches see the live
-    corpus only; stats are refreshed so scores equal a fresh build over the
-    post-update corpus. Re-added docs take internal ids AFTER all original
-    docs (key-ordered within the appended batch) — the tiebreak order the
+def _step_update(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
+    """In-place UPDATE of every doc with ``doc_id % UPDATE_MOD == 0`` (new
+    text = old text + UPDATE_SUFFIX) via tombstone + re-add
+    (index/updates.update_docs). Searches see the live corpus only; stats
+    are refreshed so scores equal a fresh build over the post-update
+    corpus. Re-added docs take internal ids AFTER all original docs
+    (key-ordered within the appended batch) — the tiebreak order the
     DuckDB oracle reproduces."""
+    from .index.updates import update_docs
 
-    def __init__(self, spark: SparkSession, sf_dir: str, analyzer: str = "simple") -> None:
-        super().__init__(spark, sf_dir, analyzer, variant=f"upd{UPDATE_MOD}")
-        marker = os.path.join(self.index_dir, "updates_done")
-        if not os.path.exists(marker):
-            from .index.updates import update_docs
-
-            src = os.path.join(sf_dir, "documents.parquet")
-            upd = (
-                spark.read.parquet(src)
-                .filter(F.col("doc_id") % UPDATE_MOD == 0)
-                .select(
-                    F.col("doc_id").alias("doc_key"),
-                    "source",
-                    "lang",
-                    F.concat(F.col("text"), F.lit(UPDATE_SUFFIX)).alias("text"),
-                )
-            )
-            update_docs(spark, upd, self.index_dir, n_segments=4)
-            with open(marker, "w") as f:
-                f.write("done")
-        self.searcher = IndexSearcher(spark, self.index_dir)  # rebind post-update
+    upd = (
+        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        .filter(F.col("doc_id") % UPDATE_MOD == 0)
+        .select(
+            F.col("doc_id").alias("doc_key"),
+            "source",
+            "lang",
+            F.concat(F.col("text"), F.lit(UPDATE_SUFFIX)).alias("text"),
+        )
+    )
+    update_docs(spark, upd, index_dir, n_segments=4)
 
 
-class ExpungedDocumentsEngine(DocumentsEngine):
-    """``UpdatedDocumentsEngine``'s exact fixture, then
-    ``<commit expungeDeletes=true>`` (``IndexWriter#forceMergeDeletes``,
+def _step_expunge(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
+    """``<commit expungeDeletes=true>`` (``IndexWriter#forceMergeDeletes``,
     ``index/updates.expunge_deletes``): the tombstoned originals are
     PHYSICALLY rewritten out of postings/docs/norms, locals compact, bases
-    re-derive. The update moves from query-time tombstone filtering to the
-    on-disk layout with zero observable change — which is why this engine
-    shares ``ft_after_update_topk``'s oracle verbatim: a compaction bug in
-    docID order, re-encoded impacts, or refreshed stats goes hash-red."""
+    re-derive. After ``update`` this moves the update from query-time
+    tombstone filtering to the on-disk layout with zero observable change —
+    which is why ``EXPUNGED`` shares ``ft_after_update_topk``'s oracle
+    verbatim: a compaction bug in docID order, re-encoded impacts, or
+    refreshed stats goes hash-red."""
+    from .index.updates import expunge_deletes
 
-    def __init__(self, spark: SparkSession, sf_dir: str, analyzer: str = "simple") -> None:
-        super().__init__(spark, sf_dir, analyzer, variant=f"expunge{UPDATE_MOD}")
-        marker = os.path.join(self.index_dir, "expunge_done")
-        if not os.path.exists(marker):
-            from .index.updates import expunge_deletes, update_docs
-
-            src = os.path.join(sf_dir, "documents.parquet")
-            upd = (
-                spark.read.parquet(src)
-                .filter(F.col("doc_id") % UPDATE_MOD == 0)
-                .select(
-                    F.col("doc_id").alias("doc_key"),
-                    "source",
-                    "lang",
-                    F.concat(F.col("text"), F.lit(UPDATE_SUFFIX)).alias("text"),
-                )
-            )
-            update_docs(spark, upd, self.index_dir, n_segments=4)
-            report = expunge_deletes(spark, self.index_dir)
-            if not report["expunged_docs"]:
-                raise RuntimeError("expunge fixture reclaimed nothing")
-            with open(marker, "w") as f:
-                f.write("done")
-        self.searcher = IndexSearcher(spark, self.index_dir)  # rebind post-expunge
+    if not expunge_deletes(spark, index_dir)["expunged_docs"]:
+        raise RuntimeError("expunge fixture reclaimed nothing")
 
 
-def get_expunged_engine(
-    spark: SparkSession, sf_dir: str, analyzer: str = "simple"
-) -> ExpungedDocumentsEngine:
-    key = (os.path.abspath(sf_dir), analyzer + "+expunge")
-    eng = _ENGINES.get(key)
-    if eng is None:
-        eng = ExpungedDocumentsEngine(spark, sf_dir, analyzer)
-        _ENGINES[key] = eng
-    return eng  # type: ignore[return-value]
+def _step_commit_point(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
+    """Capture a COMMIT POINT (``index/commits.py``). A recipe holding this
+    step opens its searcher AT the first retained commit
+    (``DirectoryReader.open(IndexCommit)`` over a
+    SnapshotDeletionPolicy-retained generation), so every query answers
+    bitwise as the corpus before the later steps: the time-travel read
+    the manifest-as-SegmentInfos storage model buys for free."""
+    from .index.commits import commit_point
+
+    commit_point(index_dir)
 
 
-class CommitPointDocumentsEngine(DocumentsEngine):
-    """The base documents index, a COMMIT POINT captured, then the SAME
-    in-place update ``UpdatedDocumentsEngine`` applies — but this engine's
-    searcher opens AT the retained commit (``DirectoryReader.open(IndexCommit)``
-    over a SnapshotDeletionPolicy-retained generation, ``index/commits.py``),
-    so every query answers bitwise as the PRE-update corpus: the time-travel
-    read the manifest-as-SegmentInfos storage model buys for free."""
-
-    def __init__(self, spark: SparkSession, sf_dir: str, analyzer: str = "simple") -> None:
-        super().__init__(spark, sf_dir, analyzer, variant=f"asof{UPDATE_MOD}")
-        from .index.commits import commit_point, list_commits
-        from .index.updates import update_docs
-
-        marker = os.path.join(self.index_dir, "updates_done")
-        if not os.path.exists(marker):
-            gen = commit_point(self.index_dir)
-            src = os.path.join(sf_dir, "documents.parquet")
-            upd = (
-                spark.read.parquet(src)
-                .filter(F.col("doc_id") % UPDATE_MOD == 0)
-                .select(
-                    F.col("doc_id").alias("doc_key"),
-                    "source",
-                    "lang",
-                    F.concat(F.col("text"), F.lit(UPDATE_SUFFIX)).alias("text"),
-                )
-            )
-            update_docs(spark, upd, self.index_dir, n_segments=4)
-            with open(marker, "w") as f:
-                f.write("done")
-        else:
-            gen = list_commits(self.index_dir)[0]
-        self.searcher = IndexSearcher(spark, self.index_dir, commit=gen)
-
-
-def get_asof_engine(
-    spark: SparkSession, sf_dir: str, analyzer: str = "simple"
-) -> CommitPointDocumentsEngine:
-    key = (os.path.abspath(sf_dir), analyzer + "+asof")
-    eng = _ENGINES.get(key)
-    if eng is None:
-        eng = CommitPointDocumentsEngine(spark, sf_dir, analyzer)
-        _ENGINES[key] = eng
-    return eng  # type: ignore[return-value]
+UPDATED = IndexRecipe(steps=("update",))
+EXPUNGED = IndexRecipe(steps=("update", "expunge"))
+ASOF = IndexRecipe(steps=("commit_point", "update"))
 
 
 KNN_TEST_MOD = 10   # doc_id % MOD == 0 held out and classified
@@ -3702,21 +3578,8 @@ KNN_TOP_TERMS = 4   # MLT query terms per test doc
 _KNN_TOKEN_RE = r"[0-9A-Za-z_](?:['’]?[0-9A-Za-z_]){0,254}"
 
 
-def get_trainsplit_engine(
-    spark: SparkSession, sf_dir: str, analyzer: str = "simple"
-) -> DocumentsEngine:
-    """Documents index over the TRAIN split only (doc_id % KNN_TEST_MOD != 0)
-    — the classifier's training index."""
-    key = (os.path.abspath(sf_dir), analyzer + "+train")
-    eng = _ENGINES.get(key)
-    if eng is None:
-        eng = DocumentsEngine(
-            spark, sf_dir, analyzer,
-            variant=f"train{KNN_TEST_MOD}",
-            row_filter=f"doc_key % {KNN_TEST_MOD} != 0",
-        )
-        _ENGINES[key] = eng
-    return eng
+# the classifier's training index: the TRAIN split only
+TRAIN_SPLIT = IndexRecipe(row_filter=f"doc_key % {KNN_TEST_MOD} != 0")
 
 
 def knn_classify(spark: SparkSession, sf_dir: str, analyzer: str = "simple") -> DataFrame:
@@ -3737,7 +3600,7 @@ def knn_classify(spark: SparkSession, sf_dir: str, analyzer: str = "simple") -> 
     labels."""
     from .search.query import BooleanSpec, TermClause
 
-    eng = get_trainsplit_engine(spark, sf_dir, analyzer)
+    eng = get_engine(spark, sf_dir, analyzer, TRAIN_SPLIT)
     s = eng.searcher
     src = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
@@ -3798,104 +3661,55 @@ def knn_classify(spark: SparkSession, sf_dir: str, analyzer: str = "simple") -> 
     )
 
 
-def get_updated_engine(
-    spark: SparkSession, sf_dir: str, analyzer: str = "simple"
-) -> UpdatedDocumentsEngine:
-    key = (os.path.abspath(sf_dir), analyzer + "+upd")
-    eng = _ENGINES.get(key)
-    if eng is None:
-        eng = UpdatedDocumentsEngine(spark, sf_dir, analyzer)
-        _ENGINES[key] = eng
-    return eng  # type: ignore[return-value]
-
-
 DBQ_TERM = "dup"                     # deleteByQuery target: matches 25/500
                                      # sf0.01 docs — enough to shift the
                                      # global stats every survivor scores by
 
 
-class DbqDocumentsEngine(DocumentsEngine):
-    """The base documents index, then a DELETE-BY-QUERY
-    (``S/update/DirectUpdateHandler2#deleteByQuery``): every doc matching
-    ``DBQ_TERM`` is tombstoned via the distributed match-set path
-    (``index/updates.delete_by_query_hits`` — the hit set never touches
-    the driver) and stats refresh, so surviving docs score exactly as a
-    fresh build over the post-delete corpus (docCount, avgdl, and every
-    df shrink)."""
+def _step_dbq(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
+    """DELETE-BY-QUERY (``S/update/DirectUpdateHandler2#deleteByQuery``):
+    every doc matching ``DBQ_TERM`` is tombstoned via the distributed
+    match-set path (``index/updates.delete_by_query_hits`` — the hit set
+    never touches the driver) and stats refresh, so surviving docs score
+    exactly as a fresh build over the post-delete corpus (docCount, avgdl,
+    and every df shrink)."""
+    from .index.updates import delete_by_query_hits
 
-    def __init__(self, spark: SparkSession, sf_dir: str, analyzer: str = "simple") -> None:
-        super().__init__(spark, sf_dir, analyzer, variant="dbq")
-        marker = os.path.join(self.index_dir, "dbq_done")
-        if not os.path.exists(marker):
-            from .index.updates import delete_by_query_hits
-
-            # k = unbounded: DBQ needs the FULL match set, and hits()
-            # keeps the compiled k as its per-segment cap
-            q = self.searcher.compile(
-                self.searcher.parse("term", [DBQ_TERM]), k=1 << 30
-            )
-            delete_by_query_hits(
-                spark, self.index_dir, self.searcher.hits(q, mode="exact")
-            )
-            with open(marker, "w") as f:
-                f.write("done")
-        self.searcher = IndexSearcher(spark, self.index_dir)  # rebind post-DBQ
+    s = IndexSearcher(spark, index_dir)
+    # k = unbounded: DBQ needs the FULL match set, and hits() keeps the
+    # compiled k as its per-segment cap
+    q = s.compile(s.parse("term", [DBQ_TERM]), k=1 << 30)
+    delete_by_query_hits(spark, index_dir, s.hits(q, mode="exact"))
 
 
-def get_dbq_engine(
-    spark: SparkSession, sf_dir: str, analyzer: str = "simple"
-) -> DbqDocumentsEngine:
-    key = (os.path.abspath(sf_dir), analyzer + "+dbq")
-    eng = _ENGINES.get(key)
-    if eng is None:
-        eng = DbqDocumentsEngine(spark, sf_dir, analyzer)
-        _ENGINES[key] = eng
-    return eng  # type: ignore[return-value]
+DBQ_DELETED = IndexRecipe(steps=("dbq",))
 
 
 ATOMIC_MOD = 89                      # docs with doc_id % MOD == 0 get the op
 ATOMIC_OPERAND = "atomic vector refresh"
 
 
-class AtomicUpdatedDocumentsEngine(DocumentsEngine):
-    """The base documents index, then an ATOMIC partial update (field-level
-    ``add`` op appending to ``text``) on every doc with
-    ``doc_id % ATOMIC_MOD == 0`` — the ``AtomicUpdateDocumentMerger``
-    analog: the engine resolves the op against the live doc itself
-    (distributed join with the source-of-record table), the caller supplies
-    only (key, operand). Downstream mechanics (tombstone + re-add, stats
-    refresh, internal-id ordering) are shared with UpdatedDocumentsEngine."""
+def _step_atomic(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
+    """ATOMIC partial update (field-level ``add`` op appending to
+    ``text``) on every doc with ``doc_id % ATOMIC_MOD == 0`` — the
+    ``AtomicUpdateDocumentMerger`` analog: the engine resolves the op
+    against the live doc itself (distributed join with the
+    source-of-record table), the caller supplies only (key, operand).
+    Downstream mechanics (tombstone + re-add, stats refresh, internal-id
+    ordering) are shared with ``_step_update``."""
+    from .index.updates import atomic_update_docs
 
-    def __init__(self, spark: SparkSession, sf_dir: str, analyzer: str = "simple") -> None:
-        super().__init__(spark, sf_dir, analyzer, variant=f"atom{ATOMIC_MOD}")
-        marker = os.path.join(self.index_dir, "updates_done")
-        if not os.path.exists(marker):
-            from .index.updates import atomic_update_docs
-
-            src = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-                F.col("doc_id").alias("doc_key"), "source", "lang", "text"
-            )
-            ops = (
-                src.filter(F.col("doc_key") % ATOMIC_MOD == 0)
-                .select("doc_key", F.lit(ATOMIC_OPERAND).alias("text"))
-            )
-            atomic_update_docs(
-                spark, self.index_dir, ops, {"text": "add"}, src, n_segments=4
-            )
-            with open(marker, "w") as f:
-                f.write("done")
-        self.searcher = IndexSearcher(spark, self.index_dir)  # rebind post-update
+    src = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
+        F.col("doc_id").alias("doc_key"), "source", "lang", "text"
+    )
+    ops = (
+        src.filter(F.col("doc_key") % ATOMIC_MOD == 0)
+        .select("doc_key", F.lit(ATOMIC_OPERAND).alias("text"))
+    )
+    atomic_update_docs(spark, index_dir, ops, {"text": "add"}, src, n_segments=4)
 
 
-def get_atomic_engine(
-    spark: SparkSession, sf_dir: str, analyzer: str = "simple"
-) -> AtomicUpdatedDocumentsEngine:
-    key = (os.path.abspath(sf_dir), analyzer + "+atom")
-    eng = _ENGINES.get(key)
-    if eng is None:
-        eng = AtomicUpdatedDocumentsEngine(spark, sf_dir, analyzer)
-        _ENGINES[key] = eng
-    return eng  # type: ignore[return-value]
+ATOMIC_UPDATED = IndexRecipe(steps=("atomic",))
 
 
 # --- RealTime Get fixture (S/handler/component/RealTimeGetComponent) --------
@@ -3910,85 +3724,29 @@ RTG_DOCS = [
 ]
 
 
-class RTGDocumentsEngine(DocumentsEngine):
-    """The base documents index plus a soft-committed ``append_batch`` of
-    brand-new docs (``RealTimeGetComponent`` / NRT ``openIfChanged``
-    visibility): a get by key must see appended docs immediately — before
-    any merge — and report absence for unknown keys."""
+def _step_rtg(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
+    """A soft-committed ``append_batch`` of brand-new docs
+    (``RealTimeGetComponent`` / NRT ``openIfChanged`` visibility): a get
+    by key (``DocumentsEngine.rtg``) must see appended docs immediately —
+    before any merge — and report absence for unknown keys."""
+    from .index.build import append_batch
 
-    def __init__(self, spark: SparkSession, sf_dir: str, analyzer: str = "simple") -> None:
-        super().__init__(spark, sf_dir, analyzer, variant="rtg1")
-        marker = os.path.join(self.index_dir, "rtg_done")
-        if not os.path.exists(marker):
-            from .index.build import append_batch
-
-            batch = spark.createDataFrame(
-                RTG_DOCS, "doc_key long, source string, lang string, text string"
-            )
-            append_batch(spark, batch, self.index_dir, n_segments=1)
-            with open(marker, "w") as f:
-                f.write("done")
-        self.searcher = IndexSearcher(spark, self.index_dir)  # rebind post-append
-
-    def rtg(self, doc_keys: list[int]) -> DataFrame:
-        """RealTime Get: per requested key, the live stored document —
-        (found flag, stored fields, indexed length) — from the index's doc
-        map, which includes soft-committed appended segments.
-
-        Scale shape: the request keys are a broadcast literal frame joined
-        against the docs map (parquet min/max on the sorted doc_key column
-        prunes untouched segments); no driver-side doc store."""
-        q = self.spark.createDataFrame(
-            [(i, int(k)) for i, k in enumerate(doc_keys)], "qpos int, doc_key long"
-        )
-        d = self.searcher.docs.select("doc_key", "source", "lang", "length")
-        # broadcast SEMI prunes the doc-map scan to the requested keys
-        # (≤len(keys) rows survive), then the tiny hit set broadcasts into
-        # the left join that restores not-found rows
-        hit = d.join(F.broadcast(q.select("doc_key")), "doc_key", "left_semi")
-        return (
-            q.join(F.broadcast(hit), "doc_key", "left")
-            .select(
-                "qpos",
-                "doc_key",
-                F.when(F.col("length").isNotNull(), 1).otherwise(0)
-                .cast("int").alias("found"),
-                "source",
-                "lang",
-                F.col("length").cast("long").alias("length"),
-            )
-            .orderBy("qpos")
-        )
+    batch = spark.createDataFrame(
+        RTG_DOCS, "doc_key long, source string, lang string, text string"
+    )
+    append_batch(spark, batch, index_dir, n_segments=1)
 
 
-def get_rtg_engine(
-    spark: SparkSession, sf_dir: str, analyzer: str = "simple"
-) -> RTGDocumentsEngine:
-    key = (os.path.abspath(sf_dir), analyzer + "+rtg")
-    eng = _ENGINES.get(key)
-    if eng is None:
-        eng = RTGDocumentsEngine(spark, sf_dir, analyzer)
-        _ENGINES[key] = eng
-    return eng  # type: ignore[return-value]
+RTG_APPENDED = IndexRecipe(steps=("rtg",))
 
 
 # --- distributed search with per-shard statistics (LocalStatsCache) ---------
 
 
-def get_shard_engine(
-    spark: SparkSession, sf_dir: str, analyzer: str, shard: int, n_shards: int
-) -> DocumentsEngine:
-    key = (os.path.abspath(sf_dir), f"{analyzer}+shard{shard}of{n_shards}")
-    eng = _ENGINES.get(key)
-    if eng is None:
-        eng = DocumentsEngine(
-            spark, sf_dir, analyzer,
-            variant=f"shard{shard}of{n_shards}",
-            row_filter=f"doc_id % {n_shards} = {shard}",
-            n_segments=2,
-        )
-        _ENGINES[key] = eng
-    return eng
+def shard_recipe(shard: int, n_shards: int) -> IndexRecipe:
+    """Hash-routed shard ``shard`` of ``n_shards``: its own index over
+    ``doc_id % n_shards = shard``."""
+    return IndexRecipe(row_filter=f"doc_id % {n_shards} = {shard}", n_segments=2)
 
 
 def localstats_topk(
@@ -4017,7 +3775,7 @@ def localstats_topk(
     TakeOrdered; exactly SolrCloud's scatter-gather (no cross-shard
     shuffle, driver sees n·k (doc, score) rows)."""
     parts = [
-        get_shard_engine(spark, sf_dir, analyzer, s, n_shards)
+        get_engine(spark, sf_dir, analyzer, shard_recipe(s, n_shards))
         .topk(qtype, surface_terms, k=k)
         .select("doc_id", "score")
         for s in range(n_shards)
@@ -4025,13 +3783,8 @@ def localstats_topk(
     u = parts[0]
     for p in parts[1:]:
         u = u.unionAll(p)
-    top = u.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return (
-        top.coalesce(1)
-        .sortWithinPartitions(F.desc("score"), F.asc("doc_id"))
-        .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-        .select("rank", "doc_id", F.col("score").cast("float").alias("score"))
-        .orderBy("rank")
+    return ranked_top(u, k, F.desc("score"), F.asc("doc_id")).select(
+        "rank", "doc_id", F.col("score").cast("float").alias("score")
     )
 
 
@@ -4062,7 +3815,7 @@ def exactstats_topk(
     per-shard search jobs never exchange postings; merge is an n·k-row
     TakeOrdered."""
     searchers = [
-        get_shard_engine(spark, sf_dir, analyzer, s, n_shards).searcher
+        get_engine(spark, sf_dir, analyzer, shard_recipe(s, n_shards)).searcher
         for s in range(n_shards)
     ]
     spec = searchers[0].parse(qtype, surface_terms, 0)
@@ -4103,13 +3856,8 @@ def scatter_gather_topk(searchers, spec, k: int) -> DataFrame:
     u = legs[0]
     for p in legs[1:]:
         u = u.unionAll(p)
-    top = u.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return (
-        top.coalesce(1)
-        .sortWithinPartitions(F.desc("score"), F.asc("doc_id"))
-        .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-        .select("rank", "doc_id", F.col("score").cast("float").alias("score"))
-        .orderBy("rank")
+    return ranked_top(u, k, F.desc("score"), F.asc("doc_id")).select(
+        "rank", "doc_id", F.col("score").cast("float").alias("score")
     )
 
 
@@ -4123,42 +3871,18 @@ def get_split_searchers(
 ):
     """Split the base documents index into ``n`` hash-routed children
     (``index/split.split_index`` — hard-linked segments + child tombstones
-    + refreshed stats) and return their searchers. Marker-gated: the split
-    runs once per (parent, n) and reopens afterwards."""
+    + refreshed stats) and return their searchers. Published once per
+    (parent, n) through ``_publish``; reopens afterwards."""
     from .index.split import split_index
-    from .search.searcher import IndexSearcher
 
     parent = get_engine(spark, sf_dir, analyzer)
-    out_root = parent.index_dir + f"-split{n}"
-    marker = os.path.join(out_root, "_split_done")
-    if not os.path.exists(marker):
-        # split into a private temp root, publish by ONE atomic rename —
-        # two concurrent drivers can no longer interleave writes behind a
-        # half-written marker (the loser keeps the winner's complete tree)
-        import shutil as _sh
-
-        tmp_root = out_root + f".tmp.{os.getpid()}"
-        _sh.rmtree(tmp_root, ignore_errors=True)
-        split_index(spark, parent.index_dir, n, tmp_root)
-        with open(os.path.join(tmp_root, "_split_done"), "w") as fh:
-            fh.write("ok")
-        try:
-            os.rename(tmp_root, out_root)
-        except OSError:
-            if os.path.exists(marker):  # a concurrent driver won — use its tree
-                _sh.rmtree(tmp_root, ignore_errors=True)
-            else:  # a dead half-built tree squats on the name: replace it
-                _sh.rmtree(out_root, ignore_errors=True)
-                os.rename(tmp_root, out_root)
-    key = (os.path.abspath(sf_dir), f"{analyzer}+split{n}")
-    cached = _ENGINES.get(key)
-    if cached is None:
-        cached = [
-            IndexSearcher(spark, os.path.join(out_root, f"shard{c}"))
-            for c in range(n)
-        ]
-        _ENGINES[key] = cached
-    return cached
+    out_root = _publish(
+        parent.index_dir + f"-split{n}",
+        lambda tmp: split_index(spark, parent.index_dir, n, tmp),
+    )
+    return _memo(out_root, lambda: [
+        IndexSearcher(spark, os.path.join(out_root, f"shard{c}")) for c in range(n)
+    ])
 
 
 def split_union_topk(
@@ -4185,97 +3909,31 @@ DV_UPD1_MOD = 3   # gen-1 updates: doc_key % 3 == 0 → key % 5 + 10
 DV_UPD2_MOD = 6   # gen-2 updates: doc_key % 6 == 0 → key % 4 + 2 (overrides gen 1)
 
 
-class DVUpdatedDocumentsEngine(DocumentsEngine):
-    """The base documents index carrying a numeric docvalues field
-    (``popularity``, index-time value = doc_key % 7 + 1) that is then
-    updated IN PLACE twice via ``IndexWriter#updateNumericDocValue``
+def _step_dv(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
+    """The numeric docvalues field ``popularity`` (index-time value =
+    doc_key % 7 + 1) updated IN PLACE twice via
+    ``IndexWriter#updateNumericDocValue``
     (``index/updates.update_numeric_docvalues``): generation 1 rewrites
     every ``doc_key % 3 == 0`` doc, generation 2 rewrites the ``% 6 == 0``
-    subset again — so reads must stack generations latest-wins over the
-    base, with postings/norms/text untouched throughout (no tombstones,
-    no re-add: this is the docvalues-only update path Lucene added so
-    ranking signals can refresh without reindex cost)."""
+    subset again — so reads (``DocumentsEngine.dv_values``) must stack
+    generations latest-wins over the base, with postings/norms/text
+    untouched throughout (no tombstones, no re-add: this is the
+    docvalues-only update path Lucene added so ranking signals can refresh
+    without reindex cost)."""
+    from .index.updates import update_numeric_docvalues
 
-    def __init__(self, spark: SparkSession, sf_dir: str, analyzer: str = "simple") -> None:
-        super().__init__(spark, sf_dir, analyzer, variant="dvupd")
-        marker = os.path.join(self.index_dir, "dv_updates_done")
-        if not os.path.exists(marker):
-            import shutil
-
-            from .index.updates import dv_updates_root, update_numeric_docvalues
-
-            root = dv_updates_root(self.index_dir, DV_FIELD)
-            if os.path.exists(root):  # crashed prior attempt: rewrite clean
-                shutil.rmtree(root)
-            keys = self.searcher.docs.select("doc_key")
-            g1 = keys.filter(F.col("doc_key") % DV_UPD1_MOD == 0).select(
-                "doc_key", (F.col("doc_key") % 5 + 10).cast("double").alias("value")
-            )
-            update_numeric_docvalues(spark, g1, self.index_dir, DV_FIELD)
-            g2 = keys.filter(F.col("doc_key") % DV_UPD2_MOD == 0).select(
-                "doc_key", (F.col("doc_key") % 4 + 2).cast("double").alias("value")
-            )
-            update_numeric_docvalues(spark, g2, self.index_dir, DV_FIELD)
-            with open(marker, "w") as f:
-                f.write("done")
-
-    def dv_values(self) -> DataFrame:
-        """(doc_key, value) — generation-stacked resolution of the
-        ``popularity`` docvalues field over the index-time base."""
-        from .index.updates import numeric_docvalues
-
-        base = self.searcher.docs.select(
-            "doc_key", (F.col("doc_key") % 7 + 1).cast("double").alias("value")
-        )
-        return numeric_docvalues(self.spark, self.index_dir, DV_FIELD, base)
-
-    def dv_boost_topk(
-        self, qtype: str, surface_terms: list[str], k: int = 10,
-    ) -> DataFrame:
-        """Function boost by the UPDATED docvalues field:
-        score = f32(f64(bm25) * f64(popularity)) — the product(score, field(f))
-        shape (``L/queries/function/FunctionScoreQuery#boostByValue``) whose
-        entire point is that a dvGen update re-ranks immediately.
-
-        Scale shape: unranked hits joined to the resolved DV view (keyed
-        columnar join, O(matches)); top-k is the standard small-side
-        TakeOrdered tail."""
-        spec = self.searcher.parse(qtype, surface_terms, 0)
-        hits = self.searcher.hits(
-            self.searcher.compile(spec, k=1 << 30), mode="exact"
-        )
-        keys = self.searcher.docs.select("doc_id", "doc_key")
-        boosted = (
-            hits.join(keys, "doc_id", "left")
-            .join(self.dv_values(), "doc_key", "left")
-            .withColumn(
-                "bscore",
-                (F.col("score").cast("double") * F.col("value")).cast("float"),
-            )
-        )
-        top = boosted.orderBy(F.desc("bscore"), F.asc("doc_key")).limit(k)
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc("bscore"), F.asc("doc_key"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .select(
-                "rank",
-                F.col("doc_key").cast("long").alias("doc_id"),
-                F.col("bscore").cast("float").alias("score"),
-            )
-            .orderBy("rank")
-        )
+    keys = IndexSearcher(spark, index_dir).docs.select("doc_key")
+    g1 = keys.filter(F.col("doc_key") % DV_UPD1_MOD == 0).select(
+        "doc_key", (F.col("doc_key") % 5 + 10).cast("double").alias("value")
+    )
+    update_numeric_docvalues(spark, g1, index_dir, DV_FIELD)
+    g2 = keys.filter(F.col("doc_key") % DV_UPD2_MOD == 0).select(
+        "doc_key", (F.col("doc_key") % 4 + 2).cast("double").alias("value")
+    )
+    update_numeric_docvalues(spark, g2, index_dir, DV_FIELD)
 
 
-def get_dv_engine(
-    spark: SparkSession, sf_dir: str, analyzer: str = "simple"
-) -> DVUpdatedDocumentsEngine:
-    key = (os.path.abspath(sf_dir), analyzer + "+dvupd")
-    eng = _ENGINES.get(key)
-    if eng is None:
-        eng = DVUpdatedDocumentsEngine(spark, sf_dir, analyzer)
-        _ENGINES[key] = eng
-    return eng  # type: ignore[return-value]
+DV_UPDATED = IndexRecipe(steps=("dv",))
 
 
 FMASK_PREFIX = "\x02title:"
@@ -4317,7 +3975,7 @@ def field_masking_span_topk(
     from .search.searcher import RESULT_SCHEMA, _make_search_kernel
 
     body = get_engine(spark, sf_dir, analyzer)
-    title = get_title_engine(spark, sf_dir, analyzer)
+    title = get_engine(spark, sf_dir, analyzer, TITLE)
     bs, ts = body.searcher, title.searcher
     tt = ts.analyzer.analyze(title_surface)[0][0]
     bt = bs.analyzer.analyze(body_surface)[0][0]
@@ -4352,12 +4010,7 @@ def field_masking_span_topk(
         .applyInPandas(_make_search_kernel(q, "exact"), RESULT_SCHEMA)
         .select("doc_id", "score")
     )
-    out = bs._finish(hits, k, with_keys=True)
-    return out.select(
-        F.col("rank").cast("int").alias("rank"),
-        F.col("doc_key").cast("long").alias("doc_id"),
-        F.col("score").cast("float").alias("score"),
-    ).orderBy("rank")
+    return _present(bs._finish(hits, k, with_keys=True))
 
 
 def get_addindexes_searcher(
@@ -4365,32 +4018,20 @@ def get_addindexes_searcher(
 ) -> IndexSearcher:
     """Searcher over ``addIndexes(shard0, shard1)`` — the two hash-routed
     half-corpus indexes grafted into ONE physical index (file-level segment
-    copy + rebase + re-finalize, ``index/merge.add_indexes``). Cached like
-    the engines; rebuilt clean if a prior graft half-finished."""
-    key = (os.path.abspath(sf_dir), analyzer + "+addidx")
-    eng = _ENGINES.get(key)
-    if eng is not None:
-        return eng  # type: ignore[return-value]
-    import shutil
-
+    copy + rebase + re-finalize, ``index/merge.add_indexes``). Published
+    through ``_publish`` and memoized like the engines."""
     from .index.merge import add_indexes
 
-    shards = [get_shard_engine(spark, sf_dir, analyzer, s, 2) for s in range(2)]
-    tag = hashlib.md5(
-        ("|".join(s.index_dir for s in shards) + "|v1").encode()
-    ).hexdigest()[:16]
-    dst = os.path.join(
-        tempfile.gettempdir(), "lucene_solr_spark_idx", f"addidx-{analyzer}-{tag}"
+    shard_dirs = [
+        get_engine(spark, sf_dir, analyzer, shard_recipe(s, 2)).index_dir
+        for s in range(2)
+    ]
+    tag = hashlib.md5(("|".join(shard_dirs) + "|v1").encode()).hexdigest()[:16]
+    dst = _publish(
+        _cache_dir(f"addidx-{analyzer}-{tag}"),
+        lambda tmp: add_indexes(spark, shard_dirs, tmp),
     )
-    marker = os.path.join(dst, "addindexes_done")
-    if not os.path.exists(marker):
-        shutil.rmtree(dst, ignore_errors=True)
-        add_indexes(spark, [s.index_dir for s in shards], dst)
-        with open(marker, "w") as f:
-            f.write("done")
-    searcher = IndexSearcher(spark, dst)
-    _ENGINES[key] = searcher
-    return searcher
+    return _memo(dst, lambda: IndexSearcher(spark, dst))
 
 
 def addindexes_topk(
@@ -4411,25 +4052,11 @@ def addindexes_topk(
     needs the key."""
     searcher = get_addindexes_searcher(spark, sf_dir, analyzer)
     spec = searcher.parse(qtype, surface_terms, 0)
-    q = searcher.compile(spec, k)
-    hits = searcher.hits(q, mode="wand")
+    hits = searcher.hits(searcher.compile(spec, k), mode="wand")
     keys = searcher.docs.select("doc_id", "doc_key")
-    top = (
-        hits.join(keys, "doc_id", "left")
-        .orderBy(F.desc("score"), F.asc("doc_key"))
-        .limit(k)
-    )
-    return (
-        top.coalesce(1)
-        .sortWithinPartitions(F.desc("score"), F.asc("doc_key"))
-        .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-        .select(
-            "rank",
-            F.col("doc_key").cast("long").alias("doc_id"),
-            F.col("score").cast("float").alias("score"),
-        )
-        .orderBy("rank")
-    )
+    return _present(ranked_top(
+        hits.join(keys, "doc_id", "left"), k, F.desc("score"), F.asc("doc_key")
+    ))
 
 
 def get_tiered_searcher(
@@ -4440,30 +4067,18 @@ def get_tiered_searcher(
     plan-driven salted two-phase merge): the 8 build segments fold by
     size tiers into fewer doc-contiguous segments, results bitwise
     invariant."""
-    key = (os.path.abspath(sf_dir), analyzer + "+tiered")
-    eng = _ENGINES.get(key)
-    if eng is not None:
-        return eng  # type: ignore[return-value]
-    import shutil
-
     from .index.merge import tiered_merge
 
-    base_eng = get_engine(spark, sf_dir, analyzer)
-    tag = hashlib.md5((base_eng.index_dir + "|tiered|v2").encode()).hexdigest()[:16]
-    dst = os.path.join(
-        tempfile.gettempdir(), "lucene_solr_spark_idx", f"tiered-{analyzer}-{tag}"
-    )
-    marker = os.path.join(dst, "tiered_done")
-    if not os.path.exists(marker):
-        shutil.rmtree(dst, ignore_errors=True)
-        plan = tiered_merge(spark, base_eng.index_dir, dst, segs_per_tier=4)
+    base_dir = get_engine(spark, sf_dir, analyzer).index_dir
+
+    def merge(tmp: str) -> None:
+        plan = tiered_merge(spark, base_dir, tmp, segs_per_tier=4)
         if all(len(g) == 1 for g in plan):
             raise RuntimeError("tiered fixture merged nothing")
-        with open(marker, "w") as f:
-            f.write("done")
-    searcher = IndexSearcher(spark, dst)
-    _ENGINES[key] = searcher
-    return searcher
+
+    tag = hashlib.md5((base_dir + "|tiered|v2").encode()).hexdigest()[:16]
+    dst = _publish(_cache_dir(f"tiered-{analyzer}-{tag}"), merge)
+    return _memo(dst, lambda: IndexSearcher(spark, dst))
 
 
 def tiered_merge_topk(
@@ -4478,9 +4093,16 @@ def tiered_merge_topk(
     (merge invariance), so the oracle is the plain BM25 oracle."""
     searcher = get_tiered_searcher(spark, sf_dir, analyzer)
     spec = searcher.parse(qtype, surface_terms, 0)
-    out = searcher.search(spec, k=k, with_keys=True)
-    return out.select(
-        F.col("rank").cast("int").alias("rank"),
-        F.col("doc_key").cast("long").alias("doc_id"),
-        F.col("score").cast("float").alias("score"),
-    ).orderBy("rank")
+    return _present(searcher.search(spec, k=k, with_keys=True))
+
+
+# recipe step name → mutation applied to a private copy of the base index
+_STEPS: dict[str, Callable[[SparkSession, str, str], None]] = {
+    "update": _step_update,
+    "expunge": _step_expunge,
+    "commit_point": _step_commit_point,
+    "dbq": _step_dbq,
+    "atomic": _step_atomic,
+    "rtg": _step_rtg,
+    "dv": _step_dv,
+}

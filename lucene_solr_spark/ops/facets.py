@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..search.searcher import ranked_top
 from .registry import register
 
 
@@ -1171,14 +1172,10 @@ def group_sort_within(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.withColumn("doc_rank", F.row_number().over(w_inner))
         .filter(F.col("doc_rank") <= 3)
     )
-    heads = (
-        orders.groupBy("o_orderpriority")
-        .agg(F.max("o_totalprice").alias("head"))
-        .coalesce(1)
-        .sortWithinPartitions(F.desc("head"), F.asc("o_orderpriority"))
-        .withColumn("grp_rank", (F.monotonically_increasing_id() + 1).cast("int"))
-        .select("o_orderpriority", "grp_rank")
-    )
+    heads = ranked_top(
+        orders.groupBy("o_orderpriority").agg(F.max("o_totalprice").alias("head")),
+        None, F.desc("head"), F.asc("o_orderpriority"),
+    ).select("o_orderpriority", F.col("rank").alias("grp_rank"))
     return (
         ranked.join(F.broadcast(heads), "o_orderpriority")
         .select(

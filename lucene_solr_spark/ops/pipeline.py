@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..search.searcher import ranked_top
 from .dedup import SHINGLE_MAX_DF, _docs, jaccard_pairs, shingles
 from .registry import register
 from .streams import SESSION_GAP_MIN, _t
@@ -1327,15 +1328,9 @@ def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("float").alias("log_w"),
         )
     )
-    return (
-        weighted.orderBy(F.desc("log_w"), F.asc("doc_id"))
-        .limit(DSIR_K)
-        .coalesce(1)
-        .sortWithinPartitions(F.desc("log_w"), F.asc("doc_id"))
-        .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-        .select("rank", "doc_id", "lang", "n_tokens", "log_w")
-        .orderBy("rank")
-    )
+    return ranked_top(
+        weighted, DSIR_K, F.desc("log_w"), F.asc("doc_id")
+    ).select("rank", "doc_id", "lang", "n_tokens", "log_w")
 
 
 DSIR_SELECT_SQL = f"""

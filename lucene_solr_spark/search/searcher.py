@@ -129,6 +129,30 @@ def _make_search_kernel(
     return kernel
 
 
+def ranked_top(
+    df: DataFrame, k: int | None, *order, fetch: tuple[DataFrame, str] | None = None
+) -> DataFrame:
+    """Global top-``k`` of ``df`` by ``order`` plus a 1-based int ``rank``
+    column, sorted by rank. ``fetch=(table, on)`` left-joins ``table`` to
+    the k survivors before ranking (fetch-fields-late: the join sees k
+    rows, never the candidate set). ``k=None`` ranks every row of an
+    already-small ``df`` (no cut).
+
+    rank runs AFTER limit(k) — k rows only. coalesce(1) + in-partition
+    sort + monotonically_increasing_id (partition 0 ⇒ ids 0..k−1 in row
+    order) gives row_number without a WindowExec, so no
+    unpartitioned-window warning and no extra shuffle on k rows."""
+    top = df if k is None else df.orderBy(*order).limit(k)
+    if fetch is not None:
+        top = top.join(*fetch, "left")
+    return (
+        top.coalesce(1)
+        .sortWithinPartitions(*order)
+        .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
+        .orderBy("rank")
+    )
+
+
 def _osa_distance(a: str, b: str) -> int:
     """Optimal string alignment distance (restricted Damerau–Levenshtein):
     insert/delete/substitute cost 1, an adjacent transposition costs 1 but
@@ -811,17 +835,7 @@ class IndexSearcher:
         ``termfreq(field, term)``): docs ordered by raw term frequency
         instead of BM25, global TakeOrdered — the same sublinear shape as a
         scored search."""
-        top = (
-            self.termfreq_df(term)
-            .orderBy(F.desc("tf"), F.asc("doc_id"))
-            .limit(k)
-        )
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc("tf"), F.asc("doc_id"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .orderBy("rank")
-        )
+        return ranked_top(self.termfreq_df(term), k, F.desc("tf"), F.asc("doc_id"))
 
     def filter_map(self, keys: DataFrame) -> dict[int, np.ndarray]:
         """Compile a doc-key filter into per-segment allowed-local-ID sets —
@@ -992,16 +1006,7 @@ class IndexSearcher:
         )
 
     def _finish(self, hits: DataFrame, k: int, with_keys: bool) -> DataFrame:
-        top = hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        keys = None
         if with_keys:
-            top = top.join(self.docs.select(*self.meta.key_cols, "doc_id"), "doc_id", "left")
-        # rank runs AFTER limit(k) — k rows only. coalesce(1) + in-partition
-        # sort + monotonically_increasing_id (partition 0 ⇒ ids 0..k−1 in
-        # row order) gives row_number without a WindowExec, so no
-        # unpartitioned-window warning and no extra shuffle on k rows
-        return (
-            top.coalesce(1)
-            .sortWithinPartitions(F.desc("score"), F.asc("doc_id"))
-            .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-            .orderBy("rank")
-        )
+            keys = (self.docs.select(*self.meta.key_cols, "doc_id"), "doc_id")
+        return ranked_top(hits, k, F.desc("score"), F.asc("doc_id"), fetch=keys)

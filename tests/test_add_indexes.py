@@ -12,7 +12,7 @@ import pandas as pd
 import pytest
 
 from lucene_solr_spark.engine import (
-    addindexes_topk, get_addindexes_searcher, get_engine, get_shard_engine,
+    addindexes_topk, get_addindexes_searcher, get_engine, shard_recipe,
 )
 from lucene_solr_spark.index.merge import add_indexes
 
@@ -39,15 +39,15 @@ def test_docs_union_and_bases_dense(spark):
     0..N−1 across the renumbered segments (base re-derivation)."""
     searcher = get_addindexes_searcher(spark, SF)
     docs = searcher.docs.select("doc_id", "doc_key").toPandas()
-    n0 = get_shard_engine(spark, SF, "simple", 0, 2).searcher.stats.doc_count
-    n1 = get_shard_engine(spark, SF, "simple", 1, 2).searcher.stats.doc_count
+    n0 = get_engine(spark, SF, "simple", shard_recipe(0, 2)).searcher.stats.doc_count
+    n1 = get_engine(spark, SF, "simple", shard_recipe(1, 2)).searcher.stats.doc_count
     assert len(docs) == n0 + n1
     assert sorted(docs["doc_id"]) == list(range(len(docs)))
     assert docs["doc_key"].is_unique
 
 
 def test_schema_mismatch_rejected(spark):
-    a = get_shard_engine(spark, SF, "simple", 0, 2).index_dir
+    a = get_engine(spark, SF, "simple", shard_recipe(0, 2)).index_dir
     b = get_engine(spark, SF, "stop").index_dir
     dst = tempfile.mkdtemp(prefix="lss_addidx_reject_")
     shutil.rmtree(dst, ignore_errors=True)

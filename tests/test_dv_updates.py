@@ -6,7 +6,7 @@ index is untouched, and the resolved values re-rank function boosts."""
 import pandas as pd
 
 from lucene_solr_spark.engine import (
-    DV_UPD1_MOD, DV_UPD2_MOD, get_dv_engine, get_engine,
+    DV_UPD1_MOD, DV_UPD2_MOD, DV_UPDATED, get_engine,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -24,7 +24,7 @@ def _expected(key: int) -> float:
 def test_generation_stacking_latest_wins(spark):
     """Every doc resolves to gen-2 where written, else gen-1 where
     written, else the base — per key, exactly."""
-    vals = get_dv_engine(spark, SF).dv_values().toPandas()
+    vals = get_engine(spark, SF, "simple", DV_UPDATED).dv_values().toPandas()
     got = dict(zip(vals["doc_key"].astype(int), vals["value"].astype(float)))
     assert got and all(got[k] == _expected(k) for k in got)
 
@@ -33,7 +33,7 @@ def test_postings_untouched(spark):
     """A docvalues-only update must not perturb postings/norms/stats: the
     plain BM25 page over the DV-updated index is bitwise the base
     engine's page."""
-    upd = get_dv_engine(spark, SF).topk("or3", TERMS, k=10).toPandas()
+    upd = get_engine(spark, SF, "simple", DV_UPDATED).topk("or3", TERMS, k=10).toPandas()
     base = get_engine(spark, SF, "simple").topk("or3", TERMS, k=10).toPandas()
     pd.testing.assert_frame_equal(upd, base)
 
@@ -44,7 +44,7 @@ def test_boost_reranks_with_updated_values(spark):
     reproduce base-only values and go unnoticed otherwise)."""
     import pyspark.sql.functions as F
 
-    eng = get_dv_engine(spark, SF)
+    eng = get_engine(spark, SF, "simple", DV_UPDATED)
     page = eng.dv_boost_topk("or3", TERMS, k=10).toPandas()
     assert len(page) == 10 and list(page["rank"]) == list(range(1, 11))
     # recompute the boost locally from expected DV values over all hits

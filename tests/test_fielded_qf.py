@@ -14,12 +14,11 @@ SF = "/root/testdata/sf0.001"
 @pytest.mark.skipif(not os.path.isdir(SF), reason="driver testdata absent")
 def test_fielded_dismax_semantics(spark):
     from lucene_solr_spark.engine import (
-        QF_BODY_W, QF_TITLE_W, fielded_dismax_topk, get_engine,
-        get_title_engine,
+        QF_BODY_W, QF_TITLE_W, TITLE, fielded_dismax_topk, get_engine,
     )
 
     body = get_engine(spark, SF, "simple")
-    title = get_title_engine(spark, SF, "simple")
+    title = get_engine(spark, SF, "simple", TITLE)
 
     # independent per-field statistics: the 8-token title field must have a
     # far smaller avgdl than the body field
@@ -72,10 +71,10 @@ def test_blended_term_df_semantics(spark):
     the title leg scores with the body's (larger) df — different from the
     unblended per-field dismax wherever a term's dfs diverge."""
     from lucene_solr_spark.engine import (
-        blended_term_topk, get_engine, get_title_engine,
+        TITLE, blended_term_topk, get_engine,
     )
 
-    title = get_title_engine(spark, SF, "simple")
+    title = get_engine(spark, SF, "simple", TITLE)
     body = get_engine(spark, SF, "simple")
     toks = ["fast", "merge", "table"]
     df_t, _ = title.searcher.term_stats_rows(toks)

@@ -342,9 +342,9 @@ def main() -> None:
     # reach the postings scan as a PARTITION filter (seg is the partition
     # column) — opening an old generation prunes later segments' files at
     # the scan, it does not read-then-discard them.
-    from lucene_solr_spark.engine import get_asof_engine
+    from lucene_solr_spark.engine import ASOF
 
-    asof = get_asof_engine(spark, SF_DIR, "simple")
+    asof = get_engine(spark, SF_DIR, "simple", ASOF)
     assert asof.searcher._commit is not None
     results.append(audit(
         "asof_commit_seg_partition_pruned",
@@ -396,11 +396,11 @@ def main() -> None:
     # a keyed join against O(updated) rows — the update overlay never
     # triggers a CartesianProduct and the per-key latest-wins rank
     # partitions by doc_key (no unpartitioned window over doc rows).
-    from lucene_solr_spark.engine import get_dv_engine
+    from lucene_solr_spark.engine import DV_UPDATED
 
     results.append(audit(
         "dv_boost_keyed_overlay_join",
-        get_dv_engine(spark, SF_DIR, "simple").dv_boost_topk(
+        get_engine(spark, SF_DIR, "simple", DV_UPDATED).dv_boost_topk(
             "or3", ["vector", "stream", "filter"], k=10
         ),
         must=[r"PushedFilters: \[In\(term"],
