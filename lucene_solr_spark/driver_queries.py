@@ -886,7 +886,8 @@ def fulltext_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         spark, sf_dir, "or3", ["vector", "stream", "filter"], k=10
     )
     # FieldMaskingSpanQuery: title-span masked into body position space,
-    # ordered near — both fields' postings in ONE cogroup, body norms/stats
+    # ordered near — both fields' postings in ONE scoring task per segment,
+    # body norms/stats
     out["ft_fieldmask_span_topk"] = lambda spark, sf_dir: field_masking_span_topk(
         spark, sf_dir, FMASK_Q[0], FMASK_Q[1], FMASK_Q[2], k=10
     )

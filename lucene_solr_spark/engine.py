@@ -35,7 +35,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from .index.build import build_index
+from .index.build import build_index, read_term_stats
 from .search.query import BooleanSpec
 from .search.searcher import IndexSearcher, ranked_top
 
@@ -621,9 +621,7 @@ class DocumentsEngine:
 
         t = target.lower()
         rows = (
-            self.spark.read.parquet(
-                os.path.join(self.searcher.index_dir, "term_stats")
-            )
+            read_term_stats(self.spark, self.searcher.index_dir)
             .filter(~F.col("term").startswith(KEYWORD_PREFIX))
             .withColumn("dist", F.levenshtein(F.col("term"), F.lit(t)))
             .filter(F.col("dist") <= max_edits)
@@ -1767,7 +1765,7 @@ class DocumentsEngine:
         from .index.build import KEYWORD_PREFIX
 
         ts = (
-            self.spark.read.parquet(os.path.join(self.index_dir, "term_stats"))
+            read_term_stats(self.spark, self.index_dir)
             .filter(~F.col("term").startswith(KEYWORD_PREFIX))
         )
         if kind == "prefix":
@@ -1910,7 +1908,7 @@ class DocumentsEngine:
         from .index.build import KEYWORD_PREFIX
 
         ts = (
-            self.spark.read.parquet(os.path.join(self.index_dir, "term_stats"))
+            read_term_stats(self.spark, self.index_dir)
             .filter(~F.col("term").startswith(KEYWORD_PREFIX))
             .filter(F.col("term").contains(pattern))
         )
@@ -1959,7 +1957,7 @@ class DocumentsEngine:
         from .index.build import KEYWORD_PREFIX
 
         ts = (
-            self.spark.read.parquet(os.path.join(self.index_dir, "term_stats"))
+            read_term_stats(self.spark, self.index_dir)
             .filter(~F.col("term").startswith(KEYWORD_PREFIX))
         )
         exact = F.col("term").startswith(key)
@@ -2010,7 +2008,7 @@ class DocumentsEngine:
             [(i, t) for i, t in enumerate(toks)], "qpos int, qterm string"
         )
         ts = (
-            self.spark.read.parquet(os.path.join(self.index_dir, "term_stats"))
+            read_term_stats(self.spark, self.index_dir)
             .filter(~F.col("term").startswith(KEYWORD_PREFIX))
         )
         cand = ts.join(
@@ -3154,7 +3152,7 @@ class DocumentsEngine:
         keyword-field terms (`\\x01col:value`) are internal and excluded."""
         from .index.build import KEYWORD_PREFIX
 
-        ts = self.spark.read.parquet(os.path.join(self.index_dir, "term_stats"))
+        ts = read_term_stats(self.spark, self.index_dir)
         return (
             ts.filter(
                 (F.col("df") >= min_df) & ~F.col("term").startswith(KEYWORD_PREFIX)
@@ -3185,7 +3183,7 @@ class DocumentsEngine:
         struct-min inside the same agg — no postings decode, no doc scan."""
         from .index.build import KEYWORD_PREFIX
 
-        ts = self.spark.read.parquet(os.path.join(self.index_dir, "term_stats"))
+        ts = read_term_stats(self.spark, self.index_dir)
         is_kw = F.col("term").startswith(KEYWORD_PREFIX)
         raw = F.expr("substring(term, 2)")
         per = ts.select(
@@ -3595,7 +3593,7 @@ def knn_classify(spark: SparkSession, sf_dir: str, analyzer: str = "simple") -> 
     O(test docs × KNN_TOP_TERMS) term sets are collected only to COMPILE
     queries (Lucene builds the MLT query on the coordinating node too),
     and every compiled query executes in ONE ``search_many`` job — the
-    whole-query-set cogroup kernel, not a per-doc driver loop. Votes are a
+    whole-query-set scoring stage, not a per-doc driver loop. Votes are a
     fetch-fields-late join of the single hits table back to the source
     labels."""
     from .search.query import BooleanSpec, TermClause
@@ -3616,7 +3614,7 @@ def knn_classify(spark: SparkSession, sf_dir: str, analyzer: str = "simple") -> 
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     ts = (
-        spark.read.parquet(os.path.join(eng.index_dir, "term_stats"))
+        read_term_stats(spark, eng.index_dir)
         .select("term", "df")
     )
     n = float(s.stats.doc_count)
@@ -3963,16 +3961,16 @@ def field_masking_span_topk(
     title term's df is the title index's). Match/freq semantics are the
     ordered NearSpansOrdered rule of ``span_near_topk``.
 
-    Scale shape: both fields' postings are term-IN-pruned columnar scans
-    UNIONED into one cogroup against the body norms — the segment layouts
-    coincide by construction (same corpus order, same segment count), so
-    masking adds NO extra shuffle over a single-field span query; the
-    masked term rides the kernel as a distinct synthetic term name."""
+    Scale shape: each body segment's scoring task reads BOTH fields'
+    term-pruned postings of that segment — the segment layouts coincide by
+    construction (same corpus order, same segment count), so masking adds
+    no stage over a single-field span query; the masked term rides the
+    kernel as a distinct synthetic term name."""
     import numpy as np
 
     from .search.bm25 import idf
     from .search.query import CompiledClause, CompiledQuery
-    from .search.searcher import RESULT_SCHEMA, _make_search_kernel
+    from .search.segtask import PostingsSource
 
     body = get_engine(spark, sf_dir, analyzer)
     title = get_engine(spark, sf_dir, analyzer, TITLE)
@@ -3995,22 +3993,11 @@ def field_masking_span_topk(
         clauses=[clause], must_not_terms=(), min_should_match=0, k=k,
         cache=bs.cache, n_must=1,
     )
-    t_posts = (
-        ts.postings.filter(F.col("term") == tt)
-        .select("seg", F.lit(masked).alias("term"), "blocks")
-    )
-    b_posts = (
-        bs.postings.filter(F.col("term") == bt)
-        .select("seg", "term", "blocks")
-    )
-    hits = (
-        t_posts.unionAll(b_posts)
-        .groupBy("seg")
-        .cogroup(bs.norms_side.groupBy("seg"))
-        .applyInPandas(_make_search_kernel(q, "exact"), RESULT_SCHEMA)
-        .select("doc_id", "score")
-    )
-    return _present(bs._finish(hits, k, with_keys=True))
+    hits = bs.hits(q, "exact", with_keys=True, sources=(
+        PostingsSource(bs.index_dir, (bt,)),
+        PostingsSource(ts.index_dir, (tt,), alias={tt: masked}),
+    ))
+    return _present(ranked_top(hits, k, F.desc("score"), F.asc("doc_id")))
 
 
 def get_addindexes_searcher(

@@ -7,10 +7,9 @@ Here the same "definitely absent" test prunes WHOLE SEGMENTS from the
 postings scan: the build kernel writes a bloom over each segment's full
 term dictionary (text + keyword terms) next to the segment's postings, and
 the searcher intersects a query's scoring terms with every segment's bloom
-before building the cogroup plan — segments whose blooms reject every
-scoring term are removed from both scan sides (``seg IN`` partition
-pruning), so a rare/absent term on a 10^4-segment index touches only the
-few segments that can contain it. False positives only cost an extra scan;
+before dealing segments to its scoring tasks — segments whose blooms reject
+every scoring term get no task work at all, so a rare/absent term on a
+10^4-segment index touches only the few segments that can contain it. False positives only cost an extra scan;
 false negatives are impossible by construction, so results are bitwise
 unchanged (property-tested in ``tests/test_bloom.py``).
 

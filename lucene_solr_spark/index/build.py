@@ -847,6 +847,17 @@ def _fixup_bases(index_dir: str, manifest: pd.DataFrame) -> None:
             os.remove(p)
 
 
+# the term dictionary's columns as _finalize (and split's per-child stats)
+# write them; read with this schema, a lookup skips Parquet schema inference
+TERM_STATS_SCHEMA = "term string, df long, ttf long"
+
+
+def read_term_stats(spark: SparkSession, root: str) -> DataFrame:
+    """The ``term_stats`` dictionary under ``root`` (an index dir or a
+    commit's stats dir) — one pruned scan per lookup, no inference job."""
+    return spark.read.schema(TERM_STATS_SCHEMA).parquet(os.path.join(root, "term_stats"))
+
+
 def _finalize(spark: SparkSession, index_dir: str) -> None:
     """Global stats — computed BEFORE scoring, as global aggregates
     (north rule; reference: TermStates#build summing per-leaf stats).
@@ -903,7 +914,7 @@ def _finalize(spark: SparkSession, index_dir: str) -> None:
     # cost is one extra sort of the (tiny relative to postings) dictionary,
     # rewritten by the same _finalize that owns term_stats, so updates /
     # merges / DBQ keep the two views consistent.
-    ts_rev = spark.read.parquet(os.path.join(index_dir, "term_stats")).select(
+    ts_rev = read_term_stats(spark, index_dir).select(
         F.reverse(F.col("term")).alias("rterm"), "term", "df", "ttf"
     )
     (

@@ -61,7 +61,7 @@ import shutil
 
 from pyspark.sql import SparkSession, functions as F
 
-from .build import IndexMeta
+from .build import IndexMeta, read_term_stats
 from .updates import refresh_stats, tombstones_path
 
 # Subtrees whose files are write-once in this storage model and therefore
@@ -229,7 +229,7 @@ def _write_child_stats_single_scan(
     for c, cdir in enumerate(child_dirs):
         ts = per_child_ts.filter(F.col("child") == c).select("term", "df", "ttf")
         ts.write.mode("overwrite").parquet(os.path.join(cdir, "term_stats"))
-        ts_rev = spark.read.parquet(os.path.join(cdir, "term_stats")).select(
+        ts_rev = read_term_stats(spark, cdir).select(
             F.reverse(F.col("term")).alias("rterm"), "term", "df", "ttf"
         )
         (

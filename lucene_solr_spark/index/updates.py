@@ -56,8 +56,8 @@ def tombstones_by_seg(tomb_df: DataFrame) -> dict[int, np.ndarray]:
     per-leaf live-docs complement. Collected to the driver and broadcast
     into query closures (1 entry per deleted doc, the same memory class as
     Lucene's in-heap PendingDeletes bitsets); callers gate this behind
-    TOMB_DRIVER_BUDGET and ride the distributed norms-cogroup path above
-    it (``searcher.norms_side``)."""
+    TOMB_DRIVER_BUDGET; above it each scoring task reads its own segment's
+    rows from the tombstone files (``search/segtask.py``)."""
     pdf = tomb_df.toPandas()
     return {
         int(seg): np.unique(g["doc_local"].to_numpy(dtype=np.int64))

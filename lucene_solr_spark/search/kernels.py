@@ -1,8 +1,8 @@
 """Per-segment scoring kernels — exact (brute-force) and block-max WAND.
 
-These run inside an ``applyInPandas`` cogroup over (postings-by-seg,
-norms-by-seg): all math is numpy over decoded posting blocks; no per-row
-Python. Each kernel returns the segment-local top-k by (score desc, docID
+These run inside the per-segment scoring tasks (``search/segtask.py``)
+over one segment's postings and norms: all math is numpy over decoded
+posting blocks; no per-row Python. Each kernel returns the segment-local top-k by (score desc, docID
 asc) — the global top-k is a union-then-TakeOrdered of per-segment top-k
 (Solr's 2-phase PURPOSE_GET_TOP_IDS shape, SURVEY.md §3.2).
 

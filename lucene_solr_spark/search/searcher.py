@@ -5,37 +5,46 @@ Query lifecycle (SURVEY.md §3.1, Spark shape):
 1. compile on driver: analyze surface terms (query-time chain == index-time
    chain), bind global stats from the broadcast-sized ``stats``/``term_stats``
    tables into float32 weights → CompiledQuery.
-2. one narrow job: postings scan pruned to the query's terms (parquet
-   row-group pruning via term-sorted files + seg partition dirs) → cogrouped
-   per-segment scoring kernel (WAND or exact) → per-segment top-k.
-3. global TakeOrdered (score desc, docID asc) limit k — the one shuffle.
-4. optionally join the docs table back for doc keys (fetch-fields-late,
-   Solr PURPOSE_GET_FIELDS discipline: text/keys never flow through scoring).
+2. one scoring stage (``search/segtask.py``): the bloom-admitted segments
+   are dealt round-robin to min(segments, defaultParallelism) tasks of a
+   ``spark.range(n).mapInArrow`` job; each task reads its own segments'
+   term-filtered postings (parquet row-group pruning on the term-sorted
+   files), norms row and tombstones, and runs the per-segment kernel (WAND
+   or exact) → per-segment top-k. No shuffle feeds the kernel.
+3. a keyed search reads the key columns of only those ≤k survivors from
+   the segment's docs files inside the same task (fetch-fields-late, Solr
+   PURPOSE_GET_FIELDS discipline: text/keys never flow through scoring),
+   so no doc-key join follows; the global TakeOrdered (score desc, docID
+   asc) limit k merges the per-segment top-k.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import re
 from functools import cached_property
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import FloatType, LongType, StringType, StructField, StructType
 
-from ..index.build import ANALYZERS, IndexMeta
+from ..index.build import ANALYZERS, IndexMeta, read_term_stats
 from .bm25 import CollectionStats, norm_cache
-from .kernels import score_segment_exact, score_segment_wand
+from .kernels import count_segment_matches, score_segment_exact, score_segment_wand
 from .query import BooleanSpec, CompiledQuery, compile_query, parse_fixture_query
+from .segtask import PostingsSource, SegmentFiles, fetch_keys, open_segment, segment_scan
 
-RESULT_SCHEMA = "seg int, doc_id long, score float"
-MULTI_SCHEMA = "query_id string, doc_id long, score float"
 _EMPTY_LOCALS = np.empty(0, dtype=np.int64)
 
 # Above this many tombstones the driver-collect + closure-broadcast path is
-# replaced by a DISTRIBUTED per-segment join (the tombstone array rides the
-# seg_norms cogroup side): driver memory stays O(1) and each task ships only
-# its own segment's deletes — the 10^12-docs-with-churn shape.
+# replaced by DISTRIBUTED per-segment reads: each scoring task reads only its
+# own segment's rows from the tombstone files, so driver memory stays O(1)
+# and a task holds only its segment's deletes — the 10^12-docs-with-churn
+# shape.
 TOMB_DRIVER_BUDGET = 200_000
 # Bloom sidecar: hold all segment blooms on the driver only below this many
 # bytes (~64 KiB per 50k-term segment ⇒ ~1000 segments); above it the admit
@@ -44,107 +53,106 @@ BLOOM_DRIVER_BUDGET = 64 << 20
 # A disjunction wider than this almost surely touches every segment — skip
 # the probe instead of paying it for no pruning.
 BLOOM_MAX_TERMS = 16
+_HIT_FIELDS = [StructField("doc_id", LongType()), StructField("score", FloatType())]
+_MULTI_SCHEMA = StructType([StructField("query_id", StringType()), *_HIT_FIELDS])
 
 
-def _seg_dele(
-    norms: pd.DataFrame, seg: int, deleted_by_seg: dict | None
-) -> np.ndarray | None:
-    """Per-segment deleted local ids from either delivery path: the
-    driver-broadcast map (small delete sets) or the ``tomb`` column joined
-    onto the norms cogroup side (large sets, distributed)."""
-    if deleted_by_seg:
-        return deleted_by_seg.get(seg)
-    if "tomb" in norms.columns:
-        t = norms["tomb"].iloc[0]
-        if t is not None and len(t):
-            return np.asarray(t, dtype=np.int64)
-    return None
+def _kernel(q: CompiledQuery, mode: str):
+    return score_segment_exact if (mode == "exact" or q.needs_exact) else score_segment_wand
 
 
-def _make_multi_kernel(
-    queries: dict[str, CompiledQuery], mode: str,
-    deleted_by_seg: dict[int, np.ndarray] | None = None,
+def _incl(q: CompiledQuery, base: int) -> np.ndarray | None:
+    """The FILTER occur's allowed local ids of the segment at ``base``."""
+    if q.filter_by_base is None:
+        return None
+    return q.filter_by_base.get(base, _EMPTY_LOCALS)
+
+
+def _hits_task(
+    files: SegmentFiles, q: CompiledQuery, mode: str, after: tuple | None,
+    with_keys: bool,
 ):
-    def kernel(posts: pd.DataFrame, norms: pd.DataFrame) -> pd.DataFrame:
-        if len(norms) == 0 or len(posts) == 0:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-        seg = int(norms["seg"].iloc[0])
-        base = int(norms["base"].iloc[0])
-        norms_arr = np.frombuffer(norms["norms"].iloc[0], dtype=np.uint8)
-        term_blocks = {t: list(b) for t, b in zip(posts["term"], posts["blocks"])}
-        dele = _seg_dele(norms, seg, deleted_by_seg)
+    """Per-segment (doc_id, score[, key cols]) of one query."""
+    kernel = _kernel(q, mode)
+
+    def score(seg: int) -> pa.Table | None:
+        s = open_segment(files, seg)
+        if s is None:
+            return None
+        # postings are seg-local; rebase the global searchAfter cursor too
+        after_local = (after[0], int(after[1]) - s.base) if after is not None else None
+        docs, scores = kernel(
+            s.term_blocks, s.norms, 0, q, after_local, _incl(q, s.base), None, s.dele
+        )
+        if not len(docs):
+            return None
+        out = pa.table({
+            "doc_id": docs + s.base,  # globalize at the boundary
+            "score": scores.astype(np.float32),
+        })
+        if with_keys:
+            keys = fetch_keys(files, seg, docs)
+            for c in files.key_cols:
+                out = out.append_column(c, keys[c])
+        return out
+
+    return score
+
+
+def _multi_task(files: SegmentFiles, queries: dict[str, CompiledQuery], mode: str):
+    """Per-segment (query_id, doc_id, score) local top-k of a query set;
+    queries sharing terms decode each block once per segment."""
+
+    def score(seg: int) -> pa.Table | None:
+        s = open_segment(files, seg)
+        if s is None:
+            return None
         qids, docs_out, scores_out = [], [], []
-        shared_decode: dict = {}  # queries sharing terms decode blocks once
+        shared_decode: dict = {}
         for qid, q in queries.items():
             if not q.clauses:
                 continue
-            fn = score_segment_exact if (mode == "exact" or q.needs_exact) else score_segment_wand
-            incl = None
-            if q.filter_by_base is not None:
-                incl = q.filter_by_base.get(base, _EMPTY_LOCALS)
-            docs, scores = fn(term_blocks, norms_arr, 0, q, None, incl, shared_decode, dele)
+            docs, scores = _kernel(q, mode)(
+                s.term_blocks, s.norms, 0, q, None, _incl(q, s.base), shared_decode,
+                s.dele,
+            )
             qids.extend([qid] * len(docs))
-            docs_out.append(docs + base)  # globalize at the boundary
-            scores_out.append(scores)
-        if not docs_out:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-        return pd.DataFrame({
-            "query_id": np.array(qids, dtype=object),
+            docs_out.append(docs + s.base)
+            scores_out.append(scores.astype(np.float32))
+        if not qids:
+            return None
+        return pa.table({
+            "query_id": pa.array(qids, type=pa.string()),
             "doc_id": np.concatenate(docs_out),
-            "score": np.concatenate(scores_out).astype(np.float32),
+            "score": np.concatenate(scores_out),
         })
 
-    return kernel
+    return score
 
 
-def _make_search_kernel(
-    q: CompiledQuery, mode: str, after: tuple | None = None,
-    deleted_by_seg: dict[int, np.ndarray] | None = None,
-):
-    exact = mode == "exact" or q.needs_exact
+def _count_task(files: SegmentFiles, q: CompiledQuery):
+    """Per-segment matching-doc count (TotalHitCountCollector analog)."""
 
-    def kernel(posts: pd.DataFrame, norms: pd.DataFrame) -> pd.DataFrame:
-        if len(norms) == 0 or len(posts) == 0:
-            return pd.DataFrame({"seg": [], "doc_id": [], "score": []})
-        seg = int(norms["seg"].iloc[0])
-        base = int(norms["base"].iloc[0])
-        norms_arr = np.frombuffer(norms["norms"].iloc[0], dtype=np.uint8)
-        term_blocks = {
-            t: list(b) for t, b in zip(posts["term"], posts["blocks"])
-        }
-        fn = score_segment_exact if exact else score_segment_wand
-        # postings are seg-local; rebase the global searchAfter cursor too
-        after_local = (after[0], int(after[1]) - base) if after is not None else None
-        incl = None
-        if q.filter_by_base is not None:  # FILTER: per-segment allowed set
-            incl = q.filter_by_base.get(base, _EMPTY_LOCALS)
-        dele = _seg_dele(norms, seg, deleted_by_seg)
-        docs, scores = fn(term_blocks, norms_arr, 0, q, after_local, incl, None, dele)
-        return pd.DataFrame({
-            "seg": np.full(len(docs), seg, dtype=np.int32),
-            "doc_id": docs + base,  # globalize at the boundary
-            "score": scores.astype(np.float32),
-        })
+    def count(seg: int) -> pa.Table | None:
+        s = open_segment(files, seg)
+        if s is None:
+            return None
+        n = count_segment_matches(s.term_blocks, q, _incl(q, s.base), s.dele)
+        return pa.table({"cnt": pa.array([n], type=pa.int64())})
 
-    return kernel
+    return count
 
 
-def ranked_top(
-    df: DataFrame, k: int | None, *order, fetch: tuple[DataFrame, str] | None = None
-) -> DataFrame:
+def ranked_top(df: DataFrame, k: int | None, *order) -> DataFrame:
     """Global top-``k`` of ``df`` by ``order`` plus a 1-based int ``rank``
-    column, sorted by rank. ``fetch=(table, on)`` left-joins ``table`` to
-    the k survivors before ranking (fetch-fields-late: the join sees k
-    rows, never the candidate set). ``k=None`` ranks every row of an
-    already-small ``df`` (no cut).
+    column, sorted by rank. ``k=None`` ranks every row of an already-small
+    ``df`` (no cut).
 
     rank runs AFTER limit(k) — k rows only. coalesce(1) + in-partition
     sort + monotonically_increasing_id (partition 0 ⇒ ids 0..k−1 in row
     order) gives row_number without a WindowExec, so no
     unpartitioned-window warning and no extra shuffle on k rows."""
     top = df if k is None else df.orderBy(*order).limit(k)
-    if fetch is not None:
-        top = top.join(*fetch, "left")
     return (
         top.coalesce(1)
         .sortWithinPartitions(*order)
@@ -272,39 +280,45 @@ class IndexSearcher:
         return sweetspot_norm_cache()
 
     @cached_property
-    def _tomb_df(self) -> DataFrame | None:
-        import glob as _glob
-
+    def _tomb_files(self) -> tuple[str, ...]:
+        """This view's tombstone files: for a commit-point searcher only the
+        files recorded at capture time (later delete batches append new
+        files, which must stay invisible), else every file of the index."""
         from ..index.updates import tombstones_path
 
         if self._commit is not None:
-            # only the tombstone FILES recorded at capture time — later
-            # delete batches append new files, which must stay invisible
-            if not self._commit.tomb_files:
-                return None
-            return self.spark.read.parquet(
-                *[os.path.join(self.index_dir, f) for f in self._commit.tomb_files]
+            return tuple(
+                os.path.join(self.index_dir, f) for f in self._commit.tomb_files
             )
         p = tombstones_path(self.index_dir)
-        if not _glob.glob(os.path.join(p, "*.parquet")) and not _glob.glob(
-            os.path.join(p, "*", "*.parquet")
-        ):
-            return None
-        return self.spark.read.parquet(p)
+        return tuple(sorted(
+            glob.glob(os.path.join(p, "*.parquet"))
+            + glob.glob(os.path.join(p, "*", "*.parquet"))
+        ))
+
+    @cached_property
+    def _tomb_df(self) -> DataFrame | None:
+        return self.spark.read.parquet(*self._tomb_files) if self._tomb_files else None
 
     @cached_property
     def _tomb_count(self) -> int:
         return 0 if self._tomb_df is None else int(self._tomb_df.count())
 
     @cached_property
+    def _tombs_distributed(self) -> bool:
+        """The delete set exceeds TOMB_DRIVER_BUDGET: scoring tasks read
+        their own segment's tombstone rows instead of a closure map."""
+        return self._tomb_df is not None and self._tomb_count > TOMB_DRIVER_BUDGET
+
+    @cached_property
     def deleted_by_seg(self) -> dict[int, np.ndarray]:
         """Per-segment tombstoned local ids (PendingDeletes live-docs
         analog) — empty when the index has no deletes. Loaded once per
-        searcher; shipped inside the kernel closure — ONLY while the delete
-        set fits the driver budget. Beyond TOMB_DRIVER_BUDGET this map stays
-        empty and tombstones ride the norms cogroup side instead
-        (``norms_side``), fully distributed."""
-        if self._tomb_df is None or self._tomb_count > TOMB_DRIVER_BUDGET:
+        searcher; shipped inside the scoring task closure — ONLY while the
+        delete set fits the driver budget. Beyond TOMB_DRIVER_BUDGET this
+        map stays empty and each scoring task reads its own segment's rows
+        from ``_tomb_files`` instead, fully distributed."""
+        if self._tomb_df is None or self._tombs_distributed:
             return {}
         from ..index.updates import tombstones_by_seg
 
@@ -312,38 +326,43 @@ class IndexSearcher:
         # searcher sees exactly its recorded delete files
         return tombstones_by_seg(self._tomb_df)
 
-    @cached_property
-    def norms_side(self) -> DataFrame:
-        """The norms cogroup input: seg_norms, plus a per-segment sorted
-        ``tomb`` array column when the delete set exceeds the driver budget
-        — each scoring task then receives exactly its own segment's deletes
-        through the cogroup shuffle (O(per-segment deletes) per task, O(1)
-        driver memory; the Spark shape of per-leaf PendingDeletes)."""
-        if self._tomb_df is None or self._tomb_count <= TOMB_DRIVER_BUDGET:
-            return self.seg_norms
-        agg = self._tomb_df.groupBy("seg").agg(
-            F.sort_array(
-                F.collect_set(F.col("doc_local").cast("long"))
-            ).alias("tomb")
+    def _segment_files(self, sources: tuple[PostingsSource, ...]) -> SegmentFiles:
+        """What a scoring task needs besides the query: postings sources,
+        key columns, and the deletes by whichever path the budget picks."""
+        big = self._tombs_distributed
+        return SegmentFiles(
+            index_dir=self.index_dir,
+            sources=sources,
+            deleted_by_seg=None if big else self.deleted_by_seg,
+            tomb_files=self._tomb_files if big else (),
+            key_cols=tuple(self.meta.key_cols),
         )
-        return self.seg_norms.join(agg, "seg", "left")
 
     # --- per-segment term blooms (BloomFilteringPostingsFormat analog) ----
 
     @cached_property
     def _bloom_dir(self) -> str | None:
-        import glob as _glob
-
         from ..index.bloom import BLOOM_DIRNAME
 
         p = os.path.join(self.index_dir, BLOOM_DIRNAME)
-        return p if _glob.glob(os.path.join(p, "*", "*.parquet")) else None
+        return p if glob.glob(os.path.join(p, "*", "*.parquet")) else None
 
     @cached_property
     def _all_segs(self) -> frozenset:
-        return frozenset(
-            int(r.seg) for r in self.seg_norms.select("seg").collect()
-        )
+        """This view's segment ids: every ``seg_norms/seg=N`` directory
+        holding a parquet file (the partitions ``spark.read.parquet``
+        discovers — a directory listing, no job), restricted to the
+        commit's live segments for a commit-point searcher."""
+        root = os.path.join(self.index_dir, "seg_norms")
+        segs = {
+            int(m.group(1))
+            for d in os.listdir(root)
+            if (m := re.fullmatch(r"seg=(\d+)", d))
+            and glob.glob(os.path.join(root, d, "*.parquet"))
+        }
+        if self._commit is not None:
+            segs &= set(self._commit.segs)
+        return frozenset(segs)
 
     @cached_property
     def _bloom_driver(self) -> dict | None:
@@ -354,17 +373,14 @@ class IndexSearcher:
         driver) — the same two-tier shape as the tombstone map."""
         if self._bloom_dir is None:
             return None
-        import glob as _glob
-        import re as _re
-
         import pyarrow.parquet as _pq  # driver-read-ok (size-gated below)
 
-        paths = sorted(_glob.glob(os.path.join(self._bloom_dir, "*", "*.parquet")))
+        paths = sorted(glob.glob(os.path.join(self._bloom_dir, "*", "*.parquet")))
         if sum(os.path.getsize(p) for p in paths) > BLOOM_DRIVER_BUDGET:
             return None
         out = {}
         for p in paths:
-            mseg = _re.search(r"seg=(\d+)", p)
+            mseg = re.search(r"seg=(\d+)", p)
             if mseg is None:
                 continue
             # bounded by the byte-budget check above (bits never exceed
@@ -432,23 +448,14 @@ class IndexSearcher:
         self._bloom_cache[key] = out
         return out
 
-    def _bloom_pruned_sides(self, q: "CompiledQuery") -> tuple[DataFrame, DataFrame]:
-        """(postings side, norms side) for the scoring cogroup, with whole
-        segments removed when every scoring term is bloom-rejected there.
-        A pruned segment cannot produce a hit — every match needs at least
-        one scoring term present — so this only skips provably-empty
-        kernels (MUST_NOT / FILTER terms never gate admission)."""
-        posts = (
-            self.postings
-            .filter(F.col("term").isin(q.scoring_terms + list(q.must_not_terms)))
-            .select("seg", "term", "blocks")
-        )
-        norms = self.norms_side
+    def _live_segs(self, q: CompiledQuery) -> list[int]:
+        """The segments a query's scoring task visits: whole segments are
+        skipped when every scoring term is bloom-rejected there. A pruned
+        segment cannot produce a hit — every match needs at least one
+        scoring term present — so this only skips provably-empty kernels
+        (MUST_NOT / FILTER terms never gate admission)."""
         live = self.bloom_live_segs(list(q.scoring_terms))
-        if live is not None:
-            cond = F.col("seg").isin(live) if live else F.lit(False)
-            posts, norms = posts.filter(cond), norms.filter(cond)
-        return posts, norms
+        return sorted(self._all_segs) if live is None else live
 
     def term_stats_rows(self, terms: list[str]) -> tuple[dict[str, int], dict[str, int]]:
         """({term: df}, {term: ttf}) for the query's terms (TermStates#build
@@ -456,7 +463,7 @@ class IndexSearcher:
         if not terms:
             return {}, {}
         rows = (
-            self.spark.read.parquet(os.path.join(self._stats_root, "term_stats"))
+            read_term_stats(self.spark, self._stats_root)
             .filter(F.col("term").isin(list(terms)))
             .collect()
         )
@@ -617,7 +624,7 @@ class IndexSearcher:
         from ..index.build import KEYWORD_PREFIX
 
         ts = (
-            self.spark.read.parquet(os.path.join(self._stats_root, "term_stats"))
+            read_term_stats(self.spark, self._stats_root)
             .filter(~F.col("term").startswith(KEYWORD_PREFIX))  # internal terms
         )
         if kind == "prefix":
@@ -901,67 +908,61 @@ class IndexSearcher:
             import dataclasses
 
             q = dataclasses.replace(q, filter_by_base=filter_by_base)
-        return self._finish(self.hits(q, mode=mode, after=after), q.k, with_keys)
+        return ranked_top(
+            self.hits(q, mode=mode, after=after, with_keys=with_keys),
+            q.k, F.desc("score"), F.asc("doc_id"),
+        )
 
     def hits(
         self,
         q: CompiledQuery,
         mode: str = "wand",
         after: tuple | None = None,
+        with_keys: bool = False,
+        sources: tuple[PostingsSource, ...] | None = None,
     ) -> DataFrame:
-        """ALL matching hits as an UNRANKED DataFrame(doc_id, score) — no
-        global sort. The building block for roll-ups (block join, grouping)
-        that aggregate hits without needing a total order; ``search`` adds
-        the TakeOrdered top-k on top."""
+        """Matching hits as an UNRANKED DataFrame(doc_id, score[, key cols])
+        — each segment's top-``q.k`` (every match for the ``k=1 << 30``
+        roll-up callers), from ONE mapInArrow stage over the bloom-admitted
+        segments; no global sort. The building block for roll-ups (block
+        join, grouping) that aggregate hits without needing a total order;
+        ``search`` adds the TakeOrdered top-k on top. ``with_keys`` fetches
+        the key columns of the segment-local survivors inside the task;
+        ``sources`` replaces this index's own postings (default: the query's
+        scoring + MUST_NOT terms)."""
+        schema = StructType(list(_HIT_FIELDS))
+        if with_keys:
+            for c in self.meta.key_cols:
+                schema.add(self.docs.schema[c])
         if not q.clauses:
-            return self.spark.createDataFrame([], "doc_id long, score float")
-        posts, norms_side = self._bloom_pruned_sides(q)
-        return (
-            posts.groupBy("seg")
-            .cogroup(norms_side.groupBy("seg"))
-            .applyInPandas(
-                _make_search_kernel(q, mode, after, self.deleted_by_seg or None),
-                RESULT_SCHEMA,
-            )
-            .select("doc_id", "score")
+            return self.spark.createDataFrame([], schema)
+        if sources is None:
+            terms = tuple(q.scoring_terms) + tuple(q.must_not_terms)
+            sources = (PostingsSource(self.index_dir, terms),)
+        return segment_scan(
+            self.spark, self._live_segs(q),
+            _hits_task(self._segment_files(sources), q, mode, after, with_keys),
+            schema,
         )
 
     def total_hits(self, spec: BooleanSpec | CompiledQuery, threshold: int = 1000) -> tuple[int, str]:
         """``TotalHits`` — (value, relation). Counts matching docs with the
-        non-scoring count kernel (TotalHitCountCollector analog: per-segment
-        doc-level counts, summed — one narrow term-pruned job, no norms, no
-        top-k). Lucene reports an exact count up to a threshold and a lower
-        bound beyond it (``TotalHits.Relation.GREATER_THAN_OR_EQUAL_TO``);
-        deterministically: value = min(exact, threshold), relation = 'EQ' |
-        'GTE'."""
-        from .kernels import count_segment_matches
-
+        non-scoring count kernel (TotalHitCountCollector analog: one
+        per-segment doc-level count, summed on the driver — one scoring
+        stage, no norms math, no top-k). Lucene reports an exact count up to
+        a threshold and a lower bound beyond it
+        (``TotalHits.Relation.GREATER_THAN_OR_EQUAL_TO``); deterministically:
+        value = min(exact, threshold), relation = 'EQ' | 'GTE'."""
         q = spec if isinstance(spec, CompiledQuery) else self.compile(spec, 1)
         if not q.clauses:
             return 0, "EQ"
-        dele = self.deleted_by_seg or None
-
-        def kernel(posts: pd.DataFrame, norms: pd.DataFrame) -> pd.DataFrame:
-            if len(norms) == 0 or len(posts) == 0:
-                return pd.DataFrame({"seg": [], "cnt": []})
-            seg = int(norms["seg"].iloc[0])
-            base = int(norms["base"].iloc[0])
-            term_blocks = {t: list(b) for t, b in zip(posts["term"], posts["blocks"])}
-            incl = None
-            if q.filter_by_base is not None:
-                incl = q.filter_by_base.get(base, _EMPTY_LOCALS)
-            d = _seg_dele(norms, seg, dele)
-            cnt = count_segment_matches(term_blocks, q, incl, d)
-            return pd.DataFrame({"seg": [seg], "cnt": [cnt]})
-
-        posts, norms_side = self._bloom_pruned_sides(q)
-        total = (
-            posts.groupBy("seg")
-            .cogroup(norms_side.groupBy("seg"))
-            .applyInPandas(kernel, "seg int, cnt long")
-            .agg(F.sum("cnt").alias("n")).collect()[0].n
-        )
-        total = int(total or 0)
+        terms = tuple(q.scoring_terms) + tuple(q.must_not_terms)
+        files = self._segment_files((PostingsSource(self.index_dir, terms),))
+        rows = segment_scan(
+            self.spark, self._live_segs(q), _count_task(files, q),
+            StructType([StructField("cnt", LongType())]),
+        ).collect()  # one row per segment
+        total = sum(int(r.cnt) for r in rows)
         if total <= threshold:
             return total, "EQ"
         return threshold, "GTE"
@@ -980,17 +981,10 @@ class IndexSearcher:
         })
         if not terms:
             return self.spark.createDataFrame([], "query_id string, rank int, doc_id long, score float")
-        posts = (
-            self.postings.filter(F.col("term").isin(terms))
-            .select("seg", "term", "blocks")
-        )
-        hits = (
-            posts.groupBy("seg")
-            .cogroup(self.norms_side.groupBy("seg"))
-            .applyInPandas(
-                _make_multi_kernel(compiled, mode, self.deleted_by_seg or None),
-                MULTI_SCHEMA,
-            )
+        files = self._segment_files((PostingsSource(self.index_dir, tuple(terms)),))
+        hits = segment_scan(
+            self.spark, sorted(self._all_segs), _multi_task(files, compiled, mode),
+            _MULTI_SCHEMA,
         )
         ks = {qid: q.k for qid, q in compiled.items()}
         k_df = self.spark.createDataFrame(
@@ -1004,9 +998,3 @@ class IndexSearcher:
             .select("query_id", "rank", "doc_id", "score")
             .orderBy("query_id", "rank")
         )
-
-    def _finish(self, hits: DataFrame, k: int, with_keys: bool) -> DataFrame:
-        keys = None
-        if with_keys:
-            keys = (self.docs.select(*self.meta.key_cols, "doc_id"), "doc_id")
-        return ranked_top(hits, k, F.desc("score"), F.asc("doc_id"), fetch=keys)

@@ -1,0 +1,160 @@
+"""Per-segment scoring tasks — the executor side of every scored search.
+
+A search runs as ONE ``spark.range(n, numPartitions=n).mapInArrow(task)``
+stage: the bloom-admitted segments are dealt round-robin to
+``n = min(segments, defaultParallelism)`` tasks, and each task opens its
+segments' files itself:
+
+- the ``postings/seg=N`` rows of the query's terms (parquet row-group
+  pruning on the term-sorted files), from one or more postings sources;
+- the ``seg_norms/seg=N`` row (base, norm bytes);
+- the segment's tombstones — from the closure map while the delete set is
+  driver-sized, else from the searcher's tombstone files, filtered to N;
+- for a keyed top-k, the key columns of only its ≤k survivors from
+  ``docs/seg=N`` (fetch-fields-late without a join).
+
+No shuffle feeds the scoring kernel: segment files are already segment
+local, so a task reads exactly what it scores (the ICDE 2025 columnar
+inverted index shape). Every pyarrow read below runs inside an executor on
+one segment's files, which the ``# executor-read`` marker records for the
+driver-read guard in ``tests/test_no_driver_reads.py``.
+"""
+
+from __future__ import annotations
+
+import os
+from dataclasses import dataclass
+from typing import Callable
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq  # executor-read
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
+
+
+@dataclass(frozen=True)
+class PostingsSource:
+    """One postings tree a task reads: ``terms`` as stored there, renamed
+    to the kernel's term names through ``alias`` (a masked field's term
+    rides the kernel under a synthetic name)."""
+
+    index_dir: str
+    terms: tuple[str, ...]
+    alias: dict[str, str] | None = None
+
+
+@dataclass(frozen=True)
+class SegmentFiles:
+    """Everything a task needs to open a segment — built on the driver,
+    shipped in the task closure. Tombstones come from ``deleted_by_seg``
+    (driver-sized delete sets) or, above the driver budget, from
+    ``tomb_files``, each task reading only its own segment's rows."""
+
+    index_dir: str
+    sources: tuple[PostingsSource, ...]
+    deleted_by_seg: dict[int, np.ndarray] | None = None
+    tomb_files: tuple[str, ...] = ()
+    key_cols: tuple[str, ...] = ()
+
+
+@dataclass
+class Segment:
+    base: int
+    norms: np.ndarray
+    term_blocks: dict[str, list]
+    dele: np.ndarray | None
+
+
+def _seg_dir(index_dir: str, table: str, seg: int) -> str:
+    return os.path.join(index_dir, table, f"seg={seg}")
+
+
+def read_postings(src: PostingsSource, seg: int) -> dict[str, list]:
+    """{kernel term: block list} for ``src.terms`` present in segment
+    ``seg`` — a term-IN filtered read of that segment's files only."""
+    path = _seg_dir(src.index_dir, "postings", seg)
+    if not src.terms or not os.path.isdir(path):
+        return {}
+    t = pq.read_table(  # executor-read
+        path, columns=["term", "blocks"], filters=[("term", "in", list(src.terms))]
+    )
+    terms = t["term"].to_pylist()
+    if src.alias is not None:
+        terms = [src.alias[x] for x in terms]
+    return dict(zip(terms, t["blocks"].to_pylist()))
+
+
+def read_tombstones(files: SegmentFiles, seg: int) -> np.ndarray | None:
+    """Sorted unique deleted local ids of ``seg``, or None."""
+    if files.deleted_by_seg is not None:
+        return files.deleted_by_seg.get(seg)
+    parts = [
+        pq.read_table(  # executor-read
+            f, columns=["doc_local"], filters=[("seg", "=", seg)]
+        )["doc_local"].to_numpy()
+        for f in files.tomb_files
+    ]
+    d = np.unique(np.concatenate(parts).astype(np.int64)) if parts else None
+    return d if d is not None and d.size else None
+
+
+def open_segment(files: SegmentFiles, seg: int) -> Segment | None:
+    """The segment's postings, norms and deletes — None when none of the
+    query's terms occur in it (no kernel can match there)."""
+    term_blocks: dict[str, list] = {}
+    for src in files.sources:
+        term_blocks.update(read_postings(src, seg))
+    if not term_blocks:
+        return None
+    norms = pq.read_table(  # executor-read
+        _seg_dir(files.index_dir, "seg_norms", seg), columns=["base", "norms"]
+    )
+    return Segment(
+        base=int(norms["base"][0].as_py()),
+        norms=np.frombuffer(norms["norms"][0].as_py(), dtype=np.uint8),
+        term_blocks=term_blocks,
+        dele=read_tombstones(files, seg),
+    )
+
+
+def fetch_keys(files: SegmentFiles, seg: int, local_ids: np.ndarray) -> pa.Table:
+    """Key columns of ``local_ids`` (in that order) from ``docs/seg=N`` —
+    the ≤k survivors only."""
+    t = pq.read_table(  # executor-read
+        _seg_dir(files.index_dir, "docs", seg),
+        columns=[*files.key_cols, "doc_local"],
+        filters=[("doc_local", "in", local_ids.tolist())],
+    )
+    idx = pc.index_in(pa.array(local_ids, type=pa.int64()), value_set=t["doc_local"])
+    return t.select(list(files.key_cols)).take(idx)
+
+
+def segment_scan(
+    spark: SparkSession,
+    segs: list[int],
+    score: Callable[[int], pa.Table | None],
+    schema: StructType,
+) -> DataFrame:
+    """One mapInArrow stage over ``segs``: task i runs ``score(seg)`` for
+    every i-th segment (round-robin over ``n = min(len(segs),
+    defaultParallelism)`` tasks, so every core gets work in one wave) and
+    emits the returned tables. No segments ⇒ an empty local relation."""
+    n = min(len(segs), spark.sparkContext.defaultParallelism)
+    if n == 0:
+        return spark.createDataFrame([], schema)
+    groups = [segs[i::n] for i in range(n)]
+    arrow_schema = to_arrow_schema(schema)
+
+    def task(batches):
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                for seg in groups[i]:
+                    out = score(seg)
+                    if out is not None and out.num_rows:
+                        yield from out.cast(arrow_schema).to_batches()
+
+    return spark.range(n, numPartitions=n).mapInArrow(task, schema)

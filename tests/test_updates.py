@@ -246,8 +246,11 @@ def test_delete_twice_is_idempotent(spark, corpus, tmp_path):
 def test_distributed_tombstones_above_budget(spark, corpus, tmp_path, monkeypatch):
     """When the delete set exceeds TOMB_DRIVER_BUDGET, the searcher must NOT
     build the driver-side per-segment map (deleted_by_seg stays empty) and
-    instead ship tombstones through the norms cogroup side — with results
-    IDENTICAL to the driver-map path."""
+    each scoring task reads its own segment's tombstones instead — with
+    results IDENTICAL to the driver-map path. A commit-point searcher opened
+    after a later delete batch honours only its recorded tombstone files on
+    both paths."""
+    from lucene_solr_spark.index.commits import commit_point
     from lucene_solr_spark.search import searcher as searcher_mod
     from lucene_solr_spark.search.searcher import IndexSearcher
 
@@ -264,7 +267,12 @@ def test_distributed_tombstones_above_budget(spark, corpus, tmp_path, monkeypatc
     monkeypatch.setattr(searcher_mod, "TOMB_DRIVER_BUDGET", 0)
     big = IndexSearcher(spark, idx)            # forced distributed path
     assert big.deleted_by_seg == {}            # no driver collect
-    assert "tomb" in big.norms_side.columns
+    victim_ids = {
+        r.doc_id for r in big.docs.join(victims, ["conv_id", "turn_idx"]).collect()
+    }
+    or2 = big.compile(big.parse("or2", ["merge", "batch"]), k=1 << 30)
+    hit_ids = {r.doc_id for r in big.hits(or2, mode="exact").collect()}
+    assert hit_ids and not (hit_ids & victim_ids)  # tasks applied the deletes
 
     for qtype, terms in [("or2", ["merge", "batch"]), ("term", ["stream"])]:
         spec = small.parse(qtype, terms)
@@ -277,6 +285,26 @@ def test_distributed_tombstones_above_budget(spark, corpus, tmp_path, monkeypatc
     v1 = small.total_hits(small.parse("or2", ["merge", "batch"]), threshold=10**6)
     v2 = big.total_hits(big.parse("or2", ["merge", "batch"]), threshold=10**6)
     assert v1 == v2
+
+    want = {
+        qtype: small.search(small.parse(qtype, terms), k=25, with_keys=True).toPandas()
+        for qtype, terms in [("or2", ["merge", "batch"]), ("term", ["stream"])]
+    }
+    gen = commit_point(idx)
+    victims2 = spark.createDataFrame(
+        corpus[corpus.turn_idx % 3 == 1][["conv_id", "turn_idx"]]
+    )
+    assert delete_docs(spark, idx, victims2) > 0
+    live = IndexSearcher(spark, idx)
+    assert live.total_hits(live.parse("or2", ["merge", "batch"]), threshold=10**6)[0] < v1[0]
+    for budget in (10**9, 0):
+        monkeypatch.setattr(searcher_mod, "TOMB_DRIVER_BUDGET", budget)
+        at = IndexSearcher(spark, idx, commit=gen)
+        assert bool(at.deleted_by_seg) == (budget > 0)
+        for qtype, terms in [("or2", ["merge", "batch"]), ("term", ["stream"])]:
+            got = at.search(at.parse(qtype, terms), k=25, with_keys=True).toPandas()
+            pd.testing.assert_frame_equal(got, want[qtype])
+        assert at.total_hits(at.parse("or2", ["merge", "batch"]), threshold=10**6) == v1
 
 
 def test_atomic_remove_add_distinct_equal_fresh_build(spark, corpus, tmp_path):

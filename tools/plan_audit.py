@@ -2,7 +2,11 @@
 declarative layers keep their scale properties: term predicates reach the
 parquet scans as PushedFilters, segment access is PartitionFilter-pruned,
 column pruning holds (ReadSchema), small sides broadcast, and no plan
-contains a full-table sort or an unbounded crossJoin.
+contains a full-table sort or an unbounded crossJoin. Scored searches run
+as one per-segment scoring stage whose postings reads happen inside the
+task (``search/segtask.py``): their plans must show that stage with no
+Exchange below it; their term, segment and column pruning is asserted by
+``tests/test_segment_task.py`` instead.
 
 Usage: python tools/plan_audit.py [sf_dir]   (default /root/testdata/sf0.01)
 Prints each audited plan plus a PASS/FAIL line per invariant.
@@ -17,6 +21,14 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+
+
+# the per-segment scoring stage: a MapInArrow straight over its Range (the
+# outline's next line) — no scan, filter or Exchange feeds the scoring
+SEG_TASK = r"MapInArrow \(\d+\)\n[ :]*\+- Range \("
+# any MapInArrow fed by something other than its Range
+SEG_TASK_FED = r"MapInArrow \(\d+\)\n[ :]*\+- (?!Range \()"
+TOPK = r"TakeOrderedAndProject|GlobalLimit"
 
 
 def _plan(df) -> str:
@@ -52,30 +64,31 @@ def main() -> None:
     eng = get_engine(spark, SF_DIR, "simple")
     results = []
 
-    # 1. scored search: term-pruned postings scan (PushedFilters carries the
-    # term IN-list), no full-table sort before the limit
+    # 1. scored search: one per-segment scoring stage (its term-pruned
+    # postings read runs inside the task), no full-table sort before the limit
     results.append(audit(
         "bm25_topk_term_pruned_scan",
         eng.topk("or3", ["merge", "batch", "stream"], k=10),
-        must=[r"PushedFilters: \[In\(term", r"TakeOrderedAndProject|GlobalLimit"],
-        must_not=[r"CartesianProduct"],
+        must=[SEG_TASK, TOPK],
+        must_not=[r"CartesianProduct", SEG_TASK_FED],
     ))
 
-    # 2. keyword FILTER rides the same pushed IN-list (posting intersection,
-    # no driver-side id set)
+    # 2. keyword FILTER rides the same scoring stage (posting intersection
+    # inside the task, no driver-side id set)
     results.append(audit(
         "keyword_filter_pushdown",
         eng.filtered_topk("or3", ["merge", "batch", "scan"], "source", "src3", k=10),
-        must=[r"PushedFilters: \[In\(term, \[.*source:src3"],
-        must_not=[r"CartesianProduct"],
+        must=[SEG_TASK, TOPK],
+        must_not=[r"CartesianProduct", SEG_TASK_FED],
     ))
 
-    # 3. fetch-fields-late: docs join reads only key+id columns
+    # 3. fetch-fields-late: the task reads the key columns of its ≤k
+    # survivors itself — no docs scan and no key join in the plan
     results.append(audit(
         "fetch_fields_late_column_pruning",
         eng.topk("term", ["spark"], k=10),
-        must=[r"ReadSchema: struct<doc_key:bigint,doc_local:bigint"],
-        must_not=[r"text.*ReadSchema"],
+        must=[SEG_TASK, TOPK],
+        must_not=[r"text.*ReadSchema", r"Scan parquet", r"Join", SEG_TASK_FED],
     ))
 
     # 4. MinHash LSH dedup: no cartesian product anywhere — candidates come
@@ -103,16 +116,14 @@ def main() -> None:
         must_not=[r"CartesianProduct"],
     ))
 
-    # 7. facet-on-query (q= + facet.field=): term IN-list still pushed to
-    # the postings scan, the stored-field side broadcast, hash-agg on top —
-    # and NO TakeOrdered over the hit set before the aggregate (facets
-    # aggregate unranked hits)
+    # 7. facet-on-query (q= + facet.field=): hits from the scoring stage,
+    # the stored-field side broadcast, hash-agg on top — and NO TakeOrdered
+    # over the hit set before the aggregate (facets aggregate unranked hits)
     results.append(audit(
         "facet_on_query_pushdown_broadcast",
         eng.facet_on_query("and2", ["merge", "batch"], "source", limit=10),
-        must=[r"PushedFilters: \[In\(term", r"BroadcastExchange",
-              r"HashAggregate"],
-        must_not=[r"CartesianProduct"],
+        must=[SEG_TASK, r"BroadcastExchange", r"HashAggregate"],
+        must_not=[r"CartesianProduct", SEG_TASK_FED],
     ))
 
     # 8. LTR rescore: candidate features join broadcast, model evaluated in
@@ -158,26 +169,26 @@ def main() -> None:
         must_not=[r"CartesianProduct"],
     ))
 
-    # 12. nested boolean / multiphrase: the term IN-list pushdown must
-    # survive the new clause kinds (all member terms reach the scan)
+    # 12. nested boolean / multiphrase: the new clause kinds keep the
+    # one-stage shape (all member terms are read inside the task)
     results.append(audit(
         "multiphrase_term_pruned_scan",
         eng.multiphrase_topk([["merge"], ["batch", "stream"]], k=10),
-        must=[r"PushedFilters: \[In\(term"],
-        must_not=[r"CartesianProduct"],
+        must=[SEG_TASK, TOPK],
+        must_not=[r"CartesianProduct", SEG_TASK_FED],
     ))
 
     # 13. query-time join ({!join}): the gathered join values re-enter the
-    # OUTER query's pushed IN-list as keyword terms (one fused posting scan,
-    # no driver id set, no crossJoin)
+    # OUTER query as keyword terms of its scoring stage (one fused posting
+    # read, no driver id set, no crossJoin)
     results.append(audit(
         "join_filter_keyword_pushdown",
         eng.join_filter_topk(
             "or3", ["vector", "stream", "filter"], "and2", ["dup", "merge"],
             k=10,
         ),
-        must=[r"PushedFilters: \[In\(term, \[.*source:"],
-        must_not=[r"CartesianProduct"],
+        must=[SEG_TASK, TOPK],
+        must_not=[r"CartesianProduct", SEG_TASK_FED],
     ))
 
     # 14. SemDeDup: within-cell pairs come from an EQUI-join on cell (the
@@ -235,14 +246,14 @@ def main() -> None:
         must_not=[r"Window", r"CartesianProduct", r"BatchEvalPython"],
     ))
 
-    # 19. RRF: both legs keep the term-IN-list pushdown; fusion is a join of
+    # 19. RRF: both legs keep their own scoring stage; fusion is a join of
     # two bounded frames with ONE final TakeOrdered
     results.append(audit(
         "rrf_legs_pushed_bounded_fusion",
         eng.rrf_topk("or3", ["vector", "stream", "filter"],
                      "and2", ["merge", "batch"], n=40, k=10),
-        must=[r"PushedFilters: \[In\(term", r"TakeOrderedAndProject|GlobalLimit"],
-        must_not=[r"CartesianProduct"],
+        must=[rf"(?s){SEG_TASK}.*{SEG_TASK}", TOPK],
+        must_not=[r"CartesianProduct", SEG_TASK_FED],
     ))
 
     # 20. payloads: the whole annotate→parse→score pipeline stays JVM-side
@@ -258,24 +269,24 @@ def main() -> None:
     ))
 
     # 21. ToChildBlockJoin: the tiny parent set broadcasts to the child
-    # fan-out, term IN-list still pushed. (The hits↔doc-keys join inside
+    # fan-out, hits from the scoring stage. (The hits↔doc-keys join inside
     # the roll-up is ALLOWED to sort-merge — both sides are large at scale
     # and SMJ is the right strategy there; only the fan-out must broadcast
     # and nothing may cross-join.)
     results.append(audit(
         "blockjoin_children_broadcast_fanout",
         eng.blockjoin_children("or2", ["dup", "vector"], n_parents=2),
-        must=[r"BroadcastHashJoin", r"PushedFilters: \[In\(term"],
-        must_not=[r"CartesianProduct"],
+        must=[r"BroadcastHashJoin", SEG_TASK],
+        must_not=[r"CartesianProduct", SEG_TASK_FED],
     ))
 
-    # 22. surround spans: both distance clauses ride the SAME pruned
-    # postings scan (term IN-list pushed), one TakeOrdered
+    # 22. surround spans: both distance clauses ride the SAME scoring
+    # stage (one term-pruned read per segment), one TakeOrdered
     results.append(audit(
         "surround_spans_pushed_scan",
         eng.surround_topk("2W(merge, batch) OR 3N(vector, filter)", k=10),
-        must=[r"PushedFilters: \[In\(term", r"TakeOrderedAndProject|GlobalLimit"],
-        must_not=[r"CartesianProduct"],
+        must=[SEG_TASK, TOPK],
+        must_not=[r"CartesianProduct", SEG_TASK_FED],
     ))
 
     # 23. DSIR selection: the O(B) hashed LMs broadcast back onto the
@@ -338,10 +349,9 @@ def main() -> None:
         must_not=[r"Scan parquet", r"FileScan"],
     ))
 
-    # 27. commit-point (time-travel) search: the commit's seg list must
-    # reach the postings scan as a PARTITION filter (seg is the partition
-    # column) — opening an old generation prunes later segments' files at
-    # the scan, it does not read-then-discard them.
+    # 27. commit-point (time-travel) search: the same one-stage shape; the
+    # scoring stage is dealt only the commit's segments, so later segments'
+    # files are never opened (tests/test_segment_task.py asserts the list).
     from lucene_solr_spark.engine import ASOF
 
     asof = get_engine(spark, SF_DIR, "simple", ASOF)
@@ -349,12 +359,12 @@ def main() -> None:
     results.append(audit(
         "asof_commit_seg_partition_pruned",
         asof.topk("or3", ["merge", "batch", "stream"], k=10),
-        must=[r"PartitionFilters: \[[^\]]*seg", r"PushedFilters: \[In\(term"],
-        must_not=[],
+        must=[SEG_TASK, TOPK],
+        must_not=[SEG_TASK_FED],
     ))
 
-    # 28. multi-field qf: BOTH field legs' posting scans are term-IN-list
-    # pruned (two independent indexes, each pushed), the cross-field
+    # 28. multi-field qf: BOTH field legs run their own scoring stage (two
+    # independent indexes, each term-pruned in its tasks), the cross-field
     # combine is a doc_key join — never a CartesianProduct — and the final
     # order is the k-row coalesce, not a global sort exchange.
     from lucene_solr_spark.engine import fielded_dismax_topk
@@ -362,34 +372,33 @@ def main() -> None:
     results.append(audit(
         "fielded_qf_both_legs_pushed",
         fielded_dismax_topk(spark, SF_DIR, "or3", ["fast", "merge", "table"], k=10),
-        must=[r"(?s)PushedFilters: \[In\(term.*PushedFilters: \[In\(term"],
-        must_not=[r"CartesianProduct", r"Exchange rangepartitioning"],
+        must=[rf"(?s){SEG_TASK}.*{SEG_TASK}", TOPK],
+        must_not=[r"CartesianProduct", r"Exchange rangepartitioning", SEG_TASK_FED],
     ))
 
-    # 29. ExactStatsCache alias: every shard leg's posting scan is
-    # term-IN-list pruned (the injected global weights change scoring, not
-    # the scan shape), the merge is a k-row TakeOrdered per leg + union —
+    # 29. ExactStatsCache alias: every shard leg runs its own scoring stage
+    # (the injected global weights change scoring, not the stage shape), the
+    # merge is a k-row TakeOrdered per leg + union —
     # no CartesianProduct, no doc-level range-partition exchange.
     from lucene_solr_spark.engine import exactstats_topk
 
     results.append(audit(
         "exactstats_all_legs_pushed",
         exactstats_topk(spark, SF_DIR, "or3", ["vector", "stream", "filter"], k=10),
-        must=[r"(?s)PushedFilters: \[In\(term.*PushedFilters: \[In\(term"],
-        must_not=[r"CartesianProduct"],
+        must=[rf"(?s){SEG_TASK}.*{SEG_TASK}", TOPK],
+        must_not=[r"CartesianProduct", SEG_TASK_FED],
     ))
 
-    # 30. FieldMaskingSpanQuery: BOTH fields' posting scans are term-pruned
-    # (each side's equality filter pushes to its parquet scan) and the
-    # cross-field composition is the seg cogroup — no extra exchange family
-    # beyond the single-field span query's.
+    # 30. FieldMaskingSpanQuery: each segment's task reads BOTH fields'
+    # term-pruned postings, so the cross-field composition is the single
+    # scoring stage — no exchange beyond the single-field span query's.
     from lucene_solr_spark.engine import field_masking_span_topk
 
     results.append(audit(
         "fieldmask_both_fields_pushed",
         field_masking_span_topk(spark, SF_DIR, "table", "join", 6, k=10),
-        must=[r"(?s)PushedFilters: \[.*EqualTo\(term.*PushedFilters: \[.*EqualTo\(term"],
-        must_not=[r"CartesianProduct"],
+        must=[SEG_TASK, TOPK],
+        must_not=[r"CartesianProduct", SEG_TASK_FED],
     ))
 
     # 31. numeric docvalues boost: the generation-stacked DV resolution is
@@ -403,12 +412,12 @@ def main() -> None:
         get_engine(spark, SF_DIR, "simple", DV_UPDATED).dv_boost_topk(
             "or3", ["vector", "stream", "filter"], k=10
         ),
-        must=[r"PushedFilters: \[In\(term"],
-        must_not=[r"CartesianProduct", r"Window \[.*\]$"],
+        must=[SEG_TASK, TOPK],
+        must_not=[r"CartesianProduct", r"Window \[.*\]$", SEG_TASK_FED],
     ))
 
-    # 32. SPLITSHARD scatter-gather: every child leg's postings scan stays
-    # term-IN-list pruned (the masks/stats refresh must not break pushdown),
+    # 32. SPLITSHARD scatter-gather: every child leg keeps its own scoring
+    # stage (the masks/stats refresh must not add a scan or shuffle to it),
     # the page merge is a TakeOrdered over n·k rows (no full-table sort),
     # and no leg degenerates into a CartesianProduct.
     from lucene_solr_spark.engine import split_union_topk
@@ -416,12 +425,8 @@ def main() -> None:
     results.append(audit(
         "split_children_term_pruned_scans",
         split_union_topk(spark, SF_DIR, "or3", ["merge", "scan", "window"], k=10),
-        must=[
-            r"(?s)PushedFilters: \[In\(term.*PushedFilters: \[In\(term"
-            r".*PushedFilters: \[In\(term",
-            r"TakeOrderedAndProject|GlobalLimit",
-        ],
-        must_not=[r"CartesianProduct"],
+        must=[rf"(?s){SEG_TASK}.*{SEG_TASK}.*{SEG_TASK}", TOPK],
+        must_not=[r"CartesianProduct", SEG_TASK_FED],
     ))
 
     n_fail = results.count(False)
