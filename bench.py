@@ -11,7 +11,9 @@ Measures the north-rule pipeline end-to-end:
   - dedup_minhash / ann_cosine / facet_q1 : training-pipeline ops.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
-(default 32).
+(default: the CPUs this process may run on). The JSON line records the
+host's 1-minute load average before and after the suite, so co-tenancy shows
+next to the timings.
 """
 
 from __future__ import annotations
@@ -26,7 +28,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 # transcripts corpus size ~ linear in sf (sf0.1 → ~520k turns). Sized so the
 # build phase amortizes fixed job overhead at 32 cores (a ~100k-turn corpus
 # measures stage-setup latency, not throughput — 64 tasks of <2k turns each).
@@ -68,6 +70,7 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     extras: dict[str, float] = {}
+    load_before = os.getloadavg()[0]
     t_all = time.monotonic()
 
     spark = get_spark("bench", cpus=CPUS)
@@ -329,6 +332,7 @@ def main() -> None:
         "sf": _SF,
         "cpus": CPUS,
         "extras": {k: round(v, 3) for k, v in extras.items()},
+        "loadavg_1m": {"before": load_before, "after": os.getloadavg()[0]},
     }))
 
 

@@ -4,11 +4,18 @@ re-expressed Spark-first.
 Reference lifecycle (SURVEY.md §3.3): DWPT per-thread invert →
 segment flush → background merge → commit point. Spark shape:
 
-  input DF → repartitionByRange(n_segments, *key_cols)           (DWPT analog:
-           → sortWithinPartitions(*key_cols)                      one partition
-           → mapInPandas(invert kernel)                           = one segment)
-           → per-partition parquet segment + manifest row         (flush+commit)
+  build_index (any DataFrame):
+    input DF → repartitionByRange(n_segments, *key_cols)         (DWPT analog:
+             → sortWithinPartitions(*key_cols)                    one partition
+             → mapInPandas(invert kernel)                         = one segment)
+             → per-partition parquet segment + manifest row       (flush+commit)
+  build_index_presorted (key-sorted parquet files, file groups = segments):
+    spark.range(n).mapInArrow                                    (one stage,
+             → task i inverts segments i, i+n, i+2n, …            n = min(segments,
+               from their own files (util/segscan.py)             cores) tasks)
+             → per-segment parquet files + manifest row           (flush+commit)
   driver   → global term_stats / stats aggregation                (TermStates#build)
+             reading the index tables with their known schemas
 
 Design decisions for 100 TB scale:
 - **One pass over text.** Analysis is the dominant cost; the kernel computes
@@ -112,6 +119,9 @@ MANIFEST_SCHEMA = (
     "n_postings long, sum_len long, content_hash string, status string, "
     "build_secs double, key_min string, key_max string"
 )
+# manifest ``status`` of a committed segment whose recorded key range this
+# run's range partitioning did not reproduce: build_index rebuilds fresh
+REFUSED = "refused"
 
 
 def _key_repr(pdf: pd.DataFrame, key_cols: list[str], row: int) -> str:
@@ -518,6 +528,15 @@ def _invert_partition(
     return manifest
 
 
+def _committed_row(row: pd.DataFrame, status: str) -> pd.DataFrame:
+    """A committed segment's manifest marker row, re-labelled ``status``."""
+    row["status"] = status
+    for c in ("key_min", "key_max"):  # pre-v2 markers lack the range
+        if c not in row.columns:
+            row[c] = ""
+    return row
+
+
 def _make_kernel(
     meta: IndexMeta,
     index_dir: str,
@@ -530,14 +549,15 @@ def _make_kernel(
         marker = os.path.join(index_dir, "manifest", f"seg={seg}.parquet")
         if os.path.exists(marker):  # resume: segment already committed
             row = pq.read_table(marker).to_pandas()
+            status = "resumed"
             # committed-segment skip is only sound if THIS run's range
             # partitioning reproduced the committed boundaries — a resume on
             # different parallelism/input splits can shift repartitionByRange
             # boundaries and silently drop/duplicate rows at the committed/
-            # rebuilt seam. Verify the partition's (first, last) key against
-            # the recorded range; refuse to resume on mismatch. (Costs one
-            # deserialize pass of this partition — no analysis, no writes.
-            # The presorted path is immune: segments are fixed file groups.)
+            # rebuilt seam. Verify the partition's (first, last) key and row
+            # count against the recorded range; on mismatch report the
+            # segment REFUSED (no writes) and let build_index rebuild. (Costs
+            # one deserialize pass of this partition — no analysis.)
             if "key_min" in row.columns and len(row):
                 key_cols = list(meta.key_cols)
                 first = last = None
@@ -548,22 +568,11 @@ def _make_kernel(
                             first = _key_repr(pdf, key_cols, 0)
                         last = _key_repr(pdf, key_cols, -1)
                         n_here += len(pdf)
-                want_min = row["key_min"].iloc[0]
-                want_max = row["key_max"].iloc[0]
-                got_min, got_max = first or "", last or ""
-                if (got_min, got_max, n_here) != (want_min, want_max, int(row["n_docs"].iloc[0])):
-                    raise RuntimeError(
-                        f"resume refused for seg={seg}: committed key range "
-                        f"[{want_min!r}, {want_max!r}] ({int(row['n_docs'].iloc[0])} rows) "
-                        f"!= this run's partition [{got_min!r}, {got_max!r}] "
-                        f"({n_here} rows) — range boundaries shifted between "
-                        "runs; rebuild into a fresh index_dir"
-                    )
-            row["status"] = "resumed"
-            for c in ("key_min", "key_max"):  # pre-v2 markers lack the range
-                if c not in row.columns:
-                    row[c] = ""
-            yield row
+                want = (row["key_min"].iloc[0], row["key_max"].iloc[0],
+                        int(row["n_docs"].iloc[0]))
+                if (first or "", last or "", n_here) != want:
+                    status = REFUSED
+            yield _committed_row(row, status)
             return
         pdfs = list(iterator)
         manifest = _invert_partition(pdfs, seg, meta, index_dir, key_types)
@@ -632,11 +641,8 @@ def build_index(
 
     key_types = {c: to_arrow_type(df.schema[c].dataType) for c in key_cols}
     manifest = dfp.mapInPandas(_make_kernel(meta, index_dir, key_types), MANIFEST_SCHEMA)
-    try:
-        out = manifest.toPandas().sort_values("seg").reset_index(drop=True)
-    except Exception as exc:  # noqa: BLE001 — Py4J wraps the kernel's error
-        if "resume refused" not in str(exc):
-            raise
+    out = manifest.toPandas()
+    if (out["status"] == REFUSED).any():
         # Range boundaries shifted between sessions: RangePartitioner's
         # sampling seed derives from the RDD id, i.e. from SESSION HISTORY —
         # the same data partitions identically within one session but can
@@ -652,7 +658,8 @@ def build_index(
         _sh.rmtree(index_dir, ignore_errors=True)
         os.makedirs(index_dir, exist_ok=True)
         meta.save(index_dir)
-        out = manifest.toPandas().sort_values("seg").reset_index(drop=True)
+        out = manifest.toPandas()
+    out = out.sort_values("seg").reset_index(drop=True)
     out["base"] = out["n_docs"].cumsum() - out["n_docs"]
     _fixup_bases(index_dir, out)
 
@@ -674,15 +681,28 @@ def build_index_presorted(
 ) -> DataFrame:
     """Shuffle-free build over a KEY-SORTED parquet table (the production
     layout: an Iceberg table written with a sort order on the doc key — file
-    i's keys all precede file i+1's). Segment = group of consecutive files;
-    workers read their files directly with pyarrow (no JVM scan, no range
-    shuffle, no sampling pass). Falls back: if footer stats show overlapping
-    key ranges, raise — use ``build_index`` (which sorts) instead.
+    i's keys all precede file i+1's). Segment = group of consecutive files.
+    If footer stats show overlapping key ranges, raise — use
+    ``build_index`` (which sorts) instead.
 
     This is the 100 TB fast path: the one full pass over the corpus is the
-    invert kernel itself.
+    invert stage itself. It is ONE Python stage (``segment_scan``): the
+    segments are dealt round-robin to ``min(segments, defaultParallelism)``
+    tasks, and each task reads its segments' files directly with pyarrow
+    and inverts them one after another — no JVM scan, no range shuffle, no
+    sampling job. The key columns' types come from the first file's parquet
+    footer, mapped through Spark's own Arrow type mapping, so no
+    schema-inference job runs either. A committed segment (its manifest
+    marker exists) is not re-inverted: it comes back ``status="resumed"``.
+    Segments are FIXED file groups, so no partitioning drift can mis-seam a
+    resume.
     """
     import glob as _glob
+
+    from pyspark.sql.pandas.types import from_arrow_type, to_arrow_type
+    from pyspark.sql.types import StructType
+
+    from ..util.segscan import segment_scan
 
     files = sorted(_glob.glob(os.path.join(input_path, "*.parquet")))
     if not files:
@@ -706,44 +726,28 @@ def build_index_presorted(
     else:
         meta.save(index_dir)
 
-    sample = spark.read.parquet(files[0])
-    from pyspark.sql.pandas.types import to_arrow_type
+    footer = pq.read_schema(files[0])
+    key_types = {
+        c: to_arrow_type(from_arrow_type(footer.field(c).type)) for c in key_cols
+    }
+    columns = [*key_cols, *meta.keyword_cols, text_col]
 
-    key_types = {c: to_arrow_type(sample.schema[c].dataType) for c in key_cols}
+    def invert_one(seg: int) -> pa.Table:
+        marker = os.path.join(index_dir, "manifest", f"seg={seg}.parquet")
+        if os.path.exists(marker):
+            row = _committed_row(pq.read_table(marker).to_pandas(), "resumed")
+            return pa.Table.from_pandas(row, preserve_index=False)
+        # Arrow tables straight into the kernel — NO to_pandas(): the text
+        # column never materializes as Python strings
+        parts = [pq.read_table(p, columns=columns) for p in groups[seg]]
+        manifest = _invert_partition(parts, seg, meta, index_dir, key_types)
+        return pa.Table.from_pylist([manifest])
 
-    fdf = spark.createDataFrame(
-        [(i, g) for i, g in enumerate(groups)], "seg int, paths array<string>"
-    ).repartitionByRange(n_segments, "seg")
-
-    def kernel(iterator):
-        for pdf in iterator:
-            for seg, paths in zip(pdf["seg"], pdf["paths"]):
-                seg = int(seg)
-                marker = os.path.join(index_dir, "manifest", f"seg={seg}.parquet")
-                if os.path.exists(marker):
-                    # no range check needed: presorted segments are FIXED
-                    # file groups, immune to partitioning drift by design
-                    row = pq.read_table(marker).to_pandas()
-                    row["status"] = "resumed"
-                    for c in ("key_min", "key_max"):
-                        if c not in row.columns:
-                            row[c] = ""
-                    yield row
-                    continue
-                # Arrow tables straight into the kernel — NO to_pandas():
-                # the text column never materializes as Python strings
-                parts = [
-                    pq.read_table(
-                        p, columns=[*key_cols, *meta.keyword_cols, text_col]
-                    )
-                    for p in paths
-                ]
-                yield pd.DataFrame([
-                    _invert_partition(parts, seg, meta, index_dir, key_types)
-                ])
-
-    manifest = fdf.mapInPandas(kernel, MANIFEST_SCHEMA)
-    out = manifest.toPandas().sort_values("seg").reset_index(drop=True)
+    out = (
+        segment_scan(spark, list(range(n_segments)), invert_one,
+                     StructType.fromDDL(MANIFEST_SCHEMA))
+        .toPandas().sort_values("seg").reset_index(drop=True)
+    )
     out["base"] = out["n_docs"].cumsum() - out["n_docs"]
     _fixup_bases(index_dir, out)
     _finalize(spark, index_dir)
@@ -850,6 +854,10 @@ def _fixup_bases(index_dir: str, manifest: pd.DataFrame) -> None:
 # the term dictionary's columns as _finalize (and split's per-child stats)
 # write them; read with this schema, a lookup skips Parquet schema inference
 TERM_STATS_SCHEMA = "term string, df long, ttf long"
+# the columns _finalize aggregates from the index's own tables (``seg`` is
+# the hive partition directory); known schemas mean no inference jobs
+POSTINGS_STATS_SCHEMA = "term string, df_part long, ttf_part long, seg int"
+DOCS_STATS_SCHEMA = "doc_local long, length long, seg int"
 
 
 def read_term_stats(spark: SparkSession, root: str) -> DataFrame:
@@ -867,14 +875,18 @@ def _finalize(spark: SparkSession, index_dir: str) -> None:
     subtracts each deleted doc's df/ttf contribution (one seg-pruned pass
     over the affected segments) — so post-update scores equal a fresh build
     over the live corpus."""
-    postings = spark.read.parquet(os.path.join(index_dir, "postings"))
+    postings = spark.read.schema(POSTINGS_STATS_SCHEMA).parquet(
+        os.path.join(index_dir, "postings")
+    )
     term_stats = (
         postings.groupBy("term")
         .agg(F.sum("df_part").alias("df"), F.sum("ttf_part").alias("ttf"))
     )
-    docs = spark.read.parquet(os.path.join(index_dir, "docs"))
+    docs = spark.read.schema(DOCS_STATS_SCHEMA).parquet(os.path.join(index_dir, "docs"))
 
-    from .updates import load_tombstones, term_stats_removals
+    from .updates import (
+        TOMBSTONE_SCHEMA, load_tombstones, term_stats_removals, tombstones_path,
+    )
 
     tomb = load_tombstones(spark, index_dir)
     if tomb:
@@ -892,14 +904,8 @@ def _finalize(spark: SparkSession, index_dir: str) -> None:
         # no driver materialization beyond the per-seg arrays the kernels
         # need anyway); broadcast while deletes are broadcast-sized, which
         # AQE decides from the actual table size
-        from .updates import tombstones_path
-
         tomb_df = (
-            spark.read.parquet(tombstones_path(index_dir))
-            .select(
-                F.col("seg").cast("int").alias("seg"),
-                F.col("doc_local").cast("long").alias("doc_local"),
-            )
+            spark.read.schema(TOMBSTONE_SCHEMA).parquet(tombstones_path(index_dir))
             .distinct()
         )
         docs = docs.join(tomb_df, ["seg", "doc_local"], "left_anti")

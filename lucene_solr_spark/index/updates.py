@@ -73,7 +73,7 @@ def load_tombstones(spark: SparkSession, index_dir: str) -> dict[int, np.ndarray
         os.path.join(path, "*", "*.parquet")
     ):
         return {}
-    return tombstones_by_seg(spark.read.parquet(path))
+    return tombstones_by_seg(spark.read.schema(TOMBSTONE_SCHEMA).parquet(path))
 
 
 def delete_docs(

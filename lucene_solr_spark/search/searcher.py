@@ -5,8 +5,9 @@ Query lifecycle (SURVEY.md §3.1, Spark shape):
 1. compile on driver: analyze surface terms (query-time chain == index-time
    chain), bind global stats from the broadcast-sized ``stats``/``term_stats``
    tables into float32 weights → CompiledQuery.
-2. one scoring stage (``search/segtask.py``): the bloom-admitted segments
-   are dealt round-robin to min(segments, defaultParallelism) tasks of a
+2. one scoring stage (``util/segscan.py`` dealing ``search/segtask.py``'s
+   per-segment tasks): the bloom-admitted segments are dealt round-robin
+   to min(segments, defaultParallelism) tasks of a
    ``spark.range(n).mapInArrow`` job; each task reads its own segments'
    term-filtered postings (parquet row-group pruning on the term-sorted
    files), norms row and tombstones, and runs the per-segment kernel (WAND
@@ -36,7 +37,8 @@ from ..index.build import ANALYZERS, IndexMeta, read_term_stats
 from .bm25 import CollectionStats, norm_cache
 from .kernels import count_segment_matches, score_segment_exact, score_segment_wand
 from .query import BooleanSpec, CompiledQuery, compile_query, parse_fixture_query
-from .segtask import PostingsSource, SegmentFiles, fetch_keys, open_segment, segment_scan
+from ..util.segscan import segment_scan
+from .segtask import PostingsSource, SegmentFiles, fetch_keys, open_segment
 
 _EMPTY_LOCALS = np.empty(0, dtype=np.int64)
 

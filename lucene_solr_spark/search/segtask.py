@@ -1,7 +1,7 @@
 """Per-segment scoring tasks — the executor side of every scored search.
 
-A search runs as ONE ``spark.range(n, numPartitions=n).mapInArrow(task)``
-stage: the bloom-admitted segments are dealt round-robin to
+A search runs as ONE ``util.segscan.segment_scan`` stage: the
+bloom-admitted segments are dealt round-robin to
 ``n = min(segments, defaultParallelism)`` tasks, and each task opens its
 segments' files itself:
 
@@ -24,16 +24,11 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
-from typing import Callable
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq  # executor-read
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
 
 
 @dataclass(frozen=True)
@@ -131,30 +126,3 @@ def fetch_keys(files: SegmentFiles, seg: int, local_ids: np.ndarray) -> pa.Table
     )
     idx = pc.index_in(pa.array(local_ids, type=pa.int64()), value_set=t["doc_local"])
     return t.select(list(files.key_cols)).take(idx)
-
-
-def segment_scan(
-    spark: SparkSession,
-    segs: list[int],
-    score: Callable[[int], pa.Table | None],
-    schema: StructType,
-) -> DataFrame:
-    """One mapInArrow stage over ``segs``: task i runs ``score(seg)`` for
-    every i-th segment (round-robin over ``n = min(len(segs),
-    defaultParallelism)`` tasks, so every core gets work in one wave) and
-    emits the returned tables. No segments ⇒ an empty local relation."""
-    n = min(len(segs), spark.sparkContext.defaultParallelism)
-    if n == 0:
-        return spark.createDataFrame([], schema)
-    groups = [segs[i::n] for i in range(n)]
-    arrow_schema = to_arrow_schema(schema)
-
-    def task(batches):
-        for b in batches:
-            for i in b.column(0).to_pylist():
-                for seg in groups[i]:
-                    out = score(seg)
-                    if out is not None and out.num_rows:
-                        yield from out.cast(arrow_schema).to_batches()
-
-    return spark.range(n, numPartitions=n).mapInArrow(task, schema)

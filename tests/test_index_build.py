@@ -164,3 +164,30 @@ def test_resume_recovers_from_shifted_boundaries(spark, small_corpus, tmp_path):
 
     orc = BruteForceOracle(small_corpus)
     assert dict(zip(ts.term, ts.df)) == dict(orc._df)
+
+
+def test_kernel_error_mentioning_refusal_keeps_committed_segments(spark, small_corpus, tmp_path):
+    """Only the kernel's typed refusal wipes an index: any other kernel
+    failure propagates and deletes nothing — even when its message happens
+    to contain the words "resume refused" (here through the index path)."""
+    import glob
+
+    from lucene_solr_spark.index.build import build_index
+
+    idx = str(tmp_path / "resume refused" / "idx")
+    sdf = spark.createDataFrame(small_corpus)
+    build_index(spark, sdf, idx, n_segments=4)
+    os.remove(os.path.join(idx, "manifest", "seg=2.parquet"))
+    # a directory where segment 2's first file write goes blocks the rebuild
+    os.makedirs(os.path.join(idx, "docs", "seg=2", "part-0.parquet.tmp"))
+    committed = {}
+    for p in glob.glob(os.path.join(idx, "manifest", "seg=*.parquet")):
+        with open(p, "rb") as f:
+            committed[p] = f.read()
+    with pytest.raises(Exception, match="part-0.parquet.tmp"):
+        build_index(spark, sdf, idx, n_segments=4)
+    left = {}
+    for p in glob.glob(os.path.join(idx, "manifest", "seg=*.parquet")):
+        with open(p, "rb") as f:
+            left[p] = f.read()
+    assert len(committed) == 3 and left == committed

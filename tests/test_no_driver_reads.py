@@ -26,6 +26,7 @@ QUERY_PATH_MODULES = [
     "search/query.py",
     "search/kernels.py",
     "search/segtask.py",
+    "util/segscan.py",
     "ops/ann.py",
     "ops/dedup.py",
     "ops/facets.py",
