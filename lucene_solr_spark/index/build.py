@@ -4,10 +4,10 @@ re-expressed Spark-first.
 Reference lifecycle (SURVEY.md §3.3): DWPT per-thread invert →
 segment flush → background merge → commit point. Spark shape:
 
-  build_index (any DataFrame):
+  build_index / append_batch (any DataFrame):
     input DF → repartitionByRange(n_segments, *key_cols)         (DWPT analog:
              → sortWithinPartitions(*key_cols)                    one partition
-             → mapInPandas(invert kernel)                         = one segment)
+             → mapInArrow(resume or invert)                       = one segment)
              → per-partition parquet segment + manifest row       (flush+commit)
   build_index_presorted (key-sorted parquet files, file groups = segments):
     spark.range(n).mapInArrow                                    (one stage,
@@ -16,6 +16,12 @@ segment flush → background merge → commit point. Spark shape:
              → per-segment parquet files + manifest row           (flush+commit)
   driver   → global term_stats / stats aggregation                (TermStates#build)
              reading the index tables with their known schemas
+
+One writer: every segment — built, appended, or rewritten by
+``updates.expunge_deletes`` — is written by ``write_segment``, which owns
+the segment layout, its content hash and its commit order (docs →
+seg_norms → postings → bloom → manifest marker last). Both build shapes
+run the same per-segment task, ``_resume_or_invert``, on Arrow batches.
 
 Design decisions for 100 TB scale:
 - **One pass over text.** Analysis is the dominant cost; the kernel computes
@@ -42,15 +48,18 @@ Reference analogs: ``L/index/DefaultIndexingChain#processField`` (invert),
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from pyspark import TaskContext
@@ -124,10 +133,6 @@ MANIFEST_SCHEMA = (
 REFUSED = "refused"
 
 
-def _key_repr(pdf: pd.DataFrame, key_cols: list[str], row: int) -> str:
-    return "\x1f".join(str(pdf[c].iloc[row]) for c in key_cols)
-
-
 def _key_repr_tbl(tbl: pa.Table, key_cols: list[str], row: int) -> str:
     return "\x1f".join(str(tbl[c][row].as_py()) for c in key_cols)
 
@@ -184,9 +189,19 @@ class IndexMeta:
 
 
 def _atomic_write(table: pa.Table, path: str) -> None:
-    tmp = path + ".tmp"
-    pq.write_table(table, tmp, compression="zstd")
-    os.replace(tmp, path)
+    """Write ``table`` to ``path`` by rename from a tmp name unique to this
+    writer (``.<name>.<pid>-<uuid4>.tmp``): a failed build's straggler task
+    and the rebuild racing it on one segment each rename their own complete
+    file. The leading dot keeps Spark's file listing off a leftover."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.{os.getpid()}-{uuid.uuid4().hex}.tmp")
+    try:
+        pq.write_table(table, tmp, compression="zstd")
+        os.replace(tmp, path)
+    except BaseException:
+        with contextlib.suppress(OSError):
+            os.remove(tmp)
+        raise
 
 
 # --- deterministic index OPEN ------------------------------------------------
@@ -292,18 +307,17 @@ def open_committed_index(spark: SparkSession, index_dir: str) -> DataFrame | Non
 
 
 def _invert_partition(
-    parts: list,
+    parts,
     seg: int,
     meta: IndexMeta,
     index_dir: str,
     key_types: dict[str, pa.DataType],
 ) -> dict:
-    """Invert one segment's rows (already in key order) and write its files.
+    """Invert one segment's rows and write it with ``write_segment``.
 
-    ``parts``: pyarrow Tables (the zero-copy fast path — parquet columns
-    feed the analyzer with no pandas conversion and no Python strings) or
-    pandas DataFrames (the shuffled mapInPandas path; normalized to Arrow
-    here).
+    ``parts``: an iterable of pyarrow Tables already in key order — parquet
+    columns or Spark's Arrow batches feed the analyzer with no pandas
+    conversion and no Python strings.
 
     DocIDs are SEGMENT-LOCAL (0..n-1 in key order). Global IDs are
     ``local + segment base`` where bases are the cumulative per-segment row
@@ -316,13 +330,6 @@ def _invert_partition(
     analyzer = ANALYZERS[meta.analyzer]()
     key_cols = list(meta.key_cols)
     carry_cols = [*key_cols, *meta.keyword_cols]
-    tables = [
-        p if isinstance(p, pa.Table)
-        else pa.Table.from_pandas(
-            p[[*carry_cols, meta.text_col]], preserve_index=False
-        )
-        for p in parts
-    ]
 
     code_parts: list[np.ndarray] = []   # per-batch term codes
     cat_parts: list[np.ndarray] = []    # per-batch category vocabularies
@@ -331,7 +338,7 @@ def _invert_partition(
     len_parts: list[np.ndarray] = []
     key_parts: list[pa.Table] = []
     n_rows = 0
-    for tbl in tables:
+    for tbl in parts:
         frame = analyzer.analyze_batch(tbl[meta.text_col])
         tcol = frame["term"]
         if isinstance(tcol.dtype, pd.CategoricalDtype):
@@ -361,9 +368,6 @@ def _invert_partition(
         if key_parts
         else pa.table({c: pa.array([], type=pa.string()) for c in carry_cols})
     )
-    # NOTE: no in-file `seg` column — the hive dir (seg=N) IS the seg column
-    # on read (same convention as merge.py's partitionBy writes); duplicating
-    # it in-file would shadow the partition column and defeat seg-pruning.
     docs_tbl = pa.table({
         **{c: keys[c].combine_chunks().cast(key_types[c]) for c in key_cols},
         # keyword (StringField) columns are stored fields too (fetch/roll-up)
@@ -372,18 +376,6 @@ def _invert_partition(
         "length": lengths,
         "norm": norms.astype(np.int32),
     })
-    os.makedirs(os.path.join(index_dir, "docs", f"seg={seg}"), exist_ok=True)
-    _atomic_write(docs_tbl, os.path.join(index_dir, "docs", f"seg={seg}", "part-0.parquet"))
-
-    # --- seg_norms (dense per-segment norm byte array; base fixed up
-    # post-build once global counts are known) ---
-    os.makedirs(os.path.join(index_dir, "seg_norms", f"seg={seg}"), exist_ok=True)
-    norms_tbl = pa.table({
-        "base": np.array([-1], dtype=np.int64),
-        "n": np.array([n_rows], dtype=np.int64),
-        "norms": pa.array([norms.tobytes()], type=pa.binary()),
-    })
-    _atomic_write(norms_tbl, os.path.join(index_dir, "seg_norms", f"seg={seg}", "part-0.parquet"))
 
     # --- invert: sorted (term, doc, pos) → per-term blocks ---
     # unify the per-batch vocabularies (small) into one sorted global vocab,
@@ -422,8 +414,6 @@ def _invert_partition(
 
     term_bounds = np.flatnonzero(np.diff(codes, prepend=-1))  # start of each term run
     term_rows: list[tuple] = []
-    hasher = hashlib.md5()
-    n_postings = 0
     starts_all = np.append(term_bounds, len(codes))
     for ti in range(len(uniques)):
         s, e = starts_all[ti], starts_all[ti + 1]
@@ -437,10 +427,6 @@ def _invert_partition(
             doc_ids[udocs], tfs, norms[udocs].astype(np.int64),
             p if meta.positions else None,
         )
-        for blk in blocks:
-            hasher.update(blk["docs_bytes"])
-            hasher.update(blk["tfs_bytes"])
-        n_postings += len(udocs)
         term_rows.append((str(uniques[ti]), len(udocs), int(tfs.sum()), blocks))
 
     # --- keyword-field postings (StringField analog): one `\x01col:value`
@@ -448,78 +434,117 @@ def _invert_partition(
     # intersections. Doc lengths/norms/collection stats are text-only and
     # untouched (keyword terms never contribute BM25 weight). ---
     for kcol in meta.keyword_cols:
-        if n_rows:
-            import pyarrow.compute as pc
-
-            dk = pc.dictionary_encode(keys[kcol].combine_chunks().cast(pa.string()))
-            codes_raw = dk.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            vocab_raw = np.asarray(dk.dictionary.to_pylist(), dtype=object)
-            # keep sorted-vocab iteration (deterministic content hash)
-            sorter = np.argsort(vocab_raw)
-            inv = np.empty(len(sorter), dtype=np.int64)
-            inv[sorter] = np.arange(len(sorter))
-            uniq_v, codes_v = vocab_raw[sorter], inv[codes_raw]
-        else:
-            uniq_v, codes_v = np.empty(0, dtype=object), np.empty(0, dtype=np.int64)
+        dk = pc.dictionary_encode(docs_tbl[kcol].combine_chunks())
+        codes_v = dk.indices.to_numpy(zero_copy_only=False)
+        # a stable sort on the value code keeps each value's docs ascending
         order_v = np.argsort(codes_v, kind="stable")
-        sc = codes_v[order_v]
-        bounds_v = np.append(np.flatnonzero(np.diff(sc, prepend=-1)), len(sc))
-        for vi in range(len(uniq_v)):
-            d = np.sort(order_v[bounds_v[vi]:bounds_v[vi + 1]])
-            tfs_k = np.ones(len(d), dtype=np.int64)
+        bounds_v = np.append(
+            np.flatnonzero(np.diff(codes_v[order_v], prepend=-1)), len(order_v)
+        )
+        for vi, value in enumerate(dk.dictionary.to_pylist()):
+            d = order_v[bounds_v[vi]:bounds_v[vi + 1]].astype(np.int64)
             blocks = encode_posting_blocks(
-                d.astype(np.int64), tfs_k, norms[d].astype(np.int64),
+                d, np.ones(len(d), dtype=np.int64), norms[d].astype(np.int64),
                 np.zeros(len(d), dtype=np.int64) if meta.positions else None,
             )
+            term_rows.append((keyword_term(kcol, value), len(d), len(d), blocks))
+    return write_segment(index_dir, seg, meta, docs_tbl, term_rows, t0=t0)
+
+
+def write_segment(
+    index_dir: str,
+    seg: int,
+    meta: IndexMeta,
+    docs_tbl: pa.Table,
+    term_rows: list[tuple],
+    *,
+    t0: float,
+    status: str = "built",
+) -> dict:
+    """Write one segment and return its manifest row — the only segment
+    writer: builds, appends and ``expunge_deletes`` all end here.
+
+    ``docs_tbl``: the key, keyword, ``doc_local``, ``length`` and ``norm``
+    columns in local-id order. ``term_rows``: (term, df, ttf, blocks) in any
+    order; the postings file is term-sorted (pruning). The content hash
+    covers the text terms in term order (doc and tf streams), then each
+    keyword column's terms in ``meta.keyword_cols`` order and value order
+    (doc streams), so a rewritten segment hashes like a fresh build of its
+    rows. Files commit in a fixed order — docs, seg_norms, postings, bloom —
+    and the manifest marker is written LAST: a segment is complete iff its
+    marker exists."""
+    from .bloom import BLOOM_K, bloom_build
+
+    def put(root: str, tbl: pa.Table) -> None:
+        # NOTE: no in-file `seg` column — the hive dir (seg=N) IS the seg
+        # column on read; duplicating it in-file would shadow the partition
+        # column and defeat seg-pruning.
+        seg_dir = os.path.join(index_dir, root, f"seg={seg}")
+        os.makedirs(seg_dir, exist_ok=True)
+        _atomic_write(tbl, os.path.join(seg_dir, "part-0.parquet"))
+
+    term_rows = sorted(term_rows, key=lambda r: r[0])
+    hasher = hashlib.md5()
+    for term, _df, _ttf, blocks in term_rows:
+        if not term.startswith(KEYWORD_PREFIX):
             for blk in blocks:
                 hasher.update(blk["docs_bytes"])
-            n_postings += len(d)
-            term_rows.append((keyword_term(kcol, uniq_v[vi]), len(d), len(d), blocks))
-    term_rows.sort(key=lambda r: r[0])  # keep the file term-sorted (pruning)
+                hasher.update(blk["tfs_bytes"])
+    for kcol in meta.keyword_cols:
+        prefix = keyword_term(kcol, "")
+        for term, _df, _ttf, blocks in term_rows:
+            if term.startswith(prefix):
+                for blk in blocks:
+                    hasher.update(blk["docs_bytes"])
 
-    post_tbl = pa.table({
-        "term": pa.array([r[0] for r in term_rows], type=pa.string()),
+    put("docs", docs_tbl)
+    # dense per-segment norm byte array; base fixed up post-build once
+    # global counts are known
+    lengths = docs_tbl["length"].to_numpy()
+    n_rows = len(docs_tbl)
+    put("seg_norms", pa.table({
+        "base": np.array([-1], dtype=np.int64),
+        "n": np.array([n_rows], dtype=np.int64),
+        "norms": pa.array(
+            [docs_tbl["norm"].to_numpy().astype(np.uint8).tobytes()], type=pa.binary()
+        ),
+    }))
+    terms = [r[0] for r in term_rows]
+    put("postings", pa.table({
+        "term": pa.array(terms, type=pa.string()),
         "df_part": pa.array([r[1] for r in term_rows], type=pa.int64()),
         "ttf_part": pa.array([r[2] for r in term_rows], type=pa.int64()),
         "blocks": pa.array([r[3] for r in term_rows], type=_BLOCK_PA_TYPE),
-    })
-    os.makedirs(os.path.join(index_dir, "postings", f"seg={seg}"), exist_ok=True)
-    _atomic_write(post_tbl, os.path.join(index_dir, "postings", f"seg={seg}", "part-0.parquet"))
-
+    }))
     # Per-segment term bloom sidecar (BloomFilteringPostingsFormat analog,
-    # ``lucene/codecs/bloom/BloomFilteringPostingsFormat.java``): built here
-    # from the already-materialized dictionary — zero extra shuffle; the
-    # searcher prunes segments whose blooms reject every scoring term.
-    from .bloom import BLOOM_K, bloom_build
+    # ``lucene/codecs/bloom/BloomFilteringPostingsFormat.java``): built from
+    # the already-materialized dictionary; the searcher prunes segments
+    # whose blooms reject every scoring term.
+    m_bits, bloom_bytes = bloom_build(terms)
+    put("bloom", pa.table({
+        "m": pa.array([m_bits], type=pa.int64()),
+        "k": pa.array([BLOOM_K], type=pa.int32()),
+        "bits": pa.array([bloom_bytes], type=pa.binary()),
+    }))
 
-    m_bits, bloom_bytes = bloom_build([r[0] for r in term_rows])
-    os.makedirs(os.path.join(index_dir, "bloom", f"seg={seg}"), exist_ok=True)
-    _atomic_write(
-        pa.table({
-            "m": pa.array([m_bits], type=pa.int64()),
-            "k": pa.array([BLOOM_K], type=pa.int32()),
-            "bits": pa.array([bloom_bytes], type=pa.binary()),
-        }),
-        os.path.join(index_dir, "bloom", f"seg={seg}", "part-0.parquet"),
-    )
-
+    key_cols = list(meta.key_cols)
     manifest = {
         "seg": seg,
         "base": -1,  # assigned post-build (cumsum of n_docs in seg order)
         "n_docs": n_rows,
         "doc_count": int((lengths > 0).sum()),
         "n_terms": len(term_rows),
-        "n_postings": int(n_postings),
+        "n_postings": int(sum(r[1] for r in term_rows)),
         "sum_len": int(lengths.sum()),
         "content_hash": hasher.hexdigest(),
-        "status": "built",
+        "status": status,
         "build_secs": time.monotonic() - t0,
-        # the segment's key range (rows arrive key-sorted) — resume uses it
-        # to verify the re-run's partitioning reproduced the same boundaries
-        "key_min": _key_repr_tbl(keys, key_cols, 0) if n_rows else "",
-        "key_max": _key_repr_tbl(keys, key_cols, -1) if n_rows else "",
+        # the segment's key range (rows are key-sorted) — a range resume
+        # uses it to verify the re-run reproduced the same boundaries
+        "key_min": _key_repr_tbl(docs_tbl, key_cols, 0) if n_rows else "",
+        "key_max": _key_repr_tbl(docs_tbl, key_cols, -1) if n_rows else "",
     }
-    # manifest row file is the commit marker — written LAST, atomically
+    # the manifest row file is the commit marker — written LAST
     os.makedirs(os.path.join(index_dir, "manifest"), exist_ok=True)
     _atomic_write(
         pa.table({k: [v] for k, v in manifest.items()}),
@@ -528,57 +553,91 @@ def _invert_partition(
     return manifest
 
 
-def _committed_row(row: pd.DataFrame, status: str) -> pd.DataFrame:
-    """A committed segment's manifest marker row, re-labelled ``status``."""
-    row["status"] = status
-    for c in ("key_min", "key_max"):  # pre-v2 markers lack the range
-        if c not in row.columns:
-            row[c] = ""
-    return row
-
-
-def _make_kernel(
+def _resume_or_invert(
+    seg: int,
+    parts,
     meta: IndexMeta,
     index_dir: str,
     key_types: dict[str, pa.DataType],
-    seg_offset: int = 0,
-):
-    def kernel(iterator):
-        ctx = TaskContext.get()
-        seg = seg_offset + ctx.partitionId()
-        marker = os.path.join(index_dir, "manifest", f"seg={seg}.parquet")
-        if os.path.exists(marker):  # resume: segment already committed
-            row = pq.read_table(marker).to_pandas()
-            status = "resumed"
-            # committed-segment skip is only sound if THIS run's range
-            # partitioning reproduced the committed boundaries — a resume on
-            # different parallelism/input splits can shift repartitionByRange
-            # boundaries and silently drop/duplicate rows at the committed/
-            # rebuilt seam. Verify the partition's (first, last) key and row
-            # count against the recorded range; on mismatch report the
-            # segment REFUSED (no writes) and let build_index rebuild. (Costs
-            # one deserialize pass of this partition — no analysis.)
-            if "key_min" in row.columns and len(row):
-                key_cols = list(meta.key_cols)
-                first = last = None
-                n_here = 0
-                for pdf in iterator:
-                    if len(pdf):
-                        if first is None:
-                            first = _key_repr(pdf, key_cols, 0)
-                        last = _key_repr(pdf, key_cols, -1)
-                        n_here += len(pdf)
-                want = (row["key_min"].iloc[0], row["key_max"].iloc[0],
-                        int(row["n_docs"].iloc[0]))
-                if (first or "", last or "", n_here) != want:
-                    status = REFUSED
-            yield _committed_row(row, status)
-            return
-        pdfs = list(iterator)
-        manifest = _invert_partition(pdfs, seg, meta, index_dir, key_types)
-        yield pd.DataFrame([manifest])
+) -> dict:
+    """The per-segment task of both build shapes. A committed segment (its
+    manifest marker exists) comes back as its marker row with
+    ``status="resumed"`` and ``parts`` unread; any other is inverted from
+    ``parts`` (Arrow tables in key order) and written."""
+    marker = os.path.join(index_dir, "manifest", f"seg={seg}.parquet")
+    if not os.path.exists(marker):
+        return _invert_partition(parts, seg, meta, index_dir, key_types)
+    row = pq.read_table(marker).to_pylist()[0]
+    row["status"] = "resumed"
+    for c in ("key_min", "key_max"):  # pre-v2 markers lack the range
+        row.setdefault(c, "")
+    return row
 
-    return kernel
+
+def _range_invert(
+    df: DataFrame,
+    meta: IndexMeta,
+    index_dir: str,
+    n_segments: int,
+    seg_offset: int = 0,
+) -> DataFrame:
+    """The range builds' dispatch: ONE range shuffle keyed on the stable doc
+    key = segment assignment + within-segment order, consumed by a
+    mapInArrow task per partition that runs ``_resume_or_invert`` on segment
+    ``seg_offset + partition id``. DocIDs are segment-local, so no
+    persist/count prepass is needed — bases are derived from the manifest
+    afterwards (segment order == range order). Returns the (lazy) manifest
+    DataFrame."""
+    from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+    from pyspark.sql.types import StructType
+
+    key_cols = list(meta.key_cols)
+    key_types = {c: to_arrow_type(df.schema[c].dataType) for c in key_cols}
+    schema = StructType.fromDDL(MANIFEST_SCHEMA)
+    arrow_schema = to_arrow_schema(schema)
+
+    def kernel(batches):
+        seg = seg_offset + TaskContext.get().partitionId()
+        parts = (pa.Table.from_batches([b]) for b in batches)
+        row = _resume_or_invert(seg, parts, meta, index_dir, key_types)
+        # A committed-segment skip is only sound if THIS run's range
+        # partitioning reproduced the committed boundaries — a resume on
+        # different parallelism/input splits can shift repartitionByRange
+        # boundaries and silently drop/duplicate rows at the committed/
+        # rebuilt seam. The unread partition's (first, last) key and row
+        # count are checked against the recorded range; on mismatch the row
+        # says REFUSED (no writes) and build_index rebuilds. (Costs one pass
+        # over the partition's batches — no analysis.) A pre-v2 marker of a
+        # non-empty segment has no range to check.
+        if row["status"] == "resumed" and (row["key_min"] or not row["n_docs"]):
+            first, last, n_here = "", "", 0
+            for tbl in parts:
+                if len(tbl):
+                    if not n_here:
+                        first = _key_repr_tbl(tbl, key_cols, 0)
+                    last = _key_repr_tbl(tbl, key_cols, -1)
+                    n_here += len(tbl)
+            if (first, last, n_here) != (row["key_min"], row["key_max"], row["n_docs"]):
+                row["status"] = REFUSED
+        yield pa.RecordBatch.from_pylist([row], schema=arrow_schema)
+
+    return (
+        df.select(*key_cols, *meta.keyword_cols, meta.text_col)
+        .repartitionByRange(n_segments, *key_cols)
+        .sortWithinPartitions(*key_cols)
+        .mapInArrow(kernel, schema)
+    )
+
+
+def _commit(spark: SparkSession, index_dir: str, manifest: pd.DataFrame) -> DataFrame:
+    """Every writer's commit tail: bases as the cumsum of ``n_docs`` in seg
+    order, written into the seg_norms files, then the global stats. Returns
+    the manifest DataFrame."""
+    out = manifest.sort_values("seg").reset_index(drop=True)
+    out["base"] = out["n_docs"].cumsum() - out["n_docs"]
+    _fixup_bases(index_dir, out)
+    _finalize(spark, index_dir)
+    return spark.createDataFrame(out)
 
 
 def build_index(
@@ -626,21 +685,7 @@ def build_index(
     else:
         meta.save(index_dir)
 
-    cols = [*key_cols, *meta.keyword_cols, text_col]
-    # ONE range-shuffle keyed on the stable doc key = segment assignment +
-    # within-segment order, consumed directly by the invert kernel. DocIDs
-    # are segment-local, so no persist/count prepass is needed — bases are
-    # derived from the manifest afterwards (segment order == range order).
-    dfp = (
-        df.select(*cols)
-        .repartitionByRange(meta.n_segments, *key_cols)
-        .sortWithinPartitions(*key_cols)
-    )
-
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    key_types = {c: to_arrow_type(df.schema[c].dataType) for c in key_cols}
-    manifest = dfp.mapInPandas(_make_kernel(meta, index_dir, key_types), MANIFEST_SCHEMA)
+    manifest = _range_invert(df, meta, index_dir, meta.n_segments)
     out = manifest.toPandas()
     if (out["status"] == REFUSED).any():
         # Range boundaries shifted between sessions: RangePartitioner's
@@ -659,12 +704,7 @@ def build_index(
         os.makedirs(index_dir, exist_ok=True)
         meta.save(index_dir)
         out = manifest.toPandas()
-    out = out.sort_values("seg").reset_index(drop=True)
-    out["base"] = out["n_docs"].cumsum() - out["n_docs"]
-    _fixup_bases(index_dir, out)
-
-    _finalize(spark, index_dir)
-    return spark.createDataFrame(out)
+    return _commit(spark, index_dir, out)
 
 
 def build_index_presorted(
@@ -733,25 +773,17 @@ def build_index_presorted(
     columns = [*key_cols, *meta.keyword_cols, text_col]
 
     def invert_one(seg: int) -> pa.Table:
-        marker = os.path.join(index_dir, "manifest", f"seg={seg}.parquet")
-        if os.path.exists(marker):
-            row = _committed_row(pq.read_table(marker).to_pandas(), "resumed")
-            return pa.Table.from_pandas(row, preserve_index=False)
         # Arrow tables straight into the kernel — NO to_pandas(): the text
         # column never materializes as Python strings
-        parts = [pq.read_table(p, columns=columns) for p in groups[seg]]
-        manifest = _invert_partition(parts, seg, meta, index_dir, key_types)
-        return pa.Table.from_pylist([manifest])
+        parts = (pq.read_table(p, columns=columns) for p in groups[seg])
+        return pa.Table.from_pylist(
+            [_resume_or_invert(seg, parts, meta, index_dir, key_types)]
+        )
 
-    out = (
-        segment_scan(spark, list(range(n_segments)), invert_one,
-                     StructType.fromDDL(MANIFEST_SCHEMA))
-        .toPandas().sort_values("seg").reset_index(drop=True)
-    )
-    out["base"] = out["n_docs"].cumsum() - out["n_docs"]
-    _fixup_bases(index_dir, out)
-    _finalize(spark, index_dir)
-    return spark.createDataFrame(out)
+    out = segment_scan(
+        spark, list(range(n_segments)), invert_one, StructType.fromDDL(MANIFEST_SCHEMA)
+    ).toPandas()
+    return _commit(spark, index_dir, out)
 
 
 def _assert_sorted_layout(files: list[str], first_key: str) -> None:
@@ -796,37 +828,11 @@ def append_batch(
     meta = IndexMeta.load(index_dir)
     if n_segments is None:
         n_segments = spark.sparkContext.defaultParallelism
-    existing = [
-        int(f.split("=")[1].split(".")[0])
-        for f in os.listdir(os.path.join(index_dir, "manifest"))
-        if f.startswith("seg=")
-    ]
-    offset = (max(existing) + 1) if existing else 0
-
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    key_cols = list(meta.key_cols)
-    dfp = (
-        df.select(*key_cols, *meta.keyword_cols, meta.text_col)
-        .repartitionByRange(n_segments, *key_cols)
-        .sortWithinPartitions(*key_cols)
-    )
-    key_types = {c: to_arrow_type(df.schema[c].dataType) for c in key_cols}
-    manifest = dfp.mapInPandas(
-        _make_kernel(meta, index_dir, key_types, seg_offset=offset), MANIFEST_SCHEMA
-    )
-    manifest.toPandas()  # run the batch job
-
+    committed = _read_committed_manifest(index_dir)
+    offset = int(committed["seg"].max()) + 1 if committed is not None else 0
+    _range_invert(df, meta, index_dir, n_segments, seg_offset=offset).toPandas()
     # recompute bases + global stats over ALL segments (reader reopen)
-    all_rows = []
-    for f in sorted(os.listdir(os.path.join(index_dir, "manifest"))):
-        if f.startswith("seg="):
-            all_rows.append(pq.read_table(os.path.join(index_dir, "manifest", f)).to_pandas())
-    out = pd.concat(all_rows, ignore_index=True).sort_values("seg").reset_index(drop=True)
-    out["base"] = out["n_docs"].cumsum() - out["n_docs"]
-    _fixup_bases(index_dir, out)
-    _finalize(spark, index_dir)
-    return spark.createDataFrame(out)
+    return _commit(spark, index_dir, _read_committed_manifest(index_dir))
 
 
 def _fixup_bases(index_dir: str, manifest: pd.DataFrame) -> None:
@@ -864,6 +870,30 @@ def read_term_stats(spark: SparkSession, root: str) -> DataFrame:
     """The ``term_stats`` dictionary under ``root`` (an index dir or a
     commit's stats dir) — one pruned scan per lookup, no inference job."""
     return spark.read.schema(TERM_STATS_SCHEMA).parquet(os.path.join(root, "term_stats"))
+
+
+def write_term_dictionary(spark: SparkSession, term_stats: DataFrame, root: str) -> None:
+    """Write ``term_stats`` and its reversed view under ``root`` (an index
+    dir, or a split child's).
+
+    The reversed dictionary (``S/analysis/ReversedWildcardFilterFactory``
+    analog) is the same dictionary keyed by reverse(term), range-partitioned
+    and sorted on the reversed key, so a LEADING wildcard (``*ing``)
+    becomes a PREFIX range on this sidecar — parquet min/max file pruning
+    + a pushed StartsWith instead of a full-dictionary LIKE '%ing' scan.
+    Solr pays for this with a second token stream in the index; here the
+    cost is one extra sort of the (tiny relative to postings) dictionary,
+    rewritten with term_stats every time, so updates / merges / DBQ / splits
+    keep the two views consistent."""
+    term_stats.write.mode("overwrite").parquet(os.path.join(root, "term_stats"))
+    (
+        read_term_stats(spark, root)
+        .select(F.reverse(F.col("term")).alias("rterm"), "term", "df", "ttf")
+        .repartitionByRange(4, "rterm")
+        .sortWithinPartitions("rterm")
+        .write.mode("overwrite")
+        .parquet(os.path.join(root, "term_stats_rev"))
+    )
 
 
 def _finalize(spark: SparkSession, index_dir: str) -> None:
@@ -909,26 +939,7 @@ def _finalize(spark: SparkSession, index_dir: str) -> None:
             .distinct()
         )
         docs = docs.join(tomb_df, ["seg", "doc_local"], "left_anti")
-    term_stats.write.mode("overwrite").parquet(os.path.join(index_dir, "term_stats"))
-
-    # Reversed term dictionary (``S/analysis/ReversedWildcardFilterFactory``
-    # analog): the same dictionary keyed by reverse(term), range-partitioned
-    # and sorted on the reversed key, so a LEADING wildcard (``*ing``)
-    # becomes a PREFIX range on this sidecar — parquet min/max file pruning
-    # + a pushed StartsWith instead of a full-dictionary LIKE '%ing' scan.
-    # Solr pays for this with a second token stream in the index; here the
-    # cost is one extra sort of the (tiny relative to postings) dictionary,
-    # rewritten by the same _finalize that owns term_stats, so updates /
-    # merges / DBQ keep the two views consistent.
-    ts_rev = read_term_stats(spark, index_dir).select(
-        F.reverse(F.col("term")).alias("rterm"), "term", "df", "ttf"
-    )
-    (
-        ts_rev.repartitionByRange(4, "rterm")
-        .sortWithinPartitions("rterm")
-        .write.mode("overwrite")
-        .parquet(os.path.join(index_dir, "term_stats_rev"))
-    )
+    write_term_dictionary(spark, term_stats, index_dir)
 
     stats = docs.agg(
         F.count(F.lit(1)).alias("max_doc"),

@@ -302,20 +302,15 @@ def merge_segments(
     # merged index supports append_batch/resume exactly like a built one.
     # Lineage fields are the sums over the source group; content_hash chains
     # the source hashes in base order. ---
-    src_manifest = pd.concat(
-        [
-            pq.read_table(os.path.join(src_dir, "manifest", f)).to_pandas()
-            for f in sorted(os.listdir(os.path.join(src_dir, "manifest")))
-            if f.startswith("seg=")
-        ],
-        ignore_index=True,
-    ) if os.path.isdir(os.path.join(src_dir, "manifest")) else pd.DataFrame()
+    from .build import _atomic_write, _read_committed_manifest
+
+    src_manifest = _read_committed_manifest(src_dir)
+    if src_manifest is None:
+        src_manifest = pd.DataFrame()
     os.makedirs(os.path.join(dst_dir, "manifest"), exist_ok=True)
     import hashlib
 
     import pyarrow as pa
-
-    from .build import _atomic_write
 
     for row in out_layout.itertuples(index=False):
         if len(src_manifest):

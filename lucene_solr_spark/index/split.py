@@ -61,7 +61,7 @@ import shutil
 
 from pyspark.sql import SparkSession, functions as F
 
-from .build import IndexMeta, read_term_stats
+from .build import IndexMeta, write_term_dictionary
 from .updates import refresh_stats, tombstones_path
 
 # Subtrees whose files are write-once in this storage model and therefore
@@ -227,16 +227,10 @@ def _write_child_stats_single_scan(
         ).collect()
     }
     for c, cdir in enumerate(child_dirs):
-        ts = per_child_ts.filter(F.col("child") == c).select("term", "df", "ttf")
-        ts.write.mode("overwrite").parquet(os.path.join(cdir, "term_stats"))
-        ts_rev = read_term_stats(spark, cdir).select(
-            F.reverse(F.col("term")).alias("rterm"), "term", "df", "ttf"
-        )
-        (
-            ts_rev.repartitionByRange(4, "rterm")
-            .sortWithinPartitions("rterm")
-            .write.mode("overwrite")
-            .parquet(os.path.join(cdir, "term_stats_rev"))
+        write_term_dictionary(
+            spark,
+            per_child_ts.filter(F.col("child") == c).select("term", "df", "ttf"),
+            cdir,
         )
         r = per_child_stats.get(c)
         row = (

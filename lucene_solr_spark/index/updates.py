@@ -35,9 +35,12 @@ from __future__ import annotations
 
 import glob
 import os
+import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -343,18 +346,22 @@ def expunge_deletes(
     that here means per-generation segment data dirs; documented upgrade
     path, not needed for the space-reclaim use case expunge exists for.
 
-    Scale shape: postings and docs rewrite distributed, seg-partition-pruned
-    to the affected segments only; per-seg deleted-id arrays and the
-    affected segments' norm bytes (1 byte/doc) ride one broadcast. New data
-    lands in tmp dirs FIRST; the destructive per-segment swaps and the
-    manifest rewrite happen only after every new file exists (the crash
-    window between swaps is the in-place trade-off; Lucene's segments_N
-    atomicity maps to our manifest markers, rewritten last)."""
+    Scale shape: ONE dealt stage (``segment_scan``) over the affected
+    segments. Each task reads its own segment's postings and docs files,
+    drops the deleted local ids, compacts the rest, re-encodes the postings
+    and writes the segment through the build's ``write_segment`` into a
+    staging tree — so a rewritten segment is byte-identical to a fresh
+    build of its live rows, with real lineage (``content_hash``, counts,
+    key range) and ``status="expunged"``. The destructive swaps happen only
+    after every new file exists: segment dirs first, manifest markers last
+    (the crash window between swaps is the in-place trade-off; Lucene's
+    segments_N atomicity maps to our manifest markers)."""
     import shutil
 
-    import pyarrow as pa
+    from pyspark.sql.types import StructType
 
-    from .build import _atomic_write, _fixup_bases
+    from ..util.segscan import segment_scan
+    from .build import MANIFEST_SCHEMA, _commit, _read_committed_manifest
 
     tomb = load_tombstones(spark, index_dir)
     if not tomb:
@@ -373,171 +380,100 @@ def expunge_deletes(
         shutil.rmtree(commits_path(index_dir), ignore_errors=True)
 
     meta = IndexMeta.load(index_dir)
+    manifest = _read_committed_manifest(index_dir)
+    n_docs = dict(zip(manifest["seg"], manifest["n_docs"]))
     affected = sorted(tomb)
-    n_expunged = int(sum(len(v) for v in tomb.values()))
+    dropped = [s for s in affected if len(tomb[s]) >= n_docs[s]]
+    rewritten = [s for s in affected if s not in dropped]
 
-    # per-affected-seg norm bytes (for re-encoded min_norm impacts) + live
-    # compaction of the seg_norms sidecar, computed driver-side off the tiny
-    # (base, n, norms) rows
-    seg_meta: dict[int, dict] = {}
-    import pyarrow.parquet as pq
+    staging = os.path.join(index_dir, "_expunge_staging")
+    shutil.rmtree(staging, ignore_errors=True)
 
-    for seg in affected:
-        seg_dir = os.path.join(index_dir, "seg_norms", f"seg={seg}")
-        paths = sorted(glob.glob(os.path.join(seg_dir, "*.parquet")))
-        t = pa.concat_tables([pq.read_table(p) for p in paths])
-        norms = np.frombuffer(
-            b"".join(chunk.as_py() for chunk in t.column("norms")), dtype=np.uint8
-        )
-        dele = tomb[seg]
-        live_mask = np.ones(len(norms), dtype=bool)
-        live_mask[dele] = False
-        seg_meta[seg] = {
-            "base": int(t.column("base")[0].as_py()),
-            "norms": norms,
-            "live_norms": norms[live_mask].tobytes(),
-            "n_live": int(live_mask.sum()),
-            "paths": paths,
-        }
-    dropped = [s for s in affected if seg_meta[s]["n_live"] == 0]
-    rewritten = [s for s in affected if seg_meta[s]["n_live"] > 0]
+    def rewrite_one(seg: int) -> pa.Table:
+        row = _expunge_segment(index_dir, staging, seg, meta, tomb[seg])
+        return pa.Table.from_pylist([row])
 
-    tomb_bc = spark.sparkContext.broadcast(tomb)
-    norms_bc = spark.sparkContext.broadcast(
-        {s: seg_meta[s]["norms"] for s in rewritten}
-    )
-    positions = meta.positions
+    segment_scan(
+        spark, rewritten, rewrite_one, StructType.fromDDL(MANIFEST_SCHEMA)
+    ).collect()
 
-    # --- postings: decode, drop deleted docs, compact locals, re-encode ---
-    from .merge import PHASE2_SCHEMA
-
-    def post_kernel(iterator):
-        from .codec import decode_postings, encode_posting_blocks
-
-        for pdf in iterator:
-            rows = []
-            for seg, term, blocks in zip(pdf["seg"], pdf["term"], pdf["blocks"]):
-                seg = int(seg)
-                dele = tomb_bc.value[seg]
-                dec = decode_postings(list(blocks), with_positions=positions)
-                docs, tfs = dec[0], dec[1]
-                keep = ~np.isin(docs, dele, assume_unique=True)
-                if not keep.any():
-                    continue
-                new_docs = docs[keep] - np.searchsorted(dele, docs[keep])
-                tfs_k = tfs[keep]
-                pos_k = None
-                if positions:
-                    pos_k = dec[2][np.repeat(keep, tfs)]
-                norms_k = norms_bc.value[seg][docs[keep]].astype(np.int64)
-                rows.append({
-                    "term": term, "seg": seg,
-                    "df_part": int(len(new_docs)),
-                    "ttf_part": int(tfs_k.sum()),
-                    "blocks": encode_posting_blocks(new_docs, tfs_k, norms_k, pos_k),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["term", "seg", "df_part", "ttf_part", "blocks"],
-            )
-
-    tmp_post = os.path.join(index_dir, "_expunge_tmp_postings")
-    (
-        spark.read.parquet(os.path.join(index_dir, "postings"))
-        .filter(F.col("seg").isin(rewritten))
-        .mapInPandas(post_kernel, PHASE2_SCHEMA)
-        .repartitionByRange(max(1, len(rewritten)), "seg", "term")
-        .sortWithinPartitions("seg", "term")
-        .write.mode("overwrite").partitionBy("seg")
-        .parquet(tmp_post)
-    )
-
-    # --- docs table: drop deleted rows, compact doc_local ---
-    docs_df = spark.read.parquet(os.path.join(index_dir, "docs"))
-    docs_schema = docs_df.schema
-
-    def docs_kernel(iterator):
-        for pdf in iterator:
-            outs = []
-            for seg, g in pdf.groupby("seg"):
-                dele = tomb_bc.value[int(seg)]
-                loc = g["doc_local"].to_numpy(dtype=np.int64)
-                keep = ~np.isin(loc, dele, assume_unique=False)
-                g2 = g[keep].copy()
-                g2["doc_local"] = loc[keep] - np.searchsorted(dele, loc[keep])
-                outs.append(g2)
-            yield (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pdf.iloc[0:0]
-            )
-
-    tmp_docs = os.path.join(index_dir, "_expunge_tmp_docs")
-    (
-        docs_df.filter(F.col("seg").isin(rewritten))
-        .mapInPandas(docs_kernel, docs_schema)
-        .write.mode("overwrite").partitionBy("seg")
-        .parquet(tmp_docs)
-    )
-
-    # --- destructive phase: per-segment swaps, then metadata, tombstones ---
+    # --- destructive phase: segment dirs, dropped segments, then markers ---
+    roots = ("postings", "docs", "seg_norms", "bloom")
     for seg in rewritten:
-        for root, tmp in (("postings", tmp_post), ("docs", tmp_docs)):
+        for root in roots:
             old = os.path.join(index_dir, root, f"seg={seg}")
-            new = os.path.join(tmp, f"seg={seg}")
-            shutil.rmtree(old)
-            shutil.move(new, old)
-        # compacted norms (base rewritten by _fixup_bases below)
-        sm = seg_meta[seg]
-        _atomic_write(
-            pa.table({
-                "base": np.array([sm["base"]], dtype=np.int64),
-                "n": np.array([sm["n_live"]], dtype=np.int64),
-                "norms": pa.array([sm["live_norms"]], type=pa.binary()),
-            }),
-            sm["paths"][0],
-        )
-        for p in sm["paths"][1:]:
-            os.remove(p)
-    shutil.rmtree(tmp_post, ignore_errors=True)
-    shutil.rmtree(tmp_docs, ignore_errors=True)
+            shutil.rmtree(old, ignore_errors=True)
+            shutil.move(os.path.join(staging, root, f"seg={seg}"), old)
     for seg in dropped:
-        for root in ("postings", "docs", "seg_norms", "bloom"):
-            p = os.path.join(index_dir, root, f"seg={seg}")
-            if os.path.isdir(p):
-                shutil.rmtree(p)
+        for root in roots:
+            shutil.rmtree(os.path.join(index_dir, root, f"seg={seg}"), ignore_errors=True)
         os.remove(os.path.join(index_dir, "manifest", f"seg={seg}.parquet"))
-
-    # manifest: live counts for rewritten segs; lineage degrades to unknown
-    # (the content no longer matches the recorded build) — merge's rule
     for seg in rewritten:
-        mp = os.path.join(index_dir, "manifest", f"seg={seg}.parquet")
-        row = pq.read_table(mp).to_pandas().iloc[0].to_dict()
-        row.update(
-            n_docs=seg_meta[seg]["n_live"], doc_count=-1, n_terms=-1,
-            n_postings=-1, sum_len=-1, content_hash="", status="expunged",
+        name = f"seg={seg}.parquet"
+        os.replace(
+            os.path.join(staging, "manifest", name),
+            os.path.join(index_dir, "manifest", name),
         )
-        _atomic_write(pa.table({k: [v] for k, v in row.items()}), mp)
-
+    shutil.rmtree(staging, ignore_errors=True)
     shutil.rmtree(tombstones_path(index_dir), ignore_errors=True)
 
-    # bases: cumsum over seg-ordered manifest rows (append_batch's rule) —
-    # live global ids compact but keep their relative order
-    rows = []
-    for f in sorted(os.listdir(os.path.join(index_dir, "manifest"))):
-        if f.startswith("seg="):
-            rows.append(
-                pq.read_table(os.path.join(index_dir, "manifest", f)).to_pandas()
-            )
-    out = pd.concat(rows, ignore_index=True).sort_values("seg").reset_index(drop=True)
-    out["base"] = out["n_docs"].cumsum() - out["n_docs"]
-    _fixup_bases(index_dir, out)
-    _finalize(spark, index_dir)
+    # bases: cumsum over seg-ordered manifest rows — live global ids
+    # compact but keep their relative order
+    _commit(spark, index_dir, _read_committed_manifest(index_dir))
     return {
-        "expunged_docs": n_expunged,
+        "expunged_docs": int(sum(len(v) for v in tomb.values())),
         "rewritten_segs": rewritten,
         "dropped_segs": dropped,
     }
+
+
+def _expunge_segment(
+    index_dir: str, staging: str, seg: int, meta: IndexMeta, dele: np.ndarray
+) -> dict:
+    """One expunge task: segment ``seg`` without the local ids ``dele``
+    (sorted, unique), written into ``staging`` by ``write_segment``. Live
+    local ids compact monotonically (new = old − #deleted below), and each
+    term's postings re-encode with the kept docs' norms; terms left with no
+    live doc disappear."""
+    from .build import write_segment
+    from .codec import encode_posting_blocks
+
+    t0 = time.monotonic()
+
+    def read(root: str) -> pa.Table:
+        seg_dir = os.path.join(index_dir, root, f"seg={seg}")
+        return pa.concat_tables(
+            [pq.read_table(p) for p in sorted(glob.glob(os.path.join(seg_dir, "*.parquet")))]
+        )
+
+    docs = read("docs")
+    # local ids are dense (0..n-1): in local-id order, row i is doc i
+    docs = docs.take(np.argsort(docs["doc_local"].to_numpy(), kind="stable"))
+    norm_of = docs["norm"].to_numpy().astype(np.int64)
+    live = docs.filter(pa.array(~np.isin(np.arange(len(docs)), dele))).combine_chunks()
+    docs_tbl = pa.table({
+        **{c: live[c] for c in (*meta.key_cols, *meta.keyword_cols)},
+        "doc_local": np.arange(len(live), dtype=np.int64),
+        "length": live["length"],
+        "norm": live["norm"],
+    })
+
+    post = read("postings")
+    term_rows = []
+    for term, blocks in zip(post["term"].to_pylist(), post["blocks"].to_pylist()):
+        dec = decode_postings(blocks, with_positions=meta.positions)
+        d, tfs = dec[0], dec[1]
+        keep = ~np.isin(d, dele, assume_unique=True)
+        if not keep.any():
+            continue
+        kept, tfs_k = d[keep], tfs[keep]
+        term_rows.append((term, len(kept), int(tfs_k.sum()), encode_posting_blocks(
+            kept - np.searchsorted(dele, kept), tfs_k, norm_of[kept],
+            dec[2][np.repeat(keep, tfs)] if meta.positions else None,
+        )))
+    return write_segment(
+        staging, seg, meta, docs_tbl, term_rows, t0=t0, status="expunged"
+    )
 
 
 # --- in-place numeric DocValues updates -------------------------------------

@@ -28,7 +28,9 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..search.query import BooleanSpec, PhraseClause, TermClause
+from ..search.query import (
+    BooleanSpec, MultiPhraseClause, OrGroupClause, PhraseClause, TermClause,
+)
 
 
 def match_frame(
@@ -38,14 +40,18 @@ def match_frame(
     frame against every registry spec. Returns (row, query_id) pairs.
     Match semantics are the index engine's: term = tf ≥ 1, MUST = all,
     SHOULD honors minimumNumberShouldMatch (≥1 when no MUST), MUST_NOT
-    excludes, phrase = offset-exact positions (stop holes preserved)."""
+    excludes, phrase = offset-exact positions (stop holes preserved; a
+    multi-phrase slot admits any member), OR group = any member term."""
     needed: set[str] = set()
     for spec in registry.values():
         for group in (spec.must, spec.should, spec.must_not):
             for c in group:
-                needed.update(
-                    c.terms if isinstance(c, PhraseClause) else (c.term,)
-                )
+                if isinstance(c, MultiPhraseClause):
+                    needed.update(t for slot in c.slots for t in slot)
+                elif isinstance(c, (PhraseClause, OrGroupClause)):
+                    needed.update(c.terms)
+                elif isinstance(c, TermClause):
+                    needed.add(c.term)
     by_term: dict[str, tuple[np.ndarray, np.ndarray]] = {}
     if len(frame):
         terms = frame["term"].astype(str).to_numpy()
@@ -65,17 +71,21 @@ def match_frame(
         hit = by_term.get(t)
         return set(hit[0].tolist()) if hit is not None else set()
 
-    def phrase_rows(c: PhraseClause) -> set[int]:
-        # rows where some anchor position p has term_i at p + (off_i - off_0)
+    def phrase_rows(slots, offsets) -> set[int]:
+        # rows where some anchor position p has a member of slot i at
+        # p + (off_i - off_0)
         acc: dict[int, set[int]] | None = None   # row -> anchor positions
-        for t, off in zip(c.terms, c.offsets):
-            hit = by_term.get(t)
-            if hit is None:
-                return set()
+        for members, off in zip(slots, offsets):
             anchors: dict[int, set[int]] = {}
-            delta = off - c.offsets[0]
-            for r, p in zip(hit[0].tolist(), hit[1].tolist()):
-                anchors.setdefault(r, set()).add(p - delta)
+            delta = off - offsets[0]
+            for t in members:
+                hit = by_term.get(t)
+                if hit is None:
+                    continue
+                for r, p in zip(hit[0].tolist(), hit[1].tolist()):
+                    anchors.setdefault(r, set()).add(p - delta)
+            if not anchors:
+                return set()
             if acc is None:
                 acc = anchors
             else:
@@ -90,9 +100,13 @@ def match_frame(
 
     def clause_rows(c) -> set[int]:
         if isinstance(c, PhraseClause):
-            return phrase_rows(c)
+            return phrase_rows([(t,) for t in c.terms], c.offsets)
+        if isinstance(c, MultiPhraseClause):
+            return phrase_rows(c.slots, c.offsets)
         if isinstance(c, TermClause):
             return term_rows(c.term)
+        if isinstance(c, OrGroupClause):
+            return set().union(*map(term_rows, c.terms))
         raise TypeError(f"streaming monitor: unsupported clause {type(c).__name__}")
 
     out: list[tuple[int, str]] = []
@@ -132,12 +146,16 @@ class Presearcher:
     - conjunction (MUST): ONE representative term suffices — the longest
       term of one clause (the ``TermWeightor`` length heuristic standing in
       for idf; a phrase clause's representative is its longest member, since
-      a phrase match implies every member present);
+      a phrase match implies every member present). Conjuncts with no
+      representative (``OrGroupClause``, ``MultiPhraseClause``) are passed
+      over;
     - disjunction (SHOULD, any minShouldMatch ≥ 1): the union of every
       disjunct's representative (a match satisfies ≥1 disjunct, so its
-      representative is present);
-    - queries with no positive clause (pure MUST_NOT / match-all): the
-      ``ANYTOKEN`` fallback — always a candidate, exactly the reference's
+      representative is present) — if any disjunct has none, there is no
+      such set;
+    - queries with no positive clause (pure MUST_NOT / match-all), or for
+      which the rules above give no set: the ``ANYTOKEN`` fallback — always
+      a candidate, exactly the reference's
       ``TermFilteredPresearcher#ANYTOKEN_FIELD`` escape hatch.
 
     Per document batch, candidates = queries whose representative set
@@ -164,21 +182,23 @@ class Presearcher:
         self._qids = [term_to_qids[t] for t in self._terms]
 
     @staticmethod
-    def _clause_rep(c) -> str:
+    def _clause_rep(c) -> str | None:
         if isinstance(c, PhraseClause):
             return max(c.terms, key=len)     # all members present ⇒ any works
         if isinstance(c, TermClause):
             return c.term
-        raise TypeError(f"presearcher: unsupported clause {type(c).__name__}")
+        return None                           # no extraction rule (OrGroup, …)
 
     @classmethod
     def _representatives(cls, spec: BooleanSpec) -> set[str] | None:
         if spec.must:
             # one conjunct suffices; pick the clause with the longest rep
-            return {max((cls._clause_rep(c) for c in spec.must), key=len)}
-        if spec.should:
-            return {cls._clause_rep(c) for c in spec.should}
-        return None                           # no positive clause → ANYTOKEN
+            reps = [r for r in map(cls._clause_rep, spec.must) if r is not None]
+            return {max(reps, key=len)} if reps else None
+        reps = [cls._clause_rep(c) for c in spec.should]
+        if not reps or None in reps:
+            return None                       # → ANYTOKEN: always a candidate
+        return set(reps)
 
     def candidates(self, frame: pd.DataFrame) -> dict[str, BooleanSpec]:
         """Registry subset worth evaluating against this analyzed batch."""

@@ -11,6 +11,13 @@ def spark():
     from lucene_solr_spark.session import get_spark
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
+    # the job-count tests read stage infos from the status tracker; keep
+    # every job and stage of the session there (by default Spark trims its
+    # status store to the last 1,000 of each)
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.ui.retainedJobs=100000 --conf spark.ui.retainedStages=100000 "
+        + os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    )
     spark = get_spark("lucene_solr_spark-tests", cpus=4)
     yield spark
 

@@ -9,9 +9,12 @@ observable change. Fully-deleted segments are dropped; retained commit
 points gate the rewrite.
 """
 
+import glob
 import os
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from lucene_solr_spark.datagen import generate_queries, generate_transcripts
@@ -24,6 +27,7 @@ from lucene_solr_spark.index.updates import (
     load_tombstones,
 )
 from lucene_solr_spark.search.searcher import IndexSearcher
+from test_segment_task import _job_counts
 
 
 @pytest.fixture(scope="module")
@@ -130,3 +134,71 @@ def test_append_after_expunge(spark, corpus, tmp_path):
     rep = check_index(spark, idx).toPandas()
     assert rep["violations"].map(len).sum() == 0
     assert len(_ranked(spark, idx))
+
+
+def _keyword_index_with_deletes(spark, corpus, idx):
+    """A 4-segment index with a ``role`` keyword field and deletes spread
+    over every segment; returns the deleted keys."""
+    build_index(spark, spark.createDataFrame(corpus), idx, n_segments=4,
+                keyword_cols=("role",))
+    victims = corpus[["conv_id", "turn_idx"]].iloc[7::9]
+    assert delete_docs(spark, idx, spark.createDataFrame(victims)) == len(victims)
+    return victims
+
+
+def _seg_table(idx, root, seg):
+    return pa.concat_tables([
+        pq.read_table(p)
+        for p in sorted(glob.glob(os.path.join(idx, root, f"seg={seg}", "*.parquet")))
+    ])
+
+
+def test_expunged_segment_equals_fresh_build_of_its_live_rows(spark, corpus, tmp_path):
+    """A rewritten segment is the segment a fresh build of its live rows
+    writes: the same postings, docs, bloom and norms table contents, and the
+    same lineage (counts and content hash) in its manifest marker."""
+    idx = str(tmp_path / "idx")
+    victims = _keyword_index_with_deletes(spark, corpus, idx)
+    keys = ["conv_id", "turn_idx"]
+    seg_keys = {
+        seg: _seg_table(idx, "docs", seg).select(keys).to_pandas()
+        for seg in range(4)
+    }
+    report = expunge_deletes(spark, idx)
+    seg = report["rewritten_segs"][1]
+    live = seg_keys[seg].merge(victims, on=keys, how="left", indicator=True)
+    live = live[live["_merge"] == "left_only"][keys]
+    rows = corpus.merge(live, on=keys)
+    fresh = str(tmp_path / "fresh")
+    build_index(spark, spark.createDataFrame(rows), fresh, n_segments=1,
+                keyword_cols=("role",))
+
+    for root in ("postings", "docs", "bloom"):
+        assert _seg_table(idx, root, seg).equals(_seg_table(fresh, root, 0)), root
+    assert _seg_table(idx, "seg_norms", seg).drop(["base"]).equals(
+        _seg_table(fresh, "seg_norms", 0).drop(["base"])
+    )
+    got = pq.read_table(os.path.join(idx, "manifest", f"seg={seg}.parquet")).to_pylist()[0]
+    want = pq.read_table(os.path.join(fresh, "manifest", "seg=0.parquet")).to_pylist()[0]
+    lineage = ("n_docs", "doc_count", "n_terms", "n_postings", "sum_len", "content_hash")
+    assert {c: got[c] for c in lineage} == {c: want[c] for c in lineage}
+    assert got["status"] == "expunged"
+    rep = check_index(spark, idx).toPandas()
+    assert rep["violations"].map(len).sum() == 0
+
+
+def test_expunge_runs_one_rewrite_stage(spark, corpus, tmp_path):
+    """Expunge is the tombstone load, ONE dealt rewrite stage and the stats
+    refresh — no shuffle-and-write jobs per index table."""
+    idx = str(tmp_path / "idx")
+    _keyword_index_with_deletes(spark, corpus, idx)
+    sc = spark.sparkContext
+    sc.setJobGroup("expunge", "expunge_deletes")
+    try:
+        report = expunge_deletes(spark, idx)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert report["rewritten_segs"]
+    jobs, _, _ = _job_counts(sc, "expunge")
+    assert jobs <= 9, jobs

@@ -178,16 +178,63 @@ def test_kernel_error_mentioning_refusal_keeps_committed_segments(spark, small_c
     sdf = spark.createDataFrame(small_corpus)
     build_index(spark, sdf, idx, n_segments=4)
     os.remove(os.path.join(idx, "manifest", "seg=2.parquet"))
-    # a directory where segment 2's first file write goes blocks the rebuild
-    os.makedirs(os.path.join(idx, "docs", "seg=2", "part-0.parquet.tmp"))
+    # a directory where segment 2's first file goes blocks the rebuild
+    blocked = os.path.join(idx, "docs", "seg=2", "part-0.parquet")
+    os.remove(blocked)
+    os.makedirs(blocked)
     committed = {}
     for p in glob.glob(os.path.join(idx, "manifest", "seg=*.parquet")):
         with open(p, "rb") as f:
             committed[p] = f.read()
-    with pytest.raises(Exception, match="part-0.parquet.tmp"):
+    with pytest.raises(Exception, match="part-0.parquet"):
         build_index(spark, sdf, idx, n_segments=4)
     left = {}
     for p in glob.glob(os.path.join(idx, "manifest", "seg=*.parquet")):
         with open(p, "rb") as f:
             left[p] = f.read()
     assert len(committed) == 3 and left == committed
+
+
+def test_two_writers_of_one_path_each_commit_a_complete_file(tmp_path, monkeypatch):
+    """A failed build's straggler task and its rebuild can write the same
+    segment file at once. Writer A pauses between its tmp write and its
+    rename while writer B writes and renames: both renames succeed (each
+    writer owns its tmp name) and the file holds one writer's whole table."""
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lucene_solr_spark.index import build
+
+    real = pq.write_table
+    paused, go = threading.Event(), threading.Event()
+
+    def write_table(table, where, **kw):
+        real(table, where, **kw)
+        if threading.current_thread().name == "A":
+            paused.set()
+            go.wait(30)
+
+    monkeypatch.setattr(pq, "write_table", write_table)
+    path = str(tmp_path / "part-0.parquet")
+    ta = pa.table({"x": np.arange(1000, dtype=np.int64)})
+    tb = pa.table({"x": np.arange(7, dtype=np.int64)})
+    errors = []
+
+    def write_a():
+        try:
+            build._atomic_write(ta, path)
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    a = threading.Thread(target=write_a, name="A")
+    a.start()
+    assert paused.wait(30)
+    build._atomic_write(tb, path)
+    go.set()
+    a.join(30)
+    assert not a.is_alive()
+    assert errors == []
+    assert pq.read_table(path).equals(ta)  # A renamed last
+    assert os.listdir(tmp_path) == ["part-0.parquet"]

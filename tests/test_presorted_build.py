@@ -96,9 +96,9 @@ def test_dealt_build_resumes_after_a_failed_task(spark, sorted_files, tmp_path):
     idx = tmp_path / "idx"
     # task 0 is dealt segments 0, n_tasks, …; a directory where segment
     # n_tasks writes its first file blocks that write (root ignores chmod)
-    blocker = idx / "docs" / f"seg={n_tasks}" / "part-0.parquet.tmp"
+    blocker = idx / "docs" / f"seg={n_tasks}" / "part-0.parquet"
     blocker.mkdir(parents=True)
-    with pytest.raises(Exception, match="part-0.parquet.tmp"):
+    with pytest.raises(Exception, match="part-0.parquet"):
         build_index_presorted(spark, src_dir, str(idx))
     markers = idx / "manifest"
     assert (markers / "seg=0.parquet").exists()

@@ -166,3 +166,35 @@ def test_batch_monitor_presearch_prunes_and_matches_identically(spark):
 
     all_dormant = {f"d{i}": ("and2", (f"zzqc{i}", f"zzqd{i}"), 0) for i in range(5)}
     assert eng.monitor_matches(all_dormant).count() == 0
+
+
+def test_presearcher_falls_back_to_anytoken_on_or_group_and_multiphrase():
+    """A positive clause with no representative-term rule (a nested OR
+    group, a multi-phrase) makes its query an ANYTOKEN candidate instead of
+    failing the registry — unless a sibling MUST clause has a
+    representative, which alone prunes soundly; the pruned match equals the
+    exhaustive one."""
+    import pandas as pd
+
+    from lucene_solr_spark.index.build import ANALYZERS
+    from lucene_solr_spark.search.query import (
+        BooleanSpec, MultiPhraseClause, OrGroupClause, TermClause,
+    )
+    from lucene_solr_spark.streaming.monitor import Presearcher, match_frame
+
+    an = ANALYZERS["simple"]()
+    registry = {
+        "grp": BooleanSpec(must=[TermClause("alpha"), OrGroupClause(("beta", "delta"))]),
+        "grp_should": BooleanSpec(should=[OrGroupClause(("gamma", "zzabsent"))]),
+        "mphr": BooleanSpec(must=[MultiPhraseClause((("only",), ("delta", "beta")), (0, 1))]),
+        "term": BooleanSpec(must=[TermClause("nothing")]),
+    }
+    pre = Presearcher(registry)
+    assert sorted(pre.anytoken) == ["grp_should", "mphr"]
+    assert "grp" not in pre.anytoken and "grp" not in pre.candidates_from_terms({"beta"})
+    texts = pd.Series(["alpha beta here", "only delta here", "gamma alpha", "nothing else"])
+    frame = an.analyze_batch(texts)
+    pairs, n_eval = pre.match(frame, len(texts))
+    assert n_eval == 4
+    assert sorted(pairs) == sorted(match_frame(frame, len(texts), registry))
+    assert sorted(pairs) == [(0, "grp"), (1, "mphr"), (2, "grp_should"), (3, "term")]
