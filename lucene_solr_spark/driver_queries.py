@@ -875,7 +875,7 @@ def fulltext_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         min_should=calculate_min_should_match(len(MM_SPEC_TERMS), MM_SPEC),
     )
     # TieredMergePolicy round: size-tier selection (find_merges) + the
-    # plan-driven salted two-phase merge — results bitwise invariant
+    # plan-driven merge_segments — results bitwise invariant
     out["ft_tiered_merge_topk"] = lambda spark, sf_dir: tiered_merge_topk(
         spark, sf_dir, "or3", ["vector", "stream", "filter"], k=10
     )

@@ -4013,7 +4013,7 @@ def get_addindexes_searcher(
         get_engine(spark, sf_dir, analyzer, shard_recipe(s, 2)).index_dir
         for s in range(2)
     ]
-    tag = hashlib.md5(("|".join(shard_dirs) + "|v1").encode()).hexdigest()[:16]
+    tag = hashlib.md5(("|".join(shard_dirs) + "|v2").encode()).hexdigest()[:16]
     dst = _publish(
         _cache_dir(f"addidx-{analyzer}-{tag}"),
         lambda tmp: add_indexes(spark, shard_dirs, tmp),
@@ -4051,7 +4051,7 @@ def get_tiered_searcher(
 ) -> IndexSearcher:
     """Searcher over one TieredMergePolicy round applied to the base
     documents index (``index/merge.find_merges`` selection +
-    plan-driven salted two-phase merge): the 8 build segments fold by
+    plan-driven ``merge_segments``): the 8 build segments fold by
     size tiers into fewer doc-contiguous segments, results bitwise
     invariant."""
     from .index.merge import tiered_merge
@@ -4063,7 +4063,7 @@ def get_tiered_searcher(
         if all(len(g) == 1 for g in plan):
             raise RuntimeError("tiered fixture merged nothing")
 
-    tag = hashlib.md5((base_dir + "|tiered|v2").encode()).hexdigest()[:16]
+    tag = hashlib.md5((base_dir + "|tiered|v3").encode()).hexdigest()[:16]
     dst = _publish(_cache_dir(f"tiered-{analyzer}-{tag}"), merge)
     return _memo(dst, lambda: IndexSearcher(spark, dst))
 

@@ -17,10 +17,11 @@ segment flush → background merge → commit point. Spark shape:
   driver   → global term_stats / stats aggregation                (TermStates#build)
              reading the index tables with their known schemas
 
-One writer: every segment — built, appended, or rewritten by
-``updates.expunge_deletes`` — is written by ``write_segment``, which owns
-the segment layout, its content hash and its commit order (docs →
-seg_norms → postings → bloom → manifest marker last). Both build shapes
+One writer: every segment — built, appended, rewritten by
+``updates.expunge_deletes`` or merged by ``merge.merge_segments`` — is
+written by ``write_segment``, which owns the segment layout, its content
+hash and its commit order (docs → seg_norms → postings → bloom → manifest
+marker last). Both build shapes
 run the same per-segment task, ``_resume_or_invert``, on Arrow batches.
 
 Design decisions for 100 TB scale:
@@ -49,6 +50,7 @@ Reference analogs: ``L/index/DefaultIndexingChain#processField`` (invert),
 from __future__ import annotations
 
 import contextlib
+import glob
 import hashlib
 import json
 import os
@@ -451,6 +453,17 @@ def _invert_partition(
     return write_segment(index_dir, seg, meta, docs_tbl, term_rows, t0=t0)
 
 
+def postings_table(term_rows: list[tuple]) -> pa.Table:
+    """(term, df, ttf, blocks) rows as a postings table — the hive dir
+    ``seg=N`` supplies the ``seg`` column."""
+    return pa.table({
+        "term": pa.array([r[0] for r in term_rows], type=pa.string()),
+        "df_part": pa.array([r[1] for r in term_rows], type=pa.int64()),
+        "ttf_part": pa.array([r[2] for r in term_rows], type=pa.int64()),
+        "blocks": pa.array([r[3] for r in term_rows], type=_BLOCK_PA_TYPE),
+    })
+
+
 def write_segment(
     index_dir: str,
     seg: int,
@@ -462,7 +475,8 @@ def write_segment(
     status: str = "built",
 ) -> dict:
     """Write one segment and return its manifest row — the only segment
-    writer: builds, appends and ``expunge_deletes`` all end here.
+    writer: builds, appends, ``expunge_deletes`` and ``merge_segments`` all
+    end here.
 
     ``docs_tbl``: the key, keyword, ``doc_local``, ``length`` and ``norm``
     columns in local-id order. ``term_rows``: (term, df, ttf, blocks) in any
@@ -510,12 +524,7 @@ def write_segment(
         ),
     }))
     terms = [r[0] for r in term_rows]
-    put("postings", pa.table({
-        "term": pa.array(terms, type=pa.string()),
-        "df_part": pa.array([r[1] for r in term_rows], type=pa.int64()),
-        "ttf_part": pa.array([r[2] for r in term_rows], type=pa.int64()),
-        "blocks": pa.array([r[3] for r in term_rows], type=_BLOCK_PA_TYPE),
-    }))
+    put("postings", postings_table(term_rows))
     # Per-segment term bloom sidecar (BloomFilteringPostingsFormat analog,
     # ``lucene/codecs/bloom/BloomFilteringPostingsFormat.java``): built from
     # the already-materialized dictionary; the searcher prunes segments
@@ -551,6 +560,19 @@ def write_segment(
         os.path.join(index_dir, "manifest", f"seg={seg}.parquet"),
     )
     return manifest
+
+
+def read_segment(index_dir: str, root: str, seg: int) -> pa.Table:
+    """Every file of segment ``seg`` under ``root`` as one pyarrow table (no
+    hive ``seg`` column). A docs table comes back in local-id order: local
+    ids are dense, so row i is doc i."""
+    seg_dir = os.path.join(index_dir, root, f"seg={seg}")
+    tbl = pa.concat_tables(
+        [pq.read_table(p) for p in sorted(glob.glob(os.path.join(seg_dir, "*.parquet")))]
+    )
+    if root == "docs":
+        tbl = tbl.take(np.argsort(tbl["doc_local"].to_numpy(), kind="stable"))
+    return tbl
 
 
 def _resume_or_invert(
@@ -737,14 +759,12 @@ def build_index_presorted(
     Segments are FIXED file groups, so no partitioning drift can mis-seam a
     resume.
     """
-    import glob as _glob
-
     from pyspark.sql.pandas.types import from_arrow_type, to_arrow_type
     from pyspark.sql.types import StructType
 
     from ..util.segscan import segment_scan
 
-    files = sorted(_glob.glob(os.path.join(input_path, "*.parquet")))
+    files = sorted(glob.glob(os.path.join(input_path, "*.parquet")))
     if not files:
         raise ValueError(f"no parquet files under {input_path}")
     _assert_sorted_layout(files, key_cols[0])
@@ -838,13 +858,10 @@ def append_batch(
 def _fixup_bases(index_dir: str, manifest: pd.DataFrame) -> None:
     """Write the derived global base into each (tiny) seg_norms file.
     Idempotent — bases are a pure function of the manifest row counts.
-    Segment files are discovered by glob (build writes ``part-0.parquet``,
-    ``merge_segments`` may leave differently named files)."""
-    import glob as _glob
-
+    Segment files are discovered by glob."""
     for seg, base in manifest[["seg", "base"]].itertuples(index=False):
         seg_dir = os.path.join(index_dir, "seg_norms", f"seg={seg}")
-        paths = sorted(_glob.glob(os.path.join(seg_dir, "*.parquet")))
+        paths = sorted(glob.glob(os.path.join(seg_dir, "*.parquet")))
         if not paths:
             raise FileNotFoundError(f"no seg_norms file for seg={seg} under {seg_dir}")
         t = pa.concat_tables([pq.read_table(p) for p in paths])

@@ -40,7 +40,6 @@ import time
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -435,20 +434,11 @@ def _expunge_segment(
     local ids compact monotonically (new = old − #deleted below), and each
     term's postings re-encode with the kept docs' norms; terms left with no
     live doc disappear."""
-    from .build import write_segment
+    from .build import read_segment, write_segment
     from .codec import encode_posting_blocks
 
     t0 = time.monotonic()
-
-    def read(root: str) -> pa.Table:
-        seg_dir = os.path.join(index_dir, root, f"seg={seg}")
-        return pa.concat_tables(
-            [pq.read_table(p) for p in sorted(glob.glob(os.path.join(seg_dir, "*.parquet")))]
-        )
-
-    docs = read("docs")
-    # local ids are dense (0..n-1): in local-id order, row i is doc i
-    docs = docs.take(np.argsort(docs["doc_local"].to_numpy(), kind="stable"))
+    docs = read_segment(index_dir, "docs", seg)
     norm_of = docs["norm"].to_numpy().astype(np.int64)
     live = docs.filter(pa.array(~np.isin(np.arange(len(docs)), dele))).combine_chunks()
     docs_tbl = pa.table({
@@ -458,7 +448,7 @@ def _expunge_segment(
         "norm": live["norm"],
     })
 
-    post = read("postings")
+    post = read_segment(index_dir, "postings", seg)
     term_rows = []
     for term, blocks in zip(post["term"].to_pylist(), post["blocks"].to_pylist()):
         dec = decode_postings(blocks, with_positions=meta.positions)

@@ -1,8 +1,11 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode defaults match the sandbox (local[32], single JVM); the same
-settings are what we'd ship in spark-defaults for a multi-executor cluster —
-AQE on, Arrow on, shuffle partitions sized to cores (overridable by env).
+Local mode runs one JVM at local[cpus]: ``cpus`` defaults to
+``SPARK_GRAFT_CPUS``, else to the CPUs this process may run on
+(``os.sched_getaffinity``), so a caller that passes nothing matches the
+host. The same settings are what we'd ship in spark-defaults for a
+multi-executor cluster — AQE on, Arrow on, shuffle partitions sized to
+cores (overridable by env).
 """
 
 from __future__ import annotations
@@ -14,7 +17,7 @@ from pyspark.sql import SparkSession
 
 def get_spark(app_name: str = "lucene_solr_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

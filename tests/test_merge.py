@@ -1,5 +1,5 @@
 """Merge invariance (SURVEY.md §5.2-7): an index merged K→M segments —
-including the salted two-phase path and conservative impacts — must return
+including salted sub-ranges whose block lists stack mid-list — must return
 IDENTICAL query results (docIDs and float32 scores) on the full reference
 query set, for both the exact and the block-max-WAND scorers.
 
@@ -7,12 +7,21 @@ Reference analog: ``SegmentMerger`` output must be CheckIndex-clean and
 search-equivalent; ``TestWANDScorer``-style pruning-never-changes-results.
 """
 
+import glob
+import os
+import shutil
+import warnings
+
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
-from lucene_solr_spark.datagen import generate_queries
+from lucene_solr_spark.datagen import generate_queries, generate_transcripts
+from lucene_solr_spark.index.build import build_index
 from lucene_solr_spark.index.merge import merge_segments
 from lucene_solr_spark.search.searcher import IndexSearcher
+from test_segment_task import _job_counts
 
 
 @pytest.fixture(scope="module")
@@ -21,7 +30,7 @@ def merged_dirs(spark, small_index, tmp_path_factory):
     d2 = str(tmp_path_factory.mktemp("merge") / "m2")
     d1 = str(tmp_path_factory.mktemp("merge") / "m1")
     merge_segments(spark, src, d2, n_out=2, salt=2)
-    merge_segments(spark, src, d1, n_out=1, salt=4, conservative_impacts=True)
+    merge_segments(spark, src, d1, n_out=1, salt=4)
     return src, d2, d1
 
 
@@ -226,3 +235,93 @@ def test_tiered_noop_round_is_file_copy(spark, small_index, tmp_path_factory):
     assert all(len(g) == 1 for g in plan)
     cmp = filecmp.dircmp(os.path.join(src, "postings"), os.path.join(dst, "postings"))
     assert not cmp.diff_files and not cmp.left_only and not cmp.right_only
+
+
+# --- merge through the one segment writer -----------------------------------
+
+def _seg_table(index_dir, root, seg):
+    seg_dir = os.path.join(index_dir, root, f"seg={seg}")
+    return pa.concat_tables(
+        [pq.read_table(p) for p in sorted(glob.glob(os.path.join(seg_dir, "*.parquet")))]
+    )
+
+
+def _marker(index_dir, seg):
+    return pq.read_table(os.path.join(index_dir, "manifest", f"seg={seg}.parquet")).to_pylist()[0]
+
+
+def test_merged_segment_equals_fresh_build_of_its_rows(spark, tmp_path):
+    """An unsalted merge of every segment writes the segment a fresh
+    one-segment build of the same rows writes: the same postings, docs,
+    bloom and norms table contents and the same lineage in its marker."""
+    corpus = generate_transcripts(80)
+    src, dst, fresh = (str(tmp_path / n) for n in ("src", "dst", "fresh"))
+    build_index(spark, spark.createDataFrame(corpus), src, n_segments=4,
+                keyword_cols=("role",))
+    merge_segments(spark, src, dst, n_out=1, salt=1)
+    build_index(spark, spark.createDataFrame(corpus), fresh, n_segments=1,
+                keyword_cols=("role",))
+
+    for root in ("postings", "docs", "bloom"):
+        assert _seg_table(dst, root, 0).equals(_seg_table(fresh, root, 0)), root
+    assert _seg_table(dst, "seg_norms", 0).drop(["base"]).equals(
+        _seg_table(fresh, "seg_norms", 0).drop(["base"])
+    )
+    got, want = _marker(dst, 0), _marker(fresh, 0)
+    lineage = ("n_docs", "doc_count", "n_terms", "n_postings", "sum_len", "content_hash")
+    assert {c: got[c] for c in lineage} == {c: want[c] for c in lineage}
+    assert got["status"] == "merged"
+
+
+def test_merge_runs_two_dealt_stages(spark, small_index, tmp_path):
+    """A tombstone-free salted merge is the two dealt stages plus the
+    shared commit tail — no per-term shuffle — and logs no UserWarning."""
+    src, _ = small_index
+    sc = spark.sparkContext
+    sc.setJobGroup("merge", "merge_segments")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            merge_segments(spark, src, str(tmp_path / "m"), n_out=2, salt=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs, _, _ = _job_counts(sc, "merge")
+    assert jobs <= 10, jobs
+    assert not [w for w in caught if issubclass(w.category, UserWarning)], [
+        str(w.message) for w in caught
+    ]
+
+
+def test_merge_rerun_after_fault_matches_uninterrupted(spark, small_index, tmp_path):
+    """A merge that fails while writing an output segment, re-run into the
+    same directory, ends in the index an uninterrupted merge writes; a
+    different plan into that directory is refused."""
+    src, _ = small_index
+    clean, faulted = str(tmp_path / "clean"), str(tmp_path / "faulted")
+    merge_segments(spark, src, clean, n_out=2, salt=2)
+
+    # output segment 2 (sources 2 and 3) cannot commit its postings file
+    blocker = os.path.join(faulted, "postings", "seg=2", "part-0.parquet")
+    os.makedirs(blocker)
+    with pytest.raises(Exception, match="IsADirectoryError"):
+        merge_segments(spark, src, faulted, n_out=2, salt=2)
+    shutil.rmtree(blocker)
+    merge_segments(spark, src, faulted, n_out=2, salt=2)
+
+    def hashes(d):
+        return sorted(
+            pq.read_table(p).column("content_hash")[0].as_py()
+            for p in glob.glob(os.path.join(d, "manifest", "*.parquet"))
+        )
+
+    assert hashes(faulted) == hashes(clean)
+    for tbl in ("term_stats", "stats"):
+        a = spark.read.parquet(os.path.join(clean, tbl)).toPandas()
+        b = spark.read.parquet(os.path.join(faulted, tbl)).toPandas()
+        a = a.sort_values(list(a.columns)).reset_index(drop=True)
+        b = b.sort_values(list(b.columns)).reset_index(drop=True)
+        assert a.equals(b), tbl
+    # a different plan into the same directory would leave segment 2 behind
+    with pytest.raises(ValueError, match="does not write"):
+        merge_segments(spark, src, faulted, n_out=1, salt=2)

@@ -102,7 +102,8 @@ def measured_run(cpus: int) -> None:
         build_secs = min(build_secs, time.monotonic() - t0)
 
     # Merge phase (the north rule's "merge segments" step): 64 → 8
-    # doc-contiguous segments via the salted two-phase shuffle.
+    # doc-contiguous segments via merge_segments' two dealt stages (8 salted
+    # input sub-ranges per output segment).
     from lucene_solr_spark.index.merge import merge_segments
 
     idx_merged = f"{idx}_merged"
@@ -270,7 +271,7 @@ def _write_baseline_md(s: dict) -> None:
         "",
         f"- **Index-build scaling efficiency ({lo}→{hi} cores): "
         f"{s['build_scaling_efficiency']}** (north-rule target ≥ 0.8)",
-        f"- **Segment-merge (64→8, salted two-phase) scaling efficiency: "
+        f"- **Segment-merge (64→8, salted sub-ranges) scaling efficiency: "
         f"{s['merge_scaling_efficiency']}**",
         f"- Query scaling efficiency: {s['query_scaling_efficiency']} (query side is",
         "  latency-bound at 50 queries; build throughput is the north-rule metric)",
