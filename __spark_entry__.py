@@ -3,7 +3,9 @@
 ``entry`` runs the flagship path — full Lucene-chain (lower/stop/porter)
 inverted-index build + block-max WAND BM25 top-k — on sf0.001.
 ``queries``/``oracle_sql`` expose every implemented operator with a DuckDB
-cross-check (see lucene_solr_spark/driver_queries.py and ops/*).
+cross-check: one ``register(name, fn, oracle)`` call per entry in the
+``ops/registry`` — the full-text entries in
+lucene_solr_spark/driver_queries.py, the others in ops/*.
 """
 
 from __future__ import annotations

@@ -1,244 +1,881 @@
 """Registry backing ``__spark_entry__.py``: every implemented operator gets a
 (spark callable, DuckDB oracle SQL) pair the driver cross-checks at sf=0.01.
 
-Fulltext entries run the REAL engine end-to-end (index build → WAND top-k)
-with the ``simple``/``stop`` analyzers whose semantics are SQL-expressible
-(see oracles.py); the Porter chain is exercised by ``entry()`` and pytest.
+Each full-text entry is one ``ops.registry.register(name, fn, oracle)`` call
+below — the registry the ``ops/`` modules fill — with the entry's engine call
+and its oracle side by side. Full-text entries run the REAL engine end-to-end
+(index build → WAND top-k) with the ``simple``/``stop`` analyzers whose
+semantics are SQL-expressible (see oracles.py); the Porter chain is exercised
+by ``entry()`` and pytest. An oracle analyzes its surfaces with its own
+analyzer instance and never calls the engine's parser, expander or searcher.
 Column names are aliased identically on both sides (driver hashes values
-after sorting columns by name).
+after sorting columns by name). Registration order is the driver's order
+after ``PRIORITY_ORDER``, so entries are registered in that order.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from dataclasses import replace
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .engine import (
-    ASOF, ATOMIC_UPDATED, COPYFIELD, DBQ_DELETED, DV_UPDATED, EXPUNGED,
-    RTG_APPENDED, UPDATED, IndexRecipe,
-    blended_term_topk, fielded_dismax_topk, get_engine,
-    addindexes_topk, exactstats_topk, field_masking_span_topk,
-    tiered_merge_topk, localstats_topk,
+    ASOF, ATOMIC_MOD, ATOMIC_OPERAND, ATOMIC_UPDATED, BASE, COPYFIELD,
+    COPYFIELD_TEXT_EXPR, DBQ_DELETED, DBQ_TERM, DV_UPDATED, EXPUNGED, KNN_K,
+    KNN_TEST_MOD, KNN_TOP_TERMS, PATREPLACE_TEXT_EXPR, PATREPLACE_TEXT_SQL,
+    QF_BODY_W, QF_TITLE_W, RTG_APPENDED, RTG_DOCS, TITLE_EXPR_SQL,
+    UNICODE_TEXT_EXPR, UNICODE_TEXT_SQL, UPDATE_MOD, UPDATE_SUFFIX, UPDATED,
+    URLEMAIL_TEXT_EXPR, URLEMAIL_TEXT_SQL, DocumentsEngine, IndexRecipe,
+    addindexes_topk, blended_term_topk, complex_phrase_parts, exactstats_topk,
+    field_masking_span_topk, fielded_dismax_topk, get_engine, knn_classify,
+    localstats_topk, split_union_topk, tiered_merge_topk,
 )
-from .index.build import ANALYZERS
+from .index.build import ANALYZERS, KEYWORD_PREFIX, keyword_term, read_term_stats
 from .oracles import (
-    after_update_topk_sql,
-    blockjoin_sql,
-    bm25_topk_sql,
-    explain_sql,
-    collection_stats_sql,
-    dismax_topk_sql,
-    docs_norms_sql,
-    field_summary_sql,
-    mlt_topk_sql,
-    multiterm_topk_sql,
-    sloppy_phrase_topk_sql,
-    term_stats_sql,
-    tfidf_topk_sql,
-    total_hits_sql,
+    after_dbq_topk_sql, after_update_topk_sql, analysis_debug_sql, base_ctes,
+    bf_topk_sql, blended_term_topk_sql, blockjoin_children_sql,
+    blockjoin_scores_sql, blockjoin_sql, bm25_topk_sql, boost_by_query_sql,
+    boostfunc_topk_sql, collection_stats_sql, common_terms_topk_sql,
+    complex_phrase_topk_sql, constant_score_sql, covering_topk_sql,
+    cursor_page2_sql, dfi_topk_sql, dfr_topk_sql, dismax_topk_sql,
+    diversified_topk_sql, docs_norms_sql, docsonly_topk_sql,
+    dv_boost_topk_sql, elevate_topk_sql, explain_sql, external_file_boost_sql,
+    f2exp_topk_sql, facet_block_children_sql, facet_on_query_sql,
+    feature_log_topk_sql, feature_sigmoid_topk_sql, feature_topk_sql,
+    field_masking_span_topk_sql, field_summary_sql, fielded_dismax_topk_sql,
+    fixture_text_topk_sql, fq_cached_topk_sql, frange_sql, funcexpr_topk_sql,
+    fuzzy_blended_topk_sql, group_facet_sql, group_query_topk_sql,
+    highlight_passages_sql, highlight_topk_sql, ib_topk_sql,
+    interval_unordered_topk_sql, join_filter_topk_sql, join_score_topk_sql,
+    knn_classify_sql, lm_topk_sql, lmjm_topk_sql, localstats_topk_sql,
+    ltr_feature_log_sql, ltr_rescore_sql, ltr_trees_sql, mlt_terms_sql,
+    mlt_text_topk_sql, mlt_topk_sql, monitor_matches_sql, multiterm_topk_sql,
+    omitnorms_topk_sql, phonetic_topk_sql, phrase_prefix_topk_sql,
+    rerank_topk_sql, result_clusters_sql, rrf_topk_sql, rtg_sql,
+    sloppy_phrase_topk_sql, sorted_topk_sql, span_contain_topk_sql,
+    span_first_topk_sql, span_multiterm_topk_sql, span_near_or_topk_sql,
+    span_near_topk_sql, span_not_topk_sql, span_or_topk_sql,
+    spellcheck_collate_sql, stats_on_query_sql, suggest_blended_infix_sql,
+    suggest_freetext_sql, suggest_fuzzy_prefix_sql, suggest_sql,
+    surround_or_topk_sql, sweetspot_topk_sql, synonym_topk_sql, tagger_sql,
+    term_stats_sql, term_vectors_sql, terms_enum_regex_sql, terms_enum_sql,
+    tfidf_topk_sql, total_hits_sql, word_break_sql,
 )
-from .search.query import parse_fixture_query
+from .ops.registry import ops_oracles, ops_queries, register
+from .search.bm25 import norm_cache
+from .search.mm import calculate_min_should_match
+from .search.query import (
+    BlendedTermClause, BooleanSpec, IntervalUnorderedClause, MultiPhraseClause,
+    OrGroupClause, PhraseClause, SpanContainClause, SpanFirstClause,
+    SpanNearOrClause, SpanNotClause, SpanOrClause, SynonymClause, TermClause,
+    compile_query, parse_fixture_query,
+)
+from .search.queryparser import (
+    calculate_min_should_match as edismax_min_should_match, parse_query_string,
+)
+from .search.simpleparser import parse_simple
+from .search.surround import parse_surround
 
-# name → (analyzer, qtype, surface terms, min_should, k)
-FULLTEXT_TOPK = {
-    "ft_term_topk": ("simple", "term", ["spark"], 0, 10),
-    "ft_term_rare_topk": ("simple", "term", ["dup"], 0, 30),
-    "ft_and2_topk": ("simple", "and2", ["merge", "batch"], 0, 10),
-    "ft_and3_topk": ("simple", "and3", ["vector", "stream", "dup"], 0, 10),
-    "ft_or3_topk": ("simple", "or3", ["vector", "stream", "filter"], 0, 10),
-    "ft_or_minshould_topk": ("simple", "or_minshould", ["query", "scan", "sort", "window"], 2, 10),
-    "ft_andnot_topk": ("simple", "and_not", ["table", "join"], 0, 10),
-    "ft_phrase_topk": ("simple", "phrase2", ["table", "hash"], 0, 10),
-    "ft_stop_term_topk": ("stop", "term", ["window"], 0, 10),
-    "ft_stop_and2_topk": ("stop", "and2", ["key", "group"], 0, 10),
-    "ft_stop_phrase_hole_topk": ("stop", "phrase2", ["hash the", "query"], 0, 10),
-    # token-graph chains (synonym replace / shingle 2-grams / edge n-grams):
-    # query-side analysis goes through the SAME chain, so "row" becomes the
-    # merged canonical term, "table hash" expands to unigrams+shingle, and
-    # "merge" expands to its edge grams — oracles reproduce the chain in SQL
-    "ft_synonym_topk": ("synonym", "term", ["row"], 0, 10),
-    "ft_shingle_topk": ("shingle", "term", ["table hash"], 0, 10),
-    "ft_edgegram_topk": ("edgegram", "term", ["merge"], 0, 10),
-    # NGramTokenFilter(2,4): query 'erg' rides the SAME chain → the er/rg/
-    # erg gram disjunction (substring matching — finds 'merge' interiors)
-    "ft_ngram_topk": ("ngram", "term", ["erg"], 0, 10),
-    # upstream-default preserveOriginal=false: 1-char source tokens ('a')
-    # emit nothing and leave the norm length — scores differ from ft_ngram
-    # on every doc containing one, so the two conventions can't cancel out
-    "ft_ngram_strict_topk": ("ngramstrict", "term", ["erg"], 0, 10),
-    # char-normalizing filters (ASCIIFolding / EnglishPossessive): the query
-    # surfaces carry the accents/possessives and the SAME chain runs on both
-    # sides; the driver corpus is pure ASCII (both filters are index-side
-    # identity there) — the nontrivial corpus-side behavior is certified by
-    # pytest goldens over accented/possessive fixtures.
-    "ft_asciifold_topk": ("asciifold", "and2", ["mérge", "bätch"], 0, 10),
-    "ft_possessive_topk": ("possessive", "and2", ["merge's", "batch’s"], 0, 10),
-    # WhitespaceAnalyzer (case + punctuation preserved, no filters)
-    "ft_whitespace_topk": ("whitespace", "and2", ["merge", "batch"], 0, 10),
-    # CommonGramsFilter: 'hash the' analyzed through the SAME chain yields
-    # unigrams + the hash_the common-gram — one posting list replaces the
-    # stopword positional intersect
-    "ft_commongrams_topk": ("commongrams", "term", ["hash the"], 0, 10),
-    # LengthFilter(3, 8): tokens outside the band drop with position holes
-    # and shrink norms (FilteringTokenFilter) — 'a'/long tokens vanish, so
-    # every BM25 norm differs from the simple chain's
-    "ft_lengthfilter_topk": ("length", "and2", ["merge", "batch"], 0, 10),
-    # LimitTokenCountFilter(40): only the first 40 tokens index — 329/500
-    # sf0.01 docs exceed the cut, so late-doc matches vanish AND every
-    # truncated doc's norm shrinks to 40 (both effects certified bitwise)
-    "ft_limitcount_topk": ("limitcount", "and2", ["merge", "batch"], 0, 10),
-    # WordDelimiterGraphFilter: the query surface carries the case+hyphen
-    # ('Merge-Batch' splits to consecutive-position parts → an exact
-    # phrase across the split); the driver corpus is plain lowercase (the
-    # filter is index-side identity there) — corpus-side splitting is
-    # certified by pytest goldens (tests/test_worddelim.py), the
-    # ft_asciifold/ft_possessive precedent
-    "ft_worddelim_topk": ("worddelim", "phrase2", ["Merge-Batch"], 0, 10),
-}
+# the oracle side's own analyzer (the engine analyzes with its searcher's)
+_SIMPLE = ANALYZERS["simple"]()
+
+# surfaces shared by many entries
+OR3 = ["vector", "stream", "filter"]
+MERGE_BATCH = ["merge", "batch"]
+OR3_TERMS = [t for s in OR3 for t, _ in _SIMPLE.analyze(s)]
+# terms the update recipes (update, expunge, as-of, atomic, dbq) search
+AFTER_UPDATE_TERMS = ["vector", "stream", "refresh"]
 
 
-# Analyzer-fixture surfaces (digit/URL/email injections — see
-# engine.PATREPLACE_TEXT_EXPR / URLEMAIL_TEXT_EXPR): the chain runs on BOTH
-# sides, so 'merge42' strips to 'merge' (which the injection boosts in the
-# fixture docs) and the URL/email analyze to ONE token each — under the
-# standard rule they would shatter into word fragments.
-PATREPLACE_Q = ["merge42", "batch7"]
-URLEMAIL_Q = ["https://docs.example.org/merge-guide", "dev-team@spark.test"]
-# UAX#29 unicode fixture (engine.UNICODE_TEXT_EXPR): Cyrillic + Greek words
-# that only exist in the injected multilingual suffixes — both sides
-# tokenize them through their unicode rules (engine: full UAX#29 word
-# break; oracle: the script-class RE2 pattern, same tokens by construction)
-UNICODE_Q = ["поиск", "κείμενο"]
-# copyField catchall: a body word ∧ a keyword-metadata value (source column)
-COPYFIELD_Q = ["merge", "src7"]
-# SPLITSHARD scatter-gather (≡ single collection, bitwise)
-SPLIT_Q = ["merge", "scan", "window"]
-# MinHash signature MLT source: doc 45 shares ~75 five-gram shingles with
-# docs 413/267 at sf0.01 (a three-way near-dup family), so buckets collide
-MINHASH_SRC_DOC = 45
+def _tok(an, surface: str) -> str:
+    """The first analyzed term of ``surface``."""
+    return an.analyze(surface)[0][0]
 
 
-def _topk_query(analyzer: str, qtype: str, terms: list[str], msm: int, k: int):
+def _fixture(qtype: str, surfaces, msm: int = 0, analyzer: str = "simple", **kw) -> BooleanSpec:
+    """Oracle-side FIXTURES.md query spec: ``parse_fixture_query``, the
+    helper the engine's ``searcher.parse`` runs over its own analyzer."""
+    return parse_fixture_query(ANALYZERS[analyzer](), qtype, surfaces, msm, **kw)
+
+
+def _call(method, *args, analyzer: str = "simple", recipe: IndexRecipe = BASE, **kwargs):
+    """Entry fn: one ``DocumentsEngine`` method on the (analyzer, recipe) engine."""
+    return lambda spark, sf_dir: method(
+        get_engine(spark, sf_dir, analyzer, recipe), *args, **kwargs
+    )
+
+
+def _ranked(build, analyzer: str = "simple", mode: str = "wand"):
+    """Entry fn: ``build(searcher)`` — a spec or a compiled query — ranked
+    top-10 through ``DocumentsEngine.ranked``."""
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return get_engine(spark, sf_dir, analyzer).topk(qtype, terms, k=k, min_should=msm)
+        eng = get_engine(spark, sf_dir, analyzer)
+        return eng.ranked(build(eng.searcher), mode=mode)
 
     return run
 
 
-def _topk_oracle(analyzer: str, qtype: str, terms: list[str], msm: int, k: int) -> str:
-    spec = parse_fixture_query(ANALYZERS[analyzer](), qtype, terms, msm)
-    return bm25_topk_sql(analyzer, spec, k)
+def _sim(similarity: str):
+    """Entry fn: the or3 fixture ranked under a pluggable similarity over
+    the same index and norm bytes (``L/search/similarities/*``)."""
+    return _ranked(lambda s: s.compile(s.parse("or3", OR3), 10, similarity=similarity))
 
 
-# MultiTermQuery fixtures: name → (kind, engine pattern, oracle SQL predicate)
-MULTITERM = {
-    "ft_prefix_topk": ("prefix", "s", "term LIKE 's%'"),
-    "ft_wildcard_topk": ("wildcard", "s%w", "term LIKE 's%w'"),
-    "ft_fuzzy_topk": ("fuzzy", ("batc", 1), "levenshtein(term, 'batc') <= 1"),
-    # Leading wildcard *ing via the reversed-dictionary sidecar
-    # (ReversedWildcardFilterFactory analog): prefix range on rterm,
-    # pushed to the scan — not a full-dictionary LIKE
-    "ft_leadwild_topk": ("leading_wildcard", "er", "term LIKE '%er'"),
-    "ft_regexp_topk": ("regexp", "key|hash", "regexp_full_match(term, 'key|hash')"),
-    "ft_set_topk": ("set", ("table", "join", "key"), "term IN ('table', 'join', 'key')"),
+def _same_position(an, surface: str) -> list[tuple[str, ...]]:
+    """Analyzed terms grouped by position (``L/util/QueryBuilder#
+    analyzeGraphBoolean``): same-position tokens form one synonym group."""
+    by_pos: dict[int, list[str]] = {}
+    for t, p in an.analyze(surface):
+        by_pos.setdefault(p, []).append(t)
+    return [tuple(dict.fromkeys(by_pos[p])) for p in sorted(by_pos)]
+
+
+def _fuzzy_blended(s, target: str, max_edits: int, max_expansions: int) -> BooleanSpec:
+    """FuzzyQuery's default rewrite (``L/search/FuzzyQuery`` →
+    ``TopTermsBlendedFreqScoringRewrite``): dictionary terms within
+    ``max_edits`` become one blended clause (df = max df over the
+    expansion), each boosted 1 − ed/min(|term|, |target|) in f32
+    (``FuzzyTermsEnum`` op order), top ``max_expansions`` by (boost desc,
+    term asc). One pruned term_stats scan with a JVM ``levenshtein`` filter."""
+    t = target.lower()
+    rows = (
+        read_term_stats(s.spark, s.index_dir)
+        .filter(~F.col("term").startswith(KEYWORD_PREFIX))
+        .withColumn("dist", F.levenshtein(F.col("term"), F.lit(t)))
+        .filter(F.col("dist") <= max_edits)
+        .select("term", "dist")
+        .collect()
+    )
+    cands = sorted(
+        ((float(np.float32(1.0) - np.float32(r.dist) / np.float32(min(len(r.term), len(t)))), r.term)
+         for r in rows),
+        key=lambda c: (-c[0], c[1]),
+    )[:max_expansions]
+    return BooleanSpec(should=[BlendedTermClause(
+        tuple(term for _, term in cands), tuple(b for b, _ in cands),
+    )])
+
+
+def _phrase(an, text: str) -> tuple[tuple[str, ...], tuple[int, ...]]:
+    """(terms, offsets from the first position) of an analyzed phrase."""
+    analyzed = an.analyze(text)
+    return tuple(t for t, _ in analyzed), tuple(p - analyzed[0][1] for _, p in analyzed)
+
+
+def _edismax_mm(an, q: str, mm: str) -> BooleanSpec:
+    """eDisMax: the query's whitespace terms as SHOULD clauses, ``mm``
+    resolved against their count (``SolrPluginUtils#calculateMinShouldMatch``)."""
+    should = [TermClause(t) for w in q.split() for t, _ in an.analyze(w)]
+    return BooleanSpec(should=should, min_should_match=edismax_min_should_match(len(should), mm))
+
+
+def _bm25_tuned(s, spec: BooleanSpec, k1: float, b: float):
+    """BM25Similarity(k1, b) over the same index: norms store lengths, not
+    b-baked values, so only the 256-entry norm cache is rebuilt."""
+    df_map, _ = s.term_stats_rows(spec.all_terms())
+    return compile_query(
+        spec, df_map, s.stats.doc_count, norm_cache(s.stats.avgdl, k1=k1, b=b), 10,
+    )
+
+
+# --- FIXTURES.md query shapes over the analyzer chains ---------------------
+# (name, analyzer, qtype, surface terms, min_should, k). Token-graph chains
+# (synonym replace / shingle 2-grams / edge n-grams) analyze the query through
+# the SAME chain, so "row" becomes the merged canonical term, "table hash"
+# expands to unigrams+shingle and "merge" to its edge grams.
+for _name, _an, _qt, _surfaces, _msm, _k in (
+    ("ft_term_topk", "simple", "term", ["spark"], 0, 10),
+    ("ft_term_rare_topk", "simple", "term", ["dup"], 0, 30),
+    ("ft_and2_topk", "simple", "and2", ["merge", "batch"], 0, 10),
+    ("ft_and3_topk", "simple", "and3", ["vector", "stream", "dup"], 0, 10),
+    ("ft_or3_topk", "simple", "or3", ["vector", "stream", "filter"], 0, 10),
+    ("ft_or_minshould_topk", "simple", "or_minshould", ["query", "scan", "sort", "window"], 2, 10),
+    ("ft_andnot_topk", "simple", "and_not", ["table", "join"], 0, 10),
+    ("ft_phrase_topk", "simple", "phrase2", ["table", "hash"], 0, 10),
+    ("ft_stop_term_topk", "stop", "term", ["window"], 0, 10),
+    ("ft_stop_and2_topk", "stop", "and2", ["key", "group"], 0, 10),
+    ("ft_stop_phrase_hole_topk", "stop", "phrase2", ["hash the", "query"], 0, 10),
+    ("ft_synonym_topk", "synonym", "term", ["row"], 0, 10),
+    ("ft_shingle_topk", "shingle", "term", ["table hash"], 0, 10),
+    ("ft_edgegram_topk", "edgegram", "term", ["merge"], 0, 10),
+    # NGramTokenFilter(2,4): 'erg' → the er/rg/erg gram disjunction
+    # (substring matching — finds 'merge' interiors)
+    ("ft_ngram_topk", "ngram", "term", ["erg"], 0, 10),
+    # upstream-default preserveOriginal=false: 1-char source tokens ('a')
+    # emit nothing and leave the norm length, so scores differ from ft_ngram
+    ("ft_ngram_strict_topk", "ngramstrict", "term", ["erg"], 0, 10),
+    # ASCIIFolding / EnglishPossessive: the query surfaces carry the
+    # accents/possessives; the driver corpus is pure ASCII (index-side
+    # identity there) — corpus-side behavior is certified by pytest goldens
+    ("ft_asciifold_topk", "asciifold", "and2", ["mérge", "bätch"], 0, 10),
+    ("ft_possessive_topk", "possessive", "and2", ["merge's", "batch’s"], 0, 10),
+    # WhitespaceAnalyzer (case + punctuation preserved, no filters)
+    ("ft_whitespace_topk", "whitespace", "and2", ["merge", "batch"], 0, 10),
+    # CommonGramsFilter: 'hash the' → unigrams + the hash_the common-gram
+    ("ft_commongrams_topk", "commongrams", "term", ["hash the"], 0, 10),
+    # LengthFilter(3, 8): out-of-band tokens drop with position holes and
+    # shrink norms (FilteringTokenFilter)
+    ("ft_lengthfilter_topk", "length", "and2", ["merge", "batch"], 0, 10),
+    # LimitTokenCountFilter(40): 329/500 sf0.01 docs exceed the cut — late
+    # matches vanish AND every truncated doc's norm shrinks to 40
+    ("ft_limitcount_topk", "limitcount", "and2", ["merge", "batch"], 0, 10),
+    # WordDelimiterGraphFilter: 'Merge-Batch' splits to consecutive-position
+    # parts → an exact phrase across the split (corpus side: test_worddelim)
+    ("ft_worddelim_topk", "worddelim", "phrase2", ["Merge-Batch"], 0, 10),
+):
+    register(
+        _name,
+        _call(DocumentsEngine.topk, _qt, _surfaces, k=_k, min_should=_msm, analyzer=_an),
+        bm25_topk_sql(_an, _fixture(_qt, _surfaces, _msm, _an), _k),
+    )
+
+# --- MultiTermQuery rewrites (L/search/MultiTermQuery) ---------------------
+# (name, kind, engine pattern, oracle SQL predicate)
+for _name, _kind, _pattern, _pred in (
+    ("ft_prefix_topk", "prefix", "s", "term LIKE 's%'"),
+    ("ft_wildcard_topk", "wildcard", "s%w", "term LIKE 's%w'"),
+    ("ft_fuzzy_topk", "fuzzy", ("batc", 1), "levenshtein(term, 'batc') <= 1"),
+    # leading wildcard *er via the reversed-dictionary sidecar
+    # (ReversedWildcardFilterFactory): a prefix range on rterm
+    ("ft_leadwild_topk", "leading_wildcard", "er", "term LIKE '%er'"),
+    ("ft_regexp_topk", "regexp", "key|hash", "regexp_full_match(term, 'key|hash')"),
+    ("ft_set_topk", "set", ("table", "join", "key"), "term IN ('table', 'join', 'key')"),
     # TermRangeQuery: lexicographic [lo, hi) over the term dictionary
-    # (includeLower, excludeUpper) — expands to scan/slow/small/sort/spark
-    "ft_termrange_topk": ("range", ("sc", "st"), "term >= 'sc' AND term < 'st'"),
-    # FuzzyQuery with transpositions=true — Lucene's DEFAULT: OSA distance
-    # ('bacth' → 'batch' is ONE edit; plain Levenshtein says two). At
-    # maxEdits=1 OSA ≡ unrestricted Damerau, so DuckDB's builtin is exact.
-    "ft_fuzzy_osa_topk": (
-        "fuzzy_osa", ("bacth", 1), "damerau_levenshtein(term, 'bacth') <= 1"
-    ),
-}
+    ("ft_termrange_topk", "range", ("sc", "st"), "term >= 'sc' AND term < 'st'"),
+    # FuzzyQuery with transpositions=true (Lucene's default): OSA distance;
+    # at maxEdits=1 OSA ≡ unrestricted Damerau, so DuckDB's builtin is exact
+    ("ft_fuzzy_osa_topk", "fuzzy_osa", ("bacth", 1), "damerau_levenshtein(term, 'bacth') <= 1"),
+):
+    register(
+        _name,
+        _ranked(lambda s, kind=_kind, pattern=_pattern: s.multiterm_spec(kind, pattern)),
+        multiterm_topk_sql("simple", _pred, 10),
+    )
 
+# L/search/CoveringQuery: per-doc minimumNumberMatched = 1 + (docID % 3)
+register(
+    "ft_covering_topk",
+    _ranked(lambda s: BooleanSpec(
+        should=[TermClause(_tok(s.analyzer, w)) for w in OR3], covering_mod=3,
+    )),
+    covering_topk_sql("simple", [_tok(_SIMPLE, w) for w in OR3], 3, 10),
+)
+# MatchAllDocsQuery under fq (q=*:* fq=source:src3): constant score 1.0,
+# doc-key order; the oracle reads the fq straight off the source table
+register(
+    "ft_matchall_fq",
+    _call(DocumentsEngine.matchall_topk, "source", "src3", k=10),
+    """
+SELECT doc_id::BIGINT AS doc_id, CAST(1.0 AS FLOAT) AS score
+FROM documents WHERE source = 'src3'
+ORDER BY doc_id LIMIT 10""",
+)
+# L/queryparser/simple/SimpleQueryParser (never-throws grammar). The oracle
+# spec is HAND-BUILT from the documented parse — '+' promotes every atom
+# (the analyzed phrase too) to MUST, '-scan' prohibits — so a parse bug
+# cannot cancel out
+register(
+    "ft_simpleqp_topk",
+    _ranked(lambda s: parse_simple(
+        '+merge +batch -scan "table hash"', s.analyzer, expand=s.expand_terms,
+    )),
+    bm25_topk_sql("simple", BooleanSpec(
+        must=[
+            TermClause(_tok(_SIMPLE, "merge")),
+            TermClause(_tok(_SIMPLE, "batch")),
+            PhraseClause((_tok(_SIMPLE, "table"), _tok(_SIMPLE, "hash")), (0, 1)),
+        ],
+        must_not=[TermClause(_tok(_SIMPLE, "scan"))],
+    ), 10),
+)
+# L/search/spans/SpanMultiTermQueryWrapper: prefix 's' rewritten into a
+# SpanOr union, ordered span-near with 'merge' at slop 3
+register(
+    "ft_spanmulti_topk",
+    _ranked(lambda s: BooleanSpec(should=[SpanNearOrClause(
+        (tuple(s.expand_terms("prefix", "s")), (_tok(s.analyzer, "merge"),)), 3,
+    )])),
+    span_multiterm_topk_sql("simple", "term LIKE 's%'", "merge", 3, 10),
+)
+# lucene/queryparser/surround: W = ordered, N = unordered span near;
+# distances 2 and 3 are span slops 1 and 2 (DistanceQuery's opDistance-1)
+SURROUND_CLAUSES = [("w", "merge", "batch", 1), ("n", "vector", "filter", 2)]
+register(
+    "ft_surround_topk",
+    _ranked(lambda s: parse_surround("2W(merge, batch) OR 3N(vector, filter)", s.analyzer)),
+    surround_or_topk_sql("simple", SURROUND_CLAUSES, 10),
+)
+# L/search/SynonymQuery: explicit query-time synonyms scored as ONE
+# pseudo-term (tf summed, df = max); both members occur in the corpus
+register(
+    "ft_synonymquery_topk",
+    _ranked(lambda s: BooleanSpec(should=[
+        SynonymClause(tuple(_tok(s.analyzer, w) for w in ("merge", "join"))),
+    ])),
+    synonym_topk_sql("simple", [tuple(_tok(_SIMPLE, w) for w in ("merge", "join"))], 10),
+)
+# KeywordRepeat chain + QueryBuilder position-graph rule: 'tables' analyzes
+# to original+stem at one position → SynonymQuery(tables, table)
+register(
+    "ft_keywordrepeat_topk",
+    _ranked(lambda s: BooleanSpec(should=[
+        SynonymClause(g) if len(g) > 1 else TermClause(g[0])
+        for g in _same_position(s.analyzer, "tables")
+    ]), analyzer="keywordrepeat"),
+    synonym_topk_sql("keywordrepeat", _same_position(ANALYZERS["keywordrepeat"](), "tables"), 10),
+)
+# L/search/DisjunctionMaxQuery over the or3 terms, tie 0.3
+register(
+    "ft_dismax_topk",
+    _ranked(lambda s: replace(s.parse("or3", OR3), dismax=True, tie=0.3)),
+    dismax_topk_sql("simple", OR3, 0.3, 10),
+)
+register(
+    "ft_mlt_topk",
+    _call(DocumentsEngine.mlt_topk, 42, top_terms=5, k=10),
+    mlt_topk_sql("simple", 42, 5, 10),
+)
+# MLT interestingTerms=details: the ranked tf·idf term list itself
+register(
+    "ft_mlt_terms",
+    _call(DocumentsEngine.mlt_terms, 42, top_terms=8),
+    mlt_terms_sql("simple", 42, 8),
+)
+# edismax bf= (ADDITIVE function boost; distinct from multiplicative boost=)
+register(
+    "ft_bf_topk",
+    _call(DocumentsEngine.bf_topk, "and2", MERGE_BATCH, k=10),
+    bf_topk_sql("simple", _fixture("and2", MERGE_BATCH), 10),
+)
+# ExternalFileField: per-doc float from a side table keyed on doc id
+# (reloadable without reindex) as an additive boost
+register(
+    "ft_extfile_boost_topk",
+    _call(DocumentsEngine.external_file_boost_topk, "and2", MERGE_BATCH, k=10),
+    external_file_boost_sql("simple", _fixture("and2", MERGE_BATCH), 10),
+)
+# FunctionScoreQuery#boostByQuery: ×1.8 for docs also matching 'spark'
+register(
+    "ft_boost_by_query_topk",
+    _call(DocumentsEngine.boost_by_query_topk, "or3", OR3, "term", ["spark"], 1.8, k=10),
+    boost_by_query_sql("simple", _fixture("or3", OR3), _fixture("term", ["spark"]), 1.8, 10),
+)
+# IndexSearcher#searchAfter: page 2 from page 1's cursor
+register(
+    "ft_page2_topk",
+    _call(DocumentsEngine.search_after_page, "and2", MERGE_BATCH, k=10),
+    bm25_topk_sql("simple", _fixture("and2", MERGE_BATCH), 10, offset=10),
+)
+# ToChildBlockJoin: children of the top-2 parents, parent score propagated
+register(
+    "ft_blockjoin_children",
+    _call(DocumentsEngine.blockjoin_children, "or2", ["dup", "vector"], n_parents=2),
+    blockjoin_children_sql("simple", ["dup", "vector"], 2),
+)
+register(
+    "ft_blockjoin_source",
+    _call(DocumentsEngine.blockjoin_by_source, "or2", ["dup", "vector"], n_groups=5),
+    blockjoin_sql("simple", ["dup", "vector"], 5),
+)
+# ToParentBlockJoin ScoreMode.Max/Total/Avg side by side (ordered
+# deterministic double fold for Total; Avg = total/count)
+register(
+    "ft_blockjoin_scores",
+    _call(DocumentsEngine.blockjoin_scores, "or2", ["dup", "vector"], n_groups=5),
+    blockjoin_scores_sql("simple", _fixture("or2", ["dup", "vector"]), 5),
+)
+# FeatureField newSaturationQuery / newLogQuery / newSigmoidQuery over the
+# static feature x = n_chars: bm25 + boost·S(x)
+register(
+    "ft_feature_topk",
+    _call(DocumentsEngine.feature_topk, "or3", OR3, pivot=200.0, boost=1.8, k=10),
+    feature_topk_sql("simple", _fixture("or3", OR3), 200.0, 1.8, 10),
+)
+register(
+    "ft_feature_log_topk",
+    _call(DocumentsEngine.feature_log_topk, "or3", OR3, scale=1.0, boost=1.8, k=10),
+    feature_log_topk_sql("simple", _fixture("or3", OR3), 1.0, 1.8, 10),
+)
+register(
+    "ft_feature_sigmoid_topk",
+    _call(DocumentsEngine.feature_sigmoid_topk, "or3", OR3, pivot=200.0, a=2.0, boost=1.8, k=10),
+    feature_sigmoid_topk_sql("simple", _fixture("or3", OR3), 200.0, 2.0, 1.8, 10),
+)
+# Reciprocal Rank Fusion of two WAND top-40 legs, k0=60
+register(
+    "ft_rrf_topk",
+    _call(DocumentsEngine.rrf_topk, "or3", OR3, "and2", MERGE_BATCH, n=40, k0=60, k=10),
+    rrf_topk_sql("simple", _fixture("or3", OR3), _fixture("and2", MERGE_BATCH), 40, 60, 10),
+)
+# L/search/BoostQuery: per-clause boosts folded into f32 weights
 BOOST_TERMS = [("vector", 2.5), ("stream", 1.0), ("filter", 0.5)]
-EXPLAIN_TERMS = ["merge", "batch", "stream"]
-EXPLAIN_DOC = 42
-FILTER_TERMS = ["merge", "batch", "scan"]
-FILTER_SOURCE = "src3"
-DISMAX_TERMS = ["vector", "stream", "filter"]
-DISMAX_TIE = 0.3
-MLT_SRC_DOC = 42
-BLOCKJOIN_TERMS = ["dup", "vector"]
-PAGE2_QUERY = ("and2", ["merge", "batch"])
-TOTAL_HITS_TERMS = ["vector", "stream", "filter"]
-TOTAL_HITS_THRESHOLD = 250
-AFTER_UPDATE_TERMS = ["vector", "stream", "refresh"]
-HIGHLIGHT_TERMS = ["merge", "batch"]
-RERANK_MAIN = ["vector", "stream", "filter"]
-RERANK_RR = ["merge", "batch"]
-RERANK_DOCS = 50
-RERANK_W = 2.0
-# elevation config: ids pinned in THIS order; the last is absent from every
-# SF (certifies the unknown-id drop path)
-ELEVATE_IDS = [7, 3, 999999999]
-# spellcheck inputs: two misspellings + one correctly spelled term (its own
-# distance-0 best) — collation = corrected conjunction, hit-count verified
-SPELL_TERMS = ["vektor", "stream", "fliter"]
-TV_DOC = 42
-TERMS_ENUM = ("s", 5, 15)            # (prefix, mincount, limit)
-TERMS_REGEX = ("(ow|am)$", 3, 15)    # terms.regex: suffix alternation
-#   → row, slow, window, stream on this corpus
-# RTG keys: one original corpus doc, one soft-committed appended doc, one
-# absent key (certifies the not-found path)
-RTG_KEYS = [42, 5_000_001, 987_654_321]
-SORTFIELD_Q = ("or3", ["vector", "stream", "filter"])
-BOOSTFUNC_Q = ("and2", ["merge", "batch"])
-# SpanFirst: term must end within the first SPANFIRST_END positions
-SPANFIRST = ("merge", 12)
-# SpanPositionRange: term occurrences inside positions [start, end)
-SPANPOSRANGE = ("merge", 6, 30)
-# SpanNear (inOrder=true): second term follows the first within <= slop
-# intervening positions
-SPANNEAR = ("scan", "filter", 3)
-# DisMax mm conditional spec over a 4-term disjunction (msm parses to 3)
-MM_SPEC = "2<-25%"
-MM_SPEC_TERMS = ["query", "scan", "sort", "window"]
-# FieldMaskingSpanQuery: (title term, body term, slop) — 'table' in the
-# first-8-words title region ordered-near a later body 'join' within 6
-FMASK_Q = ("table", "join", 6)
-# SpanNot: include occurrences survive unless exclude lies in [p-pre, p+post]
-SPANNOT = ("merge", "batch", 2, 2)
-# SpanOr: union of unit term spans; tf = total member occurrences
-SPANOR = ["scan", "filter", "vector"]
-# SpanContaining/SpanWithin: big = ordered SpanNear(scan, filter, slop 8),
-# little = merge occurring inside a matched big span (19 docs at sf0.01)
-SPANCONTAIN = ("scan", "filter", 8, "merge")
-# Intervals.unordered + maxgaps: either order, minimal intervals
-INTERVAL_UNORD = ("filter", "scan", 6)
-# Intervals.ordered: first term immediately followed by the second
-INTERVAL_ORD = ("scan", "filter", 6)
-# Nested spans: SpanNear over two SpanOr operand unions
-SPANNEAROR = (["merge", "scan"], ["batch", "filter"], 4)
-# Blended FuzzyQuery (the DEFAULT fuzzy rewrite): target, maxEdits, maxExp
-FUZZY_BLENDED = ("batc", 2, 50)
-# eDisMax mm: 4 optional terms under a conditional spec — n=4 > 2 →
-# -25% → msm = 4 + int(-1.0) = 3 (SolrPluginUtils#calculateMinShouldMatch)
+register(
+    "ft_boost_topk",
+    _ranked(lambda s: BooleanSpec(should=[
+        TermClause(t, b) for w, b in BOOST_TERMS for t, _ in s.analyzer.analyze(w)
+    ])),
+    bm25_topk_sql("simple", BooleanSpec(should=[
+        TermClause(t, b) for w, b in BOOST_TERMS for t, _ in _SIMPLE.analyze(w)
+    ]), 10),
+)
+# explain / debugQuery: per-term BM25 breakdown for one doc
+register(
+    "ft_explain",
+    _call(DocumentsEngine.explain, "or3", ["merge", "batch", "stream"], 42),
+    explain_sql("simple", [t for t, _ in _SIMPLE.analyze("merge batch stream")], 42),
+)
+# BooleanClause.Occur.FILTER: the keyword posting restricts candidates
+# before ranking, weight 0
+register(
+    "ft_filter_topk",
+    _ranked(lambda s: replace(
+        s.parse("or3", ["merge", "batch", "scan"]),
+        filter=[TermClause(keyword_term("source", "src3"))],
+    )),
+    bm25_topk_sql(
+        "simple", _fixture("or3", ["merge", "batch", "scan"]), 10,
+        filter_pred="source = 'src3'",
+    ),
+)
+# SloppyPhrase (SloppyPhraseMatcher) vs a WITH RECURSIVE DuckDB emulation of
+# the 2-term greedy heap walk; n>2 parity is gated by test_sloppy_phrase.py
+SLOPPY_PHRASE = _fixture("phrase2", ["table", "hash"], slop=3).must[0]
+register(
+    "ft_sloppy_phrase_topk",
+    _call(DocumentsEngine.topk, "phrase2", ["table", "hash"], k=10, slop=3),
+    sloppy_phrase_topk_sql("simple", SLOPPY_PHRASE.terms, SLOPPY_PHRASE.offsets, 3, 10),
+)
+# TotalHits (value, relation) — numFound with the count collector
+register(
+    "ft_total_hits",
+    _call(DocumentsEngine.total_hits, "or3", OR3, threshold=250),
+    total_hits_sql("simple", OR3_TERMS, 250),
+)
+# deletes/updates: tombstone + re-add, then search the live corpus
+AFTER_UPDATE_SQL = after_update_topk_sql(
+    "simple", [t for s in AFTER_UPDATE_TERMS for t, _ in _SIMPLE.analyze(s)],
+    10, UPDATE_MOD, UPDATE_SUFFIX,
+)
+register(
+    "ft_after_update_topk",
+    _call(DocumentsEngine.topk, "or3", AFTER_UPDATE_TERMS, k=10, recipe=UPDATED),
+    AFTER_UPDATE_SQL,
+)
+# expungeDeletes (forceMergeDeletes): the SAME update, then the tombstones
+# are physically rewritten out — same oracle, so a compaction bug anywhere
+# in the rewrite goes hash-red
+register(
+    "ft_after_expunge_topk",
+    _call(DocumentsEngine.topk, "or3", AFTER_UPDATE_TERMS, k=10, recipe=EXPUNGED),
+    AFTER_UPDATE_SQL,
+)
+# PatternReplaceFilter / UAX29URLEmailTokenizer / full UAX#29 word break
+# over injected fixture text (digits / URLs+emails / Cyrillic+Greek suffixes
+# appended by doc_id; the SAME expression runs in DuckDB): 'merge42' strips
+# to 'merge', each URL/email analyzes to ONE token
+for _name, _an, _qt, _surfaces, _expr, _sql in (
+    ("ft_patreplace_topk", "patreplace", "and2", ["merge42", "batch7"],
+     PATREPLACE_TEXT_EXPR, PATREPLACE_TEXT_SQL),
+    ("ft_urlemail_topk", "urlemail", "or2",
+     ["https://docs.example.org/merge-guide", "dev-team@spark.test"],
+     URLEMAIL_TEXT_EXPR, URLEMAIL_TEXT_SQL),
+    ("ft_unicode_topk", "uni", "or2", ["поиск", "κείμενο"], UNICODE_TEXT_EXPR, UNICODE_TEXT_SQL),
+):
+    register(
+        _name,
+        _call(DocumentsEngine.topk, _qt, _surfaces, k=10, analyzer=_an,
+              recipe=IndexRecipe(text_expr=_expr)),
+        fixture_text_topk_sql(_an, _fixture(_qt, _surfaces, 0, _an), 10, _sql),
+    )
+# MinHashFilter LSH fingerprint index: docs index as their 16-bucket
+# signatures; MLT over doc 45's signature ranks by shared buckets (doc 45
+# has a three-way near-dup family at sf0.01)
+register(
+    "ft_minhash_sim_topk",
+    _call(DocumentsEngine.mlt_topk, 45, top_terms=16, k=10, analyzer="minhashsig"),
+    mlt_topk_sql("minhashsig", 45, 16, 10),
+)
+# copyField catchall (_text_): 'src7' only exists in the catchall
+register(
+    "ft_copyfield_topk",
+    _call(DocumentsEngine.topk, "and2", ["merge", "src7"], k=10, recipe=COPYFIELD),
+    fixture_text_topk_sql("simple", _fixture("and2", ["merge", "src7"]), 10, COPYFIELD_TEXT_EXPR),
+)
+# eDisMax qf="title^2 body^1": the derived title field is its OWN index;
+# dismax across field scores at tie 0, then the tie=0.3 tiebreak
+for _name, _tie in (("ft_fielded_qf_topk", 0.0), ("ft_fielded_tie_topk", 0.3)):
+    register(
+        _name,
+        lambda spark, sf_dir, tie=_tie: fielded_dismax_topk(
+            spark, sf_dir, "or3", ["fast", "merge", "table"], 10, tie=tie,
+        ),
+        fielded_dismax_topk_sql(
+            "simple", _fixture("or3", ["fast", "merge", "table"]), 10,
+            TITLE_EXPR_SQL, QF_TITLE_W, QF_BODY_W, tie=_tie,
+        ),
+    )
+# filterCache (SolrIndexSearcher#getDocSet): an arbitrary-query fq as a
+# cached DocSet riding the kernels as a non-scoring FILTER
+register(
+    "ft_fq_cached_topk",
+    _call(DocumentsEngine.fq_topk, "or3", OR3, "or2", ["merge", "dup"], 10),
+    fq_cached_topk_sql("simple", _fixture("or3", OR3), _fixture("or2", ["merge", "dup"]), 10),
+)
+# queryResultCache: the page is a cache hit off the ceil-to-window superset
+# a first ask cached (getDocListC) — bitwise the plain BM25 answer
+QRC_SQL = bm25_topk_sql("simple", _fixture("or2", ["window", "batch"]), 10)
+register(
+    "ft_qrc_topk",
+    _call(DocumentsEngine.qrc_topk, "or2", ["window", "batch"], 10),
+    QRC_SQL,
+)
+# BlendedTermQuery cross-field: per-term df blended to the max across
+# fields, per-field scoring with the shared df, dismax across fields
+register(
+    "ft_blended_cross_topk",
+    lambda spark, sf_dir: blended_term_topk(spark, sf_dir, ["fast", "merge", "table"], k=10),
+    blended_term_topk_sql("simple", ["fast", "merge", "table"], 10, TITLE_EXPR_SQL),
+)
+# documentCache: the page's stored fields through the per-engine LRU
+register(
+    "ft_topk_fetch",
+    _call(DocumentsEngine.topk_fetch, "or2", ["window", "batch"], 10),
+    "SELECT p.rank, p.doc_id, p.score, d.source, d.lang FROM ("
+    + QRC_SQL
+    + ") p JOIN documents d ON d.doc_id = p.doc_id ORDER BY p.rank",
+)
+# commit point + time travel: the update applied, but the searcher opens AT
+# the pre-update commit — plain BM25 over the ORIGINAL corpus
+register(
+    "ft_asof_topk",
+    _call(DocumentsEngine.topk, "or3", AFTER_UPDATE_TERMS, k=10, recipe=ASOF),
+    bm25_topk_sql("simple", _fixture("or3", AFTER_UPDATE_TERMS), 10),
+)
+# lucene/classification KNearestNeighborClassifier over a TRAIN-split index
+register(
+    "classify_knn",
+    knn_classify,
+    knn_classify_sql("simple", KNN_TEST_MOD, KNN_TOP_TERMS, KNN_K),
+)
+# atomic partial update (`add` on text ≡ appending " " + operand to the live
+# doc), then the same tombstone+re-add oracle shape
+register(
+    "ft_after_atomic_update_topk",
+    _call(DocumentsEngine.topk, "or3", AFTER_UPDATE_TERMS, k=10, recipe=ATOMIC_UPDATED),
+    after_update_topk_sql(
+        "simple", [t for s in AFTER_UPDATE_TERMS for t, _ in _SIMPLE.analyze(s)],
+        10, ATOMIC_MOD, " " + ATOMIC_OPERAND,
+    ),
+)
+# delete-by-query: tombstone a query's whole match set, then search with the
+# SHRUNKEN global stats (docCount/avgdl/df)
+register(
+    "ft_after_dbq_topk",
+    _call(DocumentsEngine.topk, "or3", AFTER_UPDATE_TERMS, k=10, recipe=DBQ_DELETED),
+    after_dbq_topk_sql(
+        "simple", DBQ_TERM, [t for s in AFTER_UPDATE_TERMS for t, _ in _SIMPLE.analyze(s)], 10,
+    ),
+)
+# ValueSource function query as the ranking function (termfreq sort)
+register(
+    "ft_function_query",
+    _call(DocumentsEngine.function_query_topk, "merge", k=10),
+    f"""WITH {base_ctes("simple")},
+tfq AS (
+    SELECT doc_id, count(*)::BIGINT AS tf FROM kept WHERE term = '{_tok(_SIMPLE, "merge")}' GROUP BY 1
+)
+SELECT rank::INTEGER AS rank, doc_id::BIGINT AS doc_id, tf FROM (
+    SELECT row_number() OVER (ORDER BY tf DESC, doc_id ASC) AS rank, doc_id, tf FROM tfq
+) WHERE rank <= 10 ORDER BY rank""",
+)
+# function-query expressions (ValueSourceParser grammar), (name, expression,
+# the surfaces its termfreq/docfreq/idf/ttf arguments name)
+for _name, _expr, _surfaces in (
+    # arithmetic, if(), termfreq ×2, norm(), a bare field ref, docfreq + idf
+    # index scalars, and scale() as the outermost full-pass rescale
+    ("ft_funcexpr_topk",
+     "scale(sum(product(2, termfreq(text,'merge')),"
+     " div(norm(text), sum(n_chars, 1)),"
+     " if(termfreq(text,'batch'), 0.25, 0),"
+     " div(ln(sum(docfreq(text,'merge'), 1)), 10),"
+     " product(idf(text,'batch'), 0.125)), 0, 20)",
+     ("merge", "batch")),
+    # ReciprocalFloatFunction recip(x,m,a,b) + LinearFloatFunction linear(x,m,c)
+    ("ft_recip_boost_topk",
+     "sum(linear(termfreq(text,'merge'), 2, 0.25), recip(n_chars, 0.01, 100, 1))",
+     ("merge",)),
+    # ttf() / sumtotaltermfreq() / docfreq() / maxdoc() index statistics
+    ("ft_funcexpr_stats_topk",
+     "sum(product(termfreq(text,'merge'),"
+     " div(ttf(text,'batch'), sumtotaltermfreq(text))),"
+     " div(docfreq(text,'scan'), maxdoc()))",
+     ("merge", "batch", "scan")),
+    # strdist() (StrDistValueSource, 'edit'): normalized Levenshtein
+    # similarity of source to 'src1' + a termfreq tiebreaker
+    ("ft_strdist_topk",
+     "sum(product(2, strdist('src1', source)), div(termfreq(text,'merge'), 100))",
+     ("merge",)),
+):
+    register(
+        _name,
+        _call(DocumentsEngine.function_expr_topk, _expr, k=10),
+        funcexpr_topk_sql("simple", _expr, 10, {w: _tok(_SIMPLE, w) for w in _surfaces}),
+    )
+# Text Tagger (/tag handler): an out-of-dictionary token drops from the tag
+# stream; a repeated dictionary token is tagged at BOTH positions
+TAGGER_TEXT = "merge the batch stream zzznotaword merge scan"
+register(
+    "ft_tagger",
+    _call(DocumentsEngine.tagger, TAGGER_TEXT),
+    tagger_sql("simple", [(p, t) for t, p in _SIMPLE.analyze(TAGGER_TEXT)]),
+)
+# L/search/MultiPhraseQuery: "merge (batch|stream)" — slot 2 admits either
+register(
+    "ft_multiphrase_topk",
+    _ranked(lambda s: BooleanSpec(must=[MultiPhraseClause(
+        ((_tok(s.analyzer, "merge"),), (_tok(s.analyzer, "batch"), _tok(s.analyzer, "stream"))),
+        (0, 1),
+    )]), mode="exact"),
+    bm25_topk_sql("simple", BooleanSpec(must=[MultiPhraseClause(
+        ((_tok(_SIMPLE, "merge"),), (_tok(_SIMPLE, "batch"), _tok(_SIMPLE, "stream"))),
+        (0, 1),
+    )]), 10),
+)
+# phrase-prefix (PhraseWildcardQuery / match_phrase_prefix): "merge bat*"
+register(
+    "ft_phrase_prefix_topk",
+    _call(DocumentsEngine.phrase_prefix_topk, ["merge"], "bat", k=10),
+    phrase_prefix_topk_sql("simple", (_tok(_SIMPLE, "merge"),), "bat", 10),
+)
+# ComplexPhraseQueryParser: wildcards at ANY slot — "d?ta s*"
+register(
+    "ft_complexphrase_topk",
+    _call(DocumentsEngine.complex_phrase_topk, '"d?ta s*"', k=10),
+    complex_phrase_topk_sql("simple", complex_phrase_parts('"d?ta s*"', _SIMPLE), 10),
+)
+# L/search/BooleanQuery nesting: +merge +(batch stream)
+register(
+    "ft_nested_bool_topk",
+    _ranked(lambda s: BooleanSpec(must=[
+        TermClause(_tok(s.analyzer, "merge")),
+        OrGroupClause((_tok(s.analyzer, "batch"), _tok(s.analyzer, "stream"))),
+    ])),
+    bm25_topk_sql("simple", BooleanSpec(must=[
+        TermClause(_tok(_SIMPLE, "merge")),
+        OrGroupClause((_tok(_SIMPLE, "batch"), _tok(_SIMPLE, "stream"))),
+    ]), 10),
+)
+# ReRankQParserPlugin: first-pass top-50 rescored as first + 2.0·rerank
+register(
+    "ft_rerank_topk",
+    _call(DocumentsEngine.rerank_topk, "or3", OR3, "and2", MERGE_BATCH,
+          rerank_docs=50, weight=2.0, k=10),
+    rerank_topk_sql("simple", _fixture("or3", OR3), _fixture("and2", MERGE_BATCH), 50, 2.0, 10),
+)
+# query elevation: ids pinned in config order; 999999999 is absent from
+# every SF (the unknown-id drop path)
+register(
+    "ft_elevate_topk",
+    _call(DocumentsEngine.elevate_topk, "or3", OR3, [7, 3, 999999999], k=10),
+    elevate_topk_sql("simple", _fixture("or3", OR3), [7, 3, 999999999], 10),
+)
+# spellcheck collation: two misspellings + one correct term (its own
+# distance-0 best); the collation's hit count is verified
+register(
+    "ft_spellcheck_collate",
+    _call(DocumentsEngine.spellcheck_collate, ["vektor", "stream", "fliter"], max_edits=2),
+    spellcheck_collate_sql("simple", [_tok(_SIMPLE, w) for w in ["vektor", "stream", "fliter"]], 2),
+)
+# term vectors: one doc's full term vector read from the index postings
+register("ft_termvectors", _call(DocumentsEngine.term_vectors, 42), term_vectors_sql("simple", 42))
+# TermsComponent: terms.regex suffix alternation (→ row, slow, window,
+# stream), then prefix enumeration; (pattern, mincount, limit)
+register(
+    "ft_terms_regex",
+    _call(DocumentsEngine.terms_enum_regex, "(ow|am)$", 3, 15),
+    terms_enum_regex_sql("simple", "(ow|am)$", 3, 15),
+)
+register(
+    "ft_terms_enum",
+    _call(DocumentsEngine.terms_enum, "s", 5, 15),
+    terms_enum_sql("simple", "s", 5, 15),
+)
+# sort=n_chars desc: match set from the query, order from a stored field
+register(
+    "ft_sortfield_topk",
+    _call(DocumentsEngine.sorted_topk, "or3", OR3, "n_chars", False, k=10),
+    sorted_topk_sql("simple", _fixture("or3", OR3), "n_chars", False, 10),
+)
+# multiplicative boost function (edismax boost= / FunctionScoreQuery)
+register(
+    "ft_boostfunc_topk",
+    _call(DocumentsEngine.boostfunc_topk, "and2", MERGE_BATCH, k=10),
+    boostfunc_topk_sql("simple", _fixture("and2", MERGE_BATCH), 10),
+)
+
+# --- spans and intervals (L/search/spans, lucene/queries/intervals) --------
+# L/search/spans/SpanFirstQuery: 'merge' ending within the first 12
+# positions, window-restricted tf
+register(
+    "ft_spanfirst_topk",
+    _ranked(lambda s: BooleanSpec(must=[SpanFirstClause(_tok(s.analyzer, "merge"), 12)])),
+    span_first_topk_sql("simple", _tok(_SIMPLE, "merge"), 12, 10),
+)
+# L/search/spans/SpanPositionRangeQuery: the general [6, 30) window
+register(
+    "ft_spanposrange_topk",
+    _ranked(lambda s: BooleanSpec(
+        should=[SpanFirstClause(_tok(s.analyzer, "merge"), 30, start=6)], min_should_match=1,
+    )),
+    span_first_topk_sql("simple", _tok(_SIMPLE, "merge"), 30, 10, start=6),
+)
+# SpanNearQuery (inOrder): NearSpansOrdered slop-factor freq scoring
+register(
+    "ft_spannear_topk",
+    _call(DocumentsEngine.span_near_topk, "scan", "filter", 3, k=10),
+    span_near_topk_sql("simple", _tok(_SIMPLE, "scan"), _tok(_SIMPLE, "filter"), 3, 10),
+)
+# L/search/spans/SpanNotQuery: 'merge' survives unless 'batch' lies within
+# [p-2, p+2]
+register(
+    "ft_spannot_topk",
+    _ranked(lambda s: BooleanSpec(must=[SpanNotClause(
+        _tok(s.analyzer, "merge"), _tok(s.analyzer, "batch"), 2, 2,
+    )])),
+    span_not_topk_sql("simple", _tok(_SIMPLE, "merge"), _tok(_SIMPLE, "batch"), 2, 2, 10),
+)
+# L/search/spans/SpanOrQuery: one clause over the union of member
+# occurrences; tf = total member occurrences
+register(
+    "ft_spanor_topk",
+    _ranked(lambda s: BooleanSpec(must=[SpanOrClause(
+        tuple(_tok(s.analyzer, w) for w in ("scan", "filter", "vector")),
+    )])),
+    span_or_topk_sql("simple", tuple(_tok(_SIMPLE, w) for w in ("scan", "filter", "vector")), 10),
+)
+# L/search/spans/SpanContainingQuery / SpanWithinQuery: big = ordered
+# SpanNear(scan, filter, slop 8), little = 'merge' inside a matched big span
+for _name, _mode in (("ft_spancontain_topk", "containing"), ("ft_spanwithin_topk", "within")):
+    register(
+        _name,
+        _ranked(lambda s, mode=_mode: BooleanSpec(must=[SpanContainClause(
+            (_tok(s.analyzer, "scan"), _tok(s.analyzer, "filter")),
+            _tok(s.analyzer, "merge"), 8, mode,
+        )])),
+        span_contain_topk_sql(
+            "simple", _tok(_SIMPLE, "scan"), _tok(_SIMPLE, "filter"), 8,
+            _tok(_SIMPLE, "merge"), _mode, 10,
+        ),
+    )
+# lucene/queries/intervals Intervals.unordered / Intervals.ordered under
+# maxgaps 6: minimal intervals, 1/(1+gaps) per match
+for _name, _first, _second, _ordered_iv in (
+    ("ft_interval_unordered_topk", "filter", "scan", False),
+    ("ft_interval_ordered_topk", "scan", "filter", True),
+):
+    register(
+        _name,
+        _ranked(lambda s, a=_first, b=_second, ordered=_ordered_iv: BooleanSpec(must=[
+            IntervalUnorderedClause((_tok(s.analyzer, a), _tok(s.analyzer, b)), 6, ordered),
+        ])),
+        interval_unordered_topk_sql(
+            "simple", _tok(_SIMPLE, _first), _tok(_SIMPLE, _second), 6, 10, ordered=_ordered_iv,
+        ),
+    )
+# nested spans: L/search/spans/SpanNearQuery over two SpanOrQuery unions
+register(
+    "ft_spannearor_topk",
+    _ranked(lambda s: BooleanSpec(must=[SpanNearOrClause(
+        tuple(tuple(_tok(s.analyzer, w) for w in g) for g in (("merge", "scan"), ("batch", "filter"))),
+        4,
+    )])),
+    span_near_or_topk_sql(
+        "simple", (_tok(_SIMPLE, "merge"), _tok(_SIMPLE, "scan")),
+        (_tok(_SIMPLE, "batch"), _tok(_SIMPLE, "filter")), 4, 10,
+    ),
+)
+
+# --- query parsers and rewrites -------------------------------------------
+# L/search/FuzzyQuery default rewrite (TopTermsBlendedFreqScoringRewrite):
+# target 'batc', maxEdits 2, maxExpansions 50; the oracle expands in SQL
+register(
+    "ft_fuzzy_blended_topk",
+    _ranked(lambda s: _fuzzy_blended(s, "batc", 2, 50)),
+    fuzzy_blended_topk_sql("simple", "batc", 2, 50, 10),
+)
+# S/search/ExtendedDismaxQParser mm: 4 optional terms under "2<-25% 9<-3"
+# → msm = 4 + int(-1.0) = 3 (SolrPluginUtils#calculateMinShouldMatch). The
+# oracle binds the HAND-DERIVED integer, so the mm arithmetic is certified
 EDISMAX_MM = ("merge batch scan filter", "2<-25% 9<-3")
-EDISMAX_MM_EXPECTED = 3  # hand-derived; the oracle uses this literal
-# eDisMax pf: terms score individually; the whole query re-added as one
-# boosted exact-phrase SHOULD clause (phrase never gates matching)
-EDISMAX_PF = ("table hash", 2.0)
-# Classic QueryParser string: required term, boosted should, prohibited
-# term, exact phrase, nested disjunction group (field:value filter syntax
-# is pytest-covered; FILTER execution is certified by ft_filter_topk)
-QP_STRING = '+merge batch^2 -scan "table hash" (vector OR stream)'
-# Phonetic: misspelled surfaces whose Soundex codes hit indexed stems
-# (stram→stream S365, merj→merg M620)
-PHONETIC_Q = "stram merj"
-# ConstantScoreQuery: wrapped query + the constant boost every match scores
-CONSTSCORE = ("and2", ["merge", "batch"], 1.5)
-# frange: function expression + [l, u] bounds (half-integer values ⇒ the
-# f32 range compare is exact on both engines)
-FRANGE = ("sum(termfreq(text,'merge'), product(0.5, termfreq(text,'batch')))",
-          2.0, 5.0)
-# LTR LinearModel: (main query, feature term, (w_orig, w_tf, w_field))
-LTR = ("or3", ["vector", "stream", "filter"], "merge", (1.0, 0.75, 0.5))
-# LTR MultipleAdditiveTrees: two weighted regression trees over the
-# LinearModel feature vector (orig BM25 / termfreq / n_chars); thresholds
-# are representable halves so the <= compare is exact on both engines
+EDISMAX_MM_EXPECTED = 3
+register(
+    "ft_edismax_mm_topk",
+    _ranked(lambda s: _edismax_mm(s.analyzer, *EDISMAX_MM)),
+    bm25_topk_sql("simple", BooleanSpec(
+        should=[TermClause(_tok(_SIMPLE, w)) for w in EDISMAX_MM[0].split()],
+        min_should_match=EDISMAX_MM_EXPECTED,
+    ), 10),
+)
+# ExtendedDismaxQParser#addShingledPhraseQueries (pf): the terms score
+# individually and the whole query is re-added as one exact phrase SHOULD
+# clause boosted 2.0 (the phrase never gates matching)
+register(
+    "ft_edismax_pf_topk",
+    _ranked(lambda s: BooleanSpec(should=[
+        *[TermClause(t) for t, _ in s.analyzer.analyze("table hash")],
+        PhraseClause(*_phrase(s.analyzer, "table hash"), boost=2.0),
+    ])),
+    bm25_topk_sql("simple", BooleanSpec(should=[
+        *[TermClause(t) for t, _ in _SIMPLE.analyze("table hash")],
+        PhraseClause(*_phrase(_SIMPLE, "table hash"), boost=2.0),
+    ]), 10),
+)
+# L/queryparser/classic/QueryParser: required term, boosted should,
+# prohibited term, exact phrase, nested disjunction group. The oracle spec is
+# HAND-BUILT from the documented parse, so the gate certifies parsing
+register(
+    "ft_queryparser_topk",
+    _ranked(lambda s: parse_query_string(
+        '+merge batch^2 -scan "table hash" (vector OR stream)', s.analyzer,
+        expand=s.expand_terms, keyword_fields=("source", "lang"),
+    )),
+    bm25_topk_sql("simple", BooleanSpec(
+        must=[TermClause(_tok(_SIMPLE, "merge"))],
+        should=[
+            TermClause(_tok(_SIMPLE, "batch"), 2.0),
+            PhraseClause((_tok(_SIMPLE, "table"), _tok(_SIMPLE, "hash")), (0, 1)),
+            OrGroupClause((_tok(_SIMPLE, "vector"), _tok(_SIMPLE, "stream"))),
+        ],
+        must_not=[TermClause(_tok(_SIMPLE, "scan"))],
+    ), 10),
+)
+# phonetic (Soundex, lucene/analysis/phonetic): misspellings whose codes hit
+# indexed stems (stram→stream S365, merj→merg M620)
+register(
+    "ft_phonetic_topk",
+    _ranked(lambda s: s.multiterm_spec("phonetic", ("stram", "merj"))),
+    phonetic_topk_sql("simple", ("stram", "merj"), 10),
+)
+# L/search/ConstantScoreQuery: every match scores 1.5, doc-id order
+register(
+    "ft_constscore_topk",
+    _call(DocumentsEngine.constant_score_topk, "and2", MERGE_BATCH, 1.5, k=10),
+    constant_score_sql("simple", _fixture("and2", MERGE_BATCH), 1.5, 10),
+)
+# {!frange l=2 u=5}: half-integer values make the f32 range compare exact
+FRANGE_EXPR = "sum(termfreq(text,'merge'), product(0.5, termfreq(text,'batch')))"
+register(
+    "ft_frange",
+    _call(DocumentsEngine.frange_docs, FRANGE_EXPR, 2.0, 5.0, k=20),
+    frange_sql("simple", FRANGE_EXPR, 2.0, 5.0, 20, {w: _tok(_SIMPLE, w) for w in ("merge", "batch")}),
+)
+# Solr ltr: LinearModel rescore of the or3 top-50 over (orig BM25, termfreq
+# of 'merge', n_chars) with weights LTR_WEIGHTS, the [features] logging
+# transformer, and a MultipleAdditiveTrees ensemble (thresholds are
+# representable halves so the <= compare is exact on both engines)
+LTR_WEIGHTS = (1.0, 0.75, 0.5)
 LTR_TREES = (
     (1.0, {"feature": "orig", "threshold": 0.5,
            "left": {"feature": "tf", "threshold": 1.5,
@@ -247,1554 +884,315 @@ LTR_TREES = (
     (0.5, {"feature": "n_chars", "threshold": 400.0,
            "left": {"value": 0.05}, "right": {"value": 0.3}}),
 )
-# CommonTerms: "dup" is index-rare (required); merge/vector exceed the df
-# ratio and demote to the optional group — a genuinely mixed split
-COMMONTERMS = (["dup", "merge", "vector"], 0.2)
-# Solr function-query expression exercising arithmetic (sum/product/div),
-# conditional (if), termfreq ×2, norm(), a bare field ref, docfreq + idf
-# index scalars, and scale() as the outermost full-pass rescale
-FUNCEXPR = (
-    "scale(sum(product(2, termfreq(text,'merge')),"
-    " div(norm(text), sum(n_chars, 1)),"
-    " if(termfreq(text,'batch'), 0.25, 0),"
-    " div(ln(sum(docfreq(text,'merge'), 1)), 10),"
-    " product(idf(text,'batch'), 0.125)), 0, 20)"
+register(
+    "ft_ltr_topk",
+    _call(DocumentsEngine.ltr_rescore_topk, "or3", OR3, "merge", LTR_WEIGHTS, rerank_docs=50, k=10),
+    ltr_rescore_sql("simple", _fixture("or3", OR3), _tok(_SIMPLE, "merge"), LTR_WEIGHTS, 50, 10),
 )
-# Solr's canonical boost-by-recency/size shape: recip(x,m,a,b)=a/(m·x+b)
-# (ReciprocalFloatFunction) + linear(x,m,c) (LinearFloatFunction)
-RECIP_EXPR = (
-    "sum(linear(termfreq(text,'merge'), 2, 0.25),"
-    " recip(n_chars, 0.01, 100, 1))"
+register(
+    "ft_ltr_features",
+    _call(DocumentsEngine.ltr_feature_log, "or3", OR3, "merge", k=10),
+    ltr_feature_log_sql("simple", _fixture("or3", OR3), _tok(_SIMPLE, "merge"), 10),
 )
-# index-statistic ValueSources: ttf() (TotalTermFreqValueSource),
-# sumtotaltermfreq(), docfreq(), maxdoc() composed in one expression
-STATS_EXPR = (
-    "sum(product(termfreq(text,'merge'),"
-    " div(ttf(text,'batch'), sumtotaltermfreq(text))),"
-    " div(docfreq(text,'scan'), maxdoc()))"
-)
-# group.query buckets: two independent conjunctions, each a named group
+# group.query: each named query is a bucket with its own top-3
 GROUP_QUERY_BUCKETS = {
     "merge_batch": ("and2", ["merge", "batch"]),
     "vector_stream": ("and2", ["vector", "stream"]),
 }
-# Text Tagger (/tag handler) posted text: one out-of-dictionary token
-# (drops from the tag stream) and one repeated dictionary token (tagged at
-# BOTH positions — per-occurrence emission, not per-term)
-TAGGER_TEXT = "merge the batch stream zzznotaword merge scan"
-# strdist() (StrDistValueSource, 'edit' measure): rank by normalized
-# Levenshtein similarity of the source field to 'src1' (src0..src19 give
-# a full spread of distances) + a termfreq tiebreaker
-STRDIST_EXPR = (
-    "sum(product(2, strdist('src1', source)),"
-    " div(termfreq(text,'merge'), 100))"
+register(
+    "ft_group_query",
+    _call(DocumentsEngine.group_query_topk, GROUP_QUERY_BUCKETS, k=3),
+    group_query_topk_sql(
+        "simple", {b: _fixture(qt, ts) for b, (qt, ts) in GROUP_QUERY_BUCKETS.items()}, 3,
+    ),
 )
-# Query-time join ({!join from=source to=source} / lucene/join JoinUtil):
-# inner and2(dup, merge) matches docs spanning HALF the sources (10 of 20)
-# — the join filter genuinely restricts the outer or3 ranking; the scoring
-# variant ranks whole join-key groups by the max inner BM25 score
-JOIN_OUTER = ("or3", ["vector", "stream", "filter"])
-JOIN_INNER = ("and2", ["dup", "merge"])
-# MultiPhraseQuery: "merge (batch|stream)" — slot 2 admits either synonym
-MULTIPHRASE = [["merge"], ["batch", "stream"]]
-# Phrase-prefix (PhraseWildcardQuery / match_phrase_prefix): "merge bat*"
-PHRASE_PREFIX = (["merge"], "bat")
-# ComplexPhraseQueryParser: wildcards at ANY slot — "d?ta s*" (slot 0 uses
-# ?, slot 1 expands to the 6-term s-prefix family; neither fits
-# phrase_prefix's last-slot-only shape)
-COMPLEXPHRASE_Q = '"d?ta s*"'
-# Nested boolean: +merge +(batch stream) — inner disjunction as one clause
-NESTED_BOOL = (["merge"], ["batch", "stream"])
-# FeatureField.newSaturationQuery: (query, pivot, boost) — feature x=n_chars
-FEATURE_Q = ("or3", ["vector", "stream", "filter"], 200.0, 1.8)
-# ToParentBlockJoin score modes over the same child query as blockjoin
-BLOCKJOIN_SCORES_Q = ("or2", ["dup", "vector"], 5)
-# Reciprocal Rank Fusion: two retriever legs, top-n each, k0=60 (the
-# canonical constant), fused top-10
-RRF_Q = ("or3", ["vector", "stream", "filter"], "and2", ["merge", "batch"], 40, 60)
-# FreeTextSuggester: (completed context token, typed prefix, k) — prefix
-# 'd' yields BOTH orders at sf0.01: 'data' follows 'merge' (bigram path)
-# while 'dup' never does (ALPHA-discounted unigram backoff path)
-FREETEXT_Q = ("merge", "d", 8)
-# eDisMax qf cross-field: (qtype, terms, k) — terms chosen to score on BOTH
-# fields (titles are the docs' first 8 tokens, so per-field df/avgdl differ
-# and the dismax actually switches winners between fields)
-FIELDED_Q = ("or3", ["fast", "merge", "table"], 10)
-FIELDED_TIE = 0.3
-# filterCache fq: (main qtype, main terms, fq qtype, fq terms, k)
-FQ_CACHED_Q = ("or3", ["vector", "stream", "filter"], "or2", ["merge", "dup"], 10)
-# queryResultCache page fixture: (qtype, terms, k)
-QRC_Q = ("or2", ["window", "batch"], 10)
-# BlendedTermQuery cross-field fixture: (terms, k) — body-common terms whose
-# title df is far lower, so blending visibly changes the title leg's idf
-BLENDED_Q = (["fast", "merge", "table"], 10)
-# WordBreakSpellChecker: (run-together break input, adjacent combine pair)
-WORDBREAK_Q = ("mergebatch", ("bat", "ch"))
-# SynonymGraphFilter multi-word rule: "table hash" => dup (query-time graph
-# → OR(phrase, term) via QueryBuilder#analyzeGraphBoolean)
-SYNGRAPH_Q = (["table", "hash"], "dup")
-# SimpleQueryParser: +/- operators, an analyzed phrase, never-throws grammar
-SIMPLEQP_Q = '+merge +batch -scan "table hash"'
-# MatchAllDocsQuery under fq: q=*:* fq=source:src3 — constant score 1.0,
-# doc-key order (the most common Solr request shape)
-MATCHALL_FQ = ("source", "src3")
-# CoveringQuery: 3 SHOULD clauses, per-doc threshold 1 + (docID % 3)
-COVERING_Q = (["vector", "stream", "filter"], 3)
-# SpanMultiTermQueryWrapper: prefix 's' rewrites against the dictionary
-# into a SpanOr union, then ordered span-near with 'merge' at slop 3
-SPANMULTI_Q = ("s", "merge", 3)
-# Surround query (W=ordered / N=unordered distance ops over span kernels):
-# distances 2 and 3 → span slops 1 and 2 (DistanceQuery's opDistance-1)
-SURROUND_Q = "2W(merge, batch) OR 3N(vector, filter)"
-SURROUND_CLAUSES = [("w", "merge", "batch", 1), ("n", "vector", "filter", 2)]
-# SynonymQuery: explicit query-time synonyms scored as ONE pseudo-term
-# (tf summed, df = max) — both members live in the corpus so the merge
-# semantics (not just the degenerate single-term case) are hash-gated
-SYNONYMQ = ["merge", "join"]
-# KeywordRepeat chain graph query: 'tables' analyzes to original+stem at
-# one position → SynonymQuery(tables, table) via the QueryBuilder rule
-KEYWORDREPEAT_Q = "tables"
-# /analysis/field debug: per-stage token stream of the stop chain
-ANALYSIS_TEXT = "The Table HASH the Window"
-# cursorMark deep paging: (query, sort field) — page 2 by keyset cursor
-CURSOR_Q = ("or3", ["vector", "stream", "filter"], "n_chars")
-# MLT over a posted free-text body (stream.body): mixed known/novel tokens
+# ClusteringComponent analog: the top-50 page grouped by each doc's
+# dominant tf·idf term
+register(
+    "ft_result_clusters",
+    _call(DocumentsEngine.result_clusters, "or3", OR3, n_docs=50),
+    result_clusters_sql("simple", _fixture("or3", OR3), 50),
+)
+register(
+    "ft_ltr_trees_topk",
+    _call(DocumentsEngine.ltr_trees_topk, "or3", OR3, "merge", LTR_TREES, rerank_docs=50, k=10),
+    ltr_trees_sql("simple", _fixture("or3", OR3), _tok(_SIMPLE, "merge"), LTR_TREES, 50, 10),
+)
+# CommonTermsQuery: 'dup' is index-rare (required); merge/vector exceed the
+# 0.2 df ratio and demote to the optional group
+register(
+    "ft_commonterms_topk",
+    _call(DocumentsEngine.common_terms_topk, ["dup", "merge", "vector"], 0.2, k=10),
+    common_terms_topk_sql("simple", [_tok(_SIMPLE, w) for w in ["dup", "merge", "vector"]], 0.2, 10),
+)
+# query-time join ({!join from=source to=source}, JoinUtil): the inner
+# and2(dup, merge) spans half the sources, so the filter restricts the outer
+# or3 ranking; the scoring variant ranks join-key groups by max inner BM25
+register(
+    "ft_join_topk",
+    _call(DocumentsEngine.join_filter_topk, "or3", OR3, "and2", ["dup", "merge"], k=10),
+    join_filter_topk_sql(
+        "simple", _fixture("or3", OR3), [_tok(_SIMPLE, w) for w in ["dup", "merge"]],
+        "source", "source", 10, inner_occur="and",
+    ),
+)
+register(
+    "ft_join_score_topk",
+    _call(DocumentsEngine.join_score_topk, "and2", ["dup", "merge"], k=10),
+    join_score_topk_sql("simple", _fixture("and2", ["dup", "merge"]), "source", "source", 10),
+)
+# q= + facet.field= / stats.field= / group.facet / JSON facet
+# blockChildren domain over the and2 query's DocSet
+register(
+    "ft_facet_on_query",
+    _call(DocumentsEngine.facet_on_query, "and2", MERGE_BATCH, "source", limit=10),
+    facet_on_query_sql("simple", _fixture("and2", MERGE_BATCH), "source", 10),
+)
+register(
+    "ft_stats_on_query",
+    _call(DocumentsEngine.stats_on_query, "and2", MERGE_BATCH, "n_chars"),
+    stats_on_query_sql("simple", _fixture("and2", MERGE_BATCH), "n_chars"),
+)
+register(
+    "ft_group_facet",
+    _call(DocumentsEngine.group_facet, "and2", MERGE_BATCH, "source", "lang", limit=10),
+    group_facet_sql("simple", _fixture("and2", MERGE_BATCH), "source", "lang", 10),
+)
+register(
+    "ft_facet_block_children",
+    _call(DocumentsEngine.facet_block_children, "and2", MERGE_BATCH, "lang"),
+    facet_block_children_sql("simple", _fixture("and2", MERGE_BATCH), "lang"),
+)
+# RealTime Get: an original doc, a soft-committed appended doc, and an
+# absent key (the not-found path)
+RTG_KEYS = [42, 5_000_001, 987_654_321]
+register(
+    "ft_rtg",
+    _call(DocumentsEngine.rtg, RTG_KEYS, recipe=RTG_APPENDED),
+    rtg_sql("simple", RTG_DOCS, RTG_KEYS),
+)
+
+# --- pluggable similarities over the same index and norm bytes -------------
+register("ft_tfidf_topk", _sim("classic"), tfidf_topk_sql("simple", OR3_TERMS, 10))
+# BooleanSimilarity: clause score = boost, ranks by matched-term count
+register("ft_boolean_sim_topk", _sim("boolean"), f"""WITH {base_ctes("simple")},
+hits AS (
+    SELECT doc_id, CAST(count(DISTINCT term) AS FLOAT) AS score
+    FROM kept WHERE term IN ({", ".join(f"'{t}'" for t in OR3_TERMS)}) GROUP BY doc_id
+)
+SELECT rank::INTEGER AS rank, doc_id::BIGINT AS doc_id, score::FLOAT AS score FROM (
+    SELECT row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank, doc_id, score FROM hits
+) WHERE rank <= 10 ORDER BY rank""")
+register("ft_lm_topk", _sim("lm"), lm_topk_sql("simple", OR3_TERMS, 10))
+register("ft_dfr_topk", _sim("dfr"), dfr_topk_sql("simple", OR3_TERMS, 10))
+register("ft_ib_topk", _sim("ib"), ib_topk_sql("simple", OR3_TERMS, 10))
+register("ft_lmjm_topk", _sim("lmjm"), lmjm_topk_sql("simple", OR3_TERMS, 10))
+register("ft_dfi_topk", _sim("dfi"), dfi_topk_sql("simple", OR3_TERMS, 10))
+
+# --- distributed search and index-maintenance invariants -------------------
+# SolrCloud LocalStatsCache: 4 hash-routed shards, each scoring with ITS OWN
+# df/docCount/avgdl, merged by (score desc, doc_id asc)
+register(
+    "ft_localstats_topk",
+    lambda spark, sf_dir: localstats_topk(spark, sf_dir, "or3", OR3, k=10),
+    localstats_topk_sql("simple", _fixture("or3", OR3_TERMS), 10),
+)
+# ExactStatsCache / addIndexes / a TieredMergePolicy round all equal the
+# single collection bitwise: they share the plain or3 oracle
+OR3_SQL = bm25_topk_sql("simple", _fixture("or3", OR3_TERMS), 10)
+register(
+    "ft_exactstats_topk",
+    lambda spark, sf_dir: exactstats_topk(spark, sf_dir, "or3", OR3, k=10),
+    OR3_SQL,
+)
+# SPLITSHARD (SolrIndexSplitter): 3 hash-routed children (hard-linked
+# segments + child tombstone masks), exact-stats scatter-gather ≡ the single
+# collection
+register(
+    "ft_split_union_topk",
+    lambda spark, sf_dir: split_union_topk(spark, sf_dir, "or3", ["merge", "scan", "window"], k=10),
+    bm25_topk_sql("simple", _fixture("or3", ["merge", "scan", "window"]), 10),
+)
+# updateNumericDocValue: two stacked generations read latest-wins as a
+# multiplicative boost — re-ranks without reindex
+register(
+    "ft_dv_boost_topk",
+    _call(DocumentsEngine.dv_boost_topk, "or3", OR3, k=10, recipe=DV_UPDATED),
+    dv_boost_topk_sql("simple", _fixture("or3", OR3_TERMS), 10),
+)
+# IndexOptions.DOCS: freq() == 1 at read time, norms still apply
+register("ft_docsonly_topk", _sim("docsonly"), docsonly_topk_sql("simple", OR3_TERMS, 10))
+# DisMax mm spec "2<-25%" over a 4-term OR: the engine parses it; the oracle
+# binds the HAND-COMPUTED msm=3 (4 + int(f32(-25%·4)))
+register(
+    "ft_mm_spec_topk",
+    _call(DocumentsEngine.topk, "or_minshould", ["query", "scan", "sort", "window"], k=10,
+          min_should=calculate_min_should_match(4, "2<-25%")),
+    bm25_topk_sql("simple", _fixture("or_minshould", ["query", "scan", "sort", "window"], 3), 10),
+)
+register(
+    "ft_tiered_merge_topk",
+    lambda spark, sf_dir: tiered_merge_topk(spark, sf_dir, "or3", OR3, k=10),
+    OR3_SQL,
+)
+register(
+    "ft_addindexes_topk",
+    lambda spark, sf_dir: addindexes_topk(spark, sf_dir, "or3", OR3, k=10),
+    OR3_SQL,
+)
+# FieldMaskingSpanQuery: title 'table' (the first 8 words) masked into body
+# position space, ordered-near a body 'join' within 6
+register(
+    "ft_fieldmask_span_topk",
+    lambda spark, sf_dir: field_masking_span_topk(spark, sf_dir, "table", "join", 6, k=10),
+    field_masking_span_topk_sql("simple", TITLE_EXPR_SQL, "table", "join", 6, 10),
+)
+# DiversifiedTopDocsCollector: at most ONE result per source (the plain or3
+# page carries two src14 docs, so the cap binds)
+register(
+    "ft_diversified_topk",
+    _call(DocumentsEngine.diversified_topk, "or3", OR3, k=10, max_per_key=1),
+    diversified_topk_sql("simple", _fixture("or3", OR3_TERMS), 10, 1),
+)
+# AxiomaticF2EXP (L/search/similarities/AxiomaticF2EXP) and
+# SweetSpotSimilarity (plateau length norm + baseline tf)
+register("ft_f2exp_topk", _sim("f2exp"), f2exp_topk_sql("simple", OR3_TERMS, 10))
+register("ft_sweetspot_topk", _sim("sweetspot"), sweetspot_topk_sql("simple", OR3_TERMS, 10))
+# omitNorms=true: every doc scores through the norm-cache entry for length 1
+register(
+    "ft_omitnorms_topk",
+    _call(DocumentsEngine.omitnorms_topk, "or3", OR3, k=10),
+    omitnorms_topk_sql("simple", OR3_TERMS, 10),
+)
+# BM25Similarity(k1=0.9, b=0.4), the classic web-search tuning
+register(
+    "ft_bm25_tuned_topk",
+    _ranked(lambda s: _bm25_tuned(s, s.parse("or3", OR3), k1=0.9, b=0.4)),
+    bm25_topk_sql("simple", _fixture("or3", OR3_TERMS), 10, k1=0.9, b=0.4),
+)
+
+# --- highlighting, suggesters, spellcheck, admin handlers -----------------
+# UnifiedHighlighter analog: best-window snippet, then hl.snippets=2
+register(
+    "ft_highlight_topk",
+    _call(DocumentsEngine.highlight_topk, "and2", MERGE_BATCH, k=10),
+    highlight_topk_sql("simple", _fixture("and2", MERGE_BATCH), 10),
+)
+register(
+    "ft_highlight_passages",
+    _call(DocumentsEngine.highlight_passages, "and2", MERGE_BATCH, k=10),
+    highlight_passages_sql("simple", _fixture("and2", MERGE_BATCH), 10),
+)
+# Lookup / SpellCheckComponent: dictionary candidates ranked by docFreq —
+# prefix, fuzzy (DirectSpellChecker) and infix (AnalyzingInfixSuggester)
+register(
+    "ft_suggest",
+    _call(DocumentsEngine.suggest, "prefix", "s", k=10),
+    suggest_sql("simple", "term LIKE 's%'", 10),
+)
+register(
+    "ft_spellcheck",
+    _call(DocumentsEngine.suggest, "fuzzy", ("batc", 1), k=10),
+    suggest_sql("simple", "levenshtein(term, 'batc') <= 1", 10),
+)
+register(
+    "ft_suggest_infix",
+    _call(DocumentsEngine.suggest, "infix", "or", k=10),
+    suggest_sql("simple", "term LIKE '%or%'", 10),
+)
+# FuzzySuggester: 'sma' completes to 'small' AND fuzzy-matches 'scan' and
+# 'spark', so the df ranking is exercised
+register(
+    "ft_fuzzy_suggest",
+    _call(DocumentsEngine.suggest_fuzzy_prefix, "sma", k=10),
+    suggest_fuzzy_prefix_sql("simple", "sma", 10),
+)
+# DocumentDictionary suggester: stored-field entries weighted by n_chars
+register(
+    "ft_suggest_docdict",
+    _call(DocumentsEngine.suggest_docdict, "src1", k=10),
+    """
+SELECT rank::INTEGER AS rank, key, weight::BIGINT AS weight, doc_id::BIGINT AS doc_id FROM (
+    SELECT row_number() OVER (ORDER BY n_chars DESC, source ASC, doc_id ASC) AS rank,
+           source AS key, n_chars AS weight, doc_id
+    FROM documents WHERE source LIKE 'src1%'
+) WHERE rank <= 10 ORDER BY rank""",
+)
+# BlendedInfixSuggester POSITION_LINEAR: later matches decay 10%/position
+register(
+    "ft_suggest_blended",
+    _call(DocumentsEngine.suggest_blended_infix, "or", k=10),
+    suggest_blended_infix_sql("simple", "or", 10),
+)
+# FreeTextSuggester (2-gram LM, stupid backoff): 'data' follows 'merge'
+# (bigram path) while 'dup' never does (ALPHA-discounted unigram backoff)
+register(
+    "ft_suggest_freetext",
+    _call(DocumentsEngine.suggest_freetext, "merge", "d", k=8),
+    suggest_freetext_sql("simple", "merge", "d", 8),
+)
+# WordBreakSpellChecker: break a run-together input, combine an adjacent pair
+register(
+    "ft_wordbreak",
+    _call(DocumentsEngine.word_break, "mergebatch", ("bat", "ch")),
+    word_break_sql("simple", "mergebatch", ("bat", "ch")),
+)
+# SynonymGraphFilter rule "table hash" => dup lowered by
+# QueryBuilder#analyzeGraphBoolean to OR(phrase("table hash"), term(dup))
+register(
+    "ft_syngraph_topk",
+    _ranked(lambda s: BooleanSpec(should=[
+        PhraseClause((_tok(s.analyzer, "table"), _tok(s.analyzer, "hash")), (0, 1)),
+        TermClause(_tok(s.analyzer, "dup")),
+    ], min_should_match=1)),
+    bm25_topk_sql("simple", BooleanSpec(should=[
+        PhraseClause(("table", "hash"), (0, 1)), TermClause("dup"),
+    ], min_should_match=1), 10),
+)
+# /analysis/field: per-stage token stream of the stop chain
+register(
+    "ft_analysis_debug",
+    _call(DocumentsEngine.analysis_debug, "The Table HASH the Window", analyzer="stop"),
+    analysis_debug_sql("The Table HASH the Window"),
+)
+# cursorMark: page 2 on a field sort via keyset continuation
+register(
+    "ft_cursor_page2",
+    _call(DocumentsEngine.cursor_page2, "or3", OR3, "n_chars", k=10),
+    cursor_page2_sql("simple", _fixture("or3", OR3), "n_chars", 10),
+)
+# MLT over a posted free-text body (stream.body): known and novel tokens
 MLT_TEXT = "the merge merge batch stream pipeline zzzunknown"
-# lucene/monitor stored-query registry: query_id → (qtype, terms, msm) —
-# one conjunction, one msm disjunction, one phrase, one NOT
+register(
+    "ft_mlt_text_topk",
+    _call(DocumentsEngine.mlt_text_topk, MLT_TEXT, top_terms=4, k=10),
+    mlt_text_topk_sql("simple", MLT_TEXT, 4, 10),
+)
+# lucene/monitor stored-query registry: one conjunction, one msm
+# disjunction, one phrase, one NOT; query_id → (qtype, terms, msm)
 MONITOR_QUERIES = {
     "alert_and": ("and2", ("merge", "batch"), 0),
     "alert_msm": ("or_minshould", ("vector", "stream", "filter"), 2),
     "alert_phrase": ("phrase2", ("table", "hash"), 0),
     "alert_not": ("and_not", ("scan", "join"), 0),
 }
-
-
-def fulltext_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable] = {}
-    for name, (an, qt, terms, msm, k) in FULLTEXT_TOPK.items():
-        out[name] = _topk_query(an, qt, terms, msm, k)
-    for name, (kind, pattern, _pred) in MULTITERM.items():
-        out[name] = (
-            lambda spark, sf_dir, kind=kind, pattern=pattern:
-            get_engine(spark, sf_dir, "simple").multiterm_topk(kind, pattern, k=10)
-        )
-    # CoveringQuery: per-doc dynamic minimumNumberMatched
-    out["ft_covering_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).covering_topk(COVERING_Q[0], COVERING_Q[1], k=10)
-    # MatchAllDocsQuery + fq (q=*:* — keyword posting gates, score 1.0)
-    out["ft_matchall_fq"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).matchall_topk(MATCHALL_FQ[0], MATCHALL_FQ[1], k=10)
-    # SimpleQueryParser (never-throws end-user grammar)
-    out["ft_simpleqp_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).simple_query_topk(SIMPLEQP_Q, k=10)
-    # SpanMultiTermQueryWrapper: dictionary-rewritten span operand
-    out["ft_spanmulti_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).span_multiterm_topk(SPANMULTI_Q[0], SPANMULTI_Q[1], SPANMULTI_Q[2], k=10)
-    # Surround parser: ordered + unordered distance operators
-    out["ft_surround_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).surround_topk(SURROUND_Q, k=10)
-    # SynonymQuery (explicit query-time synonyms, tf summed / df = max)
-    out["ft_synonymquery_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).synonym_topk(SYNONYMQ, k=10)
-    # KeywordRepeat chain + QueryBuilder position-graph rule: same-position
-    # original+stem query tokens → one SynonymQuery
-    out["ft_keywordrepeat_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "keywordrepeat"
-    ).synonym_term_topk(KEYWORDREPEAT_Q, k=10)
-    out["ft_dismax_topk"] = lambda spark, sf_dir: get_engine(spark, sf_dir, "simple").dismax_topk(
-        DISMAX_TERMS, DISMAX_TIE, k=10
-    )
-    out["ft_mlt_topk"] = lambda spark, sf_dir: get_engine(spark, sf_dir, "simple").mlt_topk(
-        MLT_SRC_DOC, top_terms=5, k=10
-    )
-    # MLT interestingTerms=details: the ranked tf·idf term list itself
-    out["ft_mlt_terms"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).mlt_terms(MLT_SRC_DOC, top_terms=8)
-    # edismax bf= (ADDITIVE function boost; distinct from multiplicative boost=)
-    out["ft_bf_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).bf_topk("and2", ["merge", "batch"], k=10)
-    # ExternalFileField: per-doc float from OUTSIDE the index (side table
-    # keyed on doc id, reloadable without reindex) as an additive boost
-    out["ft_extfile_boost_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).external_file_boost_topk("and2", ["merge", "batch"], k=10)
-    # FunctionScoreQuery#boostByQuery: ×1.8 for docs also matching 'spark'
-    out["ft_boost_by_query_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).boost_by_query_topk(
-        "or3", ["vector", "stream", "filter"], "term", ["spark"], 1.8, k=10,
-    )
-    out["ft_page2_topk"] = lambda spark, sf_dir: get_engine(spark, sf_dir, "simple").search_after_page(
-        PAGE2_QUERY[0], PAGE2_QUERY[1], k=10
-    )
-    # ToChildBlockJoin: children of the top-2 parents, parent score
-    # propagated to every child
-    out["ft_blockjoin_children"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).blockjoin_children("or2", BLOCKJOIN_TERMS, n_parents=2)
-    out["ft_blockjoin_source"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).blockjoin_by_source("or2", BLOCKJOIN_TERMS, n_groups=5)
-    # ToParentBlockJoin ScoreMode.Max/Total/Avg side by side (ordered
-    # deterministic double fold for Total; Avg = total/count)
-    out["ft_blockjoin_scores"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).blockjoin_scores(BLOCKJOIN_SCORES_Q[0], BLOCKJOIN_SCORES_Q[1],
-                       n_groups=BLOCKJOIN_SCORES_Q[2])
-    # FeatureField saturation query: bm25 + boost*x/(x+pivot) static boost
-    out["ft_feature_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).feature_topk(FEATURE_Q[0], FEATURE_Q[1], pivot=FEATURE_Q[2],
-                   boost=FEATURE_Q[3], k=10)
-    # FeatureField newLogQuery / newSigmoidQuery — the other two members
-    # of the FeatureField query family (saturation is ft_feature_topk)
-    out["ft_feature_log_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).feature_log_topk(FEATURE_Q[0], FEATURE_Q[1], scale=1.0,
-                       boost=FEATURE_Q[3], k=10)
-    out["ft_feature_sigmoid_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).feature_sigmoid_topk(FEATURE_Q[0], FEATURE_Q[1], pivot=FEATURE_Q[2],
-                           a=2.0, boost=FEATURE_Q[3], k=10)
-    # Reciprocal Rank Fusion of two WAND top-n retriever legs
-    out["ft_rrf_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).rrf_topk(RRF_Q[0], RRF_Q[1], RRF_Q[2], RRF_Q[3],
-               n=RRF_Q[4], k0=RRF_Q[5], k=10)
-    # BoostQuery (per-clause boosts folded into weights)
-    out["ft_boost_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).boosted_topk(BOOST_TERMS, k=10)
-    # explain / debugQuery (per-term BM25 breakdown for one doc)
-    out["ft_explain"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).explain("or3", EXPLAIN_TERMS, EXPLAIN_DOC)
-    # FILTER occur (non-scoring candidate restriction before top-k)
-    out["ft_filter_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).filtered_topk("or3", FILTER_TERMS, "source", FILTER_SOURCE, k=10)
-    # SloppyPhrase (SloppyPhraseMatcher semantics) — driver-checked against a
-    # WITH RECURSIVE DuckDB emulation of the 2-term greedy heap walk
-    # (oracles.sloppy_phrase_topk_sql); n>2 parity vs the independent oracle
-    # implementation is gated by tests/test_sloppy_phrase.py.
-    out["ft_sloppy_phrase_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).topk("phrase2", ["table", "hash"], k=10, slop=3)
-    # TotalHits (value, relation) — numFound with the count collector
-    out["ft_total_hits"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).total_hits("or3", TOTAL_HITS_TERMS, threshold=TOTAL_HITS_THRESHOLD)
-    # deletes/updates: tombstone + re-add, then search the live corpus
-    out["ft_after_update_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple", UPDATED
-    ).topk("or3", AFTER_UPDATE_TERMS, k=10)
-    # expungeDeletes (forceMergeDeletes): the SAME update, then the
-    # tombstones are PHYSICALLY rewritten out (postings re-encoded, locals
-    # compacted, bases re-derived, stats re-finalized) — same oracle, so a
-    # compaction bug anywhere in the rewrite goes hash-red
-    out["ft_after_expunge_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple", EXPUNGED
-    ).topk("or3", AFTER_UPDATE_TERMS, k=10)
-    # PatternReplaceFilter / UAX29URLEmailTokenizer over their injected
-    # fixtures (digits / URLs+emails appended deterministically by doc_id;
-    # the SAME expression string runs in DuckDB) — query surfaces carry the
-    # interesting forms, the chain normalizes both sides identically
-    from .engine import PATREPLACE_TEXT_EXPR, URLEMAIL_TEXT_EXPR
-
-    out["ft_patreplace_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "patreplace", IndexRecipe(text_expr=PATREPLACE_TEXT_EXPR)
-    ).topk("and2", PATREPLACE_Q, k=10)
-    out["ft_urlemail_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "urlemail", IndexRecipe(text_expr=URLEMAIL_TEXT_EXPR)
-    ).topk("or2", URLEMAIL_Q, k=10)
-    # full UAX#29 word break over a non-ASCII corpus (StandardTokenizer's
-    # StandardTokenizerImpl.jflex semantics — Cyrillic/Greek/accented-Latin
-    # runs, Han singles, Katakana runs): the index and the query analyze
-    # through analysis/uax29.py; bitwise vs the shared-expansion oracle
-    from .engine import UNICODE_TEXT_EXPR
-
-    out["ft_unicode_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "uni", IndexRecipe(text_expr=UNICODE_TEXT_EXPR)
-    ).topk("or2", UNICODE_Q, k=10)
-    # MinHashFilter LSH fingerprint index (LA/minhash): docs index as their
-    # 16-bucket min-hash signatures; MLT over the source doc's signature ranks by
-    # shared buckets ≈ Jaccard resemblance (all 16 sig tokens have tf=1, so
-    # top_terms=16 selects the whole signature) — index-time near-dup search
-    out["ft_minhash_sim_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "minhashsig"
-    ).mlt_topk(MINHASH_SRC_DOC, top_terms=16, k=10)
-    # copyField catchall (_text_): body + keyword metadata in ONE field —
-    # 'src7' only exists in the catchall, so the match set is the src7 slice
-    out["ft_copyfield_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple", COPYFIELD
-    ).topk("and2", COPYFIELD_Q, k=10)
-    # eDisMax qf="title^2 body^1": true multi-field search — the derived
-    # title field is its OWN index (independent postings/norms/stats, the
-    # Lucene per-field model), dismax across field scores at tie=0
-    out["ft_fielded_qf_topk"] = lambda spark, sf_dir: fielded_dismax_topk(
-        spark, sf_dir, *FIELDED_Q
-    )
-    # DisjunctionMaxScorer tiebreak (edismax tie=0.3): max + tie·(sum−max)
-    # in double over the present fields, one f32 cast
-    out["ft_fielded_tie_topk"] = lambda spark, sf_dir: fielded_dismax_topk(
-        spark, sf_dir, *FIELDED_Q, tie=FIELDED_TIE
-    )
-    # filterCache: arbitrary-query fq served as a cached DocSet riding the
-    # kernels as a non-scoring FILTER (SolrIndexSearcher#getDocSet)
-    out["ft_fq_cached_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).fq_topk(*FQ_CACHED_Q)
-    # queryResultCache: the returned page is a CACHE HIT off the
-    # ceil-to-window superset a first ask cached (getDocListC semantics)
-    out["ft_qrc_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).qrc_topk(*QRC_Q)
-    # BlendedTermQuery cross-field (ES cross_fields): per-term df blended
-    # to the max across fields, per-field scoring with the shared df,
-    # dismax across fields
-    out["ft_blended_cross_topk"] = lambda spark, sf_dir: blended_term_topk(
-        spark, sf_dir, BLENDED_Q[0], k=BLENDED_Q[1]
-    )
-    # documentCache: the presented page's stored fields come through the
-    # per-engine LRU (fetch-fields-late + memoized re-fetch)
-    out["ft_topk_fetch"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).topk_fetch(*QRC_Q)
-    # commit point + time travel: the SAME update applied, but the searcher
-    # opens AT the pre-update commit (DirectoryReader.open(IndexCommit) over
-    # a SnapshotDeletionPolicy-retained generation) — answers are bitwise
-    # the ORIGINAL corpus, which is exactly what the oracle scores
-    out["ft_asof_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple", ASOF
-    ).topk("or3", AFTER_UPDATE_TERMS, k=10)
-    # lucene/classification KNearestNeighborClassifier: MLT query per
-    # held-out doc against a TRAIN-split index, majority vote of the BM25
-    # top-k neighbors; batched through ONE search_many job
-    from .engine import knn_classify
-
-    out["classify_knn"] = knn_classify
-    # atomic partial update (AtomicUpdateDocumentMerger): field-level `add`
-    # op resolved against the live doc, then the same tombstone+re-add path
-    out["ft_after_atomic_update_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple", ATOMIC_UPDATED
-    ).topk("or3", AFTER_UPDATE_TERMS, k=10)
-    # delete-by-query: tombstone the whole match set of a query
-    # (distributed hit-set path, no driver collect), then search — surviving
-    # docs score with the SHRUNKEN global stats (docCount/avgdl/df)
-    out["ft_after_dbq_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple", DBQ_DELETED
-    ).topk("or3", AFTER_UPDATE_TERMS, k=10)
-    # ValueSource function query as the ranking function (termfreq sort)
-    out["ft_function_query"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).function_query_topk("merge", k=10)
-    # Full function-query EXPRESSION surface (ValueSourceParser grammar:
-    # arithmetic + conditional + index-backed sources in one parsed string)
-    out["ft_funcexpr_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).function_expr_topk(FUNCEXPR, k=10)
-    # ReciprocalFloatFunction / LinearFloatFunction boost (recip + linear)
-    out["ft_recip_boost_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).function_expr_topk(RECIP_EXPR, k=10)
-    # ttf()/sumtotaltermfreq() index-statistic ValueSources
-    out["ft_funcexpr_stats_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).function_expr_topk(STATS_EXPR, k=10)
-    # strdist() string-distance ValueSource (StrDistValueSource, 'edit')
-    out["ft_strdist_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).function_expr_topk(STRDIST_EXPR, k=10)
-    # Text Tagger (/tag handler): dictionary annotation of a posted text
-    out["ft_tagger"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).tagger(TAGGER_TEXT)
-    # MultiPhraseQuery: a phrase slot admitting several terms
-    out["ft_multiphrase_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).multiphrase_topk(MULTIPHRASE, k=10)
-    # Phrase-prefix: last slot = term-dictionary prefix expansion
-    out["ft_phrase_prefix_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).phrase_prefix_topk(PHRASE_PREFIX[0], PHRASE_PREFIX[1], k=10)
-    # ComplexPhraseQueryParser: wildcard words inside the phrase, any slot
-    out["ft_complexphrase_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).complex_phrase_topk(COMPLEXPHRASE_Q, k=10)
-    # Nested BooleanQuery: +must +(inner disjunction) as one clause subtree
-    out["ft_nested_bool_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).nested_bool_topk(NESTED_BOOL[0], NESTED_BOOL[1], k=10)
-    # ReRank query: first-pass BM25 top-N, rescore candidates matching the
-    # rerank query as first + reRankWeight*rerank (ReRankQParserPlugin)
-    out["ft_rerank_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).rerank_topk(
-        "or3", RERANK_MAIN, "and2", RERANK_RR,
-        rerank_docs=RERANK_DOCS, weight=RERANK_W, k=10,
-    )
-    # Query elevation: configured ids pinned to the top in config order
-    out["ft_elevate_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).elevate_topk("or3", RERANK_MAIN, ELEVATE_IDS, k=10)
-    # SpellCheck collation: best correction per term + verified hit count
-    out["ft_spellcheck_collate"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).spellcheck_collate(SPELL_TERMS, max_edits=2)
-    # Term vectors: one doc's full term vector read from the index postings
-    out["ft_termvectors"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).term_vectors(TV_DOC)
-    # TermsComponent: dictionary enumeration under a prefix (sort=count)
-    out["ft_terms_regex"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).terms_enum_regex(*TERMS_REGEX)
-    out["ft_terms_enum"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).terms_enum(*TERMS_ENUM)
-    # Sort-by-field search (sort=n_chars desc): match set from the query,
-    # order from a stored field, no scoring
-    out["ft_sortfield_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).sorted_topk(SORTFIELD_Q[0], SORTFIELD_Q[1], "n_chars", False, k=10)
-    # Multiplicative boost function (edismax boost= / FunctionScoreQuery)
-    out["ft_boostfunc_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).boostfunc_topk(BOOSTFUNC_Q[0], BOOSTFUNC_Q[1], k=10)
-    # SpanFirstQuery: term within the first N positions, window-tf scoring
-    out["ft_spanfirst_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).span_first_topk(SPANFIRST[0], SPANFIRST[1], k=10)
-    # SpanPositionRangeQuery: the general [start, end) window
-    out["ft_spanposrange_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).span_position_range_topk(SPANPOSRANGE[0], SPANPOSRANGE[1],
-                               SPANPOSRANGE[2], k=10)
-    # SpanNearQuery (ordered): NearSpansOrdered slop-factor freq scoring
-    out["ft_spannear_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).span_near_topk(SPANNEAR[0], SPANNEAR[1], SPANNEAR[2], k=10)
-    # SpanNotQuery: include span survives unless exclude is within window
-    out["ft_spannot_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).span_not_topk(SPANNOT[0], SPANNOT[1], SPANNOT[2], SPANNOT[3], k=10)
-    # SpanOrQuery: one clause over the union of member occurrences
-    out["ft_spanor_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).span_or_topk(SPANOR, k=10)
-    # SpanContainingQuery: big spans that enclose a little occurrence
-    out["ft_spancontain_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).span_contain_topk(*SPANCONTAIN, mode="containing", k=10)
-    # SpanWithinQuery: little occurrences enclosed by a matched big span
-    out["ft_spanwithin_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).span_contain_topk(*SPANCONTAIN, mode="within", k=10)
-    # IntervalQuery (Intervals.unordered + maxgaps): minimal intervals
-    out["ft_interval_unordered_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).interval_unordered_topk(*INTERVAL_UNORD, k=10)
-    # IntervalQuery (Intervals.ordered + maxgaps)
-    out["ft_interval_ordered_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).interval_unordered_topk(*INTERVAL_ORD, k=10, ordered=True)
-    # Nested spans: SpanNear whose operands are SpanOr unions
-    out["ft_spannearor_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).span_near_or_topk(SPANNEAROR[0], SPANNEAROR[1], SPANNEAROR[2], k=10)
-    # Blended FuzzyQuery: shared max-df statistics + per-term edit boosts
-    out["ft_fuzzy_blended_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).fuzzy_blended_topk(
-        FUZZY_BLENDED[0], FUZZY_BLENDED[1], FUZZY_BLENDED[2], k=10
-    )
-    # eDisMax mm spec resolved to minShouldMatch (oracle pins the integer)
-    out["ft_edismax_mm_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).edismax_mm_topk(EDISMAX_MM[0], EDISMAX_MM[1], k=10)
-    # eDisMax pf phrase boost: qf terms + one boosted implicit phrase clause
-    out["ft_edismax_pf_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).edismax_pf_topk(EDISMAX_PF[0], EDISMAX_PF[1], k=10)
-    # Classic QueryParser: one Lucene-syntax string parsed and executed
-    # end-to-end (oracle spec is HAND-BUILT, so the gate certifies parsing)
-    out["ft_queryparser_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).query_string_topk(QP_STRING, k=10)
-    # Phonetic (Soundex) expansion: misspellings match sound-alike stems
-    out["ft_phonetic_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).phonetic_topk(PHONETIC_Q, k=10)
-    # ConstantScoreQuery: every match scores the boost, doc-id order
-    out["ft_constscore_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).constant_score_topk(CONSTSCORE[0], CONSTSCORE[1], CONSTSCORE[2], k=10)
-    # Function range query {!frange}: filter docs by expression value
-    out["ft_frange"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).frange_docs(FRANGE[0], FRANGE[1], FRANGE[2], k=20)
-    # LTR LinearModel rescore over extracted features (Solr ltr contrib)
-    out["ft_ltr_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).ltr_rescore_topk(LTR[0], LTR[1], LTR[2], LTR[3], rerank_docs=50, k=10)
-    # LTR feature logging ([features] doc transformer — the training-set
-    # emission half of the LTR loop; same extractors as the rescorer)
-    out["ft_ltr_features"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).ltr_feature_log(LTR[0], LTR[1], LTR[2], k=10)
-    # group.query grouping: each named query is a bucket with its own top-k
-    out["ft_group_query"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).group_query_topk(GROUP_QUERY_BUCKETS, k=3)
-    # Search-result clustering (ClusteringComponent analog): the top-50
-    # page grouped by each doc's dominant tf·idf term
-    out["ft_result_clusters"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).result_clusters("or3", ["vector", "stream", "filter"], n_docs=50)
-    # LTR tree-ensemble rescore (MultipleAdditiveTreesModel)
-    out["ft_ltr_trees_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).ltr_trees_topk(LTR[0], LTR[1], LTR[2], LTR_TREES, rerank_docs=50, k=10)
-    # CommonTermsQuery: df-based required/optional split from index stats
-    out["ft_commonterms_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).common_terms_topk(COMMONTERMS[0], COMMONTERMS[1], k=10)
-    # Query-time join filter ({!join from= to=} — JoinUtil ScoreMode.None):
-    # outer ranking restricted to docs sharing a source with inner matches
-    out["ft_join_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).join_filter_topk(
-        JOIN_OUTER[0], JOIN_OUTER[1], JOIN_INNER[0], JOIN_INNER[1], k=10
-    )
-    # Scoring join ({!join score=max} — JoinUtil ScoreMode.Max): docs score
-    # the max inner BM25 score over their join key
-    out["ft_join_score_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).join_score_topk(JOIN_INNER[0], JOIN_INNER[1], k=10)
-    # The canonical Solr request: q= + facet.field= over the query's DocSet
-    out["ft_facet_on_query"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).facet_on_query("and2", ["merge", "batch"], "source", limit=10)
-    # stats.field over the same DocSet (StatsComponent on a query)
-    out["ft_stats_on_query"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).stats_on_query("and2", ["merge", "batch"], "n_chars")
-    # group.facet=true: buckets count DISTINCT groups, not docs
-    out["ft_group_facet"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).group_facet("and2", ["merge", "batch"], "source", "lang", limit=10)
-    # JSON facet domain switch: blockChildren — count over ALL children of
-    # every matched parent block (source group), not just matching docs
-    out["ft_facet_block_children"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).facet_block_children("and2", ["merge", "batch"], "lang")
-    # RealTime Get: stored doc by key, soft-committed appends visible
-    out["ft_rtg"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple", RTG_APPENDED
-    ).rtg(RTG_KEYS)
-    # ClassicSimilarity (TF-IDF) — pluggable similarity over the same index
-    out["ft_tfidf_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).tfidf_topk("or3", ["vector", "stream", "filter"], k=10)
-    # BooleanSimilarity — constant-score matching (third similarity)
-    out["ft_boolean_sim_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).boolean_sim_topk("or3", ["vector", "stream", "filter"], k=10)
-    # LMDirichletSimilarity — language-model ranking (fourth similarity)
-    out["ft_lm_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).lm_topk("or3", ["vector", "stream", "filter"], k=10)
-    # DFR / IB / LMJelinekMercer — the remaining SimilarityBase family
-    # (similarities five through seven over the same index and norm bytes)
-    out["ft_dfr_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).sim_topk("dfr", "or3", ["vector", "stream", "filter"], k=10)
-    out["ft_ib_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).sim_topk("ib", "or3", ["vector", "stream", "filter"], k=10)
-    out["ft_lmjm_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).sim_topk("lmjm", "or3", ["vector", "stream", "filter"], k=10)
-    # DFI — divergence from independence (parameter-free; similarity eight)
-    out["ft_dfi_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).sim_topk("dfi", "or3", ["vector", "stream", "filter"], k=10)
-    # SolrCloud distributed search with per-shard statistics: 4 hash-routed
-    # shard indexes, each scoring with ITS OWN df/docCount/avgdl
-    # (LocalStatsCache, the SolrCloud default), shard top-k's merged by
-    # (score desc, doc_id asc) — witnesses the local-vs-exact-stats ranking
-    # difference against ft_or3_topk over the same corpus and terms
-    out["ft_localstats_topk"] = lambda spark, sf_dir: localstats_topk(
-        spark, sf_dir, "or3", ["vector", "stream", "filter"], k=10
-    )
-    # ExactStatsCache: the same sharded layout scored with MERGED global
-    # stats — the oracle is the single-collection BM25 oracle VERBATIM
-    # (bitwise identity across the scatter-gather is the feature)
-    out["ft_exactstats_topk"] = lambda spark, sf_dir: exactstats_topk(
-        spark, sf_dir, "or3", ["vector", "stream", "filter"], k=10
-    )
-    # SPLITSHARD (SolrIndexSplitter): the committed index split into 3
-    # hash-routed children (hard-linked segments + child tombstone masks +
-    # per-child stats refresh — no re-tokenize, no postings rewrite), then
-    # an exact-stats scatter-gather over the children; oracle = the plain
-    # single-collection BM25 oracle VERBATIM (the split invariant)
-    from .engine import split_union_topk
-
-    out["ft_split_union_topk"] = lambda spark, sf_dir: split_union_topk(
-        spark, sf_dir, "or3", SPLIT_Q, k=10
-    )
-    # In-place numeric docvalues update (updateNumericDocValue): two
-    # stacked generations over an index-time base, read latest-wins and
-    # used as a multiplicative function boost — re-ranks without reindex
-    out["ft_dv_boost_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple", DV_UPDATED
-    ).dv_boost_topk("or3", ["vector", "stream", "filter"], k=10)
-    # IndexOptions.DOCS field: freq() == 1 at read time, norms still
-    # apply — the omitTermFreqAndPositions contract, ninth+1 sim dispatch
-    out["ft_docsonly_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).sim_topk("docsonly", "or3", ["vector", "stream", "filter"], k=10)
-    # DisMax mm spec grammar: "2<-25%" over the 4-term OR → the parsed
-    # conditional yields msm=3 (4 + int(f32(-25%*4))), the same kernel
-    from .search.mm import calculate_min_should_match
-
-    out["ft_mm_spec_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).topk(
-        "or_minshould", MM_SPEC_TERMS,
-        k=10,
-        min_should=calculate_min_should_match(len(MM_SPEC_TERMS), MM_SPEC),
-    )
-    # TieredMergePolicy round: size-tier selection (find_merges) + the
-    # plan-driven merge_segments — results bitwise invariant
-    out["ft_tiered_merge_topk"] = lambda spark, sf_dir: tiered_merge_topk(
-        spark, sf_dir, "or3", ["vector", "stream", "filter"], k=10
-    )
-    # IndexWriter#addIndexes: two half-corpus shard indexes grafted into
-    # one physical index (file-level copy + rebase + re-finalize) — scored
-    # against the single-collection oracle, bitwise
-    out["ft_addindexes_topk"] = lambda spark, sf_dir: addindexes_topk(
-        spark, sf_dir, "or3", ["vector", "stream", "filter"], k=10
-    )
-    # FieldMaskingSpanQuery: title-span masked into body position space,
-    # ordered near — both fields' postings in ONE scoring task per segment,
-    # body norms/stats
-    out["ft_fieldmask_span_topk"] = lambda spark, sf_dir: field_masking_span_topk(
-        spark, sf_dir, FMASK_Q[0], FMASK_Q[1], FMASK_Q[2], k=10
-    )
-    # DiversifiedTopDocsCollector: at most ONE result per source in the
-    # page (the cap that binds on this corpus: the plain or3 page carries
-    # two src14 docs, so the diversified page provably differs)
-    out["ft_diversified_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).diversified_topk("or3", ["vector", "stream", "filter"], k=10, max_per_key=1)
-    # AxiomaticF2EXP — the axiomatic retrieval family (Fang & Zhai 2005;
-    # L/search/similarities/AxiomaticF2EXP.java), similarity number eight
-    # over the same index/norm bytes
-    out["ft_f2exp_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).sim_topk("f2exp", "or3", ["vector", "stream", "filter"], k=10)
-    # SweetSpotSimilarity — the tuned-corpus ClassicSimilarity variant
-    # (plateau length norm + baseline tf); similarity number nine
-    out["ft_sweetspot_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).sim_topk("sweetspot", "or3", ["vector", "stream", "filter"], k=10)
-    # omitNorms=true field scoring: length normalization off, every doc
-    # scores through the constant norm-cache entry for decoded length 1
-    out["ft_omitnorms_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).omitnorms_topk("or3", ["vector", "stream", "filter"], k=10)
-    # BM25Similarity(k1=0.9, b=0.4) — the classic web-search tuning; the
-    # norm bytes store lengths (not b-baked values), so retuning needs no
-    # reindex — only the 256-entry cache rebuilds
-    out["ft_bm25_tuned_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).bm25_tuned_topk("or3", ["vector", "stream", "filter"], k1=0.9, b=0.4, k=10)
-    # Highlighting (UnifiedHighlighter analog): top-k + best-window snippet,
-    # fetch-fields-late (snippet extraction touches the k hit rows only)
-    out["ft_highlight_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).highlight_topk("and2", HIGHLIGHT_TERMS, k=10)
-    # hl.snippets=2 — two non-overlapping passages per hit, doc order
-    out["ft_highlight_passages"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).highlight_passages("and2", HIGHLIGHT_TERMS, k=10)
-    # Suggest / spellcheck (Lookup / SpellCheckComponent): term-dictionary
-    # candidates ranked by docFreq
-    out["ft_suggest"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).suggest("prefix", "s", k=10)
-    out["ft_spellcheck"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).suggest("fuzzy", ("batc", 1), k=10)
-    # AnalyzingInfixSuggester: the pattern may start anywhere inside the
-    # suggestion, same popularity (docFreq) ranking
-    out["ft_suggest_infix"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).suggest("infix", "or", k=10)
-    # FuzzySuggester: typo-tolerant type-ahead — SOME PREFIX of the
-    # suggestion within maxEdits=1 of the typed key (first char exact);
-    # 'sma' completes exactly to 'small' AND fuzzy-matches 'scan' and
-    # 'spark' (one substitution in the length-3 prefix), so the df ranking
-    # is exercised, not just the membership predicate
-    out["ft_fuzzy_suggest"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).suggest_fuzzy_prefix("sma", k=10)
-    # BlendedInfixSuggester: same contains-match, but POSITION_LINEAR
-    # blending — a match at char 0 keeps full df weight, later matches
-    # decay 10%/position (so 'order' outranks 'vector' at equal df)
-    # DocumentDictionary suggester: per-doc stored-field entries with a
-    # numeric weightField (editorial weights, not docFreq) — prefix lookup
-    out["ft_suggest_docdict"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).suggest_docdict("src1", k=10)
-    out["ft_suggest_blended"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).suggest_blended_infix("or", k=10)
-    # FreeTextSuggester: 2-gram LM with stupid backoff (context and typed
-    # prefix come from FREETEXT_Q; rationale at its definition)
-    out["ft_suggest_freetext"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).suggest_freetext(FREETEXT_Q[0], FREETEXT_Q[1], k=FREETEXT_Q[2])
-    # WordBreakSpellChecker: break a run-together input + combine adjacent
-    # query terms against the term dictionary
-    out["ft_wordbreak"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).word_break(WORDBREAK_Q[0], WORDBREAK_Q[1])
-    # SynonymGraph multi-word rule: OR(phrase("table hash"), term(dup))
-    out["ft_syngraph_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).syngraph_topk(SYNGRAPH_Q[0], SYNGRAPH_Q[1], k=10)
-    # /analysis/field handler: per-stage token stream over a literal
-    out["ft_analysis_debug"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "stop"
-    ).analysis_debug(ANALYSIS_TEXT)
-    # cursorMark: page 2 on a field sort via keyset continuation
-    out["ft_cursor_page2"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).cursor_page2(CURSOR_Q[0], CURSOR_Q[1], CURSOR_Q[2], k=10)
-    # MLT with a posted text body (ContentStream path, no doc exclusion)
-    out["ft_mlt_text_topk"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).mlt_text_topk(MLT_TEXT, top_terms=4, k=10)
-    # lucene/monitor (Luwak): stored-query registry matched against docs
-    out["ft_monitor"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).monitor_matches(MONITOR_QUERIES)
-    out["ft_docs_norms"] = lambda spark, sf_dir: get_engine(spark, sf_dir, "simple").docs_norms()
-    out["ft_stop_docs_norms"] = lambda spark, sf_dir: get_engine(spark, sf_dir, "stop").docs_norms()
-    out["ft_term_stats"] = lambda spark, sf_dir: get_engine(spark, sf_dir, "simple").term_stats_df()
-    # Luke /admin/luke per-field dictionary summary (text + keyword fields)
-    out["ft_field_summary"] = lambda spark, sf_dir: get_engine(
-        spark, sf_dir, "simple"
-    ).field_summary()
-    out["ft_collection_stats"] = (
-        lambda spark, sf_dir: get_engine(spark, sf_dir, "stop").collection_stats_df()
-    )
-    return out
-
-
-def fulltext_oracles() -> dict[str, str]:
-    out = {
-        name: _topk_oracle(an, qt, terms, msm, k)
-        for name, (an, qt, terms, msm, k) in FULLTEXT_TOPK.items()
-    }
-    for name, (_kind, _pattern, pred) in MULTITERM.items():
-        out[name] = multiterm_topk_sql("simple", pred, 10)
-    from .oracles import (
-        span_multiterm_topk_sql,
-        surround_or_topk_sql,
-        synonym_topk_sql,
-    )
-
-    out["ft_spanmulti_topk"] = span_multiterm_topk_sql(
-        "simple", f"term LIKE '{SPANMULTI_Q[0]}%'", SPANMULTI_Q[1],
-        SPANMULTI_Q[2], 10,
-    )
-    out["ft_surround_topk"] = surround_or_topk_sql(
-        "simple", SURROUND_CLAUSES, 10
-    )
-    out["ft_synonymquery_topk"] = synonym_topk_sql(
-        "simple",
-        [tuple(
-            ANALYZERS["simple"]().analyze(s)[0][0] for s in SYNONYMQ
-        )],
-        10,
-    )
-    # groups recovered from the SAME chain analysis the engine runs: terms
-    # sharing a position form one synonym group (QueryBuilder graph rule)
-    _kr_by_pos: dict[int, list[str]] = {}
-    for _t, _p in ANALYZERS["keywordrepeat"]().analyze(KEYWORDREPEAT_Q):
-        _kr_by_pos.setdefault(_p, []).append(_t)
-    out["ft_keywordrepeat_topk"] = synonym_topk_sql(
-        "keywordrepeat",
-        [tuple(dict.fromkeys(_kr_by_pos[p])) for p in sorted(_kr_by_pos)],
-        10,
-    )
-    from .search.query import BooleanSpec, TermClause
-
-    an = ANALYZERS["simple"]()
-    out["ft_boost_topk"] = bm25_topk_sql(
-        "simple",
-        BooleanSpec(should=[
-            TermClause(t, b) for s, b in BOOST_TERMS for t, _ in an.analyze(s)
-        ]),
-        10,
-    )
-    out["ft_explain"] = explain_sql(
-        "simple",
-        [t for t, _ in ANALYZERS["simple"]().analyze(" ".join(EXPLAIN_TERMS))],
-        EXPLAIN_DOC,
-    )
-    out["ft_filter_topk"] = bm25_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "or3", FILTER_TERMS, 0),
-        10,
-        filter_pred=f"source = '{FILTER_SOURCE}'",
-    )
-    from .oracles import elevate_topk_sql, rerank_topk_sql
-
-    out["ft_rerank_topk"] = rerank_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "or3", RERANK_MAIN, 0),
-        parse_fixture_query(ANALYZERS["simple"](), "and2", RERANK_RR, 0),
-        RERANK_DOCS, RERANK_W, 10,
-    )
-    out["ft_elevate_topk"] = elevate_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "or3", RERANK_MAIN, 0),
-        ELEVATE_IDS, 10,
-    )
-    from .oracles import spellcheck_collate_sql, term_vectors_sql
-
-    out["ft_spellcheck_collate"] = spellcheck_collate_sql(
-        "simple", [ANALYZERS["simple"]().analyze(s)[0][0] for s in SPELL_TERMS], 2
-    )
-    out["ft_termvectors"] = term_vectors_sql("simple", TV_DOC)
-    from .oracles import boostfunc_topk_sql, sorted_topk_sql, terms_enum_sql
-
-    out["ft_terms_enum"] = terms_enum_sql("simple", *TERMS_ENUM)
-    from .oracles import terms_enum_regex_sql
-
-    out["ft_terms_regex"] = terms_enum_regex_sql("simple", *TERMS_REGEX)
-    out["ft_sortfield_topk"] = sorted_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), SORTFIELD_Q[0], SORTFIELD_Q[1], 0),
-        "n_chars", False, 10,
-    )
-    out["ft_boostfunc_topk"] = boostfunc_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), BOOSTFUNC_Q[0], BOOSTFUNC_Q[1], 0),
-        10,
-    )
-    from .oracles import (
-        span_first_topk_sql,
-        span_near_topk_sql,
-        span_not_topk_sql,
-    )
-
-    out["ft_spanfirst_topk"] = span_first_topk_sql(
-        "simple", ANALYZERS["simple"]().analyze(SPANFIRST[0])[0][0],
-        SPANFIRST[1], 10,
-    )
-    out["ft_spanposrange_topk"] = span_first_topk_sql(
-        "simple", ANALYZERS["simple"]().analyze(SPANPOSRANGE[0])[0][0],
-        SPANPOSRANGE[2], 10, start=SPANPOSRANGE[1],
-    )
-    out["ft_spannear_topk"] = span_near_topk_sql(
-        "simple",
-        ANALYZERS["simple"]().analyze(SPANNEAR[0])[0][0],
-        ANALYZERS["simple"]().analyze(SPANNEAR[1])[0][0],
-        SPANNEAR[2], 10,
-    )
-    out["ft_spannot_topk"] = span_not_topk_sql(
-        "simple",
-        ANALYZERS["simple"]().analyze(SPANNOT[0])[0][0],
-        ANALYZERS["simple"]().analyze(SPANNOT[1])[0][0],
-        SPANNOT[2], SPANNOT[3], 10,
-    )
-    from .oracles import span_contain_topk_sql
-
-    _sc = (
-        ANALYZERS["simple"]().analyze(SPANCONTAIN[0])[0][0],
-        ANALYZERS["simple"]().analyze(SPANCONTAIN[1])[0][0],
-        SPANCONTAIN[2],
-        ANALYZERS["simple"]().analyze(SPANCONTAIN[3])[0][0],
-    )
-    out["ft_spancontain_topk"] = span_contain_topk_sql(
-        "simple", _sc[0], _sc[1], _sc[2], _sc[3], "containing", 10,
-    )
-    out["ft_spanwithin_topk"] = span_contain_topk_sql(
-        "simple", _sc[0], _sc[1], _sc[2], _sc[3], "within", 10,
-    )
-    from .oracles import bf_topk_sql, mlt_terms_sql
-
-    out["ft_mlt_terms"] = mlt_terms_sql("simple", MLT_SRC_DOC, 8)
-    out["ft_bf_topk"] = bf_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "and2", ["merge", "batch"], 0),
-        10,
-    )
-    from .oracles import external_file_boost_sql
-
-    out["ft_extfile_boost_topk"] = external_file_boost_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "and2", ["merge", "batch"], 0),
-        10,
-    )
-    from .oracles import boost_by_query_sql
-
-    out["ft_boost_by_query_topk"] = boost_by_query_sql(
-        "simple",
-        parse_fixture_query(
-            ANALYZERS["simple"](), "or3", ["vector", "stream", "filter"], 0
-        ),
-        parse_fixture_query(ANALYZERS["simple"](), "term", ["spark"], 0),
-        1.8, 10,
-    )
-    from .oracles import interval_unordered_topk_sql
-
-    out["ft_interval_unordered_topk"] = interval_unordered_topk_sql(
-        "simple",
-        ANALYZERS["simple"]().analyze(INTERVAL_UNORD[0])[0][0],
-        ANALYZERS["simple"]().analyze(INTERVAL_UNORD[1])[0][0],
-        INTERVAL_UNORD[2], 10,
-    )
-    out["ft_interval_ordered_topk"] = interval_unordered_topk_sql(
-        "simple",
-        ANALYZERS["simple"]().analyze(INTERVAL_ORD[0])[0][0],
-        ANALYZERS["simple"]().analyze(INTERVAL_ORD[1])[0][0],
-        INTERVAL_ORD[2], 10, ordered=True,
-    )
-    from .oracles import span_near_or_topk_sql, span_or_topk_sql
-
-    out["ft_spanor_topk"] = span_or_topk_sql(
-        "simple",
-        tuple(ANALYZERS["simple"]().analyze(s)[0][0] for s in SPANOR),
-        10,
-    )
-    out["ft_spannearor_topk"] = span_near_or_topk_sql(
-        "simple",
-        tuple(ANALYZERS["simple"]().analyze(s)[0][0] for s in SPANNEAROR[0]),
-        tuple(ANALYZERS["simple"]().analyze(s)[0][0] for s in SPANNEAROR[1]),
-        SPANNEAROR[2], 10,
-    )
-    from .oracles import fuzzy_blended_topk_sql
-
-    out["ft_fuzzy_blended_topk"] = fuzzy_blended_topk_sql(
-        "simple", FUZZY_BLENDED[0], FUZZY_BLENDED[1], FUZZY_BLENDED[2], 10
-    )
-    # QueryParser oracle: the spec is HAND-BUILT from the documented parse
-    # of QP_STRING (not produced by the parser), so a parse bug on the Spark
-    # side cannot cancel out — the gate certifies parse + execute
-    from .search.query import (
-        OrGroupClause as _QPOG,
-        PhraseClause as _QPPH,
-        TermClause as _QPT,
-    )
-
-    _qp_an = ANALYZERS["simple"]()
-    _qp = lambda s: _qp_an.analyze(s)[0][0]  # noqa: E731
-    out["ft_queryparser_topk"] = bm25_topk_sql(
-        "simple",
-        BooleanSpec(
-            must=[_QPT(_qp("merge"))],
-            should=[
-                _QPT(_qp("batch"), 2.0),
-                _QPPH((_qp("table"), _qp("hash")), (0, 1)),
-                _QPOG((_qp("vector"), _qp("stream"))),
-            ],
-            must_not=[_QPT(_qp("scan"))],
-        ),
-        10,
-    )
-    from .oracles import covering_topk_sql
-
-    out["ft_covering_topk"] = covering_topk_sql(
-        "simple",
-        [ANALYZERS["simple"]().analyze(s)[0][0] for s in COVERING_Q[0]],
-        COVERING_Q[1],
-        10,
-    )
-    # MatchAllDocs + fq oracle: the fq semantics straight off the source
-    # table (score constant 1.0, doc-key order)
-    out["ft_matchall_fq"] = f"""
-SELECT doc_id::BIGINT AS doc_id, CAST(1.0 AS FLOAT) AS score
-FROM documents WHERE source = '{MATCHALL_FQ[1]}'
-ORDER BY doc_id LIMIT 10"""
-    # SimpleQueryParser oracle: spec HAND-BUILT from the documented parse of
-    # SIMPLEQP_Q (the ft_queryparser precedent — a parse bug on the Spark
-    # side cannot cancel out): '+' promotes all atoms to MUST (incl. the
-    # analyzed phrase), '-scan' prohibits
-    out["ft_simpleqp_topk"] = bm25_topk_sql(
-        "simple",
-        BooleanSpec(
-            must=[
-                _QPT(_qp("merge")),
-                _QPT(_qp("batch")),
-                _QPPH((_qp("table"), _qp("hash")), (0, 1)),
-            ],
-            must_not=[_QPT(_qp("scan"))],
-        ),
-        10,
-    )
-    # mm oracle: the minShouldMatch integer is the HAND-DERIVED literal,
-    # so the engine-side calculateMinShouldMatch arithmetic is certified
-    out["ft_edismax_mm_topk"] = bm25_topk_sql(
-        "simple",
-        BooleanSpec(
-            should=[_QPT(_qp(s)) for s in EDISMAX_MM[0].split()],
-            min_should_match=EDISMAX_MM_EXPECTED,
-        ),
-        10,
-    )
-    # pf oracle: same term SHOULD clauses + the boosted phrase clause (the
-    # phrase-branch boost rides the f32 weight exactly like the engine)
-    _pf_an = ANALYZERS["simple"]()
-    _pf_analyzed = _pf_an.analyze(EDISMAX_PF[0])
-    from .search.query import PhraseClause as _PFPhrase
-
-    out["ft_edismax_pf_topk"] = bm25_topk_sql(
-        "simple",
-        BooleanSpec(should=[
-            *[_QPT(t) for t, _ in _pf_analyzed],
-            _PFPhrase(
-                tuple(t for t, _ in _pf_analyzed),
-                tuple(p - _pf_analyzed[0][1] for _, p in _pf_analyzed),
-                boost=EDISMAX_PF[1],
-            ),
-        ]),
-        10,
-    )
-    from .oracles import phonetic_topk_sql
-
-    out["ft_phonetic_topk"] = phonetic_topk_sql(
-        "simple", tuple(PHONETIC_Q.lower().split()), 10
-    )
-    from .oracles import constant_score_sql, frange_sql
-
-    out["ft_constscore_topk"] = constant_score_sql(
-        "simple",
-        parse_fixture_query(
-            ANALYZERS["simple"](), CONSTSCORE[0], CONSTSCORE[1], 0
-        ),
-        CONSTSCORE[2], 10,
-    )
-    out["ft_frange"] = frange_sql(
-        "simple", FRANGE[0], FRANGE[1], FRANGE[2], 20,
-        {s: ANALYZERS["simple"]().analyze(s)[0][0]
-         for s in ("merge", "batch")},
-    )
-    from .oracles import ltr_rescore_sql
-
-    out["ft_ltr_topk"] = ltr_rescore_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), LTR[0], LTR[1], 0),
-        ANALYZERS["simple"]().analyze(LTR[2])[0][0], LTR[3], 50, 10,
-    )
-    from .oracles import ltr_feature_log_sql
-
-    out["ft_ltr_features"] = ltr_feature_log_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), LTR[0], LTR[1], 0),
-        ANALYZERS["simple"]().analyze(LTR[2])[0][0], 10,
-    )
-    from .oracles import result_clusters_sql
-
-    out["ft_result_clusters"] = result_clusters_sql(
-        "simple",
-        parse_fixture_query(
-            ANALYZERS["simple"](), "or3", ["vector", "stream", "filter"], 0
-        ),
-        50,
-    )
-    from .oracles import ltr_trees_sql
-
-    out["ft_ltr_trees_topk"] = ltr_trees_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), LTR[0], LTR[1], 0),
-        ANALYZERS["simple"]().analyze(LTR[2])[0][0], LTR_TREES, 50, 10,
-    )
-    from .oracles import common_terms_topk_sql
-
-    out["ft_commonterms_topk"] = common_terms_topk_sql(
-        "simple",
-        [ANALYZERS["simple"]().analyze(s)[0][0] for s in COMMONTERMS[0]],
-        COMMONTERMS[1], 10,
-    )
-    from .oracles import join_filter_topk_sql, join_score_topk_sql
-
-    _an = ANALYZERS["simple"]()
-    out["ft_join_topk"] = join_filter_topk_sql(
-        "simple",
-        parse_fixture_query(_an, JOIN_OUTER[0], JOIN_OUTER[1], 0),
-        [_an.analyze(s)[0][0] for s in JOIN_INNER[1]],
-        "source", "source", 10, inner_occur="and",
-    )
-    out["ft_join_score_topk"] = join_score_topk_sql(
-        "simple",
-        parse_fixture_query(_an, JOIN_INNER[0], JOIN_INNER[1], 0),
-        "source", "source", 10,
-    )
-    from .oracles import facet_on_query_sql, stats_on_query_sql
-
-    out["ft_facet_on_query"] = facet_on_query_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "and2", ["merge", "batch"], 0),
-        "source", 10,
-    )
-    out["ft_stats_on_query"] = stats_on_query_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "and2", ["merge", "batch"], 0),
-        "n_chars",
-    )
-    from .oracles import group_facet_sql
-
-    out["ft_group_facet"] = group_facet_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "and2", ["merge", "batch"], 0),
-        "source", "lang", 10,
-    )
-    from .oracles import facet_block_children_sql
-
-    out["ft_facet_block_children"] = facet_block_children_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "and2", ["merge", "batch"], 0),
-        "lang",
-    )
-    from .engine import RTG_DOCS
-    from .oracles import rtg_sql
-
-    out["ft_rtg"] = rtg_sql("simple", RTG_DOCS, RTG_KEYS)
-    out["ft_dismax_topk"] = dismax_topk_sql("simple", DISMAX_TERMS, DISMAX_TIE, 10)
-    out["ft_mlt_topk"] = mlt_topk_sql("simple", MLT_SRC_DOC, 5, 10)
-    # MinHash signature MLT: the same oracle machinery over the minhashsig
-    # chain — the kept CTE IS the signature computation (shingle → hash →
-    # bucket-min → rotation), so a single wrong bucket goes hash-red
-    out["ft_minhash_sim_topk"] = mlt_topk_sql("minhashsig", MINHASH_SRC_DOC, 16, 10)
-    out["ft_page2_topk"] = bm25_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), PAGE2_QUERY[0], PAGE2_QUERY[1], 0),
-        10,
-        offset=10,
-    )
-    out["ft_blockjoin_source"] = blockjoin_sql("simple", BLOCKJOIN_TERMS, 5)
-    from .oracles import blockjoin_children_sql
-
-    out["ft_blockjoin_children"] = blockjoin_children_sql(
-        "simple", BLOCKJOIN_TERMS, 2
-    )
-    from .oracles import blockjoin_scores_sql, feature_topk_sql, rrf_topk_sql
-
-    out["ft_blockjoin_scores"] = blockjoin_scores_sql(
-        "simple",
-        parse_fixture_query(
-            ANALYZERS["simple"](), BLOCKJOIN_SCORES_Q[0], BLOCKJOIN_SCORES_Q[1], 0
-        ),
-        BLOCKJOIN_SCORES_Q[2],
-    )
-    out["ft_feature_topk"] = feature_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), FEATURE_Q[0], FEATURE_Q[1], 0),
-        FEATURE_Q[2], FEATURE_Q[3], 10,
-    )
-    from .oracles import feature_log_topk_sql, feature_sigmoid_topk_sql
-
-    out["ft_feature_log_topk"] = feature_log_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), FEATURE_Q[0], FEATURE_Q[1], 0),
-        1.0, FEATURE_Q[3], 10,
-    )
-    out["ft_feature_sigmoid_topk"] = feature_sigmoid_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), FEATURE_Q[0], FEATURE_Q[1], 0),
-        FEATURE_Q[2], 2.0, FEATURE_Q[3], 10,
-    )
-    out["ft_rrf_topk"] = rrf_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), RRF_Q[0], RRF_Q[1], 0),
-        parse_fixture_query(ANALYZERS["simple"](), RRF_Q[2], RRF_Q[3], 0),
-        RRF_Q[4], RRF_Q[5], 10,
-    )
-    sloppy_spec = parse_fixture_query(
-        ANALYZERS["simple"](), "phrase2", ["table", "hash"], 0, slop=3
-    )
-    ph = sloppy_spec.must[0]
-    out["ft_sloppy_phrase_topk"] = sloppy_phrase_topk_sql(
-        "simple", ph.terms, ph.offsets, 3, 10
-    )
-    from .oracles import highlight_topk_sql
-
-    out["ft_highlight_topk"] = highlight_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "and2", HIGHLIGHT_TERMS, 0),
-        10,
-    )
-    from .oracles import highlight_passages_sql
-
-    out["ft_highlight_passages"] = highlight_passages_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "and2", HIGHLIGHT_TERMS, 0),
-        10,
-    )
-    an_s = ANALYZERS["simple"]()
-    from .oracles import base_ctes
-
-    fq_term = an_s.analyze("merge")[0][0]
-    out["ft_function_query"] = f"""WITH {base_ctes("simple")},
-tfq AS (
-    SELECT doc_id, count(*)::BIGINT AS tf FROM kept WHERE term = '{fq_term}' GROUP BY 1
+register(
+    "ft_monitor",
+    _call(DocumentsEngine.monitor_matches, MONITOR_QUERIES),
+    monitor_matches_sql("simple", {
+        qid: _fixture(qt, list(terms), msm) for qid, (qt, terms, msm) in MONITOR_QUERIES.items()
+    }),
 )
-SELECT rank::INTEGER AS rank, doc_id::BIGINT AS doc_id, tf FROM (
-    SELECT row_number() OVER (ORDER BY tf DESC, doc_id ASC) AS rank, doc_id, tf FROM tfq
-) WHERE rank <= 10 ORDER BY rank"""
-    from .oracles import funcexpr_topk_sql
-
-    out["ft_funcexpr_topk"] = funcexpr_topk_sql(
-        "simple", FUNCEXPR, 10,
-        {s: an_s.analyze(s)[0][0] for s in ("merge", "batch")},
-    )
-    out["ft_recip_boost_topk"] = funcexpr_topk_sql(
-        "simple", RECIP_EXPR, 10,
-        {"merge": an_s.analyze("merge")[0][0]},
-    )
-    out["ft_funcexpr_stats_topk"] = funcexpr_topk_sql(
-        "simple", STATS_EXPR, 10,
-        {s: an_s.analyze(s)[0][0] for s in ("merge", "batch", "scan")},
-    )
-    out["ft_strdist_topk"] = funcexpr_topk_sql(
-        "simple", STRDIST_EXPR, 10,
-        {"merge": an_s.analyze("merge")[0][0]},
-    )
-    from .oracles import tagger_sql
-
-    out["ft_tagger"] = tagger_sql(
-        "simple", [(p, t) for t, p in an_s.analyze(TAGGER_TEXT)]
-    )
-    from .oracles import group_query_topk_sql
-
-    out["ft_group_query"] = group_query_topk_sql(
-        "simple",
-        {
-            name: parse_fixture_query(ANALYZERS["simple"](), qt, ts, 0)
-            for name, (qt, ts) in GROUP_QUERY_BUCKETS.items()
-        },
-        3,
-    )
-    from .oracles import phrase_prefix_topk_sql
-    from .search.query import BooleanSpec as _BS, MultiPhraseClause as _MPC
-
-    mp_slots = tuple(
-        tuple(an_s.analyze(s)[0][0] for s in grp) for grp in MULTIPHRASE
-    )
-    out["ft_multiphrase_topk"] = bm25_topk_sql(
-        "simple",
-        _BS(must=[_MPC(mp_slots, tuple(range(len(mp_slots))))]),
-        10,
-    )
-    out["ft_phrase_prefix_topk"] = phrase_prefix_topk_sql(
-        "simple",
-        tuple(an_s.analyze(s)[0][0] for s in PHRASE_PREFIX[0]),
-        PHRASE_PREFIX[1], 10,
-    )
-    from .engine import complex_phrase_parts
-    from .oracles import complex_phrase_topk_sql
-
-    out["ft_complexphrase_topk"] = complex_phrase_topk_sql(
-        "simple", complex_phrase_parts(COMPLEXPHRASE_Q, an_s), 10,
-    )
-    from .search.query import OrGroupClause as _OGC, TermClause as _TC
-
-    out["ft_nested_bool_topk"] = bm25_topk_sql(
-        "simple",
-        _BS(must=[
-            *[_TC(an_s.analyze(s)[0][0]) for s in NESTED_BOOL[0]],
-            _OGC(tuple(an_s.analyze(s)[0][0] for s in NESTED_BOOL[1])),
-        ]),
-        10,
-    )
-    bool_terms = [t for s in ["vector", "stream", "filter"] for t, _ in an_s.analyze(s)]
-    bool_inlist = ", ".join(f"'{t}'" for t in bool_terms)
-    out["ft_boolean_sim_topk"] = f"""WITH {base_ctes("simple")},
-hits AS (
-    SELECT doc_id, CAST(count(DISTINCT term) AS FLOAT) AS score
-    FROM kept WHERE term IN ({bool_inlist}) GROUP BY doc_id
+register("ft_docs_norms", _call(DocumentsEngine.docs_norms), docs_norms_sql("simple"))
+register("ft_stop_docs_norms", _call(DocumentsEngine.docs_norms, analyzer="stop"), docs_norms_sql("stop"))
+register("ft_term_stats", _call(DocumentsEngine.term_stats_df), term_stats_sql("simple"))
+# Luke /admin/luke per-field dictionary summary (text + keyword fields)
+register("ft_field_summary", _call(DocumentsEngine.field_summary), field_summary_sql("simple"))
+register(
+    "ft_collection_stats",
+    _call(DocumentsEngine.collection_stats_df, analyzer="stop"),
+    collection_stats_sql("stop"),
 )
-SELECT rank::INTEGER AS rank, doc_id::BIGINT AS doc_id, score::FLOAT AS score FROM (
-    SELECT row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank, doc_id, score FROM hits
-) WHERE rank <= 10 ORDER BY rank"""
-    from .oracles import lm_topk_sql
-
-    out["ft_lm_topk"] = lm_topk_sql("simple", bool_terms, 10)
-    from .oracles import dfr_topk_sql, ib_topk_sql, lmjm_topk_sql, suggest_sql
-
-    out["ft_dfr_topk"] = dfr_topk_sql("simple", bool_terms, 10)
-    out["ft_ib_topk"] = ib_topk_sql("simple", bool_terms, 10)
-    out["ft_lmjm_topk"] = lmjm_topk_sql("simple", bool_terms, 10)
-    from .oracles import dfi_topk_sql
-
-    out["ft_dfi_topk"] = dfi_topk_sql("simple", bool_terms, 10)
-    from .oracles import localstats_topk_sql
-
-    out["ft_localstats_topk"] = localstats_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "or3", bool_terms, 0),
-        10,
-    )
-    # ExactStatsCache alias search ≡ the single-collection page: the plain
-    # bm25 oracle, unchanged — hash-red if the stats merge or the shard
-    # scatter-gather perturbs a single bit
-    out["ft_exactstats_topk"] = bm25_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "or3", bool_terms, 0),
-        10,
-    )
-    # SPLITSHARD children ≡ the single collection: the plain bm25 oracle
-    # over the SPLIT_Q surface — hash-red if the hash routing, the child
-    # tombstone masks, the per-child stats refresh or the scatter-gather
-    # merge perturbs a single bit
-    out["ft_split_union_topk"] = bm25_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "or3", SPLIT_Q, 0),
-        10,
-    )
-    # addIndexes graft ≡ the single collection: same oracle, same logic
-    out["ft_addindexes_topk"] = out["ft_exactstats_topk"]
-    # tiered merge ≡ the base index: merge invariance, same oracle
-    out["ft_tiered_merge_topk"] = out["ft_exactstats_topk"]
-    from .oracles import docsonly_topk_sql
-
-    out["ft_docsonly_topk"] = docsonly_topk_sql("simple", bool_terms, 10)
-    # mm spec: the oracle binds the HAND-COMPUTED msm=3 — a parser bug
-    # (wrong truncation, wrong conditional pick) cannot cancel out
-    out["ft_mm_spec_topk"] = bm25_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "or_minshould", MM_SPEC_TERMS, 3),
-        10,
-    )
-    from .oracles import dv_boost_topk_sql
-
-    out["ft_dv_boost_topk"] = dv_boost_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "or3", bool_terms, 0),
-        10,
-    )
-    from .engine import TITLE_EXPR_SQL
-    from .oracles import field_masking_span_topk_sql
-
-    out["ft_fieldmask_span_topk"] = field_masking_span_topk_sql(
-        "simple", TITLE_EXPR_SQL, FMASK_Q[0], FMASK_Q[1], FMASK_Q[2], 10
-    )
-    from .oracles import diversified_topk_sql
-
-    out["ft_diversified_topk"] = diversified_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "or3", bool_terms, 0),
-        10,
-        1,
-    )
-    from .oracles import f2exp_topk_sql
-
-    out["ft_f2exp_topk"] = f2exp_topk_sql("simple", bool_terms, 10)
-    out["ft_bm25_tuned_topk"] = bm25_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "or3", bool_terms, 0),
-        10, k1=0.9, b=0.4,
-    )
-    from .oracles import sweetspot_topk_sql
-
-    out["ft_sweetspot_topk"] = sweetspot_topk_sql("simple", bool_terms, 10)
-    from .oracles import omitnorms_topk_sql
-
-    out["ft_omitnorms_topk"] = omitnorms_topk_sql("simple", bool_terms, 10)
-    out["ft_suggest"] = suggest_sql("simple", "term LIKE 's%'", 10)
-    out["ft_suggest_infix"] = suggest_sql("simple", "term LIKE '%or%'", 10)
-    from .oracles import suggest_fuzzy_prefix_sql
-
-    out["ft_fuzzy_suggest"] = suggest_fuzzy_prefix_sql("simple", "sma", 10)
-    from .oracles import suggest_blended_infix_sql
-
-    out["ft_suggest_blended"] = suggest_blended_infix_sql("simple", "or", 10)
-    out["ft_suggest_docdict"] = """
-SELECT rank::INTEGER AS rank, key, weight::BIGINT AS weight, doc_id::BIGINT AS doc_id FROM (
-    SELECT row_number() OVER (ORDER BY n_chars DESC, source ASC, doc_id ASC) AS rank,
-           source AS key, n_chars AS weight, doc_id
-    FROM documents WHERE source LIKE 'src1%'
-) WHERE rank <= 10 ORDER BY rank"""
-    from .oracles import suggest_freetext_sql, word_break_sql
-
-    out["ft_suggest_freetext"] = suggest_freetext_sql(
-        "simple", FREETEXT_Q[0], FREETEXT_Q[1], FREETEXT_Q[2]
-    )
-    out["ft_wordbreak"] = word_break_sql("simple", WORDBREAK_Q[0], WORDBREAK_Q[1])
-    from .oracles import analysis_debug_sql
-    from .search.query import BooleanSpec, PhraseClause, TermClause
-
-    out["ft_syngraph_topk"] = bm25_topk_sql(
-        "simple",
-        BooleanSpec(
-            should=[
-                PhraseClause(tuple(SYNGRAPH_Q[0]), tuple(range(len(SYNGRAPH_Q[0])))),
-                TermClause(SYNGRAPH_Q[1]),
-            ],
-            min_should_match=1,
-        ),
-        10,
-    )
-    out["ft_analysis_debug"] = analysis_debug_sql(ANALYSIS_TEXT)
-    from .oracles import cursor_page2_sql
-
-    out["ft_cursor_page2"] = cursor_page2_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), CURSOR_Q[0], CURSOR_Q[1], 0),
-        CURSOR_Q[2], 10,
-    )
-    from .oracles import mlt_text_topk_sql
-
-    out["ft_mlt_text_topk"] = mlt_text_topk_sql("simple", MLT_TEXT, 4, 10)
-    from .oracles import monitor_matches_sql
-
-    out["ft_monitor"] = monitor_matches_sql(
-        "simple",
-        {
-            qid: parse_fixture_query(ANALYZERS["simple"](), qt, list(terms), msm)
-            for qid, (qt, terms, msm) in MONITOR_QUERIES.items()
-        },
-    )
-    out["ft_spellcheck"] = suggest_sql(
-        "simple", "levenshtein(term, 'batc') <= 1", 10
-    )
-    out["ft_tfidf_topk"] = tfidf_topk_sql(
-        "simple",
-        [t for s in ["vector", "stream", "filter"] for t, _ in an_s.analyze(s)],
-        10,
-    )
-    out["ft_total_hits"] = total_hits_sql(
-        "simple",
-        [t for s in TOTAL_HITS_TERMS for t, _ in an_s.analyze(s)],
-        TOTAL_HITS_THRESHOLD,
-    )
-    from .engine import UPDATE_MOD, UPDATE_SUFFIX
-
-    out["ft_after_update_topk"] = after_update_topk_sql(
-        "simple",
-        [t for s in AFTER_UPDATE_TERMS for t, _ in an_s.analyze(s)],
-        10,
-        UPDATE_MOD,
-        UPDATE_SUFFIX,
-    )
-    # expunge is observationally a no-op over the post-update live corpus:
-    # the delete-and-re-add oracle certifies the physical rewrite verbatim
-    out["ft_after_expunge_topk"] = out["ft_after_update_topk"]
-    from .engine import PATREPLACE_TEXT_SQL, URLEMAIL_TEXT_SQL
-    from .oracles import fixture_text_topk_sql
-
-    out["ft_patreplace_topk"] = fixture_text_topk_sql(
-        "patreplace",
-        parse_fixture_query(ANALYZERS["patreplace"](), "and2", PATREPLACE_Q, 0),
-        10, PATREPLACE_TEXT_SQL,
-    )
-    out["ft_urlemail_topk"] = fixture_text_topk_sql(
-        "urlemail",
-        parse_fixture_query(ANALYZERS["urlemail"](), "or2", URLEMAIL_Q, 0),
-        10, URLEMAIL_TEXT_SQL,
-    )
-    from .engine import UNICODE_TEXT_SQL
-
-    out["ft_unicode_topk"] = fixture_text_topk_sql(
-        "uni",
-        parse_fixture_query(ANALYZERS["uni"](), "or2", UNICODE_Q, 0),
-        10, UNICODE_TEXT_SQL,
-    )
-    from .engine import COPYFIELD_TEXT_EXPR
-
-    out["ft_copyfield_topk"] = fixture_text_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "and2", COPYFIELD_Q, 0),
-        10, COPYFIELD_TEXT_EXPR,
-    )
-    from .engine import QF_BODY_W, QF_TITLE_W, TITLE_EXPR_SQL
-    from .oracles import fielded_dismax_topk_sql
-
-    _fielded_spec = parse_fixture_query(ANALYZERS["simple"](), *FIELDED_Q[:2], 0)
-    out["ft_fielded_qf_topk"] = fielded_dismax_topk_sql(
-        "simple", _fielded_spec, FIELDED_Q[2],
-        TITLE_EXPR_SQL, QF_TITLE_W, QF_BODY_W,
-    )
-    out["ft_fielded_tie_topk"] = fielded_dismax_topk_sql(
-        "simple", _fielded_spec, FIELDED_Q[2],
-        TITLE_EXPR_SQL, QF_TITLE_W, QF_BODY_W, tie=FIELDED_TIE,
-    )
-    from .oracles import fq_cached_topk_sql
-
-    out["ft_fq_cached_topk"] = fq_cached_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), FQ_CACHED_Q[0], FQ_CACHED_Q[1], 0),
-        parse_fixture_query(ANALYZERS["simple"](), FQ_CACHED_Q[2], FQ_CACHED_Q[3], 0),
-        FQ_CACHED_Q[4],
-    )
-    # the cached page must be bitwise the plain BM25 answer
-    out["ft_qrc_topk"] = bm25_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), QRC_Q[0], QRC_Q[1], 0),
-        QRC_Q[2],
-    )
-    from .oracles import blended_term_topk_sql
-
-    out["ft_blended_cross_topk"] = blended_term_topk_sql(
-        "simple", BLENDED_Q[0], BLENDED_Q[1], TITLE_EXPR_SQL
-    )
-    # page + stored fields: the bm25 page joined back to the source table
-    out["ft_topk_fetch"] = (
-        "SELECT p.rank, p.doc_id, p.score, d.source, d.lang FROM ("
-        + out["ft_qrc_topk"]
-        + ") p JOIN documents d ON d.doc_id = p.doc_id ORDER BY p.rank"
-    )
-    # as-of reads the pre-update commit → plain BM25 over the ORIGINAL corpus
-    out["ft_asof_topk"] = bm25_topk_sql(
-        "simple",
-        parse_fixture_query(ANALYZERS["simple"](), "or3", AFTER_UPDATE_TERMS, 0),
-        10,
-    )
-    from .engine import KNN_K, KNN_TEST_MOD, KNN_TOP_TERMS
-    from .oracles import knn_classify_sql
-
-    out["classify_knn"] = knn_classify_sql(
-        "simple", KNN_TEST_MOD, KNN_TOP_TERMS, KNN_K
-    )
-    from .engine import ATOMIC_MOD, ATOMIC_OPERAND
-
-    # atomic `add` on text ≡ appending " " + operand to the live doc — the
-    # post-merge corpus oracle is the same delete-and-re-add shape
-    out["ft_after_atomic_update_topk"] = after_update_topk_sql(
-        "simple",
-        [t for s in AFTER_UPDATE_TERMS for t, _ in an_s.analyze(s)],
-        10,
-        ATOMIC_MOD,
-        " " + ATOMIC_OPERAND,
-    )
-    from .engine import DBQ_TERM
-    from .oracles import after_dbq_topk_sql
-
-    out["ft_after_dbq_topk"] = after_dbq_topk_sql(
-        "simple", DBQ_TERM,
-        [t for s in AFTER_UPDATE_TERMS for t, _ in an_s.analyze(s)], 10,
-    )
-    out["ft_docs_norms"] = docs_norms_sql("simple")
-    out["ft_stop_docs_norms"] = docs_norms_sql("stop")
-    out["ft_term_stats"] = term_stats_sql("simple")
-    out["ft_field_summary"] = field_summary_sql("simple")
-    out["ft_collection_stats"] = collection_stats_sql("stop")
-    return out
 
 
 # The driver scores the FIRST 50 entries in queries() dict order — this list
@@ -2006,16 +1404,9 @@ def _ordered(entries: dict) -> dict:
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out = fulltext_queries()
-    from .ops.registry import ops_queries
-
-    out.update(ops_queries())
-    return _ordered(out)
+    return _ordered(ops_queries())
 
 
 def all_oracles() -> dict[str, str]:
-    out = fulltext_oracles()
-    from .ops.registry import ops_oracles
-
-    out.update(ops_oracles())
-    return {n: out[n] for n in all_queries() if n in out}
+    oracles = ops_oracles()
+    return {n: oracles[n] for n in all_queries() if n in oracles}

@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .index.build import build_index, read_term_stats
-from .search.query import BooleanSpec
+from .search.query import BooleanSpec, CompiledQuery
 from .search.searcher import IndexSearcher, ranked_top
 
 # content-addressed index dir → its engine (or searcher / searcher list)
@@ -204,51 +204,19 @@ class DocumentsEngine:
         mode: str = "wand",
         slop: int = 0,
     ) -> DataFrame:
-        """Top-k → DataFrame(rank int, doc_id bigint, score float) keyed on
-        the SOURCE doc_id (fetch-fields-late join back through the docs map)."""
+        """Top-k of a FIXTURES.md query shape (``searcher.parse``) through
+        ``ranked``."""
         spec = self.searcher.parse(qtype, surface_terms, min_should, slop=slop)
-        out = self.searcher.search(spec, k=k, mode=mode, with_keys=True)
-        return _present(out)
+        return self.ranked(spec, k=k, mode=mode)
 
-    def multiphrase_topk(
-        self, slot_surfaces: list[list[str]], k: int = 10,
+    def ranked(
+        self, spec: BooleanSpec | CompiledQuery, k: int = 10, mode: str = "wand",
     ) -> DataFrame:
-        """MultiPhraseQuery top-k (``L/search/MultiPhraseQuery``): one
-        surface-term LIST per phrase position — a start position matches
-        when every slot has some member term at its offset; freq = number
-        of matching starts; weight = f32(Σ idf over all member terms).
-
-        Runs on the exact positional kernel (``needs_positions``); slot
-        unions are vectorized per segment (``kernels._union_postings``)."""
-        from .search.query import BooleanSpec, MultiPhraseClause
-
-        slots = tuple(
-            tuple(self.searcher.analyzer.analyze(s)[0][0] for s in group)
-            for group in slot_surfaces
-        )
-        spec = BooleanSpec(must=[MultiPhraseClause(
-            slots, tuple(range(len(slots)))
-        )])
-        out = self.searcher.search(spec, k=k, mode="exact", with_keys=True)
-        return _present(out)
-
-    def nested_bool_topk(
-        self, must_surfaces: list[str], group_surfaces: list[str], k: int = 10,
-    ) -> DataFrame:
-        """Nested BooleanQuery top-k — ``+a +(b c)`` (``L/search/
-        BooleanQuery`` nesting): required terms plus a required inner
-        disjunction scored as one DisjunctionSumScorer subtree. Routed
-        through the exact kernel (`needs_exact`); the inner group is a
-        per-member posting union + one grouped float64 sum per segment."""
-        from .search.query import BooleanSpec, OrGroupClause, TermClause
-
-        an = self.searcher.analyzer
-        spec = BooleanSpec(must=[
-            *[TermClause(an.analyze(s)[0][0]) for s in must_surfaces],
-            OrGroupClause(tuple(an.analyze(s)[0][0] for s in group_surfaces)),
-        ])
-        out = self.searcher.search(spec, k=k, mode="wand", with_keys=True)
-        return _present(out)
+        """The one search tail: a spec (or an already compiled query, which
+        carries its own k) → DataFrame(rank int, doc_id bigint, score float)
+        keyed on the SOURCE doc_id (fetch-fields-late: the scoring task reads
+        its survivors' keys)."""
+        return _present(self.searcher.search(spec, k=k, mode=mode, with_keys=True))
 
     def phrase_prefix_topk(
         self, surfaces: list[str], prefix: str, k: int = 10,
@@ -275,8 +243,7 @@ class DocumentsEngine:
         spec = BooleanSpec(must=[MultiPhraseClause(
             slots, tuple(range(len(slots)))
         )])
-        out = self.searcher.search(spec, k=k, mode="exact", with_keys=True)
-        return _present(out)
+        return self.ranked(spec, k, mode="exact")
 
     def complex_phrase_topk(
         self, query: str, k: int = 10, max_expansions: int = 50,
@@ -306,35 +273,7 @@ class DocumentsEngine:
         spec = BooleanSpec(must=[MultiPhraseClause(
             tuple(slots), tuple(range(len(slots)))
         )])
-        out = self.searcher.search(spec, k=k, mode="exact", with_keys=True)
-        return _present(out)
-
-    def filtered_topk(
-        self,
-        qtype: str,
-        surface_terms: list[str],
-        filter_col: str,
-        filter_val,
-        k: int = 10,
-        min_should: int = 0,
-    ) -> DataFrame:
-        """Top-k with a non-scoring FILTER clause (BooleanClause.Occur.FILTER):
-        candidates restricted to docs where ``filter_col == filter_val``
-        BEFORE ranking; BM25 scores and global stats are unchanged.
-
-        Executes as a keyword-field posting intersection (the field is
-        indexed as `\\x01col:value` terms — index/build.keyword_term): the
-        filter is one more posting list in the segment kernels, weight 0 —
-        fully distributed, nothing collected to the driver. For predicates
-        over NON-indexed fields, ``IndexSearcher.filter_map`` remains the
-        (selective-filter-only) fallback."""
-        from .index.build import keyword_term
-        from .search.query import TermClause
-
-        spec = self.searcher.parse(qtype, surface_terms, min_should)
-        spec.filter.append(TermClause(keyword_term(filter_col, filter_val)))
-        out = self.searcher.search(spec, k=k, with_keys=True)
-        return _present(out)
+        return self.ranked(spec, k, mode="exact")
 
     def fq_topk(
         self,
@@ -490,7 +429,7 @@ class DocumentsEngine:
         spec.filter.append(OrGroupClause(
             tuple(keyword_term(to_col, v) for v in vals)
         ))
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
+        return self.ranked(spec, k)
 
     def join_score_topk(
         self,
@@ -533,50 +472,6 @@ class DocumentsEngine:
             ranked_top(joined, k, F.desc("jscore"), F.asc("doc_id")), score="jscore"
         )
 
-    def boosted_topk(self, term_boosts: list[tuple[str, float]], k: int = 10) -> DataFrame:
-        """Disjunction with per-clause boosts (``Query#setBoost`` era /
-        ``BoostQuery``): weight = f32(boost) · f32(idf)."""
-        from .search.query import TermClause
-
-        spec = BooleanSpec(should=[
-            TermClause(t, boost)
-            for surface, boost in term_boosts
-            for t, _ in self.searcher.analyzer.analyze(surface)
-        ])
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def span_first_topk(self, surface_term: str, end: int, k: int = 10) -> DataFrame:
-        """SpanFirstQuery top-k (``L/search/spans/SpanFirstQuery`` wrapping a
-        term span): matches docs whose term occurs within the first ``end``
-        positions; tf for scoring = the window-restricted occurrence count
-        (each width-0 term span contributes slop factor 1 —
-        ``SpanScorer#setFreqCurrentDoc``), weight = idf(term) like TermQuery.
-
-        Scale shape: identical to the term top-k path — term-pruned postings
-        scan, per-segment exact kernel (positions decoded once; window tf =
-        one bincount over the masked flat positions), ONE TakeOrdered."""
-        from .search.query import SpanFirstClause
-
-        toks = self.searcher.analyzer.analyze(surface_term)
-        spec = BooleanSpec(must=[SpanFirstClause(toks[0][0], int(end))])
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def span_position_range_topk(
-        self, surface_term: str, start: int, end: int, k: int = 10
-    ) -> DataFrame:
-        """SpanPositionRangeQuery (``L/search/spans/SpanPositionRangeQuery``
-        — the general form SpanFirstQuery subclasses with start=0): the
-        term's qualifying occurrences lie in position window [start, end);
-        tf = the window-restricted count, scored like a TermQuery."""
-        from .search.query import SpanFirstClause
-
-        an = self.searcher.analyzer
-        term = an.analyze(surface_term)[0][0]
-        spec = BooleanSpec(should=[
-            SpanFirstClause(term, int(end), start=int(start))
-        ], min_should_match=1)
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
     def span_near_topk(
         self, surface0: str, surface1: str, slop: int, k: int = 10
     ) -> DataFrame:
@@ -596,351 +491,7 @@ class DocumentsEngine:
         t0 = self.searcher.analyzer.analyze(surface0)[0][0]
         t1 = self.searcher.analyzer.analyze(surface1)[0][0]
         spec = BooleanSpec(must=[SpanNearClause((t0, t1), int(slop))])
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def fuzzy_blended_topk(
-        self, target: str, max_edits: int = 2, max_expansions: int = 50,
-        k: int = 10,
-    ) -> DataFrame:
-        """FuzzyQuery with its DEFAULT rewrite
-        (``L/search/FuzzyQuery`` → ``TopTermsBlendedFreqScoringRewrite``):
-        dictionary terms within ``max_edits`` become SHOULD term queries
-        sharing blended statistics (df = max df over the expansion), each
-        boosted 1 − ed/min(|term|,|target|) (float div, float sub —
-        ``FuzzyTermsEnum`` op order); top ``max_expansions`` kept by
-        (boost desc, term asc).
-
-        Scale shape: ONE pruned scan of the small term_stats dictionary
-        with a JVM ``levenshtein`` filter (no Python over the dictionary),
-        then the standard or_group kernel — which also rides block-max
-        WAND via member-folded bounds."""
-        import numpy as np
-
-        from .index.build import KEYWORD_PREFIX
-        from .search.query import BlendedTermClause
-
-        t = target.lower()
-        rows = (
-            read_term_stats(self.spark, self.searcher.index_dir)
-            .filter(~F.col("term").startswith(KEYWORD_PREFIX))
-            .withColumn("dist", F.levenshtein(F.col("term"), F.lit(t)))
-            .filter(F.col("dist") <= max_edits)
-            .select("term", "dist")
-            .collect()
-        )
-        cands = []
-        for r in rows:
-            minlen = min(len(r.term), len(t))
-            boost = np.float32(1.0) - (
-                np.float32(r.dist) / np.float32(minlen)
-            )
-            cands.append((float(boost), r.term))
-        cands.sort(key=lambda x: (-x[0], x[1]))
-        cands = cands[:max_expansions]
-        spec = BooleanSpec(should=[BlendedTermClause(
-            tuple(term for _, term in cands),
-            tuple(b for b, _ in cands),
-        )])
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def synonym_topk(self, surfaces: list[str], k: int = 10) -> DataFrame:
-        """Explicit SynonymQuery top-k (``L/search/SynonymQuery.java`` — the
-        query-time synonym shape): the given surfaces analyze to terms that
-        score as ONE pseudo-term — per doc tf = Σ member termFreqs, docFreq
-        = max member df (SynonymWeight's TermStatistics merge), one BM25
-        score. Unlike a SHOULD disjunction, a doc containing several
-        members is NOT rewarded with per-member idf; unlike
-        BlendedTermQuery, members do not score separately.
-
-        Scale shape: member posting lists pruned at one parquet scan
-        (term IN-list pushdown); the per-segment merge is one concatenate +
-        unique + add.at (``kernels._sum_postings``) — no positions."""
-        from .search.query import BooleanSpec, SynonymClause
-
-        an = self.searcher.analyzer
-        terms = tuple(dict.fromkeys(
-            an.analyze(s)[0][0] for s in surfaces if an.analyze(s)
-        ))
-        spec = BooleanSpec(should=[SynonymClause(terms)])
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def synonym_term_topk(self, surface: str, k: int = 10) -> DataFrame:
-        """Position-graph term query (``L/util/QueryBuilder#
-        analyzeGraphBoolean``): the surface analyzes through the index
-        chain; tokens landing on the SAME position (posInc-0 emissions —
-        e.g. the KeywordRepeat chain's original+stem pair) compile to one
-        SynonymQuery, single tokens to TermQuery, positions combine as
-        SHOULD. 'tables' through the keywordrepeat chain → SynonymQuery
-        (tables, table) — matching docs with either form under one
-        merged-stats score."""
-        from .search.query import BooleanSpec, SynonymClause, TermClause
-
-        by_pos: dict[int, list[str]] = {}
-        for t, p in self.searcher.analyzer.analyze(surface):
-            by_pos.setdefault(p, []).append(t)
-        should = []
-        for p in sorted(by_pos):
-            ts = tuple(dict.fromkeys(by_pos[p]))
-            should.append(
-                SynonymClause(ts) if len(ts) > 1 else TermClause(ts[0])
-            )
-        spec = BooleanSpec(should=should)
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def span_multiterm_topk(
-        self, prefix: str, other: str, slop: int, k: int = 10
-    ) -> DataFrame:
-        """SpanMultiTermQueryWrapper (``L/search/spans/
-        SpanMultiTermQueryWrapper.java``): a multi-term pattern (here
-        PrefixQuery — the wildcard-in-phrase case) wrapped as a span
-        operand: the pattern rewrites against the term dictionary into a
-        SpanOrQuery union (SpanRewriteMethod), then feeds an ordered
-        SpanNearQuery with the trailing term. Weight = f32(Σ idf) over the
-        expansion + the other term (every expansion member is live by
-        construction — it came from the dictionary).
-
-        Scale shape: ONE pruned term_stats scan for the rewrite (JVM
-        startswith filter), then the existing span_near_or kernel — the
-        union + packed-key matcher, no new shuffle."""
-        from .search.query import BooleanSpec, SpanNearOrClause
-
-        exp = tuple(self.searcher.expand_terms("prefix", prefix))
-        other_t = self.searcher.analyzer.analyze(other)[0][0]
-        spec = BooleanSpec(should=[
-            SpanNearOrClause((exp, (other_t,)), slop)
-        ])
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def covering_topk(
-        self, surfaces: list[str], mod: int = 3, k: int = 10
-    ) -> DataFrame:
-        """CoveringQuery top-k (``L/search/CoveringQuery.java``): SHOULD
-        clauses with a PER-DOC dynamic ``minimumNumberMatched`` read from a
-        LongValuesSource — here the dense doc-key-rank docvalue (== global
-        docID by construction): threshold(doc) = 1 + (docID mod ``mod``).
-        A doc matches when at least that many clauses match it; score =
-        Σ matching clause scores (CoveringScorer sums its sub-scorers).
-
-        Scale shape: identical to the boolean kernel — the only addition is
-        one per-doc modulo compare inside the segment combine; no extra
-        scan, no shuffle. Routed exact (a per-doc msm has no WAND bound
-        fold)."""
-        from .search.query import BooleanSpec, TermClause
-
-        an = self.searcher.analyzer
-        spec = BooleanSpec(
-            should=[TermClause(an.analyze(s)[0][0]) for s in surfaces],
-            covering_mod=mod,
-        )
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def simple_query_topk(self, query: str, k: int = 10) -> DataFrame:
-        """SimpleQueryParser top-k (``L/queryparser/simple/
-        SimpleQueryParser.java``): the end-user-safe grammar — ``+`` AND,
-        ``|`` OR, ``-`` NOT, quoted phrases with ``~slop``, trailing-``*``
-        prefix expansion, one level of groups — whose contract is that NO
-        input string ever raises (malformed operators degrade to text)."""
-        from .search.simpleparser import parse_simple
-
-        spec = parse_simple(
-            query, self.searcher.analyzer, expand=self.searcher.expand_terms
-        )
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def surround_topk(self, query: str, k: int = 10) -> DataFrame:
-        """Surround query-language top-k (``lucene/queryparser/surround``):
-        ``kW(a,b)`` = ordered span near, ``kN(a,b)`` = unordered span near
-        (both with slop = k−1, the DistanceQuery mapping), bare terms, one
-        level of AND/OR/NOT. Runs on the exact positional kernels; the
-        unordered matcher is the vectorized NearSpansUnordered walk
-        (``kernels._span_near_unordered_freqs_2term``)."""
-        from .search.surround import parse_surround
-
-        spec = parse_surround(query, self.searcher.analyzer)
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def span_near_or_topk(
-        self, surfaces0: list[str], surfaces1: list[str], slop: int,
-        k: int = 10,
-    ) -> DataFrame:
-        """Nested-span top-k: ordered ``SpanNearQuery`` whose operands are
-        ``SpanOrQuery`` unions (``L/search/spans/SpanNearQuery`` over
-        ``SpanOrQuery`` sub-spans). Matching = the flat ordered recurrence
-        over each operand's position-union stream; weight = f32(Σ idf)
-        over all live leaf terms.
-
-        Scale shape: all member postings pruned at one parquet scan; the
-        per-segment kernel is two vectorized unions + the packed-key span
-        matcher, ONE TakeOrdered."""
-        from .search.query import SpanNearOrClause
-
-        slots = tuple(
-            tuple(self.searcher.analyzer.analyze(s)[0][0] for s in group)
-            for group in (surfaces0, surfaces1)
-        )
-        spec = BooleanSpec(must=[SpanNearOrClause(slots, int(slop))])
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def span_not_topk(
-        self, include: str, exclude: str, pre: int = 0, post: int = 0,
-        k: int = 10,
-    ) -> DataFrame:
-        """SpanNotQuery top-k (``L/search/spans/SpanNotQuery`` over two term
-        spans): occurrences of ``include`` survive unless an ``exclude``
-        occurrence lies within [p − pre, p + post]; tf = surviving count,
-        weight = idf(include) — SpanWeight takes the include side's stats.
-
-        Scale shape: identical to the phrase top-k path — both terms'
-        postings pruned at the parquet scan, per-segment exact kernel with
-        the packed-key vectorized matcher (one searchsorted over the exclude
-        keys, one bincount; no per-doc loop), ONE TakeOrdered."""
-        from .search.query import SpanNotClause
-
-        t_inc = self.searcher.analyzer.analyze(include)[0][0]
-        t_exc = self.searcher.analyzer.analyze(exclude)[0][0]
-        spec = BooleanSpec(
-            must=[SpanNotClause(t_inc, t_exc, int(pre), int(post))]
-        )
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def interval_unordered_topk(
-        self, surface0: str, surface1: str, maxgaps: int, k: int = 10,
-        ordered: bool = False,
-    ) -> DataFrame:
-        """Unordered interval top-k (``lucene/queries/.../intervals/
-        Intervals.java#unordered`` + ``#maxgaps`` under ``IntervalQuery``):
-        minimal intervals containing both terms in either order (for two
-        terms: adjacent opposite-term pairs in the merged position stream),
-        matched when gaps <= maxgaps; each match contributes 1/(1+gaps) to
-        the doc freq; weight = f32(Σ idf) over both terms.
-
-        Scale shape: identical to the phrase top-k path — two pruned
-        posting scans, per-segment exact kernel (one argsort merge over the
-        packed keys, one shifted compare), ONE TakeOrdered."""
-        from .search.query import IntervalUnorderedClause
-
-        an = self.searcher.analyzer
-        spec = BooleanSpec(must=[IntervalUnorderedClause(
-            (an.analyze(surface0)[0][0], an.analyze(surface1)[0][0]),
-            int(maxgaps), ordered,
-        )])
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def span_contain_topk(
-        self, big0: str, big1: str, big_slop: int, little: str,
-        mode: str = "containing", k: int = 10,
-    ) -> DataFrame:
-        """SpanContainingQuery / SpanWithinQuery top-k (``L/search/spans/
-        SpanContainingQuery``, ``SpanWithinQuery``): big = ordered two-term
-        SpanNear(big0, big1, big_slop), little = a unit term span.
-        mode='containing' scores the big spans that enclose a little
-        occurrence (freq contribution 1/(1+width) like SpanNear);
-        mode='within' scores the little occurrences enclosed by a matched
-        big span (slop factor 1 each). Weight = f32(Σ idf) over all three
-        terms (SpanContainQuery builds SimWeight from both sides).
-
-        Scale shape: identical to the phrase top-k path — three terms'
-        postings pruned at the parquet scan, per-segment exact kernel with
-        the packed-key vectorized matcher (searchsorted enclosure checks,
-        no per-doc loop), ONE TakeOrdered."""
-        from .search.query import SpanContainClause
-
-        an = self.searcher.analyzer
-        spec = BooleanSpec(must=[SpanContainClause(
-            (an.analyze(big0)[0][0], an.analyze(big1)[0][0]),
-            an.analyze(little)[0][0], int(big_slop), mode,
-        )])
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def span_or_topk(self, surfaces: list[str], k: int = 10) -> DataFrame:
-        """SpanOrQuery top-k (``L/search/spans/SpanOrQuery`` over unit term
-        spans): matches wherever ANY member occurs; tf = the doc's total
-        member-occurrence count (one width-0 span per occurrence, slop
-        factor 1); weight = f32(Σ idf) over the live members — ONE clause,
-        not a per-term disjunction (distinct from scoring-boolean OR:
-        summed tf under one weight saturates differently).
-
-        Scale shape: member postings pruned at the parquet scan; the kernel
-        is one concatenate + unique + add.at per segment (no positions
-        decoded), ONE TakeOrdered."""
-        from .search.query import SpanOrClause
-
-        terms = tuple(
-            self.searcher.analyzer.analyze(s)[0][0] for s in surfaces
-        )
-        spec = BooleanSpec(must=[SpanOrClause(terms)])
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def edismax_mm_topk(self, q: str, mm: str, k: int = 10) -> DataFrame:
-        """eDisMax with an ``mm`` spec (``S/search/ExtendedDismaxQParser``
-        + ``S/util/SolrPluginUtils#calculateMinShouldMatch``): the user
-        query's whitespace terms become SHOULD clauses over the text field
-        (the per-term DisjunctionMax over ``qf`` degenerates with one
-        field) and ``mm`` resolves against the optional-clause count —
-        conditional specs like ``"2<-25% 9<-3"`` included.
-
-        Scale shape: identical to the or3 top-k path; mm is bound
-        driver-side into the compiled query's minShouldMatch."""
-        from .search.query import TermClause
-        from .search.queryparser import calculate_min_should_match
-
-        toks = [
-            t for s in q.split()
-            for t, _ in self.searcher.analyzer.analyze(s)
-        ]
-        spec = BooleanSpec(should=[TermClause(t) for t in toks])
-        spec.min_should_match = calculate_min_should_match(
-            len(spec.should), mm
-        )
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def edismax_pf_topk(self, q: str, pf_boost: float, k: int = 10) -> DataFrame:
-        """eDisMax ``pf`` (phrase fields) boost
-        (``S/search/ExtendedDismaxQParser#addShingledPhraseQueries``): the
-        user query's terms score individually (the qf side) and the WHOLE
-        query is re-added as one implicit exact PhraseQuery SHOULD clause
-        boosted by ``pf_boost`` — documents containing the full phrase
-        outrank bag-of-words matches, but the phrase never gates matching
-        (it's optional; mm applies to the term clauses, and any phrase
-        match already satisfies them).
-
-        Scale shape: identical to the phrase top-k path — the term postings
-        are already in the scan for the qf clauses; the phrase clause adds
-        only the positional verify."""
-        from .search.query import PhraseClause, TermClause
-
-        analyzed = self.searcher.analyzer.analyze(q)
-        base = analyzed[0][1]
-        spec = BooleanSpec(should=[TermClause(t) for t, _ in analyzed])
-        spec.should.append(PhraseClause(
-            tuple(t for t, _ in analyzed),
-            tuple(p - base for _, p in analyzed),
-            boost=float(pf_boost),
-        ))
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def query_string_topk(self, qstr: str, k: int = 10) -> DataFrame:
-        """Classic query-string search (``L/queryparser/classic/
-        QueryParser`` surface, default operator OR): parse ``qstr`` —
-        ``+``/``-``/``AND``/``OR``/``NOT``, quoted phrases with ``~slop``,
-        ``^boost``, ``(...)`` term groups, ``*``/``?``/``~`` multi-term
-        (expanded against the live term dictionary), and
-        ``field:value`` keyword filters — into a BooleanSpec and run it on
-        the standard top-k path.
-
-        Scale shape: parsing is driver-side string work; execution is the
-        same term-pruned scan + per-segment kernel + ONE TakeOrdered as
-        every other query. Multi-term expansion reads only the pruned
-        ``term_stats`` dictionary."""
-        from .search.queryparser import parse_query_string
-
-        spec = parse_query_string(
-            qstr,
-            self.searcher.analyzer,
-            expand=self.searcher.expand_terms,
-            keyword_fields=("source", "lang"),
-        )
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
+        return self.ranked(spec, k)
 
     def explain(self, qtype: str, surface_terms: list[str], src_doc_id: int) -> DataFrame:
         """``IndexSearcher#explain`` / Solr debugQuery: per-term BM25 score
@@ -954,34 +505,6 @@ class DocumentsEngine:
         return self.spark.createDataFrame(
             pdf, "term string, df long, idf float, tf long, doc_len long, clause_score float"
         )
-
-    def analyze_spec(self, qtype: str, surface_terms: list[str], min_should: int = 0) -> BooleanSpec:
-        return self.searcher.parse(qtype, surface_terms, min_should)
-
-    def multiterm_topk(self, kind: str, pattern, k: int = 10) -> DataFrame:
-        """Prefix/wildcard/regexp/fuzzy/set query → scoring boolean rewrite."""
-        spec = self.searcher.multiterm_spec(kind, pattern)
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def phonetic_topk(self, surface: str, k: int = 10) -> DataFrame:
-        """Phonetic (Soundex) search: every whitespace token of ``surface``
-        expands to the dictionary terms sharing its Soundex code
-        (``lucene/analysis/phonetic`` PhoneticFilter + commons-codec
-        Soundex via solr.PhoneticFilterFactory), scored as one BM25
-        disjunction — misspellings match their sound-alike indexed stems
-        (e.g. ``stram`` → ``stream``).
-
-        Scale shape: the code compare is JVM column expressions over the
-        term dictionary (no UDF, no driver dictionary scan beyond the
-        bounded expansion collect every MultiTermQuery already does)."""
-        toks = tuple(t for t in surface.lower().split() if t)
-        spec = self.searcher.multiterm_spec("phonetic", toks)
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def dismax_topk(self, surface_terms: list[str], tie: float, k: int = 10) -> DataFrame:
-        spec = self.searcher.parse("or3", surface_terms, 0)
-        spec.dismax, spec.tie = True, tie
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
 
     def mlt_topk(self, src_doc_id: int, top_terms: int = 5, k: int = 10) -> DataFrame:
         """MoreLikeThis: interesting-terms disjunction of doc ``src_doc_id``,
@@ -1700,53 +1223,7 @@ class DocumentsEngine:
         if not spec.must:
             # all terms common: Lucene falls back to pure disjunction
             spec.min_should_match = 1
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
-    def tfidf_topk(
-        self, qtype: str, surface_terms: list[str], k: int = 10, min_should: int = 0
-    ) -> DataFrame:
-        """Top-k under ClassicSimilarity (pre-Lucene-8 TF-IDF) — the same
-        index and norm bytes, a different pluggable similarity
-        (``L/search/similarities/ClassicSimilarity``)."""
-        spec = self.searcher.parse(qtype, surface_terms, min_should)
-        q = self.searcher.compile(spec, k=k, similarity="classic")
-        return _present(self.searcher.search(q, with_keys=True))
-
-    def lm_topk(
-        self, qtype: str, surface_terms: list[str], k: int = 10, min_should: int = 0
-    ) -> DataFrame:
-        """Top-k under LMDirichletSimilarity (mu=2000) — language-model
-        ranking over the same index/norms
-        (``L/search/similarities/LMDirichletSimilarity``)."""
-        spec = self.searcher.parse(qtype, surface_terms, min_should)
-        q = self.searcher.compile(spec, k=k, similarity="lm")
-        return _present(self.searcher.search(q, with_keys=True))
-
-    def boolean_sim_topk(
-        self, qtype: str, surface_terms: list[str], k: int = 10, min_should: int = 0
-    ) -> DataFrame:
-        """Top-k under BooleanSimilarity (constant-score: clause score =
-        boost, so a disjunction ranks by how many query terms match,
-        docID-tiebroken) — ``L/search/similarities/BooleanSimilarity``."""
-        spec = self.searcher.parse(qtype, surface_terms, min_should)
-        q = self.searcher.compile(spec, k=k, similarity="boolean")
-        return _present(self.searcher.search(q, with_keys=True))
-
-    def sim_topk(
-        self,
-        similarity: str,
-        qtype: str,
-        surface_terms: list[str],
-        k: int = 10,
-        min_should: int = 0,
-    ) -> DataFrame:
-        """Top-k under any pluggable similarity over the same index/norms:
-        'dfr' (DFRSimilarity IN/L/H2), 'ib' (IBSimilarity LL/DF/H2), 'lmjm'
-        (LMJelinekMercerSimilarity λ=0.7) — plus the four the dedicated
-        helpers expose (``L/search/similarities/*``)."""
-        spec = self.searcher.parse(qtype, surface_terms, min_should)
-        q = self.searcher.compile(spec, k=k, similarity=similarity)
-        return _present(self.searcher.search(q, with_keys=True))
+        return self.ranked(spec, k)
 
     def suggest(self, kind: str, pattern, k: int = 10) -> DataFrame:
         """Suggester / spellcheck (``lucene/suggest/.../Lookup.java``,
@@ -1802,35 +1279,6 @@ class DocumentsEngine:
             k, F.desc("weight"), F.asc("key"), F.asc("doc_id"),
         ).select("rank", "key", "weight", F.col("doc_id").cast("long").alias("doc_id"))
 
-    def bm25_tuned_topk(
-        self,
-        qtype: str,
-        surface_terms: list[str],
-        k1: float,
-        b: float,
-        k: int = 10,
-        min_should: int = 0,
-    ) -> DataFrame:
-        """BM25 with a NON-DEFAULT (k1, b) — the ``BM25Similarity(k1, b)``
-        constructor every relevance tuner reaches for (Solr:
-        ``<similarity class=.../><float name="k1">``…): the same index and
-        norm bytes, only the 256-entry norm cache is rebuilt from the tuned
-        parameters (norms store the LENGTH, not a b-baked value — the
-        Lucene 7+ design that makes b tunable without reindexing, preserved
-        here). WAND block bounds ride the same tuned cache, so pruning
-        stays rank-safe."""
-        from .search.bm25 import norm_cache
-        from .search.query import compile_query
-
-        s = self.searcher
-        spec = s.parse(qtype, surface_terms, min_should)
-        df_map, _ = s.term_stats_rows(spec.all_terms())
-        q = compile_query(
-            spec, df_map, s.stats.doc_count,
-            norm_cache(s.stats.avgdl, k1=k1, b=b), k,
-        )
-        return _present(s.search(q, with_keys=True))
-
     def omitnorms_topk(
         self,
         qtype: str,
@@ -1860,7 +1308,7 @@ class DocumentsEngine:
             spec, df_map, s.stats.doc_count,
             np.full(256, const, dtype=np.float32), k,
         )
-        return _present(s.search(q, with_keys=True))
+        return self.ranked(q)
 
     def group_query_topk(
         self, buckets: dict[str, tuple[str, list[str]]], k: int = 3
@@ -2745,34 +2193,6 @@ class DocumentsEngine:
             .orderBy("query_id", "doc_id")
         )
 
-    def syngraph_topk(
-        self, phrase_words: list[str], synonym: str, k: int = 10
-    ) -> DataFrame:
-        """Query-time MULTI-WORD synonym (``lucene/analysis/.../synonym/
-        SynonymGraphFilter.java`` + ``L/util/QueryBuilder#analyzeGraphBoolean``):
-        a rule ``"w1 w2" => syn`` makes the query analyzer emit a token
-        GRAPH, and QueryBuilder lowers each graph path to one Boolean
-        branch — OR( phrase("w1 w2"), term(syn) ), minShouldMatch=1. The
-        index side stays untouched (graph filters are query-time only in
-        Lucene because indexed graphs would corrupt positions).
-
-        Scale shape: nothing new executes — the phrase branch rides the
-        packed-key phrase kernel and the term branch the ordinary scorer;
-        one WAND top-k over the two-clause disjunction."""
-        from .search.query import PhraseClause, TermClause
-
-        an = self.searcher.analyzer
-        terms = tuple(an.analyze(w)[0][0] for w in phrase_words)
-        syn = an.analyze(synonym)[0][0]
-        spec = BooleanSpec(
-            should=[
-                PhraseClause(terms, tuple(range(len(terms)))),
-                TermClause(syn),
-            ],
-            min_should_match=1,
-        )
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
-
     def analysis_debug(self, text: str) -> DataFrame:
         """Field-analysis debug handler (Solr ``/analysis/field`` —
         ``S/handler/AnalysisRequestHandlerBase#analyzeValue``): the token
@@ -3105,7 +2525,7 @@ class DocumentsEngine:
         df lookup is one term-pruned scan of the small term_stats table;
         execution is the ordinary WAND disjunction."""
         spec = self.searcher.more_like_this_spec(text, top_terms)
-        return _present(self.searcher.search(spec, k=k, with_keys=True))
+        return self.ranked(spec, k)
 
     def mlt_terms(self, src_doc_id: int, top_terms: int = 8) -> DataFrame:
         """MoreLikeThis ``interestingTerms=details`` (``lucene/queries/.../

@@ -520,11 +520,14 @@ def numeric_docvalues(
     plus one left join against the base; docs never updated ride the base
     value through ``coalesce``."""
     root = dv_updates_root(index_dir, field)
-    if not glob.glob(os.path.join(root, "gen=*")):
+    gens = sorted(glob.glob(os.path.join(root, "gen=*")))
+    if not gens:
         return base.select("doc_key", F.col("value").cast("double").alias("value"))
     from pyspark.sql import Window
 
-    ov = spark.read.option("basePath", root).parquet(os.path.join(root, "gen=*"))
+    # the listed generation dirs as explicit paths: a glob path makes Spark
+    # probe the literal 'gen=*' for a sink log and log a FileNotFoundException
+    ov = spark.read.option("basePath", root).parquet(*gens)
     w = Window.partitionBy("doc_key").orderBy(F.desc("gen"))
     latest = (
         ov.withColumn("_rn", F.row_number().over(w))

@@ -1,7 +1,10 @@
-"""Non-fulltext operator registry (facets, streams, dedup, ANN, text metrics).
+"""The one operator registry: every driver entry is a ``register(name, fn,
+oracle)`` call.
 
-Populated module-by-module; each entry mirrors a SURVEY.md §2 operator with a
-DuckDB oracle where SQL-expressible.
+``driver_queries`` registers the full-text entries when it is imported; the
+``ops/`` modules (facets, streams, dedup, ANN, text metrics, ...) register
+theirs on first use of ``ops_queries``/``ops_oracles``. Each entry mirrors a
+SURVEY.md §2 operator with a DuckDB oracle where SQL-expressible.
 """
 
 from __future__ import annotations
@@ -15,6 +18,10 @@ _ORACLES: dict[str, str] = {}
 
 
 def register(name: str, fn: Callable, oracle: str | None = None) -> None:
+    """Add entry ``name``; a name that is already taken is refused, so a
+    copy-paste slip cannot silently replace another entry and its oracle."""
+    if name in _QUERIES:
+        raise ValueError(f"query {name!r} is already registered")
     _QUERIES[name] = fn
     if oracle is not None:
         _ORACLES[name] = oracle

@@ -536,7 +536,8 @@ class IndexSearcher:
         retained (the ``{!cache=false}`` shape). Selective fqs — the ones
         worth caching — fit by definition; filters over INDEXED keyword
         fields should keep using the posting-list FILTER path
-        (``engine.filtered_topk``), which never materializes a DocSet."""
+        (``BooleanSpec.filter``, e.g. the ``ft_filter_topk`` entry), which
+        never materializes a DocSet."""
         key = repr(spec)
         cached = self._filter_cache.get(key)
         if cached is not None:

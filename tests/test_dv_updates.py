@@ -59,3 +59,23 @@ def test_boost_reranks_with_updated_values(spark):
         zip(-bs.astype(float), df["doc_key"].astype(int)),
     )[:10]
     assert [k for _, k in order] == list(page["doc_id"].astype(int))
+
+
+def test_generations_read_as_listed_paths(spark, monkeypatch):
+    """The generation dirs reach ``spark.read.parquet`` as the explicit
+    paths ``glob`` listed: a glob path makes Spark probe the literal
+    ``gen=*`` for a sink log and log a FileNotFoundException stack."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    seen: list[str] = []
+    parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        seen.extend(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    get_engine(spark, SF, "simple", DV_UPDATED).dv_values().count()
+    gens = [p for p in seen if "dv_updates" in p]
+    assert len(gens) == 2, seen
+    assert not any("*" in p for p in seen), seen

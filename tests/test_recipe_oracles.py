@@ -1,6 +1,8 @@
-"""Recipe-built engines (mutated or derived-text indexes) against their
-DuckDB oracles at sf0.001 — the same value-hash comparison
-``tools/check_entry.py`` runs by hand at sf0.01, here in the tier-1 suite."""
+"""Registered entries against their DuckDB oracles at sf0.001 — the same
+value-hash comparison ``tools/check_entry.py`` runs by hand at sf0.01, here
+in the tier-1 suite: every recipe-built engine (mutated or derived-text
+index) plus one entry per family whose spec is built in its registration
+(span, similarity, parser, multi-phrase, fuzzy-blended, synonym)."""
 
 import os
 
@@ -19,6 +21,12 @@ ENTRIES = [
     "ft_rtg",
     "ft_dv_boost_topk",
     "ft_copyfield_topk",
+    "ft_spancontain_topk",
+    "ft_tfidf_topk",
+    "ft_queryparser_topk",
+    "ft_multiphrase_topk",
+    "ft_fuzzy_blended_topk",
+    "ft_synonymquery_topk",
 ]
 
 pytestmark = pytest.mark.skipif(

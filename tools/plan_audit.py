@@ -55,6 +55,7 @@ def audit(name: str, df, must: list[str], must_not: list[str]) -> bool:
 
 def main() -> None:
     from lucene_solr_spark.session import get_spark
+    from lucene_solr_spark.driver_queries import all_queries
     from lucene_solr_spark.engine import get_engine
     from lucene_solr_spark.ops.dedup import dedup_minhash_lsh
     from lucene_solr_spark.ops.ann import ann_lsh_topk
@@ -62,6 +63,7 @@ def main() -> None:
 
     spark = get_spark("plan-audit", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     eng = get_engine(spark, SF_DIR, "simple")
+    entries = all_queries()
     results = []
 
     # 1. scored search: one per-segment scoring stage (its term-pruned
@@ -77,7 +79,7 @@ def main() -> None:
     # inside the task, no driver-side id set)
     results.append(audit(
         "keyword_filter_pushdown",
-        eng.filtered_topk("or3", ["merge", "batch", "scan"], "source", "src3", k=10),
+        entries["ft_filter_topk"](spark, SF_DIR),
         must=[SEG_TASK, TOPK],
         must_not=[r"CartesianProduct", SEG_TASK_FED],
     ))
@@ -173,7 +175,7 @@ def main() -> None:
     # one-stage shape (all member terms are read inside the task)
     results.append(audit(
         "multiphrase_term_pruned_scan",
-        eng.multiphrase_topk([["merge"], ["batch", "stream"]], k=10),
+        entries["ft_multiphrase_topk"](spark, SF_DIR),
         must=[SEG_TASK, TOPK],
         must_not=[r"CartesianProduct", SEG_TASK_FED],
     ))
@@ -284,7 +286,7 @@ def main() -> None:
     # stage (one term-pruned read per segment), one TakeOrdered
     results.append(audit(
         "surround_spans_pushed_scan",
-        eng.surround_topk("2W(merge, batch) OR 3N(vector, filter)", k=10),
+        entries["ft_surround_topk"](spark, SF_DIR),
         must=[SEG_TASK, TOPK],
         must_not=[r"CartesianProduct", SEG_TASK_FED],
     ))
