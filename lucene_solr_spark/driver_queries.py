@@ -64,17 +64,18 @@ from .oracles import (
     tfidf_topk_sql, total_hits_sql, word_break_sql,
 )
 from .ops.registry import ops_oracles, ops_queries, register
-from .search.bm25 import norm_cache
+from .search.bm25 import (
+    BOOLEAN, CLASSIC, DFI, DFR, DOCSONLY, F2EXP, IB, LM, LMJM, SWEETSPOT,
+    Similarity, bm25_tuned,
+)
 from .search.mm import calculate_min_should_match
 from .search.query import (
     BlendedTermClause, BooleanSpec, IntervalUnorderedClause, MultiPhraseClause,
     OrGroupClause, PhraseClause, SpanContainClause, SpanFirstClause,
     SpanNearOrClause, SpanNotClause, SpanOrClause, SynonymClause, TermClause,
-    compile_query, parse_fixture_query,
+    parse_fixture_query,
 )
-from .search.queryparser import (
-    calculate_min_should_match as edismax_min_should_match, parse_query_string,
-)
+from .search.queryparser import parse_query_string
 from .search.simpleparser import parse_simple
 from .search.surround import parse_surround
 
@@ -117,7 +118,7 @@ def _ranked(build, analyzer: str = "simple", mode: str = "wand"):
     return run
 
 
-def _sim(similarity: str):
+def _sim(similarity: Similarity):
     """Entry fn: the or3 fixture ranked under a pluggable similarity over
     the same index and norm bytes (``L/search/similarities/*``)."""
     return _ranked(lambda s: s.compile(s.parse("or3", OR3), 10, similarity=similarity))
@@ -168,16 +169,7 @@ def _edismax_mm(an, q: str, mm: str) -> BooleanSpec:
     """eDisMax: the query's whitespace terms as SHOULD clauses, ``mm``
     resolved against their count (``SolrPluginUtils#calculateMinShouldMatch``)."""
     should = [TermClause(t) for w in q.split() for t, _ in an.analyze(w)]
-    return BooleanSpec(should=should, min_should_match=edismax_min_should_match(len(should), mm))
-
-
-def _bm25_tuned(s, spec: BooleanSpec, k1: float, b: float):
-    """BM25Similarity(k1, b) over the same index: norms store lengths, not
-    b-baked values, so only the 256-entry norm cache is rebuilt."""
-    df_map, _ = s.term_stats_rows(spec.all_terms())
-    return compile_query(
-        spec, df_map, s.stats.doc_count, norm_cache(s.stats.avgdl, k1=k1, b=b), 10,
-    )
+    return BooleanSpec(should=should, min_should_match=calculate_min_should_match(len(should), mm))
 
 
 # --- FIXTURES.md query shapes over the analyzer chains ---------------------
@@ -973,9 +965,9 @@ register(
 )
 
 # --- pluggable similarities over the same index and norm bytes -------------
-register("ft_tfidf_topk", _sim("classic"), tfidf_topk_sql("simple", OR3_TERMS, 10))
+register("ft_tfidf_topk", _sim(CLASSIC), tfidf_topk_sql("simple", OR3_TERMS, 10))
 # BooleanSimilarity: clause score = boost, ranks by matched-term count
-register("ft_boolean_sim_topk", _sim("boolean"), f"""WITH {base_ctes("simple")},
+register("ft_boolean_sim_topk", _sim(BOOLEAN), f"""WITH {base_ctes("simple")},
 hits AS (
     SELECT doc_id, CAST(count(DISTINCT term) AS FLOAT) AS score
     FROM kept WHERE term IN ({", ".join(f"'{t}'" for t in OR3_TERMS)}) GROUP BY doc_id
@@ -983,11 +975,11 @@ hits AS (
 SELECT rank::INTEGER AS rank, doc_id::BIGINT AS doc_id, score::FLOAT AS score FROM (
     SELECT row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank, doc_id, score FROM hits
 ) WHERE rank <= 10 ORDER BY rank""")
-register("ft_lm_topk", _sim("lm"), lm_topk_sql("simple", OR3_TERMS, 10))
-register("ft_dfr_topk", _sim("dfr"), dfr_topk_sql("simple", OR3_TERMS, 10))
-register("ft_ib_topk", _sim("ib"), ib_topk_sql("simple", OR3_TERMS, 10))
-register("ft_lmjm_topk", _sim("lmjm"), lmjm_topk_sql("simple", OR3_TERMS, 10))
-register("ft_dfi_topk", _sim("dfi"), dfi_topk_sql("simple", OR3_TERMS, 10))
+register("ft_lm_topk", _sim(LM), lm_topk_sql("simple", OR3_TERMS, 10))
+register("ft_dfr_topk", _sim(DFR), dfr_topk_sql("simple", OR3_TERMS, 10))
+register("ft_ib_topk", _sim(IB), ib_topk_sql("simple", OR3_TERMS, 10))
+register("ft_lmjm_topk", _sim(LMJM), lmjm_topk_sql("simple", OR3_TERMS, 10))
+register("ft_dfi_topk", _sim(DFI), dfi_topk_sql("simple", OR3_TERMS, 10))
 
 # --- distributed search and index-maintenance invariants -------------------
 # SolrCloud LocalStatsCache: 4 hash-routed shards, each scoring with ITS OWN
@@ -1021,7 +1013,7 @@ register(
     dv_boost_topk_sql("simple", _fixture("or3", OR3_TERMS), 10),
 )
 # IndexOptions.DOCS: freq() == 1 at read time, norms still apply
-register("ft_docsonly_topk", _sim("docsonly"), docsonly_topk_sql("simple", OR3_TERMS, 10))
+register("ft_docsonly_topk", _sim(DOCSONLY), docsonly_topk_sql("simple", OR3_TERMS, 10))
 # DisMax mm spec "2<-25%" over a 4-term OR: the engine parses it; the oracle
 # binds the HAND-COMPUTED msm=3 (4 + int(f32(-25%·4)))
 register(
@@ -1056,8 +1048,8 @@ register(
 )
 # AxiomaticF2EXP (L/search/similarities/AxiomaticF2EXP) and
 # SweetSpotSimilarity (plateau length norm + baseline tf)
-register("ft_f2exp_topk", _sim("f2exp"), f2exp_topk_sql("simple", OR3_TERMS, 10))
-register("ft_sweetspot_topk", _sim("sweetspot"), sweetspot_topk_sql("simple", OR3_TERMS, 10))
+register("ft_f2exp_topk", _sim(F2EXP), f2exp_topk_sql("simple", OR3_TERMS, 10))
+register("ft_sweetspot_topk", _sim(SWEETSPOT), sweetspot_topk_sql("simple", OR3_TERMS, 10))
 # omitNorms=true: every doc scores through the norm-cache entry for length 1
 register(
     "ft_omitnorms_topk",
@@ -1067,7 +1059,7 @@ register(
 # BM25Similarity(k1=0.9, b=0.4), the classic web-search tuning
 register(
     "ft_bm25_tuned_topk",
-    _ranked(lambda s: _bm25_tuned(s, s.parse("or3", OR3), k1=0.9, b=0.4)),
+    _sim(bm25_tuned(k1=0.9, b=0.4)),
     bm25_topk_sql("simple", _fixture("or3", OR3_TERMS), 10, k1=0.9, b=0.4),
 )
 

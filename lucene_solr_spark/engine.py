@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .index.build import build_index, read_term_stats
+from .search.bm25 import BM25, OMIT_NORMS
 from .search.query import BooleanSpec, CompiledQuery
 from .search.searcher import IndexSearcher, ranked_top
 
@@ -1291,23 +1292,12 @@ class DocumentsEngine:
         ``omitNorms="true"``): length normalization is disabled — at query
         time ``LeafSimScorer#getNormValue`` returns the constant ``1L`` when
         the norms producer is absent, so every doc scores through the SAME
-        norm-cache entry ``cache[1]`` (decoded length 1). Implemented as a
-        compile-time constant cache over the unchanged index (norms bytes
-        are simply never consulted); WAND block bounds ride the same
-        constant, so pruning stays rank-safe."""
-        import numpy as np
-
-        from .search.bm25 import norm_cache
-        from .search.query import compile_query
-
+        norm-cache entry ``cache[1]`` (decoded length 1). Implemented as the
+        ``OMIT_NORMS`` similarity — BM25 with that constant table — over the
+        unchanged index (norms bytes are simply never consulted); WAND block
+        bounds ride the same constant, so pruning stays rank-safe."""
         s = self.searcher
-        spec = s.parse(qtype, surface_terms, min_should)
-        df_map, _ = s.term_stats_rows(spec.all_terms())
-        const = norm_cache(s.stats.avgdl)[1]
-        q = compile_query(
-            spec, df_map, s.stats.doc_count,
-            np.full(256, const, dtype=np.float32), k,
-        )
+        q = s.compile(s.parse(qtype, surface_terms, min_should), k, similarity=OMIT_NORMS)
         return self.ranked(q)
 
     def group_query_topk(
@@ -2917,7 +2907,7 @@ def blended_term_topk(
     legs = []
     for eng, nm in ((title, "t"), (body, "b")):
         q = compile_query(
-            spec, blend, eng.searcher.stats.doc_count, eng.searcher.cache,
+            spec, blend, eng.searcher.stats.doc_count, eng.searcher.table(BM25),
             1 << 30,
         )
         legs.append(
@@ -3411,7 +3401,7 @@ def field_masking_span_topk(
     )
     q = CompiledQuery(
         clauses=[clause], must_not_terms=(), min_should_match=0, k=k,
-        cache=bs.cache, n_must=1,
+        cache=bs.table(BM25), n_must=1,
     )
     hits = bs.hits(q, "exact", with_keys=True, sources=(
         PostingsSource(bs.index_dir, (bt,)),

@@ -1,7 +1,29 @@
-"""Lucene-8 BM25 scoring kernels — float32-exact.
+"""Similarity models — float32-exact scoring kernels, one record each.
 
-Semantics from ``L/search/similarities/BM25Similarity.java`` (8.x, i.e.
-AFTER LUCENE-8563 dropped the classic ``(k1+1)`` numerator factor —
+Every scoring model is one frozen ``Similarity`` record (the
+``L/search/similarities/Similarity`` → ``SimScorer`` analog):
+
+  field      role                                     bound where
+  ---------  ---------------------------------------  ----------------------
+  name       the model's short name (SIMILARITIES key) error messages
+  table      stats → 256-entry per-norm-byte table    IndexSearcher.compile
+  idf        (df, N) → f32 idf; None = weight is the   compile_query weights
+             boost (BooleanSimilarity, SimilarityBase)
+  aux        (df, ttf, N, sumTtf) → per-term clause    compile_query, term
+             stat; None = 0.0                          clauses
+  score      vectorized SimScorer#score over postings  kernels (exact, WAND)
+  bound      block-max upper bound for WAND            kernels (WAND)
+  supports   clause kinds beyond term / FILTER term    compile_query refusals
+
+The module constants (``BM25``, ``CLASSIC``, …) are the eleven models the
+engine ships; ``SIMILARITIES`` maps their names. A variant (tuned k1/b,
+omitted norms) is ``dataclasses.replace`` of a constant with another
+``table``. Records hold only module-level functions or ``functools.partial``
+of them, so a ``CompiledQuery`` carrying one pickles by reference into the
+scoring tasks.
+
+BM25 semantics from ``L/search/similarities/BM25Similarity.java`` (8.x,
+i.e. AFTER LUCENE-8563 dropped the classic ``(k1+1)`` numerator factor —
 rank-preserving vs textbook BM25 but absolute scores differ):
 
   idf    = (float) ln(1 + (docCount − docFreq + 0.5) / (docFreq + 0.5))
@@ -19,7 +41,9 @@ cast once). All kernels are numpy-vectorized.
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
+from functools import lru_cache, partial
+from typing import Callable
 
 import numpy as np
 
@@ -141,11 +165,6 @@ def block_max_score_classic(
 # score = query boost, independent of tf/norms/stats — "matching is the
 # score" (constant-score ranking; useful for pure filter-style retrieval
 # where the tiebreak order is the docID). Norm bytes are read but ignored.
-
-
-def boolean_idf(doc_freq: int, doc_count: int) -> np.float32:
-    """BooleanSimilarity binds no idf: the clause weight is the boost."""
-    return np.float32(1.0)
 
 
 def score_postings_boolean(
@@ -524,3 +543,140 @@ def block_max_score_docsonly(
     bound is exact for the block's min norm)."""
     norm = float(cache[min_norm & 0xFF])
     return np.float32(np.float32(weight) * np.float32(1.0 / (1.0 + norm)))
+
+
+# --- the Similarity records -------------------------------------------------
+
+
+def _avgdl_table(build: Callable, stats: CollectionStats) -> np.ndarray:
+    return build(stats.avgdl)
+
+
+def _stats_free_table(build: Callable, stats: CollectionStats) -> np.ndarray:
+    return build()
+
+
+def _omit_norms_table(stats: CollectionStats) -> np.ndarray:
+    """omitNorms: ``LeafSimScorer#getNormValue`` is the constant 1 when the
+    norms producer is absent, so every byte maps to ``norm_cache[1]``."""
+    return np.full(256, norm_cache(stats.avgdl)[1], dtype=np.float32)
+
+
+def _lm_aux(df: int, ttf: int, n: int, sum_ttf: int) -> float:
+    return LM_MU * float(lm_collection_probability(ttf, sum_ttf))
+
+
+def _lmjm_aux(df: int, ttf: int, n: int, sum_ttf: int) -> float:
+    return LMJM_LAMBDA * float(lm_collection_probability(ttf, sum_ttf))
+
+
+def _dfr_aux(df: int, ttf: int, n: int, sum_ttf: int) -> float:
+    return float(np.log2((n + 1.0) / (df + 0.5)))  # BasicModelIN
+
+
+def _ib_aux(df: int, ttf: int, n: int, sum_ttf: int) -> float:
+    return (df + 1.0) / (n + 1.0)  # LambdaDF
+
+
+def _f2exp_aux(df: int, ttf: int, n: int, sum_ttf: int) -> float:
+    return ((n + 1.0) / float(df)) ** F2EXP_K  # Axiomatic#idf
+
+
+def _dfi_aux(df: int, ttf: int, n: int, sum_ttf: int) -> float:
+    # expected = aux · dl with aux the pure-double collection ratio
+    return (ttf + 1.0) / (sum_ttf + 1.0)
+
+
+# multi-term clause kinds every idf-weighted model and BooleanSimilarity
+# score (named as compile_query refuses them); the SimilarityBase family
+# lacks their pseudo-term collection stats
+_MULTI_TERM = frozenset({"or_group filter", "phrase", "span", "interval"})
+
+
+@dataclass(frozen=True)
+class Similarity:
+    """One scoring model; see the module docstring for the fields."""
+
+    name: str
+    table: Callable[[CollectionStats], np.ndarray]
+    score: Callable
+    bound: Callable
+    idf: Callable[[int, int], np.float32] | None = None
+    aux: Callable[[int, int, int, int], float] | None = None
+    supports: frozenset = frozenset()
+
+    def require(self, what: str) -> None:
+        """Refuse a clause kind this model has no scorer for."""
+        if what not in self.supports:
+            use = "/".join(n for n, s in SIMILARITIES.items() if what in s.supports)
+            raise ValueError(f"{self.name} {what} scoring not implemented; use {use}")
+
+
+BM25 = Similarity(
+    "bm25", partial(_avgdl_table, norm_cache), score_postings, block_max_score,
+    idf, supports=_MULTI_TERM | {"or_group", "blended", "synonym", "multiphrase"},
+)
+# IndexOptions.DOCS: same BM25 idf weight and table; only freq() changes
+DOCSONLY = Similarity(
+    "docsonly", BM25.table, score_postings_docsonly, block_max_score_docsonly,
+    idf, supports=_MULTI_TERM,
+)
+CLASSIC = Similarity(
+    "classic", partial(_stats_free_table, classic_norm_cache),
+    score_postings_classic, block_max_score_classic, classic_idf,
+    supports=_MULTI_TERM | {"or_group", "blended", "synonym"},
+)
+# SweetSpotSimilarity extends ClassicSimilarity: same idf, only the tf and
+# lengthNorm functions are swapped
+SWEETSPOT = Similarity(
+    "sweetspot", partial(_stats_free_table, sweetspot_norm_cache),
+    score_postings_sweetspot, block_max_score_sweetspot, classic_idf,
+    supports=_MULTI_TERM,
+)
+# BooleanSimilarity's SimScorer returns the boost for ANY query type: a
+# phrase scores boost, not n_terms·boost
+BOOLEAN = Similarity(
+    "boolean", CLASSIC.table, score_postings_boolean, block_max_score_boolean,
+    supports=_MULTI_TERM | {"synonym"},
+)
+# SimilarityBase family: no idf in the weight (weight = boost); the per-term
+# collection stat rides the clause as ``aux``. LMJM and DFI both score off
+# the decoded doc length directly; DFR and IB share the H2 table.
+LM = Similarity(
+    "lm", partial(_stats_free_table, lm_norm_cache), score_postings_lm,
+    block_max_score_lm, aux=_lm_aux,
+)
+LMJM = Similarity(
+    "lmjm", partial(_stats_free_table, lmjm_norm_cache), score_postings_lmjm,
+    block_max_score_lmjm, aux=_lmjm_aux,
+)
+DFR = Similarity(
+    "dfr", partial(_avgdl_table, dfr_h2_cache), score_postings_dfr,
+    block_max_score_dfr, aux=_dfr_aux,
+)
+IB = Similarity(
+    "ib", DFR.table, score_postings_ib, block_max_score_ib, aux=_ib_aux,
+)
+F2EXP = Similarity(
+    "f2exp", partial(_avgdl_table, f2exp_norm_cache), score_postings_f2exp,
+    block_max_score_f2exp, aux=_f2exp_aux,
+)
+DFI = Similarity(
+    "dfi", LMJM.table, score_postings_dfi, block_max_score_dfi, aux=_dfi_aux,
+)
+SIMILARITIES = {
+    s.name: s
+    for s in (BM25, DOCSONLY, CLASSIC, SWEETSPOT, BOOLEAN, LM, LMJM, DFR, IB, F2EXP, DFI)
+}
+
+# omitNorms=true: length normalization disabled, every doc scores through
+# the SAME norm-cache entry; WAND block bounds ride the same constant
+OMIT_NORMS = replace(BM25, table=_omit_norms_table)
+
+
+@lru_cache(maxsize=None)
+def bm25_tuned(k1: float, b: float) -> Similarity:
+    """BM25Similarity(k1, b) over the same index: norms store lengths, not
+    b-baked values, so only the 256-entry table changes. One record per
+    (k1, b), so a searcher builds each tuned table once."""
+    return replace(BM25, table=partial(_avgdl_table, partial(norm_cache, k1=k1, b=b)))

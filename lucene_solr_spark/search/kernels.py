@@ -24,58 +24,7 @@ from __future__ import annotations
 import numpy as np
 
 from ..index.codec import decode_block, decode_postings
-from .bm25 import (
-    block_max_score,
-    block_max_score_boolean,
-    block_max_score_classic,
-    block_max_score_lm,
-    score_postings,
-    score_postings_boolean,
-    score_postings_classic,
-    score_postings_lm,
-)
-from .query import CompiledQuery
-
-
-def _sim_fns(q: CompiledQuery):
-    """(score_postings, block_max) pair for the query's similarity. Both
-    take a per-clause ``aux`` (LMDirichlet's mu·cp; unused elsewhere)."""
-    sim = getattr(q, "sim", "bm25")
-    if sim == "classic":
-        return score_postings_classic, block_max_score_classic
-    if sim == "docsonly":
-        from .bm25 import block_max_score_docsonly, score_postings_docsonly
-
-        return score_postings_docsonly, block_max_score_docsonly
-    if sim == "boolean":
-        return score_postings_boolean, block_max_score_boolean
-    if sim == "lm":
-        return score_postings_lm, block_max_score_lm
-    if sim == "dfr":
-        from .bm25 import block_max_score_dfr, score_postings_dfr
-
-        return score_postings_dfr, block_max_score_dfr
-    if sim == "ib":
-        from .bm25 import block_max_score_ib, score_postings_ib
-
-        return score_postings_ib, block_max_score_ib
-    if sim == "lmjm":
-        from .bm25 import block_max_score_lmjm, score_postings_lmjm
-
-        return score_postings_lmjm, block_max_score_lmjm
-    if sim == "dfi":
-        from .bm25 import block_max_score_dfi, score_postings_dfi
-
-        return score_postings_dfi, block_max_score_dfi
-    if sim == "f2exp":
-        from .bm25 import block_max_score_f2exp, score_postings_f2exp
-
-        return score_postings_f2exp, block_max_score_f2exp
-    if sim == "sweetspot":
-        from .bm25 import block_max_score_sweetspot, score_postings_sweetspot
-
-        return score_postings_sweetspot, block_max_score_sweetspot
-    return score_postings, block_max_score
+from .query import CompiledClause, CompiledQuery
 
 
 _POS_SHIFT = 21          # (candidate_idx << 21) | adjusted_position key packing
@@ -976,6 +925,101 @@ def _norm_lookup(norms_arr: np.ndarray, base: int, docs: np.ndarray) -> np.ndarr
     return norms_arr[docs - base]
 
 
+def _clause_postings(c: CompiledClause, dec) -> tuple[np.ndarray, np.ndarray]:
+    """One clause's matching (docs, freqs) — the per-clause-kind matcher the
+    exact and counting kernels share. ``dec(term)`` returns the term's
+    decoded (docs, tfs, positions). Freqs are the int tf or float32 span
+    freq the similarity scores; an or_group's docs are its member union
+    (its freqs are unused: members score separately, ``_or_group_scores``)."""
+    if c.kind == "term":
+        return dec(c.terms[0])[:2]
+    if c.kind == "span_first":
+        # SpanFirstQuery (L/search/spans/SpanFirstQuery): tf = count of
+        # occurrences inside the position range [c.post, c.slop) — a term
+        # span at p ends at p+1 → positions p < end; SpanFirstQuery is the
+        # start=0 case of SpanPositionRangeQuery. Vectorized over the whole
+        # posting list: doc index per flat position via repeat, window
+        # counts via one bincount of the masked indices.
+        docs, tfs, pos = dec(c.terms[0])
+        if docs.size == 0:
+            return docs, tfs
+        di = np.repeat(np.arange(docs.size, dtype=np.int64), tfs)
+        cnt = np.bincount(di[(pos >= c.post) & (pos < c.slop)], minlength=docs.size)
+        keep = cnt > 0
+        return docs[keep], cnt[keep]
+    if c.kind in ("synonym", "or_group"):
+        # SynonymQuery: merged postings, summed tf, one score under the
+        # clause's max-df weight
+        return _sum_postings([dec(t)[:2] for t in c.terms])
+    if c.kind == "span_near":
+        return _span_near_freqs_2term(dec(c.terms[0]), dec(c.terms[1]), c.slop)
+    if c.kind == "span_near_unordered":
+        return _span_near_unordered_freqs_2term(
+            dec(c.terms[0]), dec(c.terms[1]), c.slop
+        )
+    if c.kind == "span_near_or":
+        # nested spans: each operand's occurrence stream is the positional
+        # union of its member terms, then the flat ordered matcher runs
+        # unchanged over the pseudo-terms
+        return _span_near_freqs_2term(
+            _union_postings([dec(t) for t in c.slots[0]]),
+            _union_postings([dec(t) for t in c.slots[1]]),
+            c.slop,
+        )
+    if c.kind == "span_not":
+        return _span_not_freqs(dec(c.terms[0]), dec(c.terms[1]), c.slop, c.post)
+    if c.kind in ("interval_unordered", "interval_ordered"):
+        return _interval_unordered_freqs(
+            dec(c.terms[0]), dec(c.terms[1]), c.slop,
+            ordered=c.kind == "interval_ordered",
+        )
+    if c.kind in ("span_containing", "span_within"):
+        # terms = (big0, big1, little); slop = the big SpanNear's slop
+        return _span_contain_freqs(
+            dec(c.terms[0]), dec(c.terms[1]), c.slop, dec(c.terms[2]),
+            "within" if c.kind == "span_within" else "containing",
+        )
+    if c.kind == "span_or":
+        # SpanOrQuery (L/search/spans/SpanOrQuery): every member occurrence
+        # is a width-0 span (slop factor 1), positions are unique per
+        # occurrence, so tf = Σ member tfs per doc — no position decode
+        return _span_or_freqs([dec(t) for t in c.terms])
+    if c.kind == "multiphrase":
+        # each slot's member postings union into one pseudo-term, then the
+        # exact-phrase intersect runs unchanged over the unions
+        per = [_union_postings([dec(t) for t in slot]) for slot in c.slots]
+    else:
+        per = [dec(t) for t in c.terms]
+    args = ([p[0] for p in per], [p[2] for p in per], [p[1] for p in per], c.offsets)
+    if c.slop == 0:
+        return _phrase_freqs(*args)
+    return _sloppy_phrase_freqs(*args, c.slop)
+
+
+def _or_group_scores(
+    c: CompiledClause, dec, norms_arr: np.ndarray, base: int, q: CompiledQuery
+) -> tuple[np.ndarray, np.ndarray]:
+    """Nested disjunction as one clause (DisjunctionSumScorer subtree):
+    per-member f32 term scores, per-doc Σ in float64 in member order, one
+    f32 cast for the group score."""
+    d_parts, s_parts = [], []
+    for t, w in zip(c.terms, c.member_weights):
+        md, mtf = dec(t)[:2]
+        if md.size == 0:
+            continue
+        d_parts.append(md)
+        s_parts.append(q.sim.score(
+            mtf, _norm_lookup(norms_arr, base, md), w, q.cache, 0.0,
+        ).astype(np.float64))
+    if not d_parts:
+        e = np.empty(0, dtype=np.int64)
+        return e, np.empty(0, dtype=np.float32)
+    docs, inv = np.unique(np.concatenate(d_parts), return_inverse=True)
+    gsum = np.zeros(len(docs), dtype=np.float64)
+    np.add.at(gsum, inv, np.concatenate(s_parts))
+    return docs, gsum.astype(np.float32)
+
+
 def score_segment_exact(
     term_blocks: dict[str, list],
     norms_arr: np.ndarray,
@@ -1004,124 +1048,17 @@ def score_segment_exact(
 
     clause_docs, clause_scores, occurs = [], [], []
     for c in q.clauses:
-        if c.kind == "term":
-            parts = dec(c.terms[0])
-            docs, tfs = parts[0], parts[1]
-        elif c.kind == "span_first":
-            # SpanFirstQuery (L/search/spans/SpanFirstQuery): tf = count of
-            # occurrences with span end <= c.slop (term span at p ends at
-            # p+1 → positions p < end). Vectorized over the whole posting
-            # list: doc index per flat position via repeat, window counts
-            # via one bincount of the masked indices.
-            docs_all, tfs_all, pos = dec(c.terms[0])
-            if docs_all.size == 0:
-                docs, tfs = docs_all, tfs_all
-            else:
-                di = np.repeat(
-                    np.arange(docs_all.size, dtype=np.int64), tfs_all
-                )
-                # position-range mask: [c.post, c.slop) — SpanFirstQuery is
-                # the start=0 (c.post==0) case of SpanPositionRangeQuery
-                cnt = np.bincount(
-                    di[(pos >= c.post) & (pos < c.slop)],
-                    minlength=docs_all.size,
-                )
-                keep = cnt > 0
-                docs, tfs = docs_all[keep], cnt[keep]
-        elif c.kind == "synonym":
-            # SynonymQuery: merged postings, summed tf, one score under the
-            # clause's max-df weight (the generic scoring call below)
-            docs, tfs = _sum_postings([dec(t)[:2] for t in c.terms])
-        elif c.kind == "span_near":
-            docs, tfs = _span_near_freqs_2term(
-                dec(c.terms[0]), dec(c.terms[1]), c.slop
-            )
-        elif c.kind == "span_near_unordered":
-            docs, tfs = _span_near_unordered_freqs_2term(
-                dec(c.terms[0]), dec(c.terms[1]), c.slop
-            )
-        elif c.kind == "span_near_or":
-            # nested spans: each operand's occurrence stream is the
-            # positional union of its member terms, then the flat ordered
-            # matcher runs unchanged over the pseudo-terms
-            docs, tfs = _span_near_freqs_2term(
-                _union_postings([dec(t) for t in c.slots[0]]),
-                _union_postings([dec(t) for t in c.slots[1]]),
-                c.slop,
-            )
-        elif c.kind == "span_not":
-            docs, tfs = _span_not_freqs(
-                dec(c.terms[0]), dec(c.terms[1]), c.slop, c.post
-            )
-        elif c.kind in ("interval_unordered", "interval_ordered"):
-            docs, tfs = _interval_unordered_freqs(
-                dec(c.terms[0]), dec(c.terms[1]), c.slop,
-                ordered=c.kind == "interval_ordered",
-            )
-        elif c.kind in ("span_containing", "span_within"):
-            # terms = (big0, big1, little); slop = the big SpanNear's slop
-            docs, tfs = _span_contain_freqs(
-                dec(c.terms[0]), dec(c.terms[1]), c.slop, dec(c.terms[2]),
-                "within" if c.kind == "span_within" else "containing",
-            )
-        elif c.kind == "span_or":
-            # SpanOrQuery (L/search/spans/SpanOrQuery): every member
-            # occurrence is a width-0 span (slop factor 1), positions are
-            # unique per occurrence, so tf = Σ member tfs per doc — no
-            # position decode needed
-            docs, tfs = _span_or_freqs([dec(t) for t in c.terms])
-        elif c.kind == "multiphrase":
-            # each slot's member postings union into one pseudo-term, then
-            # the exact-phrase intersect runs unchanged over the unions
-            per = [
-                _union_postings([dec(t) for t in slot]) for slot in c.slots
-            ]
-            docs, tfs = _phrase_freqs(
-                [p[0] for p in per], [p[2] for p in per], [p[1] for p in per], c.offsets
-            )
-        elif c.kind == "or_group":
-            # nested disjunction as one clause (DisjunctionSumScorer
-            # subtree): per-member f32 term scores, per-doc Σ in float64 in
-            # member order, single f32 cast for the group score
-            d_parts, s_parts = [], []
-            for t, w in zip(c.terms, c.member_weights):
-                md, mtf = dec(t)[0], dec(t)[1]
-                if md.size == 0:
-                    continue
-                d_parts.append(md)
-                s_parts.append(_sim_fns(q)[0](
-                    mtf, _norm_lookup(norms_arr, base, md), w, q.cache, 0.0,
-                ).astype(np.float64))
-            if not d_parts:
-                docs = np.empty(0, dtype=np.int64)
-                tfs = docs
-            else:
-                alld = np.concatenate(d_parts)
-                alls = np.concatenate(s_parts)
-                docs, inv = np.unique(alld, return_inverse=True)
-                gsum = np.zeros(len(docs), dtype=np.float64)
-                np.add.at(gsum, inv, alls)
-                group_scores = gsum.astype(np.float32)
-                tfs = None  # scored directly below
+        if c.kind == "or_group":
+            docs, scores = _or_group_scores(c, dec, norms_arr, base, q)
         else:
-            per = [dec(t) for t in c.terms]
-            matcher = _phrase_freqs if getattr(c, "slop", 0) == 0 else (
-                lambda d, p, t, o: _sloppy_phrase_freqs(d, p, t, o, c.slop)
-            )
-            docs, tfs = matcher(
-                [p[0] for p in per], [p[2] for p in per], [p[1] for p in per], c.offsets
+            docs, tfs = _clause_postings(c, dec)
+            scores = q.sim.score(
+                tfs, _norm_lookup(norms_arr, base, docs), c.weight, q.cache, c.aux,
             )
         if docs.size == 0:
             if c.occur == "must":
                 return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
             continue
-        if c.kind == "or_group":
-            scores = group_scores
-        else:
-            scores = _sim_fns(q)[0](
-                tfs, _norm_lookup(norms_arr, base, docs), c.weight, q.cache,
-                getattr(c, "aux", 0.0),
-            )
         clause_docs.append(docs)
         clause_scores.append(scores)
         occurs.append(c.occur)
@@ -1131,11 +1068,10 @@ def score_segment_exact(
             dec(t)[0] for t in q.must_not_terms
         ])) if any(term_blocks.get(t) for t in q.must_not_terms) else None
     excl = _merge_excl(excl, deleted)
-    cov_mod = getattr(q, "covering_mod", 0)
     docs, scores = _combine(
         clause_docs, clause_scores, occurs, q.n_must, q.min_should_match, excl,
-        getattr(q, "combine", "sum"), getattr(q, "tie", 0.0), incl,
-        covering=(base, cov_mod) if cov_mod else None,
+        q.combine, q.tie, incl,
+        covering=(base, q.covering_mod) if q.covering_mod else None,
     )
     docs, scores = _apply_after(docs, scores, after)
     return _topk(docs, scores, q.k)
@@ -1154,7 +1090,7 @@ def count_segment_matches(
     the scoring kernels via ``_combine`` with zero scores."""
     decoded: dict = {}
     need_pos = q.needs_positions
-    if getattr(q, "covering_mod", 0):
+    if q.covering_mod:
         # the count path has no per-doc threshold fold — refuse loudly
         # rather than overcount (CoveringQuery rides the scoring kernel)
         raise NotImplementedError(
@@ -1169,73 +1105,7 @@ def count_segment_matches(
 
     clause_docs, occurs = [], []
     for c in q.clauses:
-        if c.kind == "term":
-            docs = dec(c.terms[0])[0]
-        elif c.kind in ("or_group", "synonym"):
-            parts = [dec(t)[0] for t in c.terms]
-            parts = [d for d in parts if d.size]
-            docs = (
-                np.unique(np.concatenate(parts))
-                if parts else np.empty(0, dtype=np.int64)
-            )
-        elif c.kind == "span_near":
-            docs, _ = _span_near_freqs_2term(
-                dec(c.terms[0]), dec(c.terms[1]), c.slop
-            )
-        elif c.kind == "span_near_unordered":
-            docs, _ = _span_near_unordered_freqs_2term(
-                dec(c.terms[0]), dec(c.terms[1]), c.slop
-            )
-        elif c.kind == "span_near_or":
-            docs, _ = _span_near_freqs_2term(
-                _union_postings([dec(t) for t in c.slots[0]]),
-                _union_postings([dec(t) for t in c.slots[1]]),
-                c.slop,
-            )
-        elif c.kind == "span_not":
-            docs, _ = _span_not_freqs(
-                dec(c.terms[0]), dec(c.terms[1]), c.slop, c.post
-            )
-        elif c.kind in ("interval_unordered", "interval_ordered"):
-            docs, _ = _interval_unordered_freqs(
-                dec(c.terms[0]), dec(c.terms[1]), c.slop,
-                ordered=c.kind == "interval_ordered",
-            )
-        elif c.kind in ("span_containing", "span_within"):
-            docs, _ = _span_contain_freqs(
-                dec(c.terms[0]), dec(c.terms[1]), c.slop, dec(c.terms[2]),
-                "within" if c.kind == "span_within" else "containing",
-            )
-        elif c.kind == "span_or":
-            docs, _ = _span_or_freqs([dec(t) for t in c.terms])
-        elif c.kind == "span_first":
-            docs_all, tfs_all, pos = dec(c.terms[0])
-            if docs_all.size == 0:
-                docs = docs_all
-            else:
-                di = np.repeat(
-                    np.arange(docs_all.size, dtype=np.int64), tfs_all
-                )
-                cnt = np.bincount(
-                    di[(pos >= c.post) & (pos < c.slop)],
-                    minlength=docs_all.size,
-                )
-                docs = docs_all[cnt > 0]
-        elif c.kind == "multiphrase":
-            per = [
-                _union_postings([dec(t) for t in slot]) for slot in c.slots
-            ]
-            docs, _ = _phrase_freqs(
-                [p[0] for p in per], [p[2] for p in per], [p[1] for p in per], c.offsets
-            )
-        else:
-            per = [dec(t) for t in c.terms]
-            matcher = _phrase_freqs if getattr(c, "slop", 0) == 0 else (
-                lambda d, p, t, o: _sloppy_phrase_freqs(d, p, t, o, c.slop)
-            )
-            docs, _ = matcher(
-                [p[0] for p in per], [p[2] for p in per], [p[1] for p in per], c.offsets
-            )
+        docs = _clause_postings(c, dec)[0]
         if docs.size == 0:
             if c.occur == "must":
                 return 0
@@ -1272,8 +1142,6 @@ def score_segment_wand(
     decodes keyed by (term, block_idx) — scores stay per-clause (weight-
     dependent), but the varint decode, the expensive part, is done once per
     block per segment for the whole batch."""
-    score_fn, bound_fn = _sim_fns(q)
-
     # member-level flattening: a term clause is one member; an or_group
     # contributes one member per live term (coverage/bounds computed per
     # member, folded per clause — group bound = Σ member block bounds,
@@ -1285,7 +1153,7 @@ def score_segment_wand(
             for t, w in zip(c.terms, c.member_weights):
                 members.append((ci, t, w, 0.0))
         else:
-            members.append((ci, c.terms[0], c.weight, getattr(c, "aux", 0.0)))
+            members.append((ci, c.terms[0], c.weight, c.aux))
     n_cl = len(q.clauses)
     n_mem = len(members)
     occurs = [c.occur for c in q.clauses]
@@ -1331,7 +1199,7 @@ def score_segment_wand(
         if ok.any():
             _, _, w_m, aux_m = members[mi]
             bmax = np.array([
-                float(bound_fn(
+                float(q.sim.bound(
                     int(_bf(b, "max_tf")), int(_bf(b, "min_norm")), w_m,
                     q.cache, aux_m,
                 )) for b in bl
@@ -1386,7 +1254,7 @@ def score_segment_wand(
                 raw_cache[rkey] = decode_block(blocks_per_member[mi][bi])
             docs, tfs = raw_cache[rkey]
             _, _, w_m, aux_m = members[mi]
-            scores = score_fn(
+            scores = q.sim.score(
                 tfs, _norm_lookup(norms_arr, base, docs), w_m, q.cache,
                 aux_m,
             )
@@ -1451,7 +1319,7 @@ def score_segment_wand(
             continue
         d, s = _combine(
             cds, css, cocc, q.n_must, q.min_should_match, excl,
-            getattr(q, "combine", "sum"), getattr(q, "tie", 0.0), incl,
+            q.combine, q.tie, incl,
         )
         d, s = _apply_after(d, s, after)
         if d.size:

@@ -14,7 +14,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .bm25 import idf as bm25_idf
+from .bm25 import BM25, Similarity
 
 
 @dataclass(frozen=True)
@@ -376,10 +376,9 @@ class CompiledQuery:
     n_must: int
     combine: str = "sum"      # 'sum' (BooleanQuery) | 'dismax' (DisjunctionMax)
     tie: float = 0.0
-    # similarity: 'bm25' (BM25Similarity, Lucene-8 default) or 'classic'
-    # (ClassicSimilarity TF-IDF) — both run on the same norm bytes
-    # (Lucene 7+ stores the doc length for every similarity)
-    sim: str = "bm25"
+    # the scoring model (BM25Similarity, Lucene-8 default); every model runs
+    # on the same norm bytes (Lucene 7+ stores the doc length for all)
+    sim: Similarity = BM25
     # FILTER occur (BooleanClause.Occur.FILTER): non-scoring candidate
     # restriction, applied BEFORE top-k. Per-segment allowed-doc sets keyed
     # by segment base (the Spark shape of Lucene's per-leaf filter
@@ -428,7 +427,7 @@ def compile_query(
     doc_count: int,
     cache: np.ndarray,
     k: int,
-    similarity: str = "bm25",
+    similarity: Similarity = BM25,
     term_ttf: dict[str, int] | None = None,
     sum_ttf: int = 0,
 ) -> CompiledQuery:
@@ -439,9 +438,27 @@ def compile_query(
     Phrase weight = boost * Σ idf(term) (BM25Similarity#idfExplain over
     TermStatistics[]).
     """
+    sim = similarity
     clauses: list[CompiledClause] = []
     impossible = False
     n_filter = 0
+
+    def live(terms) -> tuple[str, ...]:
+        return tuple(t for t in terms if term_df.get(t, 0) > 0)
+
+    def all_live(terms) -> bool:
+        return all(term_df.get(t, 0) > 0 for t in terms)
+
+    def weight(boost: float, terms) -> np.float32:
+        # boost · f32(Σ idf) over the terms' stats; models that bind no idf
+        # (BooleanSimilarity, SimilarityBase) weigh the boost alone. One
+        # term: f32(f32(idf)) == idf, so this is boost · idf bitwise.
+        if sim.idf is None:
+            return np.float32(boost)
+        return np.float32(boost) * np.float32(
+            sum(float(sim.idf(term_df[t], doc_count)) for t in terms)
+        )
+
     for c in spec.filter:
         # FILTER occur: required, non-scoring — a weight-0 MUST clause (the
         # zero weight zeroes the clause score exactly in f32, and zeroes its
@@ -454,23 +471,18 @@ def compile_query(
             # member posting lists gates matching, every member weight is 0
             # so the group contributes +0.0 to the f64 score sum (IEEE
             # no-op) and a 0 WAND block bound.
-            if similarity in ("lm", "lmjm", "dfr", "ib", "f2exp", "dfi"):
-                raise ValueError(
-                    f"{similarity} or_group filter not implemented; "
-                    "use bm25/classic/boolean"
-                )
-            live = tuple(t for t in c.terms if term_df.get(t, 0) > 0)
-            if not live:
+            sim.require("or_group filter")
+            members = live(c.terms)
+            if not members:
                 impossible = True
                 continue
             n_filter += 1
             clauses.append(CompiledClause(
-                "or_group", live, (), np.float32(0.0), "must",
-                member_weights=tuple(np.float32(0.0) for _ in live),
+                "or_group", members, (), np.float32(0.0), "must",
+                member_weights=tuple(np.float32(0.0) for _ in members),
             ))
             continue
-        df = term_df.get(c.term, 0)
-        if df == 0:
+        if term_df.get(c.term, 0) == 0:
             impossible = True
             continue
         n_filter += 1
@@ -480,337 +492,142 @@ def compile_query(
         clauses.append(
             CompiledClause("term", (c.term,), (), np.float32(0.0), "must", aux=1.0)
         )
-    if similarity in ("bm25", "docsonly"):
-        # DOCS-indexed field: same BM25 idf weight; only freq() changes
-        idf_fn = bm25_idf
-    elif similarity in ("classic", "sweetspot"):
-        # SweetSpotSimilarity extends ClassicSimilarity: same idf, only the
-        # tf and lengthNorm functions are swapped (they live in the scorer
-        # dispatch and the norm cache)
-        from .bm25 import classic_idf as idf_fn
-    elif similarity == "boolean":
-        from .bm25 import boolean_idf as idf_fn
-    elif similarity in ("lm", "lmjm", "dfr", "ib", "f2exp", "dfi"):
-        # SimilarityBase family: no idf in the weight (weight = boost); the
-        # per-term collection stat rides the clause as `aux` —
-        #   lm:   mu · collectionProbability
-        #   lmjm: λ · collectionProbability
-        #   dfr:  log2((N+1)/(df+0.5))      (BasicModelIN)
-        #   ib:   (df+1)/(N+1)              (LambdaDF)
-        #   f2exp: ((N+1)/df)^0.35          (Axiomatic#idf)
-        idf_fn = lambda df, n: np.float32(1.0)  # noqa: E731
-    else:
-        raise ValueError(f"unknown similarity {similarity!r}")
     for occur, group in (("must", spec.must), ("should", spec.should)):
         for c in group:
+            cc = None
             if isinstance(c, PhraseClause):
-                if similarity in ("lm", "lmjm", "dfr", "ib", "f2exp", "dfi"):
-                    raise ValueError(
-                        f"{similarity} phrase scoring not implemented (needs "
-                        "pseudo-term collection stats); use bm25/classic"
+                sim.require("phrase")
+                if all_live(c.terms):
+                    cc = CompiledClause(
+                        "phrase", c.terms, c.offsets, weight(c.boost, c.terms),
+                        occur, slop=int(c.slop),
                     )
-                if any(term_df.get(t, 0) == 0 for t in c.terms):
-                    impossible |= occur == "must"
-                    continue
-                if similarity == "boolean":
-                    # BooleanSimilarity's SimScorer returns the boost for ANY
-                    # query type (L/search/similarities/BooleanSimilarity):
-                    # a phrase scores boost, not n_terms·boost
-                    w = np.float32(c.boost)
-                else:
-                    w = np.float32(c.boost) * np.float32(
-                        sum(float(idf_fn(term_df[t], doc_count)) for t in c.terms)
-                    )
-                clauses.append(CompiledClause(
-                    "phrase", c.terms, c.offsets, np.float32(w), occur, slop=int(c.slop)
-                ))
             elif isinstance(c, OrGroupClause):
-                if similarity not in ("bm25", "classic"):
-                    raise ValueError(
-                        f"{similarity} or_group scoring not implemented; "
-                        "use bm25/classic"
+                sim.require("or_group")
+                members = live(c.terms)
+                if members:
+                    cc = CompiledClause(
+                        "or_group", members, (), np.float32(0.0), occur,
+                        member_weights=tuple(weight(c.boost, (t,)) for t in members),
                     )
-                live = tuple(t for t in c.terms if term_df.get(t, 0) > 0)
-                if not live:
-                    impossible |= occur == "must"
-                    continue
-                weights = tuple(
-                    np.float32(c.boost) * idf_fn(term_df[t], doc_count)
-                    for t in live
-                )
-                clauses.append(CompiledClause(
-                    "or_group", live, (), np.float32(0.0), occur,
-                    member_weights=weights,
-                ))
-            elif isinstance(c, MultiPhraseClause):
-                if similarity != "bm25":
-                    raise ValueError(
-                        f"{similarity} multiphrase scoring not implemented; "
-                        "use bm25"
-                    )
-                # a slot with NO live member term makes the phrase
-                # unmatchable; dead members inside a live slot are dropped
-                # but still excluded from the idf sum (Lucene builds the
-                # SimWeight from the terms the rewritten query retains)
-                live_slots = tuple(
-                    tuple(t for t in slot if term_df.get(t, 0) > 0)
-                    for slot in c.slots
-                )
-                if any(not slot for slot in live_slots):
-                    impossible |= occur == "must"
-                    continue
-                flat = tuple(t for slot in live_slots for t in slot)
-                w = np.float32(c.boost) * np.float32(
-                    sum(float(idf_fn(term_df[t], doc_count)) for t in flat)
-                )
-                clauses.append(CompiledClause(
-                    "multiphrase", flat, c.offsets, np.float32(w), occur,
-                    slots=live_slots,
-                ))
-            elif isinstance(c, SpanNearClause):
-                if similarity in ("lm", "lmjm", "dfr", "ib", "f2exp", "dfi"):
-                    raise ValueError(
-                        f"{similarity} span scoring not implemented; use "
-                        "bm25/classic/boolean"
-                    )
-                if any(term_df.get(t, 0) == 0 for t in c.terms):
-                    impossible |= occur == "must"
-                    continue
-                if similarity == "boolean":
-                    w = np.float32(c.boost)
-                else:
-                    # SpanWeight#buildSimWeight over both terms' stats —
-                    # the PhraseClause weight shape
-                    w = np.float32(c.boost) * np.float32(
-                        sum(float(idf_fn(term_df[t], doc_count)) for t in c.terms)
-                    )
-                clauses.append(CompiledClause(
-                    "span_near", c.terms, (), np.float32(w), occur,
-                    slop=int(c.slop),
-                ))
-            elif isinstance(c, SpanNearUnorderedClause):
-                if similarity in ("lm", "lmjm", "dfr", "ib", "f2exp", "dfi"):
-                    raise ValueError(
-                        f"{similarity} span scoring not implemented; use "
-                        "bm25/classic/boolean"
-                    )
-                if any(term_df.get(t, 0) == 0 for t in c.terms):
-                    impossible |= occur == "must"
-                    continue
-                if similarity == "boolean":
-                    w = np.float32(c.boost)
-                else:
-                    w = np.float32(c.boost) * np.float32(
-                        sum(float(idf_fn(term_df[t], doc_count)) for t in c.terms)
-                    )
-                clauses.append(CompiledClause(
-                    "span_near_unordered", c.terms, (), np.float32(w), occur,
-                    slop=int(c.slop),
-                ))
             elif isinstance(c, BlendedTermClause):
-                if similarity not in ("bm25", "classic"):
-                    raise ValueError(
-                        f"{similarity} blended scoring not implemented; "
-                        "use bm25/classic"
-                    )
-                live = tuple(
+                sim.require("blended")
+                pairs = [
                     (t, b) for t, b in zip(c.terms, c.member_boosts)
                     if term_df.get(t, 0) > 0
-                )
-                if not live:
-                    impossible |= occur == "must"
-                    continue
-                # blended statistics: every member scores with the MAX df
-                # across the expansion (TopTermsBlendedFreqScoringRewrite)
-                df_blend = max(term_df[t] for t, _ in live)
-                idf_b = idf_fn(df_blend, doc_count)
-                weights = tuple(
-                    np.float32(c.boost) * (np.float32(b) * idf_b)
-                    for _, b in live
-                )
-                clauses.append(CompiledClause(
-                    "or_group", tuple(t for t, _ in live), (),
-                    np.float32(0.0), occur, member_weights=weights,
-                ))
-            elif isinstance(c, SynonymClause):
-                if similarity not in ("bm25", "classic", "boolean"):
-                    raise ValueError(
-                        f"{similarity} synonym scoring not implemented; "
-                        "use bm25/classic/boolean"
+                ]
+                if pairs:
+                    # blended statistics: every member scores with the MAX
+                    # df across the expansion (TopTermsBlendedFreqScoringRewrite)
+                    idf_b = sim.idf(max(term_df[t] for t, _ in pairs), doc_count)
+                    cc = CompiledClause(
+                        "or_group", tuple(t for t, _ in pairs), (),
+                        np.float32(0.0), occur, member_weights=tuple(
+                            np.float32(c.boost) * (np.float32(b) * idf_b)
+                            for _, b in pairs
+                        ),
                     )
-                live = tuple(t for t in c.terms if term_df.get(t, 0) > 0)
-                if not live:
-                    impossible |= occur == "must"
-                    continue
-                # merged collection stats: docFreq = max over live members
-                # (SynonymWeight builds ONE TermStatistics with max df); the
-                # summed tf then scores through the ordinary SimScorer
-                df_merged = max(term_df[t] for t in live)
-                w = np.float32(c.boost) * idf_fn(df_merged, doc_count)
-                clauses.append(CompiledClause(
-                    "synonym", live, (), np.float32(w), occur,
-                ))
+            elif isinstance(c, MultiPhraseClause):
+                sim.require("multiphrase")
+                # a slot with NO live member term makes the phrase
+                # unmatchable; dead members inside a live slot are dropped
+                # and excluded from the idf sum (Lucene builds the SimWeight
+                # from the terms the rewritten query retains)
+                slots = tuple(live(slot) for slot in c.slots)
+                if all(slots):
+                    flat = tuple(t for slot in slots for t in slot)
+                    cc = CompiledClause(
+                        "multiphrase", flat, c.offsets, weight(c.boost, flat),
+                        occur, slots=slots,
+                    )
             elif isinstance(c, SpanNearOrClause):
-                if similarity in ("lm", "lmjm", "dfr", "ib", "f2exp", "dfi"):
-                    raise ValueError(
-                        f"{similarity} span scoring not implemented; use "
-                        "bm25/classic/boolean"
+                sim.require("span")
+                # same liveness rule per operand as the multiphrase slots
+                slots = tuple(live(slot) for slot in c.slots)
+                if all(slots):
+                    flat = tuple(t for slot in slots for t in slot)
+                    cc = CompiledClause(
+                        "span_near_or", flat, (), weight(c.boost, flat), occur,
+                        slop=int(c.slop), slots=slots,
                     )
-                # an operand with NO live member is unmatchable; dead
-                # members inside a live operand drop out of the union AND
-                # the idf sum (the rewritten query's retained terms)
-                live_slots = tuple(
-                    tuple(t for t in slot if term_df.get(t, 0) > 0)
-                    for slot in c.slots
-                )
-                if any(not slot for slot in live_slots):
-                    impossible |= occur == "must"
-                    continue
-                flat = tuple(t for slot in live_slots for t in slot)
-                if similarity == "boolean":
-                    w = np.float32(c.boost)
-                else:
-                    w = np.float32(c.boost) * np.float32(
-                        sum(float(idf_fn(term_df[t], doc_count)) for t in flat)
+            elif isinstance(c, (SpanNearClause, SpanNearUnorderedClause)):
+                sim.require("span")
+                # SpanWeight#buildSimWeight over both terms' stats
+                if all_live(c.terms):
+                    cc = CompiledClause(
+                        "span_near" if isinstance(c, SpanNearClause)
+                        else "span_near_unordered",
+                        c.terms, (), weight(c.boost, c.terms), occur,
+                        slop=int(c.slop),
                     )
-                clauses.append(CompiledClause(
-                    "span_near_or", flat, (), np.float32(w), occur,
-                    slop=int(c.slop), slots=live_slots,
-                ))
+            elif isinstance(c, SynonymClause):
+                sim.require("synonym")
+                members = live(c.terms)
+                if members:
+                    # merged collection stats: docFreq = max over live members
+                    # (SynonymWeight builds ONE TermStatistics with max df);
+                    # the summed tf then scores through the ordinary SimScorer
+                    top = max(members, key=term_df.__getitem__)
+                    cc = CompiledClause(
+                        "synonym", members, (), weight(c.boost, (top,)), occur,
+                    )
             elif isinstance(c, SpanOrClause):
-                if similarity in ("lm", "lmjm", "dfr", "ib", "f2exp", "dfi"):
-                    raise ValueError(
-                        f"{similarity} span scoring not implemented; use "
-                        "bm25/classic/boolean"
+                sim.require("span")
+                members = live(c.terms)
+                if members:
+                    # the live members' stats (dead members = +0.0)
+                    cc = CompiledClause(
+                        "span_or", members, (), weight(c.boost, members), occur,
                     )
-                live = tuple(t for t in c.terms if term_df.get(t, 0) > 0)
-                if not live:
-                    impossible |= occur == "must"
-                    continue
-                if similarity == "boolean":
-                    w = np.float32(c.boost)
-                else:
-                    # SpanWeight#buildSimWeight over the live members —
-                    # the PhraseClause weight shape (dead members = +0.0)
-                    w = np.float32(c.boost) * np.float32(
-                        sum(float(idf_fn(term_df[t], doc_count)) for t in live)
-                    )
-                clauses.append(CompiledClause(
-                    "span_or", live, (), np.float32(w), occur,
-                ))
             elif isinstance(c, IntervalUnorderedClause):
-                if similarity in ("lm", "lmjm", "dfr", "ib", "f2exp", "dfi"):
-                    raise ValueError(
-                        f"{similarity} interval scoring not implemented; "
-                        "use bm25/classic/boolean"
+                sim.require("interval")
+                if all_live(c.terms):
+                    cc = CompiledClause(
+                        "interval_ordered" if c.ordered else "interval_unordered",
+                        c.terms, (), weight(c.boost, c.terms), occur,
+                        slop=int(c.maxgaps),
                     )
-                if any(term_df.get(t, 0) == 0 for t in c.terms):
-                    impossible |= occur == "must"
-                    continue
-                if similarity == "boolean":
-                    w = np.float32(c.boost)
-                else:
-                    w = np.float32(c.boost) * np.float32(
-                        sum(float(idf_fn(term_df[t], doc_count)) for t in c.terms)
-                    )
-                clauses.append(CompiledClause(
-                    "interval_ordered" if c.ordered else "interval_unordered",
-                    c.terms, (), np.float32(w), occur,
-                    slop=int(c.maxgaps),
-                ))
             elif isinstance(c, SpanContainClause):
-                if similarity in ("lm", "lmjm", "dfr", "ib", "f2exp", "dfi"):
-                    raise ValueError(
-                        f"{similarity} span scoring not implemented; use "
-                        "bm25/classic/boolean"
-                    )
+                sim.require("span")
+                # SpanContainQuery's SimWeight collects termStates from
+                # BOTH the big and little sides
                 all_t = (*c.big, c.little)
-                if any(term_df.get(t, 0) == 0 for t in all_t):
-                    impossible |= occur == "must"
-                    continue
-                if similarity == "boolean":
-                    w = np.float32(c.boost)
-                else:
-                    # SpanContainQuery's SimWeight collects termStates from
-                    # BOTH the big and little sides
-                    w = np.float32(c.boost) * np.float32(
-                        sum(float(idf_fn(term_df[t], doc_count)) for t in all_t)
+                if all_live(all_t):
+                    cc = CompiledClause(
+                        "span_within" if c.mode == "within" else "span_containing",
+                        all_t, (), weight(c.boost, all_t), occur,
+                        slop=int(c.big_slop),
                     )
-                kind = (
-                    "span_within" if c.mode == "within" else "span_containing"
-                )
-                clauses.append(CompiledClause(
-                    kind, all_t, (), np.float32(w), occur,
-                    slop=int(c.big_slop),
-                ))
             elif isinstance(c, SpanNotClause):
-                if similarity in ("lm", "lmjm", "dfr", "ib", "f2exp", "dfi"):
-                    raise ValueError(
-                        f"{similarity} span scoring not implemented; use "
-                        "bm25/classic/boolean"
-                    )
-                if term_df.get(c.include, 0) == 0:
-                    impossible |= occur == "must"
-                    continue
+                sim.require("span")
                 # the exclude side gates matching only; a dead exclude term
                 # leaves the include a plain TermQuery (SpanNot rewrite)
-                w = np.float32(c.boost) * idf_fn(term_df[c.include], doc_count)
-                clauses.append(CompiledClause(
-                    "span_not", (c.include, c.exclude), (), np.float32(w),
-                    occur, slop=int(c.pre), post=int(c.post),
-                ))
+                if all_live((c.include,)):
+                    cc = CompiledClause(
+                        "span_not", (c.include, c.exclude), (),
+                        weight(c.boost, (c.include,)), occur,
+                        slop=int(c.pre), post=int(c.post),
+                    )
             elif isinstance(c, SpanFirstClause):
-                if similarity in ("lm", "lmjm", "dfr", "ib", "f2exp", "dfi"):
-                    raise ValueError(
-                        f"{similarity} span scoring not implemented; use "
-                        "bm25/classic/boolean"
-                    )
-                df = term_df.get(c.term, 0)
-                if df == 0:
-                    impossible |= occur == "must"
-                    continue
+                sim.require("span")
                 # SpanWeight builds its SimWeight from the inner term's
-                # stats (L/search/spans/SpanWeight#buildSimWeight):
-                # weight = boost * idf(term), same as TermQuery
-                w = np.float32(c.boost) * idf_fn(df, doc_count)
-                clauses.append(CompiledClause(
-                    "span_first", (c.term,), (), np.float32(w), occur,
-                    slop=int(c.end), post=int(c.start),
-                ))
-            else:
-                df = term_df.get(c.term, 0)
-                if df == 0:
-                    impossible |= occur == "must"
-                    continue
-                w = np.float32(c.boost) * idf_fn(df, doc_count)
-                aux = 0.0
-                if similarity == "lm":
-                    from .bm25 import LM_MU, lm_collection_probability
-
-                    aux = LM_MU * float(
-                        lm_collection_probability((term_ttf or {}).get(c.term, 0), sum_ttf)
+                # stats: weight = boost * idf(term), same as TermQuery
+                if all_live((c.term,)):
+                    cc = CompiledClause(
+                        "span_first", (c.term,), (), weight(c.boost, (c.term,)),
+                        occur, slop=int(c.end), post=int(c.start),
                     )
-                elif similarity == "lmjm":
-                    from .bm25 import LMJM_LAMBDA, lm_collection_probability
-
-                    aux = LMJM_LAMBDA * float(
-                        lm_collection_probability((term_ttf or {}).get(c.term, 0), sum_ttf)
-                    )
-                elif similarity == "dfr":
-                    aux = float(np.log2((doc_count + 1.0) / (df + 0.5)))
-                elif similarity == "ib":
-                    aux = (df + 1.0) / (doc_count + 1.0)
-                elif similarity == "f2exp":
-                    from .bm25 import F2EXP_K
-
-                    aux = ((doc_count + 1.0) / float(df)) ** F2EXP_K
-                elif similarity == "dfi":
-                    # DFISimilarity: expected = aux · dl with aux the pure-
-                    # double collection ratio (ttf+1)/(sumTtf+1)
-                    aux = ((term_ttf or {}).get(c.term, 0) + 1.0) / (sum_ttf + 1.0)
-                clauses.append(
-                    CompiledClause("term", (c.term,), (), np.float32(w), occur, aux=aux)
+            elif all_live((c.term,)):
+                aux = 0.0 if sim.aux is None else sim.aux(
+                    term_df[c.term], (term_ttf or {}).get(c.term, 0), doc_count, sum_ttf
                 )
+                cc = CompiledClause(
+                    "term", (c.term,), (), weight(c.boost, (c.term,)), occur, aux=aux,
+                )
+            if cc is None:
+                impossible |= occur == "must"
+            else:
+                clauses.append(cc)
     if impossible:
         clauses = []
     n_must = sum(1 for c in clauses if c.occur == "must")
@@ -827,8 +644,8 @@ def compile_query(
         k=k,
         cache=cache,
         n_must=n_must,
-        combine="dismax" if getattr(spec, "dismax", False) else "sum",
-        tie=float(getattr(spec, "tie", 0.0)),
-        sim=similarity,
-        covering_mod=int(getattr(spec, "covering_mod", 0)),
+        combine="dismax" if spec.dismax else "sum",
+        tie=float(spec.tie),
+        sim=sim,
+        covering_mod=int(spec.covering_mod),
     )

@@ -299,45 +299,6 @@ def _fold_group(sub: BooleanSpec, boost: float):
     )
 
 
-def calculate_min_should_match(optional_clause_count: int, spec: str) -> int:
-    """Solr ``mm`` spec → concrete minimumNumberShouldMatch
-    (``S/util/SolrPluginUtils#calculateMinShouldMatch`` semantics,
-    including its quirks — faithful port of the arithmetic, not the code):
-
-    - ``"3"`` → 3; ``"-2"`` → n−2
-    - ``"75%"`` → int(n·0.75) (truncation); ``"-25%"`` → n − int(n·0.25)
-    - conditional ``"2<-25% 9<3"``: conditions scanned left to right; at
-      the FIRST condition whose upper bound >= n the current result is
-      returned (n<=bound → everything so far), otherwise the result is
-      recomputed from that condition's sub-spec; n<=smallest bound means
-      all optional clauses required.
-
-    Clamped to [0, optional_clause_count] like the reference's final line.
-    """
-    n = optional_clause_count
-    result = n
-    spec = spec.strip()
-    if "<" in spec:
-        for s in spec.split():
-            parts = s.split("<", 1)
-            if len(parts) < 2 or not parts[1]:
-                continue
-            upper = int(parts[0])
-            if n <= upper:
-                return result
-            result = calculate_min_should_match(n, parts[1])
-        return result
-    if "%" in spec:
-        percent = int(spec[: spec.index("%")])
-        calc = (result * percent) / 100.0
-        # int() truncates toward zero — the (int) cast in the reference
-        result = result + int(calc) if calc < 0 else int(calc)
-    else:
-        calc = int(spec)
-        result = result + calc if calc < 0 else calc
-    return n if n < result else (0 if result < 0 else result)
-
-
 def _build(entries) -> BooleanSpec:
     spec = BooleanSpec()
     for occ, c in entries:

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import FloatType, LongType, StringType, StructField, StructType
 
 from ..index.build import ANALYZERS, IndexMeta, read_term_stats
-from .bm25 import CollectionStats, norm_cache
+from .bm25 import BM25, CollectionStats, Similarity
 from .kernels import count_segment_matches, score_segment_exact, score_segment_wand
 from .query import BooleanSpec, CompiledQuery, compile_query, parse_fixture_query
 from ..util.segscan import segment_scan
@@ -235,51 +235,19 @@ class IndexSearcher:
         # queryResultCache: query → cached ordered window; see cached_topk
         self._query_result_cache: "OrderedDict[str, tuple[int, list]]" = OrderedDict()
         self.query_result_cache_stats = {"hits": 0, "misses": 0, "evictions": 0}
+        self._tables: dict[Similarity, np.ndarray] = {}
 
     @cached_property
     def stats(self) -> CollectionStats:
         row = self.spark.read.parquet(os.path.join(self._stats_root, "stats")).collect()[0]
         return CollectionStats(int(row.doc_count), int(row.sum_ttf))
 
-    @cached_property
-    def cache(self) -> np.ndarray:
-        return norm_cache(self.stats.avgdl)
-
-    @cached_property
-    def classic_cache(self) -> np.ndarray:
-        from .bm25 import classic_norm_cache
-
-        return classic_norm_cache()
-
-    @cached_property
-    def lm_cache(self) -> np.ndarray:
-        from .bm25 import lm_norm_cache
-
-        return lm_norm_cache()
-
-    @cached_property
-    def dfr_cache(self) -> np.ndarray:
-        from .bm25 import dfr_h2_cache
-
-        return dfr_h2_cache(self.stats.avgdl)
-
-    @cached_property
-    def lmjm_cache(self) -> np.ndarray:
-        from .bm25 import lmjm_norm_cache
-
-        return lmjm_norm_cache()
-
-    @cached_property
-    def f2exp_cache(self) -> np.ndarray:
-        from .bm25 import f2exp_norm_cache
-
-        return f2exp_norm_cache(self.stats.avgdl)
-
-    @cached_property
-    def sweetspot_cache(self) -> np.ndarray:
-        from .bm25 import sweetspot_norm_cache
-
-        return sweetspot_norm_cache()
+    def table(self, sim: Similarity) -> np.ndarray:
+        """``sim``'s 256-entry norm table over this view's stats, built once
+        per searcher and model."""
+        if sim not in self._tables:
+            self._tables[sim] = sim.table(self.stats)
+        return self._tables[sim]
 
     @cached_property
     def _tomb_files(self) -> tuple[str, ...]:
@@ -479,28 +447,12 @@ class IndexSearcher:
         return self.term_stats_rows(terms)[0]
 
     def compile(
-        self, spec: BooleanSpec, k: int = 10, similarity: str = "bm25"
+        self, spec: BooleanSpec, k: int = 10, similarity: Similarity = BM25
     ) -> CompiledQuery:
-        if similarity in ("bm25", "docsonly"):
-            cache = self.cache
-        elif similarity == "lm":
-            cache = self.lm_cache
-        elif similarity in ("dfr", "ib"):
-            cache = self.dfr_cache
-        elif similarity in ("lmjm", "dfi"):
-            # both score off the decoded doc length directly
-            cache = self.lmjm_cache
-        elif similarity == "f2exp":
-            cache = self.f2exp_cache
-        elif similarity == "sweetspot":
-            cache = self.sweetspot_cache
-        else:
-            cache = self.classic_cache
         df_map, ttf_map = self.term_stats_rows(spec.all_terms())
         return compile_query(
-            spec, df_map, self.stats.doc_count, cache, k,
-            similarity=similarity,
-            term_ttf=ttf_map if similarity in ("lm", "lmjm", "dfi") else None,
+            spec, df_map, self.stats.doc_count, self.table(similarity), k,
+            similarity=similarity, term_ttf=ttf_map,
             sum_ttf=self.stats.sum_total_term_freq,
         )
 
@@ -511,7 +463,7 @@ class IndexSearcher:
         all_terms = sorted({t for spec, _ in specs.values() for t in spec.all_terms()})
         df_map = self.term_stats(all_terms)
         return {
-            qid: compile_query(spec, df_map, self.stats.doc_count, self.cache, k)
+            qid: compile_query(spec, df_map, self.stats.doc_count, self.table(BM25), k)
             for qid, (spec, k) in specs.items()
         }
 

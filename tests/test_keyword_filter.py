@@ -10,6 +10,7 @@ import pytest
 
 from lucene_solr_spark.datagen import generate_transcripts
 from lucene_solr_spark.index.build import build_index, keyword_term
+from lucene_solr_spark.search.bm25 import LM
 from lucene_solr_spark.search.query import TermClause
 from lucene_solr_spark.search.searcher import IndexSearcher
 
@@ -115,7 +116,7 @@ def test_keyword_filter_under_lm_similarity(spark, kw_index):
     idx, pdf = kw_index
     s = IndexSearcher(spark, idx)
     base = s.parse("or3", ["merge", "batch", "stream"], 0)
-    q_nofilter = s.compile(base, k=10**6, similarity="lm")
+    q_nofilter = s.compile(base, k=10**6, similarity=LM)
     all_hits = (
         s.search(q_nofilter, k=10**6, mode="exact")
         .join(s.docs.select("doc_id", "role"), "doc_id")
@@ -130,7 +131,7 @@ def test_keyword_filter_under_lm_similarity(spark, kw_index):
     spec = _spec_with_filter(s, "user")
     for mode in ("exact", "wand"):
         got = (
-            s.search(s.compile(spec, k=10, similarity="lm"), k=10, mode=mode)
+            s.search(s.compile(spec, k=10, similarity=LM), k=10, mode=mode)
             .toPandas()[["doc_id", "score"]]
         )
         assert np.isfinite(got.score.to_numpy()).all()

@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
+from lucene_solr_spark.search.bm25 import CLASSIC
 from lucene_solr_spark.search.kernels import _phrase_freqs, _union_postings
 
 
@@ -139,4 +140,4 @@ def test_compile_multiphrase_weight_and_liveness():
     assert q2.clauses == []
 
     with pytest.raises(ValueError):
-        compile_query(spec, df, 100, cache, k=10, similarity="classic")
+        compile_query(spec, df, 100, cache, k=10, similarity=CLASSIC)

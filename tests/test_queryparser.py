@@ -13,9 +13,9 @@ from lucene_solr_spark.search.query import (
     PhraseClause,
     TermClause,
 )
+from lucene_solr_spark.search.mm import calculate_min_should_match
 from lucene_solr_spark.search.queryparser import (
     IMPOSSIBLE_TERM,
-    calculate_min_should_match,
     parse_query_string,
 )
 

@@ -2,7 +2,8 @@
 value-hash comparison ``tools/check_entry.py`` runs by hand at sf0.01, here
 in the tier-1 suite: every recipe-built engine (mutated or derived-text
 index) plus one entry per family whose spec is built in its registration
-(span, similarity, parser, multi-phrase, fuzzy-blended, synonym)."""
+(span, similarity, custom norm table, parser, multi-phrase, fuzzy-blended,
+synonym)."""
 
 import os
 
@@ -27,6 +28,8 @@ ENTRIES = [
     "ft_multiphrase_topk",
     "ft_fuzzy_blended_topk",
     "ft_synonymquery_topk",
+    "ft_omitnorms_topk",
+    "ft_bm25_tuned_topk",
 ]
 
 pytestmark = pytest.mark.skipif(

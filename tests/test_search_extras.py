@@ -4,6 +4,7 @@
 import numpy as np
 import pytest
 
+from lucene_solr_spark.search.bm25 import BOOLEAN, CLASSIC, DFR, F2EXP, LM, SWEETSPOT
 from lucene_solr_spark.search.query import BooleanSpec, TermClause
 from lucene_solr_spark.search.searcher import IndexSearcher
 
@@ -115,7 +116,7 @@ def test_classic_similarity_wand_equals_exact(searcher):
     import pandas as pd
 
     spec = searcher.parse("or3", ["merge", "batch", "stream"], 0)
-    q = searcher.compile(spec, k=20, similarity="classic")
+    q = searcher.compile(spec, k=20, similarity=CLASSIC)
     a = searcher.search(q, k=20, mode="wand").toPandas()
     b = searcher.search(q, k=20, mode="exact").toPandas()
     pd.testing.assert_frame_equal(a, b)
@@ -128,7 +129,7 @@ def test_classic_and_bm25_rank_differently_but_share_index(searcher):
     spec = searcher.parse("term", ["merge"], 0)
     bm = searcher.search(searcher.compile(spec, k=10), k=10).toPandas()
     cl = searcher.search(
-        searcher.compile(spec, k=10, similarity="classic"), k=10
+        searcher.compile(spec, k=10, similarity=CLASSIC), k=10
     ).toPandas()
     assert len(bm) == len(cl) == 10
     assert not (bm.score.to_numpy() == cl.score.to_numpy()).all()
@@ -141,7 +142,7 @@ def test_boolean_similarity_scores_are_match_counts(searcher):
     import pandas as pd
 
     spec = searcher.parse("or3", ["merge", "batch", "stream"], 0)
-    q = searcher.compile(spec, k=30, similarity="boolean")
+    q = searcher.compile(spec, k=30, similarity=BOOLEAN)
     a = searcher.search(q, k=30, mode="wand").toPandas()
     b = searcher.search(q, k=30, mode="exact").toPandas()
     pd.testing.assert_frame_equal(a, b)
@@ -154,7 +155,7 @@ def test_lm_dirichlet_wand_equals_exact(searcher):
     import pandas as pd
 
     spec = searcher.parse("or3", ["merge", "batch", "stream"], 0)
-    q = searcher.compile(spec, k=25, similarity="lm")
+    q = searcher.compile(spec, k=25, similarity=LM)
     a = searcher.search(q, k=25, mode="wand").toPandas()
     b = searcher.search(q, k=25, mode="exact").toPandas()
     pd.testing.assert_frame_equal(a, b)
@@ -167,7 +168,7 @@ def test_f2exp_wand_equals_exact(searcher):
     import pandas as pd
 
     spec = searcher.parse("or3", ["merge", "batch", "stream"], 0)
-    q = searcher.compile(spec, k=25, similarity="f2exp")
+    q = searcher.compile(spec, k=25, similarity=F2EXP)
     a = searcher.search(q, k=25, mode="wand").toPandas()
     b = searcher.search(q, k=25, mode="exact").toPandas()
     pd.testing.assert_frame_equal(a, b)
@@ -181,7 +182,7 @@ def test_sweetspot_wand_equals_exact(searcher):
     import pandas as pd
 
     spec = searcher.parse("or3", ["merge", "batch", "stream"], 0)
-    q = searcher.compile(spec, k=25, similarity="sweetspot")
+    q = searcher.compile(spec, k=25, similarity=SWEETSPOT)
     a = searcher.search(q, k=25, mode="wand").toPandas()
     b = searcher.search(q, k=25, mode="exact").toPandas()
     pd.testing.assert_frame_equal(a, b)
@@ -193,9 +194,9 @@ def test_lm_phrase_unsupported_is_loud(searcher):
 
     spec = searcher.parse("phrase2", ["table", "hash"], 0)
     with _pytest.raises(ValueError, match="lm phrase scoring not implemented"):
-        searcher.compile(spec, k=10, similarity="lm")
+        searcher.compile(spec, k=10, similarity=LM)
     with _pytest.raises(ValueError, match="dfr phrase scoring not implemented"):
-        searcher.compile(spec, k=10, similarity="dfr")
+        searcher.compile(spec, k=10, similarity=DFR)
 
 
 # --- SpanFirstQuery (L/search/spans/SpanFirstQuery) -------------------------
