@@ -139,6 +139,20 @@ def _spans(cps: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return c0_all[emit], c1_all[emit], starts[emit]
 
 
+def utf8_offsets(lengths: np.ndarray) -> np.ndarray:
+    """Arrow ``utf8`` offsets (int32) of strings with byte ``lengths``. The
+    total is summed in int64 first: past 2**31 − 1 bytes the int32 offsets
+    would wrap silently, so that raises ``ValueError`` instead."""
+    offs = np.zeros(len(lengths) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=offs[1:])
+    if offs[-1] > np.iinfo(np.int32).max:
+        raise ValueError(
+            f"{int(offs[-1])} token bytes exceed one Arrow utf8 array's "
+            "2**31 - 1 byte offsets; tokenize fewer rows per batch"
+        )
+    return offs.astype(np.int32)
+
+
 def tokenize_batch(texts: list[str], max_token_len: int = 255):
     """Fully-vectorized batch face: ONE '\\n'-joined scan, token surfaces
     materialized as an Arrow StringArray by BYTE GATHER from the joined
@@ -193,11 +207,9 @@ def tokenize_batch(texts: list[str], max_token_len: int = 255):
     np.add.at(delta, b1, -1)
     inside = np.cumsum(delta[:-1]) > 0
     tok_bytes = data[inside]
-    out_off = np.zeros(len(b0) + 1, dtype=np.int32)
-    np.cumsum(b1 - b0, out=out_off[1:])
     flat = pa.Array.from_buffers(
         pa.utf8(), len(b0),
-        [None, pa.py_buffer(out_off.astype(np.int32)), pa.py_buffer(tok_bytes)],
+        [None, pa.py_buffer(utf8_offsets(b1 - b0)), pa.py_buffer(tok_bytes)],
     )
 
     # token → row by char offset against the row boundaries

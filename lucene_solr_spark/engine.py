@@ -79,7 +79,7 @@ def _recipe_dir(sf_dir: str, analyzer: str, recipe: IndexRecipe) -> str:
     # bump the version token whenever the on-disk index format changes
     # (cache dirs are content-addressed; a stale format must not resume)
     tag = hashlib.md5(
-        f"{os.path.abspath(src)}|{os.path.getmtime(src)}|{analyzer}|{recipe!r}|v7".encode()
+        f"{os.path.abspath(src)}|{os.path.getmtime(src)}|{analyzer}|{recipe!r}|v8".encode()
     ).hexdigest()[:16]
     return _cache_dir(f"docs-{analyzer}-{tag}")
 

@@ -232,8 +232,9 @@ def _state_fingerprint(index_dir: str) -> str:
         return ""
     with open(meta_path, "rb") as f:
         h.update(f.read())
-    for root_name in ("manifest", "tombstones"):
-        root = os.path.join(index_dir, root_name)
+    from .updates import tombstones_path
+
+    for root in (os.path.join(index_dir, "manifest"), tombstones_path(index_dir)):
         entries = []
         if os.path.isdir(root):
             for dirpath, _dirs, files in os.walk(root):
@@ -917,50 +918,37 @@ def _finalize(spark: SparkSession, index_dir: str) -> None:
     """Global stats — computed BEFORE scoring, as global aggregates
     (north rule; reference: TermStates#build summing per-leaf stats).
 
-    Tombstone-aware: when ``tombstones/`` exists (see index/updates.py),
-    doc stats exclude deleted docs (broadcast anti-join) and term_stats
-    subtracts each deleted doc's df/ttf contribution (one seg-pruned pass
-    over the affected segments) — so post-update scores equal a fresh build
-    over the live corpus."""
+    Tombstone-aware: the deleted docs' contributions, negated
+    (``updates.tombstone_removals``: one dealt pass over the segments with
+    deletes), are unioned into both sums — so post-update scores equal a
+    fresh build over the live corpus, and a term left with no live doc
+    drops out of the dictionary."""
+    from .updates import tombstone_removals
+
     postings = spark.read.schema(POSTINGS_STATS_SCHEMA).parquet(
         os.path.join(index_dir, "postings")
+    ).select("term", "df_part", "ttf_part")
+    docs = spark.read.schema(DOCS_STATS_SCHEMA).parquet(
+        os.path.join(index_dir, "docs")
+    ).select(
+        F.lit(1).cast("long").alias("n"),
+        (F.col("length") > 0).cast("long").alias("has_field"),
+        "length",
     )
+    removals = tombstone_removals(spark, index_dir)
+    if removals is not None:
+        postings = postings.unionByName(removals[0])
+        docs = docs.unionByName(removals[1])
     term_stats = (
         postings.groupBy("term")
         .agg(F.sum("df_part").alias("df"), F.sum("ttf_part").alias("ttf"))
+        .filter(F.col("df") > 0)
     )
-    docs = spark.read.schema(DOCS_STATS_SCHEMA).parquet(os.path.join(index_dir, "docs"))
-
-    from .updates import (
-        TOMBSTONE_SCHEMA, load_tombstones, term_stats_removals, tombstones_path,
-    )
-
-    tomb = load_tombstones(spark, index_dir)
-    if tomb:
-        rm = term_stats_removals(spark, index_dir, tomb)
-        term_stats = (
-            term_stats.join(rm, "term", "left")
-            .select(
-                "term",
-                (F.col("df") - F.coalesce(F.col("df_rm"), F.lit(0))).alias("df"),
-                (F.col("ttf") - F.coalesce(F.col("ttf_rm"), F.lit(0))).alias("ttf"),
-            )
-            .filter(F.col("df") > 0)
-        )
-        # anti-join straight against the tombstone table (distributed read —
-        # no driver materialization beyond the per-seg arrays the kernels
-        # need anyway); broadcast while deletes are broadcast-sized, which
-        # AQE decides from the actual table size
-        tomb_df = (
-            spark.read.schema(TOMBSTONE_SCHEMA).parquet(tombstones_path(index_dir))
-            .distinct()
-        )
-        docs = docs.join(tomb_df, ["seg", "doc_local"], "left_anti")
     write_term_dictionary(spark, term_stats, index_dir)
 
     stats = docs.agg(
-        F.count(F.lit(1)).alias("max_doc"),
-        F.sum((F.col("length") > 0).cast("long")).alias("doc_count"),
+        F.sum("n").alias("max_doc"),
+        F.sum("has_field").alias("doc_count"),
         F.sum("length").alias("sum_ttf"),
     )
     stats.write.mode("overwrite").parquet(os.path.join(index_dir, "stats"))

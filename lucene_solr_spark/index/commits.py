@@ -11,8 +11,8 @@ already commit-shaped:
 
 - segments are immutable once their manifest marker exists (append/update
   only ever ADD segments),
-- tombstones are append-only parquet files (``updates._commit_tombstones``
-  writes mode="append" and never rewrites an existing file),
+- tombstones are append-only per-segment parquet files
+  (``updates.append_tombstones`` adds files, never rewrites one),
 - only the derived global-stats tables (``stats``/``term_stats``/
   ``term_stats_rev``) are overwritten in place by ``refresh_stats``.
 
@@ -45,6 +45,8 @@ from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+
+from .updates import tombstone_files, tombstone_segs, tombstones_path
 
 COMMITS_DIRNAME = "commits"
 _STATS_TABLES = ("stats", "term_stats", "term_stats_rev")
@@ -97,14 +99,7 @@ def commit_point(index_dir: str) -> int:
     if not segs:
         raise ValueError(f"no committed segments under {index_dir!r}")
 
-    tomb_root = os.path.join(index_dir, "tombstones")
-    tomb_files = tuple(
-        sorted(
-            os.path.relpath(p, index_dir)
-            for pat in ("*.parquet", os.path.join("*", "*.parquet"))
-            for p in glob.glob(os.path.join(tomb_root, pat))
-        )
-    )
+    tomb_files = tombstone_files(index_dir)
 
     # retain the mutable stats tables (hardlink per file — pin, don't copy)
     for name in _STATS_TABLES:
@@ -173,11 +168,9 @@ def rollback_to(index_dir: str, gen: int) -> CommitInfo:
         os.remove(os.path.join(index_dir, "manifest", f"seg={s}.parquet"))
 
     keep_tombs = set(info.tomb_files)
-    tomb_root = os.path.join(index_dir, "tombstones")
-    for pat in ("*.parquet", os.path.join("*", "*.parquet")):
-        for p in glob.glob(os.path.join(tomb_root, pat)):
-            if os.path.relpath(p, index_dir) not in keep_tombs:
-                os.remove(p)
+    for f in tombstone_files(index_dir):
+        if f not in keep_tombs:
+            os.remove(os.path.join(index_dir, f))
 
     for name in _STATS_TABLES:
         retained = os.path.join(info.stats_dir, name)
@@ -195,6 +188,7 @@ def rollback_to(index_dir: str, gen: int) -> CommitInfo:
             p = os.path.join(index_dir, d, f"seg={s}")
             if os.path.isdir(p):
                 shutil.rmtree(p)
+        shutil.rmtree(tombstones_path(index_dir, s), ignore_errors=True)
 
     # the restored stats tables match the restored manifest/tombstone state
     # exactly (they were retained together at capture), so re-stamp the
@@ -214,9 +208,11 @@ def load_commit(index_dir: str, gen: int) -> CommitInfo:
             f"(have: {list_commits(index_dir)})"
         )
     t = pq.read_table(info)
+    tomb_files = tuple(t.column("tomb_files")[0].as_py())
+    tombstone_segs(tomb_files)  # a flat (pre-per-segment) file raises
     return CommitInfo(
         gen=int(t.column("gen")[0].as_py()),
         segs=tuple(t.column("segs")[0].as_py()),
-        tomb_files=tuple(t.column("tomb_files")[0].as_py()),
+        tomb_files=tomb_files,
         stats_dir=gdir,
     )

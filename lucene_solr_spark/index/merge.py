@@ -21,9 +21,11 @@ shifted into the output segment's local ids. Both stages are
            legal), concatenates the docs tables and writes the segment with
            ``build.write_segment`` (``status="merged"``, real lineage).
 
-A group of one segment is copied by file. The driver then translates the
-tombstones, writes ``meta.json`` and ends in ``build._commit`` — bases,
-global stats and the open sentinel, the tail every writer shares.
+Each output segment carries its sources' tombstones: a one-segment group
+copies ``tombstones/seg=N`` with its files, and a phase-2 task writes its
+segment's sources' deletes rebased to the output's local ids. The driver
+then writes ``meta.json`` and ends in ``build._commit`` — bases, global
+stats and the open sentinel, the tail every writer shares.
 """
 
 from __future__ import annotations
@@ -52,19 +54,25 @@ from .build import (
     write_segment,
 )
 from .codec import decode_postings, encode_posting_blocks
-from .updates import load_tombstones, tombstones_path
+from .updates import (
+    read_tombstones, tombstone_files, tombstones_path, write_tombstones,
+)
 
 
 def _copy_segment(src_dir: str, seg: int, dst_dir: str, new_seg: int) -> None:
     """File-copy segment ``seg`` of ``src_dir`` into ``dst_dir`` as
-    ``new_seg``: segment files hold only segment-local ids, so a copy is a
-    complete segment (``_commit`` rewrites the seg_norms base). The
-    renumbered manifest marker is written last — the commit point."""
-    for root in ("postings", "docs", "seg_norms", "bloom"):
-        src = os.path.join(src_dir, root, f"seg={seg}")
-        dst = os.path.join(dst_dir, root, f"seg={new_seg}")
+    ``new_seg``, its tombstones included: segment files hold only
+    segment-local ids, so a copy is a complete segment (``_commit``
+    rewrites the seg_norms base). The renumbered manifest marker is written
+    last — the commit point."""
+    dirs = [
+        (os.path.join(src_dir, root, f"seg={seg}"), os.path.join(dst_dir, root, f"seg={new_seg}"))
+        for root in ("postings", "docs", "seg_norms", "bloom")
+    ]
+    for src, dst in [*dirs, (tombstones_path(src_dir, seg), tombstones_path(dst_dir, new_seg))]:
         shutil.rmtree(dst, ignore_errors=True)
-        shutil.copytree(src, dst)
+        if os.path.isdir(src):
+            shutil.copytree(src, dst)
     marker = pq.read_table(os.path.join(src_dir, "manifest", f"seg={seg}.parquet"))
     marker = marker.set_column(
         marker.schema.get_field_index("seg"), "seg",
@@ -190,8 +198,10 @@ def merge_segments(
         # a different merge's segments would stay committed next to ours
         raise ValueError(f"{dst_dir} holds segments this merge does not write")
 
+    tombstone_files(src_dir)  # refuses a flat (pre-per-segment) tombstone file
     staging = os.path.join(dst_dir, "_merge_staging")
     shutil.rmtree(staging, ignore_errors=True)
+    shutil.rmtree(tombstones_path(dst_dir), ignore_errors=True)
     os.makedirs(dst_dir, exist_ok=True)
     units: list[tuple[int, str, list[int]]] = []  # phase 1: (out_seg, staging dir, sources)
     for g in groups:
@@ -211,6 +221,13 @@ def merge_segments(
         )
 
     def write(out_seg: int) -> pa.Table:
+        # the sources' deletes, rebased: (seg, local) → local + in_base − out_base
+        dele = [
+            d + bases[s] - bases[out_seg]
+            for s in next(g for g in groups if g[0] == out_seg)
+            if (d := read_tombstones(src_dir, s)) is not None
+        ]
+        write_tombstones(dst_dir, out_seg, np.concatenate(dele) if dele else None)
         sub_dirs = [d for o, d, _ in units if o == out_seg]
         return pa.Table.from_pylist([_write_merged(dst_dir, meta, out_seg, sub_dirs)])
 
@@ -220,21 +237,6 @@ def merge_segments(
             spark, sorted({u[0] for u in units}), write, StructType.fromDDL(MANIFEST_SCHEMA)
         ).collect()
     shutil.rmtree(staging, ignore_errors=True)
-
-    # tombstones: (seg, local) → (out_seg, local + in_base − out_base)
-    shutil.rmtree(tombstones_path(dst_dir), ignore_errors=True)
-    tomb = load_tombstones(spark, src_dir)
-    if tomb:
-        out_of = {s: g[0] for g in groups for s in g}
-        os.makedirs(tombstones_path(dst_dir))
-        _atomic_write(pa.table({
-            "seg": pa.array(np.concatenate(
-                [np.full(len(loc), out_of[s]) for s, loc in tomb.items()]
-            ), type=pa.int32()),
-            "doc_local": pa.array(np.concatenate(
-                [loc + bases[s] - bases[out_of[s]] for s, loc in tomb.items()]
-            ), type=pa.int64()),
-        }), os.path.join(tombstones_path(dst_dir), "part-0.parquet"))
 
     dataclasses.replace(meta, n_segments=len(groups)).save(dst_dir)
     return _commit(spark, dst_dir, _read_committed_manifest(dst_dir))
@@ -270,10 +272,11 @@ def add_indexes(
         ):
             raise ValueError("addIndexes: source index schemas differ")
     for d in src_dirs:
-        for side in ("tombstones", "dv_updates"):
-            if os.path.isdir(os.path.join(d, side)):
+        for side in (tombstones_path(d), os.path.join(d, "dv_updates")):
+            if os.path.isdir(side):
                 raise ValueError(
-                    f"addIndexes: {d} has pending {side}; expunge/fold first"
+                    f"addIndexes: {d} has pending {os.path.basename(side)}; "
+                    "expunge/fold first"
                 )
 
     os.makedirs(dst_dir, exist_ok=True)

@@ -13,8 +13,9 @@ Spark shape (this module):
 
 - A child index = the parent's IMMUTABLE segment files (hard-linked, not
   copied — postings/docs/norms/bloom are write-once, exactly the property
-  the backup/restore test pins) + a child-local ``tombstones/`` table
-  marking every doc OUTSIDE the child's hash bucket + child-local
+  the backup/restore test pins) + child-local per-segment tombstone files
+  (the parent's, linked, plus one batch marking every doc OUTSIDE the
+  child's hash bucket) + child-local
   ``term_stats``/``stats`` refreshed by the same ``_finalize`` that owns
   them for updates (so each child scores like a fresh build over its
   slice). At cluster scale the hard-link step is an Iceberg metadata
@@ -38,20 +39,18 @@ term/collection statistics from ONE distributed pass — postings doc-id
 streams decode once into (seg, doc_local, term, tf) rows, join the
 bucket assignment, and a single (child, term) hash-agg yields all
 children's dictionaries; per-child work after that is a tiny filtered
-write. Fully distributed (no driver-side tombstone dictionaries — the
-assignment rides the join), so it holds at 10^12 docs where the
-broadcast-removals path cannot. ``"per_child"`` instead runs the same
-``_finalize`` refresh updates/DBQ use, once per child (n passes, driver
-removal dicts) — kept as the independently-derived reference path the
-equivalence test pins the scan against. Either way this is strictly less
-work than upstream SPLITSHARD, which REWRITES every posting byte per
-child through addIndexes.
+write. Fully distributed (the assignment rides the join). ``"per_child"``
+instead runs the same ``_finalize`` refresh updates/DBQ use, once per child
+(n removal passes over every segment) — kept as the independently-derived
+reference path the equivalence test pins the scan against. Either way this
+is strictly less work than upstream SPLITSHARD, which REWRITES every posting
+byte per child through addIndexes.
 
 Scope notes: children start as fresh cores — retained commit generations
 (``commits/``) and docvalues-update sidecars are NOT carried (upstream
 SPLITSHARD children likewise begin a fresh update log); split a parent at
-its current live state. Parent tombstones ARE carried (unioned into each
-child's mask) so splitting an updated index stays correct.
+its current live state. Parent tombstones ARE carried (linked into each
+child next to its mask) so splitting an updated index stays correct.
 """
 
 from __future__ import annotations
@@ -62,7 +61,7 @@ import shutil
 from pyspark.sql import SparkSession, functions as F
 
 from .build import IndexMeta, write_term_dictionary
-from .updates import refresh_stats, tombstones_path
+from .updates import append_tombstones, refresh_stats, tombstones_df, tombstones_path
 
 # Subtrees whose files are write-once in this storage model and therefore
 # safe to hard-link into children. term_stats/term_stats_rev/stats are ALSO
@@ -117,12 +116,7 @@ def split_index(
     key = meta.key_cols[0]
     docs = spark.read.parquet(os.path.join(index_dir, "docs"))
     bucket = split_bucket_col(key, n_children)
-    parent_tomb = None
-    if os.path.isdir(tombstones_path(index_dir)):
-        parent_tomb = spark.read.parquet(tombstones_path(index_dir)).select(
-            F.col("seg").cast("int").alias("seg"),
-            F.col("doc_local").cast("long").alias("doc_local"),
-        )
+    parent_tomb = tombstones_df(spark, index_dir)
     out: list[str] = []
     for c in range(n_children):
         cdir = os.path.join(out_root, f"shard{c}")
@@ -133,15 +127,15 @@ def split_index(
         shutil.copy2(
             os.path.join(index_dir, "meta.json"), os.path.join(cdir, "meta.json")
         )
-        non_members = docs.filter(bucket != c).select(
+        # the parent's tombstone files (write-once: linked), then one batch
+        # marking the docs outside the bucket; read_tombstones unions them
+        shutil.rmtree(tombstones_path(cdir), ignore_errors=True)
+        if parent_tomb is not None:
+            _link_tree(tombstones_path(index_dir), tombstones_path(cdir))
+        append_tombstones(docs.filter(bucket != c).select(
             F.col("seg").cast("int").alias("seg"),
             F.col("doc_local").cast("long").alias("doc_local"),
-        )
-        if parent_tomb is not None:
-            non_members = non_members.unionByName(parent_tomb).distinct()
-        # overwrite is safe on the linked copy: the child directory entries
-        # are replaced, the parent's inodes are untouched
-        non_members.write.mode("overwrite").parquet(tombstones_path(cdir))
+        ).repartition("seg"), cdir)
         if stats_mode == "per_child":
             refresh_stats(spark, cdir)
         out.append(cdir)
@@ -168,10 +162,9 @@ def _write_child_stats_single_scan(
 ) -> None:
     """All children's term/collection statistics from ONE distributed
     postings pass: decode doc-id/tf streams → join the (seg, doc_local) →
-    child assignment → one (child, term) hash-agg. No driver-side removal
-    dictionaries (the per-child ``_finalize`` path broadcasts them), so
-    this is the 10^12-doc shape. The per-child write afterwards filters
-    the tiny aggregated dictionary."""
+    child assignment → one (child, term) hash-agg — one pass for all
+    children where the per-child ``_finalize`` path makes n. The per-child
+    write afterwards filters the tiny aggregated dictionary."""
     import numpy as np
     import pandas as pd
 

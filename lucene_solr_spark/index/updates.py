@@ -1,15 +1,22 @@
-"""Deletes and updates — tombstone bitsets + delete-and-re-add on the doc key.
+"""Deletes and updates — per-segment tombstone files + delete-and-re-add on
+the doc key.
 
 Reference semantics: ``L/index/PendingDeletes`` (per-segment live-docs bitset
-consulted by every scorer), ``S/update/DirectUpdateHandler2#addDoc`` (an
-update on the uniqueKey is delete + re-add; the re-added doc lands in a new
-segment with a new internal id). Spark shape:
+consulted by every scorer, stored as the segment's ``.liv`` file),
+``S/update/DirectUpdateHandler2#addDoc`` (an update on the uniqueKey is
+delete + re-add; the re-added doc lands in a new segment with a new internal
+id). Spark shape:
 
-- ``tombstones/`` under the index dir holds (seg, doc_local) rows — the
-  segment-local ids of deleted docs, identified by the STABLE (seg, local)
-  pair (immune to base renumbering on append). Written distributed
-  (``df.write.mode("append")``), read once per searcher and broadcast to the
-  scoring kernels, which exclude them before top-k (kernels._merge_excl).
+- ``tombstones/seg=N/`` holds segment N's deleted local ids (one
+  ``doc_local`` column), one file per delete batch — next to the segment's
+  ``postings/``, ``docs/``, ``seg_norms/`` and ``bloom/`` directories. The
+  (seg, local) pair is STABLE (immune to base renumbering on append).
+  This module owns the layout: ``read_tombstones`` is its one reader, run
+  inside the task that already works on the segment (scoring, the stats
+  removal pass, expunge, merge, CheckIndex), so no delete set is collected
+  to the driver or broadcast; the kernels exclude the ids before top-k
+  (kernels._merge_excl). A flat ``tombstones/*.parquet`` file (the layout
+  before deletes were per segment) raises ``TombstoneLayoutError``.
 - ``delete_docs`` resolves doc keys → (seg, doc_local) with one broadcast
   join against the docs table (seg-pruned columnar scan), appends the
   tombstone delta, and refreshes global stats.
@@ -18,64 +25,157 @@ segment with a new internal id). Spark shape:
   monotone docID discipline), so (conv_id, turn_idx)-keyed text equality is
   preserved for the LIVE copy only.
 - Stats refresh (unlike classic Lucene, which keeps stale df until merge):
-  ``refresh_stats`` recomputes docCount/sumTTF/avgdl excluding tombstones
-  (anti-join) and subtracts each deleted doc's df/ttf contribution from
-  term_stats via ONE seg-pruned pass over the affected segments' postings —
+  ``refresh_stats`` adds what the deleted docs contribute, negated, to the
+  index-wide sums — per-term df/ttf and per-segment doc counts/lengths from
+  one dealt pass over the segments with deletes (``tombstone_removals``) —
   so BM25 scores after an update equal a fresh build over the post-update
   corpus (the driver-checked invariant in ``ft_after_update_topk``).
 
-Scale notes: the tombstone table is O(deleted docs) rows; the stats-delta
-scan touches only segments containing deletes (hive seg= pruning) and only
-decodes doc-id streams (no positions, no scores). At 10^12 docs with heavy
-churn you would run ``merge_segments`` periodically and rewrite the lagging
-segments; the delta refresh here is the between-merges path.
+Scale notes: a tombstone file is O(deleted docs of one segment) rows; the
+removal pass touches only segments with deletes and only decodes doc-id
+streams (no positions, no scores). At 10^12 docs with heavy churn you would
+run ``merge_segments`` periodically and rewrite the lagging segments; the
+delta refresh here is the between-merges path.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import re
+import shutil
 import time
+from typing import Iterable
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
-from .build import IndexMeta, _finalize
-from .codec import decode_postings
+from ..util.segscan import segment_scan
+from .build import (
+    MANIFEST_SCHEMA,
+    IndexMeta,
+    _atomic_write,
+    _commit,
+    _finalize,
+    _read_committed_manifest,
+    read_segment,
+    write_segment,
+)
+from .codec import decode_postings, encode_posting_blocks
 
 TOMBSTONE_SCHEMA = "seg int, doc_local long"
+# what the deleted docs contribute, negated: per-term rows and per-segment
+# doc rows, unioned into _finalize's sums
+REMOVED_TERMS_SCHEMA = "term string, df_part long, ttf_part long"
+REMOVED_DOCS_SCHEMA = "n long, has_field long, length long"
+_SEG_FILE = re.compile(r"tombstones/seg=(\d+)/[^/]+\.parquet")
 
 
-def tombstones_path(index_dir: str) -> str:
-    return os.path.join(index_dir, "tombstones")
+class TombstoneLayoutError(ValueError):
+    """A tombstone file outside every ``tombstones/seg=N/`` directory — the
+    flat layout written before deletes were per segment. No per-segment
+    reader sees it, so its deleted docs would silently come back; the index
+    is refused instead (rebuild it, or re-apply its deletes)."""
 
 
-def tombstones_by_seg(tomb_df: DataFrame) -> dict[int, np.ndarray]:
-    """{seg: sorted unique local ids} from a tombstone DataFrame — the
-    per-leaf live-docs complement. Collected to the driver and broadcast
-    into query closures (1 entry per deleted doc, the same memory class as
-    Lucene's in-heap PendingDeletes bitsets); callers gate this behind
-    TOMB_DRIVER_BUDGET; above it each scoring task reads its own segment's
-    rows from the tombstone files (``search/segtask.py``)."""
-    pdf = tomb_df.toPandas()
-    return {
-        int(seg): np.unique(g["doc_local"].to_numpy(dtype=np.int64))
-        for seg, g in pdf.groupby("seg")
-    }
+def tombstones_path(index_dir: str, seg: int | None = None) -> str:
+    """The tombstones root of ``index_dir``, or segment ``seg``'s directory."""
+    root = os.path.join(index_dir, "tombstones")
+    return root if seg is None else os.path.join(root, f"seg={seg}")
 
 
-def load_tombstones(spark: SparkSession, index_dir: str) -> dict[int, np.ndarray]:
-    """{seg: sorted unique local ids} for the whole index dir; empty dict
-    when the index has no deletes."""
-    path = tombstones_path(index_dir)
-    if not glob.glob(os.path.join(path, "*.parquet")) and not glob.glob(
-        os.path.join(path, "*", "*.parquet")
-    ):
-        return {}
-    return tombstones_by_seg(spark.read.schema(TOMBSTONE_SCHEMA).parquet(path))
+def tombstone_segs(files: Iterable[str]) -> list[int]:
+    """The segments ``files`` (index-relative tombstone paths) hold deletes
+    for, ascending. A file outside a ``seg=N`` directory raises."""
+    segs = set()
+    for f in files:
+        m = _SEG_FILE.fullmatch(f.replace(os.sep, "/"))
+        if m is None:
+            raise TombstoneLayoutError(
+                f"tombstone file {f!r} is not under tombstones/seg=N/ "
+                "(the flat pre-per-segment layout)"
+            )
+        segs.add(int(m.group(1)))
+    return sorted(segs)
+
+
+def tombstone_files(index_dir: str) -> tuple[str, ...]:
+    """Every tombstone file of ``index_dir``, index-relative and sorted — a
+    directory listing, no read: what a commit point records and a searcher
+    snapshots at open. Raises ``TombstoneLayoutError`` on a flat file."""
+    root = tombstones_path(index_dir)
+    files = sorted(
+        os.path.relpath(p, index_dir)
+        for pat in ("*.parquet", os.path.join("seg=*", "*.parquet"))
+        for p in glob.glob(os.path.join(root, pat))
+    )
+    tombstone_segs(files)
+    return tuple(files)
+
+
+def read_tombstones(
+    index_dir: str, seg: int, files: Iterable[str] | None = None
+) -> np.ndarray | None:
+    """Sorted unique deleted local ids of segment ``seg``, or None — the one
+    reader of the layout, called inside the task that works on the segment.
+    ``files``: a view's recorded tombstone files (index-relative, e.g. a
+    commit point's); only those under ``seg``'s directory are read. None
+    reads every file there."""
+    seg_dir = tombstones_path(index_dir, seg)
+    if files is None:
+        paths = glob.glob(os.path.join(seg_dir, "*.parquet"))
+    else:
+        prefix = os.path.relpath(seg_dir, index_dir) + os.sep
+        paths = [os.path.join(index_dir, f) for f in files if f.startswith(prefix)]
+    if not paths:
+        return None
+    ids = np.unique(np.concatenate([
+        pq.read_table(p, columns=["doc_local"])["doc_local"].to_numpy() for p in paths
+    ]).astype(np.int64))
+    return ids if ids.size else None
+
+
+def write_tombstones(index_dir: str, seg: int, ids: np.ndarray | None) -> None:
+    """Replace segment ``seg``'s tombstones by ``ids`` (sorted, unique) in
+    one file — no file when ``ids`` is empty. The in-task writer."""
+    seg_dir = tombstones_path(index_dir, seg)
+    shutil.rmtree(seg_dir, ignore_errors=True)
+    if ids is not None and len(ids):
+        os.makedirs(seg_dir)
+        _atomic_write(
+            pa.table({"doc_local": pa.array(ids, type=pa.int64())}),
+            os.path.join(seg_dir, "part-0.parquet"),
+        )
+
+
+def append_tombstones(rows: DataFrame, index_dir: str) -> None:
+    """Append (seg, doc_local) ``rows`` as new files under
+    ``tombstones/seg=N/`` — the distributed writer of a delete batch. Each
+    task writes one file per segment it holds, so ``rows`` hash-partitioned
+    by seg give one file per segment."""
+    rows.write.mode("append").partitionBy("seg").parquet(tombstones_path(index_dir))
+
+
+def tombstones_df(spark: SparkSession, index_dir: str) -> DataFrame | None:
+    """(seg, doc_local) of every delete, for distributed joins — one dealt
+    stage of ``read_tombstones`` over the segments with deletes; None when
+    the index has none."""
+    segs = tombstone_segs(tombstone_files(index_dir))
+    if not segs:
+        return None
+
+    def read(seg: int) -> pa.Table | None:
+        ids = read_tombstones(index_dir, seg)
+        if ids is None:
+            return None
+        return pa.table({"seg": np.full(len(ids), seg, dtype=np.int32), "doc_local": ids})
+
+    return segment_scan(spark, segs, read, StructType.fromDDL(TOMBSTONE_SCHEMA))
 
 
 def delete_docs(
@@ -86,9 +186,8 @@ def delete_docs(
     refresh: bool = True,
 ) -> int:
     """Tombstone every doc whose key appears in ``keys`` (columns =
-    meta.key_cols). Returns the number of newly tombstoned docs. Docs
-    already deleted are de-duplicated at read time (np.unique in
-    load_tombstones / DISTINCT in refresh_stats)."""
+    meta.key_cols). Returns the number of newly tombstoned docs; docs
+    already deleted are not written again (``_commit_tombstones``)."""
     meta = IndexMeta.load(index_dir)
     docs = spark.read.parquet(os.path.join(index_dir, "docs"))
     hit = (
@@ -133,18 +232,18 @@ def _commit_tombstones(
     spark: SparkSession, index_dir: str, hit: DataFrame, *, refresh: bool
 ) -> int:
     """Shared delete tail: anti-join out docs already tombstoned (so the
-    return value means NEWLY deleted and the table stays O(distinct deleted
+    return value means NEWLY deleted and the files stay O(distinct deleted
     docs) under repeated deletes — IndexWriter#deleteDocuments is
     idempotent), append, refresh stats."""
-    if glob.glob(os.path.join(tombstones_path(index_dir), "*.parquet")) or glob.glob(
-        os.path.join(tombstones_path(index_dir), "*", "*.parquet")
-    ):
-        existing = spark.read.parquet(tombstones_path(index_dir))
+    existing = tombstones_df(spark, index_dir)
+    if existing is not None:
         hit = hit.join(existing, ["seg", "doc_local"], "left_anti")
-    hit = hit.distinct().cache()
+    # hashed by seg: the distinct needs no second shuffle, and each
+    # segment's rows sit in one task (one file per segment per batch)
+    hit = hit.repartition("seg").distinct().cache()
     n = hit.count()
     if n:
-        hit.write.mode("append").parquet(tombstones_path(index_dir))
+        append_tombstones(hit, index_dir)
         if refresh:
             refresh_stats(spark, index_dir)
     hit.unpersist()
@@ -172,42 +271,44 @@ def refresh_stats(spark: SparkSession, index_dir: str) -> None:
     _finalize(spark, index_dir)
 
 
-def term_stats_removals(
-    spark: SparkSession, index_dir: str, tomb: dict[int, np.ndarray]
-) -> DataFrame:
-    """Per-term (df_rm, ttf_rm) contributed by tombstoned docs — ONE pass
-    over the affected segments' postings (seg-partition-pruned scan), doc-id
-    streams only. Used by build._finalize to keep term_stats equal to a
-    fresh build over the live corpus."""
-    segs = sorted(tomb)
-    tomb_b = spark.sparkContext.broadcast({s: a for s, a in tomb.items()})
+def tombstone_removals(
+    spark: SparkSession, index_dir: str
+) -> tuple[DataFrame, DataFrame] | None:
+    """What the deleted docs contribute to the index-wide sums, negated, for
+    ``build._finalize`` to union in: per-term ``REMOVED_TERMS_SCHEMA`` rows
+    (−df, −ttf) and per-segment ``REMOVED_DOCS_SCHEMA`` rows (−docs, −docs
+    with the field, −length). Two dealt stages over the segments with
+    deletes; each task reads its segment's tombstones and decodes its doc-id
+    streams only (no positions). None when the index has no deletes."""
+    segs = tombstone_segs(tombstone_files(index_dir))
+    if not segs:
+        return None
 
-    def kernel(iterator):
-        t = tomb_b.value
-        for pdf in iterator:
-            terms, dfr, ttfr = [], [], []
-            for seg, term, blocks in zip(pdf["seg"], pdf["term"], pdf["blocks"]):
-                dele = t.get(int(seg))
-                if dele is None or not len(blocks):
-                    continue
-                docs, tfs = decode_postings(list(blocks))[:2]
-                hitmask = np.isin(docs, dele, assume_unique=True)
-                k = int(hitmask.sum())
-                if k:
-                    terms.append(term)
-                    dfr.append(k)
-                    ttfr.append(int(tfs[hitmask].sum()))
-            yield pd.DataFrame({"term": terms, "df_rm": dfr, "ttf_rm": ttfr})
+    def terms(seg: int) -> pa.Table:
+        dele = read_tombstones(index_dir, seg)
+        post = read_segment(index_dir, "postings", seg)
+        out = {"term": [], "df_part": [], "ttf_part": []}
+        for term, blocks in zip(post["term"].to_pylist(), post["blocks"].to_pylist()):
+            docs, tfs = decode_postings(blocks)[:2]
+            hit = np.isin(docs, dele, assume_unique=True)
+            if hit.any():
+                out["term"].append(term)
+                out["df_part"].append(-int(hit.sum()))
+                out["ttf_part"].append(-int(tfs[hit].sum()))
+        return pa.table(out)
 
-    posts = (
-        spark.read.parquet(os.path.join(index_dir, "postings"))
-        .filter(F.col("seg").isin(segs))
-        .select("seg", "term", "blocks")
-    )
+    def docs(seg: int) -> pa.Table:
+        dele = read_tombstones(index_dir, seg)
+        length = read_segment(index_dir, "docs", seg)["length"].to_numpy()[dele]
+        return pa.table({
+            "n": [-len(length)],
+            "has_field": [-int((length > 0).sum())],
+            "length": [-int(length.sum())],
+        })
+
     return (
-        posts.mapInPandas(kernel, "term string, df_rm long, ttf_rm long")
-        .groupBy("term")
-        .agg(F.sum("df_rm").alias("df_rm"), F.sum("ttf_rm").alias("ttf_rm"))
+        segment_scan(spark, segs, terms, StructType.fromDDL(REMOVED_TERMS_SCHEMA)),
+        segment_scan(spark, segs, docs, StructType.fromDDL(REMOVED_DOCS_SCHEMA)),
     )
 
 
@@ -326,7 +427,7 @@ def expunge_deletes(
     / Solr ``<commit expungeDeletes=true>``: every affected segment is
     rewritten WITHOUT its deleted docs, segments that became empty are
     dropped entirely (Lucene drops 100%-deleted segments at flush), the
-    tombstone table is cleared, and stats are recomputed from the now-clean
+    tombstone files are cleared, and stats are recomputed from the now-clean
     postings.
 
     Doc-order invariant (what makes results stable): local ids are
@@ -346,8 +447,8 @@ def expunge_deletes(
     path, not needed for the space-reclaim use case expunge exists for.
 
     Scale shape: ONE dealt stage (``segment_scan``) over the affected
-    segments. Each task reads its own segment's postings and docs files,
-    drops the deleted local ids, compacts the rest, re-encodes the postings
+    segments. Each task reads its own segment's tombstones, postings and
+    docs files, drops the deleted local ids, compacts the rest, re-encodes the postings
     and writes the segment through the build's ``write_segment`` into a
     staging tree — so a rewritten segment is byte-identical to a fresh
     build of its live rows, with real lineage (``content_hash``, counts,
@@ -355,15 +456,8 @@ def expunge_deletes(
     after every new file exists: segment dirs first, manifest markers last
     (the crash window between swaps is the in-place trade-off; Lucene's
     segments_N atomicity maps to our manifest markers)."""
-    import shutil
-
-    from pyspark.sql.types import StructType
-
-    from ..util.segscan import segment_scan
-    from .build import MANIFEST_SCHEMA, _commit, _read_committed_manifest
-
-    tomb = load_tombstones(spark, index_dir)
-    if not tomb:
+    segs = tombstone_segs(tombstone_files(index_dir))
+    if not segs:
         return {"expunged_docs": 0, "rewritten_segs": [], "dropped_segs": []}
 
     from .commits import commits_path, list_commits
@@ -381,20 +475,18 @@ def expunge_deletes(
     meta = IndexMeta.load(index_dir)
     manifest = _read_committed_manifest(index_dir)
     n_docs = dict(zip(manifest["seg"], manifest["n_docs"]))
-    affected = sorted(tomb)
-    dropped = [s for s in affected if len(tomb[s]) >= n_docs[s]]
-    rewritten = [s for s in affected if s not in dropped]
-
     staging = os.path.join(index_dir, "_expunge_staging")
     shutil.rmtree(staging, ignore_errors=True)
+    schema = StructType.fromDDL(MANIFEST_SCHEMA)
+    arrow_schema = to_arrow_schema(schema)
 
     def rewrite_one(seg: int) -> pa.Table:
-        row = _expunge_segment(index_dir, staging, seg, meta, tomb[seg])
-        return pa.Table.from_pylist([row])
+        row = _expunge_segment(index_dir, staging, seg, meta)
+        return pa.Table.from_pylist([row], schema=arrow_schema)
 
-    segment_scan(
-        spark, rewritten, rewrite_one, StructType.fromDDL(MANIFEST_SCHEMA)
-    ).collect()
+    rows = segment_scan(spark, segs, rewrite_one, schema).collect()  # one per segment
+    dropped = sorted(r.seg for r in rows if r.status == _DROPPED)
+    rewritten = sorted(r.seg for r in rows if r.status != _DROPPED)
 
     # --- destructive phase: segment dirs, dropped segments, then markers ---
     roots = ("postings", "docs", "seg_norms", "bloom")
@@ -420,27 +512,29 @@ def expunge_deletes(
     # compact but keep their relative order
     _commit(spark, index_dir, _read_committed_manifest(index_dir))
     return {
-        "expunged_docs": int(sum(len(v) for v in tomb.values())),
+        "expunged_docs": int(sum(n_docs[r.seg] - r.n_docs for r in rows)),
         "rewritten_segs": rewritten,
         "dropped_segs": dropped,
     }
 
 
-def _expunge_segment(
-    index_dir: str, staging: str, seg: int, meta: IndexMeta, dele: np.ndarray
-) -> dict:
-    """One expunge task: segment ``seg`` without the local ids ``dele``
-    (sorted, unique), written into ``staging`` by ``write_segment``. Live
-    local ids compact monotonically (new = old − #deleted below), and each
-    term's postings re-encode with the kept docs' norms; terms left with no
-    live doc disappear."""
-    from .build import read_segment, write_segment
-    from .codec import encode_posting_blocks
+_DROPPED = "dropped"  # expunge task status of a segment with no live doc
 
+
+def _expunge_segment(index_dir: str, staging: str, seg: int, meta: IndexMeta) -> dict:
+    """One expunge task: segment ``seg`` without its tombstoned docs,
+    written into ``staging`` by ``write_segment`` — or, when no doc is left,
+    nothing and a ``_DROPPED`` row. Live local ids compact monotonically
+    (new = old − #deleted below), and each term's postings re-encode with
+    the kept docs' norms; terms left with no live doc disappear."""
     t0 = time.monotonic()
+    dele = read_tombstones(index_dir, seg)
     docs = read_segment(index_dir, "docs", seg)
+    alive = ~np.isin(np.arange(len(docs)), dele)
+    if not alive.any():
+        return {"seg": seg, "n_docs": 0, "status": _DROPPED}
     norm_of = docs["norm"].to_numpy().astype(np.int64)
-    live = docs.filter(pa.array(~np.isin(np.arange(len(docs)), dele))).combine_chunks()
+    live = docs.filter(pa.array(alive)).combine_chunks()
     docs_tbl = pa.table({
         **{c: live[c] for c in (*meta.key_cols, *meta.keyword_cols)},
         "doc_local": np.arange(len(live), dtype=np.int64),

@@ -70,20 +70,22 @@ def _union_postings(
     return docs, tfs.astype(np.int64), pp
 
 
-def _sum_postings(
-    parts: list[tuple[np.ndarray, np.ndarray]],
-) -> tuple[np.ndarray, np.ndarray]:
+def _sum_postings(parts: list[tuple]) -> tuple[np.ndarray, np.ndarray]:
     """Doc-level MERGE of several terms' postings summing term freqs — the
     ``L/search/SynonymQuery`` FreqBoostTermScorer-over-DisiPriorityQueue
-    analog: docs = union, tf = Σ member tfs per doc. No positions needed."""
-    live = [(d, t) for d, t in parts if d.size]
+    analog, and SpanOrQuery's occurrence counter (each member occurrence is
+    a distinct width-0 span: positions are unique per occurrence under the
+    index chain, so no dedup is needed). ``parts``: decoded (docs, tfs, ...)
+    tuples; docs = union, tf = Σ member tfs per doc as int64. No positions
+    needed."""
+    live = [(p[0], p[1]) for p in parts if p[0].size]
     if not live:
         e = np.empty(0, dtype=np.int64)
         return e, e
     if len(live) == 1:
-        return live[0]
+        return live[0][0], live[0][1].astype(np.int64)
     alld = np.concatenate([d for d, _ in live])
-    allt = np.concatenate([t for _, t in live])
+    allt = np.concatenate([t for _, t in live]).astype(np.int64)
     docs, inv = np.unique(alld, return_inverse=True)
     tfs = np.zeros(len(docs), dtype=np.int64)
     np.add.at(tfs, inv, allt)
@@ -770,25 +772,6 @@ def _span_not_freqs(
     return docs_i[keep], cnt[keep].astype(np.int64)
 
 
-def _span_or_freqs(parts: list[tuple]) -> tuple[np.ndarray, np.ndarray]:
-    """SpanOrQuery occurrence counter: per-doc Σ of member term freqs
-    (each member occurrence is a distinct width-0 span — positions are
-    unique per occurrence under the index chain, so no dedup is needed).
-    One concatenate + unique + add.at over the member posting lists."""
-    live = [(p[0], p[1]) for p in parts if p[0].size]
-    if not live:
-        e = np.empty(0, dtype=np.int64)
-        return e, e
-    if len(live) == 1:
-        return live[0][0], live[0][1].astype(np.int64)
-    alld = np.concatenate([d for d, _ in live])
-    allt = np.concatenate([t for _, t in live]).astype(np.int64)
-    docs, inv = np.unique(alld, return_inverse=True)
-    tfs = np.zeros(len(docs), dtype=np.int64)
-    np.add.at(tfs, inv, allt)
-    return docs, tfs
-
-
 def _sloppy_phrase_freqs(
     docs_per_term: list[np.ndarray],
     pos_flat_per_term: list[np.ndarray],
@@ -950,7 +933,7 @@ def _clause_postings(c: CompiledClause, dec) -> tuple[np.ndarray, np.ndarray]:
     if c.kind in ("synonym", "or_group"):
         # SynonymQuery: merged postings, summed tf, one score under the
         # clause's max-df weight
-        return _sum_postings([dec(t)[:2] for t in c.terms])
+        return _sum_postings([dec(t) for t in c.terms])
     if c.kind == "span_near":
         return _span_near_freqs_2term(dec(c.terms[0]), dec(c.terms[1]), c.slop)
     if c.kind == "span_near_unordered":
@@ -983,7 +966,7 @@ def _clause_postings(c: CompiledClause, dec) -> tuple[np.ndarray, np.ndarray]:
         # SpanOrQuery (L/search/spans/SpanOrQuery): every member occurrence
         # is a width-0 span (slop factor 1), positions are unique per
         # occurrence, so tf = Σ member tfs per doc — no position decode
-        return _span_or_freqs([dec(t) for t in c.terms])
+        return _sum_postings([dec(t) for t in c.terms])
     if c.kind == "multiphrase":
         # each slot's member postings union into one pseudo-term, then the
         # exact-phrase intersect runs unchanged over the unions

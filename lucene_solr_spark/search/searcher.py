@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import FloatType, LongType, StringType, StructField, StructType
 
 from ..index.build import ANALYZERS, IndexMeta, read_term_stats
+from ..index.updates import read_tombstones, tombstone_files
 from .bm25 import BM25, CollectionStats, Similarity
 from .kernels import count_segment_matches, score_segment_exact, score_segment_wand
 from .query import BooleanSpec, CompiledQuery, compile_query, parse_fixture_query
@@ -42,12 +43,6 @@ from .segtask import PostingsSource, SegmentFiles, fetch_keys, open_segment
 
 _EMPTY_LOCALS = np.empty(0, dtype=np.int64)
 
-# Above this many tombstones the driver-collect + closure-broadcast path is
-# replaced by DISTRIBUTED per-segment reads: each scoring task reads only its
-# own segment's rows from the tombstone files, so driver memory stays O(1)
-# and a task holds only its segment's deletes — the 10^12-docs-with-churn
-# shape.
-TOMB_DRIVER_BUDGET = 200_000
 # Bloom sidecar: hold all segment blooms on the driver only below this many
 # bytes (~64 KiB per 50k-term segment ⇒ ~1000 segments); above it the admit
 # test runs distributed per term set and only seg ids cross to the driver.
@@ -192,7 +187,7 @@ class IndexSearcher:
         """``commit=N`` opens the index AT a retained commit point — the
         ``DirectoryReader.open(IndexCommit)`` analog (``index/commits.py``):
         every scan is seg-partition-pruned to the commit's live segments,
-        only the commit's tombstone files load, and scoring stats bind from
+        only the commit's tombstone files are read, and scoring stats bind from
         the commit's retained stats tables, so answers are bitwise what the
         live index returned at capture time regardless of later appends /
         updates / deletes."""
@@ -207,6 +202,13 @@ class IndexSearcher:
 
             self._commit = load_commit(index_dir, commit)
             self._stats_root = self._commit.stats_dir
+        # the view's tombstone files (a directory listing at open, no read):
+        # the commit's recorded list, else the index's current files; each
+        # scoring task reads its own segment's through read_tombstones
+        self._tomb_files = (
+            self._commit.tomb_files if self._commit is not None
+            else tombstone_files(index_dir)
+        )
         self.postings = spark.read.parquet(os.path.join(index_dir, "postings"))
         self.seg_norms = spark.read.parquet(os.path.join(index_dir, "seg_norms"))
         # docs are stored with SEGMENT-LOCAL ids; expose the global view
@@ -249,62 +251,13 @@ class IndexSearcher:
             self._tables[sim] = sim.table(self.stats)
         return self._tables[sim]
 
-    @cached_property
-    def _tomb_files(self) -> tuple[str, ...]:
-        """This view's tombstone files: for a commit-point searcher only the
-        files recorded at capture time (later delete batches append new
-        files, which must stay invisible), else every file of the index."""
-        from ..index.updates import tombstones_path
-
-        if self._commit is not None:
-            return tuple(
-                os.path.join(self.index_dir, f) for f in self._commit.tomb_files
-            )
-        p = tombstones_path(self.index_dir)
-        return tuple(sorted(
-            glob.glob(os.path.join(p, "*.parquet"))
-            + glob.glob(os.path.join(p, "*", "*.parquet"))
-        ))
-
-    @cached_property
-    def _tomb_df(self) -> DataFrame | None:
-        return self.spark.read.parquet(*self._tomb_files) if self._tomb_files else None
-
-    @cached_property
-    def _tomb_count(self) -> int:
-        return 0 if self._tomb_df is None else int(self._tomb_df.count())
-
-    @cached_property
-    def _tombs_distributed(self) -> bool:
-        """The delete set exceeds TOMB_DRIVER_BUDGET: scoring tasks read
-        their own segment's tombstone rows instead of a closure map."""
-        return self._tomb_df is not None and self._tomb_count > TOMB_DRIVER_BUDGET
-
-    @cached_property
-    def deleted_by_seg(self) -> dict[int, np.ndarray]:
-        """Per-segment tombstoned local ids (PendingDeletes live-docs
-        analog) — empty when the index has no deletes. Loaded once per
-        searcher; shipped inside the scoring task closure — ONLY while the
-        delete set fits the driver budget. Beyond TOMB_DRIVER_BUDGET this
-        map stays empty and each scoring task reads its own segment's rows
-        from ``_tomb_files`` instead, fully distributed."""
-        if self._tomb_df is None or self._tombs_distributed:
-            return {}
-        from ..index.updates import tombstones_by_seg
-
-        # derive from _tomb_df (not the directory) so a commit-point
-        # searcher sees exactly its recorded delete files
-        return tombstones_by_seg(self._tomb_df)
-
     def _segment_files(self, sources: tuple[PostingsSource, ...]) -> SegmentFiles:
         """What a scoring task needs besides the query: postings sources,
-        key columns, and the deletes by whichever path the budget picks."""
-        big = self._tombs_distributed
+        this view's tombstone files and the key columns."""
         return SegmentFiles(
             index_dir=self.index_dir,
             sources=sources,
-            deleted_by_seg=None if big else self.deleted_by_seg,
-            tomb_files=self._tomb_files if big else (),
+            tomb_files=self._tomb_files,
             key_cols=tuple(self.meta.key_cols),
         )
 
@@ -340,7 +293,7 @@ class IndexSearcher:
         budget (the common case: ~64 KiB per 50k-term segment). Above the
         budget this stays None and ``bloom_live_segs`` probes DISTRIBUTED
         (one tiny mapInPandas job per new term set, bits never reach the
-        driver) — the same two-tier shape as the tombstone map."""
+        driver)."""
         if self._bloom_dir is None:
             return None
         import pyarrow.parquet as _pq  # driver-read-ok (size-gated below)
@@ -753,7 +706,8 @@ class IndexSearcher:
     def termfreq_df(self, term: str) -> DataFrame:
         """``termfreq(field, term)`` ValueSource as a (doc_id, tf) DataFrame:
         one term-pruned postings scan, decode-only kernel (no norms, no
-        weights). Tombstoned docs are excluded. Docs without the term are
+        weights). Tombstoned docs are excluded, each task reading its
+        segments' deletes through read_tombstones. Docs without the term are
         simply absent (left-join + coalesce(0) at the consumer)."""
         from ..index.codec import decode_postings
 
@@ -761,21 +715,17 @@ class IndexSearcher:
             int(r.seg): int(r.base)
             for r in self.seg_norms.select("seg", "base").collect()
         }
-        dele = self.deleted_by_seg or None
-        big_tomb = dele is None and self._tomb_df is not None
+        index_dir, tomb_files = self.index_dir, self._tomb_files
 
         def kern(iterator):
             for pdf in iterator:
                 for seg, blocks in zip(pdf["seg"], pdf["blocks"]):
                     docs, tfs = decode_postings(list(blocks))[:2]
-                    if dele:
-                        d = dele.get(int(seg))
-                        if d is not None and d.size:
-                            keep = ~np.isin(docs, d, assume_unique=True)
-                            docs, tfs = docs[keep], tfs[keep]
+                    d = read_tombstones(index_dir, int(seg), tomb_files)
+                    if d is not None:
+                        keep = ~np.isin(docs, d, assume_unique=True)
+                        docs, tfs = docs[keep], tfs[keep]
                     yield pd.DataFrame({
-                        "seg": np.full(len(docs), int(seg), dtype=np.int32),
-                        "doc_local": docs,
                         "doc_id": docs + bases[int(seg)],
                         "tf": tfs,
                     })
@@ -784,12 +734,7 @@ class IndexSearcher:
             self.postings.filter(F.col("term") == F.lit(term))
             .select("seg", "blocks")
         )
-        out = posts.mapInPandas(kern, "seg int, doc_local long, doc_id long, tf long")
-        if big_tomb:
-            # delete set over the driver budget: distributed anti-join on
-            # (seg, doc_local) instead of the closure map
-            out = out.join(self._tomb_df, ["seg", "doc_local"], "left_anti")
-        return out.select("doc_id", "tf")
+        return posts.mapInPandas(kern, "doc_id long, tf long")
 
     def termfreq_topk(self, term: str, k: int = 10) -> DataFrame:
         """Function query as THE ranking function (``S/search/

@@ -8,8 +8,8 @@ segments' files itself:
 - the ``postings/seg=N`` rows of the query's terms (parquet row-group
   pruning on the term-sorted files), from one or more postings sources;
 - the ``seg_norms/seg=N`` row (base, norm bytes);
-- the segment's tombstones — from the closure map while the delete set is
-  driver-sized, else from the searcher's tombstone files, filtered to N;
+- the segment's tombstones, through ``index/updates.read_tombstones``
+  restricted to the searcher's snapshot of tombstone files;
 - for a keyed top-k, the key columns of only its ≤k survivors from
   ``docs/seg=N`` (fetch-fields-late without a join).
 
@@ -30,6 +30,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq  # executor-read
 
+from ..index.updates import read_tombstones
+
 
 @dataclass(frozen=True)
 class PostingsSource:
@@ -45,13 +47,11 @@ class PostingsSource:
 @dataclass(frozen=True)
 class SegmentFiles:
     """Everything a task needs to open a segment — built on the driver,
-    shipped in the task closure. Tombstones come from ``deleted_by_seg``
-    (driver-sized delete sets) or, above the driver budget, from
-    ``tomb_files``, each task reading only its own segment's rows."""
+    shipped in the task closure. ``tomb_files``: the searcher's tombstone
+    files (index-relative); each task reads only its own segment's."""
 
     index_dir: str
     sources: tuple[PostingsSource, ...]
-    deleted_by_seg: dict[int, np.ndarray] | None = None
     tomb_files: tuple[str, ...] = ()
     key_cols: tuple[str, ...] = ()
 
@@ -83,20 +83,6 @@ def read_postings(src: PostingsSource, seg: int) -> dict[str, list]:
     return dict(zip(terms, t["blocks"].to_pylist()))
 
 
-def read_tombstones(files: SegmentFiles, seg: int) -> np.ndarray | None:
-    """Sorted unique deleted local ids of ``seg``, or None."""
-    if files.deleted_by_seg is not None:
-        return files.deleted_by_seg.get(seg)
-    parts = [
-        pq.read_table(  # executor-read
-            f, columns=["doc_local"], filters=[("seg", "=", seg)]
-        )["doc_local"].to_numpy()
-        for f in files.tomb_files
-    ]
-    d = np.unique(np.concatenate(parts).astype(np.int64)) if parts else None
-    return d if d is not None and d.size else None
-
-
 def open_segment(files: SegmentFiles, seg: int) -> Segment | None:
     """The segment's postings, norms and deletes — None when none of the
     query's terms occur in it (no kernel can match there)."""
@@ -112,7 +98,7 @@ def open_segment(files: SegmentFiles, seg: int) -> Segment | None:
         base=int(norms["base"][0].as_py()),
         norms=np.frombuffer(norms["norms"][0].as_py(), dtype=np.uint8),
         term_blocks=term_blocks,
-        dele=read_tombstones(files, seg),
+        dele=read_tombstones(files.index_dir, seg, files.tomb_files),
     )
 
 

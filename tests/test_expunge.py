@@ -24,7 +24,7 @@ from lucene_solr_spark.index.commits import commit_point, list_commits
 from lucene_solr_spark.index.updates import (
     delete_docs,
     expunge_deletes,
-    load_tombstones,
+    tombstone_files,
 )
 from lucene_solr_spark.search.searcher import IndexSearcher
 from test_segment_task import _job_counts
@@ -69,7 +69,7 @@ def test_expunge_preserves_ranked_results_bitwise(spark, corpus, tmp_path):
     after = _ranked(spark, idx)
     pd.testing.assert_frame_equal(after, before, check_exact=True)
 
-    assert load_tombstones(spark, idx) == {}
+    assert tombstone_files(idx) == ()
     live = spark.read.parquet(os.path.join(idx, "docs")).count()
     assert live == len(corpus) - n
     # the index is structurally clean after the rewrite
@@ -188,8 +188,9 @@ def test_expunged_segment_equals_fresh_build_of_its_live_rows(spark, corpus, tmp
 
 
 def test_expunge_runs_one_rewrite_stage(spark, corpus, tmp_path):
-    """Expunge is the tombstone load, ONE dealt rewrite stage and the stats
-    refresh — no shuffle-and-write jobs per index table."""
+    """Expunge is ONE dealt rewrite stage, whose tasks read their own
+    segment's tombstones, and the stats refresh — no tombstone load and no
+    shuffle-and-write jobs per index table."""
     idx = str(tmp_path / "idx")
     _keyword_index_with_deletes(spark, corpus, idx)
     sc = spark.sparkContext

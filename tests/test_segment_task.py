@@ -182,3 +182,43 @@ def test_commit_point_tasks_visit_only_commit_segments(spark, sentinel_index, tm
     q = at.compile(at.parse("or3", OR3), k=10)
     seen = _dealt(monkeypatch, at, lambda: at.search(q, with_keys=True).collect())
     assert [segs for segs, _ in seen] == [commit_segs]
+
+
+def test_deletes_add_no_jobs_to_open_and_first_search(spark, sentinel_index, tmp_path):
+    """Deletes are read inside the tasks that work on their segment: opening
+    a searcher plus its first keyed search launches as many Spark jobs on
+    an index with deletes as before the delete, and refreshing the stats
+    with deletes launches no more jobs than without them (a driver-collected
+    delete map and broadcast removal pass took 13)."""
+    import shutil
+
+    from lucene_solr_spark.index.updates import delete_docs, refresh_stats
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(sentinel_index, idx)
+    sc = spark.sparkContext
+
+    def jobs(gid, run):
+        sc.setJobGroup(gid, gid)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return _job_counts(sc, gid)[0]
+
+    def open_and_search():
+        s = IndexSearcher(spark, idx)
+        assert len(s.search(s.parse("or3", OR3), k=10, with_keys=True).collect()) == 10
+
+    clean = jobs("tomb-open-clean", open_and_search)
+    refresh_clean = jobs("tomb-refresh-clean", lambda: refresh_stats(spark, idx))
+    victims = (
+        spark.read.parquet(os.path.join(idx, "docs"))
+        .filter("turn_idx % 2 = 0").select("conv_id", "turn_idx")
+    )
+    assert delete_docs(spark, idx, victims) > 0
+    assert IndexSearcher(spark, idx)._tomb_files
+    assert jobs("tomb-open-deleted", open_and_search) == clean
+    refresh = jobs("tomb-refresh-deleted", lambda: refresh_stats(spark, idx))
+    assert refresh < 13 and refresh <= refresh_clean, (refresh, refresh_clean)

@@ -194,3 +194,14 @@ def test_batched_analyzer_parity_property():
         assert frame.attrs["doc_len"].tolist() == lens
 
     inner()
+
+
+def test_utf8_offsets_refuse_int32_overflow():
+    """Token byte lengths summing past 2**31 − 1 raise instead of wrapping
+    the int32 Arrow offsets (lengths only — no 2 GiB buffer)."""
+    from lucene_solr_spark.analysis.uax29 import utf8_offsets
+
+    ok = utf8_offsets(np.array([2**30, 2**30 - 1], dtype=np.int64))
+    assert ok.dtype == np.int32 and ok.tolist() == [0, 2**30, 2**31 - 1]
+    with pytest.raises(ValueError, match="2\\*\\*31"):
+        utf8_offsets(np.array([2**30, 2**30, 5], dtype=np.int64))

@@ -15,7 +15,15 @@ import pytest
 from lucene_solr_spark.datagen import generate_queries, generate_transcripts
 from lucene_solr_spark.index.build import append_batch, build_index
 from lucene_solr_spark.index.merge import merge_segments
-from lucene_solr_spark.index.updates import delete_docs, load_tombstones, update_docs
+from lucene_solr_spark.index.updates import (
+    TombstoneLayoutError,
+    delete_docs,
+    read_tombstones,
+    tombstone_files,
+    tombstone_segs,
+    tombstones_path,
+    update_docs,
+)
 from lucene_solr_spark.search.searcher import IndexSearcher
 
 
@@ -42,6 +50,14 @@ def _result_sets(spark, index_dir, n_queries=12):
 @pytest.fixture(scope="module")
 def corpus():
     return generate_transcripts(100)
+
+
+def _n_deleted(index_dir):
+    """Deleted docs of the index, counted through the one reader."""
+    return sum(
+        len(read_tombstones(index_dir, seg))
+        for seg in tombstone_segs(tombstone_files(index_dir))
+    )
 
 
 def test_update_equals_fresh_build(spark, corpus, tmp_path):
@@ -76,8 +92,7 @@ def test_delete_hides_docs_and_refreshes_stats(spark, corpus, tmp_path):
     n_del = delete_docs(spark, idx, spark.createDataFrame(victims))
     assert n_del == len(victims)
 
-    tomb = load_tombstones(spark, idx)
-    assert sum(len(a) for a in tomb.values()) == n_del
+    assert _n_deleted(idx) == n_del
 
     s1 = IndexSearcher(spark, idx)
     assert s1.stats.doc_count == n0 - n_del
@@ -183,7 +198,7 @@ def test_merge_carries_tombstones(spark, corpus, tmp_path):
 
     merge_segments(spark, src, merged, n_out=2, salt=2)
     s = IndexSearcher(spark, merged)
-    assert sum(len(a) for a in s.deleted_by_seg.values()) == len(victims)
+    assert _n_deleted(merged) == len(victims)
     qs = generate_queries()[:6]
     compiled = s.compile_many({
         str(i): (s.parse(q["qtype"], q["terms"], q["min_should"]), 50)
@@ -232,63 +247,55 @@ def test_delete_twice_is_idempotent(spark, corpus, tmp_path):
     assert n1 > 0
     rows_after_first = sum(
         len(pd.read_parquet(f))
-        for f in _glob.glob(os.path.join(idx, "tombstones", "*.parquet"))
+        for f in _glob.glob(os.path.join(idx, "tombstones", "**", "*.parquet"), recursive=True)
     )
     n2 = delete_docs(spark, idx, victims, refresh=False)
     assert n2 == 0
     rows_after_second = sum(
         len(pd.read_parquet(f))
-        for f in _glob.glob(os.path.join(idx, "tombstones", "*.parquet"))
+        for f in _glob.glob(os.path.join(idx, "tombstones", "**", "*.parquet"), recursive=True)
     )
     assert rows_after_second == rows_after_first == n1
 
 
-def test_distributed_tombstones_above_budget(spark, corpus, tmp_path, monkeypatch):
-    """When the delete set exceeds TOMB_DRIVER_BUDGET, the searcher must NOT
-    build the driver-side per-segment map (deleted_by_seg stays empty) and
-    each scoring task reads its own segment's tombstones instead — with
-    results IDENTICAL to the driver-map path. A commit-point searcher opened
-    after a later delete batch honours only its recorded tombstone files on
-    both paths."""
+def test_tasks_read_segment_tombstones(spark, corpus, tmp_path):
+    """Each scoring task reads its own segment's tombstone files: WAND ≡
+    exact, no victim surfaces, and the count kernel agrees. A commit-point
+    searcher opened after a later delete batch reads only the files its
+    commit recorded."""
     from lucene_solr_spark.index.commits import commit_point
-    from lucene_solr_spark.search import searcher as searcher_mod
     from lucene_solr_spark.search.searcher import IndexSearcher
 
-    idx = str(tmp_path / "bigdel")
+    idx = str(tmp_path / "segdel")
     build_index(spark, spark.createDataFrame(corpus), idx, n_segments=3)
     victims = spark.createDataFrame(
         corpus[corpus.turn_idx % 3 == 0][["conv_id", "turn_idx"]]
     )
     n = delete_docs(spark, idx, victims)
     assert n > 0
+    # one file per segment for the batch, under tombstones/seg=N/
+    assert len(tombstone_files(idx)) == len(tombstone_segs(tombstone_files(idx))) == 3
 
-    small = IndexSearcher(spark, idx)          # default budget: driver map
-    assert small.deleted_by_seg               # non-empty map
-    monkeypatch.setattr(searcher_mod, "TOMB_DRIVER_BUDGET", 0)
-    big = IndexSearcher(spark, idx)            # forced distributed path
-    assert big.deleted_by_seg == {}            # no driver collect
+    s = IndexSearcher(spark, idx)
     victim_ids = {
-        r.doc_id for r in big.docs.join(victims, ["conv_id", "turn_idx"]).collect()
+        r.doc_id for r in s.docs.join(victims, ["conv_id", "turn_idx"]).collect()
     }
-    or2 = big.compile(big.parse("or2", ["merge", "batch"]), k=1 << 30)
-    hit_ids = {r.doc_id for r in big.hits(or2, mode="exact").collect()}
+    or2 = s.compile(s.parse("or2", ["merge", "batch"]), k=1 << 30)
+    hit_ids = {r.doc_id for r in s.hits(or2, mode="exact").collect()}
     assert hit_ids and not (hit_ids & victim_ids)  # tasks applied the deletes
 
-    for qtype, terms in [("or2", ["merge", "batch"]), ("term", ["stream"])]:
-        spec = small.parse(qtype, terms)
-        a = small.search(spec, k=25, mode="wand").toPandas()
-        b = big.search(big.parse(qtype, terms), k=25, mode="wand").toPandas()
-        pd.testing.assert_frame_equal(a, b)
-        ex = big.search(big.parse(qtype, terms), k=25, mode="exact").toPandas()
-        pd.testing.assert_frame_equal(b, ex)
-    # count kernel also honors the distributed tombstones
-    v1 = small.total_hits(small.parse("or2", ["merge", "batch"]), threshold=10**6)
-    v2 = big.total_hits(big.parse("or2", ["merge", "batch"]), threshold=10**6)
-    assert v1 == v2
+    queries = [("or2", ["merge", "batch"]), ("term", ["stream"])]
+    for qtype, terms in queries:
+        wand = s.search(s.parse(qtype, terms), k=25, mode="wand").toPandas()
+        ex = s.search(s.parse(qtype, terms), k=25, mode="exact").toPandas()
+        pd.testing.assert_frame_equal(wand, ex)
+    # the count kernel reads the same deletes
+    v1 = s.total_hits(s.parse("or2", ["merge", "batch"]), threshold=10**6)
+    assert v1 == (len(hit_ids), "EQ")
 
     want = {
-        qtype: small.search(small.parse(qtype, terms), k=25, with_keys=True).toPandas()
-        for qtype, terms in [("or2", ["merge", "batch"]), ("term", ["stream"])]
+        qtype: s.search(s.parse(qtype, terms), k=25, with_keys=True).toPandas()
+        for qtype, terms in queries
     }
     gen = commit_point(idx)
     victims2 = spark.createDataFrame(
@@ -297,14 +304,35 @@ def test_distributed_tombstones_above_budget(spark, corpus, tmp_path, monkeypatc
     assert delete_docs(spark, idx, victims2) > 0
     live = IndexSearcher(spark, idx)
     assert live.total_hits(live.parse("or2", ["merge", "batch"]), threshold=10**6)[0] < v1[0]
-    for budget in (10**9, 0):
-        monkeypatch.setattr(searcher_mod, "TOMB_DRIVER_BUDGET", budget)
-        at = IndexSearcher(spark, idx, commit=gen)
-        assert bool(at.deleted_by_seg) == (budget > 0)
-        for qtype, terms in [("or2", ["merge", "batch"]), ("term", ["stream"])]:
-            got = at.search(at.parse(qtype, terms), k=25, with_keys=True).toPandas()
-            pd.testing.assert_frame_equal(got, want[qtype])
-        assert at.total_hits(at.parse("or2", ["merge", "batch"]), threshold=10**6) == v1
+    at = IndexSearcher(spark, idx, commit=gen)
+    for qtype, terms in queries:
+        got = at.search(at.parse(qtype, terms), k=25, with_keys=True).toPandas()
+        pd.testing.assert_frame_equal(got, want[qtype])
+    assert at.total_hits(at.parse("or2", ["merge", "batch"]), threshold=10**6) == v1
+
+
+def test_flat_tombstone_file_is_refused(spark, corpus, tmp_path):
+    """A tombstone file directly under ``tombstones/`` (the layout before
+    deletes were per segment) raises a typed error wherever the index is
+    opened or refreshed — its deletes are never silently dropped."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lucene_solr_spark.index.updates import refresh_stats
+
+    idx = str(tmp_path / "flat")
+    build_index(spark, spark.createDataFrame(corpus), idx, n_segments=2)
+    os.makedirs(tombstones_path(idx))
+    pq.write_table(
+        pa.table({"seg": pa.array([0], pa.int32()), "doc_local": pa.array([0], pa.int64())}),
+        os.path.join(tombstones_path(idx), "part-00000.parquet"),
+    )
+    with pytest.raises(TombstoneLayoutError):
+        IndexSearcher(spark, idx)
+    with pytest.raises(TombstoneLayoutError):
+        refresh_stats(spark, idx)
+    with pytest.raises(TombstoneLayoutError):
+        tombstone_segs(["tombstones/part-00000.parquet"])  # a commit's recorded list
 
 
 def test_atomic_remove_add_distinct_equal_fresh_build(spark, corpus, tmp_path):
