@@ -79,7 +79,7 @@ def _recipe_dir(sf_dir: str, analyzer: str, recipe: IndexRecipe) -> str:
     # bump the version token whenever the on-disk index format changes
     # (cache dirs are content-addressed; a stale format must not resume)
     tag = hashlib.md5(
-        f"{os.path.abspath(src)}|{os.path.getmtime(src)}|{analyzer}|{recipe!r}|v8".encode()
+        f"{os.path.abspath(src)}|{os.path.getmtime(src)}|{analyzer}|{recipe!r}|v9".encode()
     ).hexdigest()[:16]
     return _cache_dir(f"docs-{analyzer}-{tag}")
 
@@ -1500,11 +1500,7 @@ class DocumentsEngine:
         if not row:
             return self.spark.createDataFrame([], schema)
         seg = int(row[0].seg)
-        base = {
-            int(r.seg): int(r.base)
-            for r in s.seg_norms.select("seg", "base").collect()
-        }
-        local = int(row[0].doc_id) - base[seg]
+        local = int(row[0].doc_id) - s.layout[seg][0]
         posts = s.postings.filter(
             (F.col("seg") == seg)
             & ~F.col("term").startswith(KEYWORD_PREFIX)
@@ -1873,14 +1869,9 @@ class DocumentsEngine:
         schema = "rank int, doc_id long, score float"
         if not frows:
             return self.spark.createDataFrame([], schema)
-        gdocs = np.sort(np.array([r.doc_id for r in frows], dtype=np.int64))
-        layout = s.seg_norms.select("base", "n").collect()
-        fbb = {
-            int(r.base): gdocs[(gdocs >= r.base) & (gdocs < r.base + r.n)] - r.base
-            for r in layout
-        }
         rr = s.search(
-            s.parse(rr_qtype, rr_terms), k=len(frows), filter_by_base=fbb
+            s.parse(rr_qtype, rr_terms), k=len(frows),
+            filter_by_base=s.by_base(r.doc_id for r in frows),
         )
         rrmap = {int(r.doc_id): np.float32(r.score) for r in rr.collect()}
         w = np.float32(weight)

@@ -21,8 +21,12 @@ One writer: every segment — built, appended, rewritten by
 ``updates.expunge_deletes`` or merged by ``merge.merge_segments`` — is
 written by ``write_segment``, which owns the segment layout, its content
 hash and its commit order (docs → seg_norms → postings → bloom → manifest
-marker last). Both build shapes
-run the same per-segment task, ``_resume_or_invert``, on Arrow batches.
+marker last). Every segment file is written once, before its marker, and
+holds segment-local ids only; the manifest is the segment table, and
+``read_manifest`` derives each segment's base (the exclusive cumsum of
+``n_docs`` in seg order) when a reader opens — no base is stored. Both
+build shapes run the same per-segment task, ``_resume_or_invert``, on
+Arrow batches.
 
 Design decisions for 100 TB scale:
 - **One pass over text.** Analysis is the dominant cost; the kernel computes
@@ -54,9 +58,11 @@ import glob
 import hashlib
 import json
 import os
+import re
 import time
 import uuid
 from dataclasses import dataclass
+from typing import Iterable
 
 import numpy as np
 import pandas as pd
@@ -130,6 +136,10 @@ MANIFEST_SCHEMA = (
     "n_postings long, sum_len long, content_hash string, status string, "
     "build_secs double, key_min string, key_max string"
 )
+MANIFEST_COLS = [c.split()[0] for c in MANIFEST_SCHEMA.split(", ")]
+# every segment's files, one directory per segment under each root (the
+# manifest marker and the tombstones are kept apart)
+SEGMENT_ROOTS = ("postings", "docs", "seg_norms", "bloom")
 # manifest ``status`` of a committed segment whose recorded key range this
 # run's range partitioning did not reproduce: build_index rebuilds fresh
 REFUSED = "refused"
@@ -263,25 +273,51 @@ def stamp_finalize_done(index_dir: str) -> None:
     os.replace(tmp, os.path.join(index_dir, _SENTINEL))
 
 
-def _read_committed_manifest(index_dir: str) -> pd.DataFrame | None:
-    """Driver-side read of the (tiny, one row each) manifest markers —
-    seg-sorted, bases re-derived by the cumsum rule every writer uses."""
+def read_manifest(index_dir: str, segs: Iterable[int] | None = None) -> pd.DataFrame:
+    """The segment table: one row per committed segment (its manifest
+    marker), seg-ordered, with ``base`` the exclusive cumsum of ``n_docs``
+    over the rows returned. Bases are never stored — this is the only code
+    that lists segments or derives them (Lucene's ``SegmentInfos`` read and
+    the leaf docBases a reader works out when it opens). ``segs`` restricts
+    the rows before the cumsum, so a commit view gets the layout it had at
+    capture time; a requested seg with no marker raises
+    ``FileNotFoundError``. No marker at all ⇒ an empty table."""
     mdir = os.path.join(index_dir, "manifest")
-    if not os.path.isdir(mdir):
-        return None
-    rows = [
-        pq.read_table(os.path.join(mdir, f)).to_pandas()
-        for f in sorted(os.listdir(mdir))
-        if f.startswith("seg=") and f.endswith(".parquet")
-    ]
+    if segs is None:
+        segs = sorted(
+            int(m.group(1))
+            for f in (os.listdir(mdir) if os.path.isdir(mdir) else ())
+            if (m := re.fullmatch(r"seg=(\d+)\.parquet", f))
+        )
+    rows = []
+    for seg in sorted(int(s) for s in segs):
+        path = os.path.join(mdir, f"seg={seg}.parquet")
+        if not os.path.exists(path):
+            raise FileNotFoundError(f"segment {seg} has no manifest marker under {mdir}")
+        rows.append(pq.read_table(path).to_pandas())
     if not rows:
-        return None
-    out = pd.concat(rows, ignore_index=True).sort_values("seg").reset_index(drop=True)
-    for c in ("key_min", "key_max"):  # pre-v2 markers lack the range
-        if c not in out.columns:
-            out[c] = ""
+        return pd.DataFrame(columns=MANIFEST_COLS)
+    out = pd.concat(rows, ignore_index=True)
     out["base"] = out["n_docs"].cumsum() - out["n_docs"]
     return out
+
+
+def global_docs(spark: SparkSession, index_dir: str, manifest: pd.DataFrame) -> DataFrame:
+    """The docs table of ``manifest``'s segments (a ``read_manifest``
+    result) with the global ``doc_id`` = ``doc_local`` + base: a
+    partition-pruned scan joined to a broadcast local relation of
+    (seg, base)."""
+    segs = [int(s) for s in manifest["seg"]]
+    bases = spark.createDataFrame(
+        list(zip(segs, (int(b) for b in manifest["base"]))), "seg int, base long"
+    )
+    return (
+        spark.read.parquet(os.path.join(index_dir, "docs"))
+        .filter(F.col("seg").isin(segs))
+        .join(F.broadcast(bases), "seg")
+        .withColumn("doc_id", F.col("doc_local") + F.col("base"))
+        .drop("base")
+    )
 
 
 def open_committed_index(spark: SparkSession, index_dir: str) -> DataFrame | None:
@@ -300,13 +336,11 @@ def open_committed_index(spark: SparkSession, index_dir: str) -> DataFrame | Non
         return None
     if not want or want != _state_fingerprint(index_dir):
         return None
-    out = _read_committed_manifest(index_dir)
-    if out is None:
+    out = read_manifest(index_dir)
+    if not len(out):
         return None
-    out = out.copy()
     out["status"] = "opened"
-    cols = [c.split()[0] for c in MANIFEST_SCHEMA.split(", ")]
-    return spark.createDataFrame(out[cols])
+    return spark.createDataFrame(out[MANIFEST_COLS])
 
 
 def _invert_partition(
@@ -324,7 +358,7 @@ def _invert_partition(
 
     DocIDs are SEGMENT-LOCAL (0..n-1 in key order). Global IDs are
     ``local + segment base`` where bases are the cumulative per-segment row
-    counts, computed AFTER the single build pass from the manifest —
+    counts, derived from the manifest by ``read_manifest`` when read —
     avoiding the persist + count prepass an up-front global assignment
     would need (one less full materialization of the corpus; exactly
     Lucene's per-segment id + base design, ``MergeState.DocMap``-free
@@ -487,7 +521,8 @@ def write_segment(
     (doc streams), so a rewritten segment hashes like a fresh build of its
     rows. Files commit in a fixed order — docs, seg_norms, postings, bloom —
     and the manifest marker is written LAST: a segment is complete iff its
-    marker exists."""
+    marker exists. No file is written again after its marker: every one is
+    segment-local, and bases come from ``read_manifest``."""
     from .bloom import BLOOM_K, bloom_build
 
     def put(root: str, tbl: pa.Table) -> None:
@@ -513,12 +548,10 @@ def write_segment(
                     hasher.update(blk["docs_bytes"])
 
     put("docs", docs_tbl)
-    # dense per-segment norm byte array; base fixed up post-build once
-    # global counts are known
+    # dense per-segment norm byte array, segment-local like every file here
     lengths = docs_tbl["length"].to_numpy()
     n_rows = len(docs_tbl)
     put("seg_norms", pa.table({
-        "base": np.array([-1], dtype=np.int64),
         "n": np.array([n_rows], dtype=np.int64),
         "norms": pa.array(
             [docs_tbl["norm"].to_numpy().astype(np.uint8).tobytes()], type=pa.binary()
@@ -540,7 +573,7 @@ def write_segment(
     key_cols = list(meta.key_cols)
     manifest = {
         "seg": seg,
-        "base": -1,  # assigned post-build (cumsum of n_docs in seg order)
+        "base": -1,  # a placeholder: read_manifest derives every base
         "n_docs": n_rows,
         "doc_count": int((lengths > 0).sum()),
         "n_terms": len(term_rows),
@@ -592,8 +625,6 @@ def _resume_or_invert(
         return _invert_partition(parts, seg, meta, index_dir, key_types)
     row = pq.read_table(marker).to_pylist()[0]
     row["status"] = "resumed"
-    for c in ("key_min", "key_max"):  # pre-v2 markers lack the range
-        row.setdefault(c, "")
     return row
 
 
@@ -608,8 +639,8 @@ def _range_invert(
     key = segment assignment + within-segment order, consumed by a
     mapInArrow task per partition that runs ``_resume_or_invert`` on segment
     ``seg_offset + partition id``. DocIDs are segment-local, so no
-    persist/count prepass is needed — bases are derived from the manifest
-    afterwards (segment order == range order). Returns the (lazy) manifest
+    persist/count prepass is needed — ``read_manifest`` derives the bases
+    (segment order == range order). Returns the (lazy) manifest
     DataFrame."""
     from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
     from pyspark.sql.types import StructType
@@ -630,9 +661,8 @@ def _range_invert(
         # rebuilt seam. The unread partition's (first, last) key and row
         # count are checked against the recorded range; on mismatch the row
         # says REFUSED (no writes) and build_index rebuilds. (Costs one pass
-        # over the partition's batches — no analysis.) A pre-v2 marker of a
-        # non-empty segment has no range to check.
-        if row["status"] == "resumed" and (row["key_min"] or not row["n_docs"]):
+        # over the partition's batches — no analysis.)
+        if row["status"] == "resumed":
             first, last, n_here = "", "", 0
             for tbl in parts:
                 if len(tbl):
@@ -652,14 +682,19 @@ def _range_invert(
     )
 
 
-def _commit(spark: SparkSession, index_dir: str, manifest: pd.DataFrame) -> DataFrame:
-    """Every writer's commit tail: bases as the cumsum of ``n_docs`` in seg
-    order, written into the seg_norms files, then the global stats. Returns
-    the manifest DataFrame."""
-    out = manifest.sort_values("seg").reset_index(drop=True)
-    out["base"] = out["n_docs"].cumsum() - out["n_docs"]
-    _fixup_bases(index_dir, out)
+def _commit(
+    spark: SparkSession, index_dir: str, manifest: pd.DataFrame | None = None
+) -> DataFrame:
+    """Every writer's commit tail: the global stats, then the manifest
+    DataFrame — ``manifest``'s rows (this run's statuses), else the
+    markers', with the bases ``read_manifest`` derives. No segment file is
+    touched: each was written once, before its marker."""
     _finalize(spark, index_dir)
+    out = read_manifest(index_dir)
+    if manifest is not None:
+        bases = dict(zip(out["seg"], out["base"]))
+        out = manifest.sort_values("seg").reset_index(drop=True)
+        out["base"] = out["seg"].map(bases)
     return spark.createDataFrame(out)
 
 
@@ -842,37 +877,18 @@ def append_batch(
 ) -> DataFrame:
     """Append a new batch of docs as fresh segments (NRT soft-commit /
     ``TopicStream`` incremental-pull analog, SURVEY.md §2.H): new segments
-    get ids after the existing ones, global stats and bases are recomputed
-    (= reopening the NRT reader rebinds collection stats). Deletes/updates:
+    get ids after the existing ones and global stats are recomputed
+    (= reopening the NRT reader rebinds collection stats and bases). Deletes/updates:
     see index/updates.py (tombstones + delete-and-re-add on the doc key;
     _finalize subtracts tombstoned docs from the refreshed stats)."""
     meta = IndexMeta.load(index_dir)
     if n_segments is None:
         n_segments = spark.sparkContext.defaultParallelism
-    committed = _read_committed_manifest(index_dir)
-    offset = int(committed["seg"].max()) + 1 if committed is not None else 0
+    committed = read_manifest(index_dir)
+    offset = int(committed["seg"].max()) + 1 if len(committed) else 0
     _range_invert(df, meta, index_dir, n_segments, seg_offset=offset).toPandas()
-    # recompute bases + global stats over ALL segments (reader reopen)
-    return _commit(spark, index_dir, _read_committed_manifest(index_dir))
-
-
-def _fixup_bases(index_dir: str, manifest: pd.DataFrame) -> None:
-    """Write the derived global base into each (tiny) seg_norms file.
-    Idempotent — bases are a pure function of the manifest row counts.
-    Segment files are discovered by glob."""
-    for seg, base in manifest[["seg", "base"]].itertuples(index=False):
-        seg_dir = os.path.join(index_dir, "seg_norms", f"seg={seg}")
-        paths = sorted(glob.glob(os.path.join(seg_dir, "*.parquet")))
-        if not paths:
-            raise FileNotFoundError(f"no seg_norms file for seg={seg} under {seg_dir}")
-        t = pa.concat_tables([pq.read_table(p) for p in paths])
-        if len(t) == 1 and t.column("base")[0].as_py() == int(base):
-            continue
-        cols = {name: t.column(name) for name in t.column_names}
-        cols["base"] = pa.array([int(base)] * len(t), type=pa.int64())
-        _atomic_write(pa.table(cols), paths[0])
-        for p in paths[1:]:
-            os.remove(p)
+    # global stats over ALL segments (reader reopen)
+    return _commit(spark, index_dir)
 
 
 # the term dictionary's columns as _finalize (and split's per-child stats)
@@ -922,15 +938,18 @@ def _finalize(spark: SparkSession, index_dir: str) -> None:
     (``updates.tombstone_removals``: one dealt pass over the segments with
     deletes), are unioned into both sums — so post-update scores equal a
     fresh build over the live corpus, and a term left with no live doc
-    drops out of the dictionary."""
+    drops out of the dictionary. Only committed segments count: the
+    partition filter on the manifest's segments skips the files of a
+    segment whose marker was never written."""
     from .updates import tombstone_removals
 
+    committed = F.col("seg").isin([int(s) for s in read_manifest(index_dir)["seg"]])
     postings = spark.read.schema(POSTINGS_STATS_SCHEMA).parquet(
         os.path.join(index_dir, "postings")
-    ).select("term", "df_part", "ttf_part")
+    ).filter(committed).select("term", "df_part", "ttf_part")
     docs = spark.read.schema(DOCS_STATS_SCHEMA).parquet(
         os.path.join(index_dir, "docs")
-    ).select(
+    ).filter(committed).select(
         F.lit(1).cast("long").alias("n"),
         (F.col("length") > 0).cast("long").alias("has_field"),
         "length",

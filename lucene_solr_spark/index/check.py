@@ -3,13 +3,14 @@ surfaced as ``java -ea:org.apache.lucene... org.apache.lucene.index.CheckIndex``
 validate every structural invariant of an index the way Lucene's tool walks
 segments — terms dictionary order, posting-block integrity (doc monotonicity,
 stated vs decoded df/ttf, impact metadata max_tf/min_norm), position streams,
-norm tables, and the cross-segment base/stats bookkeeping.
+norm tables, and the cross-segment row-count/stats bookkeeping.
 
 Scale shape: one task per SEGMENT (Lucene's ``-threadCount`` parallelism is
-per-segment too) — the segment list is a tiny DataFrame, each task reads only
-its own postings/docs/seg_norms files with pyarrow and validates locally; no
-posting bytes ever cross the shuffle or the driver. Cross-segment checks
-(base offsets, global stats) run on the per-segment summaries — O(segments)
+per-segment too) — the segment list is the manifest's (``build.read_manifest``,
+the segment table every reader uses), each task reads only its own
+postings/docs/seg_norms files with pyarrow and validates locally; no posting
+bytes ever cross the shuffle or the driver. Cross-segment checks (marker
+row counts, global stats) run on the per-segment summaries — O(segments)
 rows.
 """
 
@@ -159,24 +160,22 @@ _REPORT_SCHEMA = (
 
 
 def check_index(spark: SparkSession, index_dir: str) -> DataFrame:
-    """Distributed CheckIndex: one validation task per segment plus
-    O(segments) cross-segment bookkeeping checks (norm bases must be the
-    exclusive prefix sum of segment sizes; global stats.doc_count must
-    equal the non-tombstoned docs that HAVE the field — length-0 docs are
-    excluded, the CollectionStatistics#docCount contract). Returns the
+    """Distributed CheckIndex: one validation task per committed segment
+    plus O(segments) cross-segment bookkeeping checks (each marker's
+    n_docs, which the bases derive from, must count its docs table; global
+    stats.doc_count must equal the non-tombstoned docs that HAVE the field
+    — length-0 docs are excluded, the CollectionStatistics#docCount
+    contract). Returns the
     per-segment report; a
     clean index has ``n_violations == 0`` everywhere (cross-segment
     findings attach to the smallest involved segment's row)."""
-    from .build import IndexMeta
+    from .build import IndexMeta, read_manifest
     from .updates import tombstone_files
 
     meta = IndexMeta.load(index_dir)
     tombstone_files(index_dir)  # a flat (pre-per-segment) tombstone file raises
-    segs = sorted(
-        int(d.split("=")[1])
-        for d in os.listdir(os.path.join(index_dir, "postings"))
-        if d.startswith("seg=")
-    )
+    manifest = read_manifest(index_dir)
+    segs = [int(s) for s in manifest["seg"]]
     positions = bool(meta.positions)
 
     def kern(pdfs):
@@ -192,18 +191,15 @@ def check_index(spark: SparkSession, index_dir: str) -> DataFrame:
     report = seg_df.mapInPandas(kern, _REPORT_SCHEMA + ", n_live long").toPandas()
     report = report.sort_values("seg").reset_index(drop=True)
 
-    # cross-segment: bases are the exclusive prefix sum of n_docs
     import pyarrow.parquet as pq
 
-    extra: list[str] = []
-    expect_base = 0
-    for seg, nd in zip(report["seg"], report["n_docs"]):
-        sn = pq.read_table(os.path.join(index_dir, "seg_norms", f"seg={seg}"))
-        base = sn.column("base")[0].as_py()
-        if base != expect_base:
-            extra.append(f"seg {seg}: base {base} != prefix sum {expect_base}")
-        expect_base += int(nd)
-
+    # cross-segment: the bases read_manifest derives are the cumsum of the
+    # markers' n_docs, so each must count its segment's docs table
+    extra = [
+        f"seg {seg}: manifest n_docs {m} != docs rows {nd}"
+        for seg, m, nd in zip(report["seg"], manifest["n_docs"], report["n_docs"])
+        if int(m) != int(nd)
+    ]
     stats_p = os.path.join(index_dir, "stats")
     if os.path.isdir(stats_p):
         stats = pq.read_table(stats_p).to_pandas().iloc[0]

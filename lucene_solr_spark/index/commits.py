@@ -46,6 +46,7 @@ from dataclasses import dataclass
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from .build import SEGMENT_ROOTS, read_manifest
 from .updates import tombstone_files, tombstone_segs, tombstones_path
 
 COMMITS_DIRNAME = "commits"
@@ -91,11 +92,7 @@ def commit_point(index_dir: str) -> int:
     gdir = os.path.join(commits_path(index_dir), f"gen={gen}")
     os.makedirs(gdir, exist_ok=True)
 
-    segs = sorted(
-        int(m.group(1))
-        for p in glob.glob(os.path.join(index_dir, "manifest", "seg=*.parquet"))
-        if (m := re.search(r"seg=(\d+)\.parquet$", p))
-    )
+    segs = [int(s) for s in read_manifest(index_dir)["seg"]]
     if not segs:
         raise ValueError(f"no committed segments under {index_dir!r}")
 
@@ -138,15 +135,15 @@ def rollback_to(index_dir: str, gen: int) -> CommitInfo:
        consults),
     3. remove tombstone files appended after the capture,
     4. restore the three stats tables from the commit's retained copies,
-    5. delete the orphaned segment data dirs last (postings/docs/seg_norms/
-       bloom) — pure space reclamation by then, and necessary so a later
+    5. delete the orphaned segment data dirs last (``build.SEGMENT_ROOTS``)
+       — pure space reclamation by then, and necessary so a later
        ``append_batch`` can reuse the freed segment ids without mixing old
        files into a partition.
 
     Older generations stay valid: segments are append-only, so an older
     commit's seg list is a subset of ``gen``'s, and its tombstone files are
-    a prefix of ``gen``'s. Bases need no repair — they are a cumsum over
-    seg-ordered manifest rows, so dropping a SUFFIX of segments leaves
+    a prefix of ``gen``'s. No file holds a base: ``read_manifest`` derives
+    them from the markers left, and dropping a SUFFIX of segments leaves
     every retained base unchanged."""
     info = load_commit(index_dir, gen)
 
@@ -159,11 +156,7 @@ def rollback_to(index_dir: str, gen: int) -> CommitInfo:
             shutil.rmtree(gd, ignore_errors=True)
 
     keep = set(info.segs)
-    drop_segs = sorted(
-        int(m.group(1))
-        for p in glob.glob(os.path.join(index_dir, "manifest", "seg=*.parquet"))
-        if (m := re.search(r"seg=(\d+)\.parquet$", p)) and int(m.group(1)) not in keep
-    )
+    drop_segs = [int(s) for s in read_manifest(index_dir)["seg"] if int(s) not in keep]
     for s in drop_segs:
         os.remove(os.path.join(index_dir, "manifest", f"seg={s}.parquet"))
 
@@ -184,7 +177,7 @@ def rollback_to(index_dir: str, gen: int) -> CommitInfo:
             _link_or_copy(f, os.path.join(live, os.path.basename(f)))
 
     for s in drop_segs:
-        for d in ("postings", "docs", "seg_norms", "bloom"):
+        for d in SEGMENT_ROOTS:
             p = os.path.join(index_dir, d, f"seg={s}")
             if os.path.isdir(p):
                 shutil.rmtree(p)

@@ -24,8 +24,9 @@ shifted into the output segment's local ids. Both stages are
 Each output segment carries its sources' tombstones: a one-segment group
 copies ``tombstones/seg=N`` with its files, and a phase-2 task writes its
 segment's sources' deletes rebased to the output's local ids. The driver
-then writes ``meta.json`` and ends in ``build._commit`` — bases, global
-stats and the open sentinel, the tail every writer shares.
+then writes ``meta.json`` and ends in ``build._commit`` — global stats and
+the open sentinel, the tail every writer shares; no segment file is
+rewritten there, since ``build.read_manifest`` derives the bases.
 """
 
 from __future__ import annotations
@@ -45,11 +46,12 @@ from pyspark.sql.types import StructType
 from ..util.segscan import segment_scan
 from .build import (
     MANIFEST_SCHEMA,
+    SEGMENT_ROOTS,
     IndexMeta,
     _atomic_write,
     _commit,
-    _read_committed_manifest,
     postings_table,
+    read_manifest,
     read_segment,
     write_segment,
 )
@@ -62,12 +64,12 @@ from .updates import (
 def _copy_segment(src_dir: str, seg: int, dst_dir: str, new_seg: int) -> None:
     """File-copy segment ``seg`` of ``src_dir`` into ``dst_dir`` as
     ``new_seg``, its tombstones included: segment files hold only
-    segment-local ids, so a copy is a complete segment (``_commit``
-    rewrites the seg_norms base). The renumbered manifest marker is written
-    last — the commit point."""
+    segment-local ids, so a copy is a complete segment whose base
+    ``read_manifest`` derives at ``dst_dir``. The renumbered manifest marker
+    is written last — the commit point."""
     dirs = [
         (os.path.join(src_dir, root, f"seg={seg}"), os.path.join(dst_dir, root, f"seg={new_seg}"))
-        for root in ("postings", "docs", "seg_norms", "bloom")
+        for root in SEGMENT_ROOTS
     ]
     for src, dst in [*dirs, (tombstones_path(src_dir, seg), tombstones_path(dst_dir, new_seg))]:
         shutil.rmtree(dst, ignore_errors=True)
@@ -187,14 +189,13 @@ def merge_segments(
     index: every file it writes is rewritten by the re-run. A ``dst_dir``
     holding segments this merge does not write is refused."""
     meta = IndexMeta.load(src_dir)
-    manifest = _read_committed_manifest(src_dir)
+    manifest = read_manifest(src_dir)
     segs = [int(s) for s in manifest["seg"]]  # seg order == base order
     bases = dict(zip(segs, (int(b) for b in manifest["base"])))
     groups = _plan_groups(segs, n_out, plan)
     if os.path.realpath(dst_dir) == os.path.realpath(src_dir):
         raise ValueError("merge_segments writes a new index: dst_dir must not be src_dir")
-    held = _read_committed_manifest(dst_dir)
-    if held is not None and not set(held["seg"]) <= {g[0] for g in groups}:
+    if not set(read_manifest(dst_dir)["seg"]) <= {g[0] for g in groups}:
         # a different merge's segments would stay committed next to ours
         raise ValueError(f"{dst_dir} holds segments this merge does not write")
 
@@ -239,7 +240,7 @@ def merge_segments(
     shutil.rmtree(staging, ignore_errors=True)
 
     dataclasses.replace(meta, n_segments=len(groups)).save(dst_dir)
-    return _commit(spark, dst_dir, _read_committed_manifest(dst_dir))
+    return _commit(spark, dst_dir)
 
 
 def add_indexes(
@@ -250,8 +251,9 @@ def add_indexes(
     index WITHOUT touching a single posting byte — segments renumber in
     source order and copy by file (per-segment data is self-contained under
     segment-local ids, exactly why Lucene's addIndexes is a file-level
-    operation), then the shared ``_commit`` tail re-derives the bases and
-    re-finalizes the global stats. Returns the number of segments grafted.
+    operation), then the shared ``_commit`` tail re-finalizes the global
+    stats (``read_manifest`` derives the new bases). Returns the number of
+    segments grafted.
 
     Preconditions (asserted): identical analyzer/positions/keyword schema
     across sources (Lucene's same-FieldInfos requirement) and no pending
@@ -261,9 +263,8 @@ def add_indexes(
     Scale shape: data files move by directory copy — on an object store /
     Iceberg this is a server-side copy or pure metadata commit, NOT a read
     of the postings; the only computed artifacts are the renumbered
-    manifest markers, the seg_norms base rewrites (O(segments) pyarrow
-    rows) and one ``_finalize`` pass for term_stats/stats, the same
-    aggregate every build already pays."""
+    manifest markers (O(segments) pyarrow rows) and one ``_finalize`` pass
+    for term_stats/stats, the same aggregate every build already pays."""
     metas = [IndexMeta.load(d) for d in src_dirs]
     m0 = metas[0]
     for m in metas[1:]:
@@ -282,11 +283,11 @@ def add_indexes(
     os.makedirs(dst_dir, exist_ok=True)
     new_seg = 0
     for d in src_dirs:
-        for seg in _read_committed_manifest(d)["seg"]:
+        for seg in read_manifest(d)["seg"]:
             _copy_segment(d, int(seg), dst_dir, new_seg)
             new_seg += 1
     dataclasses.replace(m0, n_segments=new_seg).save(dst_dir)
-    _commit(spark, dst_dir, _read_committed_manifest(dst_dir))
+    _commit(spark, dst_dir)
     return new_seg
 
 
@@ -359,7 +360,7 @@ def tiered_merge(
     ``addIndexes`` economics — so a policy round over 10^12 docs costs
     O(bytes actually merged), not a full index rewrite. A round that
     selects nothing is a copy of the index directory."""
-    manifest = _read_committed_manifest(src_dir)
+    manifest = read_manifest(src_dir)
     plan = find_merges(
         [(int(s), int(n)) for s, n in zip(manifest["seg"], manifest["n_docs"])],
         segs_per_tier=segs_per_tier, max_merged_docs=max_merged_docs,

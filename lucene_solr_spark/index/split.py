@@ -60,17 +60,16 @@ import shutil
 
 from pyspark.sql import SparkSession, functions as F
 
-from .build import IndexMeta, write_term_dictionary
+from .build import SEGMENT_ROOTS, IndexMeta, write_term_dictionary
 from .updates import append_tombstones, refresh_stats, tombstones_df, tombstones_path
 
-# Subtrees whose files are write-once in this storage model and therefore
-# safe to hard-link into children. term_stats/term_stats_rev/stats are ALSO
-# linked: the child's refresh rewrites them with mode("overwrite"), which
-# unlinks the child's directory entries without touching the parent's inodes.
-_LINKED = (
-    "postings", "docs", "seg_norms", "bloom", "manifest",
-    "term_stats", "term_stats_rev", "stats",
-)
+# Subtrees safe to hard-link into children. Segment files and manifest
+# markers are write-once (no base or other index-wide value is stored in a
+# segment, and the child's commit tail rewrites none of them).
+# term_stats/term_stats_rev/stats are ALSO linked: the child's refresh
+# rewrites them with mode("overwrite"), which unlinks the child's directory
+# entries without touching the parent's inodes.
+_LINKED = (*SEGMENT_ROOTS, "manifest", "term_stats", "term_stats_rev", "stats")
 
 
 def _link_tree(src: str, dst: str) -> None:

@@ -58,11 +58,13 @@ from pyspark.sql.types import StructType
 from ..util.segscan import segment_scan
 from .build import (
     MANIFEST_SCHEMA,
+    SEGMENT_ROOTS,
     IndexMeta,
     _atomic_write,
     _commit,
     _finalize,
-    _read_committed_manifest,
+    global_docs,
+    read_manifest,
     read_segment,
     write_segment,
 )
@@ -208,17 +210,11 @@ def delete_by_query_hits(
     tombstone every doc in ``hits`` — the UNRANKED match set of a query
     (``IndexSearcher.hits``). Unlike key deletes, a broad DBQ can match a
     large fraction of the corpus, so the global-docID → (seg, doc_local)
-    mapping joins DISTRIBUTED against the docs table (only the tiny
-    per-segment bases broadcast; the hit set itself never touches the
+    mapping joins DISTRIBUTED against ``build.global_docs`` (only the tiny
+    (seg, base) relation broadcasts; the hit set itself never touches the
     driver)."""
-    docs = spark.read.parquet(os.path.join(index_dir, "docs"))
-    bases = (
-        spark.read.parquet(os.path.join(index_dir, "seg_norms"))
-        .select("seg", "base")
-    )
     hit = (
-        docs.join(F.broadcast(bases), "seg")
-        .withColumn("doc_id", F.col("doc_local") + F.col("base"))
+        global_docs(spark, index_dir, read_manifest(index_dir))
         .join(hits.select("doc_id"), "doc_id")
         .select(
             F.col("seg").cast("int").alias("seg"),
@@ -473,7 +469,7 @@ def expunge_deletes(
         shutil.rmtree(commits_path(index_dir), ignore_errors=True)
 
     meta = IndexMeta.load(index_dir)
-    manifest = _read_committed_manifest(index_dir)
+    manifest = read_manifest(index_dir)
     n_docs = dict(zip(manifest["seg"], manifest["n_docs"]))
     staging = os.path.join(index_dir, "_expunge_staging")
     shutil.rmtree(staging, ignore_errors=True)
@@ -489,14 +485,13 @@ def expunge_deletes(
     rewritten = sorted(r.seg for r in rows if r.status != _DROPPED)
 
     # --- destructive phase: segment dirs, dropped segments, then markers ---
-    roots = ("postings", "docs", "seg_norms", "bloom")
     for seg in rewritten:
-        for root in roots:
+        for root in SEGMENT_ROOTS:
             old = os.path.join(index_dir, root, f"seg={seg}")
             shutil.rmtree(old, ignore_errors=True)
             shutil.move(os.path.join(staging, root, f"seg={seg}"), old)
     for seg in dropped:
-        for root in roots:
+        for root in SEGMENT_ROOTS:
             shutil.rmtree(os.path.join(index_dir, root, f"seg={seg}"), ignore_errors=True)
         os.remove(os.path.join(index_dir, "manifest", f"seg={seg}.parquet"))
     for seg in rewritten:
@@ -508,9 +503,10 @@ def expunge_deletes(
     shutil.rmtree(staging, ignore_errors=True)
     shutil.rmtree(tombstones_path(index_dir), ignore_errors=True)
 
-    # bases: cumsum over seg-ordered manifest rows — live global ids
-    # compact but keep their relative order
-    _commit(spark, index_dir, _read_committed_manifest(index_dir))
+    # read_manifest's bases (cumsum over seg-ordered markers): live global
+    # ids compact but keep their relative order, and no other segment's
+    # file is touched
+    _commit(spark, index_dir)
     return {
         "expunged_docs": int(sum(n_docs[r.seg] - r.n_docs for r in rows)),
         "rewritten_segs": rewritten,

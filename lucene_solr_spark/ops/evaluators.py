@@ -587,13 +587,13 @@ def stream_exp_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = _hourly(spark, sf_dir).filter(F.col("event_type") == "click")
     x = hourly.select(F.col("h"), F.col("s"))
     weights = F.broadcast(_ema_weights_df(spark))
-    wseed = Window.partitionBy(F.lit(0)).orderBy("h").rowsBetween(
+    wseed = Window.orderBy("h").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     seeded = x.select(
         "h", "s",
         (F.sum("s").over(wseed) / F.lit(float(EMA_WINDOW))).alias("sma_all"),
-        F.row_number().over(Window.partitionBy(F.lit(0)).orderBy("h")).alias("rn"),
+        F.row_number().over(Window.orderBy("h")).alias("rn"),
     )
     # seed = SMA of the first w points (rn == w); ema defined for rn >= w
     seed_row = seeded.filter(F.col("rn") == EMA_WINDOW).select(

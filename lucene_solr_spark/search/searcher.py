@@ -11,7 +11,10 @@ Query lifecycle (SURVEY.md §3.1, Spark shape):
    ``spark.range(n).mapInArrow`` job; each task reads its own segments'
    term-filtered postings (parquet row-group pruning on the term-sorted
    files), norms row and tombstones, and runs the per-segment kernel (WAND
-   or exact) → per-segment top-k. No shuffle feeds the kernel.
+   or exact) → per-segment top-k. No shuffle feeds the kernel. The
+   segments and their bases come from the manifest, read once when the
+   searcher opens (``index.build.read_manifest``): a segment without a
+   marker is invisible.
 3. a keyed search reads the key columns of only those ≤k survivors from
    the segment's docs files inside the same task (fetch-fields-late, Solr
    PURPOSE_GET_FIELDS discipline: text/keys never flow through scoring),
@@ -33,7 +36,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import FloatType, LongType, StringType, StructField, StructType
 
-from ..index.build import ANALYZERS, IndexMeta, read_term_stats
+from ..index.build import ANALYZERS, IndexMeta, global_docs, read_manifest, read_term_stats
 from ..index.updates import read_tombstones, tombstone_files
 from .bm25 import BM25, CollectionStats, Similarity
 from .kernels import count_segment_matches, score_segment_exact, score_segment_wand
@@ -209,24 +212,20 @@ class IndexSearcher:
             self._commit.tomb_files if self._commit is not None
             else tombstone_files(index_dir)
         )
-        self.postings = spark.read.parquet(os.path.join(index_dir, "postings"))
-        self.seg_norms = spark.read.parquet(os.path.join(index_dir, "seg_norms"))
-        # docs are stored with SEGMENT-LOCAL ids; expose the global view
-        # (local + segment base) via a broadcast join on the tiny bases map.
-        raw_docs = spark.read.parquet(os.path.join(index_dir, "docs"))
-        if self._commit is not None:
-            # seg is the partition column on all three — the isin folds to
-            # partition pruning, later segments' files are never opened
-            live = F.col("seg").isin(list(self._commit.segs))
-            self.postings = self.postings.filter(live)
-            self.seg_norms = self.seg_norms.filter(live)
-            raw_docs = raw_docs.filter(live)
-        bases = self.seg_norms.select("seg", "base")
-        self.docs = (
-            raw_docs.join(F.broadcast(bases), "seg")
-            .withColumn("doc_id", F.col("doc_local") + F.col("base"))
-            .drop("doc_local", "base")
+        # this view's segment table, read once: {seg: (base, n_docs)} in seg
+        # (= base) order — the commit's segments at a commit point
+        m = read_manifest(index_dir, None if self._commit is None else self._commit.segs)
+        self.layout = {
+            int(seg): (int(base), int(n))
+            for seg, base, n in zip(m["seg"], m["base"], m["n_docs"])
+        }
+        # seg is the partition column — the isin folds to partition pruning,
+        # so files of segments outside the view are never opened
+        self.postings = spark.read.parquet(os.path.join(index_dir, "postings")).filter(
+            F.col("seg").isin(list(self.layout))
         )
+        # docs are stored with SEGMENT-LOCAL ids; expose the global view
+        self.docs = global_docs(spark, index_dir, m).drop("doc_local")
         # filterCache (S/search/SolrIndexSearcher filterCache): fq → DocSet,
         # LRU under an entry + total-id budget; see filter_docset
         from collections import OrderedDict
@@ -257,6 +256,7 @@ class IndexSearcher:
         return SegmentFiles(
             index_dir=self.index_dir,
             sources=sources,
+            bases={seg: base for seg, (base, _) in self.layout.items()},
             tomb_files=self._tomb_files,
             key_cols=tuple(self.meta.key_cols),
         )
@@ -270,22 +270,14 @@ class IndexSearcher:
         p = os.path.join(self.index_dir, BLOOM_DIRNAME)
         return p if glob.glob(os.path.join(p, "*", "*.parquet")) else None
 
-    @cached_property
-    def _all_segs(self) -> frozenset:
-        """This view's segment ids: every ``seg_norms/seg=N`` directory
-        holding a parquet file (the partitions ``spark.read.parquet``
-        discovers — a directory listing, no job), restricted to the
-        commit's live segments for a commit-point searcher."""
-        root = os.path.join(self.index_dir, "seg_norms")
-        segs = {
-            int(m.group(1))
-            for d in os.listdir(root)
-            if (m := re.fullmatch(r"seg=(\d+)", d))
-            and glob.glob(os.path.join(root, d, "*.parquet"))
+    def by_base(self, doc_ids) -> dict[int, np.ndarray]:
+        """Global doc ids as ``{segment base: sorted local ids}``, one entry
+        per segment of this view — the ``filter_by_base`` shape."""
+        gdocs = np.sort(np.fromiter(doc_ids, dtype=np.int64))
+        return {
+            base: gdocs[(gdocs >= base) & (gdocs < base + n)] - base
+            for base, n in self.layout.values()
         }
-        if self._commit is not None:
-            segs &= set(self._commit.segs)
-        return frozenset(segs)
 
     @cached_property
     def _bloom_driver(self) -> dict | None:
@@ -362,10 +354,12 @@ class IndexSearcher:
             rows = df.mapInPandas(probe, "seg int, admit boolean").collect()
             admitted = {int(r.seg) for r in rows if r.admit}
             covered = {int(r.seg) for r in rows}
-        # intersect with _all_segs: the sidecar may describe segments this
-        # searcher cannot see (a commit-point view excludes later segments)
-        live = sorted((admitted & self._all_segs) | (self._all_segs - covered))
-        out = live if len(live) < len(self._all_segs) else None
+        # intersect with the layout: the sidecar may describe segments this
+        # searcher cannot see (a commit-point view excludes later segments,
+        # and a segment without a manifest marker is not committed)
+        segs = set(self.layout)
+        live = sorted((admitted & segs) | (segs - covered))
+        out = live if len(live) < len(segs) else None
         if len(self._bloom_cache) >= self._BLOOM_CACHE_MAX:
             self._bloom_cache.pop(next(iter(self._bloom_cache)))
         self._bloom_cache[key] = out
@@ -378,7 +372,7 @@ class IndexSearcher:
         scoring term present — so this only skips provably-empty kernels
         (MUST_NOT / FILTER terms never gate admission)."""
         live = self.bloom_live_segs(list(q.scoring_terms))
-        return sorted(self._all_segs) if live is None else live
+        return list(self.layout) if live is None else live
 
     def term_stats_rows(self, terms: list[str]) -> tuple[dict[str, int], dict[str, int]]:
         """({term: df}, {term: ttf}) for the query's terms (TermStates#build
@@ -454,12 +448,7 @@ class IndexSearcher:
             self.hits(self.compile(spec, k=1 << 30), mode="exact")
             .select("doc_id").collect()
         )
-        gdocs = np.sort(np.array([r.doc_id for r in rows], dtype=np.int64))
-        layout = self.seg_norms.select("base", "n").collect()
-        fbb = {
-            int(r.base): gdocs[(gdocs >= r.base) & (gdocs < r.base + r.n)] - r.base
-            for r in layout
-        }
+        fbb = self.by_base(r.doc_id for r in rows)
         self._filter_cache_insert(key, fbb)
         return fbb
 
@@ -576,17 +565,12 @@ class IndexSearcher:
             # range-partitioned on rterm) — the StartsWith predicate pushes
             # to the parquet scan and min/max stats prune whole files, vs
             # the full-dictionary LIKE '%suffix' scan a naive leading
-            # wildcard forces. Falls back to the naive scan when the
-            # sidecar is absent (pre-upgrade index).
-            rev_path = os.path.join(self._stats_root, "term_stats_rev")
-            if os.path.isdir(rev_path):
-                ts = (
-                    self.spark.read.parquet(rev_path)
-                    .filter(~F.col("term").startswith(KEYWORD_PREFIX))
-                )
-                cond = F.col("rterm").startswith(pattern[::-1])
-            else:
-                cond = F.col("term").like("%" + pattern)
+            # wildcard forces.
+            ts = (
+                self.spark.read.parquet(os.path.join(self._stats_root, "term_stats_rev"))
+                .filter(~F.col("term").startswith(KEYWORD_PREFIX))
+            )
+            cond = F.col("rterm").startswith(pattern[::-1])
         elif kind == "set":
             cond = F.col("term").isin(list(pattern))
         elif kind == "range":
@@ -657,15 +641,10 @@ class IndexSearcher:
         from .bm25 import score_postings
 
         q = self.compile(spec, k=1)
-        layout = sorted(
-            (int(r.seg), int(r.base), int(r.n))
-            for r in self.seg_norms.select("seg", "base", "n").collect()
+        seg, base = next(
+            ((s, b) for s, (b, n) in self.layout.items() if b <= global_doc_id < b + n),
+            (None, None),
         )
-        seg = base = None
-        for s, b, n in layout:
-            if b <= global_doc_id < b + n:
-                seg, base = s, b
-                break
         if seg is None:
             raise ValueError(f"doc {global_doc_id} out of range")
         local = global_doc_id - base
@@ -711,11 +690,7 @@ class IndexSearcher:
         simply absent (left-join + coalesce(0) at the consumer)."""
         from ..index.codec import decode_postings
 
-        bases = {
-            int(r.seg): int(r.base)
-            for r in self.seg_norms.select("seg", "base").collect()
-        }
-        index_dir, tomb_files = self.index_dir, self._tomb_files
+        index_dir, tomb_files, layout = self.index_dir, self._tomb_files, self.layout
 
         def kern(iterator):
             for pdf in iterator:
@@ -726,7 +701,7 @@ class IndexSearcher:
                         keep = ~np.isin(docs, d, assume_unique=True)
                         docs, tfs = docs[keep], tfs[keep]
                     yield pd.DataFrame({
-                        "doc_id": docs + bases[int(seg)],
+                        "doc_id": docs + layout[int(seg)][0],
                         "tf": tfs,
                     })
 
@@ -758,12 +733,7 @@ class IndexSearcher:
             self.docs.join(F.broadcast(keys), list(keys.columns))
             .select("doc_id").collect()
         )
-        gdocs = np.sort(np.array([r.doc_id for r in rows], dtype=np.int64))
-        layout = self.seg_norms.select("base", "n").collect()
-        return {
-            int(r.base): gdocs[(gdocs >= r.base) & (gdocs < r.base + r.n)] - r.base
-            for r in layout
-        }
+        return self.by_base(r.doc_id for r in rows)
 
     def cached_filter_map(
         self, keys: DataFrame, cache_key: str
@@ -883,7 +853,7 @@ class IndexSearcher:
             return self.spark.createDataFrame([], "query_id string, rank int, doc_id long, score float")
         files = self._segment_files((PostingsSource(self.index_dir, tuple(terms)),))
         hits = segment_scan(
-            self.spark, sorted(self._all_segs), _multi_task(files, compiled, mode),
+            self.spark, list(self.layout), _multi_task(files, compiled, mode),
             _MULTI_SCHEMA,
         )
         ks = {qid: q.k for qid, q in compiled.items()}

@@ -7,7 +7,9 @@ segments' files itself:
 
 - the ``postings/seg=N`` rows of the query's terms (parquet row-group
   pruning on the term-sorted files), from one or more postings sources;
-- the ``seg_norms/seg=N`` row (base, norm bytes);
+- the ``seg_norms/seg=N`` norm bytes (the segment's base rides in
+  ``SegmentFiles.bases``, derived from the manifest when the searcher
+  opened);
 - the segment's tombstones, through ``index/updates.read_tombstones``
   restricted to the searcher's snapshot of tombstone files;
 - for a keyed top-k, the key columns of only its ≤k survivors from
@@ -47,11 +49,13 @@ class PostingsSource:
 @dataclass(frozen=True)
 class SegmentFiles:
     """Everything a task needs to open a segment — built on the driver,
-    shipped in the task closure. ``tomb_files``: the searcher's tombstone
-    files (index-relative); each task reads only its own segment's."""
+    shipped in the task closure. ``bases``: {seg: base} of the searcher's
+    view. ``tomb_files``: the searcher's tombstone files (index-relative);
+    each task reads only its own segment's."""
 
     index_dir: str
     sources: tuple[PostingsSource, ...]
+    bases: dict[int, int]
     tomb_files: tuple[str, ...] = ()
     key_cols: tuple[str, ...] = ()
 
@@ -92,10 +96,10 @@ def open_segment(files: SegmentFiles, seg: int) -> Segment | None:
     if not term_blocks:
         return None
     norms = pq.read_table(  # executor-read
-        _seg_dir(files.index_dir, "seg_norms", seg), columns=["base", "norms"]
+        _seg_dir(files.index_dir, "seg_norms", seg), columns=["norms"]
     )
     return Segment(
-        base=int(norms["base"][0].as_py()),
+        base=files.bases[seg],
         norms=np.frombuffer(norms["norms"][0].as_py(), dtype=np.uint8),
         term_blocks=term_blocks,
         dele=read_tombstones(files.index_dir, seg, files.tomb_files),

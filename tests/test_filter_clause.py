@@ -27,12 +27,7 @@ def even_filter(spark, searcher):
     # filter_map takes doc_key columns; the transcripts index keys on
     # (conv_id, turn_idx) so join on both via a composite frame
     rows = searcher.docs.join(keys, ["conv_id", "turn_idx"]).select("doc_id").collect()
-    gdocs = np.sort(np.array([r.doc_id for r in rows], dtype=np.int64))
-    layout = searcher.seg_norms.select("base", "n").collect()
-    return {
-        int(r.base): gdocs[(gdocs >= r.base) & (gdocs < r.base + r.n)] - r.base
-        for r in layout
-    }
+    return searcher.by_base(r.doc_id for r in rows)
 
 
 QUERIES = [("or2", ["error", "spark"]), ("and2", ["merge", "batch"]),

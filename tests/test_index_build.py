@@ -8,19 +8,20 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from lucene_solr_spark.index.build import read_manifest
 from lucene_solr_spark.index.codec import decode_postings
 from lucene_solr_spark.util.smallfloat import encode_lengths
 
 
-def _bases(spark, index_dir) -> dict[int, int]:
-    segn = spark.read.parquet(os.path.join(index_dir, "seg_norms")).toPandas()
-    return dict(zip(segn.seg.astype(int), segn.base.astype(int)))
+def _bases(index_dir) -> dict[int, int]:
+    m = read_manifest(index_dir)
+    return dict(zip(m.seg.astype(int), m.base.astype(int)))
 
 
 def _global_docs(spark, index_dir) -> pd.DataFrame:
     """docs table with the derived GLOBAL doc_id (local + segment base)."""
     docs = spark.read.parquet(os.path.join(index_dir, "docs")).toPandas()
-    bases = _bases(spark, index_dir)
+    bases = _bases(index_dir)
     docs["doc_id"] = docs.doc_local + docs.seg.map(bases)
     return docs
 
@@ -71,13 +72,15 @@ def test_seg_norms_blob_matches_docs(spark, small_index):
     index_dir, _ = small_index
     docs = _global_docs(spark, index_dir)
     segn = spark.read.parquet(os.path.join(index_dir, "seg_norms")).toPandas()
+    assert "base" not in segn.columns  # segment-local: read_manifest derives it
+    bases = _bases(index_dir)
     for _, r in segn.iterrows():
         blob = np.frombuffer(r["norms"], dtype=np.uint8)
         assert len(blob) == r["n"]
         seg_docs = docs[docs.seg == r["seg"]].sort_values("doc_id")
         np.testing.assert_array_equal(blob, seg_docs.norm.to_numpy().astype(np.uint8))
         assert (seg_docs.doc_local.to_numpy() == np.arange(r["n"])).all()
-        assert (seg_docs.doc_id.to_numpy() == r["base"] + np.arange(r["n"])).all()
+        assert (seg_docs.doc_id.to_numpy() == bases[r["seg"]] + np.arange(r["n"])).all()
 
 
 def test_postings_sorted_and_consistent(spark, small_index, oracle):
@@ -91,7 +94,7 @@ def test_postings_sorted_and_consistent(spark, small_index, oracle):
         assert terms == sorted(terms)
     # decode every term (globalizing the seg-local ids) and compare against
     # the oracle's exploded frame
-    bases = _bases(spark, index_dir)
+    bases = _bases(index_dir)
     agg: dict[str, list] = {}
     for _, r in posts.sort_values(["term", "seg"]).iterrows():
         docs, tfs = decode_postings(list(r["blocks"]))

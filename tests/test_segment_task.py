@@ -81,7 +81,7 @@ def test_keyed_search_runs_one_scoring_stage(spark, sentinel_index):
     jobs, stages, tasks = _job_counts(sc, "segtask-or3")
     assert jobs <= 2, jobs    # term_stats lookup + the scoring stage's collect
     assert stages <= 3, stages
-    assert tasks <= min(len(s._all_segs), sc.defaultParallelism) + 2, tasks
+    assert tasks <= min(len(s.layout), sc.defaultParallelism) + 2, tasks
 
 
 def test_second_searcher_finds_no_shuffle_stage(spark, sentinel_index):
@@ -103,7 +103,7 @@ def test_tasks_read_query_terms_of_admitted_segments(spark, sentinel_index, monk
     bloom-admitted segments are dealt to tasks."""
     s = IndexSearcher(spark, sentinel_index)
     sentinel = s.analyzer.analyze(SENTINEL)[0][0]
-    all_segs = sorted(s._all_segs)
+    all_segs = list(s.layout)
     reads = []
     real_read = segtask.read_postings
 
@@ -178,7 +178,7 @@ def test_commit_point_tasks_visit_only_commit_segments(spark, sentinel_index, tm
     append_batch(spark, spark.createDataFrame(extra), idx, n_segments=2)
     live, at = IndexSearcher(spark, idx), IndexSearcher(spark, idx, commit=gen)
     commit_segs = sorted(load_commit(idx, gen).segs)
-    assert sorted(live._all_segs) != commit_segs
+    assert list(live.layout) != commit_segs
     q = at.compile(at.parse("or3", OR3), k=10)
     seen = _dealt(monkeypatch, at, lambda: at.search(q, with_keys=True).collect())
     assert [segs for segs, _ in seen] == [commit_segs]
