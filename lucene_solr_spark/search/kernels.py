@@ -482,29 +482,62 @@ def _span_near_freqs_slow(
     return np.array(out_docs, dtype=np.int64), np.array(out_freqs, dtype=np.float32)
 
 
+def _interval_pairs(
+    pos: np.ndarray, f: np.ndarray, same: np.ndarray, maxgaps: int, ordered: bool,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The minimal two-term intervals of merged position streams: returns
+    (mask over adjacent stream pairs, slop factor of each masked pair).
+
+    ``pos``/``f`` are positions and source flags (0 = terms[0]) sorted by
+    position; ``same`` marks adjacent pairs of one doc. A minimal interval
+    is an adjacent opposite-source pair of the stream:
+    - ordered (``OrderedIntervalsSource``): the second source must start
+      past the first's end, so the caller sorts a position's second-source
+      entry before its first-source one and a stacked pair (both sources
+      at one position) is never ``0 → 1``; gaps are then >= 0;
+    - unordered (``UnorderedIntervalsSource``): a stacked pair is the
+      zero-width interval [p, p] (gaps 0, factor 1), and a pair that
+      reaches a stacked position contains it, so it is not minimal.
+    A match needs gaps = end − start − 1 <= maxgaps and adds f32
+    1/(1 + gaps), summed by the caller in float64."""
+    gaps = pos[1:] - pos[:-1] - 1
+    if ordered:
+        pair_ok = same & (f[:-1] == 0) & (f[1:] == 1)
+    else:
+        pair_ok = same & (f[1:] != f[:-1])
+        stacked = pair_ok & (gaps < 0)
+        reaches = np.zeros_like(stacked)
+        reaches[1:] |= stacked[:-1]
+        reaches[:-1] |= stacked[1:]
+        pair_ok &= stacked | ~reaches
+        gaps = np.maximum(gaps, 0)
+    m = pair_ok & (gaps <= maxgaps)
+    sf = (
+        np.float32(1.0) / (np.float32(1.0) + gaps[m].astype(np.float32))
+    ).astype(np.float64)
+    return m, sf
+
+
 def _interval_unordered_freqs(
     parts0: tuple, parts1: tuple, maxgaps: int, ordered: bool = False,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Unordered two-term interval matcher (``lucene/queries/.../intervals/
-    Intervals.java#unordered`` + ``#maxgaps``): the MINIMAL intervals
-    containing both terms in either order. For two distinct terms the
-    minimal intervals are exactly the adjacent opposite-term pairs in the
-    doc's merged position stream (any wider pairing contains one of them),
-    so the matcher is: merge both sorted position lists, keep neighbors
-    whose term flags differ, match when gaps = end − start − 1 <= maxgaps.
-    Each match contributes 1/(1 + gaps) to the doc freq (the span family's
+    """Two-term interval matcher (``lucene/queries/.../intervals/
+    Intervals.java#unordered`` / ``#ordered`` + ``#maxgaps``): the MINIMAL
+    intervals containing both terms (``_interval_pairs``). Each match
+    contributes 1/(1 + gaps) to the doc freq (the span family's
     slop-factor shape), f32 factors summed in float64, one f32 cast.
 
     Vectorized over all candidate docs with packed (ci << 21 | pos) keys:
-    one concatenate + argsort merges every doc's streams at once; the
-    adjacency test is one shifted compare."""
+    one concatenate + stable argsort merges every doc's streams at once
+    (second source first, so it sorts first at a shared position when
+    ordered); the adjacency test is one shifted compare."""
     docs0, docs1 = parts0[0], parts1[0]
     cand = docs0[np.isin(docs0, docs1, assume_unique=True)]
     empty = np.empty(0, dtype=np.float32)
     if cand.size == 0:
         return cand, empty
     keys, flags = [], []
-    for fl, (docs_t, tfs_t, pos_t) in enumerate((parts0, parts1)):
+    for fl, (docs_t, tfs_t, pos_t) in _interval_sources(parts0, parts1, ordered):
         s = np.zeros(len(tfs_t) + 1, dtype=np.int64)
         np.cumsum(tfs_t, out=s[1:])
         i = np.searchsorted(docs_t, cand)
@@ -523,24 +556,19 @@ def _interval_unordered_freqs(
     k, f = k[order], f[order]
     same_doc = (k[1:] >> _POS_SHIFT) == (k[:-1] >> _POS_SHIFT)
     mask = (np.int64(1) << _POS_SHIFT) - 1
-    gaps = (k[1:] & mask) - (k[:-1] & mask) - 1
-    if ordered:
-        # Intervals.ordered: a minimal ordered interval is an occurrence of
-        # the FIRST source immediately followed (in the merged stream) by
-        # one of the SECOND — any wider (a, b) pairing contains it
-        pair_ok = (f[:-1] == 0) & (f[1:] == 1)
-    else:
-        pair_ok = f[1:] != f[:-1]
-    m = same_doc & pair_ok & (gaps <= maxgaps)
+    m, sf = _interval_pairs(k & mask, f, same_doc, maxgaps, ordered)
     if not m.any():
         return np.empty(0, dtype=np.int64), empty
-    sf = (
-        np.float32(1.0) / (np.float32(1.0) + gaps[m].astype(np.float32))
-    ).astype(np.float64)
     freq = np.zeros(len(cand), dtype=np.float64)
     np.add.at(freq, (k[:-1][m] >> _POS_SHIFT), sf)
     keep = freq > 0
     return cand[keep], freq[keep].astype(np.float32)
+
+
+def _interval_sources(parts0: tuple, parts1: tuple, ordered: bool) -> tuple:
+    """(flag, parts) per source in merge order: the second source first
+    when ordered, so a stable sort puts it first at a shared position."""
+    return ((1, parts1), (0, parts0)) if ordered else ((0, parts0), (1, parts1))
 
 
 def _interval_unordered_slow(
@@ -549,14 +577,14 @@ def _interval_unordered_slow(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Per-doc fallback for _interval_unordered_freqs (same rule)."""
     slices = []
-    for docs_t, tfs_t, pos_t in (parts0, parts1):
+    for fl, (docs_t, tfs_t, pos_t) in _interval_sources(parts0, parts1, ordered):
         s = np.zeros(len(tfs_t) + 1, dtype=np.int64)
         np.cumsum(tfs_t, out=s[1:])
-        slices.append((docs_t, s, pos_t))
+        slices.append((fl, docs_t, s, pos_t))
     out_docs, out_freqs = [], []
     for d in cand:
         ps, fs = [], []
-        for fl, (docs_t, s, pos_t) in enumerate(slices):
+        for fl, docs_t, s, pos_t in slices:
             i = int(np.searchsorted(docs_t, d))
             pp = pos_t[s[i]:s[i + 1]].astype(np.int64)
             ps.append(pp)
@@ -565,15 +593,8 @@ def _interval_unordered_slow(
         f = np.concatenate(fs)
         order = np.argsort(p, kind="stable")
         p, f = p[order], f[order]
-        gaps = p[1:] - p[:-1] - 1
-        if ordered:
-            m = (f[:-1] == 0) & (f[1:] == 1) & (gaps <= maxgaps)
-        else:
-            m = (f[1:] != f[:-1]) & (gaps <= maxgaps)
+        m, sf = _interval_pairs(p, f, np.ones(p.size - 1, dtype=bool), maxgaps, ordered)
         if m.any():
-            sf = (
-                np.float32(1.0) / (np.float32(1.0) + gaps[m].astype(np.float32))
-            ).astype(np.float64)
             out_docs.append(d)
             out_freqs.append(np.float32(sf.sum()))
     if not out_docs:

@@ -51,6 +51,17 @@ def _job_counts(sc, gid):
     return len(jobs), len(stages), tasks
 
 
+def _group_counts(sc, gid, run):
+    """``_job_counts`` of what ``run()`` launches under job group ``gid``."""
+    sc.setJobGroup(gid, gid)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return _job_counts(sc, gid)
+
+
 def _dealt(monkeypatch, s, run):
     """Run ``run()`` with the searcher's segment_scan recorded: returns the
     (segments, per-segment score fn) of every scoring stage it built."""
@@ -199,13 +210,7 @@ def test_deletes_add_no_jobs_to_open_and_first_search(spark, sentinel_index, tmp
     sc = spark.sparkContext
 
     def jobs(gid, run):
-        sc.setJobGroup(gid, gid)
-        try:
-            run()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        return _job_counts(sc, gid)[0]
+        return _group_counts(sc, gid, run)[0]
 
     def open_and_search():
         s = IndexSearcher(spark, idx)
@@ -222,3 +227,37 @@ def test_deletes_add_no_jobs_to_open_and_first_search(spark, sentinel_index, tmp
     assert jobs("tomb-open-deleted", open_and_search) == clean
     refresh = jobs("tomb-refresh-deleted", lambda: refresh_stats(spark, idx))
     assert refresh < 13 and refresh <= refresh_clean, (refresh, refresh_clean)
+
+
+# (jobs, stages, tasks) under local[4] with Spark's own worker module: the
+# worker module get_spark sets changes per-task setup, not the work Spark
+# launches, so each operation must launch exactly these
+STOCK_WORKER_COUNTS = {
+    "open-or3": (6, 7, 10),
+    "search-many": (5, 9, 24),
+    "build-4seg": (10, 14, 41),
+}
+
+
+def test_job_counts_match_the_stock_worker(spark, sentinel_index, tmp_path):
+    from lucene_solr_spark.datagen import generate_transcripts
+    from lucene_solr_spark.index.build import build_index
+
+    sc = spark.sparkContext
+    def open_and_search():
+        s = IndexSearcher(spark, sentinel_index)
+        assert len(s.search(s.parse("or3", OR3), k=10, with_keys=True).collect()) == 10
+
+    s = IndexSearcher(spark, sentinel_index)
+    many = s.compile_many({
+        "a": (s.parse("or3", OR3), 5), "b": (s.parse("and2", OR3[:2]), 5),
+    })
+    pdf = generate_transcripts(120)
+    got = {
+        "open-or3": _group_counts(sc, "wm-open-or3", open_and_search),
+        "search-many": _group_counts(sc, "wm-search-many", lambda: s.search_many(many).collect()),
+        "build-4seg": _group_counts(sc, "wm-build-4seg", lambda: build_index(
+            spark, spark.createDataFrame(pdf), str(tmp_path / "idx"), n_segments=4,
+        )),
+    }
+    assert got == STOCK_WORKER_COUNTS

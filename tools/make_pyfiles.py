@@ -2,6 +2,12 @@
 `dist/lucene_solr_spark.zip`, the artifact passed to
 ``spark-submit --py-files`` (the north-rule deployment shape).
 
+The zip holds `lucene_solr_spark/` only. It leaves out the repository
+root's `pyspark_graft_worker.py` on purpose: Spark's Python daemon imports
+its worker module when it starts, before the py-files reach `sys.path`, so
+a cluster session could not use the module from this zip (see
+`lucene_solr_spark/session.py`).
+
 Usage: python tools/make_pyfiles.py  →  prints the zip path.
 """
 

@@ -55,6 +55,8 @@ def main(argv: list[str] | None = None) -> None:
 
     # No .master() here: spark-submit owns cluster topology. Only set the
     # engine-required session confs (Arrow for the vectorized analysis UDFs).
+    # No spark.python.worker.module either: the daemon imports it before
+    # the --py-files reach sys.path (lucene_solr_spark/session.py).
     spark = (
         SparkSession.builder.appName("lss-index-build")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
