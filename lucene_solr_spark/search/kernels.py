@@ -17,6 +17,17 @@ Every doc lives in exactly one interval, so results are EXACTLY the
 brute-force results — pruning only skips intervals that provably cannot
 contribute. Conjunctions additionally skip intervals where any MUST term
 has no covering block (block-max conjunction, ``BlockMaxConjunctionScorer``).
+
+The positional matchers verify positions for all candidate docs at once
+over one int64 key per (candidate, position) pair (``_pos_keys``)::
+
+    key = ci << 32 | (pos − off + 2³¹)
+
+ci is the candidate's index in the clause's candidate doc list (< 2³¹),
+pos an int32 position and off a phrase offset (0 for spans), shifted so
+the phrase's smallest offset is 0. Every valid position and offset then
+lands in the low 32 bits, so sorting keys sorts by (candidate, position)
+and one global ``searchsorted`` / ``intersect1d`` works across all docs.
 """
 
 from __future__ import annotations
@@ -27,9 +38,9 @@ from ..index.codec import decode_block, decode_postings
 from .query import CompiledClause, CompiledQuery
 
 
-_POS_SHIFT = 21          # (candidate_idx << 21) | adjusted_position key packing
-_POS_MARGIN = 64         # headroom so (pos − offset + MARGIN) ≥ 0
-_POS_LIMIT = (1 << _POS_SHIFT) - _POS_MARGIN
+_POS_SHIFT = 32
+_POS_BIAS = 1 << 31      # positions and offsets are int32
+_POS_MASK = (1 << _POS_SHIFT) - 1
 
 
 def _gather_ranges(arr: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
@@ -92,76 +103,89 @@ def _sum_postings(parts: list[tuple]) -> tuple[np.ndarray, np.ndarray]:
     return docs, tfs
 
 
-def _phrase_freqs(
-    docs_per_term: list[np.ndarray],
-    pos_flat_per_term: list[np.ndarray],
-    tfs_per_term: list[np.ndarray],
-    offsets: tuple[int, ...],
-) -> tuple[np.ndarray, np.ndarray]:
+def _candidates(per: list[tuple]) -> np.ndarray:
+    """Two-phase candidates (``L/search/TwoPhaseIterator``): the docs that
+    hold every operand, by sorted-array intersection, before any position
+    is read."""
+    cand = per[0][0]
+    for parts in per[1:]:
+        cand = cand[np.isin(cand, parts[0], assume_unique=True)]
+    return cand
+
+
+def _cand_positions(parts: tuple, cand: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """One operand's positions in every candidate doc: (ci, p), the
+    candidate index and int64 position of each occurrence, candidate-major
+    and position-sorted within a candidate. ``parts`` is decoded (docs,
+    tfs, positions) holding every doc of ``cand``."""
+    docs, tfs, pos = parts
+    s = np.zeros(len(tfs) + 1, dtype=np.int64)
+    np.cumsum(tfs, out=s[1:])
+    i = np.searchsorted(docs, cand)
+    starts, lens = s[i], s[i + 1] - s[i]
+    ci = np.repeat(np.arange(len(cand), dtype=np.int64), lens)
+    return ci, _gather_ranges(pos, starts, lens).astype(np.int64)
+
+
+def _pos_keys(ci: np.ndarray, p: np.ndarray) -> np.ndarray:
+    """Packed keys (module docstring) for positions ``p`` in
+    [−2³¹, 2³¹]: keys sort by (ci, p), and p = 2³¹ is the first key of the
+    next candidate (SpanNot's clamped window relies on both ends)."""
+    return (ci << _POS_SHIFT) + (p + _POS_BIAS)
+
+
+def _nearest(
+    ka: np.ndarray, ca: np.ndarray, kb: np.ndarray, side: str, slop: int,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Each key of ``ka`` paired with the first key of ``kb`` at or after
+    it (``side='left'``) or strictly after it (``'right'``) in the same
+    candidate — the NearSpans step. Returns (match mask over ``ka``, index
+    into ``kb``, width = gap − 1); a match needs width <= slop. ``kb`` is
+    non-empty."""
+    nxt = np.searchsorted(kb, ka, side=side)
+    nc = np.minimum(nxt, kb.size - 1)
+    width = (kb[nc] & _POS_MASK) - (ka & _POS_MASK) - 1
+    m = (nxt < kb.size) & ((kb[nc] >> _POS_SHIFT) == ca) & (width <= slop)
+    return m, nc, width
+
+
+def _slop_factors(width: np.ndarray) -> np.ndarray:
+    """``SloppySimScorer#computeSlopFactor`` f32 1/(1 + width) per match,
+    widened to float64 for an exact per-doc sum."""
+    return (
+        np.float32(1.0) / (np.float32(1.0) + width.astype(np.float32))
+    ).astype(np.float64)
+
+
+def _phrase_freqs(per: list[tuple], offsets: tuple[int, ...]) -> tuple[np.ndarray, np.ndarray]:
     """Exact-phrase match: docs containing all terms at relative `offsets`.
 
-    Two-phase (``L/search/TwoPhaseIterator``): doc-level intersection first
-    (cheap sorted-array intersect), positions verified only on survivors.
-    The verify is VECTORIZED over all candidate docs at once: each term's
-    candidate position slices are gathered into one flat array of packed
-    (candidate_idx << 21 | offset-shifted position) keys — sorted and unique
-    by construction — and the phrase windows are the running sorted-set
+    ``per`` holds each term's decoded (docs, tfs, positions). Positions are
+    verified only on the candidate docs, all at once: each term's packed
+    keys of (candidate, position − offset) are sorted and unique by
+    construction, and the phrase windows are the running sorted-set
     intersection across terms (one ``np.intersect1d`` per term, not per
-    doc). Per-candidate phrase freq = bincount of surviving keys' candidate
-    index. Returns (docs, phrase_freq) with freq >= 1.
+    doc). Offsets shift so the smallest is 0 — matches and freq do not
+    change under a common shift — and a phrase spanning 2³¹ or more
+    positions matches nothing. Per-candidate phrase freq = bincount of the
+    surviving keys' candidate index. Returns (docs, phrase_freq) with
+    freq >= 1.
     """
-    cand = docs_per_term[0]
-    for d in docs_per_term[1:]:
-        cand = cand[np.isin(cand, d, assume_unique=True)]
-    if cand.size == 0:
-        return cand, np.empty(0, dtype=np.int64)
-    splits = []
-    for tfs in tfs_per_term:
-        s = np.zeros(len(tfs) + 1, dtype=np.int64)
-        np.cumsum(tfs, out=s[1:])
-        splits.append(s)
+    empty = np.empty(0, dtype=np.int64)
+    cand = _candidates(per)
+    offsets = [o - min(offsets) for o in offsets]
+    if cand.size == 0 or max(offsets) >= _POS_BIAS:
+        return empty, empty
     acc: np.ndarray | None = None
-    for t, (docs_t, pos_t, off) in enumerate(zip(docs_per_term, pos_flat_per_term, offsets)):
-        i = np.searchsorted(docs_t, cand)
-        starts = splits[t][i]
-        lens = splits[t][i + 1] - starts
-        ci = np.repeat(np.arange(len(cand), dtype=np.int64), lens)
-        p = _gather_ranges(pos_t, starts, lens).astype(np.int64) - off
-        if off > _POS_MARGIN or (p.size and int(p.max()) >= _POS_LIMIT):
-            return _phrase_freqs_slow(
-                docs_per_term, pos_flat_per_term, splits, offsets, cand
-            )
-        keys = (ci << _POS_SHIFT) | (p + _POS_MARGIN)
+    for parts, off in zip(per, offsets):
+        ci, p = _cand_positions(parts, cand)
+        keys = _pos_keys(ci, p - off)
         acc = keys if acc is None else np.intersect1d(acc, keys, assume_unique=True)
         if acc.size == 0:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+            return empty, empty
     freqs = np.bincount(acc >> _POS_SHIFT, minlength=len(cand))
     keep = freqs > 0
     return cand[keep], freqs[keep].astype(np.int64)
-
-
-def _phrase_freqs_slow(
-    docs_per_term: list[np.ndarray],
-    pos_flat_per_term: list[np.ndarray],
-    splits: list[np.ndarray],
-    offsets: tuple[int, ...],
-    cand: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-candidate fallback for pathological inputs (positions beyond the
-    packed-key range or offsets > 64) — same semantics, per-doc loop."""
-    out_docs, out_freq = [], []
-    for doc in cand:
-        acc = None
-        for t, (docs_t, pos_t, off) in enumerate(zip(docs_per_term, pos_flat_per_term, offsets)):
-            i = int(np.searchsorted(docs_t, doc))
-            p = pos_t[splits[t][i]:splits[t][i + 1]] - off
-            acc = p if acc is None else np.intersect1d(acc, p, assume_unique=True)
-            if acc.size == 0:
-                break
-        if acc is not None and acc.size:
-            out_docs.append(doc)
-            out_freq.append(acc.size)
-    return np.array(out_docs, dtype=np.int64), np.array(out_freq, dtype=np.int64)
 
 
 def _sloppy_freq_one_doc(pos_lists: list[np.ndarray], slop: int) -> np.float32:
@@ -215,12 +239,7 @@ def _sloppy_freq_one_doc(pos_lists: list[np.ndarray], slop: int) -> np.float32:
 
 
 def _sloppy_freqs_2term_vec(
-    docs_per_term: list[np.ndarray],
-    pos_flat_per_term: list[np.ndarray],
-    splits: list[np.ndarray],
-    offsets: tuple[int, ...],
-    cand: np.ndarray,
-    slop: int,
+    per: list[tuple], offsets: tuple[int, ...], cand: np.ndarray, slop: int,
 ) -> np.ndarray:
     """Vectorized 2-iterator sloppy-phrase verify over ALL candidate docs at
     once — bitwise-identical to ``_sloppy_freq_one_doc`` (property-tested in
@@ -236,15 +255,10 @@ def _sloppy_freqs_2term_vec(
     ``cand`` (0 where no window ≤ slop)."""
     ci_parts, p_parts, t_parts = [], [], []
     for t in (0, 1):
-        i = np.searchsorted(docs_per_term[t], cand)
-        starts = splits[t][i]
-        lens = splits[t][i + 1] - starts
-        ci_parts.append(np.repeat(np.arange(len(cand), dtype=np.int64), lens))
-        p_parts.append(
-            _gather_ranges(pos_flat_per_term[t], starts, lens).astype(np.int64)
-            - offsets[t]
-        )
-        t_parts.append(np.full(int(lens.sum()), t, dtype=np.int8))
+        ci, p = _cand_positions(per[t], cand)
+        ci_parts.append(ci)
+        p_parts.append(p - offsets[t])
+        t_parts.append(np.full(p.size, t, dtype=np.int8))
     ci = np.concatenate(ci_parts)
     p = np.concatenate(p_parts)
     tt = np.concatenate(t_parts)
@@ -302,46 +316,22 @@ def _span_near_freqs_2term(
     occurrence p1 of the second; width = p1 − p0 − 1; matches (width <=
     slop) contribute 1/(1+width) (``SloppySimScorer#computeSlopFactor``).
 
-    Vectorized over ALL candidate docs at once with the phrase-verify
-    packed-key trick: (cand_idx << 21 | pos) keys make one global
-    ``searchsorted`` find every p0's next p1 without a per-doc loop. f32
-    slop factors accumulate in float64 (``np.add.at``), one f32 cast.
-    Returns (docs, float32 span freqs)."""
-    docs0, tfs0, pos0 = parts0
-    docs1, tfs1, pos1 = parts1
-    cand = docs0[np.isin(docs0, docs1, assume_unique=True)]
+    Vectorized over ALL candidate docs at once: over packed keys one global
+    ``searchsorted`` finds every p0's next p1 (``_nearest``). f32 slop
+    factors accumulate in float64 (``np.add.at``), one f32 cast. Returns
+    (docs, float32 span freqs)."""
+    cand = _candidates([parts0, parts1])
     empty = np.empty(0, dtype=np.float32)
     if cand.size == 0:
         return cand, empty
-    mask = (np.int64(1) << _POS_SHIFT) - 1
-    keys, cis = [], []
-    for docs_t, tfs_t, pos_t in ((docs0, tfs0, pos0), (docs1, tfs1, pos1)):
-        s = np.zeros(len(tfs_t) + 1, dtype=np.int64)
-        np.cumsum(tfs_t, out=s[1:])
-        i = np.searchsorted(docs_t, cand)
-        starts, lens = s[i], s[i + 1] - s[i]
-        ci = np.repeat(np.arange(len(cand), dtype=np.int64), lens)
-        p = _gather_ranges(pos_t, starts, lens).astype(np.int64)
-        if p.size and int(p.max()) >= _POS_LIMIT:
-            # positions beyond the packing budget: fall back to a per-doc
-            # walk (never hit by SmallFloat-bounded synthetic docs; guard
-            # for multi-million-token documents)
-            return _span_near_freqs_slow(parts0, parts1, cand, slop)
-        keys.append((ci << _POS_SHIFT) | (p + _POS_MARGIN))
-        cis.append(ci)
-    k0, k1 = keys
-    nxt = np.searchsorted(k1, k0, side="right")
-    has = nxt < k1.size
-    nc = np.minimum(nxt, k1.size - 1)
-    width = (k1[nc] & mask) - (k0 & mask) - 1
-    m = has & ((k1[nc] >> _POS_SHIFT) == cis[0]) & (width <= slop)
+    ci0, p0 = _cand_positions(parts0, cand)
+    k0 = _pos_keys(ci0, p0)
+    k1 = _pos_keys(*_cand_positions(parts1, cand))
+    m, _, width = _nearest(k0, ci0, k1, "right", slop)
     if not m.any():
         return np.empty(0, dtype=np.int64), empty
-    sf = (
-        np.float32(1.0) / (np.float32(1.0) + width[m].astype(np.float32))
-    ).astype(np.float64)
     freq = np.zeros(len(cand), dtype=np.float64)
-    np.add.at(freq, cis[0][m], sf)
+    np.add.at(freq, ci0[m], _slop_factors(width[m]))
     keep = freq > 0
     return cand[keep], freq[keep].astype(np.float32)
 
@@ -365,121 +355,24 @@ def _span_near_unordered_freqs_2term(
     ``searchsorted`` per direction, f32 slop factors summed in float64
     (exact — f32 values are exact in f64 and the magnitudes stay far below
     the 53-bit mantissa), one final f32 cast. Returns (docs, span freqs)."""
-    docs0, tfs0, pos0 = parts0
-    docs1, tfs1, pos1 = parts1
-    cand = docs0[np.isin(docs0, docs1, assume_unique=True)]
+    cand = _candidates([parts0, parts1])
     empty = np.empty(0, dtype=np.float32)
     if cand.size == 0:
         return cand, empty
-    mask = (np.int64(1) << _POS_SHIFT) - 1
-    keys, cis = [], []
-    for docs_t, tfs_t, pos_t in ((docs0, tfs0, pos0), (docs1, tfs1, pos1)):
-        s = np.zeros(len(tfs_t) + 1, dtype=np.int64)
-        np.cumsum(tfs_t, out=s[1:])
-        i = np.searchsorted(docs_t, cand)
-        starts, lens = s[i], s[i + 1] - s[i]
-        ci = np.repeat(np.arange(len(cand), dtype=np.int64), lens)
-        p = _gather_ranges(pos_t, starts, lens).astype(np.int64)
-        if p.size and int(p.max()) >= _POS_LIMIT:
-            return _span_near_unordered_freqs_slow(parts0, parts1, cand, slop)
-        keys.append((ci << _POS_SHIFT) | (p + _POS_MARGIN))
-        cis.append(ci)
+    ci0, p0 = _cand_positions(parts0, cand)
+    ci1, p1 = _cand_positions(parts1, cand)
+    k0, k1 = _pos_keys(ci0, p0), _pos_keys(ci1, p1)
     freq = np.zeros(len(cand), dtype=np.float64)
-    # (ka, kb, side): 'left' = first partner ≥ (term0 side), 'right' =
-    # first partner strictly > (term1 side — equal positions were consumed
-    # by the term0 step already)
-    for ka, kb, ca, side in (
-        (keys[0], keys[1], cis[0], "left"),
-        (keys[1], keys[0], cis[1], "right"),
-    ):
-        if not ka.size or not kb.size:
-            continue
-        nxt = np.searchsorted(kb, ka, side=side)
-        has = nxt < kb.size
-        nc = np.minimum(nxt, kb.size - 1)
-        width = (kb[nc] & mask) - (ka & mask) - 1
-        m = has & ((kb[nc] >> _POS_SHIFT) == ca) & (width <= slop)
-        if not m.any():
-            continue
-        sf = (
-            np.float32(1.0)
-            / (np.float32(1.0) + np.maximum(width[m], 0).astype(np.float32))
-        ).astype(np.float64)
-        np.add.at(freq, ca[m], sf)
+    # 'left' = first partner ≥ (term0 side), 'right' = first partner
+    # strictly > (term1 side — equal positions were consumed by the term0
+    # step already)
+    for ka, ca, kb, side in ((k0, ci0, k1, "left"), (k1, ci1, k0, "right")):
+        m, _, width = _nearest(ka, ca, kb, side, slop)
+        np.add.at(freq, ca[m], _slop_factors(np.maximum(width[m], 0)))
     keep = freq > 0
     if not keep.any():
         return np.empty(0, dtype=np.int64), empty
     return cand[keep], freq[keep].astype(np.float32)
-
-
-def _span_near_unordered_freqs_slow(
-    parts0: tuple, parts1: tuple, cand: np.ndarray, slop: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-doc fallback for the unordered kernel (same rule, plain loop —
-    the literal two-pointer NearSpansUnordered walk)."""
-    docs0, tfs0, pos0 = parts0
-    docs1, tfs1, pos1 = parts1
-    s0 = np.zeros(len(tfs0) + 1, dtype=np.int64)
-    np.cumsum(tfs0, out=s0[1:])
-    s1 = np.zeros(len(tfs1) + 1, dtype=np.int64)
-    np.cumsum(tfs1, out=s1[1:])
-    out_docs, out_freqs = [], []
-    for d in cand:
-        i0 = int(np.searchsorted(docs0, d))
-        i1 = int(np.searchsorted(docs1, d))
-        a = pos0[s0[i0]:s0[i0 + 1]].astype(np.int64)
-        b = pos1[s1[i1]:s1[i1 + 1]].astype(np.int64)
-        i = j = 0
-        f = 0.0
-        while i < a.size and j < b.size:
-            width = int(abs(a[i] - b[j])) - 1
-            if width <= slop:
-                f += float(
-                    np.float32(1.0)
-                    / (np.float32(1.0) + np.float32(max(0, width)))
-                )
-            if a[i] <= b[j]:
-                i += 1
-            else:
-                j += 1
-        if f > 0:
-            out_docs.append(d)
-            out_freqs.append(np.float32(f))
-    return (
-        np.array(out_docs, dtype=np.int64),
-        np.array(out_freqs, dtype=np.float32),
-    )
-
-
-def _span_near_freqs_slow(
-    parts0: tuple, parts1: tuple, cand: np.ndarray, slop: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-doc fallback for _span_near_freqs_2term (same rule, plain loop)."""
-    docs0, tfs0, pos0 = parts0
-    docs1, tfs1, pos1 = parts1
-    s0 = np.zeros(len(tfs0) + 1, dtype=np.int64)
-    np.cumsum(tfs0, out=s0[1:])
-    s1 = np.zeros(len(tfs1) + 1, dtype=np.int64)
-    np.cumsum(tfs1, out=s1[1:])
-    out_docs, out_freqs = [], []
-    for d in cand:
-        i0 = int(np.searchsorted(docs0, d))
-        i1 = int(np.searchsorted(docs1, d))
-        p0 = pos0[s0[i0]:s0[i0 + 1]].astype(np.int64)
-        p1 = pos1[s1[i1]:s1[i1 + 1]].astype(np.int64)
-        nxt = np.searchsorted(p1, p0, side="right")
-        has = nxt < p1.size
-        width = p1[np.minimum(nxt, p1.size - 1)] - p0 - 1
-        m = has & (width <= slop)
-        if m.any():
-            sf = (
-                np.float32(1.0) / (np.float32(1.0) + width[m].astype(np.float32))
-            ).astype(np.float64)
-            out_docs.append(d)
-            out_freqs.append(np.float32(sf.sum()))
-    if not out_docs:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
-    return np.array(out_docs, dtype=np.int64), np.array(out_freqs, dtype=np.float32)
 
 
 def _interval_pairs(
@@ -512,10 +405,7 @@ def _interval_pairs(
         pair_ok &= stacked | ~reaches
         gaps = np.maximum(gaps, 0)
     m = pair_ok & (gaps <= maxgaps)
-    sf = (
-        np.float32(1.0) / (np.float32(1.0) + gaps[m].astype(np.float32))
-    ).astype(np.float64)
-    return m, sf
+    return m, _slop_factors(gaps[m])
 
 
 def _interval_unordered_freqs(
@@ -527,79 +417,32 @@ def _interval_unordered_freqs(
     contributes 1/(1 + gaps) to the doc freq (the span family's
     slop-factor shape), f32 factors summed in float64, one f32 cast.
 
-    Vectorized over all candidate docs with packed (ci << 21 | pos) keys:
-    one concatenate + stable argsort merges every doc's streams at once
-    (second source first, so it sorts first at a shared position when
-    ordered); the adjacency test is one shifted compare."""
-    docs0, docs1 = parts0[0], parts1[0]
-    cand = docs0[np.isin(docs0, docs1, assume_unique=True)]
+    Vectorized over all candidate docs with packed keys: one concatenate +
+    stable argsort merges every doc's streams at once (the second source
+    first when ordered, so it sorts first at a shared position); the
+    adjacency test is one shifted compare."""
+    cand = _candidates([parts0, parts1])
     empty = np.empty(0, dtype=np.float32)
     if cand.size == 0:
         return cand, empty
+    sources = ((1, parts1), (0, parts0)) if ordered else ((0, parts0), (1, parts1))
     keys, flags = [], []
-    for fl, (docs_t, tfs_t, pos_t) in _interval_sources(parts0, parts1, ordered):
-        s = np.zeros(len(tfs_t) + 1, dtype=np.int64)
-        np.cumsum(tfs_t, out=s[1:])
-        i = np.searchsorted(docs_t, cand)
-        starts, lens = s[i], s[i + 1] - s[i]
-        ci = np.repeat(np.arange(len(cand), dtype=np.int64), lens)
-        p = _gather_ranges(pos_t, starts, lens).astype(np.int64)
-        if p.size and int(p.max()) >= _POS_LIMIT:
-            return _interval_unordered_slow(
-                parts0, parts1, maxgaps, cand, ordered
-            )
-        keys.append((ci << _POS_SHIFT) | (p + _POS_MARGIN))
+    for fl, parts in sources:
+        ci, p = _cand_positions(parts, cand)
+        keys.append(_pos_keys(ci, p))
         flags.append(np.full(p.size, fl, dtype=np.int8))
     k = np.concatenate(keys)
     f = np.concatenate(flags)
     order = np.argsort(k, kind="stable")
     k, f = k[order], f[order]
     same_doc = (k[1:] >> _POS_SHIFT) == (k[:-1] >> _POS_SHIFT)
-    mask = (np.int64(1) << _POS_SHIFT) - 1
-    m, sf = _interval_pairs(k & mask, f, same_doc, maxgaps, ordered)
+    m, sf = _interval_pairs(k & _POS_MASK, f, same_doc, maxgaps, ordered)
     if not m.any():
         return np.empty(0, dtype=np.int64), empty
     freq = np.zeros(len(cand), dtype=np.float64)
     np.add.at(freq, (k[:-1][m] >> _POS_SHIFT), sf)
     keep = freq > 0
     return cand[keep], freq[keep].astype(np.float32)
-
-
-def _interval_sources(parts0: tuple, parts1: tuple, ordered: bool) -> tuple:
-    """(flag, parts) per source in merge order: the second source first
-    when ordered, so a stable sort puts it first at a shared position."""
-    return ((1, parts1), (0, parts0)) if ordered else ((0, parts0), (1, parts1))
-
-
-def _interval_unordered_slow(
-    parts0: tuple, parts1: tuple, maxgaps: int, cand: np.ndarray,
-    ordered: bool = False,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-doc fallback for _interval_unordered_freqs (same rule)."""
-    slices = []
-    for fl, (docs_t, tfs_t, pos_t) in _interval_sources(parts0, parts1, ordered):
-        s = np.zeros(len(tfs_t) + 1, dtype=np.int64)
-        np.cumsum(tfs_t, out=s[1:])
-        slices.append((fl, docs_t, s, pos_t))
-    out_docs, out_freqs = [], []
-    for d in cand:
-        ps, fs = [], []
-        for fl, docs_t, s, pos_t in slices:
-            i = int(np.searchsorted(docs_t, d))
-            pp = pos_t[s[i]:s[i + 1]].astype(np.int64)
-            ps.append(pp)
-            fs.append(np.full(pp.size, fl, dtype=np.int8))
-        p = np.concatenate(ps)
-        f = np.concatenate(fs)
-        order = np.argsort(p, kind="stable")
-        p, f = p[order], f[order]
-        m, sf = _interval_pairs(p, f, np.ones(p.size - 1, dtype=bool), maxgaps, ordered)
-        if m.any():
-            out_docs.append(d)
-            out_freqs.append(np.float32(sf.sum()))
-    if not out_docs:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
-    return np.array(out_docs, dtype=np.int64), np.array(out_freqs, dtype=np.float32)
 
 
 def _span_contain_freqs(
@@ -622,38 +465,21 @@ def _span_contain_freqs(
     ``SloppySimScorer#computeSlopFactor`` 1/(1+width(big)) like SpanNear
     (f32 factors summed in float64, one f32 cast).
 
-    Vectorized with the packed-key trick over ALL candidate docs: within a
-    doc the minimal ordered big spans have NON-DECREASING ends as starts
-    increase (nearest-following is monotone), so the predecessor matched
-    span by start carries the maximal end — one ``searchsorted`` per
-    little occurrence decides enclosure; one lo/hi pair per big span
-    counts enclosed littles."""
-    docs0, docs1, docs_l = parts0[0], parts1[0], parts_l[0]
-    cand = docs0[np.isin(docs0, docs1, assume_unique=True)]
-    cand = cand[np.isin(cand, docs_l, assume_unique=True)]
+    Vectorized with packed keys over ALL candidate docs: the big spans
+    come from the ordered SpanNear step (``_nearest``); within a doc the
+    minimal ordered big spans have NON-DECREASING ends as starts increase
+    (nearest-following is monotone), so the predecessor matched span by
+    start carries the maximal end — one ``searchsorted`` per little
+    occurrence decides enclosure; one lo/hi pair per big span counts
+    enclosed littles."""
+    cand = _candidates([parts0, parts1, parts_l])
     if cand.size == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
-    mask = (np.int64(1) << _POS_SHIFT) - 1
-    packed = []
-    for docs_t, tfs_t, pos_t in (parts0, parts1, parts_l):
-        s = np.zeros(len(tfs_t) + 1, dtype=np.int64)
-        np.cumsum(tfs_t, out=s[1:])
-        i = np.searchsorted(docs_t, cand)
-        starts, lens = s[i], s[i + 1] - s[i]
-        ci = np.repeat(np.arange(len(cand), dtype=np.int64), lens)
-        p = _gather_ranges(pos_t, starts, lens).astype(np.int64)
-        if p.size and int(p.max()) >= _POS_LIMIT:
-            # huge-doc guard (mirrors the span_near fallback)
-            return _span_contain_freqs_slow(
-                parts0, parts1, big_slop, parts_l, mode, cand
-            )
-        packed.append(((ci << _POS_SHIFT) | (p + _POS_MARGIN), ci))
-    (k0, ci0), (k1, _), (kl, cil) = packed
-    nxt = np.searchsorted(k1, k0, side="right")
-    has = nxt < k1.size
-    nc = np.minimum(nxt, k1.size - 1)
-    width = (k1[nc] & mask) - (k0 & mask) - 1
-    m = has & ((k1[nc] >> _POS_SHIFT) == ci0) & (width <= big_slop)
+    ci0, p0 = _cand_positions(parts0, cand)
+    cil, pl = _cand_positions(parts_l, cand)
+    k0, kl = _pos_keys(ci0, p0), _pos_keys(cil, pl)
+    k1 = _pos_keys(*_cand_positions(parts1, cand))
+    m, nc, width = _nearest(k0, ci0, k1, "right", big_slop)
     if not m.any():
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
     ks, ke, wi, cis = k0[m], k1[nc[m]], width[m], ci0[m]
@@ -668,58 +494,9 @@ def _span_contain_freqs(
     lo = np.searchsorted(kl, ks, side="left")
     hi = np.searchsorted(kl, ke, side="right")
     ok = lo < hi
-    sf = (
-        np.float32(1.0) / (np.float32(1.0) + wi[ok].astype(np.float32))
-    ).astype(np.float64)
-    np.add.at(freq, cis[ok], sf)
+    np.add.at(freq, cis[ok], _slop_factors(wi[ok]))
     keep = freq > 0
     return cand[keep], freq[keep].astype(np.float32)
-
-
-def _span_contain_freqs_slow(
-    parts0: tuple, parts1: tuple, big_slop: int, parts_l: tuple, mode: str,
-    cand: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-doc fallback for _span_contain_freqs (same rule, plain loop)."""
-    slices = []
-    for docs_t, tfs_t, pos_t in (parts0, parts1, parts_l):
-        s = np.zeros(len(tfs_t) + 1, dtype=np.int64)
-        np.cumsum(tfs_t, out=s[1:])
-        slices.append((docs_t, s, pos_t))
-    out_docs, out_freqs = [], []
-    for d in cand:
-        ps = []
-        for docs_t, s, pos_t in slices:
-            i = int(np.searchsorted(docs_t, d))
-            ps.append(pos_t[s[i]:s[i + 1]].astype(np.int64))
-        p0, p1, pl = ps
-        nxt = np.searchsorted(p1, p0, side="right")
-        has = nxt < p1.size
-        end = p1[np.minimum(nxt, p1.size - 1)]
-        width = end - p0 - 1
-        m = has & (width <= big_slop)
-        if not m.any():
-            continue
-        s0, s1, w = p0[m], end[m], width[m]
-        if mode == "within":
-            idx = np.searchsorted(s0, pl, side="right") - 1
-            ok = (idx >= 0) & (pl <= s1[np.maximum(idx, 0)])
-            f = float(ok.sum())
-        else:
-            lo = np.searchsorted(pl, s0, side="left")
-            hi = np.searchsorted(pl, s1, side="right")
-            ok = lo < hi
-            f = float(
-                (np.float32(1.0) / (np.float32(1.0) + w[ok].astype(np.float32)))
-                .astype(np.float64).sum()
-            )
-        if f > 0:
-            out_docs.append(d)
-            out_freqs.append(f)
-    if not out_docs:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
-    dt = np.int64 if mode == "within" else np.float32
-    return np.array(out_docs, dtype=np.int64), np.array(out_freqs, dtype=dt)
 
 
 def _span_not_freqs(
@@ -733,109 +510,60 @@ def _span_not_freqs(
     [p − pre, p + post]. Docs with no exclude postings pass through
     untouched (SpanNot rewrites to the include span there).
 
-    Vectorized: packed (doc_idx << 21 | pos) keys over BOTH lists; for each
-    include position one ``searchsorted`` finds the first exclude key >=
-    p − pre; the occurrence is removed iff that key is <= p + post within
-    the same doc. Surviving tf per doc = one bincount. Returns (docs,
-    int64 tfs)."""
+    Vectorized: packed keys over both lists, with the include docs as the
+    candidate index; for each include position one ``searchsorted`` finds
+    the first exclude key >= p − pre; the occurrence is removed iff that
+    key is <= p + post. Every position lies in [0, 2³¹), so clamping the
+    window's low end to [0, 2³¹] and its high end to [−1, 2³¹ − 1] is
+    exact for any ``pre``/``post``; a window outside the position range
+    stays empty. Surviving tf per doc = one bincount. Returns (docs, int64
+    tfs)."""
     docs_i, tfs_i, pos_i = parts_inc
-    docs_e, tfs_e, pos_e = parts_exc
-    if docs_i.size == 0 or docs_e.size == 0:
-        # no exclude postings anywhere: SpanNot rewrites to the include span
+    with_exc = np.flatnonzero(np.isin(docs_i, parts_exc[0], assume_unique=True))
+    if with_exc.size == 0:
+        # no exclude postings in any include doc: SpanNot rewrites to the
+        # include span
         return docs_i, tfs_i.astype(np.int64)
-    # align exclude postings onto the include doc list (docs without
-    # excludes keep every occurrence; _gather_ranges needs lens >= 1, so
-    # gather only over the include docs that actually carry excludes)
-    se = np.zeros(len(tfs_e) + 1, dtype=np.int64)
-    np.cumsum(tfs_e, out=se[1:])
-    ie = np.searchsorted(docs_e, docs_i)
-    ie_c = np.minimum(ie, len(docs_e) - 1)
-    has_exc = (ie < len(docs_e)) & (docs_e[ie_c] == docs_i)
-    idx_with = np.nonzero(has_exc)[0]
-    if idx_with.size == 0:
-        return docs_i, tfs_i.astype(np.int64)
-    lens_w = se[ie_c[idx_with] + 1] - se[ie_c[idx_with]]
-    di_e = np.repeat(idx_with.astype(np.int64), lens_w)
-    pe = _gather_ranges(pos_e, se[ie_c[idx_with]], lens_w).astype(np.int64)
+    ci_e, pe = _cand_positions(parts_exc, docs_i[with_exc])
+    ke = _pos_keys(with_exc[ci_e], pe)
     di_i = np.repeat(np.arange(len(docs_i), dtype=np.int64), tfs_i)
     pi = pos_i.astype(np.int64)
-    if (
-        pre > _POS_MARGIN
-        or (pi.size and int(pi.max()) + post >= _POS_LIMIT)
-        or (pe.size and int(pe.max()) >= _POS_LIMIT)
-    ):
-        # fall back: treat every occurrence as removable only via per-doc
-        # exact walk (huge-doc guard, mirrors the span_near fallback)
-        keep_docs, keep_tfs = [], []
-        si = np.zeros(len(tfs_i) + 1, dtype=np.int64)
-        np.cumsum(tfs_i, out=si[1:])
-        for j in range(len(docs_i)):
-            p = pos_i[si[j]:si[j + 1]].astype(np.int64)
-            q = pe[di_e == j]
-            if q.size:
-                lo = np.searchsorted(q, p - pre, side="left")
-                hit = (lo < q.size) & (q[np.minimum(lo, q.size - 1)] <= p + post)
-                p = p[~hit]
-            if p.size:
-                keep_docs.append(docs_i[j])
-                keep_tfs.append(p.size)
-        return (
-            np.array(keep_docs, dtype=np.int64),
-            np.array(keep_tfs, dtype=np.int64),
-        )
-    ke = (di_e << _POS_SHIFT) | (pe + _POS_MARGIN)
-    k_lo = (di_i << _POS_SHIFT) | (pi - pre + _POS_MARGIN)
-    k_hi = (di_i << _POS_SHIFT) | (pi + post + _POS_MARGIN)
+    # clamp the user ints first so p ∓ pre/post stays in int64
+    pre, post = (min(max(w, -_POS_BIAS), _POS_BIAS) for w in (pre, post))
+    k_lo = _pos_keys(di_i, np.clip(pi - pre, 0, _POS_BIAS))
+    k_hi = _pos_keys(di_i, np.clip(pi + post, -1, _POS_BIAS - 1))
     lo = np.searchsorted(ke, k_lo, side="left")
-    removed = (lo < ke.size) & (ke[np.minimum(lo, max(ke.size - 1, 0))] <= k_hi) if ke.size else np.zeros(len(pi), bool)
+    removed = (lo < ke.size) & (ke[np.minimum(lo, ke.size - 1)] <= k_hi)
     cnt = np.bincount(di_i[~removed], minlength=len(docs_i))
     keep = cnt > 0
     return docs_i[keep], cnt[keep].astype(np.int64)
 
 
 def _sloppy_phrase_freqs(
-    docs_per_term: list[np.ndarray],
-    pos_flat_per_term: list[np.ndarray],
-    tfs_per_term: list[np.ndarray],
-    offsets: tuple[int, ...],
-    slop: int,
+    per: list[tuple], offsets: tuple[int, ...], slop: int,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Sloppy-phrase match: docs containing all terms with ≥1 window within
     ``slop``. Returns (docs, float32 sloppy freq) with freq > 0. Same
-    two-phase shape as ``_phrase_freqs``; only the per-doc position verify
-    differs (ordered heap walk instead of offset intersection). The common
-    2-term case runs fully vectorized (``_sloppy_freqs_2term_vec``); n>2
-    phrases fall back to the per-doc heap walk."""
-    cand = docs_per_term[0]
-    for d in docs_per_term[1:]:
-        cand = cand[np.isin(cand, d, assume_unique=True)]
+    two-phase shape as ``_phrase_freqs``; only the position verify differs
+    (ordered heap walk instead of offset intersection). The common 2-term
+    case runs fully vectorized (``_sloppy_freqs_2term_vec``); n>2 phrases
+    run the heap walk per candidate doc."""
+    cand = _candidates(per)
     if cand.size == 0:
         return cand, np.empty(0, dtype=np.float32)
-    splits = []
-    for tfs in tfs_per_term:
-        s = np.zeros(len(tfs) + 1, dtype=np.int64)
-        np.cumsum(tfs, out=s[1:])
-        splits.append(s)
-    if len(docs_per_term) == 2:
-        freqs = _sloppy_freqs_2term_vec(
-            docs_per_term, pos_flat_per_term, splits, offsets, cand, slop
+    if len(per) == 2:
+        freqs = _sloppy_freqs_2term_vec(per, offsets, cand, slop)
+    else:
+        per_term = []
+        for parts, off in zip(per, offsets):
+            ci, p = _cand_positions(parts, cand)
+            per_term.append(np.split(p - off, np.flatnonzero(np.diff(ci)) + 1))
+        freqs = np.array(
+            [_sloppy_freq_one_doc(list(pls), slop) for pls in zip(*per_term)],
+            dtype=np.float32,
         )
-        keep = freqs > 0
-        return cand[keep], freqs[keep]
-    out_docs, out_freq = [], []
-    for doc in cand:
-        pls = []
-        for t, (docs_t, pos_t, off) in enumerate(zip(docs_per_term, pos_flat_per_term, offsets)):
-            i = int(np.searchsorted(docs_t, doc))
-            pls.append(pos_t[splits[t][i]:splits[t][i + 1]] - off)
-        f = _sloppy_freq_one_doc(pls, slop)
-        if f > 0:
-            out_docs.append(doc)
-            out_freq.append(f)
-    return (
-        np.array(out_docs, dtype=np.int64),
-        np.array(out_freq, dtype=np.float32),
-    )
+    keep = freqs > 0
+    return cand[keep], freqs[keep]
 
 
 def _combine(
@@ -994,10 +722,9 @@ def _clause_postings(c: CompiledClause, dec) -> tuple[np.ndarray, np.ndarray]:
         per = [_union_postings([dec(t) for t in slot]) for slot in c.slots]
     else:
         per = [dec(t) for t in c.terms]
-    args = ([p[0] for p in per], [p[2] for p in per], [p[1] for p in per], c.offsets)
     if c.slop == 0:
-        return _phrase_freqs(*args)
-    return _sloppy_phrase_freqs(*args, c.slop)
+        return _phrase_freqs(per, c.offsets)
+    return _sloppy_phrase_freqs(per, c.offsets, c.slop)
 
 
 def _or_group_scores(
@@ -1179,10 +906,10 @@ def score_segment_wand(
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
 
     # --- build atomic intervals from block boundaries ---
-    firsts = [np.array([blk["first_doc"] if isinstance(blk, dict) else blk.first_doc
-                        for blk in bl], dtype=np.int64) for bl in blocks_per_member]
-    lasts = [np.array([blk["last_doc"] if isinstance(blk, dict) else blk.last_doc
-                       for blk in bl], dtype=np.int64) for bl in blocks_per_member]
+    firsts = [np.array([b["first_doc"] for b in bl], dtype=np.int64)
+              for bl in blocks_per_member]
+    lasts = [np.array([b["last_doc"] for b in bl], dtype=np.int64)
+             for bl in blocks_per_member]
     pts = np.unique(np.concatenate(
         [f for f in firsts if f.size] + [l + 1 for l in lasts if l.size]
     ))
@@ -1204,8 +931,7 @@ def score_segment_wand(
             _, _, w_m, aux_m = members[mi]
             bmax = np.array([
                 float(q.sim.bound(
-                    int(_bf(b, "max_tf")), int(_bf(b, "min_norm")), w_m,
-                    q.cache, aux_m,
+                    int(b["max_tf"]), int(b["min_norm"]), w_m, q.cache, aux_m,
                 )) for b in bl
             ])
             mbounds[mi, ok] = bmax[idx[ok]]
@@ -1334,7 +1060,3 @@ def score_segment_wand(
                 if len(pool_docs) == q.k:
                     theta = float(pool_scores[-1])
     return _topk(pool_docs, pool_scores, q.k)
-
-
-def _bf(block, field):
-    return block[field] if isinstance(block, dict) else getattr(block, field)

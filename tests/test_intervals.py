@@ -1,7 +1,6 @@
 """Interval matcher parity (``lucene/queries/.../intervals/
 Intervals.java#unordered`` / ``#ordered`` + ``#maxgaps``): the packed-key
-vectorized kernel and its per-doc fallback against a brute-force
-reference that enumerates every (a, b) position pair and keeps the minimal
+vectorized kernel against a brute-force reference that enumerates every (a, b) position pair and keeps the minimal
 intervals (those containing no smaller interval of both terms); match when
 gaps <= maxgaps; freq = Σ f32 1/(1+gaps). Stacked tokens (both terms at one
 position) are covered: unordered they form the zero-width interval [p, p]
@@ -10,10 +9,7 @@ first's end)."""
 
 import numpy as np
 
-from lucene_solr_spark.search.kernels import (
-    _interval_unordered_freqs,
-    _interval_unordered_slow,
-)
+from lucene_solr_spark.search.kernels import _interval_unordered_freqs
 
 
 def _parts(per_doc: dict[int, list[int]]) -> tuple:
@@ -23,6 +19,10 @@ def _parts(per_doc: dict[int, list[int]]) -> tuple:
         [np.sort(np.asarray(per_doc[d], dtype=np.int64)) for d in docs]
     ) if len(docs) else np.empty(0, dtype=np.int64)
     return docs, tfs, pos
+
+
+def _shift(per_doc: dict[int, list[int]], base: int) -> tuple:
+    return _parts({d: [base + p for p in ps] for d, ps in per_doc.items()})
 
 
 def _has_interval(a: list, b: list, lo: int, hi: int, ordered: bool) -> bool:
@@ -108,19 +108,16 @@ def test_random_parity_vs_brute_and_fallback():
         maxgaps = int(rng.integers(0, 5))
         for ordered in (False, True):
             want = _brute(a, b, maxgaps, ordered)
-            docs, tfs = _interval_unordered_freqs(
-                _parts(a), _parts(b), maxgaps, ordered
-            )
-            got = dict(zip(docs.tolist(), tfs.tolist()))
-            assert set(got) == set(want), (trial, ordered)
-            for d in want:
-                np.testing.assert_allclose(got[d], want[d], rtol=1e-6)
-            sdocs, stfs = _interval_unordered_slow(
-                _parts(a), _parts(b), maxgaps,
-                np.array(common, dtype=np.int64), ordered,
-            )
-            np.testing.assert_array_equal(docs, sdocs)
-            np.testing.assert_array_equal(tfs, stfs)
+            # the same docs shifted past 2²¹ and up to 2³¹ − 1
+            # (intervals do not change under a common shift)
+            for base in (0, 3_000_000, 2**31 - 50):
+                docs, tfs = _interval_unordered_freqs(
+                    _shift(a, base), _shift(b, base), maxgaps, ordered
+                )
+                got = dict(zip(docs.tolist(), tfs.tolist()))
+                assert set(got) == set(want), (trial, ordered, base)
+                for d in want:
+                    np.testing.assert_allclose(got[d], want[d], rtol=1e-6)
 
 
 def test_ordered_intervals():
@@ -136,13 +133,6 @@ def test_ordered_intervals():
         _parts({1: [10]}), _parts({1: [2]}), 100, ordered=True
     )
     assert docs.size == 0
-    # slow path agrees
-    sdocs, stfs = _interval_unordered_slow(
-        _parts({5: [1, 9]}), _parts({5: [3, 7]}), 1,
-        np.array([5], dtype=np.int64), ordered=True,
-    )
-    assert sdocs.tolist() == [5]
-    np.testing.assert_allclose(stfs, [np.float32(0.5)])
 
 
 def test_stacked_tokens_hand_cases():
@@ -160,12 +150,10 @@ def test_stacked_tokens_hand_cases():
     )
     assert tfs.tolist() == [1.0]
     # ordered a=[1, 3], b=[3, 6]: (1a, 3b) gaps 1 and (3a, 6b) gaps 2
-    for fn in (_interval_unordered_freqs, _interval_unordered_slow):
-        args = (_parts({1: [1, 3]}), _parts({1: [3, 6]}), 5)
-        if fn is _interval_unordered_slow:
-            args += (np.array([1], dtype=np.int64),)
-        docs, tfs = fn(*args, ordered=True)
-        np.testing.assert_allclose(tfs, [np.float32(0.5 + 1 / 3)], rtol=1e-6)
+    docs, tfs = _interval_unordered_freqs(
+        _parts({1: [1, 3]}), _parts({1: [3, 6]}), 5, ordered=True
+    )
+    np.testing.assert_allclose(tfs, [np.float32(0.5 + 1 / 3)], rtol=1e-6)
 
 
 def test_stacked_token_interval_query_scores_finite_brute_value():

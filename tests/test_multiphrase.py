@@ -83,9 +83,7 @@ def test_multiphrase_matches_naive(case):
         _union_postings([_postings_from_docs(term_pos[t]) for t in slot])
         for slot in slots
     ]
-    docs, freqs = _phrase_freqs(
-        [p[0] for p in per], [p[2] for p in per], [p[1] for p in per], offsets
-    )
+    docs, freqs = _phrase_freqs(per, offsets)
     want = _naive_multiphrase_freqs(term_pos, slots, offsets)
     assert dict(zip(docs.tolist(), freqs.tolist())) == want
 

@@ -216,7 +216,7 @@ def test_sloppy_2term_vectorized_parity(corpus, slop):
         tfs.append(np.array([len((a, b)[t]) for (a, b) in
                              (docs[i] for i in ids)], dtype=np.int64))
     got_docs, got_freq = _sloppy_phrase_freqs(
-        docs_per_term, pos_flat, tfs, offsets, slop)
+        list(zip(docs_per_term, tfs, pos_flat)), offsets, slop)
     # reference: per-doc heap walk over offset-adjusted lists
     exp = {}
     for d, (a, b) in enumerate(docs):

@@ -8,10 +8,7 @@ q). 'within' freq = enclosed little count; 'containing' freq = Σ f32
 
 import numpy as np
 
-from lucene_solr_spark.search.kernels import (
-    _span_contain_freqs,
-    _span_contain_freqs_slow,
-)
+from lucene_solr_spark.search.kernels import _span_contain_freqs
 
 
 def _parts(per_doc: dict[int, list[int]]) -> tuple:
@@ -21,6 +18,10 @@ def _parts(per_doc: dict[int, list[int]]) -> tuple:
         [np.sort(np.asarray(per_doc[d], dtype=np.int64)) for d in docs]
     ) if len(docs) else np.empty(0, dtype=np.int64)
     return docs, tfs, pos
+
+
+def _shift(per_doc: dict[int, list[int]], base: int) -> tuple:
+    return _parts({d: [base + p for p in ps] for d, ps in per_doc.items()})
 
 
 def _brute(b0: dict, b1: dict, slop: int, lit: dict, mode: str) -> dict:
@@ -106,20 +107,14 @@ def test_random_parity_vs_brute_and_fallback():
         slop = int(rng.integers(0, 6))
         for mode in ("within", "containing"):
             want = _brute(b0, b1, slop, lit, mode)
-            docs, tfs = _span_contain_freqs(
-                _parts(b0), _parts(b1), slop, _parts(lit), mode
-            )
-            got = dict(zip(docs.tolist(), tfs.tolist()))
-            assert set(got) == set(want), (trial, mode)
-            for d in want:
-                np.testing.assert_allclose(got[d], want[d], rtol=1e-6)
-            # slow fallback agrees bitwise with the vectorized path
-            cand = np.array(sorted(common), dtype=np.int64)
-            sdocs, stfs = _span_contain_freqs_slow(
-                _parts(b0), _parts(b1), slop, _parts(lit), mode, cand
-            )
-            np.testing.assert_array_equal(docs, sdocs)
-            np.testing.assert_array_equal(
-                np.asarray(tfs, dtype=np.float64),
-                np.asarray(stfs, dtype=np.float64),
-            )
+            # the same docs shifted past 2²¹ and up to 2³¹ − 1
+            # (containment does not change under a common shift)
+            for base in (0, 3_000_000, 2**31 - 60):
+                docs, tfs = _span_contain_freqs(
+                    _shift(b0, base), _shift(b1, base), slop, _shift(lit, base),
+                    mode,
+                )
+                got = dict(zip(docs.tolist(), tfs.tolist()))
+                assert set(got) == set(want), (trial, mode, base)
+                for d in want:
+                    np.testing.assert_allclose(got[d], want[d], rtol=1e-6)

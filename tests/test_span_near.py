@@ -1,14 +1,11 @@
 """SpanNearQuery matcher parity: the packed-key vectorized kernel against
-the per-doc reference walk (``L/search/spans/NearSpansOrdered`` rule: one
-span per start position, nearest following end, slop-factor freq)."""
+a brute-force per-doc recurrence (``L/search/spans/NearSpansOrdered`` rule:
+one span per start position, nearest following end, slop-factor freq)."""
 
 import numpy as np
 import pytest
 
-from lucene_solr_spark.search.kernels import (
-    _span_near_freqs_2term,
-    _span_near_freqs_slow,
-)
+from lucene_solr_spark.search.kernels import _span_near_freqs_2term
 
 
 def _parts(per_doc: dict[int, list[int]]) -> tuple:
@@ -18,6 +15,24 @@ def _parts(per_doc: dict[int, list[int]]) -> tuple:
         [np.sort(np.asarray(per_doc[d], dtype=np.int64)) for d in docs]
     ) if len(docs) else np.empty(0, dtype=np.int64)
     return docs, tfs, pos
+
+
+def _brute(per0: dict, per1: dict, slop: int) -> dict[int, np.float32]:
+    """For each p0, the nearest following p1 in the same doc; f32 factors
+    1/(1 + width) summed in float64 in p0 order, one f32 cast."""
+    expect = {}
+    for doc in sorted(set(per0) & set(per1)):
+        p1s = sorted(per1[doc])
+        f = 0.0
+        for p0 in sorted(per0[doc]):
+            nxt = [p for p in p1s if p > p0]
+            if nxt and nxt[0] - p0 - 1 <= slop:
+                f += float(
+                    np.float32(1.0) / (np.float32(1.0) + np.float32(nxt[0] - p0 - 1))
+                )
+        if f > 0:
+            expect[doc] = np.float32(f)
+    return expect
 
 
 def test_hand_case():
@@ -75,22 +90,7 @@ def test_nested_span_or_operands():
         u0 = _union_postings(members0)
         u1 = _union_postings(members1)
         docs_v, freq_v = _span_near_freqs_2term(u0, u1, slop)
-        # brute: for each p0 in union0, nearest following p1 in union1
-        expect = {}
-        for doc in range(n_docs):
-            p0s, p1s = sorted(per0.get(doc, ())), sorted(per1.get(doc, ()))
-            if not p0s or not p1s:
-                continue
-            f = 0.0
-            for p0 in p0s:
-                nxt = [p for p in p1s if p > p0]
-                if nxt and nxt[0] - p0 - 1 <= slop:
-                    f += float(
-                        np.float32(1.0)
-                        / (np.float32(1.0) + np.float32(nxt[0] - p0 - 1))
-                    )
-            if f > 0:
-                expect[doc] = f
+        expect = {d: float(f) for d, f in _brute(per0, per1, slop).items()}
         got = dict(zip(docs_v.tolist(), freq_v.astype(float).tolist()))
         assert set(got) == set(expect)
         for doc in got:
@@ -98,6 +98,8 @@ def test_nested_span_or_operands():
 
 
 def test_random_parity_vs_slow():
+    """Random docs against ``_brute``, bitwise, at positions from 0, past
+    2²¹ and up to 2³¹ − 1."""
     rng = np.random.default_rng(42)
     for trial in range(25):
         n_docs = int(rng.integers(1, 30))
@@ -113,10 +115,11 @@ def test_random_parity_vs_slow():
                 )
         if not d0 or not d1:
             continue
-        p0, p1 = _parts(d0), _parts(d1)
         slop = int(rng.integers(0, 8))
-        docs_v, freq_v = _span_near_freqs_2term(p0, p1, slop)
-        cand = p0[0][np.isin(p0[0], p1[0], assume_unique=True)]
-        docs_s, freq_s = _span_near_freqs_slow(p0, p1, cand, slop)
-        assert docs_v.tolist() == docs_s.tolist()
-        np.testing.assert_array_equal(freq_v, freq_s)
+        for base in (0, 3_000_000, 2**31 - 200):
+            s0 = {d: [base + int(p) for p in ps] for d, ps in d0.items()}
+            s1 = {d: [base + int(p) for p in ps] for d, ps in d1.items()}
+            docs_v, freq_v = _span_near_freqs_2term(_parts(s0), _parts(s1), slop)
+            want = _brute(s0, s1, slop)
+            assert docs_v.tolist() == sorted(want), (trial, base)
+            np.testing.assert_array_equal(freq_v, [want[d] for d in sorted(want)])

@@ -88,10 +88,14 @@ def test_random_parity_vs_brute_and_fallback():
         ref = _brute(inc, exc, pre, post)
         docs_v, tfs_v = _span_not_freqs(_parts(inc), _parts(exc), pre, post)
         assert dict(zip(docs_v.tolist(), tfs_v.tolist())) == ref
-        # huge-pre forces the per-doc fallback path — same answer required
-        big_pre = pre + 100  # > _POS_MARGIN → fallback
-        ref_big = _brute(inc, exc, big_pre, post)
-        docs_f, tfs_f = _span_not_freqs(
-            _parts(inc), _parts(exc), big_pre, post
-        )
-        assert dict(zip(docs_f.tolist(), tfs_f.tolist())) == ref_big
+        # wider windows, up to pre/post of 2³¹ and more, which the kernel
+        # clamps to the position range
+        for big_pre, big_post in (
+            (pre + 100, post), (pre, post + 100), (2**31 + pre, post),
+            (pre, 2**31 + post), (2**40, 2**40),
+        ):
+            ref_big = _brute(inc, exc, big_pre, big_post)
+            docs_f, tfs_f = _span_not_freqs(
+                _parts(inc), _parts(exc), big_pre, big_post
+            )
+            assert dict(zip(docs_f.tolist(), tfs_f.tolist())) == ref_big

@@ -4,16 +4,14 @@
 Driver entry ``ft_surround_topk`` gates parse→execute end-to-end against
 DuckDB; these tests certify the parser mapping (distance k → slop k−1,
 W/N, AND/OR/NOT, subset errors) and the vectorized unordered matcher's
-identity with the literal two-pointer NearSpansUnordered walk."""
+identity with the literal two-pointer NearSpansUnordered walk
+(``_two_pointer_walk``)."""
 
 import numpy as np
 import pytest
 
 from lucene_solr_spark.analysis import SimpleAnalyzer
-from lucene_solr_spark.search.kernels import (
-    _span_near_unordered_freqs_2term,
-    _span_near_unordered_freqs_slow,
-)
+from lucene_solr_spark.search.kernels import _span_near_unordered_freqs_2term
 from lucene_solr_spark.search.query import (
     SpanNearClause,
     SpanNearUnorderedClause,
@@ -67,6 +65,31 @@ def _parts(doc_pos: dict[int, list[int]]):
     return docs, tfs, pos
 
 
+def _two_pointer_walk(doc_pos0: dict, doc_pos1: dict, slop: int):
+    """The literal NearSpansUnordered walk per doc: pair the two heads,
+    match when |gap| − 1 <= slop (factor 1/(1 + max(0, width))), advance
+    the head with the smaller start (term0 on ties)."""
+    out_docs, out_freqs = [], []
+    for d in sorted(set(doc_pos0) & set(doc_pos1)):
+        a, b = sorted(doc_pos0[d]), sorted(doc_pos1[d])
+        i = j = 0
+        f = 0.0
+        while i < len(a) and j < len(b):
+            width = abs(a[i] - b[j]) - 1
+            if width <= slop:
+                f += float(
+                    np.float32(1.0) / (np.float32(1.0) + np.float32(max(0, width)))
+                )
+            if a[i] <= b[j]:
+                i += 1
+            else:
+                j += 1
+        if f > 0:
+            out_docs.append(d)
+            out_freqs.append(np.float32(f))
+    return out_docs, np.array(out_freqs, dtype=np.float32)
+
+
 def test_unordered_matches_both_directions():
     # doc 5: a at 3, b at 1 → unordered gap 1 matches, ordered would not
     p0 = _parts({5: [3]})
@@ -82,22 +105,18 @@ def test_unordered_vectorized_equals_two_pointer_walk():
         pa = np.unique(rng.randint(0, 40, rng.randint(1, 10)))
         pb = np.unique(rng.randint(0, 40, rng.randint(1, 10)))
         slop = int(rng.randint(0, 8))
-        p0 = _parts({7: pa.tolist()})
-        p1 = _parts({7: pb.tolist()})
-        d1, f1 = _span_near_unordered_freqs_2term(p0, p1, slop)
-        d2, f2 = _span_near_unordered_freqs_slow(
-            p0, p1, np.array([7], dtype=np.int64), slop
+        d1, f1 = _span_near_unordered_freqs_2term(
+            _parts({7: pa.tolist()}), _parts({7: pb.tolist()}), slop
         )
-        assert d1.tolist() == d2.tolist()
+        d2, f2 = _two_pointer_walk({7: pa.tolist()}, {7: pb.tolist()}, slop)
+        assert d1.tolist() == d2
         np.testing.assert_array_equal(f1, f2)
 
 
 def test_unordered_multi_doc():
-    p0 = _parts({1: [0, 4], 3: [2], 7: [1, 5, 9]})
-    p1 = _parts({3: [2, 6], 7: [4, 6], 9: [0]})
-    d1, f1 = _span_near_unordered_freqs_2term(p0, p1, 2)
-    d2, f2 = _span_near_unordered_freqs_slow(
-        p0, p1, np.array([3, 7], dtype=np.int64), 2
-    )
-    assert d1.tolist() == d2.tolist()
+    a = {1: [0, 4], 3: [2], 7: [1, 5, 9]}
+    b = {3: [2, 6], 7: [4, 6], 9: [0]}
+    d1, f1 = _span_near_unordered_freqs_2term(_parts(a), _parts(b), 2)
+    d2, f2 = _two_pointer_walk(a, b, 2)
+    assert d1.tolist() == d2 == [3, 7]
     np.testing.assert_array_equal(f1, f2)
