@@ -449,8 +449,14 @@ class _BaseAnalyzer:
         elif len(frames) == 1:
             frame = frames[0]
         else:
-            frame = pd.concat(frames, ignore_index=True)
-            frame["term"] = frame["term"].astype(object)
+            # from arrays, not pd.concat: an empty part would otherwise take
+            # part in (and, by pandas' deprecation, someday change) the
+            # result dtypes
+            frame = pd.DataFrame({
+                "row": np.concatenate([f["row"].to_numpy(np.int64) for f in frames]),
+                "term": np.concatenate([f["term"].to_numpy(object) for f in frames]),
+                "pos": np.concatenate([f["pos"].to_numpy(np.int32) for f in frames]),
+            })
             order = np.lexsort((frame["pos"].to_numpy(), frame["row"].to_numpy()))
             frame = frame.iloc[order].reset_index(drop=True)
         frame.attrs["doc_len"] = doc_len

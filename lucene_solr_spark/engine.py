@@ -39,6 +39,7 @@ from .index.build import build_index, read_term_stats
 from .search.bm25 import BM25, OMIT_NORMS
 from .search.query import BooleanSpec, CompiledQuery
 from .search.searcher import IndexSearcher, ranked_top
+from .util.segscan import local_frame
 
 # content-addressed index dir → its engine (or searcher / searcher list)
 _ENGINES: dict[str, object] = {}
@@ -132,13 +133,15 @@ def get_engine(
 
 
 def _present(out: DataFrame, score: str = "score") -> DataFrame:
-    """A ranked page as (rank int, doc_id bigint, score float), keyed on the
-    SOURCE doc id (``doc_key``)."""
+    """A rank-ordered page (``ranked_top`` or ``IndexSearcher.search``) as
+    (rank int, doc_id bigint, score float), keyed on the SOURCE doc id
+    (``doc_key``). A projection keeps the rows' order, so no sort: over a
+    searcher's LocalRelation page the result still collects without a job."""
     return out.select(
         F.col("rank").cast("int").alias("rank"),
         F.col("doc_key").cast("long").alias("doc_id"),
         F.col(score).cast("float").alias("score"),
-    ).orderBy("rank")
+    )
 
 
 class DocumentsEngine:
@@ -383,7 +386,9 @@ class DocumentsEngine:
             [(i + 1, d, float(sc)) for i, (d, sc) in enumerate(rows)],
             "rank int, doc_id long, score float",
         )
-        return _present(page.join(s.docs.select("doc_id", "doc_key"), "doc_id"))
+        return _present(
+            page.join(s.docs.select("doc_id", "doc_key"), "doc_id")
+        ).orderBy("rank")
 
     def join_filter_topk(
         self,
@@ -687,7 +692,7 @@ class DocumentsEngine:
         spec = self.searcher.parse(qtype, surface_terms, min_should)
         page1 = self.searcher.search(spec, k=k).collect()
         if len(page1) < k:
-            return self.spark.createDataFrame([], "rank int, doc_id long, score float")
+            return local_frame(self.spark, "rank int, doc_id long, score float")
         cursor = (page1[-1].score, page1[-1].doc_id)
         return _present(
             self.searcher.search(spec, k=k, with_keys=True, after=cursor)
@@ -1498,7 +1503,7 @@ class DocumentsEngine:
         )
         schema = "term string, tf long, min_pos int, max_pos int"
         if not row:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, schema)
         seg = int(row[0].seg)
         local = int(row[0].doc_id) - s.layout[seg][0]
         posts = s.postings.filter(
@@ -1868,7 +1873,7 @@ class DocumentsEngine:
         frows = first.select("doc_id", "doc_key", "score").collect()
         schema = "rank int, doc_id long, score float"
         if not frows:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, schema)
         rr = s.search(
             s.parse(rr_qtype, rr_terms), k=len(frows),
             filter_by_base=s.by_base(r.doc_id for r in frows),
@@ -2147,7 +2152,7 @@ class DocumentsEngine:
 
         Scale shape: the whole registry compiles with ONE stats job and
         executes as ONE batched per-segment kernel pass
-        (``searcher.search_many`` — the same shape Monitor's QueryIndex
+        (``searcher.hits_many`` — the same shape Monitor's QueryIndex
         batching has), so cost is one corpus scan regardless of registry
         size; matching is unranked (no top-k truncation — a monitor must
         not drop matches). ``presearch`` prunes the registry against the
@@ -2162,9 +2167,9 @@ class DocumentsEngine:
                 for qid, (qt, terms, msm) in stored.items()
             }
         if not specs:   # every standing query pruned: nothing can match
-            return self.spark.createDataFrame([], "query_id string, doc_id long")
+            return local_frame(self.spark, "query_id string, doc_id long")
         compiled = self.searcher.compile_many(specs)
-        hits = self.searcher.search_many(compiled, mode="exact")
+        hits = self.searcher.hits_many(compiled, mode="exact")
         keys = self.searcher.docs.select("doc_id", "doc_key")
         return (
             hits.join(keys, "doc_id", "left")
@@ -3382,7 +3387,7 @@ def field_masking_span_topk(
     df_t = ts.term_stats([tt]).get(tt, 0)
     df_b = bs.term_stats([bt]).get(bt, 0)
     if df_t == 0 or df_b == 0:
-        return spark.createDataFrame([], "rank int, doc_id long, score float")
+        return local_frame(spark, "rank int, doc_id long, score float")
     doc_count = bs.stats.doc_count
     w = np.float32(
         float(idf(df_t, doc_count)) + float(idf(df_b, doc_count))

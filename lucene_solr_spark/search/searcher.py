@@ -18,8 +18,14 @@ Query lifecycle (SURVEY.md §3.1, Spark shape):
 3. a keyed search reads the key columns of only those ≤k survivors from
    the segment's docs files inside the same task (fetch-fields-late, Solr
    PURPOSE_GET_FIELDS discipline: text/keys never flow through scoring),
-   so no doc-key join follows; the global TakeOrdered (score desc, docID
-   asc) limit k merges the per-segment top-k.
+   so no doc-key join follows.
+4. the per-segment top-k rows come back to the driver as Arrow
+   (``toArrow``), at most k rows per admitted segment, and ``merge_top``
+   merges them there (``TopDocs#merge`` / SolrCloud ``mergeIds``): one
+   stable sort by (score desc, docID asc) — per query for a query set —
+   cut to k and ranked 1…k. The page is handed back as a LocalRelation
+   (``util/segscan.local_frame``), so the scoring stage is the search's
+   last Spark stage and collecting the page launches no job.
 """
 
 from __future__ import annotations
@@ -32,16 +38,18 @@ from functools import cached_property
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import FloatType, LongType, StringType, StructField, StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import FloatType, IntegerType, LongType, StringType, StructField, StructType
 
 from ..index.build import ANALYZERS, IndexMeta, global_docs, read_manifest, read_term_stats
 from ..index.updates import read_tombstones, tombstone_files
 from .bm25 import BM25, CollectionStats, Similarity
 from .kernels import count_segment_matches, score_segment_exact, score_segment_wand
 from .query import BooleanSpec, CompiledQuery, compile_query, parse_fixture_query
-from ..util.segscan import segment_scan
+from ..util.segscan import local_frame, segment_scan
 from .segtask import PostingsSource, SegmentFiles, fetch_keys, open_segment
 
 _EMPTY_LOCALS = np.empty(0, dtype=np.int64)
@@ -55,6 +63,8 @@ BLOOM_DRIVER_BUDGET = 64 << 20
 BLOOM_MAX_TERMS = 16
 _HIT_FIELDS = [StructField("doc_id", LongType()), StructField("score", FloatType())]
 _MULTI_SCHEMA = StructType([StructField("query_id", StringType()), *_HIT_FIELDS])
+_RANK = StructField("rank", IntegerType(), nullable=False)
+_MANY_SCHEMA = StructType([_MULTI_SCHEMA["query_id"], _RANK, *_HIT_FIELDS])
 
 
 def _kernel(q: CompiledQuery, mode: str):
@@ -159,6 +169,31 @@ def ranked_top(df: DataFrame, k: int | None, *order) -> DataFrame:
         .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
         .orderBy("rank")
     )
+
+
+def merge_top(t: pa.Table, k: int | dict[str, int]) -> pa.Table:
+    """``TopDocs#merge`` on the driver: the per-segment top-k rows ``t``
+    in (score desc, doc_id asc) order, cut to ``k`` and numbered by a
+    1-based int32 ``rank`` column appended last. A ``k`` dict maps
+    query_id → k: the rows are ordered by query_id first, and each query
+    is ranked and cut on its own (the ``search_many`` shape)."""
+    per_query = isinstance(k, dict)
+    order = [("score", "descending"), ("doc_id", "ascending")]
+    t = t.take(pc.sort_indices(t, ([("query_id", "ascending")] if per_query else []) + order))
+    n = t.num_rows
+    qid = t["query_id"].to_numpy(zero_copy_only=False) if per_query else np.zeros(n)
+    first = np.flatnonzero(np.r_[True, qid[1:] != qid[:-1]][:n])
+    size = np.diff(np.r_[first, n])
+    rank = np.arange(1, n + 1) - np.repeat(first, size)
+    keep = rank <= (np.repeat([k[q] for q in qid[first]], size) if per_query else k)
+    return t.filter(keep).append_column(_RANK.name, pa.array(rank[keep], pa.int32()))
+
+
+def _collect(hits: DataFrame, scanned: bool) -> pa.Table:
+    """A scoring stage's rows as one Arrow table. Without a query clause no
+    stage runs: the frame is an empty LocalRelation, and the empty table
+    comes from its schema (collecting it as Arrow would launch a job)."""
+    return hits.toArrow() if scanned else to_arrow_schema(hits.schema).empty_table()
 
 
 def _osa_distance(a: str, b: str) -> int:
@@ -765,7 +800,9 @@ class IndexSearcher:
         after: tuple | None = None,
         filter_by_base: dict[int, np.ndarray] | None = None,
     ) -> DataFrame:
-        """Top-k → DataFrame(doc_id, score[, rank, key cols]).
+        """Top-k → DataFrame(doc_id, score[, key cols], rank) in rank order.
+        The scoring stage runs here and ``merge_top`` merges its rows on the
+        driver; the page comes back as a LocalRelation.
 
         mode: 'wand' (block-max pruning; phrase clauses fall back to exact
         automatically) or 'exact' (brute force — the distributed oracle).
@@ -778,10 +815,9 @@ class IndexSearcher:
             import dataclasses
 
             q = dataclasses.replace(q, filter_by_base=filter_by_base)
-        return ranked_top(
-            self.hits(q, mode=mode, after=after, with_keys=with_keys),
-            q.k, F.desc("score"), F.asc("doc_id"),
-        )
+        hits = self.hits(q, mode=mode, after=after, with_keys=with_keys)
+        top = merge_top(_collect(hits, bool(q.clauses)), q.k)
+        return local_frame(self.spark, StructType([*hits.schema.fields, _RANK]), top)
 
     def hits(
         self,
@@ -796,16 +832,16 @@ class IndexSearcher:
         roll-up callers), from ONE mapInArrow stage over the bloom-admitted
         segments; no global sort. The building block for roll-ups (block
         join, grouping) that aggregate hits without needing a total order;
-        ``search`` adds the TakeOrdered top-k on top. ``with_keys`` fetches
-        the key columns of the segment-local survivors inside the task;
-        ``sources`` replaces this index's own postings (default: the query's
-        scoring + MUST_NOT terms)."""
+        ``search`` merges the same stage's rows on the driver. ``with_keys``
+        fetches the key columns of the segment-local survivors inside the
+        task; ``sources`` replaces this index's own postings (default: the
+        query's scoring + MUST_NOT terms)."""
         schema = StructType(list(_HIT_FIELDS))
         if with_keys:
             for c in self.meta.key_cols:
                 schema.add(self.docs.schema[c])
         if not q.clauses:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, schema)
         if sources is None:
             terms = tuple(q.scoring_terms) + tuple(q.must_not_terms)
             sources = (PostingsSource(self.index_dir, terms),)
@@ -837,34 +873,36 @@ class IndexSearcher:
             return total, "EQ"
         return threshold, "GTE"
 
-    def search_many(
+    def hits_many(
         self, compiled: dict[str, CompiledQuery], mode: str = "wand"
     ) -> DataFrame:
-        """Run a whole query set in ONE job (the distributed 2-phase shape:
-        per-segment top-k per query → global per-query TakeOrdered).
-        → DataFrame(query_id, rank, doc_id, score)."""
-        from pyspark.sql import Window
-
+        """A whole query set's hits as an UNRANKED DataFrame(query_id,
+        doc_id, score) — each segment's top-``q.k`` per query (every match
+        for ``k=1 << 30``), from ONE scoring stage over every segment; the
+        ``hits`` analog of ``search_many``, for callers that want matches,
+        not a ranking."""
         terms = sorted({
             t for q in compiled.values()
             for t in (*q.scoring_terms, *q.must_not_terms)
         })
         if not terms:
-            return self.spark.createDataFrame([], "query_id string, rank int, doc_id long, score float")
+            return local_frame(self.spark, _MULTI_SCHEMA)
         files = self._segment_files((PostingsSource(self.index_dir, tuple(terms)),))
-        hits = segment_scan(
+        return segment_scan(
             self.spark, list(self.layout), _multi_task(files, compiled, mode),
             _MULTI_SCHEMA,
         )
-        ks = {qid: q.k for qid, q in compiled.items()}
-        k_df = self.spark.createDataFrame(
-            [(qid, k) for qid, k in ks.items()], "query_id string, k int"
+
+    def search_many(
+        self, compiled: dict[str, CompiledQuery], mode: str = "wand"
+    ) -> DataFrame:
+        """Run a whole query set in ONE job: per-segment top-k per query in
+        the scoring stage, then each query's ``merge_top`` on the driver.
+        → DataFrame(query_id, rank, doc_id, score) in (query_id, rank)
+        order."""
+        hits = self.hits_many(compiled, mode)
+        top = merge_top(
+            _collect(hits, any(q.clauses for q in compiled.values())),
+            {qid: q.k for qid, q in compiled.items()},
         )
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-        return (
-            hits.withColumn("rank", F.row_number().over(w))
-            .join(F.broadcast(k_df), "query_id")
-            .filter(F.col("rank") <= F.col("k"))
-            .select("query_id", "rank", "doc_id", "score")
-            .orderBy("query_id", "rank")
-        )
+        return local_frame(self.spark, _MANY_SCHEMA, top.select(_MANY_SCHEMA.names))

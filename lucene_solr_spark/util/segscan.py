@@ -8,6 +8,14 @@ defaultParallelism)`` tasks of a ``spark.range(n, numPartitions=n)
 engine↔Python boundary is paid once per task, not once per segment. No
 range partitioner samples the input and no shuffle feeds the tasks: each
 task opens its own segments' files.
+
+``local_frame`` builds the driver-side frames that stand in for a stage:
+an empty result, or a page merged on the driver. A frame built from a
+Python list (``spark.createDataFrame([], schema)``) is a ``LogicalRDD``,
+and collecting it launches a job of defaultParallelism tasks even for no
+rows; a frame built from an Arrow table is a ``LocalRelation`` (below
+``spark.sql.execution.arrow.localRelationThreshold``), and collecting it,
+or a projection of it, launches no job.
 """
 
 from __future__ import annotations
@@ -19,6 +27,19 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
+
+
+def local_frame(
+    spark: SparkSession, schema: StructType | str, table: pa.Table | None = None
+) -> DataFrame:
+    """``table`` (default: no rows) as a LocalRelation of ``schema`` (a
+    StructType or a DDL string); ``table``'s columns are in ``schema``'s
+    order."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if table is None:
+        table = to_arrow_schema(schema).empty_table()
+    return spark.createDataFrame(table, schema)
 
 
 def segment_scan(
@@ -33,7 +54,7 @@ def segment_scan(
     emits the returned tables. No segments ⇒ an empty local relation."""
     n = min(len(segs), spark.sparkContext.defaultParallelism)
     if n == 0:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, schema)
     groups = [segs[i::n] for i in range(n)]
     arrow_schema = to_arrow_schema(schema)
 

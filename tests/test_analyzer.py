@@ -305,3 +305,26 @@ def test_limit_token_count_goldens_and_path_parity():
         # zzuniq occurs only past the cut: it must not linger in the
         # term vocabulary (categorical dictionary) either
         assert "zzuniq" not in set(map(str, frame.term.unique()))
+
+
+def test_uax29_batch_with_empty_rows_keeps_dtypes():
+    """A batch with non-ASCII rows that yield no token (and empty rows)
+    next to ASCII rows that do: the batch frame keeps row int64, term
+    object and pos int32, matches the per-row path, and raises no pandas
+    FutureWarning about concatenating empty entries."""
+    import warnings
+
+    a = LuceneChainAnalyzer()
+    for texts in (
+        ["merge the batch", "’", ""],
+        ["’ — …", "Über straße merge", "", "batch scan"],
+    ):
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", FutureWarning)
+            f = a.analyze_batch(pd.Series(texts))
+        assert (f.dtypes["row"], f.dtypes["term"], f.dtypes["pos"]) == (
+            np.dtype(np.int64), np.dtype(object), np.dtype(np.int32),
+        )
+        assert list(zip(f.row, f.term, f.pos)) == [
+            (i, t, p) for i, txt in enumerate(texts) for t, p in a.analyze(txt)
+        ]

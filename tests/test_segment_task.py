@@ -1,10 +1,12 @@
 """One scoring stage per search (``search/segtask.py``): each segment's
 scoring task reads only the query's terms of its own segment, only
 bloom-admitted (and, at a commit point, only the commit's) segments get a
-task, and a keyed top-k runs at most two Spark jobs with no shuffle below
-the scoring operator."""
+task, and a keyed top-k runs at most two Spark jobs: the compile and the
+scoring stage, with no shuffle below the scoring operator and no stage
+after it (the per-segment top-k merge runs on the driver)."""
 
 import os
+import re
 import time
 
 import pyarrow.parquet as pq
@@ -91,21 +93,44 @@ def test_keyed_search_runs_one_scoring_stage(spark, sentinel_index):
     assert got == want and len(got) == 10
     jobs, stages, tasks = _job_counts(sc, "segtask-or3")
     assert jobs <= 2, jobs    # term_stats lookup + the scoring stage's collect
-    assert stages <= 3, stages
-    assert tasks <= min(len(s.layout), sc.defaultParallelism) + 2, tasks
+    assert stages <= 2, stages
+    assert tasks <= min(len(s.layout), sc.defaultParallelism) + 1, tasks
 
 
 def test_second_searcher_finds_no_shuffle_stage(spark, sentinel_index):
-    """A freshly opened searcher's keyed top-k: the adaptive final plan has
-    no shuffle query stage and no Exchange — the scoring operator sits
-    directly on its Range, and the top-k merge is the TakeOrdered."""
+    """A freshly opened searcher's keyed top-k: the scoring stage (the
+    same query's ``hits``) has no shuffle query stage and no Exchange in
+    its executed plan — the scoring operator sits directly on its Range —
+    and the page ``search`` returns is a LocalTableScan: no scan, Exchange
+    or sort runs after the scoring stage."""
     s = IndexSearcher(spark, sentinel_index)
-    df = s.search(s.parse("or3", OR3), k=10, with_keys=True)
-    assert len(df.collect()) == 10
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "isFinalPlan=true" in plan
-    assert "MapInArrow" in plan and "Range" in plan
+    q = s.compile(s.parse("or3", OR3), k=10)
+    hits = s.hits(q, with_keys=True)
+    assert len(hits.collect()) >= 10
+    plan = hits._jdf.queryExecution().executedPlan().toString()
+    assert re.match(r"MapInArrow .*\n\+- (\*\(\d+\) )?Range \(", plan), plan
     assert "ShuffleQueryStage" not in plan and "Exchange" not in plan
+    page = s.search(q, with_keys=True)
+    assert len(page.collect()) == 10
+    plan = page._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("LocalTableScan"), plan
+    assert "Exchange" not in plan and "Scan" not in plan.replace("LocalTableScan", "")
+
+
+def test_search_with_only_absent_terms_runs_only_the_compile_job(spark, sentinel_index):
+    """A query whose terms are all absent compiles to no clause: its empty
+    page is a LocalRelation, so collecting it adds no job to the
+    term_stats lookup."""
+    s = IndexSearcher(spark, sentinel_index)
+    spec = s.parse("or3", ["qqzabsent", "qqzmissing", "qqznowhere"])
+    s.stats  # the searcher's one collection-stats read, not the query's
+    rows = []
+    counts = _group_counts(
+        spark.sparkContext, "segtask-absent",
+        lambda: rows.extend(s.search(spec, k=10, with_keys=True).collect()),
+    )
+    assert rows == []
+    assert counts == (1, 1, 1), counts
 
 
 def test_tasks_read_query_terms_of_admitted_segments(spark, sentinel_index, monkeypatch):
@@ -233,8 +258,8 @@ def test_deletes_add_no_jobs_to_open_and_first_search(spark, sentinel_index, tmp
 # worker module get_spark sets changes per-task setup, not the work Spark
 # launches, so each operation must launch exactly these
 STOCK_WORKER_COUNTS = {
-    "open-or3": (6, 7, 10),
-    "search-many": (5, 9, 24),
+    "open-or3": (6, 6, 9),
+    "search-many": (1, 1, 4),
     "build-4seg": (10, 14, 41),
 }
 

@@ -6,7 +6,10 @@ contains a full-table sort or an unbounded crossJoin. Scored searches run
 as one per-segment scoring stage whose postings reads happen inside the
 task (``search/segtask.py``): their plans must show that stage with no
 Exchange below it; their term, segment and column pruning is asserted by
-``tests/test_segment_task.py`` instead.
+``tests/test_segment_task.py`` instead. A ranked search
+(``IndexSearcher.search``) collects that stage and merges its per-segment
+top-k on the driver, so its page is a LocalTableScan: ``audit_ranked``
+checks the stage on the same query's ``hits`` and the page on its own.
 
 Usage: python tools/plan_audit.py [sf_dir]   (default /root/testdata/sf0.01)
 Prints each audited plan plus a PASS/FAIL line per invariant.
@@ -24,11 +27,16 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 
 # the per-segment scoring stage: a MapInArrow straight over its Range (the
-# outline's next line) — no scan, filter or Exchange feeds the scoring
-SEG_TASK = r"MapInArrow \(\d+\)\n[ :]*\+- Range \("
+# outline's next line; "* " marks a codegen'd Range outside adaptive
+# plans) — no scan, filter or Exchange feeds the scoring
+SEG_TASK = r"MapInArrow \(\d+\)\n[ :]*\+- (\* )?Range \("
 # any MapInArrow fed by something other than its Range
-SEG_TASK_FED = r"MapInArrow \(\d+\)\n[ :]*\+- (?!Range \()"
+SEG_TASK_FED = r"MapInArrow \(\d+\)\n[ :]*\+- (?!(\* )?Range \()"
 TOPK = r"TakeOrderedAndProject|GlobalLimit"
+# a ranked search's page: the driver-merged rows, read by no scan (the
+# LocalTableScan excepted) and moved by no Exchange
+PAGE = r"LocalTableScan"
+PAGE_SCAN = r"(?<!LocalTable)Scan"
 
 
 def _plan(df) -> str:
@@ -37,20 +45,57 @@ def _plan(df) -> str:
     )
 
 
-def audit(name: str, df, must: list[str], must_not: list[str]) -> bool:
-    plan = _plan(df)
-    ok = True
-    for pat in must:
-        if not re.search(pat, plan):
-            print(f"FAIL {name}: missing /{pat}/")
-            ok = False
-    for pat in must_not:
-        if re.search(pat, plan):
-            print(f"FAIL {name}: found forbidden /{pat}/")
-            ok = False
-    if ok:
+def _failures(plan: str, must: list[str], must_not: list[str]) -> list[str]:
+    return [f"missing /{pat}/" for pat in must if not re.search(pat, plan)] + [
+        f"found forbidden /{pat}/" for pat in must_not if re.search(pat, plan)
+    ]
+
+
+def _report(name: str, failures: list[str]) -> bool:
+    for f in failures:
+        print(f"FAIL {name}: {f}")
+    if not failures:
         print(f"PASS {name}")
-    return ok
+    return not failures
+
+
+def audit(name: str, df, must: list[str], must_not: list[str]) -> bool:
+    return _report(name, _failures(_plan(df), must, must_not))
+
+
+def _scoring_stages(build):
+    """``build()``'s frame, and the unranked ``hits`` frame of every
+    scoring stage a searcher built meanwhile (``search`` collects its
+    stage's ``hits`` and merges them on the driver)."""
+    from lucene_solr_spark.search.searcher import IndexSearcher
+
+    stages = []
+    real = IndexSearcher.hits
+
+    def spy(self, *args, **kwargs):
+        stages.append(real(self, *args, **kwargs))
+        return stages[-1]
+
+    IndexSearcher.hits = spy
+    try:
+        df = build()
+    finally:
+        IndexSearcher.hits = real
+    return df, stages
+
+
+def audit_ranked(
+    name: str, build, must: list[str], must_not: list[str],
+    page_must: tuple[str, ...] | list[str] = (PAGE,),
+    page_must_not: tuple[str, ...] | list[str] = (r"Exchange", PAGE_SCAN),
+) -> bool:
+    """A ranked entry: ``must``/``must_not`` hold on its scoring stages
+    (their plans joined in the order they ran), ``page_must``/
+    ``page_must_not`` on the plan of the page ``build()`` returns."""
+    page, stages = _scoring_stages(build)
+    failures = _failures("\n".join(_plan(h) for h in stages), must, must_not)
+    failures += [f"page {f}" for f in _failures(_plan(page), page_must, page_must_not)]
+    return _report(name, failures)
 
 
 def main() -> None:
@@ -67,29 +112,30 @@ def main() -> None:
     results = []
 
     # 1. scored search: one per-segment scoring stage (its term-pruned
-    # postings read runs inside the task), no full-table sort before the limit
-    results.append(audit(
+    # postings read runs inside the task), and nothing after it in Spark —
+    # the page is the driver-merged LocalTableScan (no sort, no Exchange)
+    results.append(audit_ranked(
         "bm25_topk_term_pruned_scan",
-        eng.topk("or3", ["merge", "batch", "stream"], k=10),
-        must=[SEG_TASK, TOPK],
+        lambda: eng.topk("or3", ["merge", "batch", "stream"], k=10),
+        must=[SEG_TASK],
         must_not=[r"CartesianProduct", SEG_TASK_FED],
     ))
 
     # 2. keyword FILTER rides the same scoring stage (posting intersection
     # inside the task, no driver-side id set)
-    results.append(audit(
+    results.append(audit_ranked(
         "keyword_filter_pushdown",
-        entries["ft_filter_topk"](spark, SF_DIR),
-        must=[SEG_TASK, TOPK],
+        lambda: entries["ft_filter_topk"](spark, SF_DIR),
+        must=[SEG_TASK],
         must_not=[r"CartesianProduct", SEG_TASK_FED],
     ))
 
     # 3. fetch-fields-late: the task reads the key columns of its ≤k
     # survivors itself — no docs scan and no key join in the plan
-    results.append(audit(
+    results.append(audit_ranked(
         "fetch_fields_late_column_pruning",
-        eng.topk("term", ["spark"], k=10),
-        must=[SEG_TASK, TOPK],
+        lambda: eng.topk("term", ["spark"], k=10),
+        must=[SEG_TASK],
         must_not=[r"text.*ReadSchema", r"Scan parquet", r"Join", SEG_TASK_FED],
     ))
 
@@ -173,23 +219,23 @@ def main() -> None:
 
     # 12. nested boolean / multiphrase: the new clause kinds keep the
     # one-stage shape (all member terms are read inside the task)
-    results.append(audit(
+    results.append(audit_ranked(
         "multiphrase_term_pruned_scan",
-        entries["ft_multiphrase_topk"](spark, SF_DIR),
-        must=[SEG_TASK, TOPK],
+        lambda: entries["ft_multiphrase_topk"](spark, SF_DIR),
+        must=[SEG_TASK],
         must_not=[r"CartesianProduct", SEG_TASK_FED],
     ))
 
     # 13. query-time join ({!join}): the gathered join values re-enter the
     # OUTER query as keyword terms of its scoring stage (one fused posting
     # read, no driver id set, no crossJoin)
-    results.append(audit(
+    results.append(audit_ranked(
         "join_filter_keyword_pushdown",
-        eng.join_filter_topk(
+        lambda: eng.join_filter_topk(
             "or3", ["vector", "stream", "filter"], "and2", ["dup", "merge"],
             k=10,
         ),
-        must=[SEG_TASK, TOPK],
+        must=[SEG_TASK],
         must_not=[r"CartesianProduct", SEG_TASK_FED],
     ))
 
@@ -249,13 +295,15 @@ def main() -> None:
     ))
 
     # 19. RRF: both legs keep their own scoring stage; fusion is a join of
-    # two bounded frames with ONE final TakeOrdered
-    results.append(audit(
+    # two bounded (driver-merged) frames with ONE final TakeOrdered
+    results.append(audit_ranked(
         "rrf_legs_pushed_bounded_fusion",
-        eng.rrf_topk("or3", ["vector", "stream", "filter"],
-                     "and2", ["merge", "batch"], n=40, k=10),
-        must=[rf"(?s){SEG_TASK}.*{SEG_TASK}", TOPK],
+        lambda: eng.rrf_topk("or3", ["vector", "stream", "filter"],
+                             "and2", ["merge", "batch"], n=40, k=10),
+        must=[rf"(?s){SEG_TASK}.*{SEG_TASK}"],
         must_not=[r"CartesianProduct", SEG_TASK_FED],
+        page_must=[rf"(?s){PAGE}.*{PAGE}", TOPK],
+        page_must_not=[r"CartesianProduct", PAGE_SCAN],
     ))
 
     # 20. payloads: the whole annotate→parse→score pipeline stays JVM-side
@@ -283,11 +331,11 @@ def main() -> None:
     ))
 
     # 22. surround spans: both distance clauses ride the SAME scoring
-    # stage (one term-pruned read per segment), one TakeOrdered
-    results.append(audit(
+    # stage (one term-pruned read per segment), a driver-merged page
+    results.append(audit_ranked(
         "surround_spans_pushed_scan",
-        entries["ft_surround_topk"](spark, SF_DIR),
-        must=[SEG_TASK, TOPK],
+        lambda: entries["ft_surround_topk"](spark, SF_DIR),
+        must=[SEG_TASK],
         must_not=[r"CartesianProduct", SEG_TASK_FED],
     ))
 
@@ -358,10 +406,10 @@ def main() -> None:
 
     asof = get_engine(spark, SF_DIR, "simple", ASOF)
     assert asof.searcher._commit is not None
-    results.append(audit(
+    results.append(audit_ranked(
         "asof_commit_seg_partition_pruned",
-        asof.topk("or3", ["merge", "batch", "stream"], k=10),
-        must=[SEG_TASK, TOPK],
+        lambda: asof.topk("or3", ["merge", "batch", "stream"], k=10),
+        must=[SEG_TASK],
         must_not=[SEG_TASK_FED],
     ))
 
@@ -380,15 +428,17 @@ def main() -> None:
 
     # 29. ExactStatsCache alias: every shard leg runs its own scoring stage
     # (the injected global weights change scoring, not the stage shape), the
-    # merge is a k-row TakeOrdered per leg + union —
+    # merge is each leg's driver-merged k rows + union + one TakeOrdered —
     # no CartesianProduct, no doc-level range-partition exchange.
     from lucene_solr_spark.engine import exactstats_topk
 
-    results.append(audit(
+    results.append(audit_ranked(
         "exactstats_all_legs_pushed",
-        exactstats_topk(spark, SF_DIR, "or3", ["vector", "stream", "filter"], k=10),
-        must=[rf"(?s){SEG_TASK}.*{SEG_TASK}", TOPK],
+        lambda: exactstats_topk(spark, SF_DIR, "or3", ["vector", "stream", "filter"], k=10),
+        must=[rf"(?s){SEG_TASK}.*{SEG_TASK}"],
         must_not=[r"CartesianProduct", SEG_TASK_FED],
+        page_must=[rf"(?s){PAGE}.*{PAGE}", TOPK],
+        page_must_not=[r"CartesianProduct", r"Exchange rangepartitioning", PAGE_SCAN],
     ))
 
     # 30. FieldMaskingSpanQuery: each segment's task reads BOTH fields'
@@ -420,15 +470,17 @@ def main() -> None:
 
     # 32. SPLITSHARD scatter-gather: every child leg keeps its own scoring
     # stage (the masks/stats refresh must not add a scan or shuffle to it),
-    # the page merge is a TakeOrdered over n·k rows (no full-table sort),
-    # and no leg degenerates into a CartesianProduct.
+    # the page merge is a TakeOrdered over the legs' n·k driver-merged rows
+    # (no full-table sort), and no leg degenerates into a CartesianProduct.
     from lucene_solr_spark.engine import split_union_topk
 
-    results.append(audit(
+    results.append(audit_ranked(
         "split_children_term_pruned_scans",
-        split_union_topk(spark, SF_DIR, "or3", ["merge", "scan", "window"], k=10),
-        must=[rf"(?s){SEG_TASK}.*{SEG_TASK}.*{SEG_TASK}", TOPK],
+        lambda: split_union_topk(spark, SF_DIR, "or3", ["merge", "scan", "window"], k=10),
+        must=[rf"(?s){SEG_TASK}.*{SEG_TASK}.*{SEG_TASK}"],
         must_not=[r"CartesianProduct", SEG_TASK_FED],
+        page_must=[rf"(?s){PAGE}.*{PAGE}.*{PAGE}", TOPK],
+        page_must_not=[r"CartesianProduct", PAGE_SCAN],
     ))
 
     n_fail = results.count(False)
