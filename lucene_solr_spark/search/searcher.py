@@ -189,11 +189,12 @@ def merge_top(t: pa.Table, k: int | dict[str, int]) -> pa.Table:
     return t.filter(keep).append_column(_RANK.name, pa.array(rank[keep], pa.int32()))
 
 
-def _collect(hits: DataFrame, scanned: bool) -> pa.Table:
-    """A scoring stage's rows as one Arrow table. Without a query clause no
-    stage runs: the frame is an empty LocalRelation, and the empty table
-    comes from its schema (collecting it as Arrow would launch a job)."""
-    return hits.toArrow() if scanned else to_arrow_schema(hits.schema).empty_table()
+def _collect(hits: DataFrame) -> pa.Table:
+    """A scoring stage's rows as one Arrow table. When no stage runs (no
+    clause, no term or no segment) the frame is an empty LocalRelation, and
+    the empty table comes from its schema (collecting it as Arrow would
+    launch a job)."""
+    return to_arrow_schema(hits.schema).empty_table() if hits.isLocal() else hits.toArrow()
 
 
 def _osa_distance(a: str, b: str) -> int:
@@ -816,7 +817,7 @@ class IndexSearcher:
 
             q = dataclasses.replace(q, filter_by_base=filter_by_base)
         hits = self.hits(q, mode=mode, after=after, with_keys=with_keys)
-        top = merge_top(_collect(hits, bool(q.clauses)), q.k)
+        top = merge_top(_collect(hits), q.k)
         return local_frame(self.spark, StructType([*hits.schema.fields, _RANK]), top)
 
     def hits(
@@ -901,8 +902,5 @@ class IndexSearcher:
         → DataFrame(query_id, rank, doc_id, score) in (query_id, rank)
         order."""
         hits = self.hits_many(compiled, mode)
-        top = merge_top(
-            _collect(hits, any(q.clauses for q in compiled.values())),
-            {qid: q.k for qid, q in compiled.items()},
-        )
+        top = merge_top(_collect(hits), {qid: q.k for qid, q in compiled.items()})
         return local_frame(self.spark, _MANY_SCHEMA, top.select(_MANY_SCHEMA.names))

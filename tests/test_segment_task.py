@@ -133,6 +133,23 @@ def test_search_with_only_absent_terms_runs_only_the_compile_job(spark, sentinel
     assert counts == (1, 1, 1), counts
 
 
+def test_search_with_no_admitted_segment_runs_no_scoring_job(spark, sentinel_index, monkeypatch):
+    """A query with a clause but no bloom-admitted segment gets the empty
+    LocalRelation from ``segment_scan``; the searcher collects it without
+    a job."""
+    s = IndexSearcher(spark, sentinel_index)
+    q = s.compile(s.parse("term", [SENTINEL]), 10)
+    assert q.clauses
+    monkeypatch.setattr(s, "bloom_live_segs", lambda terms: [])
+    rows = []
+    counts = _group_counts(
+        spark.sparkContext, "segtask-no-segs",
+        lambda: rows.extend(s.search(q, k=10, with_keys=True).collect()),
+    )
+    assert rows == []
+    assert counts == (0, 0, 0), counts
+
+
 def test_tasks_read_query_terms_of_admitted_segments(spark, sentinel_index, monkeypatch):
     """The term pruning a plan no longer shows: per segment, the task reads
     exactly the query's terms present in that segment, and only

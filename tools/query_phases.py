@@ -3,17 +3,17 @@
 ``compile_many`` + ``search_many`` (the 50-query reference set), replayed
 step by step on a built index in one ``session.get_spark`` session.
 
-    python tools/query_phases.py [--index DIR] [--convs 400] [--segments 4]
-                                 [--repeats 15] [--cpus 4]
+    python tools/query_phases.py [--index DIR] [--repeats 15] [--cpus 4]
 
 Phases: ``compile`` (the term_stats lookup job), ``scoring`` (the one
 scoring stage, collected as Arrow), ``merge`` (``merge_top`` on the
 driver) and ``handback`` (the page as a LocalRelation, collected).
 ``total`` times the public call (``search(...).collect()``, or
 ``compile_many`` + ``search_many(...).collect()``) on its own. Without
-``--index`` it builds a ``datagen`` transcripts index in a temporary
-directory and removes it at the end. Prints one JSON line of medians in
-ms per workload ("keyed", "qset").
+``--index`` it builds a ``datagen`` transcripts index (400
+conversations, 4 segments) in a temporary directory and removes it at
+the end. Prints one JSON line of medians in ms per workload ("keyed",
+"qset").
 """
 
 from __future__ import annotations
@@ -51,7 +51,7 @@ def _keyed(ph: _Phases, s, spec, k: int) -> None:
 
     q = ph.timed("compile", lambda: s.compile(spec, k))
     hits = s.hits(q, with_keys=True)
-    t = ph.timed("scoring", lambda: _collect(hits, bool(q.clauses)))
+    t = ph.timed("scoring", lambda: _collect(hits))
     top = ph.timed("merge", lambda: merge_top(t, q.k))
     page = ph.timed("handback", lambda: local_frame(
         s.spark, StructType([*hits.schema.fields, _RANK]), top).collect())
@@ -65,7 +65,7 @@ def _qset(ph: _Phases, s, specs: dict) -> None:
 
     compiled = ph.timed("compile", lambda: s.compile_many(specs))
     hits = s.hits_many(compiled, "wand")
-    t = ph.timed("scoring", lambda: _collect(hits, any(q.clauses for q in compiled.values())))
+    t = ph.timed("scoring", lambda: _collect(hits))
     top = ph.timed("merge", lambda: merge_top(t, {qid: q.k for qid, q in compiled.items()}))
     page = ph.timed("handback", lambda: local_frame(
         s.spark, _MANY_SCHEMA, top.select(_MANY_SCHEMA.names)).collect())
@@ -78,8 +78,6 @@ def _qset(ph: _Phases, s, specs: dict) -> None:
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--index", default=None, help="a built index (default: build one)")
-    ap.add_argument("--convs", type=int, default=400, help="conversations to build")
-    ap.add_argument("--segments", type=int, default=4, help="segments to build")
     ap.add_argument("--repeats", type=int, default=15, help="timed rounds")
     ap.add_argument("--cpus", type=int, default=None, help="local[cpus] (get_spark's default)")
     args = ap.parse_args(argv)
@@ -95,10 +93,8 @@ def main(argv: list[str] | None = None) -> None:
     if index_dir is None:
         tmp = tempfile.mkdtemp(prefix="query_phases_")
         index_dir = os.path.join(tmp, "idx")
-        build_index(
-            spark, spark.createDataFrame(generate_transcripts(args.convs)), index_dir,
-            n_segments=args.segments,
-        )
+        docs = spark.createDataFrame(generate_transcripts(400))
+        build_index(spark, docs, index_dir, n_segments=4)
     try:
         s = IndexSearcher(spark, index_dir)
         queries = generate_queries()
