@@ -358,14 +358,15 @@ class DocumentsEngine:
         response writer."""
         page = self.topk(qtype, surface_terms, k=k).collect()
         stored = self.fetch_stored([int(r.doc_id) for r in page])
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
+            "rank int, doc_id long, score float, source string, lang string",
             [
                 (int(r.rank), int(r.doc_id), float(r.score),
                  stored[int(r.doc_id)][0], stored[int(r.doc_id)][1])
                 for r in page
             ],
-            "rank int, doc_id long, score float, source string, lang string",
-        ).orderBy("rank")
+        )
 
     def qrc_topk(
         self,
@@ -382,9 +383,9 @@ class DocumentsEngine:
         spec = s.parse(qtype, surface_terms, 0)
         s.cached_topk(spec, k=k)           # prime: miss fills the window
         rows = s.cached_topk(spec, k=k)    # served page: a cache hit
-        page = self.spark.createDataFrame(
+        page = local_frame(
+            self.spark, "rank int, doc_id long, score float",
             [(i + 1, d, float(sc)) for i, (d, sc) in enumerate(rows)],
-            "rank int, doc_id long, score float",
         )
         return _present(
             page.join(s.docs.select("doc_id", "doc_key"), "doc_id")
@@ -508,8 +509,10 @@ class DocumentsEngine:
             .select("doc_id").collect()[0].doc_id
         )
         pdf = self.searcher.explain(spec, gid)
-        return self.spark.createDataFrame(
-            pdf, "term string, df long, idf float, tf long, doc_len long, clause_score float"
+        return local_frame(
+            self.spark,
+            "term string, df long, idf float, tf long, doc_len long, clause_score float",
+            pdf.itertuples(index=False),
         )
 
     def mlt_topk(self, src_doc_id: int, top_terms: int = 5, k: int = 10) -> DataFrame:
@@ -1477,10 +1480,11 @@ class DocumentsEngine:
              int(n_hits))
             for r in rows
         ]
-        return self.spark.createDataFrame(
-            out,
+        return local_frame(
+            self.spark,
             "qpos int, qterm string, correction string, dist int, "
             "df long, collation_hits long",
+            out,
         )
 
     def term_vectors(self, doc_key: int) -> DataFrame:
@@ -1891,7 +1895,7 @@ class DocumentsEngine:
         rows = [
             (i + 1, dk, float(sc)) for i, (sc, dk) in enumerate(scored[:k])
         ]
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, schema, rows)
 
     def elevate_topk(
         self, qtype: str, surface_terms: list[str], elevated: list[int],
@@ -1919,9 +1923,7 @@ class DocumentsEngine:
             if int(r.doc_id) not in elev_set:
                 out.append((int(r.doc_id), 0))
         rows = [(i + 1, d, e) for i, (d, e) in enumerate(out[:k])]
-        return self.spark.createDataFrame(
-            rows, "rank int, doc_id long, elevated int"
-        )
+        return local_frame(self.spark, "rank int, doc_id long, elevated int", rows)
 
     def result_clusters(
         self, qtype: str, surface_terms: list[str], n_docs: int = 50,
@@ -1970,9 +1972,7 @@ class DocumentsEngine:
             ((lbl, len(rs), min(rs)) for lbl, rs in rows.items()),
             key=lambda x: (-x[1], x[0]),
         )
-        return self.spark.createDataFrame(
-            out, "label string, n_docs long, best_rank int"
-        )
+        return local_frame(self.spark, "label string, n_docs long, best_rank int", out)
 
     def total_hits(
         self, qtype: str, surface_terms: list[str], threshold: int = 1000,
@@ -1984,9 +1984,7 @@ class DocumentsEngine:
         deterministic."""
         spec = self.searcher.parse(qtype, surface_terms, min_should)
         value, relation = self.searcher.total_hits(spec, threshold)
-        return self.spark.createDataFrame(
-            [(value, relation)], "value long, relation string"
-        )
+        return local_frame(self.spark, "value long, relation string", [(value, relation)])
 
     def terms_enum(
         self, prefix: str, mincount: int = 1, limit: int = 20
@@ -2531,9 +2529,7 @@ class DocumentsEngine:
             (i + 1, t, float(np.float32(sc)))
             for i, (t, sc) in enumerate(spec_terms)
         ]
-        return self.spark.createDataFrame(
-            rows, "rank int, term string, mlt_score float"
-        )
+        return local_frame(self.spark, "rank int, term string, mlt_score float", rows)
 
     def _doc_text(self, src_doc_id: int) -> str:
         return (

@@ -3,8 +3,13 @@
 Query lifecycle (SURVEY.md §3.1, Spark shape):
 
 1. compile on driver: analyze surface terms (query-time chain == index-time
-   chain), bind global stats from the broadcast-sized ``stats``/``term_stats``
-   tables into float32 weights → CompiledQuery.
+   chain), bind global stats from the ``stats``/``term_stats`` tables into
+   float32 weights → CompiledQuery. Stats bind once per searcher
+   (``TermStates#build`` per reader, Solr's per-searcher stats cache): the
+   collection stats at the first query, each term's (df, ttf) at its first
+   lookup, so a query whose terms the searcher has seen compiles without a
+   Spark job. A live searcher keeps what it bound; reopen it after a commit
+   to see the new stats.
 2. one scoring stage (``util/segscan.py`` dealing ``search/segtask.py``'s
    per-segment tasks): the bloom-admitted segments are dealt round-robin
    to min(segments, defaultParallelism) tasks of a
@@ -33,6 +38,7 @@ from __future__ import annotations
 import glob
 import os
 import re
+from collections import OrderedDict
 from functools import cached_property
 
 import numpy as np
@@ -61,6 +67,10 @@ BLOOM_DRIVER_BUDGET = 64 << 20
 # A disjunction wider than this almost surely touches every segment — skip
 # the probe instead of paying it for no pruning.
 BLOOM_MAX_TERMS = 16
+# Term stats bound per searcher: at most this many terms (seen or absent),
+# evicted first in, first out, so the cache follows the query terms, not
+# the dictionary.
+TERM_STATS_CACHE_MAX = 1 << 16
 _HIT_FIELDS = [StructField("doc_id", LongType()), StructField("score", FloatType())]
 _MULTI_SCHEMA = StructType([StructField("query_id", StringType()), *_HIT_FIELDS])
 _RANK = StructField("rank", IntegerType(), nullable=False)
@@ -264,8 +274,6 @@ class IndexSearcher:
         self.docs = global_docs(spark, index_dir, m).drop("doc_local")
         # filterCache (S/search/SolrIndexSearcher filterCache): fq → DocSet,
         # LRU under an entry + total-id budget; see filter_docset
-        from collections import OrderedDict
-
         self._filter_cache: "OrderedDict[str, dict[int, np.ndarray]]" = OrderedDict()
         self._filter_cache_ids = 0
         self.filter_cache_stats = {"hits": 0, "misses": 0, "evictions": 0}
@@ -273,6 +281,9 @@ class IndexSearcher:
         self._query_result_cache: "OrderedDict[str, tuple[int, list]]" = OrderedDict()
         self.query_result_cache_stats = {"hits": 0, "misses": 0, "evictions": 0}
         self._tables: dict[Similarity, np.ndarray] = {}
+        # {term: (df, ttf)} bound from this view's term_stats, (0, 0) for an
+        # absent term; see term_stats_rows
+        self._term_stats: "OrderedDict[str, tuple[int, int]]" = OrderedDict()
 
     @cached_property
     def stats(self) -> CollectionStats:
@@ -411,18 +422,30 @@ class IndexSearcher:
         return list(self.layout) if live is None else live
 
     def term_stats_rows(self, terms: list[str]) -> tuple[dict[str, int], dict[str, int]]:
-        """({term: df}, {term: ttf}) for the query's terms (TermStates#build
-        analog) — ONE term-pruned scan of the small term_stats table."""
-        if not terms:
-            return {}, {}
-        rows = (
-            read_term_stats(self.spark, self._stats_root)
-            .filter(F.col("term").isin(list(terms)))
-            .collect()
-        )
+        """({term: df}, {term: ttf}) for the query's terms that occur
+        (TermStates#build analog). Each term binds once per searcher: only
+        terms this searcher has not looked up yet go to ONE term-pruned scan
+        of the view's term_stats table, and a term found nowhere is
+        remembered as absent, so a lookup of seen terms runs no Spark job."""
+        cache, want = self._term_stats, dict.fromkeys(terms)
+        missing = [t for t in want if t not in cache]
+        if missing:
+            found = (
+                read_term_stats(self.spark, self._stats_root)
+                .filter(F.col("term").isin(missing))
+                .toArrow()
+            )
+            cache.update((t, (0, 0)) for t in missing)
+            cache.update(zip(
+                found["term"].to_pylist(),
+                zip(found["df"].to_pylist(), found["ttf"].to_pylist()),
+            ))
+        got = {t: cache[t] for t in want}
+        while len(cache) > TERM_STATS_CACHE_MAX:
+            cache.popitem(last=False)
         return (
-            {r.term: int(r.df) for r in rows},
-            {r.term: int(r.ttf) for r in rows},
+            {t: df for t, (df, _) in got.items() if df > 0},
+            {t: ttf for t, (df, ttf) in got.items() if df > 0},
         )
 
     def term_stats(self, terms: list[str]) -> dict[str, int]:
@@ -440,9 +463,10 @@ class IndexSearcher:
         )
 
     def compile_many(self, specs: dict[str, tuple[BooleanSpec, int]]) -> dict[str, CompiledQuery]:
-        """Compile a whole query set with ONE stats lookup job (TermStates
-        for the union of all query terms — the batched analog of
-        ``IndexSearcher#createWeight`` per request)."""
+        """Compile a whole query set with at most ONE stats lookup job
+        (TermStates for the union of the set's terms the searcher has not
+        seen — the batched analog of ``IndexSearcher#createWeight`` per
+        request)."""
         all_terms = sorted({t for spec, _ in specs.values() for t in spec.all_terms()})
         df_map = self.term_stats(all_terms)
         return {

@@ -10,7 +10,7 @@ range partitioner samples the input and no shuffle feeds the tasks: each
 task opens its own segments' files.
 
 ``local_frame`` builds the driver-side frames that stand in for a stage:
-an empty result, or a page merged on the driver. A frame built from a
+an empty result, or a page built on the driver. A frame built from a
 Python list (``spark.createDataFrame([], schema)``) is a ``LogicalRDD``,
 and collecting it launches a job of defaultParallelism tasks even for no
 rows; a frame built from an Arrow table is a ``LocalRelation`` (below
@@ -20,7 +20,7 @@ or a projection of it, launches no job.
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Callable, Iterable
 
 import pyarrow as pa
 
@@ -30,16 +30,21 @@ from pyspark.sql.types import StructType
 
 
 def local_frame(
-    spark: SparkSession, schema: StructType | str, table: pa.Table | None = None
+    spark: SparkSession,
+    schema: StructType | str,
+    rows: pa.Table | Iterable[tuple] | None = None,
 ) -> DataFrame:
-    """``table`` (default: no rows) as a LocalRelation of ``schema`` (a
-    StructType or a DDL string); ``table``'s columns are in ``schema``'s
-    order."""
+    """``rows`` (default: none) as a LocalRelation of ``schema`` (a
+    StructType or a DDL string): an Arrow table whose columns are in
+    ``schema``'s order, or Python row tuples in that order."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    if table is None:
-        table = to_arrow_schema(schema).empty_table()
-    return spark.createDataFrame(table, schema)
+    if not isinstance(rows, pa.Table):
+        arrow_schema = to_arrow_schema(schema)
+        rows = pa.Table.from_pylist(
+            [dict(zip(arrow_schema.names, r)) for r in rows or ()], schema=arrow_schema
+        )
+    return spark.createDataFrame(rows, schema)
 
 
 def segment_scan(

@@ -1,9 +1,10 @@
 """One scoring stage per search (``search/segtask.py``): each segment's
 scoring task reads only the query's terms of its own segment, only
 bloom-admitted (and, at a commit point, only the commit's) segments get a
-task, and a keyed top-k runs at most two Spark jobs: the compile and the
-scoring stage, with no shuffle below the scoring operator and no stage
-after it (the per-segment top-k merge runs on the driver)."""
+task, and a keyed top-k whose terms the searcher has seen runs one Spark
+job: the scoring stage, with no shuffle below the scoring operator and no
+stage after it (the per-segment top-k merge runs on the driver). A term
+the searcher has not seen adds one term_stats lookup job for it."""
 
 import os
 import re
@@ -83,18 +84,82 @@ def test_keyed_search_runs_one_scoring_stage(spark, sentinel_index):
     s = IndexSearcher(spark, sentinel_index)
     spec = s.parse("or3", OR3)
     want = s.search(spec, k=10, with_keys=True).collect()  # warm searcher caches
+    got = []
     sc = spark.sparkContext
-    sc.setJobGroup("segtask-or3", "keyed or3 top-k")
-    try:
-        got = s.search(spec, k=10, with_keys=True).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    counts = _group_counts(
+        sc, "segtask-or3", lambda: got.extend(s.search(spec, k=10, with_keys=True).collect())
+    )
     assert got == want and len(got) == 10
-    jobs, stages, tasks = _job_counts(sc, "segtask-or3")
-    assert jobs <= 2, jobs    # term_stats lookup + the scoring stage's collect
-    assert stages <= 2, stages
-    assert tasks <= min(len(s.layout), sc.defaultParallelism) + 1, tasks
+    n_tasks = min(len(s._live_segs(s.compile(spec, 10))), sc.defaultParallelism)
+    assert counts == (1, 1, n_tasks), counts   # the scoring stage only
+
+
+def test_repeated_query_set_runs_only_the_scoring_stage(spark, sentinel_index):
+    """A second ``compile_many`` + ``search_many`` of the same set binds
+    every term from the searcher's cache: one job, the scoring stage."""
+    s = IndexSearcher(spark, sentinel_index)
+    specs = {"a": (s.parse("or3", OR3), 5), "b": (s.parse("and2", OR3[:2]), 5),
+             "c": (s.parse("term", ["qqzabsent"]), 5)}
+    want = s.search_many(s.compile_many(specs)).collect()
+    got = []
+    counts = _group_counts(
+        spark.sparkContext, "segtask-qset-again",
+        lambda: got.extend(s.search_many(s.compile_many(specs)).collect()),
+    )
+    assert got == want and got
+    assert counts == (1, 1, 4), counts
+
+
+def test_unseen_term_adds_one_lookup_job_for_it_only(spark, sentinel_index, monkeypatch):
+    """A query mixing seen terms with one unseen term runs one term_stats
+    lookup more than its warm repeat, and that lookup asks for the unseen
+    term only."""
+    s = IndexSearcher(spark, sentinel_index)
+    s.search(s.parse("or3", OR3), k=10).collect()
+    sentinel = s.analyzer.analyze(SENTINEL)[0][0]
+    spec = s.parse("or3", [*OR3[:2], SENTINEL])
+    asked = []
+    real = searcher_mod.read_term_stats
+
+    class Spy:
+        def __init__(self, df):
+            self.df = df
+
+        def filter(self, cond):
+            asked.append(str(cond))
+            return self.df.filter(cond)
+
+    monkeypatch.setattr(searcher_mod, "read_term_stats", lambda *a: Spy(real(*a)))
+    sc = spark.sparkContext
+    first = _group_counts(sc, "segtask-unseen", lambda: s.search(spec, k=10).collect())
+    again = _group_counts(sc, "segtask-unseen-again", lambda: s.search(spec, k=10).collect())
+    assert again[:2] == (1, 1), again
+    assert first[0] == again[0] + 1 and first[1] == again[1] + 1, (first, again)
+    (cond,) = asked
+    assert sentinel in cond and not any(s.analyzer.analyze(t)[0][0] in cond for t in OR3[:2])
+
+
+def test_topk_fetch_page_collects_without_a_job(spark):
+    """``topk_fetch``'s page is built on the driver from the search page
+    and the documentCache: collecting it launches no job, so the whole
+    call costs what its search costs."""
+    from lucene_solr_spark.engine import get_engine
+
+    sf = "/root/testdata/sf0.001"
+    if not os.path.isdir(sf):
+        pytest.skip("driver testdata absent")
+    eng = get_engine(spark, sf, "simple")
+    args = ("or3", ["vector", "stream", "filter"])
+    want = eng.topk_fetch(*args, k=10).collect()   # warm: stats, terms, documentCache
+    sc = spark.sparkContext
+    search = _group_counts(sc, "segtask-fetch-search", lambda: eng.topk(*args, k=10).collect())
+    page = []
+    fetch = _group_counts(sc, "segtask-fetch", lambda: page.append(eng.topk_fetch(*args, k=10)))
+    got = []
+    collect = _group_counts(sc, "segtask-fetch-collect", lambda: got.extend(page[0].collect()))
+    assert got == want and [r.rank for r in got] == list(range(1, len(got) + 1))
+    assert collect == (0, 0, 0), collect
+    assert fetch == search, (fetch, search)
 
 
 def test_second_searcher_finds_no_shuffle_stage(spark, sentinel_index):
@@ -120,17 +185,19 @@ def test_second_searcher_finds_no_shuffle_stage(spark, sentinel_index):
 def test_search_with_only_absent_terms_runs_only_the_compile_job(spark, sentinel_index):
     """A query whose terms are all absent compiles to no clause: its empty
     page is a LocalRelation, so collecting it adds no job to the
-    term_stats lookup."""
+    term_stats lookup, and a repeat, whose terms the searcher now knows
+    to be absent, runs no job at all."""
     s = IndexSearcher(spark, sentinel_index)
     spec = s.parse("or3", ["qqzabsent", "qqzmissing", "qqznowhere"])
     s.stats  # the searcher's one collection-stats read, not the query's
-    rows = []
-    counts = _group_counts(
-        spark.sparkContext, "segtask-absent",
-        lambda: rows.extend(s.search(spec, k=10, with_keys=True).collect()),
-    )
-    assert rows == []
-    assert counts == (1, 1, 1), counts
+    for gid, want in [("segtask-absent", (1, 1, 1)), ("segtask-absent-again", (0, 0, 0))]:
+        rows = []
+        counts = _group_counts(
+            spark.sparkContext, gid,
+            lambda: rows.extend(s.search(spec, k=10, with_keys=True).collect()),
+        )
+        assert rows == []
+        assert counts == want, (gid, counts)
 
 
 def test_search_with_no_admitted_segment_runs_no_scoring_job(spark, sentinel_index, monkeypatch):

@@ -5,9 +5,13 @@ step by step on a built index in one ``session.get_spark`` session.
 
     python tools/query_phases.py [--index DIR] [--repeats 15] [--cpus 4]
 
-Phases: ``compile`` (the term_stats lookup job), ``scoring`` (the one
-scoring stage, collected as Arrow), ``merge`` (``merge_top`` on the
-driver) and ``handback`` (the page as a LocalRelation, collected).
+Phases: ``compile`` (binding the query's term stats on the warm searcher,
+whose cache has seen every term, so no Spark job), ``compile_cold`` (the
+same compile on a newly opened searcher whose collection stats are read
+but whose term cache is empty, so every term goes to the one term_stats
+lookup job), ``scoring`` (the one scoring stage, collected as Arrow),
+``merge`` (``merge_top`` on the driver) and ``handback`` (the page as a
+LocalRelation, collected).
 ``total`` times the public call (``search(...).collect()``, or
 ``compile_many`` + ``search_many(...).collect()``) on its own. Without
 ``--index`` it builds a ``datagen`` transcripts index (400
@@ -44,11 +48,23 @@ class _Phases:
         return {k: round(statistics.median(v), 1) for k, v in self.ms.items()}
 
 
+def _cold(s):
+    """A newly opened searcher on ``s``'s index with its collection stats
+    read: its term stats cache is empty."""
+    from lucene_solr_spark.search.searcher import IndexSearcher
+
+    fresh = IndexSearcher(s.spark, s.index_dir)
+    fresh.stats
+    return fresh
+
+
 def _keyed(ph: _Phases, s, spec, k: int) -> None:
     from lucene_solr_spark.search.searcher import _RANK, _collect, merge_top
     from lucene_solr_spark.util.segscan import local_frame
     from pyspark.sql.types import StructType
 
+    cold = _cold(s)
+    ph.timed("compile_cold", lambda: cold.compile(spec, k))
     q = ph.timed("compile", lambda: s.compile(spec, k))
     hits = s.hits(q, with_keys=True)
     t = ph.timed("scoring", lambda: _collect(hits))
@@ -63,6 +79,8 @@ def _qset(ph: _Phases, s, specs: dict) -> None:
     from lucene_solr_spark.search.searcher import _MANY_SCHEMA, _collect, merge_top
     from lucene_solr_spark.util.segscan import local_frame
 
+    cold = _cold(s)
+    ph.timed("compile_cold", lambda: cold.compile_many(specs))
     compiled = ph.timed("compile", lambda: s.compile_many(specs))
     hits = s.hits_many(compiled, "wand")
     t = ph.timed("scoring", lambda: _collect(hits))
