@@ -99,7 +99,8 @@ from ..analysis import (
     MinHashAnalyzer,
 )
 from ..util.smallfloat import encode_lengths
-from .codec import encode_posting_blocks
+from ..util.varint import binary_bytes
+from .codec import encode_segment, flat_blocks
 
 ANALYZERS = {
     "lucene": LuceneChainAnalyzer,
@@ -147,18 +148,6 @@ REFUSED = "refused"
 
 def _key_repr_tbl(tbl: pa.Table, key_cols: list[str], row: int) -> str:
     return "\x1f".join(str(tbl[c][row].as_py()) for c in key_cols)
-
-_BLOCK_PA_TYPE = pa.list_(pa.struct([
-    ("first_doc", pa.int64()),
-    ("last_doc", pa.int64()),
-    ("n", pa.int32()),
-    ("max_tf", pa.int32()),
-    ("min_norm", pa.int32()),
-    ("docs_bytes", pa.binary()),
-    ("tfs_bytes", pa.binary()),
-    ("pos_bytes", pa.binary()),
-]))
-
 
 KEYWORD_PREFIX = "\x01"  # synthetic keyword-field terms sort before all text
 
@@ -414,89 +403,53 @@ def _invert_partition(
         "norm": norms.astype(np.int32),
     })
 
-    # --- invert: sorted (term, doc, pos) → per-term blocks ---
+    # --- invert: (term, doc, pos)-sorted token rows → one segment encode ---
+    # Keyword (StringField analog) columns join the text tokens as one
+    # `\x01col:value` row per doc, position 0, so FILTER clauses run as
+    # posting intersections; doc lengths, norms and collection stats stay
+    # text-only (keyword terms never contribute BM25 weight).
+    for kcol in meta.keyword_cols:
+        col = docs_tbl[kcol].combine_chunks()
+        has = np.flatnonzero(col.is_valid().to_numpy(zero_copy_only=False))  # null: no term
+        dk = pc.dictionary_encode(col.take(has))
+        code_parts.append(dk.indices.to_numpy().astype(np.int32))
+        cat_parts.append(pc.binary_join_element_wise(
+            keyword_term(kcol, ""), dk.dictionary, ""
+        ).to_numpy(zero_copy_only=False))
+        doc_parts.append(has.astype(np.int32))
+        pos_parts.append(np.zeros(len(has), dtype=np.int32))
     # unify the per-batch vocabularies (small) into one sorted global vocab,
     # remap codes through per-batch LUTs — no token-level string work.
-    if code_parts and sum(len(c) for c in code_parts):
-        uniques = np.unique(np.concatenate(cat_parts))
-        remapped = []
-        for c, cats in zip(code_parts, cat_parts):
-            lut = np.searchsorted(uniques, cats).astype(np.int32)
-            remapped.append(lut[c])
-        codes = np.concatenate(remapped)
-        docs_l = np.concatenate(doc_parts)
-        poss = np.concatenate(pos_parts)
-    else:
-        codes = np.empty(0, dtype=np.int32)
-        uniques = np.empty(0, dtype=object)
-        docs_l = np.empty(0, dtype=np.int32)
-        poss = np.empty(0, dtype=np.int32)
+    uniques = np.unique(np.concatenate([np.empty(0, dtype=object), *cat_parts]))
+    codes = np.concatenate([np.empty(0, dtype=np.int32), *(
+        np.searchsorted(uniques, cats).astype(np.int32)[c]
+        for c, cats in zip(code_parts, cat_parts)
+    )])
+    docs_l = np.concatenate([np.empty(0, dtype=np.int32), *doc_parts])
+    poss = np.concatenate([np.empty(0, dtype=np.int32), *pos_parts])
 
-    # The analyzer emits tokens in (doc asc, pos asc) order and batches are
-    # concatenated in doc order, so when that invariant holds (it does for
-    # every base-chain analyzer; token-graph postprocessors may reorder) a
+    # The analyzer emits tokens in (doc asc, pos asc) order, batches are
+    # concatenated in doc order and keyword rows come in doc order, so a
     # SINGLE stable argsort on the term code yields (term, doc, pos) order —
-    # one radix pass instead of lexsort's three.
-    if len(codes):
-        dd = np.diff(docs_l)
-        presorted = bool((dd >= 0).all()) and bool(
-            ((dd > 0) | (np.diff(poss) > 0)).all()
-        )
-        order = (
-            np.argsort(codes, kind="stable")
-            if presorted
-            else np.lexsort((poss, docs_l, codes))
-        )
+    # one radix pass instead of lexsort's three. Token-graph postprocessors
+    # may reorder: then lexsort.
+    order = np.argsort(codes, kind="stable")
+    codes, docs_l, poss = codes[order], docs_l[order], poss[order]
+    dc, dd = np.diff(codes), np.diff(docs_l)
+    if not ((dc > 0) | ((dc == 0) & ((dd > 0) | ((dd == 0) & (np.diff(poss) >= 0))))).all():
+        order = np.lexsort((poss, docs_l, codes))
         codes, docs_l, poss = codes[order], docs_l[order], poss[order]
 
-    term_bounds = np.flatnonzero(np.diff(codes, prepend=-1))  # start of each term run
-    term_rows: list[tuple] = []
-    starts_all = np.append(term_bounds, len(codes))
-    for ti in range(len(uniques)):
-        s, e = starts_all[ti], starts_all[ti + 1]
-        d = docs_l[s:e]
-        p = poss[s:e]
-        # (doc, tf) runs within the term slice
-        doc_bounds = np.flatnonzero(np.diff(d, prepend=-1))
-        udocs = d[doc_bounds]
-        tfs = np.diff(np.append(doc_bounds, len(d)))
-        blocks = encode_posting_blocks(
-            doc_ids[udocs], tfs, norms[udocs].astype(np.int64),
-            p if meta.positions else None,
-        )
-        term_rows.append((str(uniques[ti]), len(udocs), int(tfs.sum()), blocks))
-
-    # --- keyword-field postings (StringField analog): one `\x01col:value`
-    # term per doc, tf=1, positions 0 — so FILTER clauses execute as posting
-    # intersections. Doc lengths/norms/collection stats are text-only and
-    # untouched (keyword terms never contribute BM25 weight). ---
-    for kcol in meta.keyword_cols:
-        dk = pc.dictionary_encode(docs_tbl[kcol].combine_chunks())
-        codes_v = dk.indices.to_numpy(zero_copy_only=False)
-        # a stable sort on the value code keeps each value's docs ascending
-        order_v = np.argsort(codes_v, kind="stable")
-        bounds_v = np.append(
-            np.flatnonzero(np.diff(codes_v[order_v], prepend=-1)), len(order_v)
-        )
-        for vi, value in enumerate(dk.dictionary.to_pylist()):
-            d = order_v[bounds_v[vi]:bounds_v[vi + 1]].astype(np.int64)
-            blocks = encode_posting_blocks(
-                d, np.ones(len(d), dtype=np.int64), norms[d].astype(np.int64),
-                np.zeros(len(d), dtype=np.int64) if meta.positions else None,
-            )
-            term_rows.append((keyword_term(kcol, value), len(d), len(d), blocks))
-    return write_segment(index_dir, seg, meta, docs_tbl, term_rows, t0=t0)
-
-
-def postings_table(term_rows: list[tuple]) -> pa.Table:
-    """(term, df, ttf, blocks) rows as a postings table — the hive dir
-    ``seg=N`` supplies the ``seg`` column."""
-    return pa.table({
-        "term": pa.array([r[0] for r in term_rows], type=pa.string()),
-        "df_part": pa.array([r[1] for r in term_rows], type=pa.int64()),
-        "ttf_part": pa.array([r[2] for r in term_rows], type=pa.int64()),
-        "blocks": pa.array([r[3] for r in term_rows], type=_BLOCK_PA_TYPE),
-    })
+    # one posting per (term, doc) run: tf is the run length
+    starts = np.flatnonzero(np.diff(codes, prepend=-1) | np.diff(docs_l, prepend=-1))
+    pcodes, pdocs = codes[starts], docs_l[starts]
+    term_starts = np.flatnonzero(np.diff(pcodes, prepend=-1))
+    postings = encode_segment(
+        uniques[pcodes[term_starts]], term_starts, pdocs,
+        np.diff(np.append(starts, len(codes))), norms[pdocs],
+        poss if meta.positions else None,
+    )
+    return write_segment(index_dir, seg, meta, docs_tbl, postings, t0=t0)
 
 
 def write_segment(
@@ -504,7 +457,7 @@ def write_segment(
     seg: int,
     meta: IndexMeta,
     docs_tbl: pa.Table,
-    term_rows: list[tuple],
+    postings: pa.Table,
     *,
     t0: float,
     status: str = "built",
@@ -514,14 +467,14 @@ def write_segment(
     end here.
 
     ``docs_tbl``: the key, keyword, ``doc_local``, ``length`` and ``norm``
-    columns in local-id order. ``term_rows``: (term, df, ttf, blocks) in any
-    order; the postings file is term-sorted (pruning). The content hash
-    covers the text terms in term order (doc and tf streams), then each
-    keyword column's terms in ``meta.keyword_cols`` order and value order
-    (doc streams), so a rewritten segment hashes like a fresh build of its
-    rows. Files commit in a fixed order — docs, seg_norms, postings, bloom —
-    and the manifest marker is written LAST: a segment is complete iff its
-    marker exists. No file is written again after its marker: every one is
+    columns in local-id order. ``postings``: the term-sorted postings table
+    ``codec.encode_segment`` writes (the sort is what prunes). The content
+    hash covers the text terms in term order (doc and tf streams), then
+    each keyword column's terms in ``meta.keyword_cols`` order and value
+    order (doc streams), so a rewritten segment hashes like a fresh build
+    of its rows. Files commit in a fixed order — docs, seg_norms, postings,
+    bloom — and the manifest marker is written LAST: a segment is complete
+    iff its marker exists. No file is written again after its marker: every one is
     segment-local, and bases come from ``read_manifest``."""
     from .bloom import BLOOM_K, bloom_build
 
@@ -533,19 +486,18 @@ def write_segment(
         os.makedirs(seg_dir, exist_ok=True)
         _atomic_write(tbl, os.path.join(seg_dir, "part-0.parquet"))
 
-    term_rows = sorted(term_rows, key=lambda r: r[0])
-    hasher = hashlib.md5()
-    for term, _df, _ttf, blocks in term_rows:
-        if not term.startswith(KEYWORD_PREFIX):
-            for blk in blocks:
-                hasher.update(blk["docs_bytes"])
-                hasher.update(blk["tfs_bytes"])
+    block_offs, fields = flat_blocks(postings)
+
+    def blocks_of(prefix: str, hit: bool = True) -> pa.Array:
+        # the blocks of the terms that do (or, hit=False, do not) start with prefix
+        terms_hit = pc.starts_with(postings["term"], prefix).to_numpy(zero_copy_only=False)
+        return pa.array(np.repeat(terms_hit == hit, np.diff(block_offs)))
+
+    # each text block's doc then tf stream, then each keyword column's doc streams
+    text = pc.binary_join_element_wise(fields["docs_bytes"], fields["tfs_bytes"], b"")
+    hasher = hashlib.md5(binary_bytes(text.filter(blocks_of(KEYWORD_PREFIX, False))))
     for kcol in meta.keyword_cols:
-        prefix = keyword_term(kcol, "")
-        for term, _df, _ttf, blocks in term_rows:
-            if term.startswith(prefix):
-                for blk in blocks:
-                    hasher.update(blk["docs_bytes"])
+        hasher.update(binary_bytes(fields["docs_bytes"].filter(blocks_of(keyword_term(kcol, "")))))
 
     put("docs", docs_tbl)
     # dense per-segment norm byte array, segment-local like every file here
@@ -557,8 +509,8 @@ def write_segment(
             [docs_tbl["norm"].to_numpy().astype(np.uint8).tobytes()], type=pa.binary()
         ),
     }))
-    terms = [r[0] for r in term_rows]
-    put("postings", postings_table(term_rows))
+    terms = postings["term"].to_pylist()
+    put("postings", postings)
     # Per-segment term bloom sidecar (BloomFilteringPostingsFormat analog,
     # ``lucene/codecs/bloom/BloomFilteringPostingsFormat.java``): built from
     # the already-materialized dictionary; the searcher prunes segments
@@ -576,8 +528,8 @@ def write_segment(
         "base": -1,  # a placeholder: read_manifest derives every base
         "n_docs": n_rows,
         "doc_count": int((lengths > 0).sum()),
-        "n_terms": len(term_rows),
-        "n_postings": int(sum(r[1] for r in term_rows)),
+        "n_terms": postings.num_rows,
+        "n_postings": int(postings["df_part"].to_numpy().sum()),
         "sum_len": int(lengths.sum()),
         "content_hash": hasher.hexdigest(),
         "status": status,

@@ -50,12 +50,11 @@ from .build import (
     IndexMeta,
     _atomic_write,
     _commit,
-    postings_table,
     read_manifest,
     read_segment,
     write_segment,
 )
-from .codec import decode_postings, encode_posting_blocks
+from .codec import BLOCKS_TYPE, decode_segment, encode_segment
 from .updates import (
     read_tombstones, tombstone_files, tombstones_path, write_tombstones,
 )
@@ -116,10 +115,9 @@ def _stage_subrange(
     (``in_base − out_base``), every term's postings re-blocked with its
     docs' exact norms — staged as ``postings.parquet`` and ``docs.parquet``
     under ``sub_dir``."""
-    docs_parts, per_term = [], {}
+    docs_parts, flat = [], []
     for seg, shift in zip(sources, shifts):
         docs = read_segment(src_dir, "docs", seg)
-        norm_of = docs["norm"].to_numpy().astype(np.int64)
         docs_parts.append(pa.table({
             **{c: docs[c] for c in (*meta.key_cols, *meta.keyword_cols)},
             "doc_local": pa.array(docs["doc_local"].to_numpy() + shift, type=pa.int64()),
@@ -127,38 +125,64 @@ def _stage_subrange(
             "norm": docs["norm"],
         }))
         post = read_segment(src_dir, "postings", seg)
-        for term, blocks in zip(post["term"].to_pylist(), post["blocks"].to_pylist()):
-            dec = decode_postings(blocks, with_positions=meta.positions)
-            per_term.setdefault(term, []).append((dec[0] + shift, dec[1], norm_of[dec[0]], *dec[2:]))
-    rows = []
-    for term, parts in per_term.items():
-        docs_l, tfs, *rest = (np.concatenate(c) for c in zip(*parts))
-        rows.append((term, len(docs_l), int(tfs.sum()), encode_posting_blocks(docs_l, tfs, *rest)))
+        term_starts, d, tfs, pos = decode_segment(post, with_positions=meta.positions)
+        flat.append((
+            post["term"].to_numpy(zero_copy_only=False), np.diff(np.append(term_starts, len(d))),
+            d + shift, tfs, docs["norm"].to_numpy()[d], pos,
+        ))
+    terms, dfs, docs_l, tfs, norms, pos = (
+        None if c[0] is None else np.concatenate(c) for c in zip(*flat)
+    )
+    # one vocab over the sources; a stable sort on the term code keeps each
+    # term's postings in source (base) order, so docs stay ascending
+    uniques, inv = np.unique(terms, return_inverse=True)
+    codes = np.repeat(inv, dfs)
+    order = np.argsort(codes, kind="stable")
+    if pos is not None:  # each posting's positions move with it
+        pos = pos[np.argsort(np.repeat(codes, tfs), kind="stable")]
+    codes = codes[order]
+    term_starts = np.flatnonzero(np.diff(codes, prepend=-1))
     os.makedirs(sub_dir, exist_ok=True)
-    _atomic_write(postings_table(rows), os.path.join(sub_dir, "postings.parquet"))
+    _atomic_write(
+        encode_segment(uniques[codes[term_starts]], term_starts,
+                       docs_l[order], tfs[order], norms[order], pos),
+        os.path.join(sub_dir, "postings.parquet"),
+    )
     _atomic_write(pa.concat_tables(docs_parts).combine_chunks(), os.path.join(sub_dir, "docs.parquet"))
 
 
 def _write_merged(dst_dir: str, meta: IndexMeta, out_seg: int, sub_dirs: list[str]) -> dict:
     """Phase-2 task: output segment ``out_seg`` from its staged sub-ranges
-    (salt order) — each term's block lists stacked, the docs tables
-    concatenated — written by ``write_segment``."""
+    (salt order) — each term's block lists stacked with no re-blocking (the
+    mid-list partial blocks are legal), the docs tables concatenated —
+    written by ``write_segment``."""
     t0 = time.monotonic()
-    rows: dict[str, list] = {}
-    docs = []
-    for sub_dir in sub_dirs:
-        docs.append(pq.read_table(os.path.join(sub_dir, "docs.parquet")))
-        post = pq.read_table(os.path.join(sub_dir, "postings.parquet")).to_pydict()
-        for term, df, ttf, blocks in zip(
-            post["term"], post["df_part"], post["ttf_part"], post["blocks"]
-        ):
-            row = rows.setdefault(term, [term, 0, 0, []])
-            row[1] += df
-            row[2] += ttf
-            row[3].extend(blocks)
+    docs = [pq.read_table(os.path.join(d, "docs.parquet")) for d in sub_dirs]
+    post = pa.concat_tables(
+        [pq.read_table(os.path.join(d, "postings.parquet")) for d in sub_dirs]
+    ).combine_chunks()
+    # each sub-range's rows are term-sorted: a stable sort by term puts a
+    # term's rows together in salt order, and each run of equal terms is
+    # one output row whose block list spans the run's lists
+    terms = post["term"].to_numpy(zero_copy_only=False)
+    order = np.argsort(terms, kind="stable")
+    _, runs = np.unique(terms[order], return_index=True)
+    post = post.take(order)
+    bounds = np.append(runs, len(terms))
+    lists = post["blocks"].combine_chunks()
+
+    def run_sums(col: str) -> np.ndarray:
+        return np.diff(np.append(0, np.cumsum(post[col].to_numpy()))[bounds])
+
+    merged = pa.table({
+        "term": post["term"].take(runs),
+        "df_part": run_sums("df_part"),
+        "ttf_part": run_sums("ttf_part"),
+        "blocks": pa.ListArray.from_arrays(lists.offsets.take(bounds), lists.values, type=BLOCKS_TYPE),
+    })
     return write_segment(
         dst_dir, out_seg, meta, pa.concat_tables(docs).combine_chunks(),
-        list(rows.values()), t0=t0, status="merged",
+        merged, t0=t0, status="merged",
     )
 
 

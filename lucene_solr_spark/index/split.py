@@ -160,14 +160,13 @@ def _write_child_stats_single_scan(
     parent_tomb,
 ) -> None:
     """All children's term/collection statistics from ONE distributed
-    postings pass: decode doc-id/tf streams → join the (seg, doc_local) →
-    child assignment → one (child, term) hash-agg — one pass for all
-    children where the per-child ``_finalize`` path makes n. The per-child
-    write afterwards filters the tiny aggregated dictionary."""
-    import numpy as np
-    import pandas as pd
+    postings pass: decode each batch's doc-id/tf streams at once → join the
+    (seg, doc_local) → child assignment → one (child, term) hash-agg — one
+    pass for all children where the per-child ``_finalize`` path makes n.
+    The per-child write afterwards filters the tiny aggregated dictionary."""
+    import pyarrow as pa
 
-    from .codec import decode_postings
+    from .codec import decode_segment, posting_terms
 
     docs = spark.read.parquet(os.path.join(index_dir, "docs"))
     if parent_tomb is not None:
@@ -179,29 +178,22 @@ def _write_child_stats_single_scan(
         F.col("length").cast("long").alias("length"),
     )
 
-    def explode_kernel(iterator):
-        for pdf in iterator:
-            segs, locs, terms, tfs = [], [], [], []
-            for seg, term, blocks in zip(pdf["seg"], pdf["term"], pdf["blocks"]):
-                if not len(blocks):
-                    continue
-                d, t = decode_postings(list(blocks))[:2]
-                segs.append(np.full(len(d), int(seg), dtype=np.int32))
-                locs.append(d.astype(np.int64))
-                terms.extend([term] * len(d))
-                tfs.append(t.astype(np.int64))
-            if segs:
-                yield pd.DataFrame({
-                    "seg": np.concatenate(segs),
-                    "doc_local": np.concatenate(locs),
-                    "term": np.array(terms, dtype=object),
-                    "tf": np.concatenate(tfs),
-                })
+    def explode_kernel(batches):
+        for batch in batches:  # (seg, term, blocks) rows → one row per posting
+            post = pa.Table.from_batches([batch])
+            term_starts, doc_local, tf, _ = decode_segment(post)
+            rows = pa.array(posting_terms(term_starts, len(doc_local)))
+            yield pa.RecordBatch.from_pydict({
+                "seg": post["seg"].take(rows).combine_chunks(),
+                "doc_local": doc_local,
+                "term": post["term"].take(rows).combine_chunks(),
+                "tf": tf,
+            })
 
     exploded = (
         spark.read.parquet(os.path.join(index_dir, "postings"))
-        .select("seg", "term", "blocks")
-        .mapInPandas(explode_kernel, "seg int, doc_local long, term string, tf long")
+        .select(F.col("seg").cast("int").alias("seg"), "term", "blocks")
+        .mapInArrow(explode_kernel, "seg int, doc_local long, term string, tf long")
     )
     per_child_ts = (
         exploded.join(assign.select("seg", "doc_local", "child"), ["seg", "doc_local"])

@@ -68,7 +68,7 @@ from .build import (
     read_segment,
     write_segment,
 )
-from .codec import decode_postings, encode_posting_blocks
+from .codec import decode_segment, encode_segment, posting_terms
 
 TOMBSTONE_SCHEMA = "seg int, doc_local long"
 # what the deleted docs contribute, negated: per-term rows and per-segment
@@ -281,17 +281,18 @@ def tombstone_removals(
         return None
 
     def terms(seg: int) -> pa.Table:
-        dele = read_tombstones(index_dir, seg)
         post = read_segment(index_dir, "postings", seg)
-        out = {"term": [], "df_part": [], "ttf_part": []}
-        for term, blocks in zip(post["term"].to_pylist(), post["blocks"].to_pylist()):
-            docs, tfs = decode_postings(blocks)[:2]
-            hit = np.isin(docs, dele, assume_unique=True)
-            if hit.any():
-                out["term"].append(term)
-                out["df_part"].append(-int(hit.sum()))
-                out["ttf_part"].append(-int(tfs[hit].sum()))
-        return pa.table(out)
+        term_starts, docs, tfs, _ = decode_segment(post)
+        term_of = posting_terms(term_starts, len(docs))
+        hit = np.isin(docs, read_tombstones(index_dir, seg), assume_unique=True)
+        df = np.bincount(term_of[hit], minlength=post.num_rows)
+        ttf = np.bincount(term_of[hit], weights=tfs[hit], minlength=post.num_rows)
+        touched = np.flatnonzero(df)
+        return pa.table({
+            "term": post["term"].take(touched),
+            "df_part": -df[touched],
+            "ttf_part": -ttf[touched].astype(np.int64),
+        })
 
     def docs(seg: int) -> pa.Table:
         dele = read_tombstones(index_dir, seg)
@@ -539,20 +540,17 @@ def _expunge_segment(index_dir: str, staging: str, seg: int, meta: IndexMeta) ->
     })
 
     post = read_segment(index_dir, "postings", seg)
-    term_rows = []
-    for term, blocks in zip(post["term"].to_pylist(), post["blocks"].to_pylist()):
-        dec = decode_postings(blocks, with_positions=meta.positions)
-        d, tfs = dec[0], dec[1]
-        keep = ~np.isin(d, dele, assume_unique=True)
-        if not keep.any():
-            continue
-        kept, tfs_k = d[keep], tfs[keep]
-        term_rows.append((term, len(kept), int(tfs_k.sum()), encode_posting_blocks(
-            kept - np.searchsorted(dele, kept), tfs_k, norm_of[kept],
-            dec[2][np.repeat(keep, tfs)] if meta.positions else None,
-        )))
+    term_starts, d, tfs, pos = decode_segment(post, with_positions=meta.positions)
+    keep = ~np.isin(d, dele, assume_unique=True)
+    df = np.bincount(posting_terms(term_starts, len(d))[keep], minlength=post.num_rows)
+    kept = d[keep]
+    postings = encode_segment(
+        post["term"].filter(pa.array(df > 0)), np.cumsum(df[df > 0]) - df[df > 0],
+        kept - np.searchsorted(dele, kept), tfs[keep], norm_of[kept],
+        pos[np.repeat(keep, tfs)] if meta.positions else None,
+    )
     return write_segment(
-        staging, seg, meta, docs_tbl, term_rows, t0=t0, status="expunged"
+        staging, seg, meta, docs_tbl, postings, t0=t0, status="expunged"
     )
 
 

@@ -715,9 +715,9 @@ class IndexSearcher:
         terms = q.scoring_terms
         posts = (
             self.postings.filter((F.col("seg") == seg) & (F.col("term").isin(terms)))
-            .select("term", "blocks").collect()
+            .select("term", "blocks").toArrow()
         )
-        blocks_by_term = {r.term: list(r.blocks) for r in posts}
+        blocks_by_term = dict(zip(posts["term"].to_pylist(), posts["blocks"].to_pylist()))
         df_map = self.term_stats(terms)
         rows = []
         for c in q.clauses:

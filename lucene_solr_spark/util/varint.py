@@ -7,12 +7,14 @@ format, up to 9 bytes for the 63-bit non-negative range used here.
 
 Both directions are numpy-vectorized (no per-value Python loop): encode
 loops over at most 9 *byte positions*, decode uses reduceat over
-continuation-bit boundaries.
+continuation-bit boundaries. Many slices of one encoded stream come back as
+one Arrow ``binary`` array, built from an offsets buffer.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 _MASK7 = np.uint64(0x7F)
 _CONT = np.uint8(0x80)
@@ -51,16 +53,35 @@ def encode_varints(values: np.ndarray) -> bytes:
     return out.tobytes()
 
 
-def encode_varints_sliced(values: np.ndarray, bounds: np.ndarray) -> list[bytes]:
-    """ONE vectorized encode of ``values``, returned as per-slice byte
-    strings for the value ranges ``bounds[i]:bounds[i+1]`` — the hot-path
-    replacement for calling ``encode_varints`` once per (small) block."""
+def encode_varints_sliced(values: np.ndarray, bounds: np.ndarray) -> pa.BinaryArray:
+    """ONE vectorized encode of ``values``, as a ``binary`` array whose
+    element i is the value range ``bounds[i]:bounds[i+1]`` — the byte
+    streams of many blocks from one pass, with no Python object per block."""
     out, ends = _encode_core(values)
-    buf = out.tobytes()
-    offs = np.zeros(len(values) + 1, dtype=np.int64)
-    if len(values):
-        offs[1:] = ends
-    return [buf[offs[bounds[i]]:offs[bounds[i + 1]]] for i in range(len(bounds) - 1)]
+    cuts = np.concatenate(([0], ends))[bounds]
+    return pa.Array.from_buffers(pa.binary(), len(cuts) - 1, [
+        None, pa.py_buffer(offsets32(cuts - cuts[0])), pa.py_buffer(out[cuts[0]:cuts[-1]]),
+    ])
+
+
+def offsets32(offsets: np.ndarray) -> np.ndarray:
+    """Arrow ``binary`` / ``list`` offsets as int32, or OverflowError when
+    the last (largest) one does not fit — never a silent wrap."""
+    if len(offsets) and int(offsets[-1]) > 2**31 - 1:
+        raise OverflowError(f"offset {int(offsets[-1])} exceeds the int32 range of Arrow offsets")
+    return offsets.astype(np.int32)
+
+
+def binary_bytes(arr: pa.BinaryArray) -> np.ndarray:
+    """A ``binary`` (or ``large_binary``) array's values concatenated, as
+    uint8 — the inverse of ``encode_varints_sliced``'s cut (a sliced
+    array's offsets need not start at 0)."""
+    data = arr.buffers()[2] if len(arr) else None
+    if data is None:
+        return np.empty(0, dtype=np.uint8)
+    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offs = np.frombuffer(arr.buffers()[1], dtype=width)[arr.offset:arr.offset + len(arr) + 1]
+    return np.frombuffer(data, dtype=np.uint8)[offs[0]:offs[-1]]
 
 
 def decode_varints(buf: bytes) -> np.ndarray:

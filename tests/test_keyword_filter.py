@@ -136,3 +136,28 @@ def test_keyword_filter_under_lm_similarity(spark, kw_index):
         )
         assert np.isfinite(got.score.to_numpy()).all()
         pd.testing.assert_frame_equal(got, want.astype(got.dtypes.to_dict()))
+
+
+def test_null_keyword_value_indexes_no_term(tmp_path):
+    """A doc whose keyword column is null gets no keyword posting; the docs
+    with a value keep theirs (Spark-free: one segment's invert)."""
+    import pyarrow as pa
+
+    from lucene_solr_spark.index.build import IndexMeta, _invert_partition, read_segment
+    from lucene_solr_spark.index.codec import decode_segment
+
+    tbl = pa.table({
+        "conv_id": ["c0", "c1", "c2", "c3"],
+        "turn_idx": pa.array([0, 0, 0, 0], type=pa.int32()),
+        "text": ["merge a", "merge b", "stream c", "merge d"],
+        "tool": ["grep", None, "grep", None],
+    })
+    meta = IndexMeta("simple", ("conv_id", "turn_idx"), "text", True, 1, keyword_cols=("tool",))
+    key_types = {c: tbl.schema.field(c).type for c in meta.key_cols}
+    _invert_partition([tbl], 0, meta, str(tmp_path), key_types)
+    post = read_segment(str(tmp_path), "postings", 0)
+    starts, docs, _, _ = decode_segment(post)
+    by_term = dict(zip(post["term"].to_pylist(), np.split(docs, starts[1:])))
+    assert [t for t in by_term if t.startswith("\x01")] == [keyword_term("tool", "grep")]
+    np.testing.assert_array_equal(by_term[keyword_term("tool", "grep")], [0, 2])
+    np.testing.assert_array_equal(by_term["merge"], [0, 1, 3])
