@@ -172,6 +172,14 @@ class IndexMeta:
     # they exist so FILTER clauses run as posting intersections at scale
     keyword_cols: tuple[str, ...] = ()
 
+    def __post_init__(self) -> None:
+        # keyword_term joins column and value with ":", so a column named
+        # "a:b" would share terms with column "a" ("a:b" = "c" and
+        # "a" = "b:c" are both \x01a:b:c)
+        for col in self.keyword_cols:
+            if ":" in col:
+                raise ValueError(f"keyword column {col!r} contains ':'; rename it")
+
     def save(self, index_dir: str) -> None:
         with open(os.path.join(index_dir, "meta.json"), "w") as f:
             json.dump({
@@ -671,13 +679,13 @@ def build_index(
         raise ValueError("'doc_id' is reserved for the assigned dense docID; rename the key column")
     if n_segments is None:
         n_segments = spark.sparkContext.defaultParallelism
-    os.makedirs(index_dir, exist_ok=True)
-
-    meta_path = os.path.join(index_dir, "meta.json")
     meta = IndexMeta(
         analyzer, tuple(key_cols), text_col, positions, n_segments,
         keyword_cols=tuple(keyword_cols),
     )
+    os.makedirs(index_dir, exist_ok=True)
+
+    meta_path = os.path.join(index_dir, "meta.json")
     if os.path.exists(meta_path):
         existing = IndexMeta.load(index_dir)
         if not resume or existing != meta:
@@ -759,11 +767,11 @@ def build_index_presorted(
 
     groups = [files[i:i + files_per_segment] for i in range(0, len(files), files_per_segment)]
     n_segments = len(groups)
-    os.makedirs(index_dir, exist_ok=True)
     meta = IndexMeta(
         analyzer, tuple(key_cols), text_col, positions, n_segments,
         keyword_cols=tuple(keyword_cols),
     )
+    os.makedirs(index_dir, exist_ok=True)
     meta_path = os.path.join(index_dir, "meta.json")
     if os.path.exists(meta_path):
         if IndexMeta.load(index_dir) != meta:

@@ -161,3 +161,19 @@ def test_null_keyword_value_indexes_no_term(tmp_path):
     assert [t for t in by_term if t.startswith("\x01")] == [keyword_term("tool", "grep")]
     np.testing.assert_array_equal(by_term[keyword_term("tool", "grep")], [0, 2])
     np.testing.assert_array_equal(by_term["merge"], [0, 1, 3])
+
+
+def test_keyword_column_name_with_colon_is_rejected(spark, tmp_path):
+    """``keyword_term`` joins column and value with ':'. With keyword
+    columns ``a`` and ``a:b``, ``a = "b:c"`` and ``a:b = "c"`` would both be
+    the term ``\\x01a:b:c``, so a FILTER on ``a = "b:c"`` would also match
+    c1. The build refuses the column by name before it writes anything."""
+    pdf = pd.DataFrame({
+        "conv_id": ["c0", "c1"], "turn_idx": [0, 0], "text": ["merge one", "merge two"],
+        "a": ["b:c", "x"], "a:b": ["y", "c"],
+    })
+    idx = str(tmp_path / "idx")
+    with pytest.raises(ValueError, match="'a:b'"):
+        build_index(spark, spark.createDataFrame(pdf), idx, analyzer="simple",
+                    n_segments=1, keyword_cols=("a", "a:b"))
+    assert not (tmp_path / "idx").exists()

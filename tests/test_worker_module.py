@@ -2,12 +2,18 @@
 a ``zipimporter`` keeps its archive's directory table across
 ``importlib.invalidate_caches()`` until the archive changes, the Python
 workers of a session keep one ``pyspark.zip`` table across tasks, and
-``get_spark`` leaves the option unset when the module is missing."""
+``get_spark`` leaves the option unset when the module is missing. The
+workers talk to the JVM over Unix-domain sockets in the session's private
+socket directory, which stays within Spark's length limit under a long
+temp dir and is gone when the driver process exits."""
 
 from __future__ import annotations
 
 import importlib
+import json
 import os
+import stat
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -115,3 +121,70 @@ def test_worker_keeps_one_pyspark_zip_table_across_tasks(spark):
     again = [r for r in rows if r.same is not None]
     assert again, "no two tasks ran on one worker PID"
     assert all(r.same for r in again), rows
+
+
+def test_get_spark_uses_unix_sockets_in_a_private_short_dir():
+    opts = session.session_builder("t", cpus=1)._options
+    assert opts["spark.python.unix.domain.socket.enabled"] == "true"
+    sock_dir = opts["spark.python.unix.domain.socket.dir"]
+    assert len(sock_dir) <= session.SOCKET_DIR_MAX
+    assert stat.S_IMODE(os.stat(sock_dir).st_mode) == 0o700
+
+
+def test_python_tasks_run_on_the_session_socket_dir(spark):
+    def _socket_env(batches):
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({
+            "enabled": [os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED")],
+            "sock_dir": [os.environ.get("PYTHON_WORKER_FACTORY_SOCK_DIR")],
+        })
+
+    row = spark.range(0, 1, numPartitions=1).mapInArrow(
+        _socket_env, "enabled string, sock_dir string"
+    ).collect()[0]
+    # the JVM sets "True"; pyspark/daemon.py compares it lowercased
+    assert row.enabled.lower() == "true"
+    assert row.sock_dir == spark.conf.get("spark.python.unix.domain.socket.dir")
+
+
+_LONG_TMPDIR_SESSION = """
+import json, os
+import pyarrow as pa
+from lucene_solr_spark.session import get_spark
+
+def plus_one(batches):
+    for b in batches:
+        yield pa.RecordBatch.from_pydict({"id": [v + 1 for v in b.column(0).to_pylist()]})
+
+spark = get_spark("long-tmpdir", cpus=1)
+ids = [r.id for r in spark.range(0, 3, numPartitions=1).mapInArrow(plus_one, "id long").collect()]
+sock_dir = spark.conf.get("spark.python.unix.domain.socket.dir")
+print(json.dumps({"ids": ids, "sock_dir": sock_dir, "exists": os.path.isdir(sock_dir)}))
+spark.stop()
+"""
+
+
+def test_session_starts_under_a_long_tmpdir_and_removes_its_socket_dir(tmp_path):
+    """With ``TMPDIR`` and ``java.io.tmpdir`` both 100+ characters long, a
+    socket directory left to either would exceed the AF_UNIX path limit and
+    the SparkContext would not start."""
+    long_tmp = tmp_path / ("t" * 100)
+    long_tmp.mkdir()
+    assert len(str(long_tmp)) >= 100
+    env = {
+        **os.environ,
+        "TMPDIR": str(long_tmp),
+        "JAVA_TOOL_OPTIONS": f"-Djava.io.tmpdir={long_tmp}",
+        "SPARK_DRIVER_MEM": "1g",
+        "PYTHONPATH": session.WORKER_DIR,
+    }
+    run = subprocess.run(
+        [sys.executable, "-c", _LONG_TMPDIR_SESSION], cwd=session.WORKER_DIR, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-4000:]
+    out = json.loads(run.stdout.strip().splitlines()[-1])
+    assert out["ids"] == [1, 2, 3]
+    assert out["exists"] and len(out["sock_dir"]) <= session.SOCKET_DIR_MAX
+    assert not os.path.exists(out["sock_dir"])

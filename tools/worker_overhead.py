@@ -5,9 +5,12 @@ stage, both in one ``session.get_spark`` session.
     python tools/worker_overhead.py [--jobs 10] [--cpus 4]
 
 Prints one JSON line: ``python_job_ms`` and ``jvm_job_ms`` (medians),
-their difference ``python_task_ms``, the job count and the session's
-``spark.python.worker.module``. To compare two versions of the engine, run
-it in each checkout; it has no switch of its own.
+their difference ``python_task_ms``, ``first_batch_wait_ms`` (the median
+time, inside the task function, from its entry to its first input batch:
+the task waiting on the JVM), the job count, the session's
+``spark.python.worker.module`` and the socket the workers talk over
+(``"unix"`` or ``"tcp"``). To compare two versions of the engine, run it
+in each checkout; it has no switch of its own.
 """
 
 from __future__ import annotations
@@ -19,11 +22,23 @@ import statistics
 import sys
 import time
 
+import pyarrow as pa
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _identity(batches):
     yield from batches
+
+
+def _first_batch_wait(batches):
+    t0 = time.perf_counter()
+    first = next(batches)
+    waited = 1000.0 * (time.perf_counter() - t0)
+    for _ in batches:
+        pass
+    assert first.num_rows == 1
+    yield pa.RecordBatch.from_pydict({"wait_ms": [waited]})
 
 
 def _median_ms(run, n: int) -> float:
@@ -46,6 +61,7 @@ def main(argv: list[str] | None = None) -> None:
     spark = get_spark("worker-overhead", cpus=args.cpus)
     one = spark.range(0, 1, numPartitions=1)
     python_job = one.mapInArrow(_identity, "id long")
+    wait_job = one.mapInArrow(_first_batch_wait, "wait_ms double")
 
     def run_python():
         assert python_job.collect()[0].id == 0
@@ -59,12 +75,16 @@ def main(argv: list[str] | None = None) -> None:
         run_jvm()
     py_ms = _median_ms(run_python, args.jobs)
     jvm_ms = _median_ms(run_jvm, args.jobs)
+    wait_ms = statistics.median(wait_job.collect()[0].wait_ms for _ in range(args.jobs))
+    unix = spark.conf.get("spark.python.unix.domain.socket.enabled", "false") == "true"
     print(json.dumps({
         "python_job_ms": round(py_ms, 1),
         "jvm_job_ms": round(jvm_ms, 1),
         "python_task_ms": round(py_ms - jvm_ms, 1),
+        "first_batch_wait_ms": round(wait_ms, 2),
         "jobs": args.jobs,
         "worker_module": spark.conf.get("spark.python.worker.module", None),
+        "socket": "unix" if unix else "tcp",
     }))
     spark.stop()
 
